@@ -37,49 +37,75 @@ public final class GbCodec {
         long[] tokens;
     }
 
+    /**
+     * Bounds-checked forward walk over b[p..end) - the frame_fields_walk
+     * rules: single-byte tags, wire 2 jumps its varint length prefix,
+     * every other wire type reads as a varint, at most 63 fields. A varint
+     * longer than 10 bytes or running past the end, and a payload running
+     * past the end, throw.
+     */
+    static final class Walker {
+        final byte[] b;
+        final int end;
+        int p, fields, tag, start;
+        long value;
+
+        Walker(byte[] b, int p, int end) {
+            this.b = b;
+            this.p = p;
+            this.end = end;
+        }
+
+        long varint() {
+            long v = 0;
+            for (int shift = 0; shift < 70; shift += 7) {
+                if (p >= end)
+                    throw new IllegalArgumentException(
+                        "varint running past the frame end - truncated or corrupt input");
+                int c = b[p++] & 0xFF;
+                v |= (long) (c & 0x7F) << shift;
+                if (c < 0x80) return v;
+            }
+            throw new IllegalArgumentException(
+                "varint longer than 10 bytes - truncated or corrupt input");
+        }
+
+        /** Jump n (unsigned) payload bytes; returns where they start. */
+        int skip(long n) {
+            if (Long.compareUnsigned(n, end - p) > 0)
+                throw new IllegalArgumentException(
+                    "field payload running past the frame end - truncated or corrupt input");
+            int s = p;
+            p += (int) n;
+            return s;
+        }
+
+        /** Next field: tag, value (the length for wire 2), payload start. */
+        boolean next() {
+            if (p >= end) return false;
+            if (++fields > 63)
+                throw new IllegalArgumentException(
+                    "frame with more than 63 fields - truncated or corrupt input");
+            tag = b[p++] & 0xFF;
+            value = varint();
+            if ((tag & 0x7) == 2) start = skip(value);
+            return true;
+        }
+    }
+
     static Frame walk(byte[] b) {
         if (b == null) return null;
         Frame f = new Frame();
-        int p = 0, gs = -1, gl = 0, fields = 0;
-        final int end = b.length;
-        while (p < end) {
-            if (++fields > 63)
-                throw new IllegalArgumentException(
-                    "frame with more than 64 fields - truncated or corrupt input");
-            int tag = b[p++] & 0xFF;
-            if ((tag & 0x7) == 2) {          // length-delimited
-                long len = 0;
-                int shift = 0;
-                while (true) {
-                    int c = b[p++] & 0xFF;
-                    len |= (long) (c & 0x7F) << shift;
-                    shift += 7;
-                    if (c < 0x80) break;
-                }
-                if (tag == 0x22 && gs < 0) { gs = p; gl = (int) len; }
-                p += (int) len;
-                if (p > end)
-                    throw new IllegalArgumentException(
-                        "field payload running past the frame end - truncated or corrupt input");
-            } else {                          // everything else: varint
-                long v = 0;
-                int shift = 0;
-                while (true) {
-                    int c = b[p++] & 0xFF;
-                    v |= (long) (c & 0x7F) << shift;
-                    shift += 7;
-                    if (c < 0x80) break;
-                }
-                if (tag == 0x08) f.id = v;
-                else if (tag == 0x18 && f.code < 0) f.code = (int) v;
-            }
+        int gs = -1, gl = 0;
+        Walker w = new Walker(b, 0, b.length);
+        while (w.next()) {
+            if (w.tag == 0x08) f.id = w.value;
+            else if (w.tag == 0x18 && f.code < 0) f.code = (int) w.value;
+            else if (w.tag == 0x22 && gs < 0) { gs = w.start; gl = (int) w.value; }
         }
         if (f.code < 0 || gs < 0)
             throw new IllegalArgumentException(
                 "frame missing geometry-type or geometry field");
-        if (gs + gl > end)
-            throw new IllegalArgumentException(
-                "geometry payload running past the frame end - truncated or corrupt input");
         if (gl > 0 && (b[gs + gl - 1] & 0xFF) >= 0x80)
             throw new IllegalArgumentException(
                 "geometry payload ends mid-varint - truncated or corrupt input");
@@ -403,44 +429,102 @@ public final class GbCodec {
     }
 
     /**
-     * gb_frames(file_bytes) -> array&lt;binary&gt; of raw feature frames —
-     * the JVM twin of core.read_frames with skip_metadata=False (the
-     * subfile/bench contract: mid-file ranges and freshly written
-     * buffers carry no gob metadata dummy; reader.go:84-93 framing:
-     * 0x0A, varint length, frame bytes). Lets the whole concurrent
-     * many-file read (the reference's geobuf_concurrent.go:18-63
-     * headline path) run binaryFile-scan → explode → decode with zero
-     * Python in the plan. Truncated streams fail the task loudly, same
-     * as the Python reader's assert.
+     * gb_bbox(geobuf) -> [w, s, e, n] quantized, or null when the frame
+     * has no bbox field - ReadBB (read_feature.go:103-134): the fields are
+     * walked forward and the geometry is jumped through its length prefix,
+     * its deltas never decoded. A repeated bbox field resolves to the last
+     * one. The walk alone decides accept or reject (same rules as
+     * frame_fields_walk); a bbox payload that does not hold four varints
+     * reads as no bbox.
      */
-    public static final class Frames implements UDF1<byte[], java.util.List<byte[]>> {
+    public static final class Bbox implements UDF1<byte[], long[]> {
         @Override
-        public java.util.List<byte[]> call(byte[] b) {
+        public long[] call(byte[] b) {
+            if (b == null) return null;
+            Walker w = new Walker(b, 0, b.length);
+            int bs = -1, bl = 0;
+            while (w.next())
+                if (w.tag == 0x2A) { bs = w.start; bl = (int) w.value; }
+            if (bs < 0) return null;
+            Walker v = new Walker(b, bs, bs + bl);
+            long[] out = new long[4];
+            try {
+                for (int i = 0; i < 4; i++) out[i] = unzigzag(v.varint());
+            } catch (IllegalArgumentException e) {
+                return null;
+            }
+            return out;
+        }
+    }
+
+    /**
+     * Metadata-dummy sniff, a port of core._is_metadata_frame
+     * (CheckMetaData parity, reader.go:258-274): the first field after an
+     * optional id is a properties entry keyed exactly "metadata", and it
+     * is the feature's only properties entry. Any read past the frame end
+     * means "not the dummy", as in the Python sniff.
+     */
+    static boolean isMetadataFrame(byte[] f) {
+        final int[] pos = {0};
+        java.util.function.LongSupplier varint = () -> {
+            long v = 0;
+            for (int shift = 0; ; shift += 7) {
+                int c = f[pos[0]++] & 0xFF;
+                if (shift < 64) v |= (long) (c & 0x7F) << shift;
+                if (c < 0x80) return v;
+            }
+        };
+        try {
+            long tag = varint.getAsLong();
+            if ((tag >>> 3) == 1 && (tag & 7) == 0) {   // optional id
+                varint.getAsLong();
+                tag = varint.getAsLong();
+            }
+            if ((tag >>> 3) != 2 || (tag & 7) != 2) return false;
+            long esize = varint.getAsLong();            // map-entry size
+            boolean lastField = Long.compareUnsigned(esize, f.length - pos[0]) >= 0;
+            int entryEnd = lastField ? f.length : pos[0] + (int) esize;
+            pos[0]++;                                   // 0x0A key tag
+            long klen = varint.getAsLong();
+            byte[] key = {'m', 'e', 't', 'a', 'd', 'a', 't', 'a'};
+            // the Python slice f[pos:pos+klen] clamps at the frame end
+            int rem = f.length - pos[0];
+            if ((Long.compareUnsigned(klen, rem) < 0 ? klen : rem) != key.length) return false;
+            for (int i = 0; i < key.length; i++)
+                if (f[pos[0] + i] != key[i]) return false;
+            return lastField || (f[entryEnd] & 0xFF) != 0x12;
+        } catch (ArrayIndexOutOfBoundsException e) {
+            return false;
+        }
+    }
+
+    /**
+     * gb_frames(file_bytes, skip_metadata) -> array&lt;binary&gt; of raw
+     * feature frames - the JVM twin of core.read_frames (reader.go:84-93
+     * framing: 0x0A, varint length, frame bytes). With skip_metadata the
+     * first frame is dropped when it is the metadata dummy (same sniff as
+     * core.read_frames); pass false for mid-file ranges and freshly
+     * written buffers, which carry none. Truncated streams fail the task.
+     */
+    public static final class Frames implements UDF2<byte[], Boolean, java.util.List<byte[]>> {
+        @Override
+        public java.util.List<byte[]> call(byte[] b, Boolean skipMetadata) {
             if (b == null) return null;
             java.util.ArrayList<byte[]> out = new java.util.ArrayList<>();
-            int p = 0;
-            final int end = b.length;
-            while (p < end) {
-                if ((b[p] & 0xFF) != 0x0A)
+            Walker w = new Walker(b, 0, b.length);
+            boolean first = skipMetadata != null && skipMetadata;
+            while (w.p < w.end) {
+                if ((b[w.p] & 0xFF) != 0x0A)
                     throw new IllegalArgumentException(
-                        "bad frame tag at offset " + p + " - truncated or corrupt stream");
-                p++;
-                long len = 0;
-                int shift = 0;
-                while (true) {
-                    if (p >= end)
-                        throw new IllegalArgumentException(
-                            "frame length varint running past the stream end");
-                    int c = b[p++] & 0xFF;
-                    len |= (long) (c & 0x7F) << shift;
-                    shift += 7;
-                    if (c < 0x80) break;
+                        "bad frame tag at offset " + w.p + " - truncated or corrupt stream");
+                w.p++;
+                int s = w.skip(w.varint());
+                byte[] frame = java.util.Arrays.copyOfRange(b, s, w.p);
+                if (first) {
+                    first = false;
+                    if (isMetadataFrame(frame)) continue;
                 }
-                if (p + len > end)
-                    throw new IllegalArgumentException(
-                        "frame payload running past the stream end - truncated or corrupt stream");
-                out.add(java.util.Arrays.copyOfRange(b, p, p + (int) len));
-                p += (int) len;
+                out.add(frame);
             }
             return out;
         }

@@ -1,25 +1,32 @@
-"""JVM-side frame decode — registration and DataFrame wrappers.
+"""JVM-side geobuf codec — registration and DataFrame wrappers.
 
-The Arrow kernels in spark_codec.py are the portable path; this module
-loads the compiled twin (jvm/GbCodec.java, built by tools/build_jvm.py
-with the JDK against pyspark's own jars) and exposes the same fused
-decode→reduce shapes with ZERO Python in the plan: the UDF runs inside
-the scan stage like from_json, so the ~0.25 s/task Python dispatch floor
-and both Arrow serdes disappear. Callers must treat availability as
-optional (`register(spark)` returns False when the jar is absent and no
-JDK can build it) and fall back to the Arrow kernels.
+Loads the compiled codec (jvm/GbCodec.java, committed as jvm/gb-codec.jar
+and rebuilt by tools/build_jvm.py only when the source hash it records no
+longer matches) and exposes it as Spark SQL functions that run inside the
+scan stage like from_json: zero Python in the plan, so the per-task Python
+dispatch and both Arrow serdes disappear.
+
+The geobuf read path depends on it: sources.geobuf_file.read_geobuf splits
+frames with gb_frames and spark_codec.frame_bbox reads bboxes with gb_bbox,
+and both raise (naming the jar) when it cannot be registered. The full
+decode to GEOM_SCHEMA rows stays on the Arrow kernels in spark_codec.py;
+the fused decode/encode shapes below are the JVM twins of those kernels.
 """
 from __future__ import annotations
+
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+JAR = Path(__file__).parent / "jvm" / "gb-codec.jar"
 _UDFS = {
     "gb_point": "geobufspark.GbCodec$Point",
     "gb_line_stats": "geobufspark.GbCodec$LineStats",
     "gb_line_decode": "geobufspark.GbCodec$LineDecode",
     "gb_poly_dec": "geobufspark.GbCodec$PolyDecode",
+    "gb_bbox": "geobufspark.GbCodec$Bbox",
 }
 _ENC_UDFS = {
     "gb_point_enc": "geobufspark.GbCodec$PointEnc",
@@ -28,42 +35,54 @@ _ENC_UDFS = {
 }
 # file-stream splitter (array<binary> return type, registered separately)
 _FRAMES_UDF = ("gb_frames", "geobufspark.GbCodec$Frames")
-def register(spark: SparkSession) -> bool:
-    """ADD JAR + register the decode and encode UDFs. Idempotent per
-    session; False (never raises) when neither a prebuilt jar nor a JDK
-    exists."""
+
+
+def _register(spark: SparkSession) -> None:
+    """ADD JAR + register the decode and encode UDFs; raises on failure."""
     # registerJavaFunction is per-session (session catalog), so idempotence
     # is probed from the catalog itself: an applicationId key would skip
     # registration for a second session (spark.newSession()) in the same
     # app, and an id(spark) key can alias a GC'd session's address.
-    # probe the NEWEST udf name: a session registered before the frame
-    # splitter landed then re-registers the full set instead of reporting done
-    try:
-        if spark.catalog.functionExists("gb_frames"):
-            return True
-    except Exception:
-        pass
+    # probe the NEWEST udf name: a session that registered an older jar
+    # then re-registers the full set instead of reporting done
+    if spark.catalog.functionExists("gb_bbox"):
+        return
     try:
         from tools.build_jvm import build
     except ImportError:  # repo tools not importable (installed package)
-        from pathlib import Path
-        jar = Path(__file__).parent / "jvm" / "gb-codec.jar"
-        build = (lambda j=jar: j if j.exists() else None)
+        def build():
+            return JAR if JAR.exists() else None
+    jar = build()
+    if jar is None:
+        raise FileNotFoundError(f"{JAR} is missing and no JDK can build it")
+    spark.sql(f"ADD JAR '{jar.resolve().as_uri()}'")
+    arr = T.ArrayType(T.LongType())
+    for name, cls in _UDFS.items():
+        spark.udf.registerJavaFunction(name, cls, arr)
+    for name, cls in _ENC_UDFS.items():
+        spark.udf.registerJavaFunction(name, cls, T.BinaryType())
+    spark.udf.registerJavaFunction(
+        _FRAMES_UDF[0], _FRAMES_UDF[1], T.ArrayType(T.BinaryType()))
+
+
+def register(spark: SparkSession) -> bool:
+    """Register the JVM codec functions. Idempotent per session; False
+    (never raises) when the jar cannot be loaded."""
     try:
-        jar = build()
-        if jar is None:
-            return False
-        spark.sql(f"ADD JAR '{jar.resolve().as_uri()}'")
-        arr = T.ArrayType(T.LongType())
-        for name, cls in _UDFS.items():
-            spark.udf.registerJavaFunction(name, cls, arr)
-        for name, cls in _ENC_UDFS.items():
-            spark.udf.registerJavaFunction(name, cls, T.BinaryType())
-        spark.udf.registerJavaFunction(
-            _FRAMES_UDF[0], _FRAMES_UDF[1], T.ArrayType(T.BinaryType()))
+        _register(spark)
     except Exception:
         return False
     return True
+
+
+def require(spark: SparkSession) -> None:
+    """register(), but raise — naming the jar — when it fails: for the
+    read paths, which have no other implementation."""
+    try:
+        _register(spark)
+    except Exception as e:
+        raise RuntimeError(
+            f"the JVM geobuf codec ({JAR}) could not be registered: {e}") from e
 
 
 def decode_points_agg_jvm(df: DataFrame, bin_col: str = "geobuf") -> DataFrame:
@@ -166,13 +185,14 @@ def read_geobuf_files_jvm(spark: SparkSession, path: str,
     The concurrent-read shape of the reference (geobuf_concurrent.go:
     18-63 fans file reads across goroutines; here the files fan across
     tasks — one task per file by default, binaryFile never splits a
-    file). Python twin: sources.geobuf_file.read_geobuf (mapInArrow).
-    Mid-file metadata dummies don't occur in subfile layouts
+    file). Same splitter as sources.geobuf_file.read_geobuf, but without
+    the metadata-dummy sniff: subfile layouts carry no dummy
     (read_frames skip_metadata=False contract)."""
+    require(spark)
     files = spark.read.format("binaryFile").load(path)
     return (files.select(
         F.col("path"),
-        F.explode(F.expr("gb_frames(content)")).alias(bin_col)))
+        F.explode(F.expr("gb_frames(content, false)")).alias(bin_col)))
 
 
 def encode_points_jvm(df: DataFrame, id_col: str = "doc_id", lon: str = "lon",

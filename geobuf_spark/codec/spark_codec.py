@@ -88,7 +88,8 @@ def _tokenize_frames(frames: pa.Array):
     return n, seg, tokens, first, counts
 
 
-def _tokenize_geometry(frames: pa.Array, allow_missing: bool = False):
+def _tokenize_geometry(frames: pa.Array, allow_missing: bool = False,
+                       props_rows: bool = False):
     """Payload-level decode prologue: field-walk every frame for the id
     (tag 0x08), geom code (tag 0x18) and geometry payload (tag 0x22),
     gather the payload byte ranges contiguously, and varint-tokenize ONLY
@@ -99,12 +100,18 @@ def _tokenize_geometry(frames: pa.Array, allow_missing: bool = False):
     Returns (n, ids, codes, tokens, first, counts) where tokens are the
     geometry deltas/headers only and first/counts index them per frame.
     With allow_missing=True, geometry-less frames get code -1 and an
-    empty token range instead of raising."""
+    empty token range instead of raising. With props_rows=True a seventh
+    item is returned: a bool mask of the frames core.decode_properties
+    must still parse — those with a 0x12 field, a multi-byte tag, or a
+    wire type other than 0 or 2 (the walk reads those as single-byte
+    varint fields; decode_properties parses or rejects them). Every other
+    frame, fully walked here, has no properties."""
     combined = pa.concat_arrays([frames.cast(pa.binary())])
     n = len(combined)
     if n == 0:
         e = np.empty(0, dtype=np.int64)
-        return 0, e, e, np.empty(0, np.uint64), e, e
+        out = (0, e, e, np.empty(0, np.uint64), e, e)
+        return out + (np.empty(0, bool),) if props_rows else out
     flat = np.frombuffer(combined.buffers()[2], dtype=np.uint8)
     offs = np.frombuffer(combined.buffers()[1], dtype=np.int32)
     starts = offs[combined.offset : combined.offset + n].astype(np.int64)
@@ -114,7 +121,12 @@ def _tokenize_geometry(frames: pa.Array, allow_missing: bool = False):
     codes = np.full(n, -1, dtype=np.int64)
     g_start = np.full(n, -1, dtype=np.int64)
     g_len = np.zeros(n, dtype=np.int64)
+    has_props = np.zeros(n, dtype=bool)
     for active, tag, pstart, plen, v, _ in frame_fields_walk(flat, starts, ends):
+        if props_rows:
+            wire = tag & 0x7
+            has_props[active[(tag == 0x12) | (tag >= 0x80)
+                             | ((wire != 0) & (wire != 2))]] = True
         is_id = tag == 0x08
         if is_id.any():
             ids[active[is_id]] = v[is_id].astype(np.int64)
@@ -170,7 +182,8 @@ def _tokenize_geometry(frames: pa.Array, allow_missing: bool = False):
     counts = np.diff(np.searchsorted(tok_starts_b, byte_off))
     first = np.zeros(n, dtype=np.int64)
     np.cumsum(counts[:-1], out=first[1:])
-    return n, ids, codes, tokens, first, counts
+    out = (n, ids, codes, tokens, first, counts)
+    return out + (has_props,) if props_rows else out
 
 
 def _gather_token_group(tokens: np.ndarray, first: np.ndarray,
@@ -1212,9 +1225,10 @@ def decode_features_fast(df: DataFrame, bin_col: str = "geobuf") -> DataFrame:
 
     The per-feature generic decoder costs a Python loop over every vertex
     list; here geometry goes through the payload-token batch kernels
-    (reader.go:84-112 streaming scan, batched) and only the dynamic-schema
-    properties parse per frame (a short walk over the props region —
-    geometry/bbox bytes are jumped via their length prefixes).
+    (reader.go:84-112 streaming scan, batched). Only frames that the same
+    field walk flags as carrying properties parse them per frame
+    (core.decode_properties, geometry/bbox bytes jumped via their length
+    prefixes); every other frame gets "{}".
 
     Float coords come from the exact integer lattice (go_round7(q/1e7))
     rather than the reference's per-vertex float accumulation — identical
@@ -1229,8 +1243,8 @@ def decode_features_fast(df: DataFrame, bin_col: str = "geobuf") -> DataFrame:
             nrows = len(frames)
             if nrows == 0:
                 continue
-            _, all_ids, codes, all_tok, all_first, all_cnt = \
-                _tokenize_geometry(frames, allow_missing=True)
+            _, all_ids, codes, all_tok, all_first, all_cnt, has_props = \
+                _tokenize_geometry(frames, allow_missing=True, props_rows=True)
             # group results, scattered back to original row order
             gt_r = np.zeros(nrows, np.int32)
             dim_r = np.full(nrows, 2, dtype=np.int32)  # bare frames: dim 2
@@ -1286,11 +1300,12 @@ def decode_features_fast(df: DataFrame, bin_col: str = "geobuf") -> DataFrame:
             r_off, r_vals = _reorder(br, r_start, r_len, np.int32)
             p_off, p_vals = _reorder(bp, p_start, p_len, np.int32)
 
-            props_json = pa.array(
-                [json.dumps(core.decode_properties(
+            props = np.full(nrows, "{}", dtype=object)
+            for i in np.flatnonzero(has_props):
+                props[i] = json.dumps(core.decode_properties(
                     np.frombuffer(frames[i].as_py(), dtype=np.uint8)),
-                    sort_keys=True) for i in range(nrows)],
-                type=pa.string())
+                    sort_keys=True)
+            props_json = pa.array(props, type=pa.string())
             yield pa.RecordBatch.from_arrays([
                 pa.array(all_ids, type=pa.int64()),
                 pa.array(gt_r), pa.array(dim_r),
@@ -1675,6 +1690,11 @@ def frame_fields_walk(flat: np.ndarray, starts: np.ndarray, ends: np.ndarray,
         wire = tag & 0x7
         # varint fields (wire 0): value right after tag
         v, vl = _read_varint_at(flat, p + 1)
+        if (vl == 0).any():
+            raise ValueError(
+                f"{int((vl == 0).sum())} frame(s) with a varint longer than "
+                "10 bytes or running past the frame end — truncated or "
+                "corrupt input")
         is_len = wire == 2
         plen = np.where(is_len, v.astype(np.int64), 0)
         pstart = p + 1 + np.where(is_len, vl, 0)
@@ -1684,7 +1704,7 @@ def frame_fields_walk(flat: np.ndarray, starts: np.ndarray, ends: np.ndarray,
         # otherwise drop out of the walk silently — with its tail bytes
         # unparsed, a truncated frame could still decode (e.g. a clipped
         # trailing bbox) instead of failing
-        over = pos[active] > ends[active]
+        over = (pos[active] > ends[active]) | (plen < 0)
         if over.any():
             raise ValueError(
                 f"{int(over.sum())} frame(s) with a field payload running "
@@ -1717,37 +1737,6 @@ def frame_keys_kernel(frames: pa.Array):
     return np.asarray(rows, dtype=np.int64), keys
 
 
-def frame_bbox_kernel(frames: pa.Array):
-    """ReadBB (read_feature.go:103-134): bbox by forward field skip — the
-    geometry field is JUMPED via its length prefix, its deltas never
-    decoded. Returns (found mask, w, s, e, n quantized int64)."""
-    combined = pa.concat_arrays([frames.cast(pa.binary())])
-    n = len(combined)
-    e = np.zeros(n, dtype=np.int64)
-    found = np.zeros(n, dtype=bool)
-    w, s_, e_, n_ = e.copy(), e.copy(), e.copy(), e.copy()
-    if n == 0:
-        return found, w, s_, e_, n_
-    flat = np.frombuffer(combined.buffers()[2], dtype=np.uint8)
-    offs = np.frombuffer(combined.buffers()[1], dtype=np.int32)
-    starts = offs[combined.offset : combined.offset + n].astype(np.int64)
-    ends = offs[combined.offset + 1 : combined.offset + n + 1].astype(np.int64)
-    for active, tag, pstart, plen, _, _ in frame_fields_walk(flat, starts, ends):
-        sel = tag == 0x2A
-        if not sel.any():
-            continue
-        hit = active[sel]
-        p = pstart[sel]
-        vals = np.zeros((len(hit), 4), dtype=np.int64)
-        for j in range(4):
-            u, ul = _read_varint_at(flat, p)
-            vals[:, j] = core.unzigzag_vec(u)
-            p = p + ul
-        found[hit] = True
-        w[hit], s_[hit], e_[hit], n_[hit] = vals[:, 0], vals[:, 1], vals[:, 2], vals[:, 3]
-    return found, w, s_, e_, n_
-
-
 def frame_keys(df: DataFrame, bin_col: str = "geobuf") -> DataFrame:
     """Exploded (key) rows per frame — schema inference over raw frames."""
     schema = T.StructType([T.StructField("key", T.StringType())])
@@ -1762,24 +1751,15 @@ def frame_keys(df: DataFrame, bin_col: str = "geobuf") -> DataFrame:
 
 
 def frame_bbox(df: DataFrame, bin_col: str = "geobuf") -> DataFrame:
-    """(w_q, s_q, e_q, n_q) per frame without decoding geometry; frames
-    lacking a bbox field (old encoders) yield nulls."""
-    schema = T.StructType([
-        T.StructField("w_q", T.LongType()), T.StructField("s_q", T.LongType()),
-        T.StructField("e_q", T.LongType()), T.StructField("n_q", T.LongType()),
-    ])
+    """(w_q, s_q, e_q, n_q) per frame without decoding geometry — the JVM
+    gb_bbox field walk (ReadBB, read_feature.go:103-134), no Python in the
+    plan; frames lacking a bbox field (old encoders) yield nulls."""
+    from geobuf_spark.codec import jvm_codec
 
-    def _b(batches):
-        for batch in batches:
-            frames = batch.column(batch.schema.get_field_index(bin_col))
-            found, w, s_, e_, n_ = frame_bbox_kernel(frames)
-            def col(v):
-                return pa.array([int(v[i]) if found[i] else None for i in range(len(v))],
-                                type=pa.int64())
-            yield pa.RecordBatch.from_arrays(
-                [col(w), col(s_), col(e_), col(n_)], names=["w_q", "s_q", "e_q", "n_q"])
-
-    return df.select(bin_col).mapInArrow(_b, schema)
+    jvm_codec.require(df.sparkSession)
+    b = df.select(F.call_function("gb_bbox", F.col(bin_col)).alias("bbox"))
+    return b.select(*(b.bbox[i].alias(c)
+                      for i, c in enumerate(("w_q", "s_q", "e_q", "n_q"))))
 
 
 def decode_points_any_kernel(frames: pa.Array):

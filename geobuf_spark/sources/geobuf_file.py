@@ -1,8 +1,9 @@
 """Geobuf file ingest/export — the ConvertGeojson/ConvertGeobuf edge
 (convert_geojson.go:153-193) plus whole-file scan (ReaderFile, reader.go:64-80).
 
-Ingest: `binaryFile` source → frame splitter in mapInArrow → one row per
-feature frame (metadata dummy skipped, reader.go:258-274 semantics). A
+Ingest: `binaryFile` source → the JVM frame splitter gb_frames (codec/
+jvm_codec) → posexplode → one row per feature frame (metadata dummy
+skipped, reader.go:258-274 semantics). No Python runs in the split. A
 geobuf file is a single stream, so splitting is single-task per file;
 `repartition` afterwards distributes decode. At scale, many files (the
 reference's subfiles) parallelize naturally.
@@ -14,42 +15,28 @@ distributed export use the partitioned-table sink (operators.tiling).
 
 from __future__ import annotations
 
-import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from geobuf_spark.codec import core
 
 
 def read_geobuf(spark: SparkSession, path: str, repartition: int | None = None) -> DataFrame:
-    """Geobuf file(s) → DataFrame of raw frames (frame_idx, geobuf)."""
-    files = spark.read.format("binaryFile").load(path).select("path", "content")
+    """Geobuf file(s) → DataFrame of raw frames (path, frame_idx, geobuf).
 
-    schema = T.StructType([
-        T.StructField("path", T.StringType()),
-        T.StructField("frame_idx", T.LongType()),
-        T.StructField("geobuf", T.BinaryType()),
-    ])
+    The split runs in the JVM: gb_frames(content, true) is the twin of
+    core.read_frames, so frame_idx counts the frames after a leading
+    metadata dummy is dropped. Raises, naming the jar, when the JVM codec
+    cannot be registered."""
+    from geobuf_spark.codec import jvm_codec
 
-    def _split(batches):
-        for batch in batches:
-            paths = batch.column(0).to_pylist()
-            contents = batch.column(1)
-            out_p, out_i, out_f = [], [], []
-            for row in range(len(contents)):
-                data = contents[row].as_py()
-                for i, frame in enumerate(core.read_frames(data)):
-                    out_p.append(paths[row])
-                    out_i.append(i)
-                    out_f.append(bytes(frame))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out_p), pa.array(out_i, type=pa.int64()),
-                 pa.array(out_f, type=pa.binary())],
-                names=["path", "frame_idx", "geobuf"],
-            )
-
-    frames = files.mapInArrow(_split, schema)
+    jvm_codec.require(spark)
+    frames = (spark.read.format("binaryFile").load(path)
+              .select("path", F.posexplode(F.expr("gb_frames(content, true)")))
+              .select("path", F.col("pos").cast("long").alias("frame_idx"),
+                      F.col("col").alias("geobuf")))
     return frames.repartition(repartition) if repartition else frames
 
 
@@ -68,7 +55,8 @@ def decoded_features(spark: SparkSession, path: str, repartition: int | None = N
 
     `fast=True` (default) runs geometry through the payload-token batch
     kernels (decode_features_fast — vectorized, reader.go:84-112 scan
-    semantics) with only the dynamic properties parsed per frame.
+    semantics), parsing properties only for frames that carry them. The
+    plan holds one Python stage: the frame split is in the JVM.
     `fast=False` keeps the per-feature generic decoder, whose float
     coords replicate the reference's per-vertex accumulation exactly
     (the fast path is lattice-exact instead). Both handle bare
@@ -79,9 +67,6 @@ def decoded_features(spark: SparkSession, path: str, repartition: int | None = N
     if fast:
         return spark_codec.decode_features_fast(frames, bin_col="geobuf")
     return spark_codec.decode_features_generic(frames, bin_col="geobuf")
-
-
-_ = np  # numpy retained for kernel parity
 
 
 def write_geobuf_indexed(df: DataFrame, out_path: str, key_col: str,

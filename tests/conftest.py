@@ -1,9 +1,18 @@
+import os
+import pathlib
+
 import pytest
 
 from geobuf_spark.session import get_spark
 
 SF_SMALL = "/root/testdata/sf0.001"
 SF_MED = "/root/testdata/sf0.01"
+# the suite's inputs are small: a bounded driver heap keeps the test JVM
+# (and the job subprocesses, which inherit the environment) from growing
+# toward the 24g session default and out of the machine's memory
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
+# checkout of the reference implementation, beside this repository
+REFERENCE = pathlib.Path(__file__).resolve().parents[2] / "reference"
 
 
 @pytest.fixture(scope="session")
@@ -20,3 +29,16 @@ def sf_small():
 @pytest.fixture(scope="session")
 def sf_med():
     return SF_MED
+
+
+@pytest.fixture(scope="session")
+def reference_file():
+    """name → path of a file in the reference checkout's test_data/. The
+    calling test skips, naming the file, when the reference checkout or
+    the file is not present."""
+    def _path(name: str) -> str:
+        path = REFERENCE / "test_data" / name
+        if not path.exists():
+            pytest.skip(f"reference data file not present: {path}")
+        return str(path)
+    return _path

@@ -11,29 +11,30 @@ from geobuf_spark.operators import raster
 from geobuf_spark.sources import geojson, minted
 
 
-def test_ld_geojson_ingest(spark):
-    df = geojson.read_geojson_lines(spark, "/root/reference/test_data/ld.geojson")
+def test_ld_geojson_ingest(spark, reference_file):
+    src = reference_file("ld.geojson")
+    df = geojson.read_geojson_lines(spark, src)
     rows = df.collect()
     assert len(rows) == 3304
     # spot-check against raw lines
-    first = json.loads(open("/root/reference/test_data/ld.geojson").readline())
+    first = json.loads(open(src).readline())
     got = [r for r in rows if json.loads(r.props_json).get("index") == first["properties"]["index"]
            and r.geom_type == 3]
     assert got
 
 
-def test_geojson_to_geobuf_roundtrip(spark, tmp_path):
+def test_geojson_to_geobuf_roundtrip(spark, tmp_path, reference_file):
     """Full geojson2geobuf → read back with the reference-semantics decoder,
     compare feature-for-feature (≤1e-7 like the reference's own tests)."""
+    src = reference_file("ld.geojson")
     out = str(tmp_path / "ld.geobuf")
-    n = geojson.geojson_to_geobuf(spark, "/root/reference/test_data/ld.geojson",
-                                  out, line_delimited=True)
+    n = geojson.geojson_to_geobuf(spark, src, out, line_delimited=True)
     assert n == 3304
     from geobuf_spark.codec import core
     frames = list(core.read_frames(open(out, "rb").read()))
     assert len(frames) == 3304
     # decode a sample; match against source rows by (AREA, first coord)
-    lines = [json.loads(line) for line in open("/root/reference/test_data/ld.geojson")]
+    lines = [json.loads(line) for line in open(src)]
     # our export preserves input order (no goroutine races — documented)
     for i in [0, 1, 100, 3303]:
         f = core.decode_feature(frames[i])
@@ -84,7 +85,7 @@ def test_raster_vector_roundtrip_invariants(spark, points):
     assert v.agg(F.sum("total")).first()[0] == points.count()
 
 
-def test_geobuf_to_geojson_roundtrip(spark, tmp_path):
+def test_geobuf_to_geojson_roundtrip(spark, tmp_path, reference_file):
     """ld.geojson → geobuf file → back to a FeatureCollection: parsed
     values equal within codec tolerance (ConvertGeobuf semantics, minus
     the reference's double-Next bug)."""
@@ -92,7 +93,7 @@ def test_geobuf_to_geojson_roundtrip(spark, tmp_path):
 
     from geobuf_spark.sources import geojson as GJ
 
-    src = "/root/reference/test_data/ld.geojson"
+    src = reference_file("ld.geojson")
     buf_path = str(tmp_path / "out.geobuf")
     gj_path = str(tmp_path / "back.geojson")
     GJ.geojson_to_geobuf(spark, src, buf_path, line_delimited=True)

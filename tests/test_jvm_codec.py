@@ -1,20 +1,20 @@
-"""JVM decode path (codec/jvm/GbCodec.java) — exact parity vs the Arrow
-kernels it twins. The jar is committed, so these run everywhere; if the
-jar were deleted AND no JDK existed, register() returns False and the
-suite skips rather than fails (the JVM path is an optional accelerator,
-the Arrow kernels are the portable contract).
+"""JVM codec (codec/jvm/GbCodec.java) — exact parity vs the Arrow kernels
+it twins and vs the reference-semantics decoder in core.py. The jar is
+committed and the geobuf read path depends on it, so a jar that cannot be
+registered fails this suite instead of skipping it.
 """
 import numpy as np
 import pyarrow as pa
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 
-from geobuf_spark.codec import jvm_codec, spark_codec
+from geobuf_spark.codec import core, jvm_codec, spark_codec
 
 
 @pytest.fixture(scope="module")
 def jvm(spark):
-    if not jvm_codec.register(spark):
-        pytest.skip("no gb-codec.jar and no JDK to build it")
+    jvm_codec.require(spark)
     return spark
 
 
@@ -201,7 +201,6 @@ def test_line_encode_byte_parity_and_roundtrip(jvm):
     enc = jvm_codec.encode_lines_jvm(df)
     dec = {r.line_id: list(r.coords_q)
            for r in jvm_codec.decode_lines_jvm(enc).collect()}
-    from geobuf_spark.codec import core
     for i, c in rows:
         assert dec[i] == core.quantize_vec(np.array(c)).tolist()
 
@@ -209,10 +208,9 @@ def test_line_encode_byte_parity_and_roundtrip(jvm):
 def test_frames_split_parity(jvm, tmp_path):
     """gb_frames (JVM stream splitter) vs core.read_frames byte-parity on
     a framed multi-feature stream, and the full many-files read plan
-    (read_geobuf_files_jvm) vs the python mapInArrow reader."""
+    (read_geobuf_files_jvm) vs read_geobuf (same splitter, with the
+    metadata-dummy sniff)."""
     from pyspark.sql import functions as F
-
-    from geobuf_spark.codec import core
 
     ids = np.arange(50, dtype=np.int64)
     enc = spark_codec.encode_points_kernel(
@@ -222,12 +220,12 @@ def test_frames_split_parity(jvm, tmp_path):
 
     # splitter parity on one stream
     got = (jvm.createDataFrame([(stream,)], "content binary")
-           .select(F.posexplode(F.expr("gb_frames(content)")))
+           .select(F.posexplode(F.expr("gb_frames(content, false)")))
            .orderBy("pos").collect())
     assert [bytes(r[1]) for r in got] == frames
     assert [bytes(f) for f in core.read_frames(stream)] == frames
 
-    # many-files plan parity vs the python reader
+    # many-files plan parity vs read_geobuf
     d = tmp_path / "many"
     d.mkdir()
     for i in range(4):
@@ -243,7 +241,7 @@ def test_frames_split_parity(jvm, tmp_path):
     # truncated stream fails loudly
     with pytest.raises(Exception):
         (jvm.createDataFrame([(stream[:-1],)], "content binary")
-         .select(F.explode(F.expr("gb_frames(content)"))).collect())
+         .select(F.explode(F.expr("gb_frames(content, false)"))).collect())
 
 
 def test_roundtrip_points_jvm_parity(jvm):
@@ -329,3 +327,213 @@ def test_line_poly_enc_random_parity(jvm):
         jvp = [bytes(r[0]) for r in
                dfp.select(F.expr("gb_poly_enc(id, coords, ring_nv)")).collect()]
         assert pyp == jvp, f"poly mismatch seed {seed}"
+
+
+def test_committed_jar_matches_source():
+    """The committed jar was built from the committed GbCodec.java: its
+    recorded source hash equals the source's, so registering it never
+    recompiles."""
+    from tools import build_jvm
+
+    assert build_jvm.JAR.exists()
+    assert build_jvm.recorded_hash() == build_jvm.source_hash()
+
+
+# --- cross-engine parity of the read path: direct calls into the JVM
+# classes (one py4j round trip per frame, no Spark job per example) -------
+
+def _udf(spark, name):
+    return getattr(spark._jvm.geobufspark.GbCodec, name)()
+
+
+def _jvm_accepts(udf, frame: bytes) -> bool:
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors import IllegalArgumentException
+    try:
+        udf.call(bytearray(frame))
+    except (IllegalArgumentException, Py4JJavaError):
+        return False
+    return True
+
+
+def _numpy_accepts(frame: bytes) -> bool:
+    arr = pa.array([frame], type=pa.binary())
+    flat = np.frombuffer(arr.buffers()[2] or b"", dtype=np.uint8)
+    try:
+        spark_codec.frame_fields_walk(
+            flat, np.array([0], np.int64), np.array([len(frame)], np.int64))
+    except ValueError:
+        return False
+    return True
+
+
+def _fields(frame: bytes):
+    """(tag, start, end) of every top-level field of a well-formed frame."""
+    out, pos = [], 0
+    while pos < len(frame):
+        start, tag = pos, frame[pos]
+        v, pos = core.decode_varint(frame, pos + 1)
+        if tag & 7 == 2:
+            pos += v
+        out.append((tag, start, pos))
+    return out
+
+
+def _bbox_field(w, s, e, n) -> bytes:
+    payload = core.pack_varints(core.zigzag_vec(np.array([w, s, e, n], np.int64)))
+    return bytes([0x2A, len(payload)]) + payload
+
+
+_coord = st.floats(-179.9, 179.9, allow_nan=False)
+_props = st.dictionaries(
+    st.text(min_size=1, max_size=6),
+    st.one_of(st.text(max_size=6), st.integers(-2**40, 2**40), st.booleans()),
+    max_size=3)
+
+
+@st.composite
+def _feature_frames(draw, props=_props):
+    """A point or line feature frame with random id and properties."""
+    fid = draw(st.one_of(st.none(), st.integers(0, 2**50)))
+    if draw(st.booleans()):
+        f = core.Feature.from_geojson(
+            "Point", [draw(_coord), draw(_coord)], id=fid, properties=draw(props))
+    else:
+        pts = draw(st.lists(st.tuples(_coord, _coord), min_size=2, max_size=6))
+        f = core.Feature.from_geojson(
+            "LineString", [list(p) for p in pts], id=fid, properties=draw(props))
+    return core.encode_feature(f)
+
+
+_METADATA_DUMMY = core.encode_feature(core.Feature.from_geojson(
+    "Point", [0.0, 0.0], properties={"metadata": "gob-encoded index"}))
+
+
+@settings(max_examples=60, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(frames=st.lists(_feature_frames(), min_size=1, max_size=6),
+       lead=st.sampled_from(["dummy", "metadata_plus_key", "none"]),
+       cut=st.integers(0, 5))
+def test_gb_frames_parity_with_read_frames(jvm, frames, lead, cut):
+    """gb_frames(…, true) == core.read_frames on a stream led by the
+    metadata dummy (dropped), by a first feature carrying "metadata" plus
+    another key (kept), or by neither; gb_frames(…, false) ==
+    read_frames(skip_metadata=False) on a mid-file range of whole frames."""
+    if lead == "dummy":
+        frames = [_METADATA_DUMMY] + frames
+    elif lead == "metadata_plus_key":
+        frames = [core.encode_feature(core.Feature.from_geojson(
+            "Point", [1.0, 2.0], id=3,
+            properties={"metadata": "x", "name": "y"}))] + frames
+    split = _udf(jvm, "Frames")
+    stream = core.write_frames(frames)
+    want = [bytes(f) for f in core.read_frames(stream)]
+    assert [bytes(f) for f in split.call(bytearray(stream), True)] == want
+    assert len(want) == len(frames) - (lead == "dummy")
+
+    cut = min(cut, len(frames) - 1)
+    mid = core.write_frames(frames[cut:])
+    want = [bytes(f) for f in core.read_frames(mid, skip_metadata=False)]
+    assert [bytes(f) for f in split.call(bytearray(mid), False)] == want
+    assert want == [bytes(f) for f in frames[cut:]]
+
+
+def test_read_geobuf_skips_the_dummy_only(jvm, tmp_path):
+    """The Spark read path: frame_idx and the dummy skip match
+    core.read_frames per file; a first feature with "metadata" among
+    other keys is kept."""
+    from geobuf_spark.sources import geobuf_file
+
+    pts = [core.encode_feature(core.Feature.from_geojson(
+        "Point", [i * 0.5, -i * 0.25], id=i)) for i in range(5)]
+    keeper = core.encode_feature(core.Feature.from_geojson(
+        "Point", [1.0, 2.0], id=99, properties={"metadata": "x", "k": 1}))
+    files = {"a.geobuf": [_METADATA_DUMMY] + pts,
+             "b.geobuf": [keeper] + pts[:2]}
+    want = set()
+    for name, frames in files.items():
+        data = core.write_frames(frames)
+        (tmp_path / name).write_bytes(data)
+        want |= {(name, i, bytes(f))
+                 for i, f in enumerate(core.read_frames(data))}
+    got = {(r.path.rsplit("/", 1)[1], r.frame_idx, bytes(r.geobuf))
+           for r in geobuf_file.read_geobuf(jvm, str(tmp_path)).collect()}
+    assert got == want
+    assert len(got) == 5 + 3
+
+
+@settings(max_examples=60, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(frame=_feature_frames(),
+       shape=st.sampled_from(["as_is", "no_bbox", "duplicate"]),
+       extra=st.tuples(*[st.integers(-2**40, 2**40)] * 4))
+def test_gb_bbox_parity_with_decode_feature(jvm, frame, shape, extra):
+    """gb_bbox == core.decode_feature(...).bbox on the lattice; a frame
+    without a bbox gives null; of two bbox fields the last one wins (the
+    rule of the former vectorized bbox kernel)."""
+    bbox = _udf(jvm, "Bbox")
+    if shape == "no_bbox":
+        frame = b"".join(frame[s:e] for tag, s, e in _fields(frame) if tag != 0x2A)
+        assert bbox.call(bytearray(frame)) is None
+        assert core.decode_feature(frame).bbox is None
+        return
+    if shape == "duplicate":
+        frame = frame + _bbox_field(*extra)
+        assert list(bbox.call(bytearray(frame))) == list(extra)
+        return
+    got = np.array(list(bbox.call(bytearray(frame))), np.int64)
+    assert np.array_equal(got.astype(np.float64) / core.POWER,
+                          core.decode_feature(frame).bbox)
+
+
+def test_frame_bbox_dataframe(jvm):
+    """frame_bbox over a DataFrame: quantized bbox columns, null where the
+    frame has no bbox field or is null."""
+    with_bb = core.encode_feature(core.Feature.from_geojson(
+        "LineString", [[1.0, 2.0], [-3.0, 4.5]], id=1))
+    no_bb = b"".join(with_bb[s:e] for tag, s, e in _fields(with_bb) if tag != 0x2A)
+    df = jvm.createDataFrame(
+        [(bytearray(with_bb),), (bytearray(no_bb),), (None,)], "geobuf binary")
+    rows = [tuple(r) for r in spark_codec.frame_bbox(df).collect()]
+    assert rows == [(-30000000, 20000000, 10000000, 45000000),
+                    (None,) * 4, (None,) * 4]
+
+
+@st.composite
+def _corrupt_frames(draw):
+    """A well-formed frame broken one way: truncated, a length prefix
+    raised past the end, a trailing varint cut short or over 10 bytes,
+    more than 63 fields, or one random byte replaced."""
+    frame = draw(_feature_frames())
+    kind = draw(st.sampled_from(
+        ["truncate", "overrun", "short_varint", "long_varint", "fields",
+         "byte"]))
+    if kind == "truncate":
+        return frame[:draw(st.integers(0, len(frame) - 1))]
+    if kind == "overrun":
+        tag, s, e = draw(st.sampled_from(
+            [f for f in _fields(frame) if f[0] & 7 == 2]))
+        n, p = core.decode_varint(frame, s + 1)
+        grow = draw(st.sampled_from([1, 2, 1 << 20, (1 << 64) - 1]))
+        return (frame[:s + 1] + core.encode_varint(n + grow)
+                + frame[p:])
+    if kind == "short_varint":
+        return frame + bytes([0x08]) + b"\x80" * draw(st.integers(0, 3))
+    if kind == "long_varint":
+        return frame + bytes([0x08]) + b"\xff" * draw(st.integers(10, 12)) + b"\x01"
+    if kind == "fields":
+        # a point frame has 4-5 fields; pad to 62..66 in all
+        n = draw(st.integers(62, 66)) - len(_fields(frame))
+        return frame + b"\x30\x01" * max(n, 0)
+    i = draw(st.integers(0, len(frame) - 1))
+    return frame[:i] + bytes([draw(st.integers(0, 255))]) + frame[i + 1:]
+
+
+@settings(max_examples=300, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(frame=_corrupt_frames())
+def test_corrupt_frame_accept_reject_parity(jvm, frame):
+    """The JVM field walk (gb_bbox; the geometry decoders share it) and
+    the numpy frame_fields_walk accept or reject the same frames."""
+    want = _numpy_accepts(frame)
+    assert _jvm_accepts(_udf(jvm, "Bbox"), frame) == want

@@ -228,14 +228,14 @@ def test_multipolygon_kernel_roundtrip():
     assert f0.geom_type == 6 and f0.part_rings.tolist() == rpp[:ppf[0]].tolist()
 
 
-def test_rings_kernel_on_county_polygons():
+def test_rings_kernel_on_county_polygons(reference_file):
     """Real-world ring structure: the reference's county dataset, Polygon
     features re-encoded through the batch kernel, must round-trip exactly
     on the quantized lattice and match the per-feature encoder's bytes
     (id-only features: properties/bbox handling identical by construction)."""
     from geobuf_spark.codec.core import read_frames
 
-    data = open("/root/reference/test_data/county.geobuf", "rb").read()
+    data = open(reference_file("county.geobuf"), "rb").read()
     polys = []
     for frame in read_frames(data):
         f = core.decode_feature(frame)

@@ -71,11 +71,11 @@ def test_geobuf_file_roundtrip(spark, tmp_path, sf_small):
     assert got == want
 
 
-def test_read_reference_county_file(spark):
-    df = geobuf_file.decoded_features(spark, "/root/reference/test_data/county.geobuf")
+def test_read_reference_county_file(spark, reference_file):
+    df = geobuf_file.decoded_features(spark, reference_file("county.geobuf"))
     rows = df.collect()
     assert len(rows) == 3304
-    gj = json.load(open("/root/reference/test_data/county.geojson"))
+    gj = json.load(open(reference_file("county.geojson")))
     by_id = {f["id"]: f for f in gj["features"]}
     for r in rows[:25]:
         props = json.loads(r.props_json)
@@ -363,12 +363,12 @@ def test_commit_output_preserves_old_on_swap(spark, tmp_path):
     assert not any(d.startswith(".old-") for d in os.listdir(out))
 
 
-def test_fast_vs_generic_decode_parity(spark):
+def test_fast_vs_generic_decode_parity(spark, reference_file):
     """decode_features_fast (vectorized geometry + props-only row parse)
     must reproduce the generic per-feature decoder on the reference's own
     county file — ids, structure, props byte-for-byte; coords on the same
     1e-7 lattice."""
-    path = "/root/reference/test_data/county.geobuf"
+    path = reference_file("county.geobuf")
     fast = {r.id: r for r in geobuf_file.decoded_features(spark, path, fast=True).collect()}
     gen = {r.id: r for r in geobuf_file.decoded_features(spark, path, fast=False).collect()}
     assert set(fast) == set(gen) and len(fast) == 3304
@@ -382,6 +382,55 @@ def test_fast_vs_generic_decode_parity(spark):
         # generic path carries the reference's float-accumulation error;
         # both land on the 1e-7 lattice, so any diff is one rounding step
         assert d.max() <= 1.01e-7, (fid, d.max())
+
+
+def test_fast_vs_generic_decode_parity_synthetic(spark):
+    """decode_features_fast == decode_features_generic on one Arrow batch
+    mixing frames with properties, frames without, bare-properties frames
+    and a metadata dummy, over every geometry type: ids, structure and
+    props_json exactly, coords on the same 1e-7 lattice."""
+    import numpy as np
+
+    from geobuf_spark.codec import core, spark_codec
+
+    F_ = core.Feature.from_geojson
+    ring = [[0.5, 0.5], [10.25, 0.5], [10.25, 9.75], [0.5, 0.5]]
+    hole = [[2.0, 2.0], [3.0, 2.0], [3.0, 3.0], [2.0, 2.0]]
+    props = {"name": "ré", "n": -7, "big": 2**40, "x": 1.5, "ok": True}
+    feats = [
+        F_("Point", [0.0, 0.0], id=1, properties={"metadata": "gob index"}),
+        F_("Point", [-73.9857, 40.7484], id=2, properties=props),
+        F_("Point", [151.2093, -33.8688], id=3),
+        F_("LineString", [[1.0, 2.0], [1.5, 2.5], [-3.0, 4.0]], id=4,
+           properties={"k": "v"}),
+        F_("LineString", [[1.0, 2.0, 7.0], [1.5, 2.5, 8.0]], id=5),
+        F_("Polygon", [ring, hole], id=6, properties={"AREA": 0.25}),
+        F_("MultiLineString", [ring[:2], hole[:3]], id=7),
+        F_("MultiPoint", [[1.0, 1.0], [2.0, -2.0]], id=8, properties={"a": 1}),
+        F_("MultiPolygon", [[ring], [hole]], id=9),
+    ]
+    frames = [core.encode_feature(f) for f in feats]
+    frames += [core.encode_feature(core.Feature(
+        geom_type=0, dim=2, coords=np.empty(0), ring_lens=np.empty(0, np.int64),
+        part_rings=np.empty(0, np.int64), id=10 + i, properties=p))
+        for i, p in enumerate([{"metadata": "x"}, {"only": "props", "z": 0}, {}])]
+    df = spark.createDataFrame(
+        [(bytearray(f),) for f in frames], "geobuf binary").coalesce(1)
+    fast = {r.id: r for r in spark_codec.decode_features_fast(df).collect()}
+    gen = {r.id: r for r in spark_codec.decode_features_generic(df).collect()}
+    assert set(fast) == set(gen) == set(range(1, 10)) | {10, 11, 12}
+    for fid, fr in fast.items():
+        gr = gen[fid]
+        assert (fr.geom_type, fr.dim) == (gr.geom_type, gr.dim), fid
+        assert fr.ring_lens == gr.ring_lens, fid
+        assert fr.part_rings == gr.part_rings, fid
+        assert fr.props_json == gr.props_json, fid
+        assert len(fr.coords) == len(gr.coords), fid
+        if fr.coords:
+            d = np.abs(np.asarray(fr.coords) - np.asarray(gr.coords))
+            assert d.max() <= 1.01e-7, (fid, d.max())
+    assert json.loads(fast[2].props_json) == props
+    assert fast[3].props_json == fast[12].props_json == "{}"
 
 
 def test_fast_decode_tolerates_bare_properties_frames(spark):

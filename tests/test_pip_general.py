@@ -11,9 +11,9 @@ from geobuf_spark.sources import geobuf_file, minted
 
 
 @pytest.fixture(scope="module")
-def county(spark):
+def county(spark, reference_file):
     """First 150 county polygons as (poly_id, coords, ring_lens, bbox)."""
-    df = geobuf_file.decoded_features(spark, "/root/reference/test_data/county.geobuf")
+    df = geobuf_file.decoded_features(spark, reference_file("county.geobuf"))
     polys = df.filter(F.col("geom_type") == 3).limit(150).select(
         F.col("id").alias("poly_id"), "coords", "ring_lens",
     )

@@ -143,3 +143,64 @@ def test_salted_default_uses_plan_salt(spark, sf_small):
           for r in sj.pip_join(pts, rects, z=6, strategy="broadcast")
           .select("doc_id", "poly_id").collect()}
     assert auto == bc
+
+
+# --- geobuf read path: the frame split and the bbox read stay in the JVM ---
+
+_PYTHON_NODES = ("ArrowEvalPython", "BatchEvalPython", "MapInArrow",
+                 "MapInPandas", "FlatMapGroupsInPandas")
+
+
+def _final_plan(df) -> str:
+    """Run df, then return its executed plan (the AQE final plan)."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    return plan.toString()
+
+
+@pytest.fixture(scope="module")
+def geobuf_dir(spark, tmp_path_factory):
+    import numpy as np
+
+    from geobuf_spark.codec import core, spark_codec
+
+    d = tmp_path_factory.mktemp("geobuf_plans")
+    rng = np.random.default_rng(3)
+    frames = spark_codec.encode_lines_kernel(
+        np.arange(60, dtype=np.int64), rng.uniform(-50, 50, 60 * 8),
+        np.full(60, 4, dtype=np.int64))
+    frames = [bytes(f.as_py()) for f in frames]
+    for i in range(3):
+        (d / f"part-{i}.geobuf").write_bytes(core.write_frames(frames[i::3]))
+    return str(d)
+
+
+def test_geobuf_bbox_read_has_no_python(spark, geobuf_dir):
+    from geobuf_spark.codec import jvm_codec, spark_codec
+    from geobuf_spark.sources import geobuf_file
+
+    bbox = spark_codec.frame_bbox(geobuf_file.read_geobuf(spark, geobuf_dir))
+    plan = _final_plan(bbox.agg(F.count("w_q"), F.sum("n_q")))
+    for marker in _PYTHON_NODES:
+        assert marker not in plan, (marker, plan)
+    # each JVM function is evaluated once per row: no inferred filter or
+    # collapsed projection repeats it
+    assert plan.count("gb_bbox(") == 1, plan
+    assert plan.count("gb_frames(") == 1, plan
+
+    plan = _final_plan(jvm_codec.read_geobuf_files_jvm(spark, geobuf_dir)
+                       .agg(F.count("*")))
+    for marker in _PYTHON_NODES:
+        assert marker not in plan, (marker, plan)
+    assert plan.count("gb_frames(") == 1, plan
+
+
+def test_decoded_features_single_python_stage(spark, geobuf_dir):
+    from geobuf_spark.sources import geobuf_file
+
+    df = geobuf_file.decoded_features(spark, geobuf_dir)
+    plan = _final_plan(df.agg(F.count("*"), F.sum(F.size("coords"))))
+    assert plan.count("MapInArrow") == 1, plan
+    assert plan.count("gb_frames(") == 1, plan
