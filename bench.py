@@ -58,8 +58,9 @@ def _spread(ts: list[float]) -> float:
 
 
 def _flagship(spark, n_pages: int):
-    """pages → mint → geobuf encode→decode (fused single Arrow pass) →
-    PIP join → tile assign → histogram. Returns (n_rows_out, n_features)."""
+    """pages → mint → geobuf encode→decode (JVM gb_point(gb_point_enc),
+    once per row) → PIP join → tile assign → histogram. Returns
+    (n_rows_out, n_features)."""
     from pyspark.sql import functions as F
 
     from geobuf_spark.codec import spark_codec
@@ -214,8 +215,8 @@ def bench_queries(spark):
 
 
 def bench_codec_vs_json(spark, n_pages: int, trials: int = 5):
-    """The reference's headline claim restated on Spark: geobuf Arrow codec
-    vs JSON to_json/from_json round-trip on identical point features.
+    """The reference's headline claim restated on Spark: geobuf point codec
+    (JVM) vs JSON to_json/from_json round-trip on identical point features.
     Min of warm trials — this host has bursty co-tenants (identical runs
     vary 10-100x), so the minimum is the least-contended, reproducible
     estimate; medians inherit whole-window throttling."""
@@ -248,18 +249,14 @@ def bench_codec_vs_json(spark, n_pages: int, trials: int = 5):
         return df.agg(F.count("*"), F.sum(F.octet_length(col))).collect()[0][0]
 
     # read comparison is fused-reduce vs fused-reduce: Catalyst folds
-    # from_json into the aggregate stage (no materialization), so the
-    # geobuf side gets the same shape — decode+partial-agg in ONE Arrow
-    # pass (decode_points_agg), with the Python stage right-sized (the
-    # ~0.25 s/task dispatch floor dominates at small per-task sizes).
-    n_parts = max(8, spark.sparkContext.defaultParallelism // 4)
-
+    # from_json into the aggregate stage (no materialization), and
+    # decode_points_agg runs gb_point in the same whole-stage pipeline as
+    # its partial aggregate
     def geobuf_read():
-        return spark_codec.decode_points_agg(
-            enc_cached, parts=n_parts).collect()[0][0]
+        return spark_codec.decode_points_agg(enc_cached).collect()[0][0]
 
     def geobuf_read_full():
-        # materializing variant (decoded columns cross the serde twice)
+        # materializing variant (decoded columns, then the aggregate)
         d = spark_codec.decode_points(enc_cached)
         return d.agg(F.count("*"), F.sum("id"), F.sum("lon_q"), F.sum("lat_q")).collect()[0][0]
 
@@ -274,25 +271,11 @@ def bench_codec_vs_json(spark, n_pages: int, trials: int = 5):
     paths = [("geobuf_write", geobuf_write), ("json_write", json_write),
              ("geobuf_read", geobuf_read), ("geobuf_read_full", geobuf_read_full),
              ("json_read", json_read)]
-
-    # JVM decode path (codec/jvm): the UDF runs inside the scan stage like
-    # from_json — zero Python, no Arrow serde, no per-task dispatch floor
-    from geobuf_spark.codec import jvm_codec
-    if jvm_codec.register(spark):
-        def geobuf_read_jvm():
-            return jvm_codec.decode_points_agg_jvm(enc_cached).collect()[0][0]
-
-        def geobuf_write_jvm():
-            return enc_val(jvm_codec.encode_points_jvm(p, id_col="page_id"), "geobuf")
-        paths += [("geobuf_read_jvm", geobuf_read_jvm),
-                  ("geobuf_write_jvm", geobuf_write_jvm)]
-
     out, spread = _run_paths(paths, trials, n_pages)
     # size comparison (the compactness half of the reference's claim)
     out["geobuf_bytes"] = enc_cached.agg(F.sum(F.octet_length("geobuf"))).collect()[0][0]
     out["json_bytes"] = js_cached.agg(F.sum(F.octet_length("j"))).collect()[0][0]
     out["n_rows"] = n_pages
-    out.update(_py_kernel_time(enc_cached, spark_codec.decode_points_any_kernel))
     p.unpersist(); enc_cached.unpersist(); js_cached.unpersist()
     return out, spread
 
@@ -742,14 +725,14 @@ def main():
         return round(sec / n * 1e9, 1)
 
     # batch-granularity evidence for the python Arrow read path (VERDICT
-    # r4 #4): the numpy kernel alone vs the end-to-end rates. Where
+    # r4 #4; lines and polygons — points have no Arrow tier): the numpy
+    # kernel alone vs the end-to-end rates. Where
     # py_kernel < json_read per feature, the end-to-end python deficit is
     # the per-task dispatch floor + Arrow serdes, which amortize with
     # per-task batch size at scale; where it is not, the python path is
     # honestly the compatibility tier (see BENCH/BASELINE.md).
     kernel_rows = {
         "py_kernel_ns_per_feature": {
-            "points": _nsf(c["py_kernel_sec"], c["py_kernel_n"]),
             "lines": _nsf(li["py_kernel_sec"], li["py_kernel_n"]),
             "polys": _nsf(po["py_kernel_sec"], po["py_kernel_n"]),
         },
@@ -759,10 +742,10 @@ def main():
             "polys": _nsf(po["json_read"], po["n_rows"]),
         },
         **({"jvm_read_ns_per_feature": {
-            "points": _nsf(c["geobuf_read_jvm"], c["n_rows"]),
+            "points": _nsf(c["geobuf_read"], c["n_rows"]),
             "lines": _nsf(li["geobuf_read_jvm"], li["n_rows"]),
             "polys": _nsf(po["geobuf_read_jvm"], po["n_rows"]),
-        }} if "geobuf_read_jvm" in c else {}),
+        }} if "geobuf_read_jvm" in li else {}),
     }
     print(json.dumps({
         "lines_read_speedup_vs_json": round(li["json_read"] / li["geobuf_read"], 2),
@@ -802,14 +785,9 @@ def main():
         "sf": SF_DIR,
         "features_per_sec": round(r["features_per_sec"]),
         "codec_read_speedup_vs_json": round(c["json_read"] / c["geobuf_read"], 2),
-        **({"codec_read_jvm_speedup_vs_json":
-            round(c["json_read"] / c["geobuf_read_jvm"], 2),
-            "codec_write_jvm_speedup_vs_json":
-            round(c["json_write"] / c["geobuf_write_jvm"], 2)}
-           if "geobuf_read_jvm" in c else {}),
         "codec_write_speedup_vs_json": round(c["json_write"] / c["geobuf_write"], 2),
         "codec_size_ratio_vs_json": round(c["geobuf_bytes"] / c["json_bytes"], 3),
-        "codec_sec": {k: round(v, 3) for k, v in c.items() if k.endswith(("read", "write", "read_full", "jvm"))},
+        "codec_sec": {k: round(v, 3) for k, v in c.items() if k.endswith(("read", "write", "read_full"))},
         "n_flagship_features": N_PAGES,
         # noise annotations: per-row max/min trial ratio (1.0 = clean
         # window) + the loadavg observed at the gate and per query pass —

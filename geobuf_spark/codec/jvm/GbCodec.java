@@ -6,8 +6,11 @@ import org.apache.spark.sql.api.java.UDF3;
 import scala.collection.Seq;
 
 /**
- * JVM-side geobuf frame decode — the per-row twin of the Python Arrow
- * kernels in codec/spark_codec.py (_tokenize_geometry + point/line cores).
+ * JVM-side geobuf frame codec. For points it is the only Spark engine
+ * (spark_codec.encode_points/decode_points/roundtrip_points run these
+ * UDFs, codec/core.py is the byte-parity oracle); for lines and polygons
+ * it is the per-row twin of the Python Arrow kernels in
+ * codec/spark_codec.py (_tokenize_geometry + line/ring cores).
  *
  * Why this exists: the Arrow kernels are vectorized but pay a ~0.25 s/task
  * Python dispatch floor plus two Arrow serdes; a JVM UDF runs inside the
@@ -134,6 +137,18 @@ public final class GbCodec {
         return (v << 1) ^ (v >> 63);
     }
 
+    /**
+     * int64(c * 1e7) - Go/numpy truncation toward zero (geom.go:173-179).
+     * NaN and +-Inf have no lattice point (the cast would give 0 and
+     * Long.MAX/MIN_VALUE), so they throw, naming the value.
+     */
+    static long quantize(double c) {
+        if (!Double.isFinite(c))
+            throw new IllegalArgumentException(
+                "non-finite coordinate " + c + " - filter before encoding");
+        return (long) (c * 1e7);
+    }
+
     static int varintLen(long v) {
         int n = 1;
         while ((v & ~0x7FL) != 0) { v >>>= 7; n++; }
@@ -146,7 +161,10 @@ public final class GbCodec {
         return p;
     }
 
-    /** gb_point(geobuf) -> [id, lon_q, lat_q] (decode_points_any parity). */
+    /**
+     * gb_point(geobuf) -> [id, lon_q, lat_q]: the quantized point of
+     * core.decode_feature(frame, quantized=True), extra fields skipped.
+     */
     public static final class Point implements UDF1<byte[], long[]> {
         @Override
         public long[] call(byte[] b) {
@@ -281,7 +299,7 @@ public final class GbCodec {
             long[] q = new long[m];
             scala.collection.Iterator<Double> it = coords.iterator();
             for (int i = 0; i < m; i++)
-                q[i] = (long) ((double) it.next() * 1e7);
+                q[i] = quantize(it.next());
             int[] nv = new int[r];
             // Number, not Integer: Spark hands int or bigint array elements
             // depending on the column type, and erasure would defer a bad
@@ -340,11 +358,10 @@ public final class GbCodec {
     }
 
     /**
-     * gb_point_enc(id, lon, lat) -> geobuf frame, byte-identical to the
-     * Arrow kernel encode_points_kernel (write_feature.go:192-263 layout:
-     * 0x08 id | 0x18 code=1 | 0x22 zigzag varint x,y | 0x2A degenerate
-     * bbox x,y,x,y). Quantize is (long)(c * 1e7) - Go/numpy truncation
-     * toward zero (geom.go:173-179).
+     * gb_point_enc(id, lon, lat) -> geobuf frame, byte-identical to
+     * core.encode_feature (write_feature.go:192-263 layout: 0x08 id |
+     * 0x18 code=1 | 0x22 zigzag varint x,y | 0x2A degenerate bbox
+     * x,y,x,y). Coordinates go through quantize().
      */
     public static final class PointEnc implements UDF3<Long, Double, Double, byte[]> {
         @Override
@@ -352,8 +369,8 @@ public final class GbCodec {
             if (id == null || lon == null || lat == null)
                 throw new IllegalArgumentException(
                     "encode point: null id/lon/lat - filter before encoding");
-            long zx = zigzag((long) (lon * 1e7));
-            long zy = zigzag((long) (lat * 1e7));
+            long zx = zigzag(quantize(lon));
+            long zy = zigzag(quantize(lat));
             long uid = id;
             int lx = varintLen(zx), ly = varintLen(zy);
             int glen = lx + ly, blen = 2 * glen;
@@ -393,7 +410,7 @@ public final class GbCodec {
             long[] q = new long[m];
             scala.collection.Iterator<Double> it = coords.iterator();
             for (int i = 0; i < m; i++)
-                q[i] = (long) ((double) it.next() * 1e7);
+                q[i] = quantize(it.next());
             long[] zz = new long[m];
             long minx = Long.MAX_VALUE, maxx = Long.MIN_VALUE;
             long miny = Long.MAX_VALUE, maxy = Long.MIN_VALUE;

@@ -6,12 +6,16 @@ longer matches) and exposes it as Spark SQL functions that run inside the
 scan stage like from_json: zero Python in the plan, so the per-task Python
 dispatch and both Arrow serdes disappear.
 
-The geobuf read path depends on it: sources.geobuf_file.read_geobuf splits
-frames with gb_frames and spark_codec.frame_bbox reads bboxes with gb_bbox,
-and both raise (naming the jar) when it cannot be registered. The full
-decode to GEOM_SCHEMA rows stays on the Arrow kernels in spark_codec.py;
-the fused decode/encode shapes below are the JVM twins of those kernels.
+The point codec is JVM-only: spark_codec.encode_points, decode_points,
+decode_points_agg and roundtrip_points are plans over gb_point_enc and
+gb_point, pinned byte for byte against codec/core.py. The geobuf read path
+depends on the jar too: sources.geobuf_file.read_geobuf splits frames with
+gb_frames and spark_codec.frame_bbox reads bboxes with gb_bbox, and all of
+them raise (naming the jar) when it cannot be registered. The full decode
+to GEOM_SCHEMA rows stays on the Arrow kernels in spark_codec.py; the line
+and polygon shapes below are the JVM twins of those kernels.
 """
+
 from __future__ import annotations
 
 from pathlib import Path
@@ -85,20 +89,6 @@ def require(spark: SparkSession) -> None:
             f"the JVM geobuf codec ({JAR}) could not be registered: {e}") from e
 
 
-def decode_points_agg_jvm(df: DataFrame, bin_col: str = "geobuf") -> DataFrame:
-    """Fused decode→reduce for point frames, JVM-only plan: gb_point runs
-    per row inside the scan stage; the aggregate folds in the same
-    whole-stage pipeline. Output schema identical to
-    spark_codec.decode_points_agg (n, sum_id, sum_lon_q, sum_lat_q)."""
-    p = F.expr(f"gb_point({bin_col})")
-    return df.select(p.alias("p")).agg(
-        F.count("*").alias("n"),
-        F.sum(F.element_at("p", 1)).alias("sum_id"),
-        F.sum(F.element_at("p", 2)).alias("sum_lon_q"),
-        F.sum(F.element_at("p", 3)).alias("sum_lat_q"),
-    )
-
-
 def decode_lines_agg_jvm(df: DataFrame, bin_col: str = "geobuf") -> DataFrame:
     """Fused decode→reduce for line frames (JVM plan). Output schema
     identical to spark_codec.decode_lines_agg (n, sum_size, sum_first_x)."""
@@ -107,18 +97,6 @@ def decode_lines_agg_jvm(df: DataFrame, bin_col: str = "geobuf") -> DataFrame:
         F.count("*").alias("n"),
         F.sum(F.element_at("s", 2)).alias("sum_size"),
         F.sum(F.element_at("s", 3)).alias("sum_first_x"),
-    )
-
-
-def decode_points_jvm(df: DataFrame, bin_col: str = "geobuf",
-                      id_col: str = "id") -> DataFrame:
-    """Materializing point decode → (id, lon_q, lat_q), JVM plan
-    (decode_points_any parity)."""
-    p = F.expr(f"gb_point({bin_col})")
-    return df.select(p.alias("p")).select(
-        F.element_at("p", 1).alias(id_col),
-        F.element_at("p", 2).alias("lon_q"),
-        F.element_at("p", 3).alias("lat_q"),
     )
 
 
@@ -164,20 +142,6 @@ def decode_polygons_agg_jvm(df: DataFrame, bin_col: str = "geobuf") -> DataFrame
     )
 
 
-def roundtrip_points_jvm(df: DataFrame, id_col: str = "doc_id",
-                         lon: str = "lon", lat: str = "lat") -> DataFrame:
-    """Fused encode→decode entirely inside whole-stage codegen:
-    gb_point(gb_point_enc(...)) — the JVM twin of
-    spark_codec.roundtrip_points (same proof of the wire format, zero
-    Python and zero Arrow serde). Frames are byte-identical between the
-    two paths (pytest-pinned), so the quantized outputs agree exactly."""
-    p = F.expr(f"gb_point(gb_point_enc({id_col}, {lon}, {lat}))")
-    return df.select(p.alias("p")).select(
-        F.element_at("p", 1).alias(id_col),
-        F.element_at("p", 2).alias("lon_q"),
-        F.element_at("p", 3).alias("lat_q"))
-
-
 def read_geobuf_files_jvm(spark: SparkSession, path: str,
                           bin_col: str = "geobuf") -> DataFrame:
     """Many framed .geobuf files → one DataFrame of raw frames, zero
@@ -193,15 +157,6 @@ def read_geobuf_files_jvm(spark: SparkSession, path: str,
     return (files.select(
         F.col("path"),
         F.explode(F.expr("gb_frames(content, false)")).alias(bin_col)))
-
-
-def encode_points_jvm(df: DataFrame, id_col: str = "doc_id", lon: str = "lon",
-                      lat: str = "lat", out: str = "geobuf") -> DataFrame:
-    """(id, lon, lat) → (id, geobuf), JVM plan — byte-identical frames to
-    spark_codec.encode_points with zero Python in the stage."""
-    return df.select(
-        F.col(id_col),
-        F.expr(f"gb_point_enc({id_col}, {lon}, {lat})").alias(out))
 
 
 def encode_lines_jvm(df: DataFrame, id_col: str = "line_id",

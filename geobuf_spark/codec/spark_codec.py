@@ -1,14 +1,13 @@
 """Vectorized geobuf codec over Spark DataFrames — Arrow batches in, numpy
 kernels inside, zero per-row Python on the hot path.
 
-Hot path (the 10^12-page workload): point features with an integer id.
-A point frame is [0x08 id] [0x18 code] [0x22 len zz(x) zz(y)]
-[0x2A len zz(x) zz(y) zz(x) zz(y)] — *every token is a varint*, so:
-
-- encode: per-row varint byte matrices + cumsum offsets + one scatter into
-  a single buffer, wrapped zero-copy into an Arrow BinaryArray;
-- decode: one `unpack_varints` pass over the concatenated frames yields a
-  flat token stream with exactly 14 tokens per frame → reshape (N, 14).
+Points are the exception: encode_points, decode_points, decode_points_agg
+and roundtrip_points are JVM plans over the gb_point_enc/gb_point UDFs of
+codec/jvm (one evaluation per row, no Python worker in the stage), with
+codec/core.py as their byte-parity oracle. The line, ring and
+multipolygon batch kernels below keep the Arrow shape: varint byte
+matrices + cumsum offsets + one scatter into a single buffer on encode,
+one varint sweep over the concatenated geometry payloads on decode.
 
 Generic geometries/properties go through the per-feature core codec inside
 mapInPandas — the import/export edge (ConvertGeojson/ConvertGeobuf analog,
@@ -20,19 +19,15 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from geobuf_spark.codec import core
+from geobuf_spark.codec import core, jvm_codec
 
 # ---------------------------------------------------------------------------
 # numpy batch kernels (testable without Spark)
 # ---------------------------------------------------------------------------
-
-_POINT_TOKENS = 14  # 8,id,24,code,34,glen,gx,gy,42,blen,bx,by0,bx1,by1
-
-
 
 class _FrameWriter:
     """Shared scatter helpers for the batch encode kernels: a per-row write
@@ -66,36 +61,14 @@ class _FrameWriter:
         self.pos = self.pos + seg_bytes
 
 
-def _tokenize_frames(frames: pa.Array):
-    """Shared decode prologue: concatenated frame buffer → (n, flat bytes,
-    all varint tokens, first-token index per frame, tokens per frame)."""
-    combined = pa.concat_arrays([frames.cast(pa.binary())])
-    n = len(combined)
-    if n == 0:
-        e = np.empty(0, dtype=np.int64)
-        return 0, np.empty(0, np.uint8), np.empty(0, np.uint64), e, e
-    flat = np.frombuffer(combined.buffers()[2], dtype=np.uint8)
-    offs = np.frombuffer(combined.buffers()[1], dtype=np.int32)
-    start, end = int(offs[combined.offset]), int(offs[combined.offset + n])
-    seg = flat[start:end]
-    tok_ends = np.flatnonzero(seg < 0x80)
-    tok_starts_b = np.concatenate(([0], tok_ends[:-1] + 1))
-    frame_off = offs[combined.offset : combined.offset + n + 1].astype(np.int64) - start
-    counts = np.diff(np.searchsorted(tok_starts_b, frame_off))
-    tokens = core.unpack_varints(seg, 0, len(seg))
-    first = np.zeros(n, dtype=np.int64)
-    np.cumsum(counts[:-1], out=first[1:])
-    return n, seg, tokens, first, counts
-
-
 def _tokenize_geometry(frames: pa.Array, allow_missing: bool = False,
                        props_rows: bool = False):
     """Payload-level decode prologue: field-walk every frame for the id
     (tag 0x08), geom code (tag 0x18) and geometry payload (tag 0x22),
     gather the payload byte ranges contiguously, and varint-tokenize ONLY
-    those bytes. Unlike `_tokenize_frames`, this tolerates properties,
-    missing bbox, and any field order — the same per-field walk the
-    reference decoder does (read_feature.go:9-100), batched.
+    those bytes. It tolerates properties, missing bbox, and any field
+    order — the same per-field walk the reference decoder does
+    (read_feature.go:9-100), batched.
 
     Returns (n, ids, codes, tokens, first, counts) where tokens are the
     geometry deltas/headers only and first/counts index them per frame.
@@ -209,195 +182,82 @@ def _varint_matrix(v: np.ndarray):
     return (groups | cont.astype(np.uint64)).astype(np.uint8), lens
 
 
-def encode_points_kernel(ids: np.ndarray, lon: np.ndarray, lat: np.ndarray) -> pa.Array:
-    """Encode N point features → Arrow binary array of geobuf frames.
-
-    Wire layout per WriteFeature (write_feature.go:192-263) with geometry
-    per writepointbs (geom.go:187-201) and bbox (write_feature.go:249-260,
-    degenerate [x,y,x,y] for a point, bb.go:90-95)."""
-    n = len(ids)
-    qx = core.quantize_vec(lon)
-    qy = core.quantize_vec(lat)
-    zx = core.zigzag_vec(qx)
-    zy = core.zigzag_vec(qy)
-    zid = ids.astype(np.uint64)
-
-    mid, lid = _varint_matrix(zid)
-    mx, lx = _varint_matrix(zx)
-    my, ly = _varint_matrix(zy)
-    glen = lx + ly
-    blen = 2 * glen
-    mgl, lgl = _varint_matrix(glen.astype(np.uint64))
-    mbl, lbl = _varint_matrix(blen.astype(np.uint64))
-
-    # per-row frame length
-    total = 1 + lid + 2 + 1 + lgl + glen + 1 + lbl + blen
-    offsets = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(total, out=offsets[1:])
-    buf = np.empty(offsets[-1], dtype=np.uint8)
-
-    w = _FrameWriter(buf, offsets[:-1])
-    put_const, put_mat = w.const, w.mat
-
-    put_const(8)
-    put_mat(mid, lid)
-    put_const(24)
-    put_const(1)  # geom code Point, dim 2
-    put_const(34)
-    put_mat(mgl, lgl)
-    put_mat(mx, lx)
-    put_mat(my, ly)
-    put_const(42)
-    put_mat(mbl, lbl)
-    put_mat(mx, lx)
-    put_mat(my, ly)
-    put_mat(mx, lx)
-    put_mat(my, ly)
-    assert np.array_equal(w.pos, offsets[1:])
-
-    return pa.BinaryArray.from_buffers(
-        pa.binary(), n,
-        [None, pa.py_buffer(offsets.astype(np.int32).tobytes()), pa.py_buffer(buf.tobytes())],
-    )
-
-
-def decode_points_kernel(frames: pa.Array):
-    """Decode N point frames → (id uint64, qx int64, qy int64) — one varint
-    sweep over the concatenated buffer, reshape to 14 tokens/frame."""
-    combined = pa.concat_arrays([frames.cast(pa.binary())])
-    flat = np.frombuffer(combined.buffers()[2], dtype=np.uint8) if combined.buffers()[2] else np.empty(0, np.uint8)
-    offs = np.frombuffer(combined.buffers()[1], dtype=np.int32)
-    start, end = int(offs[combined.offset]), int(offs[combined.offset + len(combined)])
-    tokens = core.unpack_varints(flat, start, end)
-    n = len(combined)
-    if n == 0:
-        e = np.empty(0, dtype=np.int64)
-        return e.astype(np.uint64), e, e
-    tok = tokens.reshape(n, _POINT_TOKENS)
-    # sanity: tags where expected
-    assert int(tok[0, 0]) == 8 and int(tok[0, 2]) == 24 and int(tok[0, 4]) == 34
-    ids = tok[:, 1]
-    qx = core.unzigzag_vec(tok[:, 6])
-    qy = core.unzigzag_vec(tok[:, 7])
-    return ids, qx, qy
-
-
 # ---------------------------------------------------------------------------
 # DataFrame-level API
 # ---------------------------------------------------------------------------
 
+def _point_enc(id_col: str, lon: str, lat: str) -> Column:
+    """gb_point_enc over (id, lon, lat): 0x08 id | 0x18 1 | 0x22 zigzag
+    x,y | 0x2A degenerate bbox, coordinates truncated onto the 1e-7
+    lattice. Null or non-finite inputs fail the task."""
+    return F.call_function("gb_point_enc", F.col(id_col).cast("long"),
+                           F.col(lon).cast("double"), F.col(lat).cast("double"))
+
+
+def _point_columns(df: DataFrame, p: Column, id_col: str) -> DataFrame:
+    """A gb_point array [id, lon_q, lat_q] → columns (id_col, lon_q, lat_q),
+    with `p` evaluated once per row. `p` is computed in one select and read
+    through inline(array(struct(...))): the Generate is a barrier, so an
+    inferred isnotnull filter on lon_q/lat_q stays above it, and projection
+    collapse cannot copy `p` (or the expressions under it) into each of
+    the three element_at reads."""
+    jvm_codec.require(df.sparkSession)
+    return df.select(p.alias("_p")).select(F.inline(F.array(F.struct(
+        F.element_at("_p", 1).alias(id_col),
+        F.element_at("_p", 2).alias("lon_q"),
+        F.element_at("_p", 3).alias("lat_q")))))
+
+
 def encode_points(df: DataFrame, id_col: str = "doc_id", lon: str = "lon",
                   lat: str = "lat", out: str = "geobuf") -> DataFrame:
-    """(id, lon, lat) → (id, geobuf) via mapInArrow — Arrow RecordBatch in,
-    numpy kernel, Arrow out; no pandas materialization anywhere."""
-    schema = T.StructType([
-        T.StructField(id_col, T.LongType()),
-        T.StructField(out, T.BinaryType()),
-    ])
-
-    def _enc(batches):
-        for batch in batches:
-            for ci in range(3):
-                if batch.column(ci).null_count:
-                    raise ValueError(
-                        "encode_points: null id/lon/lat (nulls become NaN "
-                        "→ INT64_MIN garbage); filter before encoding")
-            ids = batch.column(0).to_numpy(zero_copy_only=False)
-            lons = batch.column(1).to_numpy(zero_copy_only=False)
-            lats = batch.column(2).to_numpy(zero_copy_only=False)
-            frames = encode_points_kernel(
-                ids.astype(np.int64), lons.astype(np.float64), lats.astype(np.float64)
-            )
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, type=pa.int64()), frames], names=[id_col, out]
-            )
-
-    return df.select(id_col, lon, lat).mapInArrow(_enc, schema)
+    """(id, lon, lat) → (id, geobuf) in the JVM (gb_point_enc), frames
+    byte-identical to core.encode_feature. The frame is read through the
+    same one-row inline barrier as the decoders, so a filter on it never
+    re-runs the encoder."""
+    jvm_codec.require(df.sparkSession)
+    return df.select(F.inline(F.array(F.struct(
+        F.col(id_col).cast("long").alias(id_col),
+        _point_enc(id_col, lon, lat).alias(out)))))
 
 
-def decode_points(df: DataFrame, bin_col: str = "geobuf", id_col: str = "id",
-                  quantized: bool = True) -> DataFrame:
-    """Decode point frames → columns (id, lon_q, lat_q) or float lon/lat.
-
-    The quantized int64 path is exact (lossless on the 1e-7 lattice); the
-    float path applies the reference's go_round7 decode semantics. Arrow
-    binary buffers are read in place — no per-row conversion."""
-    fields = [
-        T.StructField(id_col, T.LongType()),
-        T.StructField("lon_q", T.LongType()),
-        T.StructField("lat_q", T.LongType()),
-    ]
-    if not quantized:
-        fields += [T.StructField("lon", T.DoubleType()), T.StructField("lat", T.DoubleType())]
-    schema = T.StructType(fields)
-    names = [f.name for f in fields]
-
-    def _dec(batches):
-        for batch in batches:
-            frames = batch.column(batch.schema.get_field_index(bin_col))
-            # payload field-walk kernel: ~2-4x faster than tokenizing the
-            # whole frame (2 payload varints/frame vs 14), and tolerant of
-            # props / missing bbox
-            ids, qx, qy = decode_points_any_kernel(frames)
-            arrays = [
-                pa.array(ids.astype(np.int64), type=pa.int64()),
-                pa.array(qx, type=pa.int64()),
-                pa.array(qy, type=pa.int64()),
-            ]
-            if not quantized:
-                arrays.append(pa.array(core.go_round7(qx.astype(np.float64) / core.POWER)))
-                arrays.append(pa.array(core.go_round7(qy.astype(np.float64) / core.POWER)))
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
-
-    return df.select(bin_col).mapInArrow(_dec, schema)
+def decode_points(df: DataFrame, bin_col: str = "geobuf",
+                  id_col: str = "id") -> DataFrame:
+    """Point frames → (id, lon_q, lat_q) in the JVM (gb_point): the exact
+    int64 1e-7 lattice. Extra fields (properties, no bbox, any field
+    order) are skipped; a frame whose geometry is not two values, or that
+    is truncated, fails the task."""
+    return _point_columns(df, F.call_function("gb_point", F.col(bin_col)), id_col)
 
 
-def decode_points_agg(df: DataFrame, bin_col: str = "geobuf",
-                      parts: int | None = None) -> DataFrame:
-    """Fused decode→reduce for point frames: one Arrow pass emits per-batch
-    PARTIAL sums (count, Σid, Σlon_q, Σlat_q); the JVM folds the partials.
+def decode_points_agg(df: DataFrame, bin_col: str = "geobuf") -> DataFrame:
+    """Fused decode→reduce for point frames: (n, sum_id, sum_lon_q,
+    sum_lat_q), with gb_point and the partial aggregate in one whole-stage
+    pipeline — the engine's lazy-read shape (ReadBoundingBox /
+    LazyFeature semantics, reader.go:145-166), the same fusion Catalyst
+    gives from_json."""
+    return decode_points(df, bin_col).agg(
+        F.count("*").alias("n"), F.sum("id").alias("sum_id"),
+        F.sum("lon_q").alias("sum_lon_q"), F.sum("lat_q").alias("sum_lat_q"))
 
-    This is the engine's lazy-read shape (ReadBoundingBox / LazyFeature
-    semantics, reader.go:145-166): when a query reduces over decoded
-    values, materializing the decoded columns through a second Arrow serde
-    is pure overhead — the same reason Catalyst fuses from_json into the
-    aggregate stage. `parts` right-sizes the Python stage: per-task
-    dispatch costs ~0.2-0.3 s wall, so many tiny tasks lose to few big
-    ones until the kernel work dominates (batch-size tuning, TODO r01)."""
-    src = df.select(bin_col)
-    if parts:
-        src = src.coalesce(parts)
-    schema = T.StructType([
-        T.StructField("n", T.LongType()),
-        T.StructField("sum_id", T.LongType()),
-        T.StructField("sum_lon_q", T.LongType()),
-        T.StructField("sum_lat_q", T.LongType()),
-    ])
 
-    def _da(batches):
-        c = si = sx = sy = 0
-        for b in batches:
-            ids, qx, qy = decode_points_any_kernel(b.column(0))
-            c += len(ids)
-            si += int(ids.sum())
-            sx += int(qx.sum())
-            sy += int(qy.sum())
-        yield pa.RecordBatch.from_arrays(
-            [pa.array([v], type=pa.int64()) for v in (c, si, sx, sy)],
-            names=["n", "sum_id", "sum_lon_q", "sum_lat_q"])
-
-    partials = src.mapInArrow(_da, schema)
-    return partials.agg(
-        F.sum("n").alias("n"), F.sum("sum_id").alias("sum_id"),
-        F.sum("sum_lon_q").alias("sum_lon_q"),
-        F.sum("sum_lat_q").alias("sum_lat_q"))
+def roundtrip_points(df: DataFrame, id_col: str = "doc_id", lon: str = "lon",
+                     lat: str = "lat") -> DataFrame:
+    """Fused encode→decode, gb_point(gb_point_enc(...)), evaluated once per
+    row in the JVM (bench/verify path): proves the wire format with no
+    Python worker and no Arrow serde. Output (id_col, lon_q, lat_q)."""
+    p = F.call_function("gb_point", _point_enc(id_col, lon, lat))
+    return _point_columns(df, p, id_col)
 
 
 def decode_lines_agg(df: DataFrame, bin_col: str = "geobuf",
                      parts: int | None = None) -> DataFrame:
-    """Fused decode→reduce for line frames: per-batch partials of
-    (count, Σ size(coords_q), Σ first-x) — the roads-scan reduce shape —
-    folded JVM-side. Same rationale as `decode_points_agg`."""
+    """Fused decode→reduce for line frames: one Arrow pass emits per-batch
+    partials of (count, Σ size(coords_q), Σ first-x) — the roads-scan
+    reduce shape — and the JVM folds them. Materializing the decoded
+    columns through a second Arrow serde would be pure overhead when the
+    query only reduces them. `parts` right-sizes the Python stage:
+    per-task dispatch costs ~0.2-0.3 s wall, so many tiny tasks lose to
+    few big ones until the kernel work dominates."""
     src = df.select(bin_col)
     if parts:
         src = src.coalesce(parts)
@@ -597,31 +457,6 @@ def decode_lines(df: DataFrame, bin_col: str = "geobuf", id_col: str = "line_id"
             )
 
     return df.select(bin_col).mapInArrow(_dec, schema)
-
-
-def roundtrip_points(df: DataFrame, id_col: str = "doc_id", lon: str = "lon",
-                     lat: str = "lat") -> DataFrame:
-    """Fused encode→decode in ONE Python round-trip (bench/verify path):
-    proves the wire format while paying serde once."""
-    schema = T.StructType([
-        T.StructField(id_col, T.LongType()),
-        T.StructField("lon_q", T.LongType()),
-        T.StructField("lat_q", T.LongType()),
-    ])
-
-    def _rt(batches):
-        for batch in batches:
-            ids = batch.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
-            lons = batch.column(1).to_numpy(zero_copy_only=False).astype(np.float64)
-            lats = batch.column(2).to_numpy(zero_copy_only=False).astype(np.float64)
-            frames = encode_points_kernel(ids, lons, lats)
-            # payload-walk decode: ~2-4x the fixed 14-token tokenizer
-            dids, qx, qy = decode_points_any_kernel(frames)
-            yield pa.RecordBatch.from_arrays([
-                pa.array(dids.astype(np.int64)), pa.array(qx), pa.array(qy),
-            ], names=[id_col, "lon_q", "lat_q"])
-
-    return df.select(id_col, lon, lat).mapInArrow(_rt, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -1754,47 +1589,7 @@ def frame_bbox(df: DataFrame, bin_col: str = "geobuf") -> DataFrame:
     """(w_q, s_q, e_q, n_q) per frame without decoding geometry — the JVM
     gb_bbox field walk (ReadBB, read_feature.go:103-134), no Python in the
     plan; frames lacking a bbox field (old encoders) yield nulls."""
-    from geobuf_spark.codec import jvm_codec
-
     jvm_codec.require(df.sparkSession)
     b = df.select(F.call_function("gb_bbox", F.col(bin_col)).alias("bbox"))
     return b.select(*(b.bbox[i].alias(c)
                       for i, c in enumerate(("w_q", "s_q", "e_q", "n_q"))))
-
-
-def decode_points_any_kernel(frames: pa.Array):
-    """Decode point frames REGARDLESS of extra fields (properties etc.):
-    field-walk to the geometry payload per frame, gather those byte ranges
-    into one contiguous buffer, single varint sweep → (ids, qx, qy).
-    Stays fully vectorized where `decode_points_kernel`'s fixed 14-token
-    layout would break."""
-    n, ids, _codes, tokens, _first, counts = _tokenize_geometry(frames)
-    if n == 0:
-        e = np.empty(0, dtype=np.int64)
-        return e, e, e
-    if len(tokens) != 2 * n or (counts != 2).any():
-        raise ValueError("not a point batch (geometry is not 2 values/frame)")
-    tok = tokens.reshape(n, 2)
-    return ids, core.unzigzag_vec(tok[:, 0]), core.unzigzag_vec(tok[:, 1])
-
-
-def decode_points_any(df: DataFrame, bin_col: str = "geobuf",
-                      id_col: str = "id") -> DataFrame:
-    """DataFrame wrapper of `decode_points_any_kernel` — point frames with
-    any extra fields → (id, lon_q, lat_q)."""
-    schema = T.StructType([
-        T.StructField(id_col, T.LongType()),
-        T.StructField("lon_q", T.LongType()),
-        T.StructField("lat_q", T.LongType()),
-    ])
-
-    def _dec(batches):
-        for batch in batches:
-            frames = batch.column(batch.schema.get_field_index(bin_col))
-            ids, qx, qy = decode_points_any_kernel(frames)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, type=pa.int64()), pa.array(qx, type=pa.int64()),
-                 pa.array(qy, type=pa.int64())],
-                names=[id_col, "lon_q", "lat_q"])
-
-    return df.select(bin_col).mapInArrow(_dec, schema)

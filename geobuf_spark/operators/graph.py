@@ -449,31 +449,45 @@ def bfs_hops(edges: DataFrame, seeds: DataFrame, max_hops: int = 3,
     return dist.select("host", F.col("hop").cast("int").alias("hop"))
 
 
-def sql_bfs_hops(edges_cte: str, seed_pred: str, max_hops: int = 3,
-                 src: str = "src", dst: str = "dst") -> str:
-    """DuckDB twin of bfs_hops: the frontier loop unrolled as chained
-    CTEs bfs0..bfs{max_hops}; seed_pred is a boolean SQL predicate over the
-    node name column `n` of the adjacency CTE."""
-    steps = []
-    for h in range(1, max_hops + 1):
-        steps.append(f"""
-        bfs{h} AS MATERIALIZED (SELECT host, min(hop) AS hop FROM (
-                    SELECT host, hop FROM bfs{h - 1}
-                    UNION ALL
-                    SELECT adj.nb AS host, {h} AS hop
-                    FROM bfs{h - 1} f JOIN adj ON adj.n = f.host
-                    WHERE f.hop = {h - 1})
-                 GROUP BY 1)""")
+def sql_bfs_adjacency(src: str = "src", dst: str = "dst") -> str:
+    """CTEs und/adj/nodes over an edge CTE `ed`: the undirected simple
+    graph as a symmetric adjacency adj(n, nb) and its node set."""
     return f"""
-        WITH {edges_cte},
         und AS (SELECT DISTINCT least({src}, {dst}) AS u,
                                 greatest({src}, {dst}) AS v
                 FROM ed WHERE {src} <> {dst}),
         adj AS (SELECT u AS n, v AS nb FROM und
                 UNION ALL SELECT v AS n, u AS nb FROM und),
-        nodes AS (SELECT DISTINCT n FROM adj),
-        bfs0 AS (SELECT n AS host, 0 AS hop FROM nodes WHERE {seed_pred}),
-        {','.join(steps)}
+        nodes AS (SELECT DISTINCT n FROM adj)"""
+
+
+def sql_bfs_chain(seed_pred: str, max_hops: int, name: str = "bfs") -> str:
+    """The frontier loop of sql_bfs_hops as chained CTEs
+    {name}0..{name}{max_hops}(host, hop) over the adjacency CTEs; a
+    distinct name lets two sweeps share one WITH."""
+    steps = [f"""
+        {name}0 AS (SELECT n AS host, 0 AS hop FROM nodes WHERE {seed_pred})"""]
+    for h in range(1, max_hops + 1):
+        steps.append(f"""
+        {name}{h} AS MATERIALIZED (SELECT host, min(hop) AS hop FROM (
+                    SELECT host, hop FROM {name}{h - 1}
+                    UNION ALL
+                    SELECT adj.nb AS host, {h} AS hop
+                    FROM {name}{h - 1} f JOIN adj ON adj.n = f.host
+                    WHERE f.hop = {h - 1})
+                 GROUP BY 1)""")
+    return ",".join(steps)
+
+
+def sql_bfs_hops(edges_cte: str, seed_pred: str, max_hops: int = 3,
+                 src: str = "src", dst: str = "dst") -> str:
+    """DuckDB twin of bfs_hops: the frontier loop unrolled as chained
+    CTEs bfs0..bfs{max_hops}; seed_pred is a boolean SQL predicate over the
+    node name column `n` of the adjacency CTE."""
+    return f"""
+        WITH {edges_cte},
+        {sql_bfs_adjacency(src, dst)},
+        {sql_bfs_chain(seed_pred, max_hops)}
         SELECT host, CAST(hop AS INT) AS hop FROM bfs{max_hops}"""
 
 

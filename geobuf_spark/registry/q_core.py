@@ -27,13 +27,13 @@ SF_SMALL = "/root/testdata/sf0.001"
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship pipeline on sf0.001: mint points from documents → encode to
-    geobuf (vectorized Arrow kernel) → decode back (exact integer path) →
+    geobuf (JVM gb_point_enc) → decode back (exact integer path) →
     cell-indexed PIP join against minted rectangles → tile assignment at
     z=8 → per-tile feature counts. Exercises codec + join + tiling in one
     plan."""
     pts = minted.minted_points(spark, SF_SMALL)
     enc = spark_codec.encode_points(pts)
-    dec = spark_codec.decode_points(enc, quantized=True)
+    dec = spark_codec.decode_points(enc)
     pts2 = dec.select(
         F.col("id").alias("doc_id"),
         (F.col("lon_q") / 1e7).alias("lon"),

@@ -687,17 +687,23 @@ def q_diameter_sweep(spark, sf):
         "diameter_lb int")
 
 def _diameter_sweep_sql() -> str:
+    # one WITH: the edges are defined once and both sweeps run against
+    # them (DuckDB rejects a MATERIALIZED CTE name defined twice in one
+    # query, which two spliced _host_edges_cte() copies would do)
     from geobuf_spark.operators import graph
-    b1 = graph.sql_bfs_hops(_host_edges_cte(), "n = (SELECT min(n) "
-                            "FROM nodes)", max_hops=DIAM_CAP)
+    sweep1 = graph.sql_bfs_chain("n = (SELECT min(n) FROM nodes)",
+                                 DIAM_CAP, name="a")
     # second sweep: seed = argmax hop of sweep 1 (ties → min host)
-    b2 = graph.sql_bfs_hops(
-        _host_edges_cte(),
+    sweep2 = graph.sql_bfs_chain(
         "n = (SELECT host FROM s1 ORDER BY hop DESC, host LIMIT 1)",
-        max_hops=DIAM_CAP)
+        DIAM_CAP, name="b")
     return f"""
-        WITH s1 AS ({b1}),
-        s2 AS ({b2}),
+        WITH {_host_edges_cte()},
+        {graph.sql_bfs_adjacency()},
+        {sweep1},
+        s1 AS (SELECT host, CAST(hop AS INT) AS hop FROM a{DIAM_CAP}),
+        {sweep2},
+        s2 AS (SELECT host, CAST(hop AS INT) AS hop FROM b{DIAM_CAP}),
         f1 AS (SELECT host, hop FROM s1
                ORDER BY hop DESC, host LIMIT 1),
         f2 AS (SELECT host, hop FROM s2

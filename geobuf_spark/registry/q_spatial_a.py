@@ -425,7 +425,7 @@ def q_knn_adaptive_k5(spark, sf):
 def q_geobuf_roundtrip(spark, sf):
     # real encode → decode through the binary column; exact integer lattice
     enc = spark_codec.encode_points(_points(spark, sf))
-    return spark_codec.decode_points(enc, quantized=True) \
+    return spark_codec.decode_points(enc) \
         .select(F.col("id").alias("doc_id"), "lon_q", "lat_q")
 
 def q_polygon_roundtrip(spark, sf):
@@ -990,7 +990,7 @@ def _sql_vlen(v: str) -> str:
 
 def _feature_meta_sql() -> str:
     """Oracle for q_feature_meta: geobuf point-frame byte length by pure
-    varint arithmetic (layout per encode_points_kernel / write_feature.go:
+    varint arithmetic (layout per GbCodec.PointEnc / write_feature.go:
     tag8+id, tag24+code, tag34+len+geometry, tag42+len+bbox) vs the
     canonical integer JSON length."""
     lon7 = f"({minted._sql_mulmod('doc_id', minted.LON_MULT, minted.LON_MOD)} - {minted.LON_MOD // 2})"

@@ -143,3 +143,15 @@ def test_driver_window_invariants():
     # rotation stays mechanical: the QUEUE head (next round's window if
     # nothing changes) is the still-never-rowed cohort, haar_energy first
     assert QUEUE[0] == "haar_energy"
+
+
+def test_every_oracle_binds(con):
+    """DuckDB EXPLAIN binds every oracle_sql() entry (a few seconds), so a
+    bind error fails here before the value comparisons run."""
+    bad = {}
+    for name, sql in ORACLES.items():
+        try:
+            con.execute("EXPLAIN " + sql)
+        except duckdb.Error as e:
+            bad[name] = str(e)[:300]
+    assert not bad, bad

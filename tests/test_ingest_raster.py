@@ -143,7 +143,7 @@ def test_indexed_geobuf_subfile_seek(spark, sf_small, tmp_path):
     got = set()
     for key in meta["files"]:
         sub = GF.read_geobuf_subfile(spark, path, key)
-        dec = spark_codec.decode_points(sub, quantized=True)
+        dec = spark_codec.decode_points(sub)
         for r in dec.collect():
             got.add((key, r.id))
     assert got == want
@@ -244,6 +244,6 @@ def test_write_geobuf_indexed_survives_stale_attempt_garbage(spark, tmp_path):
     for key in meta["files"]:
         sub = GF.read_geobuf_subfile(spark, path, key)
         got |= {(key, r.id) for r in
-                spark_codec.decode_points(sub, quantized=True).collect()}
+                spark_codec.decode_points(sub).collect()}
     want = {(f"t{i % 3}", i) for i in range(60)}
     assert got == want

@@ -1,7 +1,9 @@
 """JVM codec (codec/jvm/GbCodec.java) — exact parity vs the Arrow kernels
-it twins and vs the reference-semantics decoder in core.py. The jar is
-committed and the geobuf read path depends on it, so a jar that cannot be
-registered fails this suite instead of skipping it.
+it twins and vs the reference-semantics codec in core.py. The point codec
+has no Arrow twin: spark_codec's point functions run gb_point_enc/gb_point
+and are pinned byte for byte against core.encode_feature/decode_feature.
+The jar is committed and the geobuf read path depends on it, so a jar that
+cannot be registered fails this suite instead of skipping it.
 """
 import numpy as np
 import pyarrow as pa
@@ -23,6 +25,22 @@ def _frames_df(spark, frames):
         pa.table({"geobuf": frames}).to_pandas())
 
 
+def _core_point_frames(ids, lon, lat) -> list[bytes]:
+    """Point frames from core.encode_feature, the byte-parity oracle."""
+    return [core.encode_feature(core.Feature.from_geojson(
+                "Point", [float(x), float(y)], id=int(i)))
+            for i, x, y in zip(ids, lon, lat)]
+
+
+def _core_point_decode(frames) -> list[tuple[int, int, int]]:
+    """(id, lon_q, lat_q) per frame from core.decode_feature(quantized)."""
+    out = []
+    for f in frames:
+        feat = core.decode_feature(f, quantized=True)
+        out.append((feat.id, int(feat.coords[0]), int(feat.coords[1])))
+    return out
+
+
 def test_register_idempotent(jvm):
     assert jvm_codec.register(jvm) is True
     assert jvm_codec.register(jvm) is True
@@ -34,10 +52,10 @@ def test_point_agg_parity(jvm):
     ids = rng.integers(0, 2**40, n).astype(np.int64)
     lon = rng.uniform(-180, 180, n)
     lat = rng.uniform(-90, 90, n)
-    df = _frames_df(jvm, spark_codec.encode_points_kernel(ids, lon, lat))
-    a = spark_codec.decode_points_agg(df).collect()[0]
-    j = jvm_codec.decode_points_agg_jvm(df).collect()[0]
-    assert a == j
+    frames = _core_point_frames(ids, lon, lat)
+    got = spark_codec.decode_points_agg(_frames_df(jvm, frames)).collect()[0]
+    want = _core_point_decode(frames)
+    assert tuple(got) == (n, *(sum(col) for col in zip(*want)))
 
 
 def test_point_decode_parity(jvm):
@@ -46,12 +64,74 @@ def test_point_decode_parity(jvm):
     ids = np.arange(n, dtype=np.int64)
     lon = rng.uniform(-180, 180, n)
     lat = rng.uniform(-90, 90, n)
-    df = _frames_df(jvm, spark_codec.encode_points_kernel(ids, lon, lat))
-    a = {r["id"]: (r["lon_q"], r["lat_q"])
-         for r in spark_codec.decode_points_any(df).collect()}
-    b = {r["id"]: (r["lon_q"], r["lat_q"])
-         for r in jvm_codec.decode_points_jvm(df).collect()}
-    assert a == b
+    frames = _core_point_frames(ids, lon, lat)
+    got = sorted(tuple(r) for r in
+                 spark_codec.decode_points(_frames_df(jvm, frames)).collect())
+    assert got == sorted(_core_point_decode(frames))
+
+
+# Point frames written byte by byte from the wire table (PAPER.md §1.2):
+# 0x08 varint id | 0x18 type code 1 (Point, dim 2) | 0x22 length, then
+# zigzag varints of x, y = int64(c * 1e7) truncated toward zero | 0x2A
+# length, then the degenerate bbox [W, S, E, N] = [x, y, x, y].
+GOLDEN_POINTS = [
+    # id 1 at (1, 2): zigzag(1e7) = 2e7 = 80 da c4 09,
+    # zigzag(2e7) = 4e7 = 80 b4 89 13
+    ((1, 1.0, 2.0, 10_000_000, 20_000_000), bytes.fromhex(
+        "08 01 18 01 22 08 80dac409 80b48913"
+        " 2a 10 80dac409 80b48913 80dac409 80b48913")),
+    # two-byte id 300 = ac 02; negative coords: zigzag(-5e6) = 9999999 =
+    # ff ac e2 04, zigzag(-2.5e6) = 4999999 = bf 96 b1 02
+    ((300, -0.5, -0.25, -5_000_000, -2_500_000), bytes.fromhex(
+        "08 ac02 18 01 22 08 fface204 bf96b102"
+        " 2a 10 fface204 bf96b102 fface204 bf96b102")),
+    # truncation toward zero on both signs: ±12345678.9 → ±12345678,
+    # zigzag 24691356 = 9c 85 e3 0b and 24691355 = 9b 85 e3 0b
+    ((7, 1.23456789, -1.23456789, 12_345_678, -12_345_678), bytes.fromhex(
+        "08 07 18 01 22 08 9c85e30b 9b85e30b"
+        " 2a 10 9c85e30b 9b85e30b 9c85e30b 9b85e30b")),
+    # id 0 at the origin: the id field is still written
+    ((0, 0.0, 0.0, 0, 0), bytes.fromhex("08 00 18 01 22 02 00 00 2a 04 00000000")),
+]
+
+
+def test_golden_point_frames(jvm):
+    """core.encode_feature and gb_point_enc both write the spec-derived
+    frames; gb_point decodes them to the truncated lattice values."""
+    for (i, x, y, _, _), frame in GOLDEN_POINTS:
+        assert core.encode_feature(core.Feature.from_geojson(
+            "Point", [x, y], id=i)) == frame
+    df = jvm.createDataFrame([src[:3] for src, _ in GOLDEN_POINTS],
+                             "doc_id long, lon double, lat double")
+    enc = {r.doc_id: bytes(r.geobuf)
+           for r in spark_codec.encode_points(df).collect()}
+    assert enc == {src[0]: frame for src, frame in GOLDEN_POINTS}
+    frames = _frames_df(jvm, [frame for _, frame in GOLDEN_POINTS])
+    dec = {tuple(r) for r in spark_codec.decode_points(frames).collect()}
+    assert dec == {(i, qx, qy) for (i, _, _, qx, qy), _ in GOLDEN_POINTS}
+
+
+@pytest.mark.parametrize("bad, shown", [(float("nan"), "NaN"),
+                                        (float("inf"), "Infinity"),
+                                        (float("-inf"), "-Infinity")])
+def test_encoders_reject_non_finite(jvm, bad, shown):
+    """NaN and ±Inf have no 1e-7 lattice point: every JVM encoder throws,
+    naming the value, instead of writing 0 or Long.MAX/MIN_VALUE."""
+    from pyspark.sql import functions as F
+
+    cases = [
+        ("id long, lon double, lat double", (1, 10.0, bad),
+         "gb_point_enc(id, lon, lat)"),
+        ("id long, coords array<double>", (1, [0.0, 1.0, bad, 2.0]),
+         "gb_line_enc(id, coords)"),
+        ("id long, coords array<double>, ring_nv array<int>",
+         (1, [0.0, 0.0, 1.0, 0.0, bad, 1.0], [3]),
+         "gb_poly_enc(id, coords, ring_nv)"),
+    ]
+    for schema, row, expr in cases:
+        df = jvm.createDataFrame([row], schema)
+        with pytest.raises(Exception, match=f"non-finite coordinate {shown} "):
+            df.select(F.expr(expr)).collect()
 
 
 @pytest.mark.parametrize("dim", [2, 3, 5])
@@ -84,21 +164,16 @@ def test_line_agg_parity(jvm):
 
 
 def test_corrupt_frame_raises(jvm):
-    # truncated payload (mid-varint) must fail the task on the JVM path
-    # exactly as the Arrow path does
-    ids = np.array([1], dtype=np.int64)
-    frames = spark_codec.encode_points_kernel(
-        ids, np.array([10.0]), np.array([20.0]))
-    buf = bytes(frames[0].as_py())[:-1]  # drop the final varint byte
+    # a truncated frame (bbox payload overrunning the frame end) fails
+    # the task
+    buf = _core_point_frames([1], [10.0], [20.0])[0][:-1]
     df = _frames_df(jvm, pa.array([buf], type=pa.binary()))
-    with pytest.raises(Exception):
-        jvm_codec.decode_points_agg_jvm(df).collect()
-    with pytest.raises(Exception):
+    with pytest.raises(Exception, match="truncated or corrupt"):
         spark_codec.decode_points_agg(df).collect()
 
 
 def test_point_encode_byte_parity(jvm):
-    """gb_point_enc frames are byte-identical to the Arrow kernel's,
+    """encode_points frames are byte-identical to core.encode_feature's,
     including negative coords, the 1e-7 lattice, and large ids."""
     rng = np.random.default_rng(21)
     n = 4000
@@ -108,9 +183,9 @@ def test_point_encode_byte_parity(jvm):
     lat = rng.uniform(-90, 90, n)
     df = jvm.createDataFrame(
         pa.table({"doc_id": ids, "lon": lon, "lat": lat}).to_pandas())
-    a = spark_codec.encode_points(df).orderBy("doc_id").collect()
-    b = jvm_codec.encode_points_jvm(df).orderBy("doc_id").collect()
-    assert [bytes(r.geobuf) for r in a] == [bytes(r.geobuf) for r in b]
+    got = sorted((r.doc_id, bytes(r.geobuf))
+                 for r in spark_codec.encode_points(df).collect())
+    assert got == sorted(zip(ids.tolist(), _core_point_frames(ids, lon, lat)))
 
 
 def _poly_fixture(rng, n):
@@ -213,9 +288,7 @@ def test_frames_split_parity(jvm, tmp_path):
     from pyspark.sql import functions as F
 
     ids = np.arange(50, dtype=np.int64)
-    enc = spark_codec.encode_points_kernel(
-        ids, ids * 0.001, ids * -0.002)
-    frames = [bytes(enc[i].as_py()) for i in range(len(ids))]
+    frames = _core_point_frames(ids, ids * 0.001, ids * -0.002)
     stream = core.write_frames(frames)
 
     # splitter parity on one stream
@@ -245,25 +318,25 @@ def test_frames_split_parity(jvm, tmp_path):
 
 
 def test_roundtrip_points_jvm_parity(jvm):
-    """gb_point(gb_point_enc(...)) codegen round-trip returns the same
-    quantized lattice values as the Arrow-kernel round-trip."""
-    from geobuf_spark.codec import jvm_codec as jc
+    """roundtrip_points (gb_point(gb_point_enc(...)) in codegen) returns
+    the quantized lattice values of core's encode→decode."""
     from geobuf_spark.sources import pages
 
     p = (pages.with_minted_geometry(pages.pages(jvm, 500))
          .select("page_id", "lon", "lat"))
-    a = sorted(tuple(r) for r in
-               spark_codec.roundtrip_points(p, id_col="page_id").collect())
-    b = sorted(tuple(r) for r in
-               jc.roundtrip_points_jvm(p, id_col="page_id").collect())
-    assert a == b
+    got = sorted(tuple(r) for r in
+                 spark_codec.roundtrip_points(p, id_col="page_id").collect())
+    src = p.collect()
+    want = _core_point_decode(_core_point_frames(
+        [r.page_id for r in src], [r.lon for r in src], [r.lat for r in src]))
+    assert got == sorted(want)
 
 
 def test_point_enc_tie_lattice_parity(jvm):
-    """Cross-engine encode parity under adversarial inputs: uniform
-    floats mixed with exact half-ulp tie candidates on the 1e-7 lattice
-    (the rounding boundary where two implementations of go_round7 would
-    first diverge). 6k frames, byte-for-byte."""
+    """gb_point_enc vs core.encode_feature under adversarial inputs:
+    uniform floats mixed with exact half-ulp tie candidates on the 1e-7
+    lattice (the rounding boundary where two implementations of
+    go_round7 would first diverge). 6k frames, byte-for-byte."""
     import pandas as pd
     from pyspark.sql import functions as F
 
@@ -280,8 +353,7 @@ def test_point_enc_tie_lattice_parity(jvm):
         (rng.integers(-900_000_000, 900_000_000, n // 4) + 0.5) / 1e7,
         rng.integers(-900_000_000, 900_000_000, n - n // 2 - n // 4) / 1e7,
     ])
-    py = [bytes(f.as_py()) for f in spark_codec.encode_points_kernel(
-        ids.astype(np.int64), lon, lat)]
+    py = _core_point_frames(ids, lon, lat)
     df = jvm.createDataFrame(pd.DataFrame(
         {"id": ids.astype("int64"), "lon": lon, "lat": lat}))
     jv = [bytes(r[0]) for r in

@@ -282,8 +282,8 @@ def test_decode_geometries_mixed_batch(spark):
     # points
     ids = np.arange(fid, fid + 50)
     lon = rng.uniform(-170, 170, 50); lat = rng.uniform(-80, 80, 50)
-    pts = sc.encode_points_kernel(ids, lon, lat)
-    add([pts[i].as_py() for i in range(50)],
+    add([core.encode_feature(core.Feature.from_geojson(
+            "Point", [lon[i], lat[i]], id=int(ids[i]))) for i in range(50)],
         [(1, core.quantize_vec(np.array([lon[i], lat[i]])).tolist()) for i in range(50)])
     # lines + multipoints
     for gt in (2, 4):

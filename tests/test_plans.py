@@ -204,3 +204,31 @@ def test_decoded_features_single_python_stage(spark, geobuf_dir):
     plan = _final_plan(df.agg(F.count("*"), F.sum(F.size("coords"))))
     assert plan.count("MapInArrow") == 1, plan
     assert plan.count("gb_frames(") == 1, plan
+
+
+def test_flagship_codec_evaluated_once(spark, sf_small):
+    """Flagship shape (pages → roundtrip_points → broadcast pip_join →
+    assign_tiles_points → tile_histogram): the point codec runs in the
+    JVM, each UDF once per row. No inferred isnotnull filter or collapsed
+    projection repeats gb_point/gb_point_enc, or the md5 minting under
+    them: the plan holds no more md5 calls than minting the pages alone."""
+    from geobuf_spark.codec import spark_codec
+    from geobuf_spark.operators import tiling
+    from geobuf_spark.sources import pages
+
+    p = (pages.with_minted_geometry(pages.pages(spark, 2000))
+         .select("page_id", "lon", "lat"))
+    pts = spark_codec.roundtrip_points(p, id_col="page_id").select(
+        F.col("page_id").alias("doc_id"),
+        (F.col("lon_q") / 1e7).alias("lon"),
+        (F.col("lat_q") / 1e7).alias("lat"))
+    joined = sj.pip_join(pts, minted.minted_rects(spark, sf_small), z=6,
+                         strategy="broadcast")
+    plan = _final_plan(
+        tiling.tile_histogram(tiling.assign_tiles_points(joined, z=8)))
+    for marker in _PYTHON_NODES:
+        assert marker not in plan, (marker, plan)
+    assert plan.count("gb_point(") == 1, plan
+    assert plan.count("gb_point_enc(") == 1, plan
+    assert plan.count("md5(") == _final_plan(p).count("md5("), plan
+    assert "BroadcastHashJoin" in plan, plan

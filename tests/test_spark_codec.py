@@ -13,7 +13,7 @@ from geobuf_spark.sources import minted
 def test_points_roundtrip_df(spark, sf_small):
     pts = minted.minted_points(spark, sf_small)
     enc = sc.encode_points(pts)
-    dec = sc.decode_points(enc, quantized=True)
+    dec = sc.decode_points(enc)
     got = {(r.id, r.lon_q, r.lat_q) for r in dec.collect()}
     want = {
         (r.doc_id, core.convert_pt(r.lon), core.convert_pt(r.lat))
@@ -61,12 +61,13 @@ def test_generic_roundtrip_df(spark):
         assert json.loads(r.props_json) == json.loads(props)
 
 
-def test_kernel_empty_batch():
-    arr = sc.encode_points_kernel(
-        np.empty(0, np.int64), np.empty(0, np.float64), np.empty(0, np.float64)
-    )
-    ids, qx, qy = sc.decode_points_kernel(pa.array([], type=pa.binary()))
-    assert len(arr) == 0 and len(ids) == 0 and len(qx) == 0 and len(qy) == 0
+def test_kernel_empty_batch(spark):
+    """Empty input through the point codec: no rows, no failure."""
+    empty = spark.createDataFrame([], "doc_id long, lon double, lat double")
+    enc = sc.encode_points(empty)
+    assert enc.count() == 0 and sc.decode_points(enc).count() == 0
+    assert sc.roundtrip_points(empty).count() == 0
+    assert tuple(sc.decode_points_agg(enc).collect()[0]) == (0, None, None, None)
 
 
 # ---------------------------------------------------------------------------
@@ -232,8 +233,9 @@ def test_frame_bbox_missing_field(spark, reference_file):
 
 
 def test_decode_points_any_with_props(spark, sf_small):
-    """props-bearing point frames decode vectorized: coords equal the
-    source lattice, ids preserved — no 14-token layout assumption."""
+    """props-bearing point frames decode in the JVM (gb_point skips the
+    property fields): coords equal the source lattice and core's decode
+    of the same frames, ids preserved."""
     import numpy as np
 
     from geobuf_spark.sources import minted
@@ -242,18 +244,25 @@ def test_decode_points_any_with_props(spark, sf_small):
     pts = minted.minted_points(spark, sf_small).join(
         docs.select("doc_id", "lang", "n_chars"), "doc_id")
     enc = sc.encode_points_with_props(pts, props=["lang", "n_chars"])
-    frames = pa.array([bytes(r.geobuf) for r in enc.collect()], type=pa.binary())
-    ids, qx, qy = sc.decode_points_any_kernel(frames)
+    frames = [bytes(r.geobuf) for r in enc.collect()]
+    got = {(r.id, r.lon_q, r.lat_q) for r in sc.decode_points(enc).collect()}
     src = {r.doc_id: (r.lon, r.lat) for r in pts.collect()}
-    for i in range(len(ids)):
-        lo, la = src[int(ids[i])]
-        assert qx[i] == core.quantize_vec(np.array([lo]))[0]
-        assert qy[i] == core.quantize_vec(np.array([la]))[0]
-    # also works on prop-less frames (same results as the fixed-layout path)
-    enc2 = sc.encode_points_kernel(np.arange(10), np.linspace(-5, 5, 10), np.linspace(2, 3, 10))
-    a1 = sc.decode_points_any_kernel(enc2)
-    a2 = sc.decode_points_kernel(enc2)
-    assert np.array_equal(a1[1], a2[1]) and np.array_equal(a1[2], a2[2])
+    assert got == {(i, *core.quantize_vec(np.array(src[i])).tolist())
+                   for i in src}
+    want = set()
+    for f in frames:
+        feat = core.decode_feature(f, quantized=True)
+        assert feat.properties  # the frames really carry properties
+        want.add((feat.id, int(feat.coords[0]), int(feat.coords[1])))
+    assert got == want
+    # prop-less frames decode the same as core's decode of them
+    plain = [core.encode_feature(core.Feature.from_geojson(
+        "Point", [float(x), float(y)], id=i))
+        for i, x, y in zip(range(10), np.linspace(-5, 5, 10), np.linspace(2, 3, 10))]
+    df = spark.createDataFrame([(f,) for f in plain], "geobuf binary")
+    got = {(r.id, r.lon_q, r.lat_q) for r in sc.decode_points(df).collect()}
+    assert got == {(i, core.convert_pt(x), core.convert_pt(y)) for i, x, y in
+                   zip(range(10), np.linspace(-5, 5, 10), np.linspace(2, 3, 10))}
 
 
 def test_review_regressions():
@@ -374,7 +383,7 @@ def test_fused_decode_agg_matches_materializing_path(spark):
     p = minted.minted_points(spark, "/root/testdata/sf0.001") \
         .select(F.col("doc_id"), "lon", "lat")
     enc = sc.encode_points(p)
-    fused = sc.decode_points_agg(enc, parts=4).collect()[0]
+    fused = sc.decode_points_agg(enc).collect()[0]
     d = sc.decode_points(enc)
     full = d.agg(F.count("*"), F.sum("id"), F.sum("lon_q"), F.sum("lat_q")).collect()[0]
     assert list(fused) == list(full)
@@ -393,9 +402,9 @@ def test_fused_decode_agg_matches_materializing_path(spark):
     assert list(fusedl) == list(fulll)
 
 
-def test_truncated_frames_raise_not_corrupt():
-    """A frame whose geometry length overruns its boundary must raise —
-    the gather would otherwise read the NEXT frame's bytes (review r2)."""
+def test_truncated_frames_raise_not_corrupt(spark):
+    """A frame whose geometry length overruns its boundary must raise
+    instead of reading the NEXT frame's bytes (review r2)."""
     import numpy as np
 
     f = core.encode_feature(core.Feature(
@@ -406,9 +415,11 @@ def test_truncated_frames_raise_not_corrupt():
     # (cutting only the trailing bbox leaves geometry decodable, which is
     # correct lazy-read behavior, not corruption)
     for cut in (12, 8, 5):
-        arr = pa.array([f, f[:cut]], type=pa.binary())
-        with pytest.raises(ValueError, match="truncated or corrupt"):
-            sc.decode_points_any_kernel(arr)
-    # intact frames still decode
-    ids, qx, qy = sc.decode_points_any_kernel(pa.array([f, f], type=pa.binary()))
-    assert ids.tolist() == [5, 5] and qx.tolist() == [10**9] * 2
+        df = spark.createDataFrame([(f,), (f[:cut],)], "geobuf binary")
+        with pytest.raises(Exception, match="truncated or corrupt"):
+            sc.decode_points(df).collect()
+    # intact frames still decode, to core's values
+    df = spark.createDataFrame([(f,), (f,)], "geobuf binary")
+    feat = core.decode_feature(f, quantized=True)
+    assert [tuple(r) for r in sc.decode_points(df).collect()] == \
+        [(feat.id, *feat.coords.tolist())] * 2 == [(5, 10**9, 5 * 10**8)] * 2

@@ -10,7 +10,8 @@ decode tiers are directly comparable per feature:
   json       — Spark codegen'd from_json + aggregate (the baseline)
   jvm        — gb_* Java UDF decode + aggregate (the production path)
   py_kernel  — the numpy batch kernel alone on a driver-side Arrow
-               array (what the python path costs with zero dispatch)
+               array (what the python path costs with zero dispatch);
+               lines and polygons only, points have no Arrow tier
 
 Interpretation (recorded in BENCH/BASELINE.md): where py_kernel beats
 json, the end-to-end python read deficit is the per-task dispatch floor
@@ -77,11 +78,7 @@ def main():
         F.from_json("j", "page_id bigint, lon double, lat double").alias("s"))
         .agg(F.count("*"), F.sum("s.page_id"), F.sum("s.lon"), F.sum("s.lat"))
         .collect())}
-    if have_jvm:
-        sec["jvm"] = best_of(
-            lambda: jvm_codec.decode_points_agg_jvm(enc).collect())
-    fr = frames_of(enc)
-    sec["py_kernel"] = best_of(lambda: spark_codec.decode_points_any_kernel(fr))
+    sec["jvm"] = best_of(lambda: spark_codec.decode_points_agg(enc).collect())
     out["points"] = {k: round(v, 4) for k, v in sec.items()}
     p.unpersist(); enc.unpersist(); js.unpersist()
 
@@ -129,10 +126,11 @@ def main():
     for sect in ("points", "lines", "polys"):
         s = out[sect]
         nn = s.get("n_rows", n)
-        s["kernel_vs_json_speedup"] = round(s["json"] / s["py_kernel"], 2)
         if "jvm" in s:
             s["jvm_vs_json_speedup"] = round(s["json"] / s["jvm"], 2)
-        s["py_kernel_ns_per_feature"] = round(s["py_kernel"] / nn * 1e9, 1)
+        if "py_kernel" in s:
+            s["kernel_vs_json_speedup"] = round(s["json"] / s["py_kernel"], 2)
+            s["py_kernel_ns_per_feature"] = round(s["py_kernel"] / nn * 1e9, 1)
     print(json.dumps(out))
     spark.stop()
 

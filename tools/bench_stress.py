@@ -8,7 +8,7 @@ shuffle path (AQE backstop on).
 
 Legs (each min-of-`trials` in ONE session, per-trial loadavg recorded):
   broadcast  — the stock flagship (pages → mint → geobuf encode→decode
-               fused Arrow pass → PIP join vs sf rects → tile assign →
+               in the JVM → PIP join vs sf rects → tile assign →
                histogram), identical to bench.py's `_flagship`.
   shuffle    — same probe side, rects replicated `rect_mult`× with
                distinct poly_ids so the exploded z=7 cover exceeds the
