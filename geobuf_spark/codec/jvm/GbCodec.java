@@ -1,15 +1,19 @@
 package geobufspark;
 
+import org.apache.spark.sql.Row;
+import org.apache.spark.sql.RowFactory;
 import org.apache.spark.sql.api.java.UDF1;
 import org.apache.spark.sql.api.java.UDF2;
 import org.apache.spark.sql.api.java.UDF3;
 import scala.collection.Seq;
 
 /**
- * JVM-side geobuf frame codec. For points it is the only Spark engine
- * (spark_codec.encode_points/decode_points/roundtrip_points run these
- * UDFs, codec/core.py is the byte-parity oracle); for lines and polygons
- * it is the per-row twin of the Python Arrow kernels in
+ * JVM-side geobuf frame codec. For points and for the full decode of a
+ * frame to a GEOM_SCHEMA row (gb_decode: every geometry type, properties
+ * as JSON) it is the only Spark engine: spark_codec.encode_points/
+ * decode_points/roundtrip_points/decode_features_fast run these UDFs and
+ * codec/core.py is the parity oracle. For line and polygon encode and
+ * decode it is the per-row twin of the Python Arrow kernels in
  * codec/spark_codec.py (_tokenize_geometry + line/ring cores).
  *
  * Why this exists: the Arrow kernels are vectorized but pay a ~0.25 s/task
@@ -29,6 +33,9 @@ import scala.collection.Seq;
  * fails the task identically on either path: >63 fields, geometry payload
  * overrunning the frame, payload ending mid-varint, missing geometry/code,
  * non-point payload in Point, token count not divisible by dim in lines.
+ * gb_decode also rejects what core.decode_feature rejects: an invalid or
+ * overrunning ring count, an unknown geometry type, and properties that
+ * core.decode_properties cannot parse.
  */
 public final class GbCodec {
     private GbCodec() {}
@@ -109,6 +116,16 @@ public final class GbCodec {
         if (f.code < 0 || gs < 0)
             throw new IllegalArgumentException(
                 "frame missing geometry-type or geometry field");
+        f.tokens = payloadTokens(b, gs, gl);
+        return f;
+    }
+
+    /**
+     * Varint values of the geometry payload b[gs..gs+gl): a payload ending
+     * mid-varint throws; bits past the 64th are dropped, as numpy's shifts
+     * drop them.
+     */
+    static long[] payloadTokens(byte[] b, int gs, int gl) {
         if (gl > 0 && (b[gs + gl - 1] & 0xFF) >= 0x80)
             throw new IllegalArgumentException(
                 "geometry payload ends mid-varint - truncated or corrupt input");
@@ -116,17 +133,15 @@ public final class GbCodec {
         int n = 0;
         for (int i = gs; i < gs + gl; i++) if ((b[i] & 0xFF) < 0x80) n++;
         long[] toks = new long[n];
-        int ti = 0;
+        int ti = 0, shift = 0;
         long v = 0;
-        int shift = 0;
         for (int i = gs; i < gs + gl; i++) {
             int c = b[i] & 0xFF;
-            v |= (long) (c & 0x7F) << shift;
+            if (shift < 64) v |= (long) (c & 0x7F) << shift;
             shift += 7;
             if (c < 0x80) { toks[ti++] = v; v = 0; shift = 0; }
         }
-        f.tokens = toks;
-        return f;
+        return toks;
     }
 
     static long unzigzag(long u) {
@@ -472,6 +487,321 @@ public final class GbCodec {
             }
             return out;
         }
+    }
+
+    /**
+     * go_round7(q / 1e7) - core.go_round7 (geom.go:78-90 round): Modf's
+     * frac carries the sign, so negative values always floor.
+     */
+    static double round7(long q) {
+        double digit = (q / 1e7) * 1e7;
+        double frac = digit - (digit < 0 ? Math.ceil(digit) : Math.floor(digit));
+        return (frac >= 0.5 ? Math.ceil(digit) : Math.floor(digit)) / 1e7;
+    }
+
+    /**
+     * gb_decode(geobuf) -> Row(id, geom_type, dim, coords, ring_lens,
+     * part_rings, props_json), the GEOM_SCHEMA row of one frame in one
+     * Walker pass: id 0 when absent (last id wins), first geometry code and
+     * first geometry payload win. A frame without a code or a payload is a
+     * bare frame: geom_type 0, dim 2, empty arrays. Coordinates are
+     * round7 of the exact lattice value, not the reference's per-vertex
+     * float accumulation. props_json is json.dumps(core.decode_properties
+     * (frame), sort_keys=True), parsed only for frames whose walk shows a
+     * 0x12 field, a multi-byte tag or a wire type other than 0 or 2; every
+     * other frame has no properties and gets "{}".
+     */
+    public static final class Decode implements UDF1<byte[], Row> {
+        private static final double[] NO_COORDS = new double[0];
+        private static final int[] NONE = new int[0];
+        private static final int[] ONE = {1};
+
+        @Override
+        public Row call(byte[] b) {
+            if (b == null) return null;
+            long id = 0, code = -1;
+            int gs = -1, gl = 0;
+            boolean props = false;
+            Walker w = new Walker(b, 0, b.length);
+            while (w.next()) {
+                int wire = w.tag & 0x7;
+                if (w.tag == 0x12 || w.tag >= 0x80 || (wire != 0 && wire != 2)) props = true;
+                if (w.tag == 0x08) id = w.value;
+                // a code >= 2^63 reads as absent, like a negative int64 code
+                else if (w.tag == 0x18 && code < 0) code = w.value;
+                else if (w.tag == 0x22 && gs < 0) { gs = w.start; gl = (int) w.value; }
+            }
+            String pj = props ? Props.json(b) : "{}";
+            if (code < 0 || gs < 0)
+                return RowFactory.create(id, 0, 2, NO_COORDS, NONE, NONE, pj);
+            long[] t = payloadTokens(b, gs, gl);
+            int n = t.length;
+            long gt = code <= 6 ? code : code >> 4;
+            int dim = code <= 6 ? 2 : (int) (code & 0xF);
+            if (gt == 1) {
+                if (n != 2)
+                    throw new IllegalArgumentException(
+                        "point frame with != 2 geometry values");
+                double[] c = {round7(unzigzag(t[0])), round7(unzigzag(t[1]))};
+                return RowFactory.create(id, 1, 2, c, ONE, ONE, pj);
+            }
+            if (gt < 2 || gt > 6)
+                throw new IllegalArgumentException("unknown geom type " + gt);
+            if (dim == 0)
+                throw new IllegalArgumentException("geometry code " + code + " has dim 0");
+            double[] coords = new double[n];
+            if (gt == 2 || gt == 4) {
+                if (n % dim != 0)
+                    throw new IllegalArgumentException(
+                        "line geometry token count not divisible by dim");
+                ring(t, 0, n, dim, coords, 0);
+                return RowFactory.create(id, (int) gt, dim, coords,
+                                         new int[]{n / dim}, ONE, pj);
+            }
+            // ring-structured: per ring a count then its deltas; MultiPolygon
+            // prefixes each polygon with its ring count
+            int[] rings = new int[n], parts = new int[gt == 6 ? n : 0];
+            int nr = 0, np = 0, nc = 0, p = 0;
+            while (p < n) {
+                long left = 1;
+                if (gt == 6) {
+                    left = t[p++];
+                    // every ring takes at least its count token
+                    if (Long.compareUnsigned(left, n - p) > 0)
+                        throw new IllegalArgumentException(
+                            "polygon ring count overrunning the payload"
+                            + " - truncated or corrupt input");
+                    parts[np++] = (int) left;
+                }
+                for (; left > 0; left--) {
+                    long cnt = p < n ? t[p++] : -1;
+                    if (Long.compareUnsigned(cnt, n - p) > 0 || cnt % dim != 0)
+                        throw new IllegalArgumentException(
+                            "ring token count invalid or overrunning the payload"
+                            + " - truncated or corrupt input");
+                    ring(t, p, (int) cnt, dim, coords, nc);
+                    rings[nr++] = (int) cnt / dim;
+                    p += cnt;
+                    nc += cnt;
+                }
+            }
+            return RowFactory.create(id, (int) gt, dim,
+                    java.util.Arrays.copyOf(coords, nc),
+                    java.util.Arrays.copyOf(rings, nr),
+                    gt == 6 ? java.util.Arrays.copyOf(parts, np) : new int[]{nr}, pj);
+        }
+
+        /** cnt delta tokens from t[p] -> round7 coords at out[o], the delta
+         *  state (one running sum per dimension) starting at zero. */
+        private static void ring(long[] t, int p, int cnt, int dim, double[] out, int o) {
+            for (int d = 0; d < dim; d++) {
+                long acc = 0;
+                for (int i = d; i < cnt; i += dim) {
+                    acc += unzigzag(t[p + i]);
+                    out[o + i] = round7(acc);
+                }
+            }
+        }
+    }
+
+    /**
+     * Properties of one frame as Python's json.dumps(core.decode_properties
+     * (frame), sort_keys=True): a port of core.decode_properties (tags read
+     * as full varints, wire 0 skipped as a varint, wire 2 jumped by its
+     * length, a 0x12 entry parsed as key then value message; any other
+     * wire type, a read past the frame end, invalid UTF-8 or an unknown
+     * value field throws) feeding a port of the json encoder's defaults:
+     * keys sorted by code point, a repeated key keeps its last value,
+     * ensure_ascii escapes, ", " and ": " separators, floats in Python's
+     * shortest round-trip repr.
+     */
+    static final class Props {
+        private final byte[] b;
+        /** may run past the frame end, as a Python index does; the next
+         *  read there throws */
+        private long pos;
+
+        private Props(byte[] b) {
+            this.b = b;
+        }
+
+        /** Python str ordering: by code point, not by UTF-16 unit. */
+        private static final java.util.Comparator<String> CODE_POINT_ORDER = (x, y) -> {
+            int i = 0, j = 0;
+            while (i < x.length() && j < y.length()) {
+                int cx = x.codePointAt(i), cy = y.codePointAt(j);
+                if (cx != cy) return Integer.compare(cx, cy);
+                i += Character.charCount(cx);
+                j += Character.charCount(cy);
+            }
+            return Integer.compare(x.length() - i, y.length() - j);
+        };
+
+        static String json(byte[] b) {
+            java.util.TreeMap<String, String> props = new java.util.TreeMap<>(CODE_POINT_ORDER);
+            Props r = new Props(b);
+            while (r.pos < b.length) {
+                long tag = r.varint();
+                if ((tag & 7) == 0) {
+                    r.varint();
+                } else if ((tag & 7) == 2) {
+                    long size = r.varint(), end = r.pos;
+                    if (tag == 0x12) {
+                        r.pos++;                                // 0x0A key tag
+                        String key = r.utf8(r.varint());
+                        r.pos++;                                // 0x12 value tag
+                        r.varint();                             // value message length
+                        props.put(key, r.value());
+                    }
+                    r.pos = Long.compareUnsigned(size, b.length - end) > 0
+                            ? b.length : end + size;
+                } else {
+                    throw new IllegalArgumentException(
+                        "unexpected wire type " + (tag & 7) + " in feature frame");
+                }
+            }
+            if (props.isEmpty()) return "{}";
+            StringBuilder sb = new StringBuilder("{");
+            for (java.util.Map.Entry<String, String> e : props.entrySet()) {
+                if (sb.length() > 1) sb.append(", ");
+                quote(sb, e.getKey());
+                sb.append(": ").append(e.getValue());
+            }
+            return sb.append('}').toString();
+        }
+
+        private int at(long p) {
+            if (p >= b.length)
+                throw new IllegalArgumentException(
+                    "property read past the frame end - truncated or corrupt input");
+            return b[(int) p] & 0xFF;
+        }
+
+        /** core.decode_varint: no length cap, bits past the 64th dropped. */
+        private long varint() {
+            long v = 0;
+            for (int shift = 0; ; shift += 7) {
+                int c = at(pos++);
+                if (shift < 64) v |= (long) (c & 0x7F) << shift;
+                if (c < 0x80) return v;
+            }
+        }
+
+        /** n (unsigned) bytes at pos as strict UTF-8, the slice clamped at
+         *  the frame end as a Python slice is; pos moves n bytes on. */
+        private String utf8(long n) {
+            boolean over = Long.compareUnsigned(n, b.length - pos) > 0;
+            int s = (int) pos, e = over ? b.length : (int) (pos + n);
+            pos = over ? b.length + 1L : e;
+            try {
+                return java.nio.charset.StandardCharsets.UTF_8.newDecoder()
+                    .onMalformedInput(java.nio.charset.CodingErrorAction.REPORT)
+                    .onUnmappableCharacter(java.nio.charset.CodingErrorAction.REPORT)
+                    .decode(java.nio.ByteBuffer.wrap(b, s, e - s)).toString();
+            } catch (java.nio.charset.CharacterCodingException x) {
+                throw new IllegalArgumentException("property string is not valid UTF-8", x);
+            }
+        }
+
+        /** width little-endian bytes at pos (struct.unpack needs them all) */
+        private long fixed(int width) {
+            if (pos + width > b.length)
+                throw new IllegalArgumentException(
+                    "property value past the frame end - truncated or corrupt input");
+            long v = 0;
+            for (int i = width - 1; i >= 0; i--) v = (v << 8) | (b[(int) pos + i] & 0xFF);
+            return v;
+        }
+
+        /** core._read_value: one value message field as JSON text. */
+        private String value() {
+            int field = at(pos++) >> 3;
+            switch (field) {
+                case 1: {
+                    StringBuilder sb = new StringBuilder();
+                    quote(sb, utf8(varint()));
+                    return sb.toString();
+                }
+                case 2: return repr(Float.intBitsToFloat((int) fixed(4)));
+                case 3: return repr(Double.longBitsToDouble(fixed(8)));
+                case 4: return Long.toString(varint());
+                case 5: return Long.toUnsignedString(varint());
+                case 6: return Long.toString(unzigzag(varint()));
+                case 7: return varint() != 0 ? "true" : "false";
+                default:
+                    throw new IllegalArgumentException("unknown property value field " + field);
+            }
+        }
+    }
+
+    /** json's string encoding with ensure_ascii: lowercase \\uXXXX escapes,
+     *  astral characters as their surrogate pair. */
+    static void quote(StringBuilder sb, String s) {
+        sb.append('"');
+        for (int i = 0; i < s.length(); i++) {
+            char c = s.charAt(i);
+            switch (c) {
+                case '"': sb.append("\\\""); break;
+                case '\\': sb.append("\\\\"); break;
+                case '\n': sb.append("\\n"); break;
+                case '\r': sb.append("\\r"); break;
+                case '\t': sb.append("\\t"); break;
+                case '\b': sb.append("\\b"); break;
+                case '\f': sb.append("\\f"); break;
+                default:
+                    if (c >= 0x20 && c < 0x7F) sb.append(c);
+                    else sb.append(String.format("\\u%04x", (int) c));
+            }
+        }
+        sb.append('"');
+    }
+
+    /**
+     * Python's float repr as json writes it: NaN/Infinity/-Infinity, else
+     * the shortest decimal that reads back to d (the closer of the two at
+     * that length, ties to even), in exponent form when the decimal point
+     * sits more than 16 digits right or 4 or more places left of the
+     * first digit. Java 17's Double.toString is not shortest.
+     */
+    static String repr(double d) {
+        if (Double.isNaN(d)) return "NaN";
+        if (Double.isInfinite(d)) return d > 0 ? "Infinity" : "-Infinity";
+        String sign = (Double.doubleToRawLongBits(d) < 0) ? "-" : "";
+        double a = Math.abs(d);
+        if (a == 0) return sign + "0.0";
+        java.math.BigDecimal x = new java.math.BigDecimal(a), best = null;
+        for (int p = 1; best == null; p++) {
+            java.math.BigDecimal lo = x.round(new java.math.MathContext(p, java.math.RoundingMode.DOWN));
+            java.math.BigDecimal hi = x.round(new java.math.MathContext(p, java.math.RoundingMode.UP));
+            boolean okLo = lo.doubleValue() == a, okHi = hi.doubleValue() == a;
+            if (okLo && okHi)
+                best = x.round(new java.math.MathContext(p, java.math.RoundingMode.HALF_EVEN));
+            else if (okLo || okHi)
+                best = okLo ? lo : hi;
+        }
+        best = best.stripTrailingZeros();
+        String digits = best.unscaledValue().toString();
+        int nd = digits.length(), decpt = nd - best.scale();
+        StringBuilder sb = new StringBuilder(sign);
+        if (decpt <= -4 || decpt > 16) {
+            sb.append(digits.charAt(0));
+            if (nd > 1) sb.append('.').append(digits, 1, nd);
+            int e = decpt - 1;
+            sb.append(e < 0 ? "e-" : "e+");
+            if (Math.abs(e) < 10) sb.append('0');
+            sb.append(Math.abs(e));
+        } else if (decpt <= 0) {
+            sb.append("0.");
+            for (int i = decpt; i < 0; i++) sb.append('0');
+            sb.append(digits);
+        } else if (decpt >= nd) {
+            sb.append(digits);
+            for (int i = nd; i < decpt; i++) sb.append('0');
+            sb.append(".0");
+        } else {
+            sb.append(digits, 0, decpt).append('.').append(digits, decpt, nd);
+        }
+        return sb.toString();
     }
 
     /**

@@ -9,11 +9,13 @@ dispatch and both Arrow serdes disappear.
 The point codec is JVM-only: spark_codec.encode_points, decode_points,
 decode_points_agg and roundtrip_points are plans over gb_point_enc and
 gb_point, pinned byte for byte against codec/core.py. The geobuf read path
-depends on the jar too: sources.geobuf_file.read_geobuf splits frames with
-gb_frames and spark_codec.frame_bbox reads bboxes with gb_bbox, and all of
-them raise (naming the jar) when it cannot be registered. The full decode
-to GEOM_SCHEMA rows stays on the Arrow kernels in spark_codec.py; the line
-and polygon shapes below are the JVM twins of those kernels.
+is JVM-only too: sources.geobuf_file.read_geobuf splits frames with
+gb_frames, spark_codec.frame_bbox reads bboxes with gb_bbox, and
+spark_codec.decode_features_fast decodes frames of any geometry type to
+GEOM_SCHEMA rows with gb_decode (properties included). All of them raise
+(naming the jar) when it cannot be registered. The line and polygon
+shapes below are the JVM twins of the Arrow line and ring kernels that
+spark_codec.py keeps.
 """
 
 from __future__ import annotations
@@ -39,6 +41,8 @@ _ENC_UDFS = {
 }
 # file-stream splitter (array<binary> return type, registered separately)
 _FRAMES_UDF = ("gb_frames", "geobufspark.GbCodec$Frames")
+# full decode to one spark_codec.GEOM_SCHEMA struct per frame
+_DECODE_UDF = ("gb_decode", "geobufspark.GbCodec$Decode")
 
 
 def _register(spark: SparkSession) -> None:
@@ -49,7 +53,7 @@ def _register(spark: SparkSession) -> None:
     # app, and an id(spark) key can alias a GC'd session's address.
     # probe the NEWEST udf name: a session that registered an older jar
     # then re-registers the full set instead of reporting done
-    if spark.catalog.functionExists("gb_bbox"):
+    if spark.catalog.functionExists("gb_decode"):
         return
     try:
         from tools.build_jvm import build
@@ -67,6 +71,9 @@ def _register(spark: SparkSession) -> None:
         spark.udf.registerJavaFunction(name, cls, T.BinaryType())
     spark.udf.registerJavaFunction(
         _FRAMES_UDF[0], _FRAMES_UDF[1], T.ArrayType(T.BinaryType()))
+    from geobuf_spark.codec.spark_codec import GEOM_SCHEMA
+
+    spark.udf.registerJavaFunction(_DECODE_UDF[0], _DECODE_UDF[1], GEOM_SCHEMA)
 
 
 def register(spark: SparkSession) -> bool:

@@ -1,17 +1,20 @@
 """Vectorized geobuf codec over Spark DataFrames — Arrow batches in, numpy
 kernels inside, zero per-row Python on the hot path.
 
-Points are the exception: encode_points, decode_points, decode_points_agg
-and roundtrip_points are JVM plans over the gb_point_enc/gb_point UDFs of
-codec/jvm (one evaluation per row, no Python worker in the stage), with
-codec/core.py as their byte-parity oracle. The line, ring and
-multipolygon batch kernels below keep the Arrow shape: varint byte
-matrices + cumsum offsets + one scatter into a single buffer on encode,
-one varint sweep over the concatenated geometry payloads on decode.
+Points and the full decode are the exception. encode_points,
+decode_points, decode_points_agg and roundtrip_points are JVM plans over
+the gb_point_enc/gb_point UDFs of codec/jvm, and decode_features_fast is a
+JVM plan over gb_decode (any geometry type, properties included): one
+evaluation per row, no Python worker in the stage, codec/core.py as the
+parity oracle. The line and ring batch kernels below keep the Arrow
+shape: varint byte matrices + cumsum offsets + one scatter into a single
+buffer on encode, one varint sweep over the concatenated geometry
+payloads on decode.
 
-Generic geometries/properties go through the per-feature core codec inside
-mapInPandas — the import/export edge (ConvertGeojson/ConvertGeobuf analog,
-convert_geojson.go:153-193), not the hot path.
+encode_features_generic and decode_features_generic run the per-feature
+core codec inside mapInPandas — the import/export edge (ConvertGeojson/
+ConvertGeobuf analog, convert_geojson.go:153-193) and the reference's
+float-accumulation decode, not the hot path.
 """
 
 from __future__ import annotations
@@ -61,8 +64,7 @@ class _FrameWriter:
         self.pos = self.pos + seg_bytes
 
 
-def _tokenize_geometry(frames: pa.Array, allow_missing: bool = False,
-                       props_rows: bool = False):
+def _tokenize_geometry(frames: pa.Array):
     """Payload-level decode prologue: field-walk every frame for the id
     (tag 0x08), geom code (tag 0x18) and geometry payload (tag 0x22),
     gather the payload byte ranges contiguously, and varint-tokenize ONLY
@@ -71,20 +73,12 @@ def _tokenize_geometry(frames: pa.Array, allow_missing: bool = False,
     (read_feature.go:9-100), batched.
 
     Returns (n, ids, codes, tokens, first, counts) where tokens are the
-    geometry deltas/headers only and first/counts index them per frame.
-    With allow_missing=True, geometry-less frames get code -1 and an
-    empty token range instead of raising. With props_rows=True a seventh
-    item is returned: a bool mask of the frames core.decode_properties
-    must still parse — those with a 0x12 field, a multi-byte tag, or a
-    wire type other than 0 or 2 (the walk reads those as single-byte
-    varint fields; decode_properties parses or rejects them). Every other
-    frame, fully walked here, has no properties."""
+    geometry deltas/headers only and first/counts index them per frame."""
     combined = pa.concat_arrays([frames.cast(pa.binary())])
     n = len(combined)
     if n == 0:
         e = np.empty(0, dtype=np.int64)
-        out = (0, e, e, np.empty(0, np.uint64), e, e)
-        return out + (np.empty(0, bool),) if props_rows else out
+        return 0, e, e, np.empty(0, np.uint64), e, e
     flat = np.frombuffer(combined.buffers()[2], dtype=np.uint8)
     offs = np.frombuffer(combined.buffers()[1], dtype=np.int32)
     starts = offs[combined.offset : combined.offset + n].astype(np.int64)
@@ -94,12 +88,7 @@ def _tokenize_geometry(frames: pa.Array, allow_missing: bool = False,
     codes = np.full(n, -1, dtype=np.int64)
     g_start = np.full(n, -1, dtype=np.int64)
     g_len = np.zeros(n, dtype=np.int64)
-    has_props = np.zeros(n, dtype=bool)
     for active, tag, pstart, plen, v, _ in frame_fields_walk(flat, starts, ends):
-        if props_rows:
-            wire = tag & 0x7
-            has_props[active[(tag == 0x12) | (tag >= 0x80)
-                             | ((wire != 0) & (wire != 2))]] = True
         is_id = tag == 0x08
         if is_id.any():
             ids[active[is_id]] = v[is_id].astype(np.int64)
@@ -122,16 +111,8 @@ def _tokenize_geometry(frames: pa.Array, allow_missing: bool = False,
         raise ValueError(
             f"{int(overrun.sum())} frame(s) with geometry payload running "
             "past the frame end — truncated or corrupt input")
-    missing = (codes < 0) | (g_start < 0)
-    if missing.any():
-        if not allow_missing:
-            raise ValueError("frame missing geometry-type or geometry field")
-        # geometry-less frames (bare-properties features, e.g. the
-        # reference's metadata dummy): sentinel code -1, empty payload —
-        # the caller routes them to an empty-geometry output row
-        codes[missing] = -1
-        g_start[missing] = 0
-        g_len[missing] = 0
+    if ((codes < 0) | (g_start < 0)).any():
+        raise ValueError("frame missing geometry-type or geometry field")
 
     byte_off = np.zeros(n + 1, dtype=np.int64)
     np.cumsum(g_len, out=byte_off[1:])
@@ -155,20 +136,7 @@ def _tokenize_geometry(frames: pa.Array, allow_missing: bool = False,
     counts = np.diff(np.searchsorted(tok_starts_b, byte_off))
     first = np.zeros(n, dtype=np.int64)
     np.cumsum(counts[:-1], out=first[1:])
-    out = (n, ids, codes, tokens, first, counts)
-    return out + (has_props,) if props_rows else out
-
-
-def _gather_token_group(tokens: np.ndarray, first: np.ndarray,
-                        counts: np.ndarray, sel: np.ndarray):
-    """Slice the per-frame token ranges of the selected frames into one
-    contiguous (tokens, first, counts) triple — the group dispatch step."""
-    cnt = counts[sel]
-    off = np.zeros(len(sel) + 1, dtype=np.int64)
-    np.cumsum(cnt, out=off[1:])
-    src = (np.repeat(first[sel], cnt)
-           + np.arange(int(off[-1]), dtype=np.int64) - off[:-1].repeat(cnt))
-    return tokens[src], off[:-1], cnt
+    return n, ids, codes, tokens, first, counts
 
 
 def _varint_matrix(v: np.ndarray):
@@ -405,7 +373,7 @@ def decode_lines_kernel(frames: pa.Array):
         return e, e, e
     code0 = int(codes[0])
     if not np.all(codes == code0):
-        raise ValueError("mixed-dim LineString batch; use decode_geometries")
+        raise ValueError("mixed-dim LineString batch; use decode_features_fast")
     return _lines_core(ids, code0, tokens, counts)
 
 
@@ -632,7 +600,7 @@ def decode_rings_kernel(frames: pa.Array):
         return e, e, e, e, 0, 2
     code0 = int(codes[0])
     if not np.all(codes == code0):
-        raise ValueError("mixed geom-code batch; use decode_geometries")
+        raise ValueError("mixed geom-code batch; use decode_features_fast")
     return _rings_core(ids, code0, tokens, first, counts)
 
 
@@ -741,422 +709,24 @@ def decode_polygons(df: DataFrame, bin_col: str = "geobuf", id_col: str = "poly_
     return df.select(bin_col).mapInArrow(_dec, schema)
 
 
-# ---------------------------------------------------------------------------
-# MultiPolygon batch kernels — two-level nesting (geom.go:276-302): per
-# polygon a varint ring-count, then per ring varint(len·dim) + deltas.
-# ---------------------------------------------------------------------------
-
-def encode_multipolygons_kernel(ids: np.ndarray, coords: np.ndarray,
-                                ring_nv: np.ndarray, rings_per_poly: np.ndarray,
-                                polys_per_feat: np.ndarray, dim: int = 2) -> pa.Array:
-    """Encode N MultiPolygon features → Arrow binary frames.
-
-    ring_nv: vertices per ring (all rings, poly-major); rings_per_poly:
-    rings per polygon (all polygons, feature-major); polys_per_feat:
-    polygons per feature."""
-    n = len(ids)
-    if n == 0:
-        return pa.array([], type=pa.binary())
-    geom_code = 6 if dim == 2 else (6 << 4) | dim
-    if ((np.asarray(ring_nv) <= 0).any() or (np.asarray(rings_per_poly) <= 0).any()
-            or (np.asarray(polys_per_feat) <= 0).any()):
-        raise ValueError("empty ring/polygon/feature; filter before encoding")
-
-    q = core.quantize_vec(coords).reshape(-1, dim)
-    R = len(ring_nv)
-    P = len(rings_per_poly)
-    v_starts = np.zeros(R, dtype=np.int64)
-    np.cumsum(ring_nv[:-1], out=v_starts[1:])
-    d = np.empty_like(q)
-    d[0] = q[0]
-    d[1:] = q[1:] - q[:-1]
-    d[v_starts] = q[v_starts]
-    zz = core.zigzag_vec(d.reshape(-1))
-
-    # token stream: per poly [nrings, per ring [cnt, deltas…]]
-    ring_tok_counts = 1 + ring_nv * dim                      # per ring
-    poly_ring_start = np.zeros(P, dtype=np.int64)
-    np.cumsum(rings_per_poly[:-1], out=poly_ring_start[1:])
-    poly_tok_counts = 1 + np.add.reduceat(ring_tok_counts, poly_ring_start)
-    poly_tok_offs = np.zeros(P, dtype=np.int64)
-    np.cumsum(poly_tok_counts[:-1], out=poly_tok_offs[1:])
-    total_toks = int(poly_tok_counts.sum())
-    tokens = np.empty(total_toks, dtype=np.uint64)
-    filled = np.zeros(total_toks, dtype=bool)
-    tokens[poly_tok_offs] = rings_per_poly.astype(np.uint64)
-    filled[poly_tok_offs] = True
-    # ring count tokens: offset of each ring inside the stream
-    ring_tok_offs = np.zeros(R, dtype=np.int64)
-    np.cumsum(ring_tok_counts[:-1], out=ring_tok_offs[1:])
-    # rings shift right by the number of poly-header tokens before them:
-    # ring g belongs to poly p(g) → +p(g)+1 headers
-    p_of_ring = np.repeat(np.arange(P), rings_per_poly)
-    ring_pos = ring_tok_offs + p_of_ring + 1
-    tokens[ring_pos] = (ring_nv * dim).astype(np.uint64)
-    filled[ring_pos] = True
-    tokens[~filled] = zz
-
-    feat_poly_start = np.zeros(n, dtype=np.int64)
-    np.cumsum(polys_per_feat[:-1], out=feat_poly_start[1:])
-    feat_tok_start = poly_tok_offs[feat_poly_start]
-    feat_tok_counts = np.add.reduceat(poly_tok_counts, feat_poly_start)
-    feat_ring_start = poly_ring_start[feat_poly_start]
-    feat_v_start = v_starts[feat_ring_start]
-    minx = np.minimum.reduceat(q[:, 0], feat_v_start)
-    maxx = np.maximum.reduceat(q[:, 0], feat_v_start)
-    miny = np.minimum.reduceat(q[:, 1], feat_v_start)
-    maxy = np.maximum.reduceat(q[:, 1], feat_v_start)
-    bbox_zz = core.zigzag_vec(np.stack([minx, miny, maxx, maxy], axis=1).reshape(-1))
-
-    mid, lid = _varint_matrix(ids.astype(np.uint64))
-    mg, lg = _varint_matrix(tokens)
-    mb, lb = _varint_matrix(bbox_zz)
-    glen = np.add.reduceat(lg, feat_tok_start)
-    blen = lb.reshape(n, 4).sum(axis=1)
-    mgl, lgl = _varint_matrix(glen.astype(np.uint64))
-    mbl, lbl = _varint_matrix(blen.astype(np.uint64))
-
-    total = 1 + lid + 2 + 1 + lgl + glen + 1 + lbl + blen
-    offsets = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(total, out=offsets[1:])
-    buf = np.empty(offsets[-1], dtype=np.uint8)
-    w = _FrameWriter(buf, offsets[:-1])
-    put_const, put_mat = w.const, w.mat
-    put_segmented = w.segmented
-
-    put_const(8)
-    put_mat(mid, lid)
-    put_const(24)
-    put_const(geom_code)
-    put_const(34)
-    put_mat(mgl, lgl)
-    put_segmented(mg, lg, feat_tok_start, feat_tok_counts, glen)
-    put_const(42)
-    put_mat(mbl, lbl)
-    put_segmented(mb, lb, np.arange(n) * 4, np.full(n, 4), blen)
-    assert np.array_equal(w.pos, offsets[1:])
-
-    return pa.BinaryArray.from_buffers(
-        pa.binary(), n,
-        [None, pa.py_buffer(offsets.astype(np.int32).tobytes()), pa.py_buffer(buf.tobytes())],
-    )
-
-
-def decode_multipolygons_kernel(frames: pa.Array):
-    """Decode N MultiPolygon frames → (ids, flat quantized coords, ring_nv,
-    rings_per_poly, polys_per_feat, dim).
-
-    Two-level jump walk: each round, every active feature consumes either a
-    polygon header token or one whole ring — vectorized per round."""
-    n, ids, codes, tokens, first, counts = _tokenize_geometry(frames)
-    if n == 0:
-        e = np.empty(0, dtype=np.int64)
-        return e, e, e, e, e, 2
-    code0 = int(codes[0])
-    if not np.all(codes == code0):
-        raise ValueError("mixed geom-code batch; use decode_geometries")
-    return _multipolygons_core(ids, code0, tokens, first, counts)
-
-
-def _multipolygons_core(ids: np.ndarray, code0: int, tokens: np.ndarray,
-                        first: np.ndarray, counts: np.ndarray):
-    n = len(ids)
-    if not (code0 == 6 or (code0 > 6 and code0 >> 4 == 6)):
-        raise ValueError("not a MultiPolygon batch")
-    dim = 2 if code0 <= 6 else code0 & 0xF
-
-    g_end = first + counts
-    pos = first.copy()
-    rings_left = np.zeros(n, dtype=np.int64)
-    polys_per_feat = np.zeros(n, dtype=np.int64)
-    # event logs (round-ordered); reordered feature-major afterwards
-    poly_feat, poly_nr, poly_seq = [], [], []
-    ring_feat, ring_start_tok, ring_nv_l, ring_seq = [], [], [], []
-    seq = np.zeros(n, dtype=np.int64)  # per-feature event counter
-    active = np.flatnonzero(pos < g_end)
-    while len(active):
-        hdr = active[rings_left[active] == 0]
-        rng = active[rings_left[active] > 0]
-        if len(hdr):
-            nr = tokens[pos[hdr]].astype(np.int64)
-            poly_feat.append(hdr.copy()); poly_nr.append(nr); poly_seq.append(seq[hdr].copy())
-            polys_per_feat[hdr] += 1
-            rings_left[hdr] = nr
-            pos[hdr] += 1
-            seq[hdr] += 1
-        if len(rng):
-            cnt = tokens[pos[rng]].astype(np.int64)
-            ring_feat.append(rng.copy()); ring_start_tok.append(pos[rng] + 1)
-            ring_nv_l.append(cnt // dim); ring_seq.append(seq[rng].copy())
-            rings_left[rng] -= 1
-            pos[rng] += 1 + cnt
-            seq[rng] += 1
-        active = active[pos[active] < g_end[active]]
-
-    # feature-major, stream-ordered reconstruction
-    pf = np.concatenate(poly_feat); pn = np.concatenate(poly_nr); ps = np.concatenate(poly_seq)
-    po = np.lexsort((ps, pf))
-    rings_per_poly = pn[po]
-    if ring_feat:
-        rf = np.concatenate(ring_feat); rs = np.concatenate(ring_start_tok)
-        rnv = np.concatenate(ring_nv_l); rq = np.concatenate(ring_seq)
-        ro = np.lexsort((rq, rf))
-        rf, rs, rnv = rf[ro], rs[ro], rnv[ro]
-    else:
-        rnv = np.empty(0, dtype=np.int64); rs = rnv
-
-    tok_counts = rnv * dim
-    R = len(rnv)
-    starts = np.zeros(R, dtype=np.int64)
-    np.cumsum(tok_counts[:-1], out=starts[1:])
-    big = np.repeat(np.arange(R), tok_counts)
-    t = np.arange(int(tok_counts.sum()), dtype=np.int64) - starts[big]
-    d = core.unzigzag_vec(tokens[rs[big] + t]).reshape(-1, dim)
-    v_starts = np.zeros(R, dtype=np.int64)
-    np.cumsum(rnv[:-1], out=v_starts[1:])
-    c = np.cumsum(d, axis=0)
-    base = np.zeros((R, dim), dtype=np.int64)
-    base[1:] = c[v_starts[1:] - 1]
-    coords_q = c - np.repeat(base, rnv, axis=0)
-    return ids, coords_q.reshape(-1), rnv, rings_per_poly, polys_per_feat, dim
-
-
-# ---------------------------------------------------------------------------
-# mixed-batch dispatch: group frames by geom code, run each group through
-# its specialized kernel — heterogeneous batches stay vectorized instead of
-# dropping to the per-feature generic path.
-# ---------------------------------------------------------------------------
-
-QUANT_GEOM_SCHEMA = T.StructType([
-    T.StructField("id", T.LongType()),
-    T.StructField("geom_type", T.IntegerType()),
-    T.StructField("dim", T.IntegerType()),
-    T.StructField("coords_q", T.ArrayType(T.LongType())),
-    T.StructField("ring_lens", T.ArrayType(T.IntegerType())),
-    T.StructField("part_rings", T.ArrayType(T.IntegerType())),
-])
-
-
-def _frame_geom_codes(frames: pa.Array) -> np.ndarray:
-    """Geom code of every frame without full decode — a field walk, so
-    frames with properties or without an id field parse correctly (the
-    old fixed-offset scan misread the first property byte as the code)."""
-    combined = pa.concat_arrays([frames.cast(pa.binary())])
-    flat = np.frombuffer(combined.buffers()[2], dtype=np.uint8)
-    offs = np.frombuffer(combined.buffers()[1], dtype=np.int32)
-    n = len(combined)
-    starts = offs[combined.offset : combined.offset + n].astype(np.int64)
-    ends = offs[combined.offset + 1 : combined.offset + n + 1].astype(np.int64)
-    codes = np.full(n, -1, dtype=np.int64)
-    for active, tag, pstart, plen, v, _ in frame_fields_walk(flat, starts, ends):
-        is_code = tag == 0x18
-        if is_code.any():
-            sel = active[is_code]
-            first = codes[sel] < 0
-            codes[sel[first]] = v[is_code][first].astype(np.int64)
-    if (codes < 0).any():
-        raise ValueError("frame without a geometry-type field")
-    return codes
-
-
-def _decode_code_group(code0: int, gids: np.ndarray, toks: np.ndarray,
-                       first: np.ndarray, cnt: np.ndarray) -> dict:
-    """Decode one homogeneous-geom-code group of payload-token frames →
-    flat columnar pieces plus per-feature segment lengths:
-    ids, gt, dim, coords_q (flat int64), feat_v (vertices/feature),
-    ring_nv + rings_pf (ring lengths & rings/feature), pvals + parts_pf
-    (part_rings values & parts/feature)."""
-    gt = code0 if code0 <= 6 else code0 >> 4
-    m = len(gids)
-    ones = np.ones(m, dtype=np.int64)
-    if gt == 1:
-        if (cnt != 2).any():
-            raise ValueError("point frame with != 2 geometry values")
-        coords = core.unzigzag_vec(toks)
-        return dict(ids=gids, gt=1, dim=2,  # writepointbs drops dims > 2
-                    coords_q=coords, feat_v=ones, ring_nv=ones,
-                    rings_pf=ones, pvals=ones, parts_pf=ones)
-    if gt in (2, 4):
-        ids, coords, nv = _lines_core(gids, code0, toks, cnt)
-        dim = 2 if code0 <= 6 else code0 & 0xF
-        return dict(ids=ids, gt=gt, dim=dim, coords_q=coords, feat_v=nv,
-                    ring_nv=nv, rings_pf=ones, pvals=ones, parts_pf=ones)
-    if gt in (3, 5):
-        ids, coords, ring_nv, rpf, _, dim = _rings_core(
-            gids, code0, toks, first, cnt)
-        ring_off = np.zeros(m, dtype=np.int64)
-        np.cumsum(rpf[:-1], out=ring_off[1:])
-        feat_v = (np.add.reduceat(ring_nv, ring_off) if len(ring_nv)
-                  else np.zeros(m, np.int64))
-        return dict(ids=ids, gt=gt, dim=dim, coords_q=coords, feat_v=feat_v,
-                    ring_nv=ring_nv, rings_pf=rpf, pvals=rpf, parts_pf=ones)
-    if gt == 6:
-        ids, coords, ring_nv, rpp, ppf, dim = _multipolygons_core(
-            gids, code0, toks, first, cnt)
-        poly_off = np.zeros(m, dtype=np.int64)
-        np.cumsum(ppf[:-1], out=poly_off[1:])
-        rings_pf = (np.add.reduceat(rpp, poly_off) if len(rpp)
-                    else np.zeros(m, np.int64))
-        ring_off = np.zeros(m, dtype=np.int64)
-        np.cumsum(rings_pf[:-1], out=ring_off[1:])
-        feat_v = (np.add.reduceat(ring_nv, ring_off) if len(ring_nv)
-                  else np.zeros(m, np.int64))
-        return dict(ids=ids, gt=6, dim=dim, coords_q=coords, feat_v=feat_v,
-                    ring_nv=ring_nv, rings_pf=rings_pf, pvals=rpp,
-                    parts_pf=ppf)
-    raise ValueError(f"unknown geom type {gt}")
-
-
-def decode_geometries(df: DataFrame, bin_col: str = "geobuf") -> DataFrame:
-    """Decode MIXED geobuf geometry frames → quantized columnar rows.
-
-    ONE field walk + payload tokenize per Arrow batch, then group by the
-    FULL geom code — mixed dims and frames carrying properties / bbox /
-    any field order all stay on vectorized kernels (points / line-shaped /
-    ring-shaped / nested MultiPolygon). Output order within a batch is
-    regrouped by code — set semantics, like every distributed decode."""
-
-    def _dec(batches):
-        for batch in batches:
-            frames = batch.column(batch.schema.get_field_index(bin_col))
-            frames = pa.concat_arrays([frames.cast(pa.binary())])
-            if len(frames) == 0:
-                continue
-            _, all_ids, codes, all_tok, all_first, all_cnt = \
-                _tokenize_geometry(frames)
-            for code in np.unique(codes):
-                sel = np.flatnonzero(codes == code)
-                toks, first, cnt = _gather_token_group(
-                    all_tok, all_first, all_cnt, sel)
-                g = _decode_code_group(int(code), all_ids[sel], toks, first, cnt)
-                m = len(g["ids"])
-                coord_off = np.zeros(m + 1, dtype=np.int32)
-                np.cumsum(g["feat_v"] * g["dim"], out=coord_off[1:])
-                carr = pa.ListArray.from_arrays(
-                    pa.array(coord_off, type=pa.int32()),
-                    pa.array(g["coords_q"], type=pa.int64()))
-                ring_off = np.zeros(m + 1, dtype=np.int32)
-                np.cumsum(g["rings_pf"], out=ring_off[1:])
-                rarr = pa.ListArray.from_arrays(
-                    pa.array(ring_off, type=pa.int32()),
-                    pa.array(g["ring_nv"].astype(np.int32), type=pa.int32()))
-                part_off = np.zeros(m + 1, dtype=np.int32)
-                np.cumsum(g["parts_pf"], out=part_off[1:])
-                parr = pa.ListArray.from_arrays(
-                    pa.array(part_off, type=pa.int32()),
-                    pa.array(g["pvals"].astype(np.int32), type=pa.int32()))
-                yield pa.RecordBatch.from_arrays([
-                    pa.array(g["ids"], type=pa.int64()),
-                    pa.array(np.full(m, g["gt"], dtype=np.int32)),
-                    pa.array(np.full(m, g["dim"], dtype=np.int32)),
-                    carr, rarr, parr,
-                ], names=[f.name for f in QUANT_GEOM_SCHEMA.fields])
-
-    return df.select(bin_col).mapInArrow(_dec, QUANT_GEOM_SCHEMA)
-
-
 def decode_features_fast(df: DataFrame, bin_col: str = "geobuf") -> DataFrame:
-    """Geobuf frames → GEOM_SCHEMA rows with VECTORIZED geometry decode.
+    """Geobuf frames → GEOM_SCHEMA rows in the JVM (gb_decode), with no
+    Python worker in the plan.
 
-    The per-feature generic decoder costs a Python loop over every vertex
-    list; here geometry goes through the payload-token batch kernels
-    (reader.go:84-112 streaming scan, batched). Only frames that the same
-    field walk flags as carrying properties parse them per frame
-    (core.decode_properties, geometry/bbox bytes jumped via their length
-    prefixes); every other frame gets "{}".
+    One field walk per frame (reader.go:84-112 scan semantics) decodes
+    every geometry type and dim from its payload tokens. Properties are
+    parsed only for frames whose walk shows them, as json.dumps(
+    core.decode_properties(frame), sort_keys=True); every other frame gets
+    "{}". The struct is computed in one select and read through a one-row
+    inline Generate, so it is evaluated once per row, not once per field.
 
     Float coords come from the exact integer lattice (go_round7(q/1e7))
     rather than the reference's per-vertex float accumulation — identical
     on every lattice value, without the reference's ≤2e-7 accumulation
-    drift (geom.go:78-90 discussion in SURVEY §1.3)."""
-    import json
-
-    def _dec(batches):
-        for batch in batches:
-            frames = batch.column(batch.schema.get_field_index(bin_col))
-            frames = pa.concat_arrays([frames.cast(pa.binary())])
-            nrows = len(frames)
-            if nrows == 0:
-                continue
-            _, all_ids, codes, all_tok, all_first, all_cnt, has_props = \
-                _tokenize_geometry(frames, allow_missing=True, props_rows=True)
-            # group results, scattered back to original row order
-            gt_r = np.zeros(nrows, np.int32)
-            dim_r = np.full(nrows, 2, dtype=np.int32)  # bare frames: dim 2
-            c_len = np.zeros(nrows, np.int64)
-            c_start = np.zeros(nrows, np.int64)
-            r_len = np.zeros(nrows, np.int64)
-            r_start = np.zeros(nrows, np.int64)
-            p_len = np.zeros(nrows, np.int64)
-            p_start = np.zeros(nrows, np.int64)
-            big_c, big_r, big_p = [], [], []
-            cbase = rbase = pbase = 0
-            for code in np.unique(codes):
-                if code < 0:
-                    # bare-properties frames: geom_type 0, empty geometry
-                    # (decode_feature parity for all-optional fields)
-                    continue
-                sel = np.flatnonzero(codes == code)
-                toks, first, cnt = _gather_token_group(
-                    all_tok, all_first, all_cnt, sel)
-                g = _decode_code_group(int(code), all_ids[sel], toks, first, cnt)
-                gt_r[sel] = g["gt"]
-                dim_r[sel] = g["dim"]
-                cl = g["feat_v"] * g["dim"]
-                off = np.zeros(len(sel), np.int64)
-                np.cumsum(cl[:-1], out=off[1:])
-                c_len[sel], c_start[sel] = cl, cbase + off
-                off = np.zeros(len(sel), np.int64)
-                np.cumsum(g["rings_pf"][:-1], out=off[1:])
-                r_len[sel], r_start[sel] = g["rings_pf"], rbase + off
-                off = np.zeros(len(sel), np.int64)
-                np.cumsum(g["parts_pf"][:-1], out=off[1:])
-                p_len[sel], p_start[sel] = g["parts_pf"], pbase + off
-                big_c.append(g["coords_q"])
-                big_r.append(g["ring_nv"])
-                big_p.append(g["pvals"])
-                cbase += len(g["coords_q"])
-                rbase += len(g["ring_nv"])
-                pbase += len(g["pvals"])
-            bc = np.concatenate(big_c) if big_c else np.empty(0, np.int64)
-            br = np.concatenate(big_r) if big_r else np.empty(0, np.int64)
-            bp = np.concatenate(big_p) if big_p else np.empty(0, np.int64)
-
-            def _reorder(vals, starts, lens, out_dtype):
-                off = np.zeros(nrows + 1, np.int64)
-                np.cumsum(lens, out=off[1:])
-                gather = (np.repeat(starts, lens)
-                          + np.arange(int(off[-1]), dtype=np.int64)
-                          - np.repeat(off[:-1], lens))
-                return off, vals[gather].astype(out_dtype)
-
-            c_off, c_vals = _reorder(bc, c_start, c_len, np.int64)
-            coords_f = core.go_round7(c_vals.astype(np.float64) / 1e7)
-            r_off, r_vals = _reorder(br, r_start, r_len, np.int32)
-            p_off, p_vals = _reorder(bp, p_start, p_len, np.int32)
-
-            props = np.full(nrows, "{}", dtype=object)
-            for i in np.flatnonzero(has_props):
-                props[i] = json.dumps(core.decode_properties(
-                    np.frombuffer(frames[i].as_py(), dtype=np.uint8)),
-                    sort_keys=True)
-            props_json = pa.array(props, type=pa.string())
-            yield pa.RecordBatch.from_arrays([
-                pa.array(all_ids, type=pa.int64()),
-                pa.array(gt_r), pa.array(dim_r),
-                pa.ListArray.from_arrays(
-                    pa.array(c_off.astype(np.int32), type=pa.int32()),
-                    pa.array(coords_f, type=pa.float64())),
-                pa.ListArray.from_arrays(
-                    pa.array(r_off.astype(np.int32), type=pa.int32()),
-                    pa.array(r_vals, type=pa.int32())),
-                pa.ListArray.from_arrays(
-                    pa.array(p_off.astype(np.int32), type=pa.int32()),
-                    pa.array(p_vals, type=pa.int32())),
-                props_json,
-            ], names=[f.name for f in GEOM_SCHEMA.fields])
-
-    return df.select(bin_col).mapInArrow(_dec, GEOM_SCHEMA)
+    drift (geom.go:78-90 discussion in SURVEY §1.3). A corrupt frame fails
+    the task; a null frame gives a row of nulls."""
+    jvm_codec.require(df.sparkSession)
+    return df.select(F.inline(F.array(F.call_function("gb_decode", F.col(bin_col)))))
 
 
 # ---------------------------------------------------------------------------

@@ -26,7 +26,6 @@ from __future__ import annotations
 from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from geobuf_spark.codec import spark_codec
 from geobuf_spark.functions import text as TXT
 from geobuf_spark.functions import geom, hexgrid, phash, tiles
 from geobuf_spark.operators import dedup, knn, ranking, similarity, sketch

@@ -53,14 +53,13 @@ def decoded_features(spark: SparkSession, path: str, repartition: int | None = N
                      fast: bool = True) -> DataFrame:
     """Geobuf file → fully decoded feature rows.
 
-    `fast=True` (default) runs geometry through the payload-token batch
-    kernels (decode_features_fast — vectorized, reader.go:84-112 scan
-    semantics), parsing properties only for frames that carry them. The
-    plan holds one Python stage: the frame split is in the JVM.
-    `fast=False` keeps the per-feature generic decoder, whose float
-    coords replicate the reference's per-vertex accumulation exactly
-    (the fast path is lattice-exact instead). Both handle bare
-    properties-only frames."""
+    `fast=True` (default) decodes in the JVM (decode_features_fast, the
+    gb_decode UDF; reader.go:84-112 scan semantics), parsing properties
+    only for frames that carry them. The plan holds no Python stage: the
+    frame split and the decode both run in the JVM. `fast=False` keeps
+    the per-feature generic decoder, whose float coords replicate the
+    reference's per-vertex accumulation exactly (the fast path is
+    lattice-exact instead). Both handle bare properties-only frames."""
     from geobuf_spark.codec import spark_codec
 
     frames = read_geobuf(spark, path, repartition)

@@ -22,6 +22,18 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def gb_decode(spark):
+    """frames → their spark_codec.decode_features_fast rows, in order."""
+    from geobuf_spark.codec import spark_codec
+
+    def _decode(frames):
+        df = spark.createDataFrame(
+            [(bytearray(f),) for f in frames], "geobuf binary").coalesce(1)
+        return spark_codec.decode_features_fast(df).collect()
+    return _decode
+
+
+@pytest.fixture(scope="session")
 def sf_small():
     return SF_SMALL
 

@@ -228,31 +228,32 @@ def test_fuzz_lines_batch_kernel_roundtrip(lines):
             min_size=1, max_size=3),
         min_size=1, max_size=6),
 )
-def test_fuzz_multipolygon_batch_kernel_roundtrip(feats):
-    """Hypothesis: nested MultiPolygon structures round-trip the two-level
-    batch kernel with exact structure arrays."""
+def test_fuzz_multipolygon_batch_kernel_roundtrip(gb_decode, feats):
+    """Hypothesis: nested MultiPolygon structures written by
+    core.encode_feature round-trip gb_decode with exact structure arrays
+    and coords on the quantized lattice."""
     import numpy as np
 
-    from geobuf_spark.codec import spark_codec as sc
-
-    ppf = np.array([len(f) for f in feats], dtype=np.int64)
-    rpp = np.array([1 for f in feats for _ in f], dtype=np.int64)
-    ring_nv = np.array([len(r) for f in feats for r in f], dtype=np.int64)
+    ppf = [len(f) for f in feats]
+    rpp = [1 for f in feats for _ in f]
+    ring_nv = [len(r) for f in feats for r in f]
     coords = np.array([c for f in feats for r in f for pt in r for c in pt], dtype=np.float64)
-    ids = np.arange(len(feats), dtype=np.int64)
-    arr = sc.encode_multipolygons_kernel(ids, coords, ring_nv, rpp, ppf)
-    dids, dcoords, dnv, drpp, dppf, dim = sc.decode_multipolygons_kernel(arr)
-    assert dim == 2
-    assert np.array_equal(dppf, ppf) and np.array_equal(drpp, rpp)
-    assert np.array_equal(dnv, ring_nv)
-    assert np.array_equal(dcoords, core.quantize_vec(coords))
+    frames = [core.encode_feature(core.Feature.from_geojson(
+        "MultiPolygon", [[[list(pt) for pt in r]] for r in f], id=i))
+        for i, f in enumerate(feats)]
+    rows = gb_decode(frames)
+    assert [(r.id, r.geom_type, r.dim) for r in rows] == [(i, 6, 2) for i in range(len(feats))]
+    assert [len(r.part_rings) for r in rows] == ppf
+    assert [n for r in rows for n in r.part_rings] == rpp
+    assert [n for r in rows for n in r.ring_lens] == ring_nv
+    assert [c for r in rows for c in r.coords] == core.go_round7(
+        core.quantize_vec(coords) / 1e7).tolist()
 
 
 # ---------------------------------------------------------------------------
-# payload-walk batch decode fuzz (r2): arbitrary feature frames — any geom
-# type/dim, random properties (incl. long keys), with or without id —
-# through the vectorized batch dispatcher must equal the per-feature
-# reference-semantics decoder.
+# full decode fuzz: arbitrary feature frames — any geom type/dim, random
+# properties (incl. long keys), with or without id — through gb_decode
+# must equal the per-feature reference-semantics decoder.
 # ---------------------------------------------------------------------------
 
 _geom_strategy = st.sampled_from([1, 2, 3, 4, 5, 6])
@@ -297,36 +298,19 @@ def _feature(draw, fid):
 
 @settings(max_examples=25, deadline=None)
 @given(st.data())
-def test_fuzz_batch_decode_matches_reference_decoder(data):
-    import json
-
-    import pyarrow as pa
-
-    from geobuf_spark.codec import spark_codec as sc
-
+def test_fuzz_batch_decode_matches_reference_decoder(gb_decode, data):
     n = data.draw(st.integers(2, 12))
     feats = [data.draw(_feature(fid)) for fid in range(n)]
     frames = [core.encode_feature(f) for f in feats]
-    arr = pa.array(frames, type=pa.binary())
-
-    # geometry via the grouped batch kernels
-    _, ids, codes, toks, first, cnt = sc._tokenize_geometry(arr)
-    for code in np.unique(codes):
-        sel = np.flatnonzero(codes == code)
-        g = sc._decode_code_group(
-            int(code), ids[sel],
-            *sc._gather_token_group(toks, first, cnt, sel))
-        coff = np.zeros(len(sel) + 1, dtype=np.int64)
-        np.cumsum(g["feat_v"] * g["dim"], out=coff[1:])
-        roff = np.zeros(len(sel) + 1, dtype=np.int64)
-        np.cumsum(g["rings_pf"], out=roff[1:])
-        for j, row in enumerate(sel):
-            want = core.decode_feature(frames[row], quantized=True)
-            got_c = g["coords_q"][coff[j]:coff[j + 1]]
-            assert got_c.tolist() == want.coords.tolist(), row
-            got_r = g["ring_nv"][roff[j]:roff[j + 1]]
-            assert got_r.tolist() == want.ring_lens.tolist(), row
-            assert g["gt"] == want.geom_type and g["dim"] == want.dim
+    for frame, r in zip(frames, gb_decode(frames)):
+        want = core.decode_feature(frame, quantized=True)
+        assert r.id == (want.id or 0)
+        assert (r.geom_type, r.dim) == (want.geom_type, want.dim)
+        assert r.coords == core.go_round7(want.coords / 1e7).tolist()
+        assert r.ring_lens == want.ring_lens.tolist()
+        assert r.part_rings == want.part_rings.tolist()
+        assert r.props_json == json.dumps(
+            core.decode_properties(frame), sort_keys=True)
 
     # properties via the props-only walker
     for row, frame in enumerate(frames):

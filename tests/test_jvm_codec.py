@@ -1,10 +1,15 @@
 """JVM codec (codec/jvm/GbCodec.java) — exact parity vs the Arrow kernels
 it twins and vs the reference-semantics codec in core.py. The point codec
-has no Arrow twin: spark_codec's point functions run gb_point_enc/gb_point
-and are pinned byte for byte against core.encode_feature/decode_feature.
-The jar is committed and the geobuf read path depends on it, so a jar that
-cannot be registered fails this suite instead of skipping it.
+and the full decode (gb_decode) have no Arrow twin: spark_codec's point
+functions and decode_features_fast run them and are pinned against
+core.encode_feature/decode_feature/decode_properties. The jar is committed
+and the geobuf read path depends on it, so a jar that cannot be
+registered fails this suite instead of skipping it.
 """
+import json
+import math
+import struct
+
 import numpy as np
 import pyarrow as pa
 import pytest
@@ -109,6 +114,67 @@ def test_golden_point_frames(jvm):
     frames = _frames_df(jvm, [frame for _, frame in GOLDEN_POINTS])
     dec = {tuple(r) for r in spark_codec.decode_points(frames).collect()}
     assert dec == {(i, qx, qy) for (i, _, _, qx, qy), _ in GOLDEN_POINTS}
+
+
+# Property, line and polygon frames written byte by byte from the same
+# table. A properties field (0x12, repeated) is a map entry: 0x0A key
+# string, then 0x12 and a nested Value message whose field gives the type
+# — 0x0A string, 0x20 int64 varint (a negative value as its 10-byte two's
+# complement), 0x19 float64 little-endian. A LineString (code 2) packs the
+# per-vertex zigzag deltas; a Polygon (code 3) packs, per ring, the varint
+# count nv * 2 and then the ring's deltas, the delta state reset at each
+# ring start. zigzag(5e6) = 1e7 = 80 ad e2 04, zigzag(2.5e6) = 5e6 =
+# c0 96 b1 02, zigzag(-2.5e6) = 4999999 = bf 96 b1 02, zigzag(1e7) = 2e7
+# = 80 da c4 09, zigzag(-1e7) = 19999999 = ff d9 c4 09.
+GOLDEN_FEATURES = [
+    (("Point", [0.5, 0.25], 2, {"name": "ab", "n": -2, "x": 0.5}), bytes.fromhex(
+        "08 02"
+        " 12 0c 0a 04 6e616d65 12 04 0a 02 6162"         # "name": "ab"
+        " 12 10 0a 01 6e 12 0b 20 feffffffffffffffff01"  # "n": -2
+        " 12 0e 0a 01 78 12 09 19 000000000000e03f"      # "x": 0.5
+        " 18 01 22 08 80ade204 c096b102"
+        " 2a 10 80ade204 c096b102 80ade204 c096b102")),
+    # (0, 0) → (0.5, 0) → (0.5, 0.25): deltas (0, 0), (5e6, 0), (0, 2.5e6)
+    (("LineString", [[0.0, 0.0], [0.5, 0.0], [0.5, 0.25]], 3, {}), bytes.fromhex(
+        "08 03 18 02 22 0c 00 00 80ade204 00 00 c096b102"
+        " 2a 0a 00 00 80ade204 c096b102")),
+    # the unit square with a triangular hole; bbox [0, 0, 1, 1]
+    (("Polygon", [[[0.0, 0.0], [1.0, 0.0], [1.0, 1.0], [0.0, 0.0]],
+                  [[0.25, 0.25], [0.5, 0.25], [0.25, 0.5], [0.25, 0.25]]], 4, {}),
+     bytes.fromhex(
+        "08 04 18 03 22 30"
+        " 08 00 00 80dac409 00 00 80dac409 ffd9c409 ffd9c409"
+        " 08 c096b102 c096b102 c096b102 00 bf96b102 c096b102 00 bf96b102"
+        " 2a 0a 00 00 80dac409 80dac409")),
+]
+
+
+def test_golden_feature_frames(jvm):
+    """core.encode_feature writes the spec-derived property, line and
+    polygon frames; gb_line_enc and gb_poly_enc write the line and the
+    polygon; gb_decode and core.decode_feature read all three back to the
+    source features."""
+    feats = [core.Feature.from_geojson(t, c, id=i, properties=p)
+             for (t, c, i, p), _ in GOLDEN_FEATURES]
+    frames = [frame for _, frame in GOLDEN_FEATURES]
+    assert [core.encode_feature(f) for f in feats] == frames
+    line, poly = feats[1], feats[2]
+    enc = jvm_codec.encode_lines_jvm(jvm.createDataFrame(
+        [(3, line.coords.tolist())], "line_id long, coords array<double>"))
+    assert bytes(enc.first().geobuf) == frames[1]
+    enc = jvm_codec.encode_polygons_jvm(jvm.createDataFrame(
+        [(4, poly.coords.tolist(), poly.ring_lens.tolist())],
+        "poly_id long, coords array<double>, ring_lens array<int>"))
+    assert bytes(enc.first().geobuf) == frames[2]
+    rows = spark_codec.decode_features_fast(_frames_df(jvm, frames)).collect()
+    for f, frame, r in zip(feats, frames, rows):
+        for got in (core.decode_feature(frame), r):
+            got = (got.id, got.geom_type, got.dim, list(got.coords),
+                   list(got.ring_lens), list(got.part_rings))
+            assert got == (f.id, f.geom_type, f.dim, f.coords.tolist(),
+                           f.ring_lens.tolist(), f.part_rings.tolist())
+        assert core.decode_feature(frame).properties == f.properties
+        assert r.props_json == json.dumps(f.properties, sort_keys=True)
 
 
 @pytest.mark.parametrize("bad, shown", [(float("nan"), "NaN"),
@@ -609,3 +675,108 @@ def test_corrupt_frame_accept_reject_parity(jvm, frame):
     the numpy frame_fields_walk accept or reject the same frames."""
     want = _numpy_accepts(frame)
     assert _jvm_accepts(_udf(jvm, "Bbox"), frame) == want
+
+
+# --- gb_decode: properties JSON and corrupt frames ---------------------------
+
+_text = st.one_of(
+    st.text(st.characters(codec="utf-8", blacklist_categories=("Cs",)), max_size=6),
+    st.sampled_from(["", "k", '"\\', "\x00\x1f\x7f", "é", "￿", "\U0001F600"]))
+_F64 = [0.0, -0.0, math.nan, math.inf, -math.inf, 5e-324, 2.2250738585072014e-308,
+        1.7976931348623157e308, 1e16, 1e15, 1e-4, 1e-5, 0.1, 2e23]
+_I64 = [0, 1, -1, 2**63 - 1, -2**63]
+# one Value message field (PAPER.md §1.2; core._read_value numbering)
+_value_fields = st.one_of(
+    _text.map(lambda t: b"\x0a" + core.encode_varint(len(t.encode())) + t.encode()),
+    st.integers(0, 2**32 - 1).map(lambda u: b"\x15" + struct.pack("<I", u)),
+    st.floats(width=32).map(lambda x: b"\x15" + struct.pack("<f", x)),
+    st.integers(0, 2**64 - 1).map(lambda u: b"\x19" + struct.pack("<Q", u)),
+    st.one_of(st.floats(), st.sampled_from(_F64)).map(
+        lambda x: b"\x19" + struct.pack("<d", x)),
+    st.one_of(st.integers(-2**63, 2**63 - 1), st.sampled_from(_I64)).map(
+        lambda v: b"\x20" + core.encode_varint(v)),
+    st.one_of(st.integers(0, 2**64 - 1), st.sampled_from([0, 2**63, 2**64 - 1])).map(
+        lambda u: b"\x28" + core.encode_varint(u)),
+    st.one_of(st.integers(-2**63, 2**63 - 1), st.sampled_from(_I64)).map(
+        lambda v: b"\x30" + core.encode_varint(core.zigzag64(v))),
+    st.sampled_from([0, 1, 2]).map(lambda u: b"\x38" + core.encode_varint(u)))
+
+
+def _entry(key: str, value: bytes) -> bytes:
+    """One properties field: 0x12 | len | 0x0A key | 0x12 value message."""
+    kb = key.encode()
+    inner = (b"\x0a" + core.encode_varint(len(kb)) + kb
+             + b"\x12" + core.encode_varint(len(value)) + value)
+    return b"\x12" + core.encode_varint(len(inner)) + inner
+
+
+@st.composite
+def _props_frames(draw):
+    """A point or line frame, or a bare one, whose properties cover every
+    Value field with extreme values, control, non-ASCII and astral
+    characters in keys and values, and repeated keys."""
+    keys = st.one_of(_text, st.sampled_from(["k", "K", "é", "\U0001F600"]))
+    props = b"".join(_entry(k, v) for k, v in draw(
+        st.lists(st.tuples(keys, _value_fields), min_size=1, max_size=6)))
+    frame = draw(_feature_frames(props=st.just({})))
+    if draw(st.booleans()):
+        return props
+    if frame[0] == 0x08:
+        _, p = core.decode_varint(frame, 1)
+        return frame[:p] + props + frame[p:]
+    return props + frame
+
+
+@settings(max_examples=400, deadline=None)
+@given(frame=_props_frames())
+def test_props_json_matches_python_json(jvm, frame):
+    """gb_decode's props_json is json.dumps(core.decode_properties(frame),
+    sort_keys=True) to the byte: Python's shortest float repr (float32
+    widened first), NaN/Infinity, ensure_ascii escapes, keys in code point
+    order, the last value of a repeated key, unsigned uint64."""
+    want = json.dumps(core.decode_properties(frame), sort_keys=True)
+    assert _udf(jvm, "Decode").call(bytearray(frame)).getString(6) == want
+
+
+def _cuts_and_overruns(frame: bytes) -> list[bytes]:
+    """Every strict prefix of frame, and frame with each length prefix
+    raised so its payload runs one byte past the frame end, or to
+    2**64 - 1."""
+    out = [frame[:k] for k in range(len(frame))]
+    for tag, s, e in _fields(frame):
+        if tag & 7 == 2:
+            n, p = core.decode_varint(frame, s + 1)
+            for n2 in (n + len(frame) - e + 1, 2**64 - 1):
+                out.append(frame[:s + 1] + core.encode_varint(n2) + frame[p:])
+    return out
+
+
+def test_gb_decode_rejects_cut_and_overrun_frames(jvm):
+    """gb_decode rejects a truncated frame or an overrunning length prefix
+    exactly when the field walk does — the frames the Arrow fast path it
+    replaced rejected — and reads every frame it accepts as core does."""
+    bases = [frame for _, frame in GOLDEN_FEATURES] + [
+        core.encode_feature(core.Feature.from_geojson(
+            "MultiPolygon", [[[[0, 0], [1, 0], [0, 1], [0, 0]]],
+                             [[[5, 5], [6, 5], [5, 6], [5, 5]]]], id=9)),
+        core.encode_feature(core.Feature.from_geojson(
+            "LineString", [[1.5, -2.0, 3.0], [-1.0, 2.5, 0.0]], id=10,
+            properties={"é": "ü", "k": 2**40})),
+        _entry("bare", b"\x38\x01")]
+    decode = _udf(jvm, "Decode")
+    frames = [f for base in bases for f in _cuts_and_overruns(base)]
+    verdicts = [(_jvm_accepts(decode, f), _numpy_accepts(f)) for f in frames]
+    assert [j for j, _ in verdicts] == [w for _, w in verdicts]
+    assert sum(not j for j, _ in verdicts) == 336
+    accepted = [f for f, (j, _) in zip(frames, verdicts) if j]
+    df = spark_codec.decode_features_fast(_frames_df(jvm, accepted))
+    for frame, r in zip(accepted, df.collect()):
+        want = core.decode_feature(frame, quantized=True)
+        geom = (0, 2, [], [], [])  # a bare frame: no code or no payload
+        if {0x18, 0x22} <= {tag for tag, _, _ in _fields(frame)}:
+            geom = (want.geom_type, want.dim,
+                    core.go_round7(want.coords / 1e7).tolist(),
+                    want.ring_lens.tolist(), want.part_rings.tolist())
+        assert r.id == (want.id or 0)
+        assert (r.geom_type, r.dim, r.coords, r.ring_lens, r.part_rings) == geom
+        assert r.props_json == json.dumps(core.decode_properties(frame), sort_keys=True)

@@ -193,38 +193,53 @@ def _mp_batch(seed, n=120, dim=2):
     return ids, coords, ring_nv, rings_per_poly, polys_per_feat
 
 
-def test_multipolygon_kernel_byte_parity():
-    ids, coords, ring_nv, rpp, ppf = _mp_batch(29)
-    arr = sc.encode_multipolygons_kernel(ids, coords, ring_nv, rpp, ppf)
-    ring_starts = np.concatenate(([0], np.cumsum(ring_nv)[:-1]))
-    poly_ring_start = np.concatenate(([0], np.cumsum(rpp)[:-1]))
-    feat_poly_start = np.concatenate(([0], np.cumsum(ppf)[:-1]))
-    for i in range(0, len(ids), 9):
-        polys = []
-        for p in range(ppf[i]):
-            gp = feat_poly_start[i] + p
-            rings = []
-            for r in range(rpp[gp]):
-                g = poly_ring_start[gp] + r
-                s = ring_starts[g]
-                rings.append(coords[2 * s : 2 * (s + ring_nv[g])].reshape(-1, 2).tolist())
-            polys.append(rings)
-        cf = core.Feature.from_geojson("MultiPolygon", polys, id=int(ids[i]))
-        assert core.encode_feature(cf) == arr[i].as_py(), i
+def _mp_frames(seed):
+    """_mp_batch features as core.encode_feature frames, with the batch."""
+    ids, coords, ring_nv, rpp, ppf = batch = _mp_batch(seed)
+    v_off = np.concatenate(([0], np.cumsum(ring_nv)))
+    r_off = np.concatenate(([0], np.cumsum(rpp)))
+    p_off = np.concatenate(([0], np.cumsum(ppf)))
+    frames = []
+    for i in range(len(ids)):
+        r0, r1 = r_off[p_off[i]], r_off[p_off[i + 1]]
+        frames.append(core.encode_feature(core.Feature(
+            geom_type=6, dim=2, coords=coords[2 * v_off[r0]:2 * v_off[r1]],
+            ring_lens=ring_nv[r0:r1], part_rings=rpp[p_off[i]:p_off[i + 1]],
+            id=int(ids[i]))))
+    return frames, batch
 
 
-def test_multipolygon_kernel_roundtrip():
-    ids, coords, ring_nv, rpp, ppf = _mp_batch(31)
-    arr = sc.encode_multipolygons_kernel(ids, coords, ring_nv, rpp, ppf)
-    dids, dcoords, dnv, drpp, dppf, dim = sc.decode_multipolygons_kernel(arr)
-    assert dim == 2
-    assert np.array_equal(dids, ids)
-    assert np.array_equal(dppf, ppf)
-    assert np.array_equal(drpp, rpp)
-    assert np.array_equal(dnv, ring_nv)
-    assert np.array_equal(dcoords, core.quantize_vec(coords))
+def _lattice(q) -> list:
+    """The float coords of exact lattice values q, as the fast decode
+    writes them: go_round7(q / 1e7)."""
+    return core.go_round7(np.asarray(q, dtype=np.int64) / 1e7).tolist()
+
+
+def test_multipolygon_kernel_byte_parity(gb_decode):
+    """MultiPolygon frames written by core.encode_feature: gb_decode reads
+    each one as core.decode_feature does — id, part_rings, ring_lens, and
+    coords on the same lattice."""
+    frames, _ = _mp_frames(29)
+    for frame, r in zip(frames, gb_decode(frames)):
+        want = core.decode_feature(frame, quantized=True)
+        assert (r.id, r.geom_type, r.dim) == (want.id, 6, 2)
+        assert r.part_rings == want.part_rings.tolist()
+        assert r.ring_lens == want.ring_lens.tolist()
+        assert r.coords == _lattice(want.coords)
+
+
+def test_multipolygon_kernel_roundtrip(gb_decode):
+    """A batch of nested MultiPolygons round-trips core.encode_feature →
+    gb_decode: the structure arrays exactly, coords on the lattice."""
+    frames, (ids, coords, ring_nv, rpp, ppf) = _mp_frames(31)
+    rows = gb_decode(frames)
+    assert [r.id for r in rows] == ids.tolist()
+    assert [len(r.part_rings) for r in rows] == ppf.tolist()
+    assert [n for r in rows for n in r.part_rings] == rpp.tolist()
+    assert [n for r in rows for n in r.ring_lens] == ring_nv.tolist()
+    assert [c for r in rows for c in r.coords] == _lattice(core.quantize_vec(coords))
     # reference-semantics decoder agrees on the first feature's structure
-    f0 = core.decode_feature(arr[0].as_py(), quantized=True)
+    f0 = core.decode_feature(frames[0], quantized=True)
     assert f0.geom_type == 6 and f0.part_rings.tolist() == rpp[:ppf[0]].tolist()
 
 
@@ -262,11 +277,9 @@ def test_rings_kernel_on_county_polygons(reference_file):
 
 
 def test_decode_geometries_mixed_batch(spark):
-    """One binary column holding all six geometry types: the dispatcher
-    must route each frame through its vectorized kernel and reproduce the
-    generic per-feature decoder's structure exactly."""
-    import pyarrow as pa
-
+    """One binary column holding all six geometry types: gb_decode reads
+    every frame to its own type and the exact lattice coords, and the
+    structure arrays match the generic per-feature decoder."""
     rng = np.random.default_rng(41)
     frames = []
     expected = {}
@@ -310,35 +323,24 @@ def test_decode_geometries_mixed_batch(spark):
             rows.append((gt, core.quantize_vec(c[2*s:2*(s+nvv)]).tolist()))
         add([arr[i].as_py() for i in range(20)], rows)
     # multipolygons
-    ids = np.arange(fid, fid + 15)
-    ppf = rng.integers(1, 3, 15).astype(np.int64)
-    rpp = rng.integers(1, 3, int(ppf.sum())).astype(np.int64)
-    rnv = rng.integers(3, 8, int(rpp.sum())).astype(np.int64)
-    c = rng.uniform(-170, 170, int(rnv.sum()) * 2)
-    arr = sc.encode_multipolygons_kernel(ids, c, rnv, rpp, ppf)
-    pst = np.concatenate(([0], np.cumsum(ppf)[:-1]))
-    rst = np.concatenate(([0], np.cumsum(rpp)[:-1]))
-    vst = np.concatenate(([0], np.cumsum(rnv)[:-1]))
-    rows = []
     for i in range(15):
-        r0 = rst[pst[i]]
-        nrings = rpp[pst[i]:pst[i]+ppf[i]].sum()
-        s = vst[r0]
-        nvv = rnv[r0:r0+nrings].sum()
-        rows.append((6, core.quantize_vec(c[2*s:2*(s+nvv)]).tolist()))
-    add([arr[i].as_py() for i in range(15)], rows)
+        polys = [[rng.uniform(-170, 170, (int(rng.integers(3, 8)), 2)).tolist()
+                  for _ in range(int(rng.integers(1, 3)))]
+                 for _ in range(int(rng.integers(1, 3)))]
+        feat = core.Feature.from_geojson("MultiPolygon", polys, id=fid)
+        add([core.encode_feature(feat)], [(6, core.quantize_vec(feat.coords).tolist())])
 
     order = rng.permutation(len(frames))
     df = spark.createDataFrame(
         [(bytearray(frames[i]),) for i in order], "geobuf binary").repartition(4)
-    dec = sc.decode_geometries(df)
-    got = {r.id: (r.geom_type, list(r.coords_q)) for r in dec.collect()}
-    assert got == expected
-    # structure spot check against the generic decoder on one mixed frame
-    some = dec.filter(F.col("geom_type") == 6).first()
-    g = core.decode_feature(frames[[i for i in range(len(frames))][some.id]], quantized=True)
-    assert list(some.part_rings) == g.part_rings.tolist()
-    assert list(some.ring_lens) == g.ring_lens.tolist()
+    dec = sc.decode_features_fast(df)
+    got = {r.id: (r.geom_type, r.coords) for r in dec.collect()}
+    assert got == {i: (gt, _lattice(q)) for i, (gt, q) in expected.items()}
+    # structure against the generic decoder on every multipolygon frame
+    for some in dec.filter(F.col("geom_type") == 6).collect():
+        g = core.decode_feature(frames[some.id], quantized=True)
+        assert some.part_rings == g.part_rings.tolist()
+        assert some.ring_lens == g.ring_lens.tolist()
 
 
 def _props_line_frame(fid: int, coords: np.ndarray, props: dict,
@@ -408,8 +410,9 @@ def test_decode_rings_props_and_no_bbox():
 
 
 def test_decode_geometries_mixed_dim_and_props(spark):
-    """decode_geometries groups by FULL geom code: a batch mixing dim-2 and
-    dim-3 LineStrings (plus props frames) stays on vectorized kernels."""
+    """gb_decode takes the dim from each frame's FULL geom code: a batch
+    mixing dim-2 and dim-3 LineStrings, all carrying properties, decodes
+    each frame at its own dim with its own props."""
     rng = np.random.default_rng(13)
     rows, want = [], {}
     fid = 0
@@ -423,6 +426,7 @@ def test_decode_geometries_mixed_dim_and_props(spark):
     order = rng.permutation(fid)
     df = spark.createDataFrame(
         [(bytearray(rows[i]),) for i in order], "geobuf binary").repartition(3)
-    got = {r.id: (r.dim, list(r.coords_q))
-           for r in sc.decode_geometries(df).collect()}
-    assert got == want
+    got = {r.id: (r.dim, r.coords, r.props_json)
+           for r in sc.decode_features_fast(df).collect()}
+    assert got == {i: (dim, _lattice(q), f'{{"d": {dim}}}')
+                   for i, (dim, q) in want.items()}

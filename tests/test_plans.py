@@ -197,12 +197,16 @@ def test_geobuf_bbox_read_has_no_python(spark, geobuf_dir):
     assert plan.count("gb_frames(") == 1, plan
 
 
-def test_decoded_features_single_python_stage(spark, geobuf_dir):
+def test_decoded_features_no_python_stage(spark, geobuf_dir):
+    """The full decode runs in the JVM: no Python node, and the gb_decode
+    struct is evaluated once per row, not once per field read."""
     from geobuf_spark.sources import geobuf_file
 
     df = geobuf_file.decoded_features(spark, geobuf_dir)
     plan = _final_plan(df.agg(F.count("*"), F.sum(F.size("coords"))))
-    assert plan.count("MapInArrow") == 1, plan
+    for marker in _PYTHON_NODES:
+        assert marker not in plan, (marker, plan)
+    assert plan.count("gb_decode(") == 1, plan
     assert plan.count("gb_frames(") == 1, plan
 
 
@@ -211,7 +215,9 @@ def test_flagship_codec_evaluated_once(spark, sf_small):
     assign_tiles_points → tile_histogram): the point codec runs in the
     JVM, each UDF once per row. No inferred isnotnull filter or collapsed
     projection repeats gb_point/gb_point_enc, or the md5 minting under
-    them: the plan holds no more md5 calls than minting the pages alone."""
+    them: the plan holds no more md5 calls than minting the pages alone.
+    The rectangles are broadcast once and the only shuffle is the one
+    feeding the histogram's final aggregate."""
     from geobuf_spark.codec import spark_codec
     from geobuf_spark.operators import tiling
     from geobuf_spark.sources import pages
@@ -232,3 +238,5 @@ def test_flagship_codec_evaluated_once(spark, sf_small):
     assert plan.count("gb_point_enc(") == 1, plan
     assert plan.count("md5(") == _final_plan(p).count("md5("), plan
     assert "BroadcastHashJoin" in plan, plan
+    assert plan.count("BroadcastExchange") == 1, plan
+    assert plan.count("Exchange hashpartitioning") == 1, plan

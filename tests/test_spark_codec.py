@@ -265,16 +265,19 @@ def test_decode_points_any_with_props(spark, sf_small):
                    zip(range(10), np.linspace(-5, 5, 10), np.linspace(2, 3, 10))}
 
 
-def test_review_regressions():
+def test_review_regressions(gb_decode):
     """Pinned repros from the round-1 codec review."""
     import numpy as np
 
-    # (a) mixed-batch dispatch on props-bearing frames
+    # (a) the geometry code of props-bearing frames is read by field, not
+    # at a fixed offset
     flat_l = np.frombuffer(b"ende", dtype=np.uint8); offs_l = np.array([0, 2, 4])
     arr = sc.encode_points_props_kernel(
         np.array([1, 2]), np.array([1.0, 2.0]), np.array([3.0, 4.0]),
         [("lang", "str", (flat_l, offs_l))])
-    assert sc._frame_geom_codes(arr).tolist() == [1, 1]
+    rows = gb_decode([f.as_py() for f in arr])
+    assert [r.geom_type for r in rows] == [1, 1]
+    assert [r.props_json for r in rows] == ['{"lang": "en"}', '{"lang": "de"}']
     # (b) id-less frames: lazy read still finds the property
     f = core.Feature.from_geojson("Point", [1.0, 2.0], properties={"lang": "en"})
     a2 = pa.array([core.encode_feature(f)], type=pa.binary())
