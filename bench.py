@@ -321,8 +321,8 @@ def synth_lines(spark, n: int, min_v: int = 16, max_v: int = 64):
 
 def bench_lines_vs_json(spark, n_lines: int, trials: int = 5):
     """Roads-shape codec comparison (the reference's actual 18x benchmark
-    corpus is linestring roads): ~40-vertex LineStrings, geobuf Arrow
-    kernels vs to_json/from_json with array<double> coordinates."""
+    corpus is linestring roads): ~40-vertex LineStrings, the JVM geobuf
+    line codec vs to_json/from_json with array<double> coordinates."""
     from pyspark.sql import functions as F
 
     from geobuf_spark.codec import spark_codec
@@ -342,12 +342,8 @@ def bench_lines_vs_json(spark, n_lines: int, trials: int = 5):
         return lines.select(F.to_json(F.struct("line_id", "coords")).alias("j")) \
             .agg(F.count("*"), F.sum(F.octet_length("j"))).collect()[0][0]
 
-    # lines carry ~40x the kernel work per row of points: fewer tasks stop
-    # paying off sooner (16 parts measured best at 100k x 40 vertices)
-    n_parts = max(16, spark.sparkContext.defaultParallelism // 2)
-
     def geobuf_read():
-        return spark_codec.decode_lines_agg(enc, parts=n_parts).collect()[0][0]
+        return spark_codec.decode_lines_agg(enc).collect()[0][0]
 
     def geobuf_read_full():
         d = spark_codec.decode_lines(enc)
@@ -371,7 +367,7 @@ def bench_lines_vs_json(spark, n_lines: int, trials: int = 5):
 
     def geobuf_scan():
         return spark_codec.decode_lines_agg(
-            spark.read.parquet(f"{tmp}/geobuf"), parts=n_parts).collect()[0][0]
+            spark.read.parquet(f"{tmp}/geobuf")).collect()[0][0]
 
     def json_scan():
         parsed = spark.read.parquet(f"{tmp}/json").select(
@@ -384,29 +380,11 @@ def bench_lines_vs_json(spark, n_lines: int, trials: int = 5):
              ("json_read", json_read),
              ("geobuf_scan", geobuf_scan), ("json_scan", json_scan)]
 
-    from geobuf_spark.codec import jvm_codec
-    if jvm_codec.register(spark):
-        def geobuf_read_jvm():
-            return jvm_codec.decode_lines_agg_jvm(enc).collect()[0][0]
-
-        def geobuf_scan_jvm():
-            return jvm_codec.decode_lines_agg_jvm(
-                spark.read.parquet(f"{tmp}/geobuf")).collect()[0][0]
-
-        def geobuf_write_jvm():
-            return jvm_codec.encode_lines_jvm(lines) \
-                .agg(F.count("*"), F.sum(F.octet_length("geobuf"))).collect()[0][0]
-        paths += [("geobuf_read_jvm", geobuf_read_jvm),
-                  ("geobuf_scan_jvm", geobuf_scan_jvm),
-                  ("geobuf_write_jvm", geobuf_write_jvm)]
-
     try:
         out, spread = _run_paths(paths, trials, n_lines)
         out["geobuf_bytes"] = enc.agg(F.sum(F.octet_length("geobuf"))).collect()[0][0]
         out["json_bytes"] = js.agg(F.sum(F.octet_length("j"))).collect()[0][0]
         out["n_rows"] = n_lines
-        out.update(_py_kernel_time(enc, spark_codec.decode_lines_kernel,
-                                   n_sample=50_000))
         out["geobuf_parquet_bytes"] = sum(
             f.stat().st_size for f in Path(f"{tmp}/geobuf").rglob("*.parquet"))
         out["json_parquet_bytes"] = sum(
@@ -417,45 +395,22 @@ def bench_lines_vs_json(spark, n_lines: int, trials: int = 5):
         lines.unpersist(); enc.unpersist(); js.unpersist()
 
 
-def _py_kernel_time(enc, kernel, n_sample: int = 200_000, trials: int = 3):
-    """Pure-kernel batch time, no Spark dispatch: collect a bounded frame
-    sample to the driver as ONE Arrow array and time the numpy kernel on
-    it directly. This records what the Arrow path costs at batch
-    granularity; the end-to-end python read rows pay this PLUS the
-    per-task Python worker dispatch floor and two Arrow serdes — the
-    documented cause of the sub-1x python read ratios at sandbox scale
-    (VERDICT r4 #4 asked for the floor claim to be evidenced with a
-    kernel-time metric, not asserted)."""
-    import pyarrow as pa
-
-    rows = enc.select("geobuf").limit(n_sample).collect()
-    frames = pa.array((bytes(r[0]) for r in rows), type=pa.binary())
-    kernel(frames)  # warmup
-    best = 1e9
-    for _ in range(trials):
-        t0 = time.time()
-        kernel(frames)
-        best = min(best, time.time() - t0)
-    return {"py_kernel_sec": best, "py_kernel_n": len(rows)}
-
-
 def bench_many_files(spark, n_lines: int, n_files: int = 64, trials: int = 3):
     """The reference's headline concurrent read (README.md:6 — ~18x vs
     GeoJSON unmarshal on the 1 GB CA-roads corpus; geobuf_concurrent.go:
     18-63 fans file reads across goroutines): many framed .geobuf
     subfiles read and decoded in parallel. Engine path: ONE JVM plan —
-    binaryFile scan → gb_frames split → explode → gb_line_stats reduce,
-    zero Python. Baseline: the same features as line-delimited JSON text
-    files through from_json. File writes are setup, not timed (the RDD
-    part-writer is bench scaffolding, not an engine path — engine file
-    output is geobuf_file.write_geobuf_indexed)."""
+    binaryFile scan → gb_frames split → explode → decode_lines_agg
+    (gb_line_stats) reduce, zero Python. Baseline: the same features as
+    line-delimited JSON text files through from_json. File writes are
+    setup, not timed (the RDD part-writer is bench scaffolding, not an
+    engine path — engine file output is geobuf_file.write_geobuf_indexed)."""
     import shutil
     import tempfile
 
     from pyspark.sql import functions as F
 
     from geobuf_spark.codec import core, jvm_codec, spark_codec
-    from geobuf_spark.sources import geobuf_file
 
     if not jvm_codec.register(spark):
         return None, None
@@ -479,16 +434,8 @@ def bench_many_files(spark, n_lines: int, n_files: int = 64, trials: int = 3):
     (lines.select(F.to_json(F.struct("line_id", "coords")).alias("value"))
      .repartition(n_files).write.mode("overwrite").text(jdir))
 
-    s = F.expr("gb_line_stats(geobuf)")
-
-    def read_jvm():
+    def geobuf_read():
         df = jvm_codec.read_geobuf_files_jvm(spark, gdir)
-        return df.select(s.alias("s")).agg(
-            F.count("*"), F.sum(F.element_at("s", 2)),
-            F.sum(F.element_at("s", 3))).collect()[0][0]
-
-    def read_py():
-        df = geobuf_file.read_geobuf(spark, gdir)
         return spark_codec.decode_lines_agg(df).collect()[0][0]
 
     def read_json():
@@ -497,8 +444,7 @@ def bench_many_files(spark, n_lines: int, n_files: int = 64, trials: int = 3):
         return parsed.agg(F.count("*"), F.sum(F.size("s.coords")),
                           F.sum(F.element_at("s.coords", 1))).collect()[0][0]
 
-    paths = [("geobuf_read_jvm", read_jvm), ("geobuf_read_py", read_py),
-             ("json_read", read_json)]
+    paths = [("geobuf_read", geobuf_read), ("json_read", read_json)]
     try:
         out, spread = _run_paths(paths, trials, n_lines)
         out["n_files"] = n_files
@@ -533,7 +479,7 @@ def synth_polys(spark, n: int, min_v: int = 8, max_v: int = 24):
 
 def bench_polys_vs_json(spark, n_polys: int, trials: int = 3):
     """Ring-structured codec comparison (the reference's county-polygon
-    micro-bench shape): two-ring Polygons, geobuf Arrow/JVM codec vs
+    micro-bench shape): two-ring Polygons, the JVM geobuf ring codec vs
     to_json/from_json with array coordinates + ring lengths."""
     from pyspark.sql import functions as F
 
@@ -568,24 +514,11 @@ def bench_polys_vs_json(spark, n_polys: int, trials: int = 3):
     paths = [("geobuf_write", geobuf_write), ("json_write", json_write),
              ("geobuf_read", geobuf_read), ("json_read", json_read)]
 
-    from geobuf_spark.codec import jvm_codec
-    if jvm_codec.register(spark):
-        def geobuf_read_jvm():
-            return jvm_codec.decode_polygons_agg_jvm(enc).collect()[0][0]
-
-        def geobuf_write_jvm():
-            return jvm_codec.encode_polygons_jvm(polys) \
-                .agg(F.count("*"), F.sum(F.octet_length("geobuf"))).collect()[0][0]
-        paths += [("geobuf_read_jvm", geobuf_read_jvm),
-                  ("geobuf_write_jvm", geobuf_write_jvm)]
-
     try:
         out, spread = _run_paths(paths, trials, n_polys)
         out["geobuf_bytes"] = enc.agg(F.sum(F.octet_length("geobuf"))).collect()[0][0]
         out["json_bytes"] = js.agg(F.sum(F.octet_length("j"))).collect()[0][0]
         out["n_rows"] = n_polys
-        out.update(_py_kernel_time(enc, spark_codec.decode_rings_kernel,
-                                   n_sample=100_000))
         return out, spread
     finally:
         polys.unpersist(); enc.unpersist(); js.unpersist()
@@ -724,58 +657,34 @@ def main():
     def _nsf(sec, n):
         return round(sec / n * 1e9, 1)
 
-    # batch-granularity evidence for the python Arrow read path (VERDICT
-    # r4 #4; lines and polygons — points have no Arrow tier): the numpy
-    # kernel alone vs the end-to-end rates. Where
-    # py_kernel < json_read per feature, the end-to-end python deficit is
-    # the per-task dispatch floor + Arrow serdes, which amortize with
-    # per-task batch size at scale; where it is not, the python path is
-    # honestly the compatibility tier (see BENCH/BASELINE.md).
     kernel_rows = {
-        "py_kernel_ns_per_feature": {
-            "lines": _nsf(li["py_kernel_sec"], li["py_kernel_n"]),
-            "polys": _nsf(po["py_kernel_sec"], po["py_kernel_n"]),
-        },
         "json_read_ns_per_feature": {
             "points": _nsf(c["json_read"], c["n_rows"]),
             "lines": _nsf(li["json_read"], li["n_rows"]),
             "polys": _nsf(po["json_read"], po["n_rows"]),
         },
-        **({"jvm_read_ns_per_feature": {
+        "jvm_read_ns_per_feature": {
             "points": _nsf(c["geobuf_read"], c["n_rows"]),
-            "lines": _nsf(li["geobuf_read_jvm"], li["n_rows"]),
-            "polys": _nsf(po["geobuf_read_jvm"], po["n_rows"]),
-        }} if "geobuf_read_jvm" in li else {}),
+            "lines": _nsf(li["geobuf_read"], li["n_rows"]),
+            "polys": _nsf(po["geobuf_read"], po["n_rows"]),
+        },
     }
     print(json.dumps({
         "lines_read_speedup_vs_json": round(li["json_read"] / li["geobuf_read"], 2),
-        **({"lines_read_jvm_speedup_vs_json":
-            round(li["json_read"] / li["geobuf_read_jvm"], 2),
-            "lines_scan_jvm_speedup_vs_json":
-            round(li["json_scan"] / li["geobuf_scan_jvm"], 2),
-            "lines_write_jvm_speedup_vs_json":
-            round(li["json_write"] / li["geobuf_write_jvm"], 2)}
-           if "geobuf_read_jvm" in li else {}),
+        "lines_scan_speedup_vs_json": round(li["json_scan"] / li["geobuf_scan"], 2),
         "lines_write_speedup_vs_json": round(li["json_write"] / li["geobuf_write"], 2),
         "lines_size_ratio_vs_json": round(li["geobuf_bytes"] / li["json_bytes"], 3),
-        "lines_sec": {k: round(v, 3) for k, v in li.items() if k.endswith(("read", "write", "read_full", "scan", "jvm"))},
+        "lines_sec": {k: round(v, 3) for k, v in li.items() if k.endswith(("read", "write", "read_full", "scan"))},
         "polys_read_speedup_vs_json": round(po["json_read"] / po["geobuf_read"], 2),
-        **({"polys_read_jvm_speedup_vs_json":
-            round(po["json_read"] / po["geobuf_read_jvm"], 2),
-            "polys_write_jvm_speedup_vs_json":
-            round(po["json_write"] / po["geobuf_write_jvm"], 2)}
-           if "geobuf_read_jvm" in po else {}),
         "polys_write_speedup_vs_json": round(po["json_write"] / po["geobuf_write"], 2),
         "polys_size_ratio_vs_json": round(po["geobuf_bytes"] / po["json_bytes"], 3),
-        "polys_sec": {k: round(v, 3) for k, v in po.items() if k.endswith(("read", "write", "jvm"))},
-        **({"many_files_read_jvm_speedup_vs_json":
-            round(mf["json_read"] / mf["geobuf_read_jvm"], 2),
-            "many_files_read_py_speedup_vs_json":
-            round(mf["json_read"] / mf["geobuf_read_py"], 2),
+        "polys_sec": {k: round(v, 3) for k, v in po.items() if k.endswith(("read", "write"))},
+        **({"many_files_read_speedup_vs_json":
+            round(mf["json_read"] / mf["geobuf_read"], 2),
             "many_files_n_files": mf["n_files"],
             "many_files_n_rows": mf["n_rows"],
             "many_files_sec": {k: round(v, 3) for k, v in mf.items()
-                               if k.endswith(("jvm", "py", "json_read"))}}
+                               if k.endswith("read")}}
            if mf else {}),
         **kernel_rows,
         "metric": "geobuf encode+PIP-join+tile-assign features/sec (flagship); per-query sec",

@@ -129,20 +129,27 @@ def varint_lengths(v: np.ndarray) -> np.ndarray:
     return n
 
 
+def varint_matrix(v: np.ndarray):
+    """Vectorized varint encode: values → ((N, maxlen) uint8 byte matrix
+    with continuation bits set, per-value byte lengths). Row i's varint is
+    mat[i, :lens[i]]."""
+    v = v.astype(np.uint64, copy=False)
+    lens = varint_lengths(v)
+    maxlen = int(lens.max()) if len(v) else 1
+    j = np.arange(maxlen, dtype=np.uint64)
+    groups = (v[:, None] >> (j[None, :] * _U7)) & _U0x7F
+    cont = np.where(np.arange(maxlen)[None, :] < (lens - 1)[:, None], 0x80, 0)
+    return (groups | cont.astype(np.uint64)).astype(np.uint8), lens
+
+
 def pack_varints(v: np.ndarray) -> bytes:
     """Packed varint bytes of a uint64 vector (WritePackedUint64 semantics,
     write_primitives.go:71-198, sans the length prefix)."""
     v = np.ascontiguousarray(v, dtype=np.uint64)
     if v.size == 0:
         return b""
-    lens = varint_lengths(v)
-    maxlen = int(lens.max())
-    # (N, maxlen) matrix of 7-bit groups with continuation bits
-    j = np.arange(maxlen, dtype=np.uint64)
-    groups = (v[:, None] >> (j[None, :] * _U7)) & _U0x7F
-    cont = np.where(np.arange(maxlen)[None, :] < (lens - 1)[:, None], 0x80, 0)
-    mat = (groups | cont.astype(np.uint64)).astype(np.uint8)
-    mask = np.arange(maxlen)[None, :] < lens[:, None]
+    mat, lens = varint_matrix(v)
+    mask = np.arange(mat.shape[1])[None, :] < lens[:, None]
     return mat[mask].tobytes()  # row-major → sequential per-value bytes
 
 

@@ -8,19 +8,18 @@ import org.apache.spark.sql.api.java.UDF3;
 import scala.collection.Seq;
 
 /**
- * JVM-side geobuf frame codec. For points and for the full decode of a
- * frame to a GEOM_SCHEMA row (gb_decode: every geometry type, properties
- * as JSON) it is the only Spark engine: spark_codec.encode_points/
- * decode_points/roundtrip_points/decode_features_fast run these UDFs and
- * codec/core.py is the parity oracle. For line and polygon encode and
- * decode it is the per-row twin of the Python Arrow kernels in
- * codec/spark_codec.py (_tokenize_geometry + line/ring cores).
+ * JVM-side geobuf frame codec, the only geometry codec in Spark: the
+ * point, line and polygon encoders and decoders of codec/spark_codec.py
+ * (encode_/decode_points, encode_/decode_lines, decode_lines_agg,
+ * encode_/decode_polygons) and its full decode of a frame to a
+ * GEOM_SCHEMA row (gb_decode: every geometry type, properties as JSON)
+ * run these UDFs, and codec/core.py is the parity oracle.
  *
- * Why this exists: the Arrow kernels are vectorized but pay a ~0.25 s/task
- * Python dispatch floor plus two Arrow serdes; a JVM UDF runs inside the
- * scan stage with zero Python, the same execution shape Catalyst gives
- * from_json. Compiled with the JDK javac against the pyspark-shipped jars
- * (tools/build_jvm.py) — no sbt needed.
+ * Why the JVM: a Python Arrow kernel pays a per-task Python dispatch floor
+ * plus two Arrow serdes; a JVM UDF runs inside the scan stage with zero
+ * Python, the same execution shape Catalyst gives from_json. Compiled with
+ * the JDK javac against the pyspark-shipped jars (tools/build_jvm.py) —
+ * no sbt needed.
  *
  * Wire layout (write_feature.go:192-263 semantics, byte-identical to the
  * Python encoder): single-byte protobuf tags, 0x08 varint id (last wins),
@@ -29,10 +28,11 @@ import scala.collection.Seq;
  * type (wire 2 = length-delimited jump, all others read as varint — the
  * exact rule frame_fields_walk applies).
  *
- * Error semantics mirror the Python kernels one-for-one so a corrupt frame
- * fails the task identically on either path: >63 fields, geometry payload
- * overrunning the frame, payload ending mid-varint, missing geometry/code,
- * non-point payload in Point, token count not divisible by dim in lines.
+ * The field walk accepts and rejects exactly the frames the numpy
+ * spark_codec.frame_fields_walk does. A corrupt frame fails the task:
+ * >63 fields, a field payload or the geometry payload overrunning the
+ * frame, a payload ending mid-varint, a missing geometry/code, a
+ * non-point payload in Point, a token count not divisible by dim in lines.
  * gb_decode also rejects what core.decode_feature rejects: an invalid or
  * overrunning ring count, an unknown geometry type, and properties that
  * core.decode_properties cannot parse.
@@ -214,8 +214,8 @@ public final class GbCodec {
 
     /**
      * gb_line_decode(geobuf) -> [id, x0,y0,x1,y1,...] - id followed by the
-     * absolute quantized coords (decode_lines parity; deltas cumsum'd per
-     * dimension).
+     * absolute quantized coords of a LineString or MultiPoint frame at
+     * its own dim (decode_lines; deltas cumsum'd per dimension).
      */
     public static final class LineDecode implements UDF1<byte[], long[]> {
         @Override
@@ -242,14 +242,12 @@ public final class GbCodec {
 
     /**
      * gb_poly_dec(geobuf) -> [id, R, nv_1..nv_R, x0,y0,x1,y1,...] - the
-     * ring-structured decode (decode_rings_kernel parity for one frame,
-     * dim 2): R rings, each ring's vertex count, then the absolute
-     * quantized coords with the delta state RESET at each ring start
-     * (geom.go:103-111,127-157 - the first vertex of every ring is
-     * encoded absolute). Stricter than the Python batch kernel on corrupt
-     * counts: a ring token count that is zero, not divisible by dim, or
-     * overrunning the payload throws instead of bleeding into neighbor
-     * frames' token ranges.
+     * ring-structured decode of one Polygon or MultiLineString frame at its
+     * own dim (decode_polygons): R rings, each ring's vertex count, then the
+     * absolute quantized coords with the delta state RESET at each ring
+     * start (geom.go:103-111,127-157 - the first vertex of every ring is
+     * encoded absolute). A ring token count that is zero, not divisible by
+     * dim, or overrunning the payload throws.
      */
     public static final class PolyDecode implements UDF1<byte[], long[]> {
         @Override
@@ -294,7 +292,7 @@ public final class GbCodec {
 
     /**
      * gb_poly_enc(id, coords, ring_nv) -> geobuf Polygon frame (dim 2,
-     * code 3), byte-identical to encode_rings_kernel: per ring a varint
+     * code 3), byte-identical to core.encode_feature: per ring a varint
      * nv*2 then that ring's zigzag deltas with the delta state reset at
      * the ring start (geom.go:255-273), bbox min/max over ALL the
      * feature's QUANTIZED vertices (bb.go:10-37). coords is the flat
@@ -405,7 +403,7 @@ public final class GbCodec {
 
     /**
      * gb_line_enc(id, coords) -> geobuf LineString frame (dim 2, code 2),
-     * byte-identical to encode_lines_kernel: per-vertex deltas zigzag
+     * byte-identical to core.encode_feature: per-vertex deltas zigzag
      * varint packed (geom.go:204-246), bbox min/max over the QUANTIZED
      * lattice (bb.go:10-37). coords is the flat interleaved x,y array.
      */

@@ -1,4 +1,4 @@
-"""JVM-side geobuf codec — registration and DataFrame wrappers.
+"""JVM-side geobuf codec — registration and the many-files read plan.
 
 Loads the compiled codec (jvm/GbCodec.java, committed as jvm/gb-codec.jar
 and rebuilt by tools/build_jvm.py only when the source hash it records no
@@ -6,16 +6,15 @@ longer matches) and exposes it as Spark SQL functions that run inside the
 scan stage like from_json: zero Python in the plan, so the per-task Python
 dispatch and both Arrow serdes disappear.
 
-The point codec is JVM-only: spark_codec.encode_points, decode_points,
-decode_points_agg and roundtrip_points are plans over gb_point_enc and
-gb_point, pinned byte for byte against codec/core.py. The geobuf read path
-is JVM-only too: sources.geobuf_file.read_geobuf splits frames with
-gb_frames, spark_codec.frame_bbox reads bboxes with gb_bbox, and
-spark_codec.decode_features_fast decodes frames of any geometry type to
-GEOM_SCHEMA rows with gb_decode (properties included). All of them raise
-(naming the jar) when it cannot be registered. The line and polygon
-shapes below are the JVM twins of the Arrow line and ring kernels that
-spark_codec.py keeps.
+This is the only geometry codec in Spark: the point, line and polygon
+encoders and decoders of spark_codec (encode_/decode_points,
+encode_/decode_lines, decode_lines_agg, encode_/decode_polygons) and its
+full decode to GEOM_SCHEMA rows (decode_features_fast) are plans over the
+UDFs registered here, pinned byte for byte against codec/core.py. The
+geobuf read path is JVM-only too: sources.geobuf_file.read_geobuf splits
+frames with gb_frames and spark_codec.frame_bbox reads bboxes with gb_bbox.
+All of them raise (naming the jar) when it cannot be registered. This
+module keeps the registration and the many-files read plan.
 """
 
 from __future__ import annotations
@@ -96,59 +95,6 @@ def require(spark: SparkSession) -> None:
             f"the JVM geobuf codec ({JAR}) could not be registered: {e}") from e
 
 
-def decode_lines_agg_jvm(df: DataFrame, bin_col: str = "geobuf") -> DataFrame:
-    """Fused decode→reduce for line frames (JVM plan). Output schema
-    identical to spark_codec.decode_lines_agg (n, sum_size, sum_first_x)."""
-    s = F.expr(f"gb_line_stats({bin_col})")
-    return df.select(s.alias("s")).agg(
-        F.count("*").alias("n"),
-        F.sum(F.element_at("s", 2)).alias("sum_size"),
-        F.sum(F.element_at("s", 3)).alias("sum_first_x"),
-    )
-
-
-def decode_lines_jvm(df: DataFrame, bin_col: str = "geobuf",
-                     id_col: str = "line_id") -> DataFrame:
-    """Materializing line decode → (id, coords_q), JVM plan
-    (decode_lines parity; coords_q is the absolute quantized flat array)."""
-    a = F.expr(f"gb_line_decode({bin_col})")
-    return df.select(a.alias("a")).select(
-        F.element_at("a", 1).alias(id_col),
-        F.slice("a", 2, F.greatest(F.size("a") - 1, F.lit(0))).alias("coords_q"),
-    )
-
-
-def decode_polygons_jvm(df: DataFrame, bin_col: str = "geobuf",
-                        id_col: str = "poly_id") -> DataFrame:
-    """Materializing ring-structured decode → (id, ring_nv, coords_q), JVM
-    plan (decode_rings_kernel parity, dim 2): ring_nv is the per-ring
-    vertex counts, coords_q the absolute quantized flat array with the
-    delta state reset at each ring."""
-    a = F.expr(f"gb_poly_dec({bin_col})")
-    nr = F.element_at("a", 2).cast("int")
-    return df.select(a.alias("a")).select(
-        F.element_at("a", 1).alias(id_col),
-        F.slice(
-            "a", nr + 3,
-            F.greatest(F.size("a") - nr - 2, F.lit(0)),
-        ).alias("coords_q"),
-        F.slice("a", 3, nr).cast("array<int>").alias("ring_lens"),
-    )
-
-
-def decode_polygons_agg_jvm(df: DataFrame, bin_col: str = "geobuf") -> DataFrame:
-    """Fused decode→reduce for ring frames (JVM plan): per-frame the decode
-    emits [id, R, nv…, coords…]; the aggregate folds counts in the same
-    whole-stage pipeline — the polygon twin of decode_lines_agg_jvm."""
-    a = F.expr(f"gb_poly_dec({bin_col})")
-    return df.select(a.alias("a")).agg(
-        F.count("*").alias("n"),
-        F.sum(F.element_at("a", 1)).alias("sum_id"),
-        F.sum(F.element_at("a", 2)).alias("sum_rings"),
-        F.sum(F.size("a") - F.element_at("a", 2) - 2).alias("sum_coord_tokens"),
-    )
-
-
 def read_geobuf_files_jvm(spark: SparkSession, path: str,
                           bin_col: str = "geobuf") -> DataFrame:
     """Many framed .geobuf files → one DataFrame of raw frames, zero
@@ -165,22 +111,3 @@ def read_geobuf_files_jvm(spark: SparkSession, path: str,
         F.col("path"),
         F.explode(F.expr("gb_frames(content, false)")).alias(bin_col)))
 
-
-def encode_lines_jvm(df: DataFrame, id_col: str = "line_id",
-                     coords: str = "coords", out: str = "geobuf") -> DataFrame:
-    """(id, coords flat array<double>) → (id, geobuf), JVM plan
-    (spark_codec.encode_lines parity, dim 2)."""
-    return df.select(
-        F.col(id_col),
-        F.expr(f"gb_line_enc({id_col}, {coords})").alias(out))
-
-
-def encode_polygons_jvm(df: DataFrame, id_col: str = "poly_id",
-                        coords: str = "coords", ring_lens: str = "ring_lens",
-                        out: str = "geobuf") -> DataFrame:
-    """(id, coords flat array<double>, ring_lens array<int>) → (id, geobuf),
-    JVM plan — byte-identical Polygon frames to spark_codec.encode_polygons
-    (geom_type 3, dim 2)."""
-    return df.select(
-        F.col(id_col),
-        F.expr(f"gb_poly_enc({id_col}, {coords}, {ring_lens})").alias(out))

@@ -10,9 +10,10 @@ geobuf codec (no protobuf library):
                ClosePath=7; params zigzag deltas, cursor persists across
                rings within a feature.
 
-Geometry command streams are built vectorized per batch (the same
-token-scatter pattern as the geobuf kernels); per-tile Tile/Layer framing
-happens in the per-tile groupBy — one message per tile, small by design.
+Geometry command streams are built vectorized per batch (varint byte
+matrices from core.varint_matrix, scattered per feature); per-tile
+Tile/Layer framing happens in the per-tile groupBy — one message per
+tile, small by design.
 """
 
 from __future__ import annotations
@@ -24,7 +25,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from geobuf_spark.codec import core
-from geobuf_spark.codec.spark_codec import _varint_matrix
 
 MOVETO, LINETO, CLOSEPATH = 1, 2, 7
 GEOM_POLYGON = 3
@@ -87,7 +87,7 @@ def point_commands_kernel(grid_coords: np.ndarray, part_nv: np.ndarray,
     filled[tok_off] = True
     tokens[~filled] = zz
 
-    mg, lg = _varint_matrix(tokens)
+    mg, lg = core.varint_matrix(tokens)
     glen = (np.add.reduceat(lg, tok_off) if n_feat
             else np.zeros(0, np.int64))
     offsets = np.zeros(n_feat + 1, dtype=np.int64)
@@ -180,12 +180,13 @@ def _commands_kernel(grid_coords: np.ndarray, ring_nv: np.ndarray,
     feat_tok_start = ring_tok_off[feat_ring_start]
     feat_tok = np.add.reduceat(ring_tok, feat_ring_start) if R else np.zeros(n_feat, np.int64)
 
-    mg, lg = _varint_matrix(tokens)
+    mg, lg = core.varint_matrix(tokens)
     glen = np.add.reduceat(lg, feat_tok_start) if R else np.zeros(n_feat, np.int64)
     offsets = np.zeros(n_feat + 1, dtype=np.int64)
     np.cumsum(glen, out=offsets[1:])
     buf = np.empty(int(offsets[-1]), dtype=np.uint8)
-    # scatter varint bytes (segmented, like the geobuf kernels)
+    # scatter varint bytes: each token lands at its feature's offset
+    # plus its byte offset within the feature
     tok_off = np.zeros(total + 1, dtype=np.int64)
     np.cumsum(lg, out=tok_off[1:])
     feat_of_tok = np.repeat(np.arange(n_feat), feat_tok)
@@ -252,10 +253,10 @@ def mvt_tiles_frames_kernel(fids: np.ndarray, cmds: pa.Array,
 
     gt_b = core.encode_varint(gtype)
     assert len(gt_b) == 1  # MVT geometry types are 1..3
-    m_f, l_f = _varint_matrix(fids.astype(np.uint64))
-    m_c, l_c = _varint_matrix(clen.astype(np.uint64))
+    m_f, l_f = core.varint_matrix(fids.astype(np.uint64))
+    m_c, l_c = core.varint_matrix(clen.astype(np.uint64))
     inner_len = 3 + l_f + 1 + l_c + clen          # 0x08 fid 0x18 gt 0x22 len cmds
-    m_i, l_i = _varint_matrix(inner_len.astype(np.uint64))
+    m_i, l_i = core.varint_matrix(inner_len.astype(np.uint64))
     frame_len = 1 + l_i + inner_len               # 0x12 vi(inner) inner
 
     head = bytes([(15 << 3) | 0]) + core.encode_varint(2) \
@@ -269,7 +270,7 @@ def mvt_tiles_frames_kernel(fids: np.ndarray, cmds: pa.Array,
     tile_start[1:] = np.cumsum(feat_per_tile)[:-1]
     frames_per_tile = np.add.reduceat(frame_len, tile_start)
     layer_len = H + TL + frames_per_tile
-    m_L, l_L = _varint_matrix(layer_len.astype(np.uint64))
+    m_L, l_L = core.varint_matrix(layer_len.astype(np.uint64))
     tile_len = 1 + l_L + layer_len
     tile_off = np.zeros(n_tile + 1, dtype=np.int64)
     np.cumsum(tile_len, out=tile_off[1:])

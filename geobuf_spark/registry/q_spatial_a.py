@@ -429,8 +429,9 @@ def q_geobuf_roundtrip(spark, sf):
         .select(F.col("id").alias("doc_id"), "lon_q", "lat_q")
 
 def q_polygon_roundtrip(spark, sf):
-    # ring-structured codec through the vectorized Polygon kernel: rect →
-    # 5-vertex ring → encode → decode; corners exact on the 1e-7 lattice
+    # ring-structured codec through the JVM Polygon codec (gb_poly_enc →
+    # gb_poly_dec): rect → 5-vertex ring → encode → decode; corners exact
+    # on the 1e-7 lattice
     r = _rects(spark, sf)
     ring = F.array(
         "minx", "miny", "maxx", "miny", "maxx", "maxy", "minx", "maxy", "minx", "miny",

@@ -202,21 +202,22 @@ def test_geometry_collection_bbox():
                  min_size=2, max_size=20),
         min_size=1, max_size=10),
 )
-def test_fuzz_lines_batch_kernel_roundtrip(lines):
-    """Hypothesis: arbitrary float polylines round-trip the vectorized
-    LineString batch kernel exactly on the quantized lattice."""
-    import numpy as np
-
+def test_fuzz_lines_batch_kernel_roundtrip(spark, lines):
+    """Hypothesis: arbitrary float polylines round-trip encode_lines →
+    decode_lines exactly on the quantized lattice, in frames
+    byte-identical to core.encode_feature's."""
     from geobuf_spark.codec import spark_codec as sc
 
-    nv = np.array([len(l) for l in lines], dtype=np.int64)
-    coords = np.array([c for l in lines for pt in l for c in pt], dtype=np.float64)
-    ids = np.arange(len(lines), dtype=np.int64)
-    arr = sc.encode_lines_kernel(ids, coords, nv)
-    dids, dcoords, dnv = sc.decode_lines_kernel(arr)
-    assert np.array_equal(dids, ids)
-    assert np.array_equal(dnv, nv)
-    assert np.array_equal(dcoords, core.quantize_vec(coords))
+    df = spark.createDataFrame(
+        [(i, [c for pt in l for c in pt]) for i, l in enumerate(lines)],
+        "line_id long, coords array<double>").coalesce(1)
+    enc = sc.encode_lines(df)
+    assert [bytes(r.geobuf) for r in enc.collect()] == [
+        core.encode_feature(core.Feature.from_geojson("LineString", l, id=i))
+        for i, l in enumerate(lines)]
+    got = [(r.line_id, list(r.coords_q)) for r in sc.decode_lines(enc).collect()]
+    assert got == [(i, core.quantize_vec(np.array(l).reshape(-1)).tolist())
+                   for i, l in enumerate(lines)]
 
 
 @settings(max_examples=30, deadline=None)

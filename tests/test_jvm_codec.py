@@ -1,10 +1,10 @@
-"""JVM codec (codec/jvm/GbCodec.java) — exact parity vs the Arrow kernels
-it twins and vs the reference-semantics codec in core.py. The point codec
-and the full decode (gb_decode) have no Arrow twin: spark_codec's point
-functions and decode_features_fast run them and are pinned against
-core.encode_feature/decode_feature/decode_properties. The jar is committed
-and the geobuf read path depends on it, so a jar that cannot be
-registered fails this suite instead of skipping it.
+"""JVM codec (codec/jvm/GbCodec.java) — exact parity vs the
+reference-semantics codec in core.py. spark_codec's point, line and
+polygon encoders and decoders and its full decode (decode_features_fast)
+run these UDFs and are pinned against core.encode_feature/decode_feature/
+decode_properties on the same inputs. The jar is committed and the geobuf
+read path depends on it, so a jar that cannot be registered fails this
+suite instead of skipping it.
 """
 import json
 import math
@@ -43,6 +43,23 @@ def _core_point_decode(frames) -> list[tuple[int, int, int]]:
     for f in frames:
         feat = core.decode_feature(f, quantized=True)
         out.append((feat.id, int(feat.coords[0]), int(feat.coords[1])))
+    return out
+
+
+def _core_line_frames(ids, verts) -> list[bytes]:
+    """LineString frames from core.encode_feature; verts[i] is feature
+    i's (nv, dim) vertex array, so the dim follows its width."""
+    return [core.encode_feature(core.Feature.from_geojson(
+                "LineString", np.asarray(v).tolist(), id=int(i)))
+            for i, v in zip(ids, verts)]
+
+
+def _core_quantized(frames) -> dict[int, list[int]]:
+    """id → flat quantized coords per frame, from core.decode_feature."""
+    out = {}
+    for f in frames:
+        feat = core.decode_feature(f, quantized=True)
+        out[feat.id] = feat.coords.tolist()
     return out
 
 
@@ -151,18 +168,18 @@ GOLDEN_FEATURES = [
 
 def test_golden_feature_frames(jvm):
     """core.encode_feature writes the spec-derived property, line and
-    polygon frames; gb_line_enc and gb_poly_enc write the line and the
-    polygon; gb_decode and core.decode_feature read all three back to the
-    source features."""
+    polygon frames; encode_lines and encode_polygons write the line and
+    the polygon; gb_decode and core.decode_feature read all three back to
+    the source features."""
     feats = [core.Feature.from_geojson(t, c, id=i, properties=p)
              for (t, c, i, p), _ in GOLDEN_FEATURES]
     frames = [frame for _, frame in GOLDEN_FEATURES]
     assert [core.encode_feature(f) for f in feats] == frames
     line, poly = feats[1], feats[2]
-    enc = jvm_codec.encode_lines_jvm(jvm.createDataFrame(
+    enc = spark_codec.encode_lines(jvm.createDataFrame(
         [(3, line.coords.tolist())], "line_id long, coords array<double>"))
     assert bytes(enc.first().geobuf) == frames[1]
-    enc = jvm_codec.encode_polygons_jvm(jvm.createDataFrame(
+    enc = spark_codec.encode_polygons(jvm.createDataFrame(
         [(4, poly.coords.tolist(), poly.ring_lens.tolist())],
         "poly_id long, coords array<double>, ring_lens array<int>"))
     assert bytes(enc.first().geobuf) == frames[2]
@@ -202,31 +219,26 @@ def test_encoders_reject_non_finite(jvm, bad, shown):
 
 @pytest.mark.parametrize("dim", [2, 3, 5])
 def test_line_decode_parity(jvm, dim):
+    """decode_lines reads dim-d LineString frames written by
+    core.encode_feature to core.decode_feature's quantized coords."""
     rng = np.random.default_rng(20 + dim)
     n, nv = 200, 7
     ids = np.arange(n, dtype=np.int64) * 3 + 1
-    flat = rng.uniform(-170, 170, n * nv * dim)
-    nvs = np.full(n, nv, dtype=np.int64)
-    df = _frames_df(
-        jvm, spark_codec.encode_lines_kernel(ids, flat, nvs, dim=dim))
-    a = {r["line_id"]: list(r["coords_q"])
-         for r in spark_codec.decode_lines(df).collect()}
-    b = {r["line_id"]: list(r["coords_q"])
-         for r in jvm_codec.decode_lines_jvm(df).collect()}
-    assert a == b
+    frames = _core_line_frames(ids, rng.uniform(-170, 170, (n, nv, dim)))
+    got = {r["line_id"]: list(r["coords_q"])
+           for r in spark_codec.decode_lines(_frames_df(jvm, frames)).collect()}
+    assert got == _core_quantized(frames)
 
 
 def test_line_agg_parity(jvm):
+    """decode_lines_agg == (count, Σ size, Σ first x) of core's decode."""
     rng = np.random.default_rng(31)
     n, nv = 2000, 12
     ids = rng.permutation(n).astype(np.int64)
-    flat = rng.uniform(-179, 179, n * nv * 2)
-    nvs = np.full(n, nv, dtype=np.int64)
-    df = _frames_df(
-        jvm, spark_codec.encode_lines_kernel(ids, flat, nvs, dim=2))
-    a = spark_codec.decode_lines_agg(df).collect()[0]
-    j = jvm_codec.decode_lines_agg_jvm(df).collect()[0]
-    assert a == j
+    frames = _core_line_frames(ids, rng.uniform(-179, 179, (n, nv, 2)))
+    got = spark_codec.decode_lines_agg(_frames_df(jvm, frames)).collect()[0]
+    want = _core_quantized(frames).values()
+    assert tuple(got) == (n, sum(map(len, want)), sum(c[0] for c in want))
 
 
 def test_corrupt_frame_raises(jvm):
@@ -255,95 +267,92 @@ def test_point_encode_byte_parity(jvm):
 
 
 def _poly_fixture(rng, n):
-    """Random multi-ring polygons: (rows, ids, flat, ring_nv, rings_per_feat)."""
-    rows, flat, ring_nv, rpf = [], [], [], []
+    """Random multi-ring polygons: (id, flat x,y coords, vertices per ring)."""
+    rows = []
     for i in range(n):
-        r = int(rng.integers(1, 4))
-        nvs = [int(rng.integers(3, 12)) for _ in range(r)]
-        c = rng.uniform(-180, 180, sum(nvs) * 2)
-        rows.append((i * 7 + 1, c.tolist(), nvs))
-        flat.append(c)
-        ring_nv.extend(nvs)
-        rpf.append(r)
-    return (rows, np.array([r[0] for r in rows], dtype=np.int64),
-            np.concatenate(flat), np.array(ring_nv, dtype=np.int64),
-            np.array(rpf, dtype=np.int64))
+        nvs = [int(rng.integers(3, 12)) for _ in range(int(rng.integers(1, 4)))]
+        rows.append((i * 7 + 1, rng.uniform(-180, 180, sum(nvs) * 2).tolist(), nvs))
+    return rows
+
+
+def _core_poly_frames(rows) -> list[bytes]:
+    """Polygon frames from core.encode_feature for _poly_fixture rows."""
+    out = []
+    for i, c, nvs in rows:
+        rings = np.split(np.reshape(c, (-1, 2)), np.cumsum(nvs)[:-1])
+        out.append(core.encode_feature(core.Feature.from_geojson(
+            "Polygon", [r.tolist() for r in rings], id=i)))
+    return out
 
 
 def test_poly_encode_byte_parity(jvm):
-    """gb_poly_enc frames are byte-identical to encode_rings_kernel
-    (Polygon, dim 2), across ring counts 1-3 and negative coords."""
+    """encode_polygons (gb_poly_enc) frames are byte-identical to
+    core.encode_feature's, across ring counts 1-3 and negative coords."""
     import pandas as pd
-    rng = np.random.default_rng(41)
-    rows, ids, flat, ring_nv, rpf = _poly_fixture(rng, 400)
+    rows = _poly_fixture(np.random.default_rng(41), 400)
     df = jvm.createDataFrame(
         pd.DataFrame(rows, columns=["poly_id", "coords", "ring_lens"]))
-    a = spark_codec.encode_polygons(df).orderBy("poly_id").collect()
-    b = jvm_codec.encode_polygons_jvm(df).orderBy("poly_id").collect()
-    assert [bytes(r.geobuf) for r in a] == [bytes(r.geobuf) for r in b]
+    got = {r.poly_id: bytes(r.geobuf)
+           for r in spark_codec.encode_polygons(df).collect()}
+    assert got == dict(zip([r[0] for r in rows], _core_poly_frames(rows)))
 
 
 def test_poly_decode_parity(jvm):
-    """gb_poly_dec matches decode_rings_kernel: same ring_lens, same
-    absolute quantized coords with per-ring delta reset."""
-    rng = np.random.default_rng(42)
-    _, ids, flat, ring_nv, rpf = _poly_fixture(rng, 300)
-    df = _frames_df(
-        jvm, spark_codec.encode_rings_kernel(ids, flat, ring_nv, rpf))
-    a = {r["poly_id"]: (list(r["coords_q"]), list(r["ring_lens"]))
-         for r in spark_codec.decode_polygons(df).collect()}
-    b = {r["poly_id"]: (list(r["coords_q"]), list(r["ring_lens"]))
-         for r in jvm_codec.decode_polygons_jvm(df).collect()}
-    assert a == b
+    """decode_polygons (gb_poly_dec) reads core.encode_feature's Polygon
+    frames as core.decode_feature does: same ring_lens, same absolute
+    quantized coords with the delta state reset at each ring."""
+    frames = _core_poly_frames(_poly_fixture(np.random.default_rng(42), 300))
+    got = {r["poly_id"]: (list(r["coords_q"]), list(r["ring_lens"]))
+           for r in spark_codec.decode_polygons(_frames_df(jvm, frames)).collect()}
+    want = {}
+    for f in frames:
+        feat = core.decode_feature(f, quantized=True)
+        want[feat.id] = (feat.coords.tolist(), feat.ring_lens.tolist())
+    assert got == want
 
 
 def test_poly_agg_and_corrupt(jvm):
-    rng = np.random.default_rng(43)
-    _, ids, flat, ring_nv, rpf = _poly_fixture(rng, 500)
-    frames = spark_codec.encode_rings_kernel(ids, flat, ring_nv, rpf)
-    df = _frames_df(jvm, frames)
-    row = jvm_codec.decode_polygons_agg_jvm(df).collect()[0]
+    from pyspark.sql import functions as F
+
+    rows = _poly_fixture(np.random.default_rng(43), 500)
+    df = _frames_df(jvm, _core_poly_frames(rows))
+    row = spark_codec.decode_polygons(df).agg(
+        F.count("*").alias("n"), F.sum("poly_id").alias("sum_id"),
+        F.sum(F.size("ring_lens")).alias("sum_rings"),
+        F.sum(F.size("coords_q")).alias("sum_coord_tokens")).collect()[0]
     assert row["n"] == 500
-    assert row["sum_id"] == int(ids.sum())
-    assert row["sum_rings"] == int(rpf.sum())
-    assert row["sum_coord_tokens"] == int(ring_nv.sum()) * 2
+    assert row["sum_id"] == sum(r[0] for r in rows)
+    assert row["sum_rings"] == sum(len(r[2]) for r in rows)
+    assert row["sum_coord_tokens"] == sum(len(r[1]) for r in rows)
     # a ring count token overrunning the payload must fail the task. Use
     # lattice-small coords (quantized deltas are single-byte varints, so
     # glen < 128 and every byte offset is fixed): frame = 0x08 id | 0x18 3
     # | 0x22 glen | count deltas... — corrupt the count token at gi+2.
-    tiny = spark_codec.encode_rings_kernel(
-        np.array([5], dtype=np.int64),
-        np.array([1e-7, 2e-7, 3e-7, 1e-7, 2e-7, 4e-7]),
-        np.array([3], dtype=np.int64), np.array([1], dtype=np.int64))
-    buf = bytearray(bytes(tiny[0].as_py()))
+    buf = bytearray(_core_poly_frames([(5, [1e-7, 2e-7, 3e-7, 1e-7, 2e-7, 4e-7], [3])])[0])
     gi = buf.index(0x22)
     assert buf[gi + 1] < 0x80 and buf[gi + 2] == 6  # glen 1 byte; count 3*2
     buf[gi + 2] = 0x7E  # claims 126 tokens; payload has 6
     dfc = _frames_df(jvm, pa.array([bytes(buf)], type=pa.binary()))
-    with pytest.raises(Exception):
-        jvm_codec.decode_polygons_jvm(dfc).collect()
+    with pytest.raises(Exception, match="truncated or corrupt"):
+        spark_codec.decode_polygons(dfc).collect()
 
 
 def test_line_encode_byte_parity_and_roundtrip(jvm):
-    """gb_line_enc frames are byte-identical to encode_lines_kernel, and
-    the JVM decode of the JVM encode recovers the quantized vertices."""
+    """encode_lines (gb_line_enc) frames are byte-identical to
+    core.encode_feature's, and decode_lines of them recovers the quantized
+    vertices."""
     import pandas as pd
     rng = np.random.default_rng(22)
-    n = 500
-    rows = []
-    for i in range(n):
-        nv = int(rng.integers(2, 60))
-        c = rng.uniform(-180, 180, nv * 2)
-        rows.append((i, c.tolist()))
-    df = jvm.createDataFrame(pd.DataFrame(rows, columns=["line_id", "coords"]))
-    a = spark_codec.encode_lines(df).orderBy("line_id").collect()
-    b = jvm_codec.encode_lines_jvm(df).orderBy("line_id").collect()
-    assert [bytes(r.geobuf) for r in a] == [bytes(r.geobuf) for r in b]
-    enc = jvm_codec.encode_lines_jvm(df)
+    verts = [rng.uniform(-180, 180, (int(rng.integers(2, 60)), 2)) for _ in range(500)]
+    df = jvm.createDataFrame(pd.DataFrame(
+        {"line_id": range(500), "coords": [v.reshape(-1).tolist() for v in verts]}))
+    enc = spark_codec.encode_lines(df)
+    got = {r.line_id: bytes(r.geobuf) for r in enc.collect()}
+    assert got == dict(enumerate(_core_line_frames(range(500), verts)))
     dec = {r.line_id: list(r.coords_q)
-           for r in jvm_codec.decode_lines_jvm(enc).collect()}
-    for i, c in rows:
-        assert dec[i] == core.quantize_vec(np.array(c)).tolist()
+           for r in spark_codec.decode_lines(enc).collect()}
+    assert dec == {i: core.quantize_vec(v.reshape(-1)).tolist()
+                   for i, v in enumerate(verts)}
 
 
 def test_frames_split_parity(jvm, tmp_path):
@@ -428,9 +437,10 @@ def test_point_enc_tie_lattice_parity(jvm):
 
 
 def test_line_poly_enc_random_parity(jvm):
-    """Random lines and two-ring polygons: python batch kernels vs JVM
-    encoders, byte-for-byte (hypothesis-free fixed seeds — each case is
-    one Spark job, so a handful of seeded draws beats per-example jobs)."""
+    """Random lines and two-ring polygons: gb_line_enc and gb_poly_enc vs
+    core.encode_feature, byte-for-byte (hypothesis-free fixed seeds — each
+    case is one Spark job, so a handful of seeded draws beats per-example
+    jobs)."""
     import pandas as pd
     from pyspark.sql import functions as F
 
@@ -439,14 +449,10 @@ def test_line_poly_enc_random_parity(jvm):
         n = 300
         ids = np.arange(n, dtype=np.int64)
         nv = rng.integers(2, 30, n)
-        flat = []
-        for k in nv:
-            flat.append(np.round(rng.uniform(-180, 180, int(k) * 2), 7))
-        coords = [c.tolist() for c in flat]
-        py = [bytes(f.as_py()) for f in spark_codec.encode_lines_kernel(
-            ids, np.concatenate(flat), nv.astype(np.int64), dim=2)]
+        flat = [np.round(rng.uniform(-180, 180, int(k) * 2), 7) for k in nv]
+        py = _core_line_frames(ids, [c.reshape(-1, 2) for c in flat])
         df = jvm.createDataFrame(pd.DataFrame(
-            {"id": ids, "coords": coords}))
+            {"id": ids, "coords": [c.tolist() for c in flat]}))
         jv = [bytes(r[0]) for r in
               df.select(F.expr("gb_line_enc(id, coords)")).collect()]
         assert py == jv, f"line mismatch seed {seed}"
@@ -454,17 +460,13 @@ def test_line_poly_enc_random_parity(jvm):
         # two-ring polygons over the same draws
         nv2 = rng.integers(2, 8, n)
         flat2 = [np.round(rng.uniform(-85, 85, int(k) * 2), 7) for k in nv2]
-        ring_flat = [np.concatenate([a, b]) for a, b in zip(flat, flat2)]
-        ring_nv = np.stack([nv, nv2], axis=1).astype(np.int64)
-        pyp = [bytes(f.as_py()) for f in spark_codec.encode_rings_kernel(
-            ids, np.concatenate(ring_flat), ring_nv.reshape(-1),
-            np.full(n, 2, dtype=np.int64))]
-        dfp = jvm.createDataFrame(pd.DataFrame({
-            "id": ids, "coords": [c.tolist() for c in ring_flat],
-            "ring_nv": [[int(a), int(b)] for a, b in zip(nv, nv2)]}))
+        rows = [(int(i), np.concatenate([a, b]).tolist(), [int(k), int(k2)])
+                for i, a, b, k, k2 in zip(ids, flat, flat2, nv, nv2)]
+        dfp = jvm.createDataFrame(pd.DataFrame(
+            rows, columns=["id", "coords", "ring_nv"]))
         jvp = [bytes(r[0]) for r in
                dfp.select(F.expr("gb_poly_enc(id, coords, ring_nv)")).collect()]
-        assert pyp == jvp, f"poly mismatch seed {seed}"
+        assert _core_poly_frames(rows) == jvp, f"poly mismatch seed {seed}"
 
 
 def test_committed_jar_matches_source():

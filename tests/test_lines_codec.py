@@ -1,8 +1,9 @@
-"""Vectorized LineString batch codec: byte parity with the per-feature
-reference-semantics encoder, exact round trips, DataFrame wrappers."""
+"""JVM line and ring codec (encode_lines/decode_lines/decode_lines_agg,
+encode_polygons/decode_polygons): byte parity with the per-feature
+reference-semantics encoder in core.py, exact round trips, and decode of
+core-written frames at any dim, with properties or without a bbox."""
 
 import numpy as np
-import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -20,23 +21,52 @@ def batch():
     return ids, coords, nv
 
 
-def test_lines_kernel_byte_parity(batch):
-    ids, coords, nv = batch
-    arr = sc.encode_lines_kernel(ids, coords, nv)
-    starts = np.concatenate(([0], np.cumsum(nv)[:-1]))
-    for i in range(len(ids)):
-        span = coords[2 * starts[i] : 2 * (starts[i] + nv[i])]
-        cf = core.Feature.from_geojson("LineString", span.reshape(-1, 2).tolist(), id=int(ids[i]))
-        assert core.encode_feature(cf) == arr[i].as_py(), i
+def _split(coords, nv, dim=2) -> list[np.ndarray]:
+    """Flat batch coords → one (nv_i, dim) vertex array per feature."""
+    return np.split(np.reshape(coords, (-1, dim)), np.cumsum(nv)[:-1])
 
 
-def test_lines_kernel_roundtrip(batch):
+def _core_frames(geom: str, ids, parts) -> list[bytes]:
+    """core.encode_feature frames of geometry type `geom`, one per id;
+    parts[i] is a vertex array, or a list of rings for ring types."""
+    return [core.encode_feature(core.Feature.from_geojson(
+                geom, p.tolist() if isinstance(p, np.ndarray) else p, id=int(i)))
+            for i, p in zip(ids, parts)]
+
+
+def _frames_df(spark, frames):
+    return spark.createDataFrame([(bytearray(f),) for f in frames], "geobuf binary")
+
+
+def _lines_df(spark, ids, verts):
+    return spark.createDataFrame(
+        [(int(i), v.reshape(-1).tolist()) for i, v in zip(ids, verts)],
+        "line_id long, coords array<double>")
+
+
+def _with_code(frame: bytes, code: int) -> bytes:
+    """frame with its geometry code byte (0x18 right after the id) set."""
+    _, p = core.decode_varint(frame, 1)
+    assert frame[p] == 0x18
+    return frame[:p + 1] + bytes([code]) + frame[p + 2:]
+
+
+def test_lines_kernel_byte_parity(spark, batch):
+    """encode_lines frames are byte-identical to core.encode_feature's."""
     ids, coords, nv = batch
-    arr = sc.encode_lines_kernel(ids, coords, nv)
-    dids, dcoords, dnv = sc.decode_lines_kernel(arr)
-    assert np.array_equal(dids, ids)
-    assert np.array_equal(dnv, nv)
-    assert np.array_equal(dcoords, core.quantize_vec(coords))
+    got = {r.line_id: bytes(r.geobuf)
+           for r in sc.encode_lines(_lines_df(spark, ids, _split(coords, nv))).collect()}
+    assert got == dict(zip(ids.tolist(), _core_frames(
+        "LineString", ids, _split(coords, nv))))
+
+
+def test_lines_kernel_roundtrip(spark, batch):
+    ids, coords, nv = batch
+    dec = sc.decode_lines(sc.encode_lines(_lines_df(spark, ids, _split(coords, nv))))
+    got = {r.line_id: list(r.coords_q) for r in dec.collect()}
+    q = core.quantize_vec(coords)
+    assert got == {int(i): v.reshape(-1).tolist()
+                   for i, v in zip(ids, _split(q, nv))}
 
 
 def test_lines_dataframe_roundtrip(spark):
@@ -63,93 +93,114 @@ def batch3d():
     return ids, coords, nv
 
 
-def test_lines_kernel_dim3_byte_parity(batch3d):
-    # geom code embeds dim per makegeomcode (geom.go:59-76): 2<<4|3 = 0x23
+def test_lines_kernel_dim3_roundtrip(spark, batch3d):
+    """dim-3 LineString frames from core.encode_feature (geom code 2<<4|3
+    = 0x23, makegeomcode geom.go:59-76) decode to the quantized source."""
     ids, coords, nv = batch3d
-    arr = sc.encode_lines_kernel(ids, coords, nv, dim=3)
-    starts = np.concatenate(([0], np.cumsum(nv)[:-1]))
-    for i in range(0, len(ids), 7):
-        span = coords[3 * starts[i] : 3 * (starts[i] + nv[i])]
-        cf = core.Feature.from_geojson("LineString", span.reshape(-1, 3).tolist(), id=int(ids[i]))
-        assert cf.dim == 3
-        assert core.encode_feature(cf) == arr[i].as_py(), i
-
-
-def test_lines_kernel_dim3_roundtrip(batch3d):
-    ids, coords, nv = batch3d
-    arr = sc.encode_lines_kernel(ids, coords, nv, dim=3)
-    dids, dcoords, dnv = sc.decode_lines_kernel(arr)
-    assert np.array_equal(dids, ids)
-    assert np.array_equal(dnv, nv)
-    assert np.array_equal(dcoords, core.quantize_vec(coords))
-    # and the per-feature reference-semantics decoder agrees on dim
-    f0 = core.decode_feature(arr[0].as_py(), quantized=True)
-    assert f0.dim == 3 and f0.geom_type == 2
+    frames = _core_frames("LineString", ids, _split(coords, nv, 3))
+    assert {core.decode_feature(f).dim for f in frames} == {3}
+    assert {_with_code(f, 0x23) == f for f in frames} == {True}
+    got = {r.line_id: list(r.coords_q)
+           for r in sc.decode_lines(_frames_df(spark, frames)).collect()}
+    q = core.quantize_vec(coords)
+    assert got == {int(i): v.reshape(-1).tolist()
+                   for i, v in zip(ids, _split(q, nv, 3))}
 
 
 def test_lines_dataframe_dim3_roundtrip(spark):
+    """One partition mixing dim-2 and dim-3 LineStrings: decode_lines reads
+    each frame at its own dim."""
     rng = np.random.default_rng(3)
-    rows = []
+    frames, want = [], {}
     for i in range(200):
-        nv = int(rng.integers(2, 20))
-        c = (rng.integers(-1_000_000_000, 1_000_000_000, nv * 3) / 1e7).tolist()
-        rows.append((i, c))
-    df = spark.createDataFrame(rows, "line_id bigint, coords array<double>")
-    dec = sc.decode_lines(sc.encode_lines(df, dim=3))
-    got = {r.line_id: list(r.coords_q) for r in dec.collect()}
-    want = {i: list(core.quantize_vec(np.asarray(c))) for i, c in rows}
-    assert got == want
+        dim = 2 + i % 2
+        v = rng.integers(-1_000_000_000, 1_000_000_000,
+                         (int(rng.integers(2, 20)), dim)) / 1e7
+        frames += _core_frames("LineString", [i], [v])
+        want[i] = core.quantize_vec(v.reshape(-1)).tolist()
+    dec = sc.decode_lines(_frames_df(spark, frames).coalesce(1))
+    assert {r.line_id: list(r.coords_q) for r in dec.collect()} == want
+
+
+@pytest.mark.parametrize("dim", [2, 3, 5])
+def test_decode_lines_agg_any_dim(spark, dim):
+    """decode_lines_agg equals decode_lines + (count, Σ size(coords_q),
+    Σ coords_q[1]) on frames of any dim."""
+    rng = np.random.default_rng(50 + dim)
+    verts = [rng.uniform(-170, 170, (int(rng.integers(2, 9)), dim)) for _ in range(40)]
+    df = _frames_df(spark, _core_frames("LineString", range(40), verts))
+    fused = sc.decode_lines_agg(df).collect()[0]
+    full = sc.decode_lines(df).agg(
+        F.count("*"), F.sum(F.size("coords_q")),
+        F.sum(F.element_at("coords_q", 1))).collect()[0]
+    assert list(fused) == list(full)
+    assert fused.sum_size == dim * sum(len(v) for v in verts)
 
 
 # ---------------------------------------------------------------------------
-# ring-structured kernels (Polygon / MultiLineString)
+# ring-structured geometries (Polygon / MultiLineString)
 # ---------------------------------------------------------------------------
 
-def _ring_batch(seed, n=200, max_rings=4, dim=2):
+def _ring_rows(seed, n=200, max_rings=4, dim=2):
+    """(id, flat coords, vertices per ring) rows of random ring features."""
     rng = np.random.default_rng(seed)
-    rings_per_feat = rng.integers(1, max_rings + 1, n).astype(np.int64)
-    ring_nv = rng.integers(3, 30, int(rings_per_feat.sum())).astype(np.int64)
-    coords = rng.integers(-1_700_000_000, 1_700_000_000, int(ring_nv.sum()) * dim) / 1e7
-    ids = rng.integers(0, 2**40, n)
-    return ids, coords, ring_nv, rings_per_feat
+    rows = []
+    for i in rng.integers(0, 2**40, n):
+        nvs = rng.integers(3, 30, int(rng.integers(1, max_rings + 1))).tolist()
+        c = rng.integers(-1_700_000_000, 1_700_000_000, sum(nvs) * dim) / 1e7
+        rows.append((int(i), c.tolist(), nvs))
+    return rows
+
+
+def _ring_frames(rows, geom="Polygon", dim=2) -> list[bytes]:
+    return _core_frames(geom, [r[0] for r in rows],
+                        [[v.tolist() for v in _split(c, nvs, dim)]
+                         for _, c, nvs in rows])
+
+
+def _polys_df(spark, rows):
+    return spark.createDataFrame(
+        rows, "poly_id long, coords array<double>, ring_lens array<int>")
+
+
+def _decoded_rings(spark, frames) -> dict:
+    return {r.poly_id: (list(r.coords_q), list(r.ring_lens))
+            for r in sc.decode_polygons(_frames_df(spark, frames)).collect()}
+
+
+def _quantized_rings(rows) -> dict:
+    return {i: (core.quantize_vec(np.asarray(c)).tolist(), nvs) for i, c, nvs in rows}
 
 
 @pytest.mark.parametrize("geom_type,name", [(3, "Polygon"), (5, "MultiLineString")])
-def test_rings_kernel_byte_parity(geom_type, name):
-    ids, coords, ring_nv, rpf = _ring_batch(13)
-    arr = sc.encode_rings_kernel(ids, coords, ring_nv, rpf, geom_type=geom_type)
-    ring_starts = np.concatenate(([0], np.cumsum(ring_nv)[:-1]))
-    feat_ring_start = np.concatenate(([0], np.cumsum(rpf)[:-1]))
-    for i in range(0, len(ids), 11):
-        rings = []
-        for r in range(rpf[i]):
-            g = feat_ring_start[i] + r
-            s = ring_starts[g]
-            rings.append(coords[2 * s : 2 * (s + ring_nv[g])].reshape(-1, 2).tolist())
-        cf = core.Feature.from_geojson(name, rings, id=int(ids[i]))
-        assert core.encode_feature(cf) == arr[i].as_py(), i
+def test_rings_kernel_byte_parity(spark, geom_type, name):
+    """encode_polygons frames are byte-identical to core.encode_feature's
+    Polygons. A MultiLineString shares the Polygon wire shape (geom.go:
+    255-273) and differs only in its geometry code byte; decode_polygons
+    reads it to core's rings."""
+    rows = _ring_rows(13)
+    enc = {r.poly_id: bytes(r.geobuf)
+           for r in sc.encode_polygons(_polys_df(spark, rows)).collect()}
+    frames = _ring_frames(rows, name)
+    assert [_with_code(enc[r[0]], geom_type) for r in rows] == frames
+    assert _decoded_rings(spark, frames) == _quantized_rings(rows)
 
 
-def test_rings_kernel_roundtrip():
-    ids, coords, ring_nv, rpf = _ring_batch(17)
-    arr = sc.encode_rings_kernel(ids, coords, ring_nv, rpf, geom_type=3)
-    dids, dcoords, dnv, drpf, gt, dim = sc.decode_rings_kernel(arr)
-    assert gt == 3 and dim == 2
-    assert np.array_equal(dids, ids)
-    assert np.array_equal(drpf, rpf)
-    assert np.array_equal(dnv, ring_nv)
-    assert np.array_equal(dcoords, core.quantize_vec(coords))
+def test_rings_kernel_roundtrip(spark):
+    rows = _ring_rows(17)
+    dec = sc.decode_polygons(sc.encode_polygons(_polys_df(spark, rows)))
+    got = {r.poly_id: (list(r.coords_q), list(r.ring_lens)) for r in dec.collect()}
+    assert got == _quantized_rings(rows)
 
 
-def test_rings_kernel_dim3_roundtrip():
-    ids, coords, ring_nv, rpf = _ring_batch(19, dim=3)
-    arr = sc.encode_rings_kernel(ids, coords, ring_nv, rpf, geom_type=5, dim=3)
-    dids, dcoords, dnv, drpf, gt, dim = sc.decode_rings_kernel(arr)
-    assert gt == 5 and dim == 3
-    assert np.array_equal(dcoords, core.quantize_vec(coords))
-    # reference-semantics per-feature decoder agrees
-    f0 = core.decode_feature(arr[0].as_py(), quantized=True)
-    assert f0.geom_type == 5 and f0.dim == 3 and f0.ring_lens.tolist() == ring_nv[:rpf[0]].tolist()
+def test_rings_kernel_dim3_roundtrip(spark):
+    """dim-3 MultiLineString frames from core.encode_feature decode to the
+    quantized source, and core.decode_feature agrees on type and dim."""
+    rows = _ring_rows(19, dim=3)
+    frames = _ring_frames(rows, "MultiLineString", dim=3)
+    assert _decoded_rings(spark, frames) == _quantized_rings(rows)
+    f0 = core.decode_feature(frames[0], quantized=True)
+    assert f0.geom_type == 5 and f0.dim == 3 and f0.ring_lens.tolist() == rows[0][2]
 
 
 def test_polygons_dataframe_roundtrip(spark):
@@ -167,16 +218,20 @@ def test_polygons_dataframe_roundtrip(spark):
     assert got == want
 
 
-def test_multipoint_kernel_byte_parity(batch):
+def test_multipoint_kernel_byte_parity(spark, batch):
+    """A MultiPoint shares the LineString wire shape (packed deltas,
+    geom.go:249-252): core's MultiPoint frames are encode_lines frames
+    with geometry code 4, and decode_lines reads them back."""
     ids, coords, nv = batch
-    arr = sc.encode_lines_kernel(ids, coords, nv, geom_type=4)
-    starts = np.concatenate(([0], np.cumsum(nv)[:-1]))
-    for i in range(0, len(ids), 17):
-        span = coords[2 * starts[i] : 2 * (starts[i] + nv[i])]
-        cf = core.Feature.from_geojson("MultiPoint", span.reshape(-1, 2).tolist(), id=int(ids[i]))
-        assert core.encode_feature(cf) == arr[i].as_py(), i
-    dids, dcoords, dnv = sc.decode_lines_kernel(arr)
-    assert np.array_equal(dcoords, core.quantize_vec(coords))
+    ids, verts = ids[::17], _split(coords, nv)[::17]
+    enc = {r.line_id: bytes(r.geobuf)
+           for r in sc.encode_lines(_lines_df(spark, ids, verts)).collect()}
+    frames = _core_frames("MultiPoint", ids, verts)
+    assert [_with_code(enc[int(i)], 4) for i in ids] == frames
+    got = {r.line_id: list(r.coords_q)
+           for r in sc.decode_lines(_frames_df(spark, frames)).collect()}
+    assert got == {int(i): core.quantize_vec(v.reshape(-1)).tolist()
+                   for i, v in zip(ids, verts)}
 
 
 # ---------------------------------------------------------------------------
@@ -243,9 +298,9 @@ def test_multipolygon_kernel_roundtrip(gb_decode):
     assert f0.geom_type == 6 and f0.part_rings.tolist() == rpp[:ppf[0]].tolist()
 
 
-def test_rings_kernel_on_county_polygons(reference_file):
+def test_rings_kernel_on_county_polygons(spark, reference_file):
     """Real-world ring structure: the reference's county dataset, Polygon
-    features re-encoded through the batch kernel, must round-trip exactly
+    features re-encoded through encode_polygons, must round-trip exactly
     on the quantized lattice and match the per-feature encoder's bytes
     (id-only features: properties/bbox handling identical by construction)."""
     from geobuf_spark.codec.core import read_frames
@@ -259,21 +314,19 @@ def test_rings_kernel_on_county_polygons(reference_file):
         if len(polys) >= 400:
             break
     assert len(polys) >= 300
-    ids = np.arange(len(polys), dtype=np.int64)
-    ring_nv = np.concatenate([f.ring_lens for f in polys])
-    rpf = np.array([len(f.ring_lens) for f in polys], dtype=np.int64)
-    coords = np.concatenate([f.coords for f in polys])
-    arr = sc.encode_rings_kernel(ids, coords, ring_nv, rpf, geom_type=3)
-    # batch decode == quantized source
-    dids, dcoords, dnv, drpf, gt, dim = sc.decode_rings_kernel(arr)
-    assert np.array_equal(dcoords, core.quantize_vec(coords))
-    assert np.array_equal(dnv, ring_nv)
+    rows = [(i, f.coords.tolist(), f.ring_lens.tolist()) for i, f in enumerate(polys)]
+    enc = sc.encode_polygons(_polys_df(spark, rows)).cache()
+    # decode == quantized source
+    got = {r.poly_id: (list(r.coords_q), list(r.ring_lens))
+           for r in sc.decode_polygons(enc).collect()}
+    assert got == _quantized_rings(rows)
     # byte parity vs the per-feature encoder on a sample
+    frames = {r.poly_id: bytes(r.geobuf) for r in enc.collect()}
     for i in range(0, len(polys), 50):
         cf = core.Feature(geom_type=3, dim=2, coords=polys[i].coords,
                           ring_lens=polys[i].ring_lens,
-                          part_rings=polys[i].part_rings, id=int(ids[i]))
-        assert core.encode_feature(cf) == arr[i].as_py(), i
+                          part_rings=polys[i].part_rings, id=i)
+        assert core.encode_feature(cf) == frames[i], i
 
 
 def test_decode_geometries_mixed_batch(spark):
@@ -299,29 +352,16 @@ def test_decode_geometries_mixed_batch(spark):
             "Point", [lon[i], lat[i]], id=int(ids[i]))) for i in range(50)],
         [(1, core.quantize_vec(np.array([lon[i], lat[i]])).tolist()) for i in range(50)])
     # lines + multipoints
-    for gt in (2, 4):
-        ids = np.arange(fid, fid + 30)
-        nv = rng.integers(2, 10, 30).astype(np.int64)
-        c = rng.uniform(-170, 170, int(nv.sum()) * 2)
-        arr = sc.encode_lines_kernel(ids, c, nv, geom_type=gt)
-        st = np.concatenate(([0], np.cumsum(nv)[:-1]))
-        add([arr[i].as_py() for i in range(30)],
-            [(gt, core.quantize_vec(c[2*st[i]:2*(st[i]+nv[i])]).tolist()) for i in range(30)])
+    for gt, name in ((2, "LineString"), (4, "MultiPoint")):
+        verts = [rng.uniform(-170, 170, (int(rng.integers(2, 10)), 2)) for _ in range(30)]
+        add(_core_frames(name, range(fid, fid + 30), verts),
+            [(gt, core.quantize_vec(v.reshape(-1)).tolist()) for v in verts])
     # polygons + multilinestrings
-    for gt in (3, 5):
-        ids = np.arange(fid, fid + 20)
-        rpf = rng.integers(1, 3, 20).astype(np.int64)
-        rnv = rng.integers(3, 8, int(rpf.sum())).astype(np.int64)
-        c = rng.uniform(-170, 170, int(rnv.sum()) * 2)
-        arr = sc.encode_rings_kernel(ids, c, rnv, rpf, geom_type=gt)
-        vst = np.concatenate(([0], np.cumsum(rnv)[:-1]))
-        rst = np.concatenate(([0], np.cumsum(rpf)[:-1]))
-        rows = []
-        for i in range(20):
-            s = vst[rst[i]]
-            nvv = rnv[rst[i]:rst[i]+rpf[i]].sum()
-            rows.append((gt, core.quantize_vec(c[2*s:2*(s+nvv)]).tolist()))
-        add([arr[i].as_py() for i in range(20)], rows)
+    for gt, name in ((3, "Polygon"), (5, "MultiLineString")):
+        feats = [[rng.uniform(-170, 170, (int(rng.integers(3, 8)), 2))
+                  for _ in range(int(rng.integers(1, 3)))] for _ in range(20)]
+        add(_core_frames(name, range(fid, fid + 20), [[r.tolist() for r in f] for f in feats]),
+            [(gt, core.quantize_vec(np.concatenate(f).reshape(-1)).tolist()) for f in feats])
     # multipolygons
     for i in range(15):
         polys = [[rng.uniform(-170, 170, (int(rng.integers(3, 8)), 2)).tolist()
@@ -367,7 +407,7 @@ def _props_line_frame(fid: int, coords: np.ndarray, props: dict,
     return frame
 
 
-def test_decode_lines_with_properties():
+def test_decode_lines_with_properties(spark):
     """Props-carrying line frames must decode exactly — the old fixed
     whole-frame tokenizer silently produced garbage on them (ADVICE r01)."""
     rng = np.random.default_rng(7)
@@ -378,18 +418,14 @@ def test_decode_lines_with_properties():
         props = {"name": f"road-{fid}", "lanes": fid % 5}
         frames.append(_props_line_frame(fid, c, props))
         want.append(core.quantize_vec(c).tolist())
-    arr = pa.array(frames, type=pa.binary())
-    ids, coords, nv = sc.decode_lines_kernel(arr)
-    assert ids.tolist() == list(range(40))
-    off = 0
-    for i, n in enumerate(nv):
-        assert coords[off:off + 2 * n].tolist() == want[i], i
-        off += 2 * n
+    got = [(r.line_id, list(r.coords_q))
+           for r in sc.decode_lines(_frames_df(spark, frames).coalesce(1)).collect()]
+    assert got == list(enumerate(want))
 
 
-def test_decode_rings_props_and_no_bbox():
+def test_decode_rings_props_and_no_bbox(spark):
     """Polygon frames with properties AND without bbox (old-writer files)
-    through the vectorized ring kernel — reader.go field-walk parity."""
+    through decode_polygons — reader.go field-walk parity."""
     rng = np.random.default_rng(11)
     frames, want = [], []
     for fid in range(25):
@@ -399,14 +435,9 @@ def test_decode_rings_props_and_no_bbox():
             fid, c, {"area": float(fid)}, geom_type=3,
             with_bbox=bool(fid % 2)))
         want.append(core.quantize_vec(c).tolist())
-    arr = pa.array(frames, type=pa.binary())
-    ids, coords, rnv, rpf, gt, dim = sc.decode_rings_kernel(arr)
-    assert gt == 3 and dim == 2 and ids.tolist() == list(range(25))
-    assert rpf.tolist() == [1] * 25
-    off = 0
-    for i, n in enumerate(rnv):
-        assert coords[off:off + 2 * n].tolist() == want[i], i
-        off += 2 * n
+    got = [(r.poly_id, list(r.coords_q), list(r.ring_lens)) for r in
+           sc.decode_polygons(_frames_df(spark, frames).coalesce(1)).collect()]
+    assert got == [(i, w, [len(w) // 2]) for i, w in enumerate(want)]
 
 
 def test_decode_geometries_mixed_dim_and_props(spark):

@@ -1,5 +1,7 @@
 """Join-strategy planner + physical-plan quality assertions."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -164,14 +166,13 @@ def _final_plan(df) -> str:
 def geobuf_dir(spark, tmp_path_factory):
     import numpy as np
 
-    from geobuf_spark.codec import core, spark_codec
+    from geobuf_spark.codec import core
 
     d = tmp_path_factory.mktemp("geobuf_plans")
     rng = np.random.default_rng(3)
-    frames = spark_codec.encode_lines_kernel(
-        np.arange(60, dtype=np.int64), rng.uniform(-50, 50, 60 * 8),
-        np.full(60, 4, dtype=np.int64))
-    frames = [bytes(f.as_py()) for f in frames]
+    frames = [core.encode_feature(core.Feature.from_geojson(
+                  "LineString", rng.uniform(-50, 50, (4, 2)).tolist(), id=i))
+              for i in range(60)]
     for i in range(3):
         (d / f"part-{i}.geobuf").write_bytes(core.write_frames(frames[i::3]))
     return str(d)
@@ -240,3 +241,42 @@ def test_flagship_codec_evaluated_once(spark, sf_small):
     assert "BroadcastHashJoin" in plan, plan
     assert plan.count("BroadcastExchange") == 1, plan
     assert plan.count("Exchange hashpartitioning") == 1, plan
+
+
+def test_line_ring_codec_evaluated_once(spark, geobuf_dir):
+    """The line and ring codec runs in the JVM: no Python node, and each
+    gb_* UDF is evaluated once per row — a filter on an output column
+    (pushed down or inferred) or a collapsed projection does not repeat
+    it."""
+    from geobuf_spark.codec import core, jvm_codec, spark_codec as sc
+
+    frames = jvm_codec.read_geobuf_files_jvm(spark, geobuf_dir)
+    lines = spark.createDataFrame(
+        [(i, [0.5 * i, 1.0, 0.25, -0.5 * i, 1.5, 2.0]) for i in range(8)],
+        "line_id long, coords array<double>")
+    rings = spark.createDataFrame(
+        [(i, [0.0, 0.0, 1.0, 0.0, 0.0, 1.0 + i, 0.2, 0.2, 0.3, 0.2, 0.2, 0.3],
+          [3, 3] if i % 2 else [6]) for i in range(8)],
+        "poly_id long, coords array<double>, ring_lens array<int>")
+    poly_frames = spark.createDataFrame(
+        [(bytearray(core.encode_feature(core.Feature.from_geojson(
+            "Polygon", [[[0, 0], [1, 0], [0, 1 + i], [0, 0]]] * (1 + i % 2),
+            id=i))),) for i in range(8)], "geobuf binary")
+    cases = [
+        ("gb_line_decode(", sc.decode_lines(frames).where("line_id > 3")),
+        ("gb_line_decode(", sc.decode_lines(frames)
+         .where(F.size("coords_q") > 4)),
+        ("gb_poly_dec(", sc.decode_polygons(poly_frames)
+         .where(F.size("ring_lens") > 1)),
+        ("gb_line_stats(", sc.decode_lines_agg(frames)),
+        ("gb_line_enc(", sc.encode_lines(lines)
+         .where(F.octet_length("geobuf") > 0)),
+        ("gb_poly_enc(", sc.encode_polygons(rings)
+         .where(F.octet_length("geobuf") > 0)),
+    ]
+    for udf, df in cases:
+        plan = _final_plan(df)
+        for marker in _PYTHON_NODES:
+            assert marker not in plan, (udf, marker, plan)
+        calls = re.findall(r"\bgb_\w+\(", plan)
+        assert udf in calls and len(calls) == len(set(calls)), (udf, plan)

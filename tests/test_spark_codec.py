@@ -265,7 +265,7 @@ def test_decode_points_any_with_props(spark, sf_small):
                    zip(range(10), np.linspace(-5, 5, 10), np.linspace(2, 3, 10))}
 
 
-def test_review_regressions(gb_decode):
+def test_review_regressions(spark, gb_decode):
     """Pinned repros from the round-1 codec review."""
     import numpy as np
 
@@ -283,12 +283,19 @@ def test_review_regressions(gb_decode):
     a2 = pa.array([core.encode_feature(f)], type=pa.binary())
     _, kinds, strs, _, _ = sc.lazy_prop_kernel(a2, "lang")
     assert kinds.tolist() == [1] and strs == ["en"]
-    # (c) zero-vertex / zero-ring features rejected loudly
-    with pytest.raises(ValueError, match="zero vertices"):
-        sc.encode_lines_kernel(np.array([1, 2]), np.array([0.1, 0.2]), np.array([1, 0]))
-    with pytest.raises(ValueError, match="empty ring"):
-        sc.encode_rings_kernel(np.array([1]), np.empty(0), np.empty(0, np.int64),
-                               np.array([0]))
+    # (c) zero-vertex lines, empty rings and ring-less polygons rejected
+    # loudly, naming the fault
+    lines = spark.createDataFrame([(1, [0.1, 0.2]), (2, [])],
+                                  "line_id long, coords array<double>")
+    with pytest.raises(Exception, match="line coords must be non-empty"):
+        sc.encode_lines(lines).collect()
+    for coords, ring_lens, msg in [([0.1, 0.2, 0.3, 0.4], [2, 0], "empty ring"),
+                                   ([], [], ">=1 ring")]:
+        polys = spark.createDataFrame(
+            [(1, coords, ring_lens)],
+            "poly_id long, coords array<double>, ring_lens array<int>")
+        with pytest.raises(Exception, match=msg):
+            sc.encode_polygons(polys).collect()
 
 
 def test_s2_parent_exact_at_high_levels(spark):
@@ -378,8 +385,8 @@ def test_encode_props_rejects_nulls(spark):
 
 
 def test_fused_decode_agg_matches_materializing_path(spark):
-    """decode_points_agg / decode_lines_agg (single-Arrow-pass partials)
-    must equal decode + JVM aggregate exactly."""
+    """decode_points_agg / decode_lines_agg (fused decode→reduce) must
+    equal the materializing decode + aggregate exactly."""
     import numpy as np
 
     from geobuf_spark.sources import minted
@@ -395,10 +402,12 @@ def test_fused_decode_agg_matches_materializing_path(spark):
     n = 500
     nv = rng.integers(2, 12, n).astype(np.int64)
     c = rng.uniform(-170, 170, int(nv.sum()) * 2)
-    arr = sc.encode_lines_kernel(np.arange(n), c, nv)
-    df = spark.createDataFrame([(bytearray(arr[i].as_py()),) for i in range(n)],
-                               "geobuf binary")
-    fusedl = sc.decode_lines_agg(df, parts=2).collect()[0]
+    verts = np.split(c.reshape(-1, 2), np.cumsum(nv)[:-1])
+    df = spark.createDataFrame(
+        [(bytearray(core.encode_feature(core.Feature.from_geojson(
+            "LineString", v.tolist(), id=i))),) for i, v in enumerate(verts)],
+        "geobuf binary")
+    fusedl = sc.decode_lines_agg(df).collect()[0]
     dl = sc.decode_lines(df)
     fulll = dl.agg(F.count("*"), F.sum(F.size("coords_q")),
                    F.sum(F.element_at("coords_q", 1))).collect()[0]

@@ -200,11 +200,9 @@ def _run(spark, args, dev: str) -> None:
         .repartition(args.cores).write.mode("overwrite").parquet(js_dir)
     os.sync()  # fadvise can't evict dirty pages
 
-    n_parts = max(16, args.cores // 2)
-
     def geobuf_scan():
         return spark_codec.decode_lines_agg(
-            spark.read.parquet(gb_dir), parts=n_parts).collect()[0][0]
+            spark.read.parquet(gb_dir)).collect()[0][0]
 
     def json_scan():
         parsed = spark.read.parquet(js_dir).select(

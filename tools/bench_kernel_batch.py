@@ -1,24 +1,13 @@
 #!/usr/bin/env python
-"""Batch-granularity codec comparison, single-threaded (local[1]) —
-the evidence behind the python-Arrow-read-path verdict (r4 #4).
+"""Batch-granularity codec comparison, single-threaded (local[1]).
 
-The full bench's read rows are 32-core wall-clock, which mixes the
-kernel's per-core rate with task scheduling and the Python worker
-dispatch floor. This harness pins everything to ONE core so the three
-decode tiers are directly comparable per feature:
+The full bench's read rows are multi-core wall-clock, which mixes the
+decoder's per-core rate with task scheduling. This harness pins
+everything to ONE core so the two decode paths are directly comparable
+per feature, for points, lines and two-ring polygons:
 
-  json       — Spark codegen'd from_json + aggregate (the baseline)
-  jvm        — gb_* Java UDF decode + aggregate (the production path)
-  py_kernel  — the numpy batch kernel alone on a driver-side Arrow
-               array (what the python path costs with zero dispatch);
-               lines and polygons only, points have no Arrow tier
-
-Interpretation (recorded in BENCH/BASELINE.md): where py_kernel beats
-json, the end-to-end python read deficit is the per-task dispatch floor
-+ Arrow serdes, which amortize with per-task batch size at cluster
-scale; where it doesn't (two-ring polygons — the data-dependent ring
-walk defeats full vectorization), the python read path is honestly the
-compatibility tier and the JVM path is the read path.
+  json  — Spark codegen'd from_json + aggregate (the baseline)
+  jvm   — gb_* Java UDF decode + aggregate (spark_codec's geometry codec)
 
 Usage: python tools/bench_kernel_batch.py [n_rows]   (default 100000)
 Prints one JSON line.
@@ -45,7 +34,6 @@ def best_of(fn, k=3):
 def main():
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 100_000
 
-    import pyarrow as pa
     import pyspark
     from pyspark.sql import functions as F
 
@@ -56,15 +44,10 @@ def main():
     spark.sparkContext.setLogLevel("ERROR")
 
     import bench
-    from geobuf_spark.codec import jvm_codec, spark_codec
+    from geobuf_spark.codec import spark_codec
     from geobuf_spark.sources import pages as P
 
-    have_jvm = jvm_codec.register(spark)
     out = {"n_rows": n, "cores": 1, "unit": "sec (min of 3, single core)"}
-
-    def frames_of(enc):
-        return pa.array((bytes(r[0]) for r in enc.select("geobuf").collect()),
-                        type=pa.binary())
 
     # --- points ---
     p = (P.with_minted_geometry(P.pages(spark, n))
@@ -93,11 +76,7 @@ def main():
         F.from_json("j", "line_id bigint, coords array<double>").alias("s"))
         .agg(F.count("*"), F.sum(F.size("s.coords")),
              F.sum(F.element_at("s.coords", 1))).collect())}
-    if have_jvm:
-        sec["jvm"] = best_of(
-            lambda: jvm_codec.decode_lines_agg_jvm(enc).collect())
-    fr = frames_of(enc)
-    sec["py_kernel"] = best_of(lambda: spark_codec.decode_lines_kernel(fr))
+    sec["jvm"] = best_of(lambda: spark_codec.decode_lines_agg(enc).collect())
     out["lines"] = {k: round(v, 4) for k, v in sec.items()}
     out["lines"]["n_rows"] = n // 4
     li.unpersist(); enc.unpersist(); js.unpersist()
@@ -115,22 +94,15 @@ def main():
                     "ring_lens array<int>").alias("s"))
         .agg(F.count("*"), F.sum(F.size("s.coords")),
              F.sum(F.element_at("s.coords", 1))).collect())}
-    if have_jvm:
-        sec["jvm"] = best_of(
-            lambda: jvm_codec.decode_polygons_agg_jvm(enc).collect())
-    fr = frames_of(enc)
-    sec["py_kernel"] = best_of(lambda: spark_codec.decode_rings_kernel(fr))
+    sec["jvm"] = best_of(lambda: spark_codec.decode_polygons(enc).agg(
+        F.count("*"), F.sum(F.size("coords_q")),
+        F.sum(F.element_at("coords_q", 1))).collect())
     out["polys"] = {k: round(v, 4) for k, v in sec.items()}
     po.unpersist(); enc.unpersist(); js.unpersist()
 
     for sect in ("points", "lines", "polys"):
         s = out[sect]
-        nn = s.get("n_rows", n)
-        if "jvm" in s:
-            s["jvm_vs_json_speedup"] = round(s["json"] / s["jvm"], 2)
-        if "py_kernel" in s:
-            s["kernel_vs_json_speedup"] = round(s["json"] / s["py_kernel"], 2)
-            s["py_kernel_ns_per_feature"] = round(s["py_kernel"] / nn * 1e9, 1)
+        s["jvm_vs_json_speedup"] = round(s["json"] / s["jvm"], 2)
     print(json.dumps(out))
     spark.stop()
 
