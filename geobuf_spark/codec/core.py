@@ -304,12 +304,17 @@ def _write_value(value) -> bytes:
         # FloatVal64 — write_primitives.go:228-240: little-endian float64
         return bytes([18, 9, 25]) + struct.pack("<d", value)
     if isinstance(value, int):
-        if value >= 0:
-            # signed ints take field 4 plain varint (write_primitives.go:264-265)
-            vb = encode_varint(value)
+        # int64 takes field 4, a negative one as its 10-byte two's
+        # complement (write_primitives.go:264-265); [2**63, 2**64) the
+        # unsigned field 5 (write_primitives.go:266-267); no field holds more
+        if -(1 << 63) <= value < (1 << 63):
+            tag = 32
+        elif (1 << 63) <= value < (1 << 64):
+            tag = 40
         else:
-            vb = encode_varint(value & ((1 << 64) - 1))  # two's complement, 10 bytes
-        return bytes([18, len(vb) + 1, 32]) + vb
+            raise ValueError(f"property int {value} outside [-2**63, 2**64)")
+        vb = encode_varint(value)
+        return bytes([18, len(vb) + 1, tag]) + vb
     if isinstance(value, bytes):
         inner = bytes([10]) + encode_varint(len(value)) + value
         return bytes([18]) + encode_varint(len(inner)) + inner
@@ -358,6 +363,12 @@ def _encode_geometry_values(feat: Feature) -> np.ndarray:
     """uint64 stream for the packed geometry field (pre-varint)."""
     dim = feat.dim
     t = feat.geom_type
+    scaled = np.asarray(feat.coords, dtype=np.float64) * POWER
+    if not np.all((scaled >= -(2.0**63)) & (scaled < 2.0**63)):
+        # NaN, ±Inf or a product past int64 has no lattice point; the cast
+        # would write garbage
+        raise ValueError("non-finite coordinate or one off the int64 lattice; "
+                         "filter before encoding")
     q = quantize_vec(feat.coords).reshape(-1, dim)
 
     def ring_deltas(qring: np.ndarray) -> np.ndarray:
@@ -670,3 +681,72 @@ def _is_metadata_frame(frame: bytes) -> bool:
         return entry_end >= len(buf) or buf[entry_end] != 0x12
     except Exception:
         return False
+
+
+# ---------------------------------------------------------------------------
+# vectorized field walk — the reference for the JVM Walker's accept/reject
+# rules (tests/test_jvm_codec.py::test_corrupt_frame_accept_reject_parity)
+# ---------------------------------------------------------------------------
+
+def _read_varint_at(flat: np.ndarray, pos: np.ndarray):
+    """Vectorized varint read at positions `pos` → (values, byte lengths)."""
+    vals = np.zeros(len(pos), dtype=np.uint64)
+    lens = np.zeros(len(pos), dtype=np.int64)
+    done = np.zeros(len(pos), dtype=bool)
+    last = len(flat) - 1
+    for j in range(10):
+        # clamp: rows already done may point past the buffer (a varint that
+        # ends exactly at the frame/buffer boundary)
+        b = flat[np.minimum(pos + j, last)]
+        use = ~done
+        vals[use] |= (b[use].astype(np.uint64) & np.uint64(0x7F)) << np.uint64(7 * j)
+        fin = use & (b < 0x80)
+        lens[fin] = j + 1
+        done |= fin
+        if done.all():
+            break
+    return vals, lens
+
+
+def frame_fields_walk(flat: np.ndarray, starts: np.ndarray, ends: np.ndarray,
+                      max_fields: int = 64):
+    """Field-level walk over frames: yields per round (active frame idx,
+    tag byte, field payload start, payload length). Varint fields report
+    length 0 with start at the varint."""
+    n = len(starts)
+    pos = starts.copy()
+    rounds = []
+    active = np.flatnonzero(pos < ends)
+    for _round in range(max_fields):
+        if len(active) == 0:
+            break
+        if _round == max_fields - 1:
+            raise ValueError(
+                f"frame with more than {max_fields} fields — raise max_fields "
+                "(silent truncation would read as missing data)")
+        p = pos[active]
+        tag = flat[p]
+        wire = tag & 0x7
+        # varint fields (wire 0): value right after tag
+        v, vl = _read_varint_at(flat, p + 1)
+        if (vl == 0).any():
+            raise ValueError(
+                f"{int((vl == 0).sum())} frame(s) with a varint longer than "
+                "10 bytes or running past the frame end — truncated or "
+                "corrupt input")
+        is_len = wire == 2
+        plen = np.where(is_len, v.astype(np.int64), 0)
+        pstart = p + 1 + np.where(is_len, vl, 0)
+        rounds.append((active.copy(), tag.copy(), pstart, plen, v, vl))
+        pos[active] = np.where(is_len, pstart + plen, p + 1 + vl)
+        # a field whose payload jump lands past its frame boundary would
+        # otherwise drop out of the walk silently — with its tail bytes
+        # unparsed, a truncated frame could still decode (e.g. a clipped
+        # trailing bbox) instead of failing
+        over = (pos[active] > ends[active]) | (plen < 0)
+        if over.any():
+            raise ValueError(
+                f"{int(over.sum())} frame(s) with a field payload running "
+                "past the frame end — truncated or corrupt input")
+        active = active[pos[active] < ends[active]]
+    return rounds

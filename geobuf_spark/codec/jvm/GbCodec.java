@@ -1,5 +1,9 @@
 package geobufspark;
 
+import com.fasterxml.jackson.core.JsonFactory;
+import com.fasterxml.jackson.core.JsonParser;
+import com.fasterxml.jackson.core.JsonToken;
+import com.fasterxml.jackson.core.json.JsonReadFeature;
 import org.apache.spark.sql.Row;
 import org.apache.spark.sql.RowFactory;
 import org.apache.spark.sql.api.java.UDF1;
@@ -8,12 +12,16 @@ import org.apache.spark.sql.api.java.UDF3;
 import scala.collection.Seq;
 
 /**
- * JVM-side geobuf frame codec, the only geometry codec in Spark: the
- * point, line and polygon encoders and decoders of codec/spark_codec.py
+ * JVM-side geobuf frame codec, the only codec in Spark: every function of
+ * codec/spark_codec.py runs these UDFs, and codec/core.py is the parity
+ * oracle. The point, line and polygon encoders and decoders
  * (encode_/decode_points, encode_/decode_lines, decode_lines_agg,
- * encode_/decode_polygons) and its full decode of a frame to a
- * GEOM_SCHEMA row (gb_decode: every geometry type, properties as JSON)
- * run these UDFs, and codec/core.py is the parity oracle.
+ * encode_/decode_polygons), the full decode of a frame to a GEOM_SCHEMA
+ * row (gb_decode: every geometry type, properties as JSON), the generic
+ * encoder and the property tables (gb_encode: WriteFeature,
+ * write_feature.go:180-263), and the lazy reads of one property
+ * (gb_prop: LazyFeatureTileID, split_combine.go:333-370) and of the keys
+ * (gb_keys: ReadKeys, reader.go:120-142).
  *
  * Why the JVM: a Python Arrow kernel pays a per-task Python dispatch floor
  * plus two Arrow serdes; a JVM UDF runs inside the scan stage with zero
@@ -26,10 +34,10 @@ import scala.collection.Seq;
  * 0x18 varint geometry code (first wins), 0x22 length-prefixed geometry
  * payload of zigzag varints (first wins), anything else skipped by wire
  * type (wire 2 = length-delimited jump, all others read as varint — the
- * exact rule frame_fields_walk applies).
+ * exact rule core.frame_fields_walk applies).
  *
  * The field walk accepts and rejects exactly the frames the numpy
- * spark_codec.frame_fields_walk does. A corrupt frame fails the task:
+ * core.frame_fields_walk does. A corrupt frame fails the task:
  * >63 fields, a field payload or the geometry payload overrunning the
  * frame, a payload ending mid-varint, a missing geometry/code, a
  * non-point payload in Point, a token count not divisible by dim in lines.
@@ -48,9 +56,10 @@ public final class GbCodec {
     }
 
     /**
-     * Bounds-checked forward walk over b[p..end) - the frame_fields_walk
-     * rules: single-byte tags, wire 2 jumps its varint length prefix,
-     * every other wire type reads as a varint, at most 63 fields. A varint
+     * Bounds-checked forward walk over b[p..end) - the
+     * core.frame_fields_walk rules: single-byte tags, wire 2 jumps its
+     * varint length prefix, every other wire type reads as a varint, at
+     * most 63 fields. A varint
      * longer than 10 bytes or running past the end, and a payload running
      * past the end, throw.
      */
@@ -154,14 +163,17 @@ public final class GbCodec {
 
     /**
      * int64(c * 1e7) - Go/numpy truncation toward zero (geom.go:173-179).
-     * NaN and +-Inf have no lattice point (the cast would give 0 and
-     * Long.MAX/MIN_VALUE), so they throw, naming the value.
+     * NaN, +-Inf and a product outside [-2^63, 2^63) have no lattice point
+     * (the cast would give 0 or saturate, where core.encode_feature
+     * raises), so they throw, naming the value.
      */
     static long quantize(double c) {
-        if (!Double.isFinite(c))
+        double s = c * 1e7;
+        if (!(s >= -0x1p63 && s < 0x1p63))
             throw new IllegalArgumentException(
-                "non-finite coordinate " + c + " - filter before encoding");
-        return (long) (c * 1e7);
+                (Double.isFinite(c) ? "coordinate off the int64 lattice "
+                                    : "non-finite coordinate ") + c + " - filter before encoding");
+        return (long) s;
     }
 
     static int varintLen(long v) {
@@ -290,14 +302,144 @@ public final class GbCodec {
         }
     }
 
+    private static final byte[] NO_PROPS = new byte[0];
+
+    /**
+     * One frame, byte-identical to core.encode_feature: [0x08 id] | props
+     * (KeyValue fields already written) | 0x18 code | 0x22 packed zigzag
+     * tokens | 0x2A bbox, or only id and props for geometry type 0. q holds
+     * the quantized coords, dim per vertex (2..15); rings the vertices per
+     * ring and parts the rings per polygon of a MultiPolygon. A Point
+     * writes its first vertex's x,y (writepointbs, geom.go:187-201), a
+     * LineString or MultiPoint its one ring's per-vertex deltas
+     * (geom.go:204-246), a Polygon or MultiLineString per ring the varint
+     * nv*dim then its deltas, the delta state reset at each ring
+     * (geom.go:255-273), a MultiPolygon each polygon's ring count first
+     * (geom.go:276-302). The bbox is min/max over ALL the quantized
+     * vertices (bb.go:10-37). An empty geometry or ring, and structure
+     * arrays that do not add up to the vertex count, throw.
+     */
+    static byte[] writeFrame(Long id, byte[] props, int gt, int dim,
+                             long[] q, int[] rings, int[] parts) {
+        int head = (id == null ? 0 : 1 + varintLen(id)) + props.length;
+        if (gt == 0) {
+            byte[] out = new byte[head];
+            int p = 0;
+            if (id != null) { out[p++] = 0x08; p = writeVarint(out, p, id); }
+            System.arraycopy(props, 0, out, p, props.length);
+            return out;
+        }
+        if (gt < 1 || gt > 6 || dim < 2 || dim > 15)
+            throw new IllegalArgumentException(
+                "geometry type " + gt + " or dim " + dim + " outside 1..6 and 2..15");
+        if (q.length == 0 || q.length % dim != 0)
+            throw new IllegalArgumentException(
+                "empty geometry or coords not a multiple of dim " + dim
+                + "; filter before encoding");
+        int nv = q.length / dim;
+        long[] zz;
+        int n = 0;
+        if (gt == 1) {
+            zz = new long[]{zigzag(q[0]), zigzag(q[1])};
+            n = 2;
+        } else {
+            if (rings == null || (gt == 6 && parts == null))
+                throw new IllegalArgumentException("null ring_lens/part_rings");
+            long sum = 0;
+            for (int r : rings) {
+                if (r <= 0)
+                    throw new IllegalArgumentException("empty ring; filter before encoding");
+                sum += r;
+            }
+            if (sum != nv || ((gt == 2 || gt == 4) && rings.length != 1))
+                throw new IllegalArgumentException(
+                    "ring_lens " + java.util.Arrays.toString(rings)
+                    + " do not add up to the " + nv + " vertices");
+            int np = gt == 6 ? parts.length : 1;
+            if (gt == 6) {
+                sum = 0;
+                for (int k : parts) {
+                    if (k < 0) throw new IllegalArgumentException("negative part ring count");
+                    sum += k;
+                }
+                if (sum != rings.length)
+                    throw new IllegalArgumentException(
+                        "part_rings do not add up to the " + rings.length + " rings");
+            }
+            zz = new long[q.length + rings.length + (gt == 6 ? np : 0)];
+            int vi = 0, ri = 0;
+            for (int part = 0; part < np; part++) {
+                int nr = gt == 6 ? parts[part] : rings.length;
+                if (gt == 6) zz[n++] = nr;
+                for (int end = ri + nr; ri < end; ri++) {
+                    if (gt != 2 && gt != 4) zz[n++] = (long) rings[ri] * dim;
+                    for (int i = 0, m = rings[ri] * dim; i < m; i++, vi++)
+                        zz[n++] = zigzag(i < dim ? q[vi] : q[vi] - q[vi - dim]);
+                }
+            }
+        }
+        long minx = Long.MAX_VALUE, maxx = Long.MIN_VALUE;
+        long miny = Long.MAX_VALUE, maxy = Long.MIN_VALUE;
+        for (int i = 0; i < q.length; i += dim) {
+            long x = q[i], y = q[i + 1];
+            if (x < minx) minx = x;
+            if (x > maxx) maxx = x;
+            if (y < miny) miny = y;
+            if (y > maxy) maxy = y;
+        }
+        int glen = 0;
+        for (int i = 0; i < n; i++) glen += varintLen(zz[i]);
+        long zb0 = zigzag(minx), zb1 = zigzag(miny);
+        long zb2 = zigzag(maxx), zb3 = zigzag(maxy);
+        int blen = varintLen(zb0) + varintLen(zb1) + varintLen(zb2) + varintLen(zb3);
+        byte[] out = new byte[head + 2
+                + 1 + varintLen(glen) + glen + 1 + varintLen(blen) + blen];
+        int p = 0;
+        if (id != null) { out[p++] = 0x08; p = writeVarint(out, p, id); }
+        System.arraycopy(props, 0, out, p, props.length);
+        p += props.length;
+        out[p++] = 0x18; out[p++] = (byte) (dim == 2 ? gt : (gt << 4) + dim);
+        out[p++] = 0x22; p = writeVarint(out, p, glen);
+        for (int i = 0; i < n; i++) p = writeVarint(out, p, zz[i]);
+        out[p++] = 0x2A; p = writeVarint(out, p, blen);
+        p = writeVarint(out, p, zb0); p = writeVarint(out, p, zb1);
+        p = writeVarint(out, p, zb2); p = writeVarint(out, p, zb3);
+        return out;
+    }
+
+    /** Quantized coords of a Spark array<double>, in one iterator pass:
+     *  per-index apply() pays generic dispatch + unboxing per value. */
+    static long[] quantizeAll(Seq<?> coords) {
+        long[] q = new long[coords.size()];
+        scala.collection.Iterator<?> it = coords.iterator();
+        for (int i = 0; i < q.length; i++) {
+            Object c = it.next();
+            if (c == null)
+                throw new IllegalArgumentException("null coordinate - filter before encoding");
+            q[i] = quantize((Double) c);
+        }
+        return q;
+    }
+
+    /** A Spark array<int>/array<bigint> as int[]; null stays null.
+     *  Number, not Integer: Spark hands int or bigint elements depending
+     *  on the column type, and erasure would defer a bad cast to here. */
+    static int[] ints(Seq<?> xs) {
+        if (xs == null) return null;
+        int[] out = new int[xs.size()];
+        scala.collection.Iterator<?> it = xs.iterator();
+        for (int i = 0; i < out.length; i++) {
+            Object x = it.next();
+            if (x == null) throw new IllegalArgumentException("null ring_lens/part_rings entry");
+            out[i] = ((Number) x).intValue();
+        }
+        return out;
+    }
+
     /**
      * gb_poly_enc(id, coords, ring_nv) -> geobuf Polygon frame (dim 2,
-     * code 3), byte-identical to core.encode_feature: per ring a varint
-     * nv*2 then that ring's zigzag deltas with the delta state reset at
-     * the ring start (geom.go:255-273), bbox min/max over ALL the
-     * feature's QUANTIZED vertices (bb.go:10-37). coords is the flat
-     * interleaved x,y array across all rings; ring_nv the vertices per
-     * ring.
+     * code 3) through writeFrame. coords is the flat interleaved x,y array
+     * across all rings; ring_nv the vertices per ring.
      */
     public static final class PolyEnc implements UDF3<Long, Seq<Double>, Seq<Number>, byte[]> {
         @Override
@@ -305,68 +447,11 @@ public final class GbCodec {
             if (id == null || coords == null || ringNv == null)
                 throw new IllegalArgumentException(
                     "encode polygon: null id/coords/ring_nv - filter before encoding");
-            int m = coords.size(), r = ringNv.size();
-            if (m == 0 || m % 2 != 0 || r == 0)
+            int m = coords.size();
+            if (m == 0 || m % 2 != 0 || ringNv.size() == 0)
                 throw new IllegalArgumentException(
                     "polygon coords must be non-empty interleaved x,y with >=1 ring");
-            long[] q = new long[m];
-            scala.collection.Iterator<Double> it = coords.iterator();
-            for (int i = 0; i < m; i++)
-                q[i] = quantize(it.next());
-            int[] nv = new int[r];
-            // Number, not Integer: Spark hands int or bigint array elements
-            // depending on the column type, and erasure would defer a bad
-            // cast to here anyway
-            scala.collection.Iterator<Number> rit = ringNv.iterator();
-            int totalV = 0;
-            for (int i = 0; i < r; i++) {
-                nv[i] = rit.next().intValue();
-                if (nv[i] <= 0)
-                    throw new IllegalArgumentException(
-                        "empty ring; filter before encoding");
-                totalV += nv[i];
-            }
-            if (totalV * 2 != m)
-                throw new IllegalArgumentException(
-                    "ring_nv sum does not match coords length");
-            // token stream: per ring [nv*2, zigzag deltas (reset at ring)]
-            long[] zz = new long[r + m];
-            long minx = Long.MAX_VALUE, maxx = Long.MIN_VALUE;
-            long miny = Long.MAX_VALUE, maxy = Long.MIN_VALUE;
-            int glen = 0, zi = 0, vi = 0;
-            for (int ring = 0; ring < r; ring++) {
-                zz[zi] = (long) nv[ring] * 2;
-                glen += varintLen(zz[zi]);
-                zi++;
-                long px = 0, py = 0;
-                for (int v = 0; v < nv[ring]; v++, vi += 2) {
-                    long x = q[vi], y = q[vi + 1];
-                    zz[zi] = zigzag(v == 0 ? x : x - px);
-                    zz[zi + 1] = zigzag(v == 0 ? y : y - py);
-                    glen += varintLen(zz[zi]) + varintLen(zz[zi + 1]);
-                    zi += 2;
-                    px = x; py = y;
-                    if (x < minx) minx = x;
-                    if (x > maxx) maxx = x;
-                    if (y < miny) miny = y;
-                    if (y > maxy) maxy = y;
-                }
-            }
-            long zb0 = zigzag(minx), zb1 = zigzag(miny);
-            long zb2 = zigzag(maxx), zb3 = zigzag(maxy);
-            int blen = varintLen(zb0) + varintLen(zb1) + varintLen(zb2) + varintLen(zb3);
-            long uid = id;
-            byte[] out = new byte[1 + varintLen(uid) + 2
-                    + 1 + varintLen(glen) + glen + 1 + varintLen(blen) + blen];
-            int p = 0;
-            out[p++] = 0x08; p = writeVarint(out, p, uid);
-            out[p++] = 0x18; out[p++] = 0x03;
-            out[p++] = 0x22; p = writeVarint(out, p, glen);
-            for (int i = 0; i < zi; i++) p = writeVarint(out, p, zz[i]);
-            out[p++] = 0x2A; p = writeVarint(out, p, blen);
-            p = writeVarint(out, p, zb0); p = writeVarint(out, p, zb1);
-            p = writeVarint(out, p, zb2); p = writeVarint(out, p, zb3);
-            return out;
+            return writeFrame(id, NO_PROPS, 3, 2, quantizeAll(coords), ints(ringNv), null);
         }
     }
 
@@ -402,10 +487,8 @@ public final class GbCodec {
     }
 
     /**
-     * gb_line_enc(id, coords) -> geobuf LineString frame (dim 2, code 2),
-     * byte-identical to core.encode_feature: per-vertex deltas zigzag
-     * varint packed (geom.go:204-246), bbox min/max over the QUANTIZED
-     * lattice (bb.go:10-37). coords is the flat interleaved x,y array.
+     * gb_line_enc(id, coords) -> geobuf LineString frame (dim 2, code 2)
+     * through writeFrame. coords is the flat interleaved x,y array.
      */
     public static final class LineEnc implements UDF2<Long, Seq<Double>, byte[]> {
         @Override
@@ -417,44 +500,7 @@ public final class GbCodec {
             if (m == 0 || m % 2 != 0)
                 throw new IllegalArgumentException(
                     "line coords must be non-empty interleaved x,y (dim 2)");
-            // one iterator traversal into a primitive array: per-index
-            // apply() pays generic dispatch + unboxing twice per vertex,
-            // which dominates the encode at production vertex counts
-            long[] q = new long[m];
-            scala.collection.Iterator<Double> it = coords.iterator();
-            for (int i = 0; i < m; i++)
-                q[i] = quantize(it.next());
-            long[] zz = new long[m];
-            long minx = Long.MAX_VALUE, maxx = Long.MIN_VALUE;
-            long miny = Long.MAX_VALUE, maxy = Long.MIN_VALUE;
-            long px = 0, py = 0;
-            int glen = 0;
-            for (int i = 0; i < m; i += 2) {
-                long x = q[i], y = q[i + 1];
-                zz[i] = zigzag(i == 0 ? x : x - px);
-                zz[i + 1] = zigzag(i == 0 ? y : y - py);
-                glen += varintLen(zz[i]) + varintLen(zz[i + 1]);
-                px = x; py = y;
-                if (x < minx) minx = x;
-                if (x > maxx) maxx = x;
-                if (y < miny) miny = y;
-                if (y > maxy) maxy = y;
-            }
-            long zb0 = zigzag(minx), zb1 = zigzag(miny);
-            long zb2 = zigzag(maxx), zb3 = zigzag(maxy);
-            int blen = varintLen(zb0) + varintLen(zb1) + varintLen(zb2) + varintLen(zb3);
-            long uid = id;
-            byte[] out = new byte[1 + varintLen(uid) + 2
-                    + 1 + varintLen(glen) + glen + 1 + varintLen(blen) + blen];
-            int p = 0;
-            out[p++] = 0x08; p = writeVarint(out, p, uid);
-            out[p++] = 0x18; out[p++] = 0x02;
-            out[p++] = 0x22; p = writeVarint(out, p, glen);
-            for (long v : zz) p = writeVarint(out, p, v);
-            out[p++] = 0x2A; p = writeVarint(out, p, blen);
-            p = writeVarint(out, p, zb0); p = writeVarint(out, p, zb1);
-            p = writeVarint(out, p, zb2); p = writeVarint(out, p, zb3);
-            return out;
+            return writeFrame(id, NO_PROPS, 2, 2, quantizeAll(coords), new int[]{m / 2}, null);
         }
     }
 
@@ -464,8 +510,8 @@ public final class GbCodec {
      * walked forward and the geometry is jumped through its length prefix,
      * its deltas never decoded. A repeated bbox field resolves to the last
      * one. The walk alone decides accept or reject (same rules as
-     * frame_fields_walk); a bbox payload that does not hold four varints
-     * reads as no bbox.
+     * core.frame_fields_walk); a bbox payload that does not hold four
+     * varints reads as no bbox.
      */
     public static final class Bbox implements UDF1<byte[], long[]> {
         @Override
@@ -603,15 +649,17 @@ public final class GbCodec {
     }
 
     /**
-     * Properties of one frame as Python's json.dumps(core.decode_properties
-     * (frame), sort_keys=True): a port of core.decode_properties (tags read
+     * Property reader, a port of core.decode_properties and _read_value:
+     * key() and value() read one 0x12 entry from its start, each value as
+     * the Java twin of core's Python value (String, Double - a float32
+     * widened -, Long, a BigInteger for a uint64 of 2^63 or more, Boolean).
+     * json() reads every entry as core.decode_properties does (tags read
      * as full varints, wire 0 skipped as a varint, wire 2 jumped by its
-     * length, a 0x12 entry parsed as key then value message; any other
-     * wire type, a read past the frame end, invalid UTF-8 or an unknown
-     * value field throws) feeding a port of the json encoder's defaults:
-     * keys sorted by code point, a repeated key keeps its last value,
-     * ensure_ascii escapes, ", " and ": " separators, floats in Python's
-     * shortest round-trip repr.
+     * length; any other wire type, a read past the frame end, invalid
+     * UTF-8 or an unknown value field throws) and writes them as Python's
+     * json.dumps(..., sort_keys=True): keys sorted by code point, a
+     * repeated key keeps its last value, ensure_ascii escapes, ", " and
+     * ": " separators, floats in Python's shortest round-trip repr.
      */
     static final class Props {
         private final byte[] b;
@@ -619,8 +667,9 @@ public final class GbCodec {
          *  read there throws */
         private long pos;
 
-        private Props(byte[] b) {
+        Props(byte[] b, long pos) {
             this.b = b;
+            this.pos = pos;
         }
 
         /** Python str ordering: by code point, not by UTF-16 unit. */
@@ -637,7 +686,7 @@ public final class GbCodec {
 
         static String json(byte[] b) {
             java.util.TreeMap<String, String> props = new java.util.TreeMap<>(CODE_POINT_ORDER);
-            Props r = new Props(b);
+            Props r = new Props(b, 0);
             while (r.pos < b.length) {
                 long tag = r.varint();
                 if ((tag & 7) == 0) {
@@ -645,11 +694,8 @@ public final class GbCodec {
                 } else if ((tag & 7) == 2) {
                     long size = r.varint(), end = r.pos;
                     if (tag == 0x12) {
-                        r.pos++;                                // 0x0A key tag
-                        String key = r.utf8(r.varint());
-                        r.pos++;                                // 0x12 value tag
-                        r.varint();                             // value message length
-                        props.put(key, r.value());
+                        String key = r.key();
+                        props.put(key, jsonText(r.value()));
                     }
                     r.pos = Long.compareUnsigned(size, b.length - end) > 0
                             ? b.length : end + size;
@@ -711,24 +757,286 @@ public final class GbCodec {
             return v;
         }
 
-        /** core._read_value: one value message field as JSON text. */
-        private String value() {
+        /** At an entry's start: its key (0x0A tag, varint length, UTF-8). */
+        String key() {
+            pos++;
+            return utf8(varint());
+        }
+
+        /** Whether the entry at pos has the key bytes kb; pos moves past
+         *  the key length. */
+        boolean keyIs(byte[] kb) {
+            pos++;
+            long n = varint();
+            return n == kb.length && pos + n <= b.length
+                && java.util.Arrays.equals(b, (int) pos, (int) (pos + n), kb, 0, kb.length);
+        }
+
+        /** After the key: core._read_value of the value message (0x12 tag,
+         *  varint length, one field). */
+        Object value() {
+            pos++;
+            varint();
             int field = at(pos++) >> 3;
             switch (field) {
-                case 1: {
-                    StringBuilder sb = new StringBuilder();
-                    quote(sb, utf8(varint()));
-                    return sb.toString();
+                case 1: return utf8(varint());
+                case 2: return (double) Float.intBitsToFloat((int) fixed(4));
+                case 3: return Double.longBitsToDouble(fixed(8));
+                case 4: return varint();
+                case 5: {
+                    long u = varint();
+                    return u >= 0 ? (Object) u : new java.math.BigInteger(Long.toUnsignedString(u));
                 }
-                case 2: return repr(Float.intBitsToFloat((int) fixed(4)));
-                case 3: return repr(Double.longBitsToDouble(fixed(8)));
-                case 4: return Long.toString(varint());
-                case 5: return Long.toUnsignedString(varint());
-                case 6: return Long.toString(unzigzag(varint()));
-                case 7: return varint() != 0 ? "true" : "false";
+                case 6: return unzigzag(varint());
+                case 7: return varint() != 0;
                 default:
                     throw new IllegalArgumentException("unknown property value field " + field);
             }
+        }
+
+        /** One value() as json.dumps writes it. */
+        private static String jsonText(Object v) {
+            if (v instanceof String) {
+                StringBuilder sb = new StringBuilder();
+                quote(sb, (String) v);
+                return sb.toString();
+            }
+            return v instanceof Double ? repr((Double) v) : v.toString();
+        }
+    }
+
+    /**
+     * A feature's property table as core._make_keyvalue writes it
+     * (MakeKeyValue, write_feature.go:180-189): per key 0x12 len | 0x0A key
+     * | 0x12 len | one Value field typed as core._write_value types it
+     * (write_primitives.go:244-286). Entries come from props_json text and
+     * from a struct of typed columns; a repeated key keeps its first
+     * position and takes its last value, as the dict json.loads builds
+     * does. Values are typed when written, so a value a later duplicate
+     * replaces is never checked, as in Python.
+     */
+    static final class PropTable {
+        private static final JsonFactory JSON = JsonFactory.builder()
+            .enable(JsonReadFeature.ALLOW_NON_NUMERIC_NUMBERS).build();
+        private static final java.math.BigInteger TWO_64 = java.math.BigInteger.ONE.shiftLeft(64);
+
+        private final java.util.LinkedHashMap<String, Object> entries =
+            new java.util.LinkedHashMap<>();
+
+        /**
+         * The entries of a JSON object, read as json.loads reads them: ints
+         * of any size, floats (NaN, Infinity and -Infinity included),
+         * strings, booleans, null; a nested object or array is kept as its
+         * start token and rejected when written. Null or "" is no entries;
+         * anything but one object throws.
+         */
+        void json(String text) {
+            if (text == null || text.isEmpty()) return;
+            try (JsonParser p = JSON.createParser(text)) {
+                if (p.nextToken() != JsonToken.START_OBJECT)
+                    throw new IllegalArgumentException("props_json is not a JSON object");
+                while (p.nextToken() == JsonToken.FIELD_NAME) {
+                    String key = p.currentName();
+                    Object v;
+                    switch (p.nextToken()) {
+                        case VALUE_STRING: v = p.getText(); break;
+                        case VALUE_NUMBER_INT:
+                            v = p.getNumberType() == JsonParser.NumberType.BIG_INTEGER
+                                ? p.getBigIntegerValue() : (Object) p.getLongValue();
+                            break;
+                        case VALUE_NUMBER_FLOAT: {
+                            // json.loads knows only these three non-numbers
+                            String t = p.getText();
+                            char c = t.charAt(t.charAt(0) == '-' && t.length() > 1 ? 1 : 0);
+                            if (!(c >= '0' && c <= '9') && !t.equals("NaN")
+                                    && !t.equals("Infinity") && !t.equals("-Infinity"))
+                                throw new IllegalArgumentException("props_json number " + t);
+                            v = p.getDoubleValue();
+                            break;
+                        }
+                        case VALUE_TRUE: v = Boolean.TRUE; break;
+                        case VALUE_FALSE: v = Boolean.FALSE; break;
+                        case VALUE_NULL: v = null; break;
+                        default:
+                            v = p.currentToken();
+                            p.skipChildren();
+                    }
+                    entries.put(key, v);
+                }
+                if (p.nextToken() != null)
+                    throw new IllegalArgumentException("props_json has data after its object");
+            } catch (java.io.IOException e) {
+                throw new IllegalArgumentException(
+                    "props_json is not valid JSON: " + e.getMessage(), e);
+            }
+        }
+
+        /** The fields of a struct of typed columns, keyed by field name. */
+        void typed(Row r) {
+            String[] names = r.schema().fieldNames();
+            for (int i = 0; i < names.length; i++) entries.put(names[i], r.get(i));
+        }
+
+        byte[] bytes() {
+            java.io.ByteArrayOutputStream out = new java.io.ByteArrayOutputStream();
+            for (java.util.Map.Entry<String, Object> e : entries.entrySet()) {
+                byte[] kb = utf8(e.getKey());
+                byte[] vb = value(e.getKey(), e.getValue());
+                int inner = 1 + varintLen(kb.length) + kb.length + vb.length;
+                out.write(0x12);
+                varint(out, inner);
+                out.write(0x0A);
+                varint(out, kb.length);
+                out.write(kb, 0, kb.length);
+                out.write(vb, 0, vb.length);
+            }
+            return out.toByteArray();
+        }
+
+        /** core._write_value: 0x12 len | one Value field. */
+        private static byte[] value(String key, Object v) {
+            if (v instanceof Boolean)
+                return new byte[]{0x12, 2, 0x38, (byte) ((Boolean) v ? 1 : 0)};
+            if (v instanceof String) {
+                byte[] sb = utf8((String) v);
+                java.io.ByteArrayOutputStream out = new java.io.ByteArrayOutputStream();
+                out.write(0x12);
+                varint(out, 1 + varintLen(sb.length) + sb.length);
+                out.write(0x0A);
+                varint(out, sb.length);
+                out.write(sb, 0, sb.length);
+                return out.toByteArray();
+            }
+            if (v instanceof Double || v instanceof Float) {
+                long bits = Double.doubleToRawLongBits(((Number) v).doubleValue());
+                byte[] out = {0x12, 9, 0x19, 0, 0, 0, 0, 0, 0, 0, 0};
+                for (int i = 0; i < 8; i++) out[3 + i] = (byte) (bits >>> (8 * i));
+                return out;
+            }
+            if (v instanceof Long || v instanceof Integer
+                    || v instanceof Short || v instanceof Byte)
+                return intValue(0x20, ((Number) v).longValue());
+            if (v instanceof java.math.BigInteger) {
+                java.math.BigInteger x = (java.math.BigInteger) v;
+                // int64 is field 4, [2^63, 2^64) the unsigned field 5
+                // (write_primitives.go:264-267); anything wider has no field
+                if (x.bitLength() <= 63) return intValue(0x20, x.longValue());
+                if (x.signum() > 0 && x.compareTo(TWO_64) < 0)
+                    return intValue(0x28, x.longValue());
+                throw new IllegalArgumentException(
+                    "property '" + key + "' int " + x + " outside [-2**63, 2**64)");
+            }
+            if (v == null)
+                throw new IllegalArgumentException(
+                    "property '" + key + "' is null - geobuf KeyValue has no null"
+                    + " encoding; filter or fill before encoding");
+            throw new IllegalArgumentException(
+                "property '" + key + "' has unsupported value type " + v);
+        }
+
+        private static byte[] intValue(int tag, long v) {
+            byte[] out = new byte[3 + varintLen(v)];
+            out[0] = 0x12;
+            out[1] = (byte) (out.length - 2);
+            out[2] = (byte) tag;
+            writeVarint(out, 3, v);
+            return out;
+        }
+
+        private static void varint(java.io.ByteArrayOutputStream out, long v) {
+            byte[] buf = new byte[10];
+            out.write(buf, 0, writeVarint(buf, 0, v));
+        }
+
+        /** Strict UTF-8, as str.encode: a lone surrogate throws. */
+        private static byte[] utf8(String s) {
+            try {
+                java.nio.ByteBuffer bb = java.nio.charset.StandardCharsets.UTF_8.newEncoder()
+                    .onMalformedInput(java.nio.charset.CodingErrorAction.REPORT)
+                    .onUnmappableCharacter(java.nio.charset.CodingErrorAction.REPORT)
+                    .encode(java.nio.CharBuffer.wrap(s));
+                return java.util.Arrays.copyOf(bb.array(), bb.limit());
+            } catch (java.nio.charset.CharacterCodingException x) {
+                throw new IllegalArgumentException(
+                    "property text is not valid Unicode (a lone surrogate?)", x);
+            }
+        }
+    }
+
+    /**
+     * gb_encode(feature, props) -> one geobuf frame, byte-identical to
+     * core.encode_feature. feature is a GEOM_SCHEMA struct (id, geom_type,
+     * dim, coords, ring_lens, part_rings, props_json); props a struct of
+     * typed property columns, or null. The property table holds the
+     * props_json entries, then the typed ones. A null id writes no id
+     * field; geometry type 0 writes no geometry.
+     */
+    public static final class Encode implements UDF2<Row, Row, byte[]> {
+        @Override
+        public byte[] call(Row f, Row typed) {
+            if (f == null || f.isNullAt(1) || f.isNullAt(2))
+                throw new IllegalArgumentException(
+                    "encode feature: null feature, geom_type or dim");
+            PropTable t = new PropTable();
+            t.json(f.getString(6));
+            if (typed != null) t.typed(typed);
+            Long id = f.isNullAt(0) ? null : f.getLong(0);
+            int gt = f.getInt(1);
+            if (gt == 0) return writeFrame(id, t.bytes(), 0, 2, null, null, null);
+            if (f.isNullAt(3))
+                throw new IllegalArgumentException("encode feature: null coords");
+            return writeFrame(id, t.bytes(), gt, f.getInt(2), quantizeAll(f.getSeq(3)),
+                              ints(f.getSeq(4)), ints(f.getSeq(5)));
+        }
+    }
+
+    /**
+     * gb_prop(geobuf, key) -> Row(id, string, bigint, double): the one
+     * property `key` of a frame, LazyFeatureTileID (split_combine.go:
+     * 333-370). The Walker jumps the geometry and bbox; only the matching
+     * entry is parsed, and of repeated keys the last wins, as in
+     * core.decode_properties(frame).get(key). The value lands in the field
+     * of its type: a string, an int that fits int64 (not a bool), a float
+     * (float32 widened); the other fields, and all three for an absent key,
+     * a bool or a uint64 of 2^63 or more, are null. id is 0 when absent.
+     */
+    public static final class Prop implements UDF2<byte[], String, Row> {
+        @Override
+        public Row call(byte[] b, String key) {
+            if (b == null) return null;
+            byte[] kb = key.getBytes(java.nio.charset.StandardCharsets.UTF_8);
+            long id = 0;
+            int hit = -1;
+            Walker w = new Walker(b, 0, b.length);
+            while (w.next()) {
+                if (w.tag == 0x08) id = w.value;
+                else if (w.tag == 0x12 && new Props(b, w.start).keyIs(kb)) hit = w.start;
+            }
+            Object v = null;
+            if (hit >= 0) {
+                Props r = new Props(b, hit);
+                r.key();
+                v = r.value();
+            }
+            return RowFactory.create(id, v instanceof String ? v : null,
+                                     v instanceof Long ? v : null, v instanceof Double ? v : null);
+        }
+    }
+
+    /**
+     * gb_keys(geobuf) -> array&lt;string&gt;: every property key in wire
+     * order, repeats kept - ReadKeys (reader.go:120-142). Values, geometry
+     * and bbox are jumped by the Walker, never parsed.
+     */
+    public static final class Keys implements UDF1<byte[], java.util.List<String>> {
+        @Override
+        public java.util.List<String> call(byte[] b) {
+            if (b == null) return null;
+            java.util.ArrayList<String> out = new java.util.ArrayList<>();
+            Walker w = new Walker(b, 0, b.length);
+            while (w.next())
+                if (w.tag == 0x12) out.add(new Props(b, w.start).key());
+            return out;
         }
     }
 

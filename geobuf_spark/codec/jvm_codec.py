@@ -6,15 +6,15 @@ longer matches) and exposes it as Spark SQL functions that run inside the
 scan stage like from_json: zero Python in the plan, so the per-task Python
 dispatch and both Arrow serdes disappear.
 
-This is the only geometry codec in Spark: the point, line and polygon
-encoders and decoders of spark_codec (encode_/decode_points,
-encode_/decode_lines, decode_lines_agg, encode_/decode_polygons) and its
-full decode to GEOM_SCHEMA rows (decode_features_fast) are plans over the
-UDFs registered here, pinned byte for byte against codec/core.py. The
-geobuf read path is JVM-only too: sources.geobuf_file.read_geobuf splits
-frames with gb_frames and spark_codec.frame_bbox reads bboxes with gb_bbox.
-All of them raise (naming the jar) when it cannot be registered. This
-module keeps the registration and the many-files read plan.
+This is the only codec in Spark: every function of spark_codec — the
+point, line and polygon encoders and decoders, the full decode to
+GEOM_SCHEMA rows (gb_decode), the generic encoder and the property tables
+(gb_encode), the lazy one-property and keys-only reads (gb_prop, gb_keys)
+and the bbox read (gb_bbox) — is a plan over the UDFs registered here,
+pinned byte for byte against codec/core.py. sources.geobuf_file.read_geobuf
+splits frames with gb_frames. All of them raise (naming the jar) when it
+cannot be registered. This module keeps the registration and the
+many-files read plan.
 """
 
 from __future__ import annotations
@@ -26,33 +26,52 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 JAR = Path(__file__).parent / "jvm" / "gb-codec.jar"
-_UDFS = {
-    "gb_point": "geobufspark.GbCodec$Point",
-    "gb_line_stats": "geobufspark.GbCodec$LineStats",
-    "gb_line_decode": "geobufspark.GbCodec$LineDecode",
-    "gb_poly_dec": "geobufspark.GbCodec$PolyDecode",
-    "gb_bbox": "geobufspark.GbCodec$Bbox",
-}
-_ENC_UDFS = {
-    "gb_point_enc": "geobufspark.GbCodec$PointEnc",
-    "gb_line_enc": "geobufspark.GbCodec$LineEnc",
-    "gb_poly_enc": "geobufspark.GbCodec$PolyEnc",
-}
-# file-stream splitter (array<binary> return type, registered separately)
-_FRAMES_UDF = ("gb_frames", "geobufspark.GbCodec$Frames")
-# full decode to one spark_codec.GEOM_SCHEMA struct per frame
-_DECODE_UDF = ("gb_decode", "geobufspark.GbCodec$Decode")
+
+# one decoded frame (gb_decode) and one generic-encoder input (gb_encode)
+GEOM_SCHEMA = T.StructType([
+    T.StructField("id", T.LongType()),
+    T.StructField("geom_type", T.IntegerType()),
+    T.StructField("dim", T.IntegerType()),
+    T.StructField("coords", T.ArrayType(T.DoubleType())),
+    T.StructField("ring_lens", T.ArrayType(T.IntegerType())),
+    T.StructField("part_rings", T.ArrayType(T.IntegerType())),
+    T.StructField("props_json", T.StringType()),
+])
+
+_LONGS = T.ArrayType(T.LongType())
+# (SQL name, GbCodec class, return type). _register probes the LAST name,
+# so a UDF added at the end makes a session holding an older jar's set
+# register the whole table again.
+_UDFS = [
+    ("gb_point", "Point", _LONGS),
+    ("gb_line_stats", "LineStats", _LONGS),
+    ("gb_line_decode", "LineDecode", _LONGS),
+    ("gb_poly_dec", "PolyDecode", _LONGS),
+    ("gb_bbox", "Bbox", _LONGS),
+    ("gb_point_enc", "PointEnc", T.BinaryType()),
+    ("gb_line_enc", "LineEnc", T.BinaryType()),
+    ("gb_poly_enc", "PolyEnc", T.BinaryType()),
+    ("gb_frames", "Frames", T.ArrayType(T.BinaryType())),
+    ("gb_decode", "Decode", GEOM_SCHEMA),
+    ("gb_encode", "Encode", T.BinaryType()),
+    # one field per lazy_property value_type
+    ("gb_prop", "Prop", T.StructType([
+        T.StructField("id", T.LongType()),
+        T.StructField("string", T.StringType()),
+        T.StructField("bigint", T.LongType()),
+        T.StructField("double", T.DoubleType())])),
+    ("gb_keys", "Keys", T.ArrayType(T.StringType())),
+]
 
 
 def _register(spark: SparkSession) -> None:
-    """ADD JAR + register the decode and encode UDFs; raises on failure."""
+    """ADD JAR + register every UDF of _UDFS; raises on failure."""
     # registerJavaFunction is per-session (session catalog), so idempotence
     # is probed from the catalog itself: an applicationId key would skip
     # registration for a second session (spark.newSession()) in the same
-    # app, and an id(spark) key can alias a GC'd session's address.
-    # probe the NEWEST udf name: a session that registered an older jar
-    # then re-registers the full set instead of reporting done
-    if spark.catalog.functionExists("gb_decode"):
+    # app, and an id(spark) key can alias a GC'd session's address. One
+    # Py4J call, since every codec function runs this during plan build.
+    if spark.catalog.functionExists(_UDFS[-1][0]):
         return
     try:
         from tools.build_jvm import build
@@ -63,16 +82,8 @@ def _register(spark: SparkSession) -> None:
     if jar is None:
         raise FileNotFoundError(f"{JAR} is missing and no JDK can build it")
     spark.sql(f"ADD JAR '{jar.resolve().as_uri()}'")
-    arr = T.ArrayType(T.LongType())
-    for name, cls in _UDFS.items():
-        spark.udf.registerJavaFunction(name, cls, arr)
-    for name, cls in _ENC_UDFS.items():
-        spark.udf.registerJavaFunction(name, cls, T.BinaryType())
-    spark.udf.registerJavaFunction(
-        _FRAMES_UDF[0], _FRAMES_UDF[1], T.ArrayType(T.BinaryType()))
-    from geobuf_spark.codec.spark_codec import GEOM_SCHEMA
-
-    spark.udf.registerJavaFunction(_DECODE_UDF[0], _DECODE_UDF[1], GEOM_SCHEMA)
+    for name, cls, rtype in _UDFS:
+        spark.udf.registerJavaFunction(name, f"geobufspark.GbCodec${cls}", rtype)
 
 
 def register(spark: SparkSession) -> bool:

@@ -448,13 +448,12 @@ def q_polygon_roundtrip(spark, sf):
     )
 
 def q_props_roundtrip(spark, sf):
-    # property key/value tables through the REAL binary, vectorized BOTH
-    # ways: fixed-schema encode → wire-level lazy single-prop reads
+    # property key/value tables through the REAL binary, in the JVM both
+    # ways: typed-column encode → wire-level lazy single-prop reads
     # (LazyFeatureTileID semantics) — no per-row Python anywhere
     d = _docs(spark, sf).select("doc_id", "lang", "n_chars")
     pts = minted.minted_points(spark, sf).join(d, "doc_id")
-    enc = spark_codec.encode_points_with_props(pts, props=["lang", "n_chars"]) \
-        .localCheckpoint(eager=False)  # two lazy readers share one encode
+    enc = spark_codec.encode_points_with_props(pts, props=["lang", "n_chars"])
     langs = spark_codec.lazy_property(enc, "lang")
     nchars = spark_codec.lazy_property(enc, "n_chars", value_type="bigint")
     return langs.join(nchars, "id").select(

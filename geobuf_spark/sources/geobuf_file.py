@@ -49,23 +49,17 @@ def write_geobuf(df: DataFrame, out_path: str, bin_col: str = "geobuf") -> int:
     return len(frames)
 
 
-def decoded_features(spark: SparkSession, path: str, repartition: int | None = None,
-                     fast: bool = True) -> DataFrame:
-    """Geobuf file → fully decoded feature rows.
-
-    `fast=True` (default) decodes in the JVM (decode_features_fast, the
-    gb_decode UDF; reader.go:84-112 scan semantics), parsing properties
-    only for frames that carry them. The plan holds no Python stage: the
-    frame split and the decode both run in the JVM. `fast=False` keeps
-    the per-feature generic decoder, whose float coords replicate the
-    reference's per-vertex accumulation exactly (the fast path is
-    lattice-exact instead). Both handle bare properties-only frames."""
+def decoded_features(spark: SparkSession, path: str,
+                     repartition: int | None = None) -> DataFrame:
+    """Geobuf file → fully decoded feature rows (GEOM_SCHEMA), in the JVM:
+    read_geobuf's gb_frames split, then decode_features_fast (gb_decode;
+    reader.go:84-112 scan semantics), with no Python stage in the plan.
+    Coords are lattice-exact, properties are parsed only for frames that
+    carry them, and bare properties-only frames decode as geom_type 0."""
     from geobuf_spark.codec import spark_codec
 
-    frames = read_geobuf(spark, path, repartition)
-    if fast:
-        return spark_codec.decode_features_fast(frames, bin_col="geobuf")
-    return spark_codec.decode_features_generic(frames, bin_col="geobuf")
+    return spark_codec.decode_features_fast(
+        read_geobuf(spark, path, repartition), bin_col="geobuf")
 
 
 def write_geobuf_indexed(df: DataFrame, out_path: str, key_col: str,

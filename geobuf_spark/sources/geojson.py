@@ -8,8 +8,8 @@ the driver-edge fallback (json.load → parallelize), like the reference's
 one-shot path.
 
 Output rows use the engine's columnar geometry model (codec.spark_codec
-GEOM_SCHEMA) and re-encode to geobuf frames via the generic kernel — the
-full geojson2geobuf pipeline.
+GEOM_SCHEMA) and re-encode to geobuf frames with the JVM generic encoder
+(spark_codec.encode_features_generic) — the full geojson2geobuf pipeline.
 """
 
 from __future__ import annotations

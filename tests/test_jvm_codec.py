@@ -1,8 +1,9 @@
 """JVM codec (codec/jvm/GbCodec.java) — exact parity vs the
-reference-semantics codec in core.py. spark_codec's point, line and
-polygon encoders and decoders and its full decode (decode_features_fast)
-run these UDFs and are pinned against core.encode_feature/decode_feature/
-decode_properties on the same inputs. The jar is committed and the geobuf
+reference-semantics codec in core.py. Every spark_codec function runs
+these UDFs — the point, line and polygon codec, the full decode
+(decode_features_fast), the generic and property-table encoders
+(gb_encode) and the lazy reads (gb_prop, gb_keys) — and is pinned against
+core.encode_feature/decode_feature/decode_properties on the same inputs. The jar is committed and the geobuf
 read path depends on it, so a jar that cannot be registered fails this
 suite instead of skipping it.
 """
@@ -13,7 +14,7 @@ import struct
 import numpy as np
 import pyarrow as pa
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from geobuf_spark.codec import core, jvm_codec, spark_codec
@@ -54,6 +55,24 @@ def _core_line_frames(ids, verts) -> list[bytes]:
             for i, v in zip(ids, verts)]
 
 
+def _geom_row(f: core.Feature, props_json: str | None = None) -> tuple:
+    """A GEOM_SCHEMA row of f; props_json defaults to its properties."""
+    if props_json is None:
+        props_json = json.dumps(f.properties)
+    return (f.id, f.geom_type, f.dim, f.coords.tolist(), f.ring_lens.tolist(),
+            f.part_rings.tolist(), props_json)
+
+
+def _gb_encode(spark, rows) -> list[bytes]:
+    """encode_features_generic frames of GEOM_SCHEMA rows, in row order."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType(spark_codec.GEOM_SCHEMA.fields + [T.StructField("k", T.IntegerType())])
+    df = spark.createDataFrame([(*r, k) for k, r in enumerate(rows)], schema)
+    enc = spark_codec.encode_features_generic(df).collect()
+    return [bytes(r.geobuf) for r in sorted(enc, key=lambda r: r.k)]
+
+
 def _core_quantized(frames) -> dict[int, list[int]]:
     """id → flat quantized coords per frame, from core.decode_feature."""
     out = {}
@@ -66,6 +85,7 @@ def _core_quantized(frames) -> dict[int, list[int]]:
 def test_register_idempotent(jvm):
     assert jvm_codec.register(jvm) is True
     assert jvm_codec.register(jvm) is True
+    assert all(jvm.catalog.functionExists(name) for name, _, _ in jvm_codec._UDFS)
 
 
 def test_point_agg_parity(jvm):
@@ -167,14 +187,15 @@ GOLDEN_FEATURES = [
 
 
 def test_golden_feature_frames(jvm):
-    """core.encode_feature writes the spec-derived property, line and
-    polygon frames; encode_lines and encode_polygons write the line and
-    the polygon; gb_decode and core.decode_feature read all three back to
-    the source features."""
+    """core.encode_feature and encode_features_generic (gb_encode) write
+    the spec-derived property, line and polygon frames; encode_lines and
+    encode_polygons write the line and the polygon; gb_decode and
+    core.decode_feature read all three back to the source features."""
     feats = [core.Feature.from_geojson(t, c, id=i, properties=p)
              for (t, c, i, p), _ in GOLDEN_FEATURES]
     frames = [frame for _, frame in GOLDEN_FEATURES]
     assert [core.encode_feature(f) for f in feats] == frames
+    assert _gb_encode(jvm, [_geom_row(f) for f in feats]) == frames
     line, poly = feats[1], feats[2]
     enc = spark_codec.encode_lines(jvm.createDataFrame(
         [(3, line.coords.tolist())], "line_id long, coords array<double>"))
@@ -500,7 +521,7 @@ def _numpy_accepts(frame: bytes) -> bool:
     arr = pa.array([frame], type=pa.binary())
     flat = np.frombuffer(arr.buffers()[2] or b"", dtype=np.uint8)
     try:
-        spark_codec.frame_fields_walk(
+        core.frame_fields_walk(
             flat, np.array([0], np.int64), np.array([len(frame)], np.int64))
     except ValueError:
         return False
@@ -674,7 +695,7 @@ def _corrupt_frames(draw):
 @given(frame=_corrupt_frames())
 def test_corrupt_frame_accept_reject_parity(jvm, frame):
     """The JVM field walk (gb_bbox; the geometry decoders share it) and
-    the numpy frame_fields_walk accept or reject the same frames."""
+    the numpy core.frame_fields_walk accept or reject the same frames."""
     want = _numpy_accepts(frame)
     assert _jvm_accepts(_udf(jvm, "Bbox"), frame) == want
 
@@ -782,3 +803,165 @@ def test_gb_decode_rejects_cut_and_overrun_frames(jvm):
         assert r.id == (want.id or 0)
         assert (r.geom_type, r.dim, r.coords, r.ring_lens, r.part_rings) == geom
         assert r.props_json == json.dumps(core.decode_properties(frame), sort_keys=True)
+
+
+# --- gb_encode: the generic encoder and its property writer ------------------
+
+_INT_EDGES = [0, -1, 2**63 - 1, -2**63, 2**63, 2**64 - 1]
+_json_values = st.one_of(
+    _text,
+    st.one_of(st.floats(), st.sampled_from(_F64)),
+    st.one_of(st.integers(-2**63, 2**64 - 1), st.sampled_from(_INT_EDGES)),
+    st.booleans())
+_coords = st.one_of(st.integers(-1_799_999_999, 1_799_999_999).map(lambda q: q / 1e7),
+                    st.floats(-180, 180))
+
+
+@st.composite
+def _features(draw):
+    """A GEOM_SCHEMA row over all six types, dims 2-5, holes, MultiPolygon
+    parts and a missing id, with props_json text holding every property
+    value type (escaped or raw) and repeated keys."""
+    gt = draw(st.integers(1, 6))
+    dim = draw(st.integers(2, 5))
+
+    def ring():
+        return draw(st.lists(st.tuples(*[_coords] * dim), min_size=1, max_size=5))
+
+    if gt == 1:
+        geom = [ring()[:1]]
+    elif gt in (2, 4):
+        geom = [ring()]
+    else:
+        geom = [[ring() for _ in range(draw(st.integers(1, 3)))]
+                for _ in range(draw(st.integers(1, 3)) if gt == 6 else 1)]
+    rings = [r for part in geom for r in part] if gt not in (1, 2, 4) else geom
+    parts = [len(p) for p in geom] if gt == 6 else [len(rings)]
+    fid = draw(st.one_of(st.none(), st.integers(-2**63, 2**63 - 1)))
+    keys = st.one_of(_text, st.sampled_from(["k", "K", "é", "\U0001F600"]))
+    pairs = draw(st.lists(st.tuples(keys, _json_values), max_size=6))
+    ascii_ = draw(st.booleans())
+    text = "{" + ", ".join(json.dumps(k, ensure_ascii=ascii_) + ": "
+                           + json.dumps(v, ensure_ascii=ascii_) for k, v in pairs) + "}"
+    coords = [c for r in rings for v in r for c in v]
+    return (fid, gt, dim, coords, [len(r) for r in rings], parts, text)
+
+
+def _core_encode(row) -> bytes:
+    fid, gt, dim, coords, rl, pr, text = row
+    return core.encode_feature(core.Feature(
+        geom_type=gt, dim=dim, coords=np.array(coords, dtype=np.float64),
+        ring_lens=np.array(rl, np.int64), part_rings=np.array(pr, np.int64), id=fid,
+        properties=json.loads(text) if text else {}))
+
+
+@settings(max_examples=25, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(rows=st.lists(_features(), min_size=1, max_size=12))
+def test_gb_encode_matches_core(jvm, rows):
+    """encode_features_generic (gb_encode) is byte-identical to
+    core.encode_feature of json.loads(props_json): every geometry type and
+    dim, holes and parts, no-id rows; str, float (NaN, ±Inf, -0.0,
+    subnormal), int at the int64/uint64 edges and bool values; a repeated
+    key keeps its first position and its last value."""
+    assert _gb_encode(jvm, rows) == [_core_encode(r) for r in rows]
+
+
+_POINT = core.Feature.from_geojson("Point", [1.0, 2.0], id=1)
+
+
+@pytest.mark.parametrize("row", [
+    _geom_row(_POINT, '{"a": null}'),
+    _geom_row(_POINT, '{"a": {"b": 1}}'),
+    _geom_row(_POINT, '{"a": [1]}'),
+    _geom_row(_POINT, '{"a": "\\ud800"}'),
+    _geom_row(_POINT, '{"\\udc00": 1}'),
+    _geom_row(_POINT, '{"a": 18446744073709551616}'),
+    _geom_row(_POINT, '{"a": -9223372036854775809}'),
+    _geom_row(_POINT, '[]'),
+    (1, 2, 2, [], [0], [1], "{}"),
+    (1, 1, 2, [math.nan, 2.0], [1], [1], "{}"),
+    (1, 3, 2, [0.0, 0.0, 1.0, 0.0, 1.0, math.inf], [3], [1], "{}"),
+    (1, 2, 3, [0.0, 0.0, 1.0, 1.0, 1.0, math.nan], [2], [1], "{}"),
+    (1, 2, 2, [1e12, 0.0], [1], [1], "{}"),
+], ids=["null", "object", "array", "lone_surrogate", "lone_surrogate_key",
+        "int_over", "int_under", "not_an_object", "empty_geometry", "nan_point",
+        "inf_polygon", "nan_z", "off_lattice"])
+def test_gb_encode_rejects_what_core_rejects(jvm, row):
+    """A null or nested value, a lone surrogate, an int outside
+    [-2**63, 2**64), props that are not an object, an empty geometry and a
+    non-finite or off-lattice coordinate: core raises, and gb_encode fails
+    the task instead of writing a frame."""
+    with pytest.raises((ValueError, TypeError, AttributeError, UnicodeEncodeError)):
+        _core_encode(row)
+    with pytest.raises(Exception, match="IllegalArgumentException"):
+        _gb_encode(jvm, [row])
+
+
+def test_property_int_range(jvm):
+    """int64 values take field 4, [2**63, 2**64) the unsigned field 5
+    (tag 0x28), and both read back as written; a wider int is rejected,
+    by core and by gb_encode alike."""
+    ok = [2**63 - 1, -2**63, -1, 2**63, 2**64 - 1]
+    feats = [core.Feature.from_geojson("Point", [1.0, 2.0], id=1, properties={"a": v})
+             for v in ok]
+    frames = [core.encode_feature(f) for f in feats]
+    for v, frame in zip(ok, frames):
+        assert core.decode_feature(frame).properties == {"a": v}
+        # 0x12 len 0x0A 0x01 "a" 0x12 len <field tag>
+        assert frame[9] == (0x28 if v >= 2**63 else 0x20)
+    assert _gb_encode(jvm, [_geom_row(f) for f in feats]) == frames
+    for v in (2**64, 2**70, -2**70, -2**63 - 1):
+        with pytest.raises(ValueError, match="outside"):
+            core.encode_feature(core.Feature.from_geojson(
+                "Point", [1.0, 2.0], properties={"a": v}))
+        with pytest.raises(Exception, match="outside"):
+            _gb_encode(jvm, [_geom_row(_POINT, json.dumps({"a": v}))])
+
+
+# --- gb_prop / gb_keys: the lazy reads --------------------------------------
+
+def _typed(value, value_type):
+    """core's property value as lazy_property types it, else None."""
+    if value_type == "string":
+        return value if isinstance(value, str) else None
+    if value_type == "bigint":
+        ok = isinstance(value, int) and not isinstance(value, bool)
+        return value if ok and -2**63 <= value < 2**63 else None
+    return value if isinstance(value, float) else None
+
+
+_DUP_FRAME = (_entry("lang", b"\x0a\x02en") + _entry("n", b"\x30\x03")
+              + _entry("u", b"\x28" + core.encode_varint(2**63 + 5))
+              + _entry("lang", b"\x0a\x02de") + _entry("f", b"\x15" + struct.pack("<f", 0.1)))
+
+
+@settings(max_examples=40, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(frames=st.lists(_props_frames(), min_size=1, max_size=8),
+       value_type=st.sampled_from(["string", "bigint", "double"]),
+       pick=st.integers(0, 2**16))
+@example(frames=[_DUP_FRAME], value_type="string", pick=3)
+@example(frames=[_DUP_FRAME] * 2, value_type="bigint", pick=1)
+@example(frames=[_DUP_FRAME], value_type="double", pick=4)
+def test_lazy_property_matches_core(jvm, frames, value_type, pick):
+    """lazy_property == core.decode_properties(frame).get(key), typed by
+    value_type, on frames with repeated keys (the last wins) and every
+    Value field (uint64 and sint64 included); keys from frame_keys, in
+    wire order with repeats, equal the keys core reads."""
+    df = jvm.createDataFrame([(bytearray(f),) for f in frames], "geobuf binary").coalesce(1)
+    keys = [r.key for r in spark_codec.frame_keys(df).collect()]
+    wire = []
+    for f in frames:
+        for tag, s, _ in _fields(f):
+            if tag == 0x12:  # 0x12 len | 0x0A klen key ...
+                n, p = core.decode_varint(f, core.decode_varint(f, s + 1)[1] + 1)
+                wire.append(f[p:p + n].decode())
+    assert keys == wire
+    assert set(keys) == {k for f in frames for k in core.decode_properties(f)}
+    key = (keys + ["absent"])[pick % (len(keys) + 1)]
+    got = spark_codec.lazy_property(df, key, value_type=value_type).collect()
+    for (fid, value), f in zip(got, frames):
+        want = _typed(core.decode_properties(f).get(key), value_type)
+        assert fid == (core.decode_feature(f).id or 0)
+        assert value == want or (want != want and value != value), (key, value, want)

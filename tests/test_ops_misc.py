@@ -363,32 +363,48 @@ def test_commit_output_preserves_old_on_swap(spark, tmp_path):
     assert not any(d.startswith(".old-") for d in os.listdir(out))
 
 
-def test_fast_vs_generic_decode_parity(spark, reference_file):
-    """decode_features_fast (vectorized geometry + props-only row parse)
-    must reproduce the generic per-feature decoder on the reference's own
-    county file — ids, structure, props byte-for-byte; coords on the same
-    1e-7 lattice."""
-    path = reference_file("county.geobuf")
-    fast = {r.id: r for r in geobuf_file.decoded_features(spark, path, fast=True).collect()}
-    gen = {r.id: r for r in geobuf_file.decoded_features(spark, path, fast=False).collect()}
-    assert set(fast) == set(gen) and len(fast) == 3304
+def _assert_decodes_as_core(rows, frames):
+    """Each decode_features_fast row equals core.decode_feature of its
+    frame: ids, structure and props_json exactly; coords on the 1e-7
+    lattice, where core carries the reference's float accumulation, so any
+    diff is one rounding step."""
     import numpy as np
-    for fid, fr in fast.items():
-        gr = gen[fid]
-        assert (fr.geom_type, fr.dim) == (gr.geom_type, gr.dim)
-        assert fr.ring_lens == gr.ring_lens and fr.part_rings == gr.part_rings
-        assert fr.props_json == gr.props_json
-        d = np.abs(np.asarray(fr.coords) - np.asarray(gr.coords))
-        # generic path carries the reference's float-accumulation error;
-        # both land on the 1e-7 lattice, so any diff is one rounding step
-        assert d.max() <= 1.01e-7, (fid, d.max())
+
+    from geobuf_spark.codec import core
+
+    assert len(rows) == len(frames)
+    for r, frame in zip(rows, frames):
+        f = core.decode_feature(frame)
+        assert r.id == (f.id or 0)
+        assert (r.geom_type, r.dim) == (f.geom_type, f.dim), f.id
+        assert r.ring_lens == f.ring_lens.tolist(), f.id
+        assert r.part_rings == f.part_rings.tolist(), f.id
+        assert r.props_json == json.dumps(f.properties, sort_keys=True), f.id
+        assert len(r.coords) == len(f.coords), f.id
+        if r.coords:
+            d = np.abs(np.asarray(r.coords) - f.coords)
+            assert d.max() <= 1.01e-7, (f.id, d.max())
+
+
+def test_fast_vs_generic_decode_parity(spark, reference_file):
+    """decoded_features (JVM split + gb_decode) reproduces
+    core.decode_feature on the reference's own county file — ids,
+    structure, props byte-for-byte; coords on the same 1e-7 lattice."""
+    from geobuf_spark.codec import core
+
+    path = reference_file("county.geobuf")
+    rows = geobuf_file.decoded_features(spark, path).collect()
+    by_id = {r.id: r for r in rows}
+    frames = {core.decode_feature(f).id: bytes(f)
+              for f in core.read_frames(open(path, "rb").read())}
+    assert set(by_id) == set(frames) and len(rows) == 3304
+    _assert_decodes_as_core([by_id[i] for i in frames], list(frames.values()))
 
 
 def test_fast_vs_generic_decode_parity_synthetic(spark):
-    """decode_features_fast == decode_features_generic on one Arrow batch
-    mixing frames with properties, frames without, bare-properties frames
-    and a metadata dummy, over every geometry type: ids, structure and
-    props_json exactly, coords on the same 1e-7 lattice."""
+    """decode_features_fast == core.decode_feature on one batch mixing
+    frames with properties, frames without, bare-properties frames and a
+    metadata dummy, over every geometry type."""
     import numpy as np
 
     from geobuf_spark.codec import core, spark_codec
@@ -416,21 +432,11 @@ def test_fast_vs_generic_decode_parity_synthetic(spark):
         for i, p in enumerate([{"metadata": "x"}, {"only": "props", "z": 0}, {}])]
     df = spark.createDataFrame(
         [(bytearray(f),) for f in frames], "geobuf binary").coalesce(1)
-    fast = {r.id: r for r in spark_codec.decode_features_fast(df).collect()}
-    gen = {r.id: r for r in spark_codec.decode_features_generic(df).collect()}
-    assert set(fast) == set(gen) == set(range(1, 10)) | {10, 11, 12}
-    for fid, fr in fast.items():
-        gr = gen[fid]
-        assert (fr.geom_type, fr.dim) == (gr.geom_type, gr.dim), fid
-        assert fr.ring_lens == gr.ring_lens, fid
-        assert fr.part_rings == gr.part_rings, fid
-        assert fr.props_json == gr.props_json, fid
-        assert len(fr.coords) == len(gr.coords), fid
-        if fr.coords:
-            d = np.abs(np.asarray(fr.coords) - np.asarray(gr.coords))
-            assert d.max() <= 1.01e-7, (fid, d.max())
-    assert json.loads(fast[2].props_json) == props
-    assert fast[3].props_json == fast[12].props_json == "{}"
+    rows = spark_codec.decode_features_fast(df).collect()
+    assert [r.id for r in rows] == list(range(1, 13))
+    _assert_decodes_as_core(rows, frames)
+    assert json.loads(rows[1].props_json) == props
+    assert rows[2].props_json == rows[11].props_json == "{}"
 
 
 def test_fast_decode_tolerates_bare_properties_frames(spark):

@@ -280,3 +280,78 @@ def test_line_ring_codec_evaluated_once(spark, geobuf_dir):
             assert marker not in plan, (udf, marker, plan)
         calls = re.findall(r"\bgb_\w+\(", plan)
         assert udf in calls and len(calls) == len(set(calls)), (udf, plan)
+
+
+def _codec_cases(spark, geobuf_dir):
+    """name → a small DataFrame over every public spark_codec function,
+    plus decoded_features and lazy_property filtered on its value."""
+    from geobuf_spark.codec import core, jvm_codec, spark_codec as sc
+    from geobuf_spark.sources import geobuf_file
+
+    lines = jvm_codec.read_geobuf_files_jvm(spark, geobuf_dir)
+    pts = spark.createDataFrame(
+        [(i, 0.5 * i, -0.25 * i, ["en", "de"][i % 2], i * 7) for i in range(8)],
+        "doc_id long, lon double, lat double, lang string, n_chars long")
+    props = sc.encode_points_with_props(pts, props=["lang", "n_chars"])
+    polys = spark.createDataFrame(
+        [(i, [0.0, 0.0, 1.0, 0.0, 0.0, 1.0 + i], [3]) for i in range(8)],
+        "poly_id long, coords array<double>, ring_lens array<int>")
+    feats = spark.createDataFrame(
+        [(i, 2, 2, [0.5 * i, 1.0, 0.25, -0.5], [2], [1], '{"k": %d}' % i)
+         for i in range(8)], sc.GEOM_SCHEMA)
+    poly_frames = spark.createDataFrame(
+        [(bytearray(core.encode_feature(core.Feature.from_geojson(
+            "Polygon", [[[0, 0], [1, 0], [0, 1 + i], [0, 0]]], id=i))),)
+         for i in range(8)], "geobuf binary")
+    return {
+        "encode_points": sc.encode_points(pts),
+        "decode_points": sc.decode_points(sc.encode_points(pts)),
+        "decode_points_agg": sc.decode_points_agg(sc.encode_points(pts)),
+        "roundtrip_points": sc.roundtrip_points(pts),
+        "encode_lines": sc.encode_lines(lines.select(
+            F.lit(1).alias("line_id"), F.array(F.lit(0.5), F.lit(1.5)).alias("coords"))),
+        "decode_lines": sc.decode_lines(lines),
+        "decode_lines_agg": sc.decode_lines_agg(lines),
+        "encode_polygons": sc.encode_polygons(polys),
+        "decode_polygons": sc.decode_polygons(poly_frames),
+        "decode_features_fast": sc.decode_features_fast(props),
+        "encode_features_generic": sc.encode_features_generic(feats)
+        .where(F.octet_length("geobuf") > 0),
+        "encode_points_with_props": props.where(F.octet_length("geobuf") > 0),
+        "lazy_property": sc.lazy_property(props, "lang").where(F.col("lang") == "en"),
+        "frame_keys": sc.frame_keys(props).where(F.col("key") == "lang"),
+        "frame_bbox": sc.frame_bbox(lines),
+        "decoded_features": geobuf_file.decoded_features(spark, geobuf_dir)
+        .where(F.size("coords") > 4),
+    }
+
+
+_CODEC_CASES = ["encode_points", "decode_points", "decode_points_agg",
+                "roundtrip_points", "encode_lines", "decode_lines",
+                "decode_lines_agg", "encode_polygons", "decode_polygons",
+                "decode_features_fast", "encode_features_generic",
+                "encode_points_with_props", "lazy_property", "frame_keys",
+                "frame_bbox", "decoded_features"]
+
+
+def test_codec_cases_cover_spark_codec():
+    """_CODEC_CASES names every public spark_codec function."""
+    import inspect
+
+    from geobuf_spark.codec import spark_codec
+
+    public = {n for n, f in inspect.getmembers(spark_codec, inspect.isfunction)
+              if not n.startswith("_") and f.__module__ == spark_codec.__name__}
+    assert public == set(_CODEC_CASES) - {"decoded_features"}
+
+
+@pytest.mark.parametrize("name", _CODEC_CASES)
+def test_codec_plan_has_no_python(spark, geobuf_dir, name):
+    """Every codec function plans in the JVM: no Python node, and each
+    gb_* UDF is evaluated once per row — a filter on an output column or a
+    collapsed projection does not repeat it."""
+    plan = _final_plan(_codec_cases(spark, geobuf_dir)[name])
+    for marker in _PYTHON_NODES:
+        assert marker not in plan, (name, marker, plan)
+    calls = re.findall(r"\bgb_\w+\(", plan)
+    assert calls and len(calls) == len(set(calls)), (name, plan)

@@ -1,7 +1,9 @@
 """Spark-level geobuf codec: encode/decode round trips on DataFrames."""
 
+import json
+import math
+
 import numpy as np
-import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -41,8 +43,10 @@ def test_points_frames_reference_decodable(spark, sf_small):
 
 
 def test_generic_roundtrip_df(spark):
-    import json
-
+    """encode_features_generic writes core.encode_feature's frames for
+    GEOM_SCHEMA rows (MultiPolygon parts included) and keeps the input
+    columns; decode_features_fast reads them back as core.decode_feature
+    does."""
     feats = [
         (1, 3, 2, [0.0, 0.0, 4.0, 0.0, 4.0, 4.0, 0.0, 0.0], [4], [1], json.dumps({"name": "sq"})),
         (2, 2, 2, [10.5, -3.25, 11.0, -3.5], [2], [1], json.dumps({"k": 7})),
@@ -51,13 +55,20 @@ def test_generic_roundtrip_df(spark):
     ]
     df = spark.createDataFrame(feats, schema=sc.GEOM_SCHEMA)
     enc = sc.encode_features_generic(df)
-    dec = sc.decode_features_generic(enc)
-    got = {r.id: r for r in dec.collect()}
+    assert enc.columns == df.columns + ["geobuf"]
+    frames = {r.id: bytes(r.geobuf) for r in enc.collect()}
+    dec = {r.id: r for r in sc.decode_features_fast(enc).collect()}
     for fid, gt, dim, coords, rl, pr, props in feats:
-        r = got[fid]
-        assert r.geom_type == gt and r.dim == dim
-        assert list(r.ring_lens) == rl and list(r.part_rings) == pr
+        assert frames[fid] == core.encode_feature(core.Feature(
+            geom_type=gt, dim=dim, coords=np.array(coords), ring_lens=np.array(rl),
+            part_rings=np.array(pr), id=fid, properties=json.loads(props)))
+        f, r = core.decode_feature(frames[fid]), dec[fid]
+        assert (r.geom_type, r.dim) == (f.geom_type, f.dim) == (gt, dim)
+        assert list(r.ring_lens) == f.ring_lens.tolist() == rl
+        assert list(r.part_rings) == f.part_rings.tolist() == pr
+        assert np.abs(np.array(r.coords) - f.coords).max() <= 1.01e-7
         assert np.abs(np.array(r.coords) - np.array(coords)).max() <= 1e-7
+        assert r.props_json == json.dumps(f.properties, sort_keys=True)
         assert json.loads(r.props_json) == json.loads(props)
 
 
@@ -74,9 +85,29 @@ def test_kernel_empty_batch(spark):
 # vectorized property tables (fixed schema) on the point hot path
 # ---------------------------------------------------------------------------
 
-def test_points_props_kernel_byte_parity():
-    import numpy as np
+def _props_points(spark, ids, lon, lat, **cols):
+    """A (doc_id, lon, lat, *cols) DataFrame and the property columns:
+    string or double/bigint by the first value. Built from rows, since a
+    pandas float column would turn NaN into null."""
+    types = {k: "string" if isinstance(v[0], str) else
+             "double" if isinstance(v[0], (float, np.floating)) else "bigint"
+             for k, v in cols.items()}
+    schema = ", ".join(["doc_id bigint, lon double, lat double"]
+                       + [f"{k} {t}" for k, t in types.items()])
+    rows = [(int(i), float(x), float(y),
+             *(v[j].item() if isinstance(v[j], np.generic) else v[j] for v in cols.values()))
+            for j, (i, x, y) in enumerate(zip(ids, lon, lat))]
+    return spark.createDataFrame(rows, schema), list(cols)
 
+
+def _core_point(i, x, y, props):
+    return core.encode_feature(core.Feature.from_geojson(
+        "Point", [float(x), float(y)], id=int(i), properties=props))
+
+
+def test_points_props_kernel_byte_parity(spark):
+    """encode_points_with_props frames equal core.encode_feature's, byte
+    for byte: string (multi-byte UTF-8, empty) and int property columns."""
     rng = np.random.default_rng(47)
     n = 300
     ids = rng.integers(0, 2**40, n)
@@ -84,22 +115,14 @@ def test_points_props_kernel_byte_parity():
     langs = [["en", "de", "fr", "zh-Hant", ""][i % 5] for i in range(n)]
     urls = [f"https://example.com/page/{i}?q=é{i%7}" for i in range(n)]
     nchars = rng.integers(0, 1_000_000, n)
-    flat_l = np.frombuffer("".join(langs).encode("utf-8"), dtype=np.uint8)
-    offs_l = np.concatenate(([0], np.cumsum([len(s.encode()) for s in langs]))).astype(np.int64)
-    flat_u = np.frombuffer("".join(urls).encode("utf-8"), dtype=np.uint8)
-    offs_u = np.concatenate(([0], np.cumsum([len(s.encode()) for s in urls]))).astype(np.int64)
-    arr = sc.encode_points_props_kernel(ids, lon, lat, [
-        ("url", "str", (flat_u, offs_u)),
-        ("lang", "str", (flat_l, offs_l)),
-        ("n_chars", "int", nchars),
-    ])
-    for i in range(0, n, 23):
-        cf = core.Feature.from_geojson(
-            "Point", [lon[i], lat[i]], id=int(ids[i]),
-            properties={"url": urls[i], "lang": langs[i], "n_chars": int(nchars[i])})
-        assert core.encode_feature(cf) == arr[i].as_py(), i
+    df, props = _props_points(spark, ids, lon, lat, url=urls, lang=langs, n_chars=nchars)
+    got = {r.doc_id: bytes(r.geobuf)
+           for r in sc.encode_points_with_props(df, props=props).collect()}
+    want = {int(ids[i]): _core_point(ids[i], lon[i], lat[i], {
+        "url": urls[i], "lang": langs[i], "n_chars": int(nchars[i])}) for i in range(n)}
+    assert got == want
     # round-trip through the reference-semantics decoder
-    f = core.decode_feature(arr[5].as_py())
+    f = core.decode_feature(got[int(ids[5])])
     assert f.properties == {"url": urls[5], "lang": langs[5], "n_chars": int(nchars[5])}
 
 
@@ -118,20 +141,23 @@ def test_encode_points_with_props_dataframe(spark, sf_small):
         assert f.id == r.doc_id and f.geom_type == 1
 
 
-def test_points_props_kernel_float_parity():
-    import numpy as np
-
+def test_points_props_kernel_float_parity(spark):
+    """Float property columns keep their bits on the wire, NaN and ±Inf
+    included (no detour through JSON text, where they would turn into
+    strings): frames equal core.encode_feature's."""
     rng = np.random.default_rng(53)
     n = 100
     ids = np.arange(n); lon = rng.uniform(-170, 170, n); lat = rng.uniform(-80, 80, n)
     vals = rng.standard_normal(n) * 1e6
-    arr = sc.encode_points_props_kernel(ids, lon, lat, [("score", "float", vals)])
-    for i in range(0, n, 13):
-        cf = core.Feature.from_geojson("Point", [lon[i], lat[i]], id=int(ids[i]),
-                                       properties={"score": float(vals[i])})
-        assert core.encode_feature(cf) == arr[i].as_py(), i
-    f = core.decode_feature(arr[3].as_py())
-    assert f.properties["score"] == vals[3]
+    vals[[1, 2, 4, 5]] = [math.nan, math.inf, -math.inf, -0.0]
+    df, props = _props_points(spark, ids, lon, lat, score=vals)
+    got = {r.doc_id: bytes(r.geobuf)
+           for r in sc.encode_points_with_props(df, props=props).collect()}
+    assert got == {i: _core_point(i, lon[i], lat[i], {"score": float(vals[i])})
+                   for i in range(n)}
+    assert core.decode_feature(got[3]).properties["score"] == vals[3]
+    assert math.isnan(core.decode_feature(got[1]).properties["score"])
+    assert core.decode_feature(got[4]).properties["score"] == -math.inf
 
 
 def test_lazy_property_extraction(spark, sf_small):
@@ -160,27 +186,22 @@ def test_lazy_property_extraction(spark, sf_small):
     enc.unpersist()
 
 
-def test_lazy_property_kernel_direct():
-    import numpy as np
-
+def test_lazy_property_kernel_direct(spark):
+    """lazy_property of a string and a double column equals
+    core.decode_properties(frame).get(key) on every frame."""
     rng = np.random.default_rng(61)
     n = 50
     ids = np.arange(n)
     lon = rng.uniform(-10, 10, n); lat = rng.uniform(-10, 10, n)
     tiles = [f"9/{i}/{i*2}" for i in range(n)]
-    flat = np.frombuffer("".join(tiles).encode(), dtype=np.uint8)
-    offs = np.concatenate(([0], np.cumsum([len(t) for t in tiles]))).astype(np.int64)
     scores = rng.standard_normal(n)
-    arr = sc.encode_points_props_kernel(ids, lon, lat, [
-        ("TILEID", "str", (flat, offs)),
-        ("score", "float", scores),
-    ])
-    got_ids, kinds, strs, ivals, fvals = sc.lazy_prop_kernel(arr, "TILEID")
-    assert got_ids.tolist() == ids.tolist()
-    assert (kinds == 1).all()
-    assert strs == tiles
-    _, k2, _, _, f2 = sc.lazy_prop_kernel(arr, "score")
-    assert (k2 == 3).all() and np.array_equal(f2, scores)
+    df, props = _props_points(spark, ids, lon, lat, TILEID=tiles, score=scores)
+    enc = sc.encode_points_with_props(df, props=props).coalesce(1)
+    frames = [bytes(r.geobuf) for r in enc.collect()]
+    assert [r.TILEID for r in sc.lazy_property(enc, "TILEID").collect()] == tiles
+    got = [tuple(r) for r in sc.lazy_property(enc, "score", value_type="double").collect()]
+    assert got == [(i, core.decode_properties(f)["score"]) for i, f in enumerate(frames)]
+    assert [s for _, s in got] == scores.tolist()
 
 
 def test_frame_keys_and_bbox_wire_level(spark, sf_small):
@@ -193,9 +214,11 @@ def test_frame_keys_and_bbox_wire_level(spark, sf_small):
         docs.select("doc_id", "lang", "n_chars"), "doc_id")
     enc = sc.encode_points_with_props(pts, props=["lang", "n_chars"]).cache()
 
-    # ReadKeys parity: distinct keys over all frames
-    keys = {r.key for r in sc.frame_keys(enc).distinct().collect()}
-    assert keys == {"lang", "n_chars"}
+    # ReadKeys parity: every key of every frame, as core reads them
+    keys = sorted(r.key for r in sc.frame_keys(enc).collect())
+    assert keys == sorted(k for r in enc.collect()
+                          for k in core.decode_properties(bytes(r.geobuf)))
+    assert set(keys) == {"lang", "n_chars"}
 
     # ReadBB parity: bbox without decoding geometry == quantized point box
     bb = sc.frame_bbox(enc)
@@ -214,8 +237,6 @@ def test_frame_keys_and_bbox_wire_level(spark, sf_small):
 def test_frame_bbox_missing_field(spark, reference_file):
     """county.geobuf was written by an older encoder with NO bbox field —
     the wire-level reader must yield not-found, not garbage."""
-    import pyarrow as pa
-
     from geobuf_spark.codec.core import read_frames
 
     data = open(reference_file("county.geobuf"), "rb").read()
@@ -224,12 +245,11 @@ def test_frame_bbox_missing_field(spark, reference_file):
         frames.append(bytes(fr))
         if i >= 50:
             break
-    arr = pa.array(frames, type=pa.binary())
     df = spark.createDataFrame([(bytearray(f),) for f in frames], "geobuf binary")
     assert sc.frame_bbox(df).filter(F.col("w_q").isNotNull()).count() == 0
     # but keys ARE readable from the same frames
-    rows, keys = sc.frame_keys_kernel(arr)
-    assert "AREA" in set(keys) and "COLORKEY" in set(keys)
+    keys = {r.key for r in sc.frame_keys(df).collect()}
+    assert "AREA" in keys and "COLORKEY" in keys
 
 
 def test_decode_points_any_with_props(spark, sf_small):
@@ -271,18 +291,15 @@ def test_review_regressions(spark, gb_decode):
 
     # (a) the geometry code of props-bearing frames is read by field, not
     # at a fixed offset
-    flat_l = np.frombuffer(b"ende", dtype=np.uint8); offs_l = np.array([0, 2, 4])
-    arr = sc.encode_points_props_kernel(
-        np.array([1, 2]), np.array([1.0, 2.0]), np.array([3.0, 4.0]),
-        [("lang", "str", (flat_l, offs_l))])
-    rows = gb_decode([f.as_py() for f in arr])
+    df, props = _props_points(spark, [1, 2], [1.0, 2.0], [3.0, 4.0], lang=["en", "de"])
+    enc = sc.encode_points_with_props(df, props=props).orderBy("doc_id")
+    rows = gb_decode([bytes(r.geobuf) for r in enc.collect()])
     assert [r.geom_type for r in rows] == [1, 1]
     assert [r.props_json for r in rows] == ['{"lang": "en"}', '{"lang": "de"}']
     # (b) id-less frames: lazy read still finds the property
     f = core.Feature.from_geojson("Point", [1.0, 2.0], properties={"lang": "en"})
-    a2 = pa.array([core.encode_feature(f)], type=pa.binary())
-    _, kinds, strs, _, _ = sc.lazy_prop_kernel(a2, "lang")
-    assert kinds.tolist() == [1] and strs == ["en"]
+    a2 = spark.createDataFrame([(core.encode_feature(f),)], "geobuf binary")
+    assert [tuple(r) for r in sc.lazy_property(a2, "lang").collect()] == [(0, "en")]
     # (c) zero-vertex lines, empty rings and ring-less polygons rejected
     # loudly, naming the fault
     lines = spark.createDataFrame([(1, [0.1, 0.2]), (2, [])],
@@ -332,9 +349,9 @@ def test_s2_cover_antimeridian_split(spark):
     assert cells_got <= set(c.tolist())
 
 
-def test_lazy_readers_long_property_keys():
+def test_lazy_readers_long_property_keys(spark):
     """Keys >= 128 bytes encode their length as a multi-byte varint; the
-    lazy walkers must read it as a varint, not one byte (ADVICE r01)."""
+    lazy readers must read it as a varint, not one byte (ADVICE r01)."""
     long_key = "k" * 130
     frames = []
     for fid in range(8):
@@ -347,22 +364,15 @@ def test_lazy_readers_long_property_keys():
             properties={long_key: fid * 11, "short": f"s{fid}"},
         )
         frames.append(core.encode_feature(feat))
-    arr = pa.array(frames, type=pa.binary())
+    df = spark.createDataFrame([(f,) for f in frames], "geobuf binary").coalesce(1)
 
-    ids, kinds, strs, ivals, fvals = sc.lazy_prop_kernel(arr, long_key)
-    assert ids.tolist() == list(range(8))
-    assert kinds.tolist() == [2] * 8
-    assert ivals.tolist() == [fid * 11 for fid in range(8)]
+    got = [tuple(r) for r in sc.lazy_property(df, long_key, value_type="bigint").collect()]
+    assert got == [(fid, fid * 11) for fid in range(8)]
     # the SECOND property (after the long-key one) must still be reachable
-    _, k2, s2, _, _ = sc.lazy_prop_kernel(arr, "short")
-    assert k2.tolist() == [1] * 8
-    assert s2 == [f"s{fid}" for fid in range(8)]
-
-    rows, keys = sc.frame_keys_kernel(arr)
-    by_row = {}
-    for r, k in zip(rows.tolist(), keys):
-        by_row.setdefault(r, []).append(k)
-    assert all(v == [long_key, "short"] for v in by_row.values())
+    got = [tuple(r) for r in sc.lazy_property(df, "short").collect()]
+    assert got == [(fid, f"s{fid}") for fid in range(8)]
+    assert [r.key for r in sc.frame_keys(df).collect()] == [long_key, "short"] * 8
+    assert [list(core.decode_properties(f)) for f in frames] == [[long_key, "short"]] * 8
 
 
 def test_encode_props_rejects_nulls(spark):
