@@ -708,22 +708,18 @@ def _read_varint_at(flat: np.ndarray, pos: np.ndarray):
     return vals, lens
 
 
-def frame_fields_walk(flat: np.ndarray, starts: np.ndarray, ends: np.ndarray,
-                      max_fields: int = 64):
+def frame_fields_walk(flat: np.ndarray, starts: np.ndarray, ends: np.ndarray):
     """Field-level walk over frames: yields per round (active frame idx,
     tag byte, field payload start, payload length). Varint fields report
-    length 0 with start at the varint."""
-    n = len(starts)
+    length 0 with start at the varint. Each field takes at least 2 bytes
+    (tag + one varint byte), so the longest frame bounds the rounds."""
     pos = starts.copy()
     rounds = []
     active = np.flatnonzero(pos < ends)
-    for _round in range(max_fields):
+    budget = int((ends - starts).max(initial=0)) // 2 + 1
+    for _ in range(budget):
         if len(active) == 0:
             break
-        if _round == max_fields - 1:
-            raise ValueError(
-                f"frame with more than {max_fields} fields — raise max_fields "
-                "(silent truncation would read as missing data)")
         p = pos[active]
         tag = flat[p]
         wire = tag & 0x7

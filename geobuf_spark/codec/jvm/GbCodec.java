@@ -37,10 +37,11 @@ import scala.collection.Seq;
  * exact rule core.frame_fields_walk applies).
  *
  * The field walk accepts and rejects exactly the frames the numpy
- * core.frame_fields_walk does. A corrupt frame fails the task:
- * >63 fields, a field payload or the geometry payload overrunning the
- * frame, a payload ending mid-varint, a missing geometry/code, a
- * non-point payload in Point, a token count not divisible by dim in lines.
+ * core.frame_fields_walk does. A corrupt frame fails the task: a field
+ * payload or the geometry payload overrunning the frame, a payload ending
+ * mid-varint, a missing geometry/code, a non-point payload in Point, a
+ * token count not divisible by dim in lines. No field count is capped:
+ * the frame length bounds the walk.
  * gb_decode also rejects what core.decode_feature rejects: an invalid or
  * overrunning ring count, an unknown geometry type, and properties that
  * core.decode_properties cannot parse.
@@ -58,15 +59,15 @@ public final class GbCodec {
     /**
      * Bounds-checked forward walk over b[p..end) - the
      * core.frame_fields_walk rules: single-byte tags, wire 2 jumps its
-     * varint length prefix, every other wire type reads as a varint, at
-     * most 63 fields. A varint
-     * longer than 10 bytes or running past the end, and a payload running
-     * past the end, throw.
+     * varint length prefix, every other wire type reads as a varint. The
+     * frame length bounds the walk: each field takes at least 2 bytes. A
+     * varint longer than 10 bytes or running past the end, and a payload
+     * running past the end, throw.
      */
     static final class Walker {
         final byte[] b;
         final int end;
-        int p, fields, tag, start;
+        int p, tag, start;
         long value;
 
         Walker(byte[] b, int p, int end) {
@@ -102,9 +103,6 @@ public final class GbCodec {
         /** Next field: tag, value (the length for wire 2), payload start. */
         boolean next() {
             if (p >= end) return false;
-            if (++fields > 63)
-                throw new IllegalArgumentException(
-                    "frame with more than 63 fields - truncated or corrupt input");
             tag = b[p++] & 0xFF;
             value = varint();
             if ((tag & 0x7) == 2) start = skip(value);

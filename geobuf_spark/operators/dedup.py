@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from geobuf_spark.functions import phash
 from geobuf_spark.functions.text import tokens
+from geobuf_spark.operators.fixpoint import iterate
 
 
 def dedup_exact(df: DataFrame, key: str, text_col: str = "text") -> DataFrame:
@@ -365,19 +366,18 @@ def near_dup_components(pairs: DataFrame, a: str = "a", b: str = "b",
     Min-label propagation WITH pointer jumping: each round every node
     takes the min over its neighbors' labels, then compresses one level
     (label := label-of-label) — chains converge in O(log diameter) rounds
-    instead of O(diameter). Raises if max_iters rounds still have not
-    reached the fixpoint (a silent partial result would split components
-    and let duplicates survive). Pairs are undirected; nodes absent from
-    `pairs` are their own representative (callers usually left-join this
-    output and coalesce to doc_id)."""
+    instead of O(diameter). Raises ValueError if max_iters rounds still
+    have not reached the fixpoint (a silent partial result would split
+    components and let duplicates survive). Pairs are undirected; nodes
+    absent from `pairs` are their own representative (callers usually
+    left-join this output and coalesce to doc_id)."""
     edges = (
         pairs.select(F.col(a).alias("u"), F.col(b).alias("v"))
         .unionByName(pairs.select(F.col(b).alias("u"), F.col(a).alias("v")))
         .distinct()
     ).localCheckpoint(eager=False)  # pairs may be an expensive LSH plan
-    labels = edges.select("u").distinct().withColumn("label", F.col("u"))
-    converged = False
-    for _ in range(max_iters):
+
+    def step(labels, _):
         # candidate label per node: min over neighbors' labels and its own
         neigh = (
             edges.join(labels.withColumnRenamed("u", "v"), "v")
@@ -389,22 +389,17 @@ def near_dup_components(pairs: DataFrame, a: str = "a", b: str = "b",
         )
         # pointer jumping: label := label(label) — halves chain distances
         mapping = new_labels.select(F.col("u").alias("label"), F.col("label").alias("_ll"))
-        new_labels = (
+        return (
             new_labels.join(mapping, "label", "left")
             .select("u", F.least("label", F.coalesce("_ll", "label")).alias("label"))
         )
-        changed = (
-            new_labels.alias("n").join(labels.alias("o"), "u")
-            .filter(F.col("n.label") != F.col("o.label")).limit(1).count()
-        )
-        labels = new_labels.localCheckpoint(eager=True)
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"near_dup_components did not converge in {max_iters} rounds — "
-            "raise max_iters (partial labels would split components)")
+
+    labels = iterate(
+        edges.select("u").distinct().withColumn("label", F.col("u")), step, max_iters,
+        until=lambda new, old: (
+            new.alias("n").join(old.alias("o"), "u")
+            .filter(F.col("n.label") != F.col("o.label"))),
+        what="near_dup_components")
     return labels.select(F.col("u").alias("doc_id"), F.col("label").alias("rep_id"))
 
 

@@ -23,6 +23,7 @@ from geobuf_spark.functions import geom, hexgrid, phash, tiles
 from geobuf_spark.operators import dedup, knn, ranking, similarity, sketch
 from geobuf_spark.operators import spatial_join as sj
 from geobuf_spark.operators import tiling
+from geobuf_spark.operators.fixpoint import With, iterate, sql_rounds
 from geobuf_spark.sources import minted, pages
 from geobuf_spark.streaming import windows as W
 from ._shared import *  # noqa: F401,F403
@@ -1193,8 +1194,8 @@ def q_isotonic_daily(spark, sf):
     wb = Win.partitionBy("event_type").orderBy("bs")
     whead = (Win.partitionBy("event_type").orderBy("bs")
              .rowsBetween(Win.unboundedPreceding, 0))
-    converged = False
-    for _ in range(ISO_ROUNDS):
+
+    def step(blocks, _):
         flagged = (blocks
                    .withColumn("ps", F.lag("s").over(wb))
                    .withColumn("pl", F.lag("l").over(wb))
@@ -1202,21 +1203,18 @@ def q_isotonic_daily(spark, sf):
                                F.coalesce(F.col("ps") * F.col("l")
                                           > F.col("s") * F.col("pl"),
                                           F.lit(False))))
-        nviol = flagged.filter(F.col("viol_prev")).limit(1).count()
-        if nviol == 0:
-            converged = True
-            break
         grouped = (flagged.withColumn(
             "grp", F.max(F.when(~F.col("viol_prev"), F.col("bs")))
             .over(whead)))
-        blocks = (grouped.groupBy("event_type", "grp")
-                  .agg(F.min("bs").alias("bs"), F.max("be").alias("be"),
-                       F.sum("s").alias("s"), F.sum("l").alias("l"))
-                  .select("event_type", "bs", "be", "s", "l")
-                  .localCheckpoint(eager=True))
-    if not converged:
-        raise ValueError(
-            f"isotonic_daily did not converge in {ISO_ROUNDS} rounds")
+        return (grouped.groupBy("event_type", "grp")
+                .agg(F.min("bs").alias("bs"), F.max("be").alias("be"),
+                     F.sum("s").alias("s"), F.sum("l").alias("l"),
+                     (F.count("*") > 1).alias("merged")))
+
+    # a round without a violation merges nothing: that is the fixpoint
+    blocks = iterate(blocks, step, ISO_ROUNDS,
+                     until=lambda new, old: new.filter("merged"),
+                     what="isotonic_daily")
     fit = (pts.join(blocks, (pts["event_type"] == blocks["event_type"])
                     & (pts["i"] >= F.col("bs"))
                     & (pts["i"] <= F.col("be")))
@@ -1228,27 +1226,26 @@ def q_isotonic_daily(spark, sf):
     return fit
 
 def _isotonic_daily_sql() -> str:
-    steps = []
-    for r in range(1, ISO_ROUNDS + 1):
+    def step(r):
         p = r - 1
-        steps.append(f"""
-        f{r} AS (SELECT *,
+        return {
+            f"f{r}": f"""(SELECT *,
                         coalesce(lag(s) OVER wb * l
                                  > s * lag(l) OVER wb, false)
                             AS viol_prev
                  FROM b{p}
-                 WINDOW wb AS (PARTITION BY event_type ORDER BY bs)),
-        g{r} AS (SELECT *, max(CASE WHEN NOT viol_prev THEN bs END)
+                 WINDOW wb AS (PARTITION BY event_type ORDER BY bs))""",
+            f"g{r}": f"""(SELECT *, max(CASE WHEN NOT viol_prev THEN bs END)
                      OVER (PARTITION BY event_type ORDER BY bs
                            ROWS BETWEEN UNBOUNDED PRECEDING
                            AND CURRENT ROW) AS grp
-                 FROM f{r}),
-        b{r} AS MATERIALIZED (
+                 FROM f{r})""",
+            f"b{r}": f"""MATERIALIZED (
             SELECT event_type, min(bs) AS bs, max(be) AS be,
                    sum(s) AS s, sum(l) AS l
-            FROM g{r} GROUP BY event_type, grp)""")
-    return f"""
-        WITH daily AS (
+            FROM g{r} GROUP BY event_type, grp)"""}
+
+    return (With("""daily AS (
             SELECT event_type,
                    CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS d,
                    count(*) AS c
@@ -1259,15 +1256,15 @@ def _isotonic_daily_sql() -> str:
                 FROM daily),
         b0 AS (SELECT event_type, i AS bs, i AS be, c AS s,
                       CAST(1 AS BIGINT) AS l
-               FROM pts),
-        {','.join(steps)}
-        SELECT p.event_type, p.d, p.c,
+               FROM pts)""")
+            .extend(sql_rounds(ISO_ROUNDS, step))
+            .select(f"""SELECT p.event_type, p.d, p.c,
                CAST(b.s AS BIGINT) AS fit_num,
                CAST(b.l AS BIGINT) AS fit_den,
                CAST(1000 * b.s // b.l AS BIGINT) AS fit_milli
         FROM pts p JOIN b{ISO_ROUNDS} b
             ON b.event_type = p.event_type
-            AND p.i >= b.bs AND p.i <= b.be"""
+            AND p.i >= b.bs AND p.i <= b.be"""))
 
 def q_mase_seasonal(spark, sf):
     # seasonal-naive forecast evaluation (MASE-style): predict each

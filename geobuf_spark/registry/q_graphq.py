@@ -20,12 +20,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from geobuf_spark.functions import text as TXT
 from geobuf_spark.functions import geom, hexgrid, phash, tiles
-from geobuf_spark.operators import dedup, knn, ranking, similarity, sketch
+from geobuf_spark.operators import dedup, graph, knn, ranking, similarity, sketch
+from geobuf_spark.operators.fixpoint import With, iterate, sql_rounds
 from geobuf_spark.operators import spatial_join as sj
 from geobuf_spark.operators import tiling
 from geobuf_spark.sources import minted, pages
 from geobuf_spark.streaming import windows as W
 from ._shared import *  # noqa: F401,F403
+
+# the host-edge fixture as the edges(src, dst) CTE the PPR/HITS twins read
+_HOST_EDGES_SQL = _host_edges_cte() + ", edges AS (SELECT src, dst FROM ed)"
 
 
 def q_hits_hosts(spark, sf):
@@ -33,7 +37,6 @@ def q_hits_hosts(spark, sf):
     # fixed-point iterations with max-normalization (one 1-row global agg
     # per half-step, broadcast back); every step BIGINT so the DuckDB twin
     # chains the identical CTEs. One shuffle per half-step.
-    from geobuf_spark.operators import graph
     e = _page_link_edges(spark, 2000).select(
         F.col("src_host").alias("src"),
         TXT.url_host(F.col("dst")).alias("dst"))
@@ -46,19 +49,12 @@ def q_triangle_hosts(spark, sf):
     # link graph — the cohesion measure pagerank/HITS (importance) don't
     # give. Degree-ordered compact-forward orientation bounds the wedge
     # join; see graph.triangle_stats for the 10^8-host plan notes.
-    from geobuf_spark.operators import graph
-    ed = _page_link_edges(spark, 2000).select(
-        "src_host", TXT.url_host(F.col("dst")).alias("dst_host"))
-    return graph.triangle_stats(ed, "src_host", "dst_host")
+    return graph.triangle_stats(_host_edges(spark), "src_host", "dst_host")
 
 def _triangle_hosts_sql() -> str:
     """Oracle for q_triangle_hosts: regenerated link edges mapped to host
     pairs, then the brute u<v<w three-way join (graph.sql_triangle_stats)."""
-    from geobuf_spark.operators import graph
-    cte = (_links_cte() + f""",
-        ed AS (SELECT src_host AS src, {TXT.sql_url_host('dst')} AS dst
-               FROM e)""")
-    return graph.sql_triangle_stats(cte, "src", "dst")
+    return graph.sql_triangle_stats(_host_edges_cte(), "src", "dst")
 
 def q_link_reciprocity(spark, sf):
     # graph reciprocity: the share of directed host links whose reverse
@@ -103,7 +99,6 @@ def q_pagerank_hosts(spark, sf):
     # (edges ⋈ ranks, groupBy dst with partial sums); rank/degree tables
     # are hosts-sized, broadcast by AQE when they fit. Top-25 by rank with
     # a (rank_ppm, host) total order.
-    from geobuf_spark.operators import graph
     e = _page_link_edges(spark, 2000).select(
         F.col("src_host").alias("src"),
         TXT.url_host(F.col("dst")).alias("dst"))
@@ -117,13 +112,11 @@ def q_clustering_coeff(spark, sf):
     # integers end-to-end; the compact-forward orientation finds each
     # triangle once and ONE explode credits its three corners
     # (graph.local_clustering for the 10^8-host plan notes).
-    from geobuf_spark.operators import graph
     return graph.local_clustering(_host_edges(spark), "src_host", "dst_host")
 
 def _clustering_coeff_sql() -> str:
     """Oracle for q_clustering_coeff: brute per-corner wedge close over
     the regenerated edges (graph.sql_local_clustering)."""
-    from geobuf_spark.operators import graph
     return graph.sql_local_clustering(_host_edges_cte(), "src", "dst")
 
 def q_link_prediction_ra(spark, sf):
@@ -133,12 +126,10 @@ def q_link_prediction_ra(spark, sf):
     # hubs, and unlike Adamic-Adar needs no log — so the fixed-point form
     # hashes identically on both engines). min_common=2 is the same
     # fan-out cap contract as cocitation_pairs.
-    from geobuf_spark.operators import graph
     return graph.resource_allocation(_host_edges(spark),
                                      "src_host", "dst_host", min_common=2)
 
 def _link_prediction_ra_sql() -> str:
-    from geobuf_spark.operators import graph
     return graph.sql_resource_allocation(_host_edges_cte(), "src", "dst",
                                          min_common=2)
 
@@ -148,17 +139,13 @@ def q_bfs_hops3(spark, sf):
     # "crawl frontier depth" query. Each round is one join + one min-agg
     # shuffle with lineage checkpoints (graph.bfs_hops); the oracle
     # unrolls the same rounds as CTEs.
-    from geobuf_spark.operators import graph
     ed = _host_edges(spark)
-    nodes = (ed.select(F.col("src_host").alias("host"))
-             .unionByName(ed.select(F.col("dst_host").alias("host")))
-             .distinct())
-    seeds = nodes.filter(F.col("host").endswith("00.example"))
+    seeds = (graph.nodes(ed, "src_host", "dst_host")
+             .filter(F.col("host").endswith("00.example")))
     return graph.bfs_hops(ed, seeds, max_hops=3,
                           src="src_host", dst="dst_host")
 
 def _bfs_hops3_sql() -> str:
-    from geobuf_spark.operators import graph
     return graph.sql_bfs_hops(_host_edges_cte(),
                               "n LIKE '%00.example'", max_hops=3,
                               src="src", dst="dst")
@@ -194,10 +181,11 @@ def q_dbscan_core(spark, sf):
                     (F.coalesce("n_nbrs", F.lit(0)) >= DBSCAN_MIN_NBRS)
                     .alias("is_core")))
 
-def _dbscan_core_sql() -> str:
+def _dbscan_pairs_sql() -> str:
+    """Oracle twin of _dbscan_nbr_pairs_spark: CTEs p (the points) and
+    pr(a_id, b_id), the point pairs within DBSCAN_EPS."""
     eps = DBSCAN_EPS
-    return f"""
-        WITH p AS ({minted.sql_minted_cluster_points_q()}),
+    return f"""p AS ({minted.sql_minted_cluster_points_q()}),
         a AS (SELECT doc_id AS a_id, qx AS ax, qy AS ay,
                      qx // {eps} + dxs.dx AS cx, qy // {eps} + dys.dy AS cy
               FROM p,
@@ -206,12 +194,16 @@ def _dbscan_core_sql() -> str:
         b AS (SELECT doc_id AS b_id, qx AS bx, qy AS by,
                      qx // {eps} AS cx, qy // {eps} AS cy
               FROM p),
-        n AS (SELECT a_id, count(*) AS n_nbrs
-              FROM a JOIN b ON a.cx = b.cx AND a.cy = b.cy
-                           AND a_id <> b_id
-              WHERE (ax - bx) * (ax - bx) + (ay - by) * (ay - by)
-                    <= {eps * eps}
-              GROUP BY 1)
+        pr AS (SELECT a_id, b_id FROM a JOIN b
+                   ON a.cx = b.cx AND a.cy = b.cy
+               WHERE a_id <> b_id
+                 AND (ax - bx) * (ax - bx) + (ay - by) * (ay - by)
+                     <= {eps * eps})"""
+
+def _dbscan_core_sql() -> str:
+    return f"""
+        WITH {_dbscan_pairs_sql()},
+        n AS (SELECT a_id, count(*) AS n_nbrs FROM pr GROUP BY 1)
         SELECT p.doc_id, coalesce(n.n_nbrs, 0) AS n_nbrs,
                coalesce(n.n_nbrs, 0) >= {DBSCAN_MIN_NBRS} AS is_core
         FROM p LEFT JOIN n ON p.doc_id = n.a_id"""
@@ -222,47 +214,37 @@ def q_kcore_hosts(spark, sf):
     # graph-cleaning pass that strips leaf chains before community /
     # centrality work. KCORE_ROUNDS fixed rounds (pytest pins the
     # fixpoint on this fixture); each round is one degree aggregation +
-    # two semi-joins, lineage cut per round like the pagerank iterations.
-    und = (_host_edges(spark, 2000)
-           .filter(F.col("src_host") != F.col("dst_host"))
-           .select(F.least("src_host", "dst_host").alias("u"),
-                   F.greatest("src_host", "dst_host").alias("v"))
-           .distinct()
-           .localCheckpoint(eager=False))
-    e = und
-    for _ in range(KCORE_ROUNDS):
-        deg = (e.select(F.col("u").alias("n"))
-               .unionByName(e.select(F.col("v").alias("n")))
-               .groupBy("n").agg(F.count("*").alias("c")))
+    # two semi-joins.
+    def step(e, _):
+        deg = graph.adjacency(e).groupBy("n").agg(F.count("*").alias("c"))
         keep = deg.filter(F.col("c") >= KCORE_K).select("n")
-        e = (e.join(keep.withColumnRenamed("n", "u"), "u", "left_semi")
-             .join(keep.withColumnRenamed("n", "v"), "v", "left_semi")
-             .localCheckpoint(eager=False))
-    return (e.select(F.col("u").alias("n"))
-            .unionByName(e.select(F.col("v").alias("n")))
-            .groupBy("n").agg(F.count("*").alias("degree"))
-            .select(F.col("n").alias("host"), "degree"))
+        return (e.join(keep.withColumnRenamed("n", "u"), "u", "left_semi")
+                .join(keep.withColumnRenamed("n", "v"), "v", "left_semi"))
+
+    e = iterate(graph.undirected(_host_edges(spark, 2000), "src_host",
+                                 "dst_host"), step, KCORE_ROUNDS)
+    return (graph.adjacency(e).groupBy(F.col("n").alias("host"))
+            .agg(F.count("*").alias("degree")))
 
 def _kcore_hosts_sql() -> str:
-    parts = [f"""{_host_edges_cte()},
-        ke0 AS MATERIALIZED (SELECT DISTINCT least(src, dst) AS u,
-                       greatest(src, dst) AS v
-                FROM ed WHERE src <> dst)"""]
-    for r in range(1, KCORE_ROUNDS + 1):
-        parts.append(f"""
-        kd{r} AS MATERIALIZED (SELECT n, count(*) AS c FROM (
+    def step(r):
+        return {
+            f"kd{r}": f"""MATERIALIZED (SELECT n, count(*) AS c FROM (
                       SELECT u AS n FROM ke{r - 1}
                       UNION ALL SELECT v AS n FROM ke{r - 1})
-                  GROUP BY 1),
-        kk{r} AS (SELECT n FROM kd{r} WHERE c >= {KCORE_K}),
-        ke{r} AS MATERIALIZED (SELECT e.u, e.v FROM ke{r - 1} e
-                  JOIN kk{r} a ON e.u = a.n JOIN kk{r} b ON e.v = b.n)""")
+                  GROUP BY 1)""",
+            f"kk{r}": f"(SELECT n FROM kd{r} WHERE c >= {KCORE_K})",
+            f"ke{r}": f"""MATERIALIZED (SELECT e.u, e.v FROM ke{r - 1} e
+                  JOIN kk{r} a ON e.u = a.n JOIN kk{r} b ON e.v = b.n)"""}
+
     final = KCORE_ROUNDS
-    return ("WITH " + ",".join(parts) + f"""
-        SELECT n AS host, count(*) AS degree FROM (
+    return (With(_host_edges_cte()).extend(graph.sql_undirected())
+            .add("ke0", "(SELECT u, v FROM und)")
+            .extend(sql_rounds(KCORE_ROUNDS, step))
+            .select(f"""SELECT n AS host, count(*) AS degree FROM (
             SELECT u AS n FROM ke{final}
             UNION ALL SELECT v AS n FROM ke{final})
-        GROUP BY 1""")
+        GROUP BY 1"""))
 
 def q_cluster_diameter(spark, sf):
     # exact per-cluster diameter: max pairwise d² inside each minted
@@ -341,11 +323,9 @@ def q_degree_assortativity(spark, sf):
         " / sqrt(CAST(m * sjj - sj * sj AS DOUBLE)"
         " * CAST(m * skk - sk * sk AS DOUBLE))) AS BIGINT)"))
 
-def _degree_assortativity_sql(n: int = 2000, seed: int = 42) -> str:
+def _degree_assortativity_sql() -> str:
     return f"""
-        WITH {_links_cte(n, seed)},
-        ed AS (SELECT src_host AS src, {TXT.sql_url_host('dst')} AS dst
-               FROM e),
+        WITH {_host_edges_cte()},
         outd AS (SELECT src, count(*) AS j FROM ed GROUP BY 1),
         ind AS (SELECT dst, count(*) AS k FROM ed GROUP BY 1),
         em AS (SELECT outd.j, ind.k
@@ -390,9 +370,7 @@ def q_boruvka_round1(spark, sf):
     nn = (both.join(nnd, "doc_id")
           .filter(F.col("dist2") == F.col("nn_d2"))
           .groupBy("doc_id").agg(F.min("nb").alias("nb")))
-    edges = nn.select(F.least("doc_id", "nb").alias("u"),
-                      F.greatest("doc_id", "nb").alias("v")).distinct()
-    comp = dedup.near_dup_components(edges, "u", "v")
+    comp = dedup.near_dup_components(nn, "doc_id", "nb")
     lab = (p.select("doc_id").join(comp, "doc_id", "left")
            .select("doc_id",
                    F.coalesce("rep_id", "doc_id").alias("rep")))
@@ -414,10 +392,8 @@ def _boruvka_round1_sql() -> str:
                FROM inr JOIN nnd ON inr.doc_id = nnd.doc_id
                     AND inr.d2 = nnd.nn_d2
                GROUP BY 1),
-        e0 AS (SELECT DISTINCT least(doc_id, nb) AS u,
-                      greatest(doc_id, nb) AS v
-               FROM nn),
-        edges AS (SELECT u, v FROM e0 UNION SELECT v, u FROM e0),
+        edges AS (SELECT doc_id AS u, nb AS v FROM nn
+                  UNION SELECT nb, doc_id FROM nn),
         walk(u, label) AS (
             SELECT u, u AS label FROM (SELECT DISTINCT u FROM edges)
             UNION
@@ -449,23 +425,20 @@ def q_markov_stationary(spark, sf):
     trans = trans.join(rowsum, "p").localCheckpoint(eager=False)
     v = (trans.select(F.col("p").alias("event_type")).distinct()
          .withColumn("v", F.lit(MARKOV_V0).cast("bigint")))
-    outs = []
-    for _ in range(3):
-        v = _markov_step(v, trans).localCheckpoint(eager=False)
-        outs.append(v)
-    out = (outs[0].withColumnRenamed("v", "v1")
-           .join(outs[1].withColumnRenamed("v", "v2"), "event_type")
-           .join(outs[2].withColumnRenamed("v", "v3"), "event_type"))
-    return out
+
+    # the state keeps each earlier round's vector as a column v{r}; a
+    # round's event types are among the previous round's, so the left
+    # join from the new vector drops nothing (round 1's v0 is not kept)
+    def step(st, r):
+        return (_markov_step(st, trans)
+                .join(st.withColumnRenamed("v", f"v{r - 1}").drop("v0"),
+                      "event_type", "left"))
+
+    return iterate(v, step, 3).select("event_type", "v1", "v2",
+                                      F.col("v").alias("v3"))
 
 def _markov_stationary_sql() -> str:
-    step = """
-        v{n} AS (SELECT t AS event_type,
-                        CAST(sum(v * c // r) AS BIGINT) AS v
-                 FROM trans JOIN v{m} ON trans.p = v{m}.event_type
-                 GROUP BY 1)"""
-    return f"""
-        WITH pr AS (SELECT user_id, event_type, ts, event_id,
+    return (With(f"""pr AS (SELECT user_id, event_type, ts, event_id,
                            lead(event_type) OVER (PARTITION BY user_id
                                ORDER BY ts, event_id) AS nxt
                     FROM events),
@@ -476,12 +449,13 @@ def _markov_stationary_sql() -> str:
                   FROM cnt JOIN rs ON cnt.p = rs.p),
         v0 AS (SELECT DISTINCT p AS event_type,
                       {MARKOV_V0}::BIGINT AS v
-               FROM trans),
-        {step.format(n=1, m=0)},
-        {step.format(n=2, m=1)},
-        {step.format(n=3, m=2)}
-        SELECT v1.event_type, v1.v AS v1, v2.v AS v2, v3.v AS v3
-        FROM v1 JOIN v2 USING (event_type) JOIN v3 USING (event_type)"""
+               FROM trans)""")
+            .extend(sql_rounds(3, lambda n: {f"v{n}": f"""(SELECT t AS event_type,
+                        CAST(sum(v * c // r) AS BIGINT) AS v
+                 FROM trans JOIN v{n - 1} ON trans.p = v{n - 1}.event_type
+                 GROUP BY 1)"""}))
+            .select("""SELECT v1.event_type, v1.v AS v1, v2.v AS v2, v3.v AS v3
+        FROM v1 JOIN v2 USING (event_type) JOIN v3 USING (event_type)"""))
 
 def q_redirect_resolve(spark, sf):
     # canonical redirect resolution — the URL-graph fixpoint every crawl
@@ -490,23 +464,25 @@ def q_redirect_resolve(spark, sf):
     # depths add), so a depth-d chain resolves in ⌈log₂ d⌉ rounds of
     # self-joins instead of d sequential hops — the only shape that
     # works when 10^12 urls hide 1000-hop chains. Converges or raises
-    # (a partial resolve would alias distinct targets).
+    # (a partial resolve would alias distinct targets); a terminal
+    # points at itself with depth 0, so rounds past resolution are no-ops.
     ids = spark.range(REDIR_N).select(F.col("id").cast("bigint"))
     st = ids.select(
         "id", _redir_parent_col().alias("nxt"),
         F.when(F.col("id") % 5 == 0, F.lit(0)).otherwise(F.lit(1))
         .cast("bigint").alias("depth"))
-    for _ in range(8):  # covers depth ≤ 2^8
+
+    def step(st, _):
         hop = st.select(F.col("id").alias("nxt"),
                         F.col("nxt").alias("nxt2"),
                         F.col("depth").alias("d2"))
-        st = (st.join(hop, "nxt")
-              .select("id", F.col("nxt2").alias("nxt"),
-                      (F.col("depth") + F.col("d2")).alias("depth"))
-              .localCheckpoint(eager=True))
-    unresolved = st.filter(F.col("nxt") % 5 != 0).limit(1).count()
-    if unresolved:
-        raise RuntimeError("redirect_resolve: chains deeper than 2^8")
+        return (st.join(hop, "nxt")
+                .select("id", F.col("nxt2").alias("nxt"),
+                        (F.col("depth") + F.col("d2")).alias("depth")))
+
+    st = iterate(st, step, 8,  # covers depth ≤ 2^8
+                 until=lambda new, old: new.filter(F.col("nxt") % 5 != 0),
+                 what="redirect_resolve")
     return (st.select("id", F.col("nxt").alias("final_id"), "depth")
             .groupBy("final_id")
             .agg(F.count("*").alias("n_urls"),
@@ -549,16 +525,11 @@ def q_sssp_w3(spark, sf):
     # the wave settles. The oracle is the INDEPENDENT algorithm — full
     # ≤3-edge walk enumeration with one final min, no relaxation — so a
     # green row checks the frontier delta argument end to end.
-    from geobuf_spark.operators import graph
     ed = _host_wedges(spark)
-    nodes = (ed.select(F.col("src").alias("host"))
-             .unionByName(ed.select(F.col("dst").alias("host")))
-             .distinct())
-    seeds = nodes.filter(F.col("host").endswith("00.example"))
+    seeds = graph.nodes(ed).filter(F.col("host").endswith("00.example"))
     return graph.sssp_bounded(ed, seeds, max_rounds=3)
 
 def _sssp_w3_sql() -> str:
-    from geobuf_spark.operators import graph
     return graph.sql_sssp_bounded(_host_wedges_cte(),
                                   "n LIKE '%00.example'", max_rounds=3)
 
@@ -571,17 +542,13 @@ def q_lpa_communities(spark, sf):
     # training pages per community" stratification. Oracle: the same
     # rounds as MATERIALIZED chained CTEs — independent engine, same
     # fixpoint; a python brute guards the shared-formula blindness.
-    from geobuf_spark.operators import graph
-    lab = graph.lpa_labels(
-        _host_edges(spark).select(F.col("src_host").alias("src"),
-                                  F.col("dst_host").alias("dst")),
-        rounds=2)
+    lab = graph.lpa_labels(_host_edges(spark), rounds=2, src="src_host",
+                           dst="dst_host")
     return (lab.groupBy(F.col("lab").alias("community"))
             .agg(F.count("*").alias("n_hosts"),
                  F.min("host").alias("first_host")))
 
 def _lpa_communities_sql() -> str:
-    from geobuf_spark.operators import graph
     inner = graph.sql_lpa_labels(_host_edges_cte(), rounds=2)
     return f"""
         SELECT lab AS community, CAST(count(*) AS BIGINT) AS n_hosts,
@@ -646,14 +613,10 @@ def q_maximal_matching(spark, sf):
     # are the "merge these two mirrors first" worklist. Oracle: the
     # same rounds as MATERIALIZED CTEs; the pytest independently checks
     # validity (no shared vertex) and maximality (no live edge left).
-    from geobuf_spark.operators import graph
-    return graph.maximal_matching(
-        _host_edges(spark).select(F.col("src_host").alias("src"),
-                                  F.col("dst_host").alias("dst")),
-        rounds=12)
+    return graph.maximal_matching(_host_edges(spark), rounds=12,
+                                  src="src_host", dst="dst_host")
 
 def _maximal_matching_sql() -> str:
-    from geobuf_spark.operators import graph
     return graph.sql_maximal_matching(_host_edges_cte(), rounds=12)
 
 def q_diameter_sweep(spark, sf):
@@ -663,19 +626,15 @@ def q_diameter_sweep(spark, sf):
     # lower-bounds the diameter (and is exact on trees). Each BFS runs
     # the bfs_hops frontier loop to exhaustion under a DIAM_CAP budget.
     # Output one row: the two sweep endpoints and both eccentricities.
-    from geobuf_spark.operators import graph
-    ed = (_host_edges(spark)
-          .select(F.col("src_host").alias("src"),
-                  F.col("dst_host").alias("dst")))
-    nodes = (ed.select(F.col("src").alias("host"))
-             .unionByName(ed.select(F.col("dst").alias("host")))
-             .distinct())
-    seed0 = nodes.orderBy("host").limit(1)
-    b1 = graph.bfs_hops(ed, seed0, max_hops=DIAM_CAP)
+    ed = _host_edges(spark)
+    seed0 = graph.nodes(ed, "src_host", "dst_host").orderBy("host").limit(1)
+    b1 = graph.bfs_hops(ed, seed0, max_hops=DIAM_CAP, src="src_host",
+                        dst="dst_host")
     far1 = (b1.orderBy(F.col("hop").desc(), F.col("host").asc())
             .limit(1).collect()[0])
     b2 = graph.bfs_hops(ed, spark.createDataFrame(
-        [(far1["host"],)], ["host"]), max_hops=DIAM_CAP)
+        [(far1["host"],)], ["host"]), max_hops=DIAM_CAP, src="src_host",
+        dst="dst_host")
     far2 = (b2.orderBy(F.col("hop").desc(), F.col("host").asc())
             .limit(1).collect()[0])
     start = seed0.collect()[0]["host"]
@@ -686,31 +645,23 @@ def q_diameter_sweep(spark, sf):
         "diameter_lb int")
 
 def _diameter_sweep_sql() -> str:
-    # one WITH: the edges are defined once and both sweeps run against
-    # them (DuckDB rejects a MATERIALIZED CTE name defined twice in one
-    # query, which two spliced _host_edges_cte() copies would do)
-    from geobuf_spark.operators import graph
-    sweep1 = graph.sql_bfs_chain("n = (SELECT min(n) FROM nodes)",
-                                 DIAM_CAP, name="a")
-    # second sweep: seed = argmax hop of sweep 1 (ties → min host)
-    sweep2 = graph.sql_bfs_chain(
-        "n = (SELECT host FROM s1 ORDER BY hop DESC, host LIMIT 1)",
-        DIAM_CAP, name="b")
-    return f"""
-        WITH {_host_edges_cte()},
-        {graph.sql_bfs_adjacency()},
-        {sweep1},
-        s1 AS (SELECT host, CAST(hop AS INT) AS hop FROM a{DIAM_CAP}),
-        {sweep2},
-        s2 AS (SELECT host, CAST(hop AS INT) AS hop FROM b{DIAM_CAP}),
-        f1 AS (SELECT host, hop FROM s1
-               ORDER BY hop DESC, host LIMIT 1),
-        f2 AS (SELECT host, hop FROM s2
-               ORDER BY hop DESC, host LIMIT 1),
-        st AS (SELECT min(host) AS start FROM s1 WHERE hop = 0)
-        SELECT st.start, f1.host AS far1, CAST(f1.hop AS INT) AS ecc1,
+    # one WITH: the edges are defined once and both sweeps (named a and
+    # b) run against them; the second seeds at sweep 1's argmax hop
+    w = With(_host_edges_cte()).extend(graph.sql_undirected())
+    for name, seed, out in (
+            ("a", "(SELECT min(n) FROM nodes)", "s1"),
+            ("b", "(SELECT host FROM s1 ORDER BY hop DESC, host LIMIT 1)",
+             "s2")):
+        (w.add(f"{name}0",
+               f"(SELECT n AS host, 0 AS hop FROM nodes WHERE n = {seed})")
+         .extend(sql_rounds(DIAM_CAP, graph.sql_bfs_round(name)))
+         .add(out, f"(SELECT host, CAST(hop AS INT) AS hop FROM {name}{DIAM_CAP})"))
+    return (w.add("f1", "(SELECT host, hop FROM s1 ORDER BY hop DESC, host LIMIT 1)")
+            .add("f2", "(SELECT host, hop FROM s2 ORDER BY hop DESC, host LIMIT 1)")
+            .add("st", "(SELECT min(host) AS start FROM s1 WHERE hop = 0)")
+            .select("""SELECT st.start, f1.host AS far1, CAST(f1.hop AS INT) AS ecc1,
                f2.host AS far2, CAST(f2.hop AS INT) AS diameter_lb
-        FROM st, f1, f2"""
+        FROM st, f1, f2"""))
 
 def q_coreness(spark, sf):
     # full k-core decomposition of the host graph (kcore_hosts peels
@@ -720,17 +671,13 @@ def q_coreness(spark, sf):
     # reads it as "how deep in the mutually-dense web is this host".
     # Oracle: the SAME rounds fixed-length MATERIALIZED; the pytest's
     # sequential peeling is the independent algorithm.
-    from geobuf_spark.operators import graph
-    c = graph.coreness(
-        _host_edges(spark).select(F.col("src_host").alias("src"),
-                                  F.col("dst_host").alias("dst")),
-        max_rounds=20)
+    c = graph.coreness(_host_edges(spark), max_rounds=20, src="src_host",
+                       dst="dst_host")
     return (c.groupBy("coreness")
             .agg(F.count("*").alias("n_hosts"),
                  F.min("host").alias("first_host")))
 
 def _coreness_sql() -> str:
-    from geobuf_spark.operators import graph
     inner = graph.sql_coreness(_host_edges_cte(), rounds=20)
     return f"""
         SELECT coreness, CAST(count(*) AS BIGINT) AS n_hosts,
@@ -746,16 +693,12 @@ def q_ktruss_edges(spark, sf):
     # fixpoint, convergence-or-raise; the oracle runs the SAME rounds
     # fixed-length MATERIALIZED; the pytest's sequential peeling is the
     # independent algorithm.
-    from geobuf_spark.operators import graph
-    t = graph.ktruss(
-        _host_edges(spark).select(F.col("src_host").alias("src"),
-                                  F.col("dst_host").alias("dst")),
-        k=KTRUSS_K, max_rounds=KTRUSS_ROUNDS)
+    t = graph.ktruss(_host_edges(spark), k=KTRUSS_K, max_rounds=KTRUSS_ROUNDS,
+                     src="src_host", dst="dst_host")
     return t.select(F.col("u").alias("host_a"),
                     F.col("v").alias("host_b"), "support")
 
 def _ktruss_edges_sql() -> str:
-    from geobuf_spark.operators import graph
     inner = graph.sql_ktruss(_host_edges_cte(), k=KTRUSS_K,
                              rounds=KTRUSS_ROUNDS)
     return f"""
@@ -802,22 +745,8 @@ def q_dbscan_clusters(spark, sf):
                     F.coalesce("role", F.lit("noise")).alias("role")))
 
 def _dbscan_clusters_sql() -> str:
-    eps = DBSCAN_EPS
     return f"""
-        WITH RECURSIVE p AS ({minted.sql_minted_cluster_points_q()}),
-        a AS (SELECT doc_id AS a_id, qx AS ax, qy AS ay,
-                     qx // {eps} + dxs.dx AS cx, qy // {eps} + dys.dy AS cy
-              FROM p,
-              LATERAL (SELECT unnest(range(-1, 2)) AS dx) dxs,
-              LATERAL (SELECT unnest(range(-1, 2)) AS dy) dys),
-        b AS (SELECT doc_id AS b_id, qx AS bx, qy AS by,
-                     qx // {eps} AS cx, qy // {eps} AS cy
-              FROM p),
-        pr AS (SELECT a_id, b_id FROM a JOIN b
-                   ON a.cx = b.cx AND a.cy = b.cy
-               WHERE a_id <> b_id
-                 AND (ax - bx) * (ax - bx) + (ay - by) * (ay - by)
-                     <= {eps * eps}),
+        WITH RECURSIVE {_dbscan_pairs_sql()},
         core AS (SELECT a_id AS doc_id FROM pr GROUP BY 1
                  HAVING count(*) >= {DBSCAN_MIN_NBRS}),
         ce AS (SELECT pr.a_id AS u, pr.b_id AS v FROM pr
@@ -876,31 +805,32 @@ def q_power_iteration(spark, sf):
          .localCheckpoint(eager=False))
     v = C.select(F.col("i").alias("j")).distinct() \
          .withColumn("v", F.lit(PI_SCALE).cast("bigint"))
-    for _ in range(PI_ROUNDS):
+
+    def step(v, _):
         w = (C.join(v, "j")
              .groupBy("i").agg(F.sum(F.col("c") * F.col("v"))
                                .alias("w")))
         m = w.agg(F.max(F.abs(F.col("w"))).alias("m"))
-        v = (w.crossJoin(F.broadcast(m))
-             .select(F.col("i").alias("j"),
-                     F.expr(f"w div (m div {PI_SCALE})").alias("v"))
-             .localCheckpoint(eager=False))
+        return (w.crossJoin(F.broadcast(m))
+                .select(F.col("i").alias("j"),
+                        F.expr(f"w div (m div {PI_SCALE})").alias("v")))
+
+    v = iterate(v, step, PI_ROUNDS)
     return v.select(F.col("j").cast("int").alias("dim"),
                     F.col("v").cast("bigint").alias("v"))
 
 def _power_iteration_sql() -> str:
-    steps = []
-    for r in range(1, PI_ROUNDS + 1):
-        steps.append(f"""
-        w{r} AS (SELECT c.i, CAST(sum(c.c * v.v) AS BIGINT) AS w
-                 FROM pic c JOIN v{r - 1} v ON v.j = c.j GROUP BY 1),
-        m{r} AS (SELECT max(abs(w)) AS m FROM w{r}),
-        v{r} AS MATERIALIZED (
+    def step(r):
+        return {
+            f"w{r}": f"""(SELECT c.i, CAST(sum(c.c * v.v) AS BIGINT) AS w
+                 FROM pic c JOIN v{r - 1} v ON v.j = c.j GROUP BY 1)""",
+            f"m{r}": f"(SELECT max(abs(w)) AS m FROM w{r})",
+            f"v{r}": f"""MATERIALIZED (
             SELECT w.i AS j, CAST(w.w // (m.m // {PI_SCALE}) AS BIGINT)
                        AS v
-            FROM w{r} w, m{r} m)""")
-    return f"""
-        WITH q AS (SELECT vec_id, i - 1 AS i,
+            FROM w{r} w, m{r} m)"""}
+
+    return (With(f"""q AS (SELECT vec_id, i - 1 AS i,
                           CAST(floor(CAST(e AS DOUBLE)
                                      * {EMB_COV_SCALE}) AS BIGINT)
                               AS qi
@@ -922,9 +852,9 @@ def _power_iteration_sql() -> str:
             UNION ALL
             SELECT j AS i, i AS j, c FROM upperc WHERE i <> j),
         v0 AS (SELECT DISTINCT j, CAST({PI_SCALE} AS BIGINT) AS v
-               FROM pic),
-        {','.join(steps)}
-        SELECT CAST(j AS INT) AS dim, v FROM v{PI_ROUNDS}"""
+               FROM pic)""")
+            .extend(sql_rounds(PI_ROUNDS, step))
+            .select(f"SELECT CAST(j AS INT) AS dim, v FROM v{PI_ROUNDS}"))
 
 def q_bipartite_check(spark, sf):
     # per-component bipartiteness audit of the host graph — the odd-
@@ -939,39 +869,25 @@ def q_bipartite_check(spark, sf):
     # raise within BIP_CAP; the oracle runs the same rounds fixed-
     # length (past the fixpoint they are no-ops). O(E) per round, no
     # transitive closure anywhere.
-    ed = _host_edges(spark).select(F.col("src_host").alias("src"),
-                                   F.col("dst_host").alias("dst"))
-    und = (ed.select(F.least("src", "dst").alias("u"),
-                     F.greatest("src", "dst").alias("v"))
-           .filter(F.col("u") != F.col("v")).distinct()
-           .localCheckpoint(eager=False))
-    adj = (und.select(F.col("u").alias("n"), F.col("v").alias("nb"))
-           .unionAll(und.select(F.col("v").alias("n"),
-                                F.col("u").alias("nb")))
-           .localCheckpoint(eager=False))
-    st = (adj.select("n").distinct()
-          .select("n", F.col("n").alias("lab"), F.lit(0).alias("hop")))
-    converged = False
-    for r in range(1, BIP_CAP + 1):
+    und = graph.undirected(_host_edges(spark), "src_host", "dst_host")
+    adj = graph.adjacency(und)
+
+    def step(st, r):
         cand = (adj.join(st.select(F.col("n").alias("nb"),
                                    F.col("lab").alias("nlab")), "nb")
                 .groupBy("n").agg(F.min("nlab").alias("cand")))
-        new = (st.join(cand, "n")
-               .select("n",
-                       F.least("lab", "cand").alias("newlab"),
-                       F.when(F.col("cand") < F.col("lab"), F.lit(r))
-                       .otherwise(F.col("hop")).alias("hop"),
-                       F.col("lab").alias("old"))
-               .localCheckpoint(eager=True))
-        changed = new.filter(F.col("newlab") != F.col("old")) \
-                     .limit(1).count()
-        st = new.select("n", F.col("newlab").alias("lab"), "hop")
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        raise ValueError(
-            f"bipartite_check did not converge in {BIP_CAP} rounds")
+        return (st.join(cand, "n")
+                .select("n", F.least("lab", "cand").alias("lab"),
+                        F.when(F.col("cand") < F.col("lab"), F.lit(r))
+                        .otherwise(F.col("hop")).alias("hop"),
+                        (F.col("cand") < F.col("lab")).alias("changed")))
+
+    st = graph.nodes(und, "u", "v").select(
+        F.col("host").alias("n"), F.col("host").alias("lab"),
+        F.lit(0).alias("hop"))
+    st = iterate(st, step, BIP_CAP,
+                 until=lambda new, old: new.filter("changed"),
+                 what="bipartite_check")
     ec = (und.join(st.select(F.col("n").alias("u"),
                              F.col("lab").alias("rep"),
                              F.col("hop").alias("hu")), "u")
@@ -990,44 +906,36 @@ def q_bipartite_check(spark, sf):
                     (F.col("n_conflicts") == 0).alias("is_bipartite")))
 
 def _bipartite_check_sql() -> str:
-    steps = []
-    for r in range(1, BIP_CAP + 1):
+    def step(r):
         p = r - 1
-        steps.append(f"""
-        c{r} AS (SELECT a.n, min(s.lab) AS cand
-                 FROM adj a JOIN s{p} s ON s.n = a.nb GROUP BY 1),
-        s{r} AS MATERIALIZED (
+        return {
+            f"c{r}": f"""(SELECT a.n, min(s.lab) AS cand
+                 FROM adj a JOIN s{p} s ON s.n = a.nb GROUP BY 1)""",
+            f"s{r}": f"""MATERIALIZED (
             SELECT s.n, least(s.lab, c.cand) AS lab,
                    CASE WHEN c.cand < s.lab THEN {r} ELSE s.hop END
                        AS hop
-            FROM s{p} s JOIN c{r} c ON c.n = s.n)""")
-    return f"""
-        WITH {_host_edges_cte()},
-        und AS (SELECT DISTINCT least(src, dst) AS u,
-                                greatest(src, dst) AS v
-                FROM ed WHERE src <> dst),
-        adj AS (SELECT u AS n, v AS nb FROM und
-                UNION ALL SELECT v AS n, u AS nb FROM und),
-        s0 AS MATERIALIZED (
-            SELECT n, n AS lab, 0 AS hop
-            FROM (SELECT DISTINCT n FROM adj)),
-        {','.join(steps)},
-        lv AS (SELECT n, lab, hop FROM s{BIP_CAP}),
-        ec AS (SELECT lu.lab AS rep, lu.hop AS hu, lw.hop AS hv
+            FROM s{p} s JOIN c{r} c ON c.n = s.n)"""}
+
+    return (With(_host_edges_cte()).extend(graph.sql_undirected())
+            .add("s0", "MATERIALIZED (SELECT n, n AS lab, 0 AS hop FROM nodes)")
+            .extend(sql_rounds(BIP_CAP, step))
+            .add("lv", f"(SELECT n, lab, hop FROM s{BIP_CAP})")
+            .add("ec", """(SELECT lu.lab AS rep, lu.hop AS hu, lw.hop AS hv
                FROM und JOIN lv lu ON lu.n = und.u
-                        JOIN lv lw ON lw.n = und.v),
-        per AS (SELECT rep, count(*) AS n_edges,
+                        JOIN lv lw ON lw.n = und.v)""")
+            .add("per", """(SELECT rep, count(*) AS n_edges,
                        sum(CASE WHEN hu = hv THEN 1 ELSE 0 END)
                            AS n_conflicts
-                FROM ec GROUP BY 1),
-        nn AS (SELECT lab AS rep, count(*) AS n_nodes FROM lv
-               GROUP BY 1)
-        SELECT per.rep AS rep_host,
+                FROM ec GROUP BY 1)""")
+            .add("nn", """(SELECT lab AS rep, count(*) AS n_nodes FROM lv
+               GROUP BY 1)""")
+            .select("""SELECT per.rep AS rep_host,
                CAST(n_nodes AS BIGINT) AS n_nodes,
                CAST(n_edges AS BIGINT) AS n_edges,
                CAST(n_conflicts AS BIGINT) AS n_conflicts,
                n_conflicts = 0 AS is_bipartite
-        FROM per JOIN nn USING (rep)"""
+        FROM per JOIN nn USING (rep)"""))
 
 def q_stable_matching(spark, sf):
     # proposer-optimal stable matching by SIMULTANEOUS-proposal
@@ -1061,38 +969,35 @@ def q_stable_matching(spark, sf):
                          phash.hash60_parts(F.lit("sm-a"), F.col("s"),
                                             F.col("u")).alias("ah"))
              .localCheckpoint(eager=False))
-    ptr = users.select("u", F.lit(1).alias("ptr"))
-    held = spark.createDataFrame([], "s long, u long")
-    converged = False
-    for _ in range(SM_ROUNDS):
-        free = (ptr.filter(F.col("ptr") <= SM_S)
-                .join(held.select("u"), "u", "left_anti"))
-        prefj = pref.select(F.col("u").alias("pu"),
-                            F.col("s").alias("ps"),
-                            F.col("rk").alias("prk"))
-        props = (free.join(prefj, (free["u"] == F.col("pu"))
-                           & (free["ptr"] == F.col("prk")))
-                 .select(F.col("ps").alias("s"),
-                         F.col("pu").alias("u"))
-                 .localCheckpoint(eager=True))
-        if props.count() == 0:
-            converged = True
-            break
-        cont = props.unionByName(held)
-        aprefj = apref.select(F.col("s").alias("as2"),
-                              F.col("u").alias("au2"), "ah")
+    prefj = pref.select(F.col("u").alias("pu"), F.col("s").alias("ps"),
+                        F.col("rk").alias("prk"))
+    aprefj = apref.select(F.col("s").alias("as2"), F.col("u").alias("au2"),
+                          "ah")
+
+    # one row per proposer: its list pointer and the slot holding it. A
+    # free proposer (unheld, list not exhausted) proposes to its ptr-th
+    # slot and advances; the fixpoint is a state without one.
+    free = F.col("s").isNull() & (F.col("ptr") <= SM_S)
+
+    def step(st, _):
+        props = (st.filter(free).join(prefj, (F.col("u") == F.col("pu"))
+                                      & (F.col("ptr") == F.col("prk")))
+                 .select(F.col("ps").alias("s"), F.col("pu").alias("u")))
+        cont = props.unionByName(st.filter(F.col("s").isNotNull())
+                                 .select("s", "u"))
         held = (cont.join(aprefj, (cont["s"] == F.col("as2"))
                           & (cont["u"] == F.col("au2")))
-                .groupBy("s").agg(F.expr("min_by(u, ah)").alias("u"))
-                .localCheckpoint(eager=True))
-        ptr = (ptr.join(props.select("u").withColumn("adv", F.lit(1)),
-                        "u", "left")
-               .select("u", (F.col("ptr")
-                             + F.coalesce("adv", F.lit(0))).alias("ptr"))
-               .localCheckpoint(eager=True))
-    if not converged:
-        raise ValueError(
-            f"stable_matching did not converge in {SM_ROUNDS} rounds")
+                .groupBy("s").agg(F.expr("min_by(u, ah)").alias("u")))
+        return (st.select("u", (F.col("ptr") + free.cast("int")).alias("ptr"))
+                .join(held.withColumnRenamed("s", "hs"), "u", "left")
+                .select("u", "ptr", F.col("hs").alias("s")))
+
+    st = users.select("u", F.lit(1).alias("ptr"),
+                      F.lit(None).cast("long").alias("s"))
+    st = iterate(st, step, SM_ROUNDS,
+                 until=lambda new, old: old.filter(free),
+                 what="stable_matching")
+    held = st.filter(F.col("s").isNotNull()).select("s", "u")
     preff = pref.select(F.col("u").alias("fu"),
                         F.col("s").alias("fs"),
                         F.col("rk").alias("frk"))
@@ -1106,27 +1011,26 @@ def _stable_matching_sql() -> str:
     from geobuf_spark.functions import phash
     ph = phash.sql_hash60_parts("'sm-p'", "u", "s")
     ah = phash.sql_hash60_parts("'sm-a'", "s", "u")
-    steps = []
-    for r in range(1, SM_ROUNDS + 1):
+    def step(r):
         p = r - 1
-        steps.append(f"""
-        fr{r} AS (SELECT p.u, p.ptr FROM p{p} p
+        return {
+            f"fr{r}": f"""(SELECT p.u, p.ptr FROM p{p} p
                   WHERE p.ptr <= {SM_S}
-                    AND p.u NOT IN (SELECT u FROM h{p})),
-        pr{r} AS (SELECT pr.s, pr.u FROM fr{r} f
-                  JOIN pref pr ON pr.u = f.u AND pr.rk = f.ptr),
-        h{r} AS MATERIALIZED (
+                    AND p.u NOT IN (SELECT u FROM h{p}))""",
+            f"pr{r}": f"""(SELECT pr.s, pr.u FROM fr{r} f
+                  JOIN pref pr ON pr.u = f.u AND pr.rk = f.ptr)""",
+            f"h{r}": f"""MATERIALIZED (
             SELECT c.s, arg_min(c.u, a.ah) AS u
             FROM (SELECT s, u FROM pr{r}
                   UNION ALL SELECT s, u FROM h{p}) c
             JOIN apref a ON a.s = c.s AND a.u = c.u
-            GROUP BY c.s),
-        p{r} AS MATERIALIZED (
+            GROUP BY c.s)""",
+            f"p{r}": f"""MATERIALIZED (
             SELECT p.u, p.ptr + CASE WHEN p.u IN (SELECT u FROM pr{r})
                                      THEN 1 ELSE 0 END AS ptr
-            FROM p{p} p)""")
-    return f"""
-        WITH su AS (SELECT u FROM (
+            FROM p{p} p)"""}
+
+    return (With(f"""su AS (SELECT u FROM (
                 SELECT user_id AS u, row_number() OVER
                     (ORDER BY user_id) AS urk
                 FROM (SELECT DISTINCT user_id FROM events))
@@ -1141,12 +1045,12 @@ def _stable_matching_sql() -> str:
             SELECT s, u, {ah} AS ah FROM cart),
         p0 AS (SELECT u, 1 AS ptr FROM su),
         h0 AS (SELECT CAST(NULL AS BIGINT) AS s,
-                      CAST(NULL AS BIGINT) AS u WHERE false),
-        {','.join(steps)}
-        SELECT CAST(h.s AS BIGINT) AS slot, CAST(h.u AS BIGINT)
+                      CAST(NULL AS BIGINT) AS u WHERE false)""")
+            .extend(sql_rounds(SM_ROUNDS, step))
+            .select(f"""SELECT CAST(h.s AS BIGINT) AS slot, CAST(h.u AS BIGINT)
                    AS "user",
                CAST(pr.rk AS INT) AS proposer_rank
-        FROM h{SM_ROUNDS} h JOIN pref pr ON pr.u = h.u AND pr.s = h.s"""
+        FROM h{SM_ROUNDS} h JOIN pref pr ON pr.u = h.u AND pr.s = h.s"""))
 
 def q_markov_predict_eval(spark, sf):
     # does the event-transition matrix actually predict? Train on even
@@ -1317,85 +1221,69 @@ def q_mis_luby(spark, sf):
     # rounds, converge-or-raise; the oracle replays the same fixed
     # rounds. Output is the MIS with the round each node joined.
     from geobuf_spark.functions import phash
-    ed = _host_edges(spark).select(F.col("src_host").alias("src"),
-                                   F.col("dst_host").alias("dst"))
-    und = (ed.select(F.least("src", "dst").alias("u"),
-                     F.greatest("src", "dst").alias("v"))
-           .filter(F.col("u") != F.col("v")).distinct())
-    adj = (und.select(F.col("u").alias("n"), F.col("v").alias("nb"))
-           .unionAll(und.select(F.col("v").alias("n"),
-                                F.col("u").alias("nb")))
-           .localCheckpoint(eager=True))
-    live = adj.select("n").distinct().localCheckpoint(eager=True)
-    mis = spark.createDataFrame([], "host string, round int")
-    converged = False
-    for r in range(1, MIS_ROUNDS + 1):
-        h = phash.hash60_parts(F.lit("mis"), F.col("n"), F.lit(r))
-        keyed = live.select("n", h.alias("h"))
-        nbk = (adj.join(keyed.withColumnRenamed("n", "nb")
-                        .withColumnRenamed("h", "nbh"), "nb")
-               .join(live.withColumnRenamed("n", "nb2"),
-                     F.col("nb") == F.col("nb2"))
+    und = graph.undirected(_host_edges(spark), "src_host", "dst_host")
+    adj = graph.adjacency(und)
+
+    # one row per node: round null while live, else the round it joined
+    # the MIS; a round's winners and their neighbours leave the live set
+    def step(st, r):
+        keyed = st.filter(F.col("round").isNull()).select(
+            "n", phash.hash60_parts(F.lit("mis"), F.col("n"), F.lit(r))
+            .alias("h"))
+        nbk = (adj.join(keyed.select(F.col("n").alias("nb"),
+                                     F.col("h").alias("nbh")), "nb")
                .groupBy("n")
                .agg(F.min(F.struct("nbh", "nb")).alias("mn")))
-        cand = (keyed.join(nbk, "n", "left")
-                .filter(F.col("mn").isNull()
-                        | (F.struct(F.col("h"), F.col("n"))
-                           < F.col("mn"))))
-        winners = (cand.select("n").localCheckpoint(eager=True))
-        if winners.limit(1).count() == 0:
-            converged = live.limit(1).count() == 0
-            break
-        mis = mis.unionByName(
-            winners.select(F.col("n").alias("host"),
-                           F.lit(r).alias("round")))
-        killed = (winners.unionByName(
+        winners = (keyed.join(nbk, "n", "left")
+                   .filter(F.col("mn").isNull()
+                           | (F.struct(F.col("h"), F.col("n"))
+                              < F.col("mn")))
+                   .select("n"))
+        gone = winners.unionByName(
             adj.join(winners, "n").select(F.col("nb").alias("n")))
-            .distinct())
-        live = (live.join(killed, "n", "left_anti")
-                .localCheckpoint(eager=True))
-        if live.limit(1).count() == 0:
-            converged = True
-            break
-    if not converged:
-        raise ValueError(
-            f"mis_luby did not converge in {MIS_ROUNDS} rounds")
-    return mis.select("host", F.col("round").cast("int"))
+        # settled rows pass the anti-join untouched, so the state keeps
+        # its shuffle's partition count round after round
+        kept = st.join(gone.select(F.col("n").alias("g")),
+                       F.col("round").isNull() & (F.col("n") == F.col("g")),
+                       "left_anti")
+        return kept.unionByName(winners.withColumn("round", F.lit(r)))
+
+    st = graph.nodes(und, "u", "v").select(
+        F.col("host").alias("n"), F.lit(None).cast("int").alias("round"))
+    st = iterate(st, step, MIS_ROUNDS,
+                 until=lambda new, old: new.filter(F.col("round").isNull()),
+                 what="mis_luby")
+    return st.select(F.col("n").alias("host"), F.col("round").cast("int"))
 
 def _mis_luby_sql() -> str:
     from geobuf_spark.functions import phash
-    steps = []
-    for r in range(1, MIS_ROUNDS + 1):
+
+    def step(r):
         p = r - 1
         h = phash.sql_hash60_parts("'mis'", "n", str(r))
-        steps.append(f"""
-        k{r} AS (SELECT n, {h} AS h FROM l{p}),
-        nk{r} AS (SELECT a.n, min(struct_pack(h := k.h, nb := a.nb))
+        return {
+            f"k{r}": f"(SELECT n, {h} AS h FROM l{p})",
+            f"nk{r}": f"""(SELECT a.n, min(struct_pack(h := k.h, nb := a.nb))
                       AS mn
                   FROM adj a JOIN k{r} k ON k.n = a.nb
-                  GROUP BY a.n),
-        w{r} AS MATERIALIZED (
+                  GROUP BY a.n)""",
+            f"w{r}": f"""MATERIALIZED (
             SELECT k.n FROM k{r} k LEFT JOIN nk{r} x ON x.n = k.n
             WHERE x.mn IS NULL
-               OR struct_pack(h := k.h, nb := k.n) < x.mn),
-        m{r} AS (SELECT n AS host, {r} AS rnd FROM w{r}),
-        l{r} AS MATERIALIZED (
+               OR struct_pack(h := k.h, nb := k.n) < x.mn)""",
+            f"m{r}": f"(SELECT n AS host, {r} AS rnd FROM w{r})",
+            f"l{r}": f"""MATERIALIZED (
             SELECT n FROM l{p}
             WHERE n NOT IN (SELECT n FROM w{r})
               AND n NOT IN (SELECT a.nb FROM adj a
-                            JOIN w{r} w ON w.n = a.n))""")
+                            JOIN w{r} w ON w.n = a.n))"""}
+
     allm = " UNION ALL ".join(f"SELECT host, rnd FROM m{r}"
                               for r in range(1, MIS_ROUNDS + 1))
-    return f"""
-        WITH {_host_edges_cte()},
-        und AS (SELECT DISTINCT least(src, dst) AS u,
-                                greatest(src, dst) AS v
-                FROM ed WHERE src <> dst),
-        adj AS (SELECT u AS n, v AS nb FROM und
-                UNION ALL SELECT v AS n, u AS nb FROM und),
-        l0 AS (SELECT DISTINCT n FROM adj),
-        {','.join(steps)}
-        SELECT host, CAST(rnd AS INT) AS round FROM ({allm})"""
+    return (With(_host_edges_cte()).extend(graph.sql_undirected())
+            .add("l0", "(SELECT n FROM nodes)")
+            .extend(sql_rounds(MIS_ROUNDS, step))
+            .select(f"SELECT host, CAST(rnd AS INT) AS round FROM ({allm})"))
 
 # ---------------------------------------------------------------------------
 # batch 99 — personalized PageRank, source histogram overlap
@@ -1410,20 +1298,13 @@ def q_ppr_hosts(spark, sf):
     # core instead of global importance. Same integer fixed-point
     # iteration as pagerank_hosts (bit-reproducible, one shuffle per
     # iteration; graph.ppr_int).
-    from geobuf_spark.operators import graph
     ed = _host_edges(spark).select(F.col("src_host").alias("src"),
                                    F.col("dst_host").alias("dst"))
-    nodes = (ed.select(F.col("src").alias("host"))
-             .unionByName(ed.select(F.col("dst").alias("host")))
-             .distinct())
-    seeds = nodes.filter(F.col("host").endswith("00.example"))
+    seeds = graph.nodes(ed).filter(F.col("host").endswith("00.example"))
     return graph.ppr_int(ed, seeds, iters=3)
 
 def _ppr_hosts_sql() -> str:
-    from geobuf_spark.operators import graph
-    edges = (_host_edges_cte()
-             + ", edges AS (SELECT src, dst FROM ed)")
-    return graph.sql_ppr_int(edges, "host LIKE '%00.example'",
+    return graph.sql_ppr_int(_HOST_EDGES_SQL, "host LIKE '%00.example'",
                              iters=3)
 
 def q_dag_layers(spark, sf):
@@ -1435,37 +1316,22 @@ def q_dag_layers(spark, sf):
     # by synchronous relaxation in depth rounds, converge-or-raise; the
     # oracle replays the same rounds fixed-length. Output also rolls up
     # the layer histogram invariantly checked by the brute.
-    ed = _host_edges(spark).select(F.col("src_host").alias("a"),
-                                   F.col("dst_host").alias("b"))
-    dag = (ed.select(F.least("a", "b").alias("u"),
-                     F.greatest("a", "b").alias("v"))
-           .filter(F.col("u") != F.col("v")).distinct()
-           .localCheckpoint(eager=False))
-    nodes = (dag.select(F.col("u").alias("host"))
-             .unionByName(dag.select(F.col("v").alias("host")))
-             .distinct())
-    lay = nodes.select("host", F.lit(0).alias("layer"))
-    converged = False
-    for _ in range(DAG_ROUNDS):
+    dag = graph.undirected(_host_edges(spark), "src_host", "dst_host")
+
+    def step(lay, _):
         cand = (dag.join(lay.withColumnRenamed("host", "u")
                          .withColumnRenamed("layer", "ul"), "u")
                 .groupBy(F.col("v").alias("host"))
                 .agg((F.max("ul") + 1).alias("cl")))
-        new = (lay.join(cand, "host", "left")
-               .select("host", F.greatest(
-                   "layer", F.coalesce("cl", F.lit(0))).alias("layer"))
-               .localCheckpoint(eager=True))
-        changed = (new.join(lay.withColumnRenamed("layer", "old"),
-                            "host")
-                   .filter(F.col("layer") != F.col("old"))
-                   .limit(1).count())
-        lay = new
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        raise ValueError(
-            f"dag_layers did not converge in {DAG_ROUNDS} rounds")
+        return (lay.join(cand, "host", "left")
+                .select("host", F.greatest(
+                    "layer", F.coalesce("cl", F.lit(0))).alias("layer"),
+                        (F.col("cl") > F.col("layer")).alias("changed")))
+
+    lay = iterate(graph.nodes(dag, "u", "v").select(
+                      "host", F.lit(0).alias("layer")), step, DAG_ROUNDS,
+                  until=lambda new, old: new.filter("changed"),
+                  what="dag_layers")
     return (lay.groupBy("layer")
             .agg(F.count("*").alias("n_hosts"),
                  F.min("host").alias("first_host"))
@@ -1473,30 +1339,24 @@ def q_dag_layers(spark, sf):
                     F.col("n_hosts").cast("bigint"), "first_host"))
 
 def _dag_layers_sql() -> str:
-    steps = []
-    for r in range(1, DAG_ROUNDS + 1):
+    def step(r):
         p = r - 1
-        steps.append(f"""
-        dc{r} AS (SELECT d.v AS host, max(l.layer) + 1 AS cl
-                  FROM dag d JOIN dl{p} l ON l.host = d.u
-                  GROUP BY 1),
-        dl{r} AS MATERIALIZED (
+        return {
+            f"dc{r}": f"""(SELECT d.v AS host, max(l.layer) + 1 AS cl
+                  FROM und d JOIN dl{p} l ON l.host = d.u
+                  GROUP BY 1)""",
+            f"dl{r}": f"""MATERIALIZED (
             SELECT l.host, greatest(l.layer, coalesce(c.cl, 0))
                        AS layer
-            FROM dl{p} l LEFT JOIN dc{r} c ON c.host = l.host)""")
-    return f"""
-        WITH {_host_edges_cte()},
-        dag AS (SELECT DISTINCT least(src, dst) AS u,
-                                greatest(src, dst) AS v
-                FROM ed WHERE src <> dst),
-        dn AS (SELECT u AS host FROM dag
-               UNION SELECT v FROM dag),
-        dl0 AS (SELECT host, 0 AS layer FROM dn),
-        {','.join(steps)}
-        SELECT CAST(layer AS INT) AS layer,
+            FROM dl{p} l LEFT JOIN dc{r} c ON c.host = l.host)"""}
+
+    return (With(_host_edges_cte()).extend(graph.sql_undirected())
+            .add("dl0", "(SELECT n AS host, 0 AS layer FROM nodes)")
+            .extend(sql_rounds(DAG_ROUNDS, step))
+            .select(f"""SELECT CAST(layer AS INT) AS layer,
                CAST(count(*) AS BIGINT) AS n_hosts,
                min(host) AS first_host
-        FROM dl{DAG_ROUNDS} GROUP BY 1"""
+        FROM dl{DAG_ROUNDS} GROUP BY 1"""))
 
 def q_influence_spread(spark, sf):
     # deterministic linear-threshold cascade from the trusted seed set
@@ -1508,167 +1368,133 @@ def q_influence_spread(spark, sf):
     # oracle). Output: every activated host with its activation round —
     # the cascade horizon audit.
     from geobuf_spark.functions import phash
-    ed = _host_edges(spark).select(F.col("src_host").alias("src"),
-                                   F.col("dst_host").alias("dst"))
-    und = (ed.select(F.least("src", "dst").alias("u"),
-                     F.greatest("src", "dst").alias("v"))
-           .filter(F.col("u") != F.col("v")).distinct())
-    adj = (und.select(F.col("u").alias("n"), F.col("v").alias("nb"))
-           .unionAll(und.select(F.col("v").alias("n"),
-                                F.col("u").alias("nb")))
-           .localCheckpoint(eager=True))
+    und = graph.undirected(_host_edges(spark), "src_host", "dst_host")
+    adj = graph.adjacency(und)
     deg = adj.groupBy("n").agg(F.count("*").alias("deg"))
     thr = (deg.select("n", "deg",
                       (F.pmod(phash.hash60_parts(F.lit("th"),
                                                  F.col("n")),
                               F.lit(1_000_000))).alias("theta"))
-           .localCheckpoint(eager=True))
-    active = (adj.select("n").distinct()
-              .filter(F.col("n").endswith("00.example"))
-              .withColumn("round", F.lit(0))
-              .localCheckpoint(eager=True))
-    converged = False
-    for r in range(1, INF_ROUNDS + 1):
+           .localCheckpoint(eager=False))
+
+    # a node keeps the first round it reached its threshold; the one
+    # groupBy also keeps the state at its shuffle's partition count
+    def step(active, r):
         acts = (adj.join(active.select(F.col("n").alias("nb")), "nb")
                 .groupBy("n").agg(F.count("*").alias("na")))
-        newly = (acts.join(thr, "n")
-                 .filter(F.col("na") * 1_000_000
-                         >= F.col("theta") * F.col("deg"))
-                 .join(active.select("n"), "n", "left_anti")
-                 .select("n", F.lit(r).alias("round")))
-        newly = newly.localCheckpoint(eager=True)
-        if newly.limit(1).count() == 0:
-            converged = True
-            break
-        active = active.unionByName(newly).localCheckpoint(eager=True)
-    if not converged:
-        raise ValueError(
-            f"influence_spread did not converge in {INF_ROUNDS}")
+        reached = (acts.join(thr, "n")
+                   .filter(F.col("na") * 1_000_000
+                           >= F.col("theta") * F.col("deg"))
+                   .select("n", F.lit(r).alias("round")))
+        return (active.select("n", "round").unionByName(reached)
+                .groupBy("n").agg(F.min("round").alias("round"))
+                .withColumn("fresh", F.col("round") == r))
+
+    active = (graph.nodes(und, "u", "v")
+              .filter(F.col("host").endswith("00.example"))
+              .select(F.col("host").alias("n"), F.lit(0).alias("round")))
+    active = iterate(active, step, INF_ROUNDS,
+                     until=lambda new, old: new.filter("fresh"),
+                     what="influence_spread")
     return active.select(F.col("n").alias("host"),
                          F.col("round").cast("int"))
 
 def _influence_spread_sql() -> str:
     from geobuf_spark.functions import phash
     th = phash.sql_hash60_parts("'th'", "n")
-    steps = []
-    for r in range(1, INF_ROUNDS + 1):
+
+    def step(r):
         p = r - 1
-        steps.append(f"""
-        ic{r} AS (SELECT a.n, count(*) AS na
+        return {
+            f"ic{r}": f"""(SELECT a.n, count(*) AS na
                   FROM adj a JOIN ia{p} x ON x.n = a.nb
-                  GROUP BY 1),
-        ia{r} AS MATERIALIZED (
+                  GROUP BY 1)""",
+            f"ia{r}": f"""MATERIALIZED (
             SELECT n, rnd FROM ia{p}
             UNION ALL
             SELECT c.n, {r} AS rnd
             FROM ic{r} c JOIN ith t ON t.n = c.n
             WHERE c.na * 1000000 >= t.theta * t.deg
-              AND c.n NOT IN (SELECT n FROM ia{p}))""")
-    return f"""
-        WITH {_host_edges_cte()},
-        und AS (SELECT DISTINCT least(src, dst) AS u,
-                                greatest(src, dst) AS v
-                FROM ed WHERE src <> dst),
-        adj AS (SELECT u AS n, v AS nb FROM und
-                UNION ALL SELECT v AS n, u AS nb FROM und),
-        ith AS (SELECT n, count(*) AS deg, {th} % 1000000 AS theta
-                FROM adj GROUP BY n),
-        ia0 AS (SELECT DISTINCT n, 0 AS rnd FROM adj
-                WHERE n LIKE '%00.example'),
-        {','.join(steps)}
-        SELECT n AS host, CAST(rnd AS INT) AS round
-        FROM ia{INF_ROUNDS}"""
+              AND c.n NOT IN (SELECT n FROM ia{p}))"""}
+
+    return (With(_host_edges_cte()).extend(graph.sql_undirected())
+            .add("ith", f"""(SELECT n, count(*) AS deg, {th} % 1000000 AS theta
+                FROM adj GROUP BY n)""")
+            .add("ia0", "(SELECT n, 0 AS rnd FROM nodes WHERE n LIKE '%00.example')")
+            .extend(sql_rounds(INF_ROUNDS, step))
+            .select(f"""SELECT n AS host, CAST(rnd AS INT) AS round
+        FROM ia{INF_ROUNDS}"""))
 
 def q_rich_club(spark, sf):
     # rich-club coefficient of the host graph: do high-degree hosts
     # link to EACH OTHER more densely than chance (the elite-core
     # signature of scale-free webs)? For each degree threshold k:
     # φ(k) = 2·E_k / (N_k·(N_k−1)) over the subgraph of nodes with
-    # deg > k, in exact ppm. One degree rollup + one threshold-tagged
-    # edge join per k (k list is a constant).
-    ed = _host_edges(spark).select(F.col("src_host").alias("src"),
-                                   F.col("dst_host").alias("dst"))
-    und = (ed.select(F.least("src", "dst").alias("u"),
-                     F.greatest("src", "dst").alias("v"))
-           .filter(F.col("u") != F.col("v")).distinct()
-           .localCheckpoint(eager=False))
-    deg = (und.select(F.col("u").alias("n"))
-           .unionAll(und.select(F.col("v").alias("n")))
-           .groupBy("n").agg(F.count("*").alias("deg"))
-           .localCheckpoint(eager=False))
-    out = None
-    for k in RC_KS:
-        elite = deg.filter(F.col("deg") > k).select("n")
-        nk = elite.count()
-        ek = (und.join(elite.withColumnRenamed("n", "u"), "u")
-              .join(elite.withColumnRenamed("n", "v"), "v").count())
-        phi = (10**6 * 2 * ek // (nk * (nk - 1))
-               if nk >= 2 else 0)
-        row = spark.createDataFrame(
-            [(k, nk, ek, phi)],
-            "k int, n_nodes bigint, n_edges bigint, phi_ppm bigint")
-        out = row if out is None else out.unionByName(row)
-    return out
+    # deg > k, in exact ppm. One plan: each node counts toward every
+    # k < deg, each edge toward every k < min(deg u, deg v); the k list
+    # is the left side, so a k without elites still yields its row.
+    und = graph.undirected(_host_edges(spark), "src_host", "dst_host")
+    deg = (graph.adjacency(und).groupBy("n")
+           .agg(F.count("*").alias("deg")))
+    ks = F.array(*[F.lit(k) for k in RC_KS])
+
+    def per_k(df, bound, name):
+        return (df.select(F.explode(F.filter(ks, lambda k: k < bound))
+                          .alias("k"))
+                .groupBy("k").agg(F.count("*").alias(name)))
+
+    nk = per_k(deg, F.col("deg"), "n_nodes")
+    ek = per_k(und.join(deg.select(F.col("n").alias("u"),
+                                   F.col("deg").alias("du")), "u")
+                  .join(deg.select(F.col("n").alias("v"),
+                                   F.col("deg").alias("dv")), "v"),
+               F.least("du", "dv"), "n_edges")
+    return (spark.range(1).select(F.explode(ks).alias("k"))
+            .join(nk, "k", "left").join(ek, "k", "left")
+            .select(F.col("k").cast("int").alias("k"),
+                    *(F.coalesce(c, F.lit(0)).cast("bigint").alias(c)
+                      for c in ("n_nodes", "n_edges")))
+            .withColumn("phi_ppm", F.expr(
+                "CASE WHEN n_nodes >= 2 THEN 2000000 * n_edges"
+                " div (n_nodes * (n_nodes - 1)) ELSE 0 END")))
 
 def _rich_club_sql() -> str:
-    legs = []
-    for k in RC_KS:
-        legs.append(f"""
-        SELECT {k} AS k,
-               CAST((SELECT count(*) FROM rdeg WHERE deg > {k})
-                    AS BIGINT) AS n_nodes,
-               CAST((SELECT count(*) FROM und
-                     JOIN rdeg a ON a.n = und.u AND a.deg > {k}
-                     JOIN rdeg b ON b.n = und.v AND b.deg > {k})
-                    AS BIGINT) AS n_edges,
-               CAST(CASE WHEN (SELECT count(*) FROM rdeg
-                               WHERE deg > {k}) >= 2
-                    THEN 1000000 * 2 * (SELECT count(*) FROM und
-                        JOIN rdeg a ON a.n = und.u AND a.deg > {k}
-                        JOIN rdeg b ON b.n = und.v AND b.deg > {k})
-                        // ((SELECT count(*) FROM rdeg WHERE deg > {k})
-                            * ((SELECT count(*) FROM rdeg
-                                WHERE deg > {k}) - 1))
-                    ELSE 0 END AS BIGINT) AS phi_ppm""")
-    return f"""
-        WITH {_host_edges_cte()},
-        und AS (SELECT DISTINCT least(src, dst) AS u,
-                                greatest(src, dst) AS v
-                FROM ed WHERE src <> dst),
-        rdeg AS (SELECT n, count(*) AS deg FROM (
-                     SELECT u AS n FROM und
-                     UNION ALL SELECT v FROM und) GROUP BY 1)
-        {' UNION ALL '.join(legs)}"""
+    return (With(_host_edges_cte()).extend(graph.sql_undirected())
+            .add("rdeg", "(SELECT n, count(*) AS deg FROM adj GROUP BY 1)")
+            .add("ks", f"(SELECT unnest({RC_KS}) AS k)")
+            .add("nk", """(SELECT k, count(*) AS n_nodes
+                FROM ks JOIN rdeg ON rdeg.deg > ks.k GROUP BY 1)""")
+            .add("ek", """(SELECT k, count(*) AS n_edges
+                FROM ks, und
+                JOIN rdeg a ON a.n = und.u JOIN rdeg b ON b.n = und.v
+                WHERE a.deg > ks.k AND b.deg > ks.k GROUP BY 1)""")
+            .select("""SELECT CAST(ks.k AS INT) AS k,
+               CAST(coalesce(n_nodes, 0) AS BIGINT) AS n_nodes,
+               CAST(coalesce(n_edges, 0) AS BIGINT) AS n_edges,
+               CAST(CASE WHEN coalesce(n_nodes, 0) >= 2
+                    THEN 1000000 * 2 * coalesce(n_edges, 0)
+                         // (n_nodes * (n_nodes - 1))
+                    ELSE 0 END AS BIGINT) AS phi_ppm
+        FROM ks LEFT JOIN nk USING (k) LEFT JOIN ek USING (k)"""))
 
-def _pagerank_hosts_sql(n: int = 2000, seed: int = 42, k: int = 25) -> str:
+def _pagerank_hosts_sql() -> str:
     """Oracle for q_pagerank_hosts: the SAME 3 integer fixed-point
     iterations chained as CTEs (operators/graph.sql_pagerank_int) — exact
     because every step is BIGINT arithmetic."""
-    from geobuf_spark.operators.graph import sql_pagerank_int
-    edges_cte = f"""{_links_cte(n, seed)},
-        edges AS (SELECT src_host AS src,
-                         {TXT.sql_url_host('dst')} AS dst
-                  FROM e)"""
-    pr = sql_pagerank_int(edges_cte, iters=3)
     return f"""
-        {pr}
+        {graph.sql_pagerank_int(_HOST_EDGES_SQL, iters=3)}
         ORDER BY rank_ppm DESC, host
-        LIMIT {k}"""
+        LIMIT 25"""
 
-def _hits_hosts_sql(n: int = 2000, seed: int = 42, k: int = 25) -> str:
+def _hits_hosts_sql() -> str:
     """Oracle for q_hits_hosts: the SAME 2 integer max-normalized HITS
     iterations chained as CTEs (operators/graph.sql_hits_int)."""
-    from geobuf_spark.operators.graph import sql_hits_int
-    edges_cte = f"""{_links_cte(n, seed)},
-        edges AS (SELECT src_host AS src,
-                         {TXT.sql_url_host('dst')} AS dst
-                  FROM e)"""
     return f"""
         SELECT host, hub_ppm, auth_ppm FROM (
-        {sql_hits_int(edges_cte, iters=2)}
+        {graph.sql_hits_int(_HOST_EDGES_SQL, iters=2)}
         ) t
         ORDER BY auth_ppm DESC, hub_ppm DESC, host
-        LIMIT {k}"""
+        LIMIT 25"""
 
 
 def oracles() -> dict[str, str]:

@@ -664,11 +664,10 @@ def test_frame_bbox_dataframe(jvm):
 def _corrupt_frames(draw):
     """A well-formed frame broken one way: truncated, a length prefix
     raised past the end, a trailing varint cut short or over 10 bytes,
-    more than 63 fields, or one random byte replaced."""
+    or one random byte replaced."""
     frame = draw(_feature_frames())
     kind = draw(st.sampled_from(
-        ["truncate", "overrun", "short_varint", "long_varint", "fields",
-         "byte"]))
+        ["truncate", "overrun", "short_varint", "long_varint", "byte"]))
     if kind == "truncate":
         return frame[:draw(st.integers(0, len(frame) - 1))]
     if kind == "overrun":
@@ -682,10 +681,6 @@ def _corrupt_frames(draw):
         return frame + bytes([0x08]) + b"\x80" * draw(st.integers(0, 3))
     if kind == "long_varint":
         return frame + bytes([0x08]) + b"\xff" * draw(st.integers(10, 12)) + b"\x01"
-    if kind == "fields":
-        # a point frame has 4-5 fields; pad to 62..66 in all
-        n = draw(st.integers(62, 66)) - len(_fields(frame))
-        return frame + b"\x30\x01" * max(n, 0)
     i = draw(st.integers(0, len(frame) - 1))
     return frame[:i] + bytes([draw(st.integers(0, 255))]) + frame[i + 1:]
 
@@ -698,6 +693,39 @@ def test_corrupt_frame_accept_reject_parity(jvm, frame):
     the numpy core.frame_fields_walk accept or reject the same frames."""
     want = _numpy_accepts(frame)
     assert _jvm_accepts(_udf(jvm, "Bbox"), frame) == want
+
+
+@settings(max_examples=50, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(frame=_feature_frames(), total=st.integers(62, 300))
+def test_many_field_frames_accepted(jvm, frame, total):
+    """No field count is capped: a frame padded with varint fields to
+    62..300 fields in all is read by both field walks."""
+    frame += b"\x30\x01" * max(total - len(_fields(frame)), 0)
+    assert _numpy_accepts(frame)
+    assert _jvm_accepts(_udf(jvm, "Bbox"), frame)
+
+
+def test_hundred_property_feature(jvm):
+    """A Point with 100 integer properties (over 100 fields) reads through
+    decode_features_fast, lazy_property, frame_keys and frame_bbox as
+    core.decode_feature / decode_properties read it."""
+    props = {f"p{i:03d}": i * 1000 - 7 for i in range(100)}
+    frame = core.encode_feature(core.Feature.from_geojson(
+        "Point", [12.5, -3.25], id=42, properties=props))
+    assert len(_fields(frame)) > 100
+    want = core.decode_feature(frame)
+    assert core.decode_properties(frame) == props
+    df = _frames_df(jvm, [frame])
+    r = spark_codec.decode_features_fast(df).first()
+    assert (r.id, r.geom_type, list(r.coords)) == (
+        want.id, want.geom_type, want.coords.tolist())
+    assert r.props_json == json.dumps(props, sort_keys=True)
+    assert [k.key for k in spark_codec.frame_keys(df).collect()] == list(props)
+    got = spark_codec.lazy_property(df, "p099", value_type="bigint").first()
+    assert tuple(got) == (42, props["p099"])
+    bb = tuple(spark_codec.frame_bbox(df).first())
+    assert np.array_equal(np.array(bb, np.float64) / core.POWER, want.bbox)
 
 
 # --- gb_decode: properties JSON and corrupt frames ---------------------------
