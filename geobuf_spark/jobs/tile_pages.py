@@ -59,8 +59,7 @@ def run_job(spark, n_pages: int, sf_dir: str, out: str, zoom: int, run_id: str) 
     with ctx.stage("pip_join") as t:
         rects = minted.minted_rects(spark, sf_dir)
         plan = strategy.choose_strategy(pts, rects, z=zoom - 2)
-        joined = sj.pip_join(pts, rects, z=zoom - 2,
-                             strategy=plan.strategy, salt=plan.salt) \
+        joined = sj.pip_join(pts, rects, z=zoom - 2, strategy=plan.strategy) \
             .localCheckpoint(eager=False)  # counted here, committed next stage
         n_joined = joined.count()
         t.set_counts(rows_in=n_pages, rows_out=n_joined)

@@ -9,8 +9,8 @@ that composition, Spark-first:
   1. point side: one cell per point (its tile at zoom z) — cheap, narrow;
   2. polygon side: explode the bbox tile cover (1:N duplication exactly as
      MapToSubFiles, split_combine.go:166-183);
-  3. equi-join on the cell id — Catalyst picks broadcast when the build side
-     is small, else shuffle-hash/sort-merge with AQE skew splitting;
+  3. equi-join on the cell id (`_cell_join`) — broadcast when the build side
+     is small, else shuffle-hash with AQE skew splitting;
   4. refine with the exact geometric predicate, staged AFTER the join so the
      cheap bbox/cell pruning runs first (the reference orders its stages the
      same way, split_combine.go:376-384).
@@ -24,9 +24,10 @@ Scale notes (100 TB / 1000 executors):
     against cell selectivity (probe rows per cell ~ n/4^z); pick z so the
     build side stays a few× its input and hot cells stay under the skew
     threshold — AQE's skew-join splitting backstops the tail.
-  - `strategy="salted"` adds explicit salting for pathological hot cells:
-    probe rows scatter to (cell, salt) and the build side replicates k ways,
-    bounding any single shuffle partition at 1/k of the hot cell.
+  - hot cells need no planning: under `strategy="shuffle"` AQE skew-join
+    splits an oversized cell partition at runtime and replicates only the
+    matching build rows (BENCH/skew_r6.json: manual salting never beat the
+    better of broadcast and shuffle).
   - the polygon side should be the smaller (dimension) table; pass
     `strategy="broadcast"` when it fits in executor memory — the cover
     explode then happens map-side with zero shuffle.
@@ -99,15 +100,32 @@ def _point_side(points: DataFrame, z: int, lon="lon", lat="lat") -> DataFrame:
     return points.withColumn("cell", tiles.point_cell(F.col(lon), F.col(lat), z))
 
 
+def _cell_join(p: DataFrame, b: DataFrame, key: str, strategy: str,
+               refine: Column) -> DataFrame:
+    """The one cell equi-join behind pip_join, pip_join_s2 and pip_join_hex:
+    point side `p` × cover side `b` on `key`, then the exact refine.
+
+    "broadcast" ships the cover to every task; "shuffle" hash-partitions
+    both sides with the point side as the hash build (measured faster than
+    building on the cover side), and AQE skew-join splits hot cells. The
+    refine runs after the join, so the join is inner only."""
+    if strategy == "broadcast":
+        joined = p.join(F.broadcast(b), key)
+    elif strategy == "shuffle":
+        joined = p.hint("SHUFFLE_HASH").join(b, key)
+    else:
+        raise ValueError(f"unknown strategy {strategy!r}")
+    return joined.filter(refine).drop(key)
+
+
 def pip_join(
     points: DataFrame,
     polys: DataFrame,
     *,
     z: int = 6,
     refine: Column | None = None,
-    how: str = "inner",
     strategy: str = "broadcast",
-    salt: int | None = None,
+    salt: int = 1,
     lon: str = "lon",
     lat: str = "lat",
 ) -> DataFrame:
@@ -117,38 +135,15 @@ def pip_join(
     `refine` defaults to rectangle containment. Returns the joined rows
     (all point columns + polygon columns minus the internal cell key).
 
-    `salt=None` with strategy="salted" derives the factor from the probe
-    cell histogram via plans.strategy.plan_salt — the r2 static salt=8
-    replicated the build side 8× even when one salt would do (VERDICT r2
-    "what's wrong" #4); salting is k-fold real work, so k must come from
-    the hot-cell mass."""
+    `salt` is `plans.strategy.JoinPlan.salt` and must be 1: hot cells are
+    split at runtime by AQE skew-join, not by replicating the cover."""
+    if salt != 1:
+        raise ValueError(f"salt={salt!r}: salt must be 1; hot cells are "
+                         "split at runtime by AQE skew-join (strategy='shuffle')")
     if refine is None:
         refine = rect_contains(F.col(lon), F.col(lat))
-    if strategy == "salted" and salt is None:
-        from geobuf_spark.plans import strategy as _strat
-
-        hot = (_strat.cell_histogram(points, z, lon, lat)
-               .agg(F.max("n")).first()[0] or 0)
-        salt = _strat.plan_salt(hot)
-    elif salt is None:
-        salt = 1
-    p = _point_side(points, z, lon, lat)
-    b = _cover_side(polys, z)
-
-    if strategy == "broadcast":
-        joined = p.join(F.broadcast(b), "cell", how)
-    elif strategy == "shuffle":
-        joined = p.hint("SHUFFLE_HASH").join(b, "cell", how)
-    elif strategy == "salted":
-        # probe scatters over k salts; build replicates k ways — bounds any
-        # hot cell's shuffle partition at 1/k (SURVEY §2.5 salting plan)
-        p2 = p.withColumn("_salt", F.pmod(F.hash(F.col(lon)), F.lit(salt)))
-        b2 = b.withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1))))
-        joined = p2.join(b2, ["cell", "_salt"], how).drop("_salt")
-    else:
-        raise ValueError(f"unknown strategy {strategy!r}")
-
-    return joined.filter(refine).drop("cell")
+    return _cell_join(_point_side(points, z, lon, lat), _cover_side(polys, z),
+                      "cell", strategy, refine)
 
 
 def polygon_edges(polys: DataFrame, poly_id: str = "poly_id",
@@ -243,7 +238,6 @@ def pip_join_s2(
     *,
     level: int | None = None,
     refine: Column | None = None,
-    how: str = "inner",
     strategy: str = "broadcast",
     lon: str = "lon",
     lat: str = "lat",
@@ -265,50 +259,29 @@ def pip_join_s2(
     from geobuf_spark.functions import cells
     from geobuf_spark.plans.strategy import choose_s2_level
 
-    if how != "inner":
-        # the exact-refine filter runs AFTER the join, so outer modes would
-        # silently drop unmatched rows back to inner semantics
-        raise ValueError("pip_join_s2 supports how='inner' only")
     if level is None:
         level = choose_s2_level(polys)
     if refine is None:
         refine = rect_contains(F.col(lon), F.col(lat))
     p = points.withColumn("cell", cells.s2_cell(F.col(lon), F.col(lat), level))
-    b = cells.explode_s2_cover(polys, level)
-
-    if strategy == "broadcast":
-        joined = p.join(F.broadcast(b), "cell", how)
-    elif strategy == "shuffle":
-        joined = p.hint("SHUFFLE_HASH").join(b, "cell", how)
-    else:
-        raise ValueError(f"unknown strategy {strategy!r}")
-    return joined.filter(refine).drop("cell")
+    return _cell_join(p, cells.explode_s2_cover(polys, level), "cell",
+                      strategy, refine)
 
 
 def pip_join_hex(points: DataFrame, polys: DataFrame, *, size_deg: float = 2.5,
-                 refine: Column | None = None, how: str = "inner",
-                 strategy: str = "broadcast", lon: str = "lon",
-                 lat: str = "lat") -> DataFrame:
+                 refine: Column | None = None, strategy: str = "broadcast",
+                 lon: str = "lon", lat: str = "lat") -> DataFrame:
     """pip_join keyed by H3-style hex cells: 6-regular neighborhoods give
     a rounder cover than square tiles (≈13% fewer false candidates for
     isotropic data at equal cell area). Same staging: hex-cover equi-join,
     exact refine after."""
     from geobuf_spark.functions import hexgrid
 
-    if how != "inner":
-        raise ValueError("pip_join_hex supports how='inner' only (refine "
-                         "runs post-join and would drop outer rows)")
     if refine is None:
         refine = rect_contains(F.col(lon), F.col(lat))
     p = points.withColumn("hex", hexgrid.hex_cell(F.col(lon), F.col(lat), size_deg))
-    b = hexgrid.explode_hex_cover(polys, size_deg)
-    if strategy == "broadcast":
-        joined = p.join(F.broadcast(b), "hex", how)
-    elif strategy == "shuffle":
-        joined = p.hint("SHUFFLE_HASH").join(b, "hex", how)
-    else:
-        raise ValueError(f"unknown strategy {strategy!r}")
-    return joined.filter(refine).drop("hex")
+    return _cell_join(p, hexgrid.explode_hex_cover(polys, size_deg), "hex",
+                      strategy, refine)
 
 
 LINE_CELL = 56_250_000  # 5.625° in 1e-7 lattice units — the line-cover grid
@@ -378,8 +351,8 @@ def radius_self_join(pts_q: DataFrame, r: int, id_col: str = "doc_id",
 
     Scale: ONE shuffle per side on the cell key (the ×9 fan-out happens
     before the exchange but the join stays an equi-join, so AQE's skew
-    split backstops hot cells; for adversarial density add a salt stage as
-    in pip_join). Integer-exact: cell index is `div` on non-negative
+    split backstops hot cells, as in pip_join's shuffle strategy).
+    Integer-exact: cell index is `div` on non-negative
     operands; dist2 ≤ 8r² needs r < 2^30. Output (id_a, id_b, dist2),
     dist2 = Δx² + Δy² ≤ r².
     """
@@ -526,7 +499,7 @@ def segment_xing_join(wl: DataFrame, cell: int, k: int = 9) -> DataFrame:
 
     Scale shape: ONE equi-join shuffle on (cx, cy); `cell` must be ≥ the
     max per-segment extent (cover ≤ 2 cells/axis) and tunes to density;
-    hot cells salt like any cell join (plans/strategy.plan_salt).
+    hot cells are split by AQE skew-join like any cell join.
     Reference analog: the bbox prefilter staging of split_combine.go's
     Intersect, upgraded to an exact predicate."""
     n = k - 1

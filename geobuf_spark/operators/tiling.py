@@ -78,7 +78,7 @@ def read_tile(spark, path: str, z: int, x: int, y: int) -> DataFrame:
 
 def tile_histogram(assigned: DataFrame) -> DataFrame:
     """Per-tile feature counts (NumberFeatures analog, split_combine.go:145)
-    — also the input to salt planning for hot cells."""
+    — also the hot-tile diagnostic (registry query cell_skew_stats)."""
     return assigned.groupBy("z", "x", "y").agg(F.count("*").alias("n_features"))
 
 

@@ -1,17 +1,15 @@
-"""Join-strategy and skew planning (SURVEY §2.5/§4 custom policies).
+"""Join-strategy planning (SURVEY §2.5/§4 custom policies).
 
 The reference has no strategy selection — hot tiles just make big subfiles.
-Here the policy is explicit and data-driven:
+Here the policy is explicit and recorded:
 
 - `choose_strategy`: broadcast when the exploded build side fits the
-  broadcast budget, else shuffle; salted shuffle when the probe-side cell
-  histogram shows a hot cell above the skew threshold.
-- `plan_salt`: salt factor from the hot-cell mass so no shuffle partition
-  receives more than `target_rows_per_task` rows of any one cell.
+  broadcast budget, else shuffle. Hot cells are not planned for: AQE
+  skew-join (`spark.sql.adaptive.skewJoin.enabled`, set by `session.py`)
+  splits an oversized shuffle partition at runtime, so the plan never
+  scans the probe side.
 
-Both run on aggregates (counts), never on raw rows — planning cost is one
-cheap pre-pass, amortized at 100 TB where a mis-planned join costs hours.
-AQE remains on as the runtime backstop; this is the compile-time choice.
+The budget check runs on one build-side aggregate, never on raw rows.
 """
 
 from __future__ import annotations
@@ -26,20 +24,10 @@ from geobuf_spark.functions import tiles
 
 @dataclass
 class JoinPlan:
-    strategy: str  # broadcast | shuffle | salted
-    salt: int
+    strategy: str  # broadcast | shuffle
+    salt: int  # always 1: skewed cells are split by AQE skew-join
     build_rows: int
-    hot_cell_rows: int
     reason: str
-
-
-def cell_histogram(points: DataFrame, z: int, lon: str = "lon", lat: str = "lat") -> DataFrame:
-    """Probe-side rows per cell — the salting planner's input
-    (NumberFeatures per tile, split_combine.go:145, as one agg)."""
-    return (
-        points.withColumn("cell", tiles.point_cell(F.col(lon), F.col(lat), z))
-        .groupBy("cell").agg(F.count("*").alias("n"))
-    )
 
 
 def estimate_cover_rows(polys: DataFrame, z: int) -> int:
@@ -52,48 +40,17 @@ def estimate_cover_rows(polys: DataFrame, z: int) -> int:
     return polys.agg(F.sum(per)).first()[0] or 0
 
 
-def plan_salt(hot_cell_rows: int, target_rows_per_task: int = 2_000_000,
-              max_salt: int = 64) -> int:
-    """Salt factor bounding any one cell's share per task at roughly
-    target_rows_per_task. Capped at `max_salt` (build-side replication is
-    k-fold real work) — when the cap binds, the residual rows/task is
-    hot_cell_rows/max_salt; `choose_strategy` surfaces that in its reason
-    instead of silently pretending the bound held."""
-    if hot_cell_rows <= target_rows_per_task:
-        return 1
-    return min(max_salt, -(-hot_cell_rows // target_rows_per_task))
-
-
 def choose_strategy(points: DataFrame, polys: DataFrame, z: int, *,
-                    broadcast_budget_rows: int = 5_000_000,
-                    skew_threshold_rows: int = 2_000_000,
-                    lon: str = "lon", lat: str = "lat") -> JoinPlan:
+                    broadcast_budget_rows: int = 5_000_000) -> JoinPlan:
+    """Cover-row budget check. `points` stays in the signature for callers
+    and is never read."""
     build_rows = estimate_cover_rows(polys, z)
     if build_rows <= broadcast_budget_rows:
-        # broadcast needs no probe statistics: skip the histogram scan of
-        # the (possibly 100 TB) points table entirely
-        return JoinPlan("broadcast", 1, build_rows, -1,
+        return JoinPlan("broadcast", 1, build_rows,
                         f"cover rows {build_rows} ≤ budget {broadcast_budget_rows}")
-    hist = cell_histogram(points, z, lon, lat)
-    hot = hist.agg(F.max("n")).first()[0] or 0
-    salt = plan_salt(hot, skew_threshold_rows)
-    if salt > 1:
-        residual = -(-hot // salt)
-        note = "" if residual <= skew_threshold_rows else             f" (salt cap binds: ~{residual} rows/task residual)"
-        return JoinPlan("salted", salt, build_rows, hot,
-                        f"hot cell {hot} rows > {skew_threshold_rows}, salt={salt}{note}")
-    return JoinPlan("shuffle", 1, build_rows, hot,
-                    f"cover rows {build_rows} exceed broadcast budget, no hot cell")
-
-
-def pip_join_planned(points: DataFrame, polys: DataFrame, *, z: int = 6, **kw):
-    """pip_join with the strategy chosen from data statistics."""
-    from geobuf_spark.operators import spatial_join as sj
-
-    plan = choose_strategy(points, polys, z,
-                           lon=kw.get("lon", "lon"), lat=kw.get("lat", "lat"))
-    return sj.pip_join(points, polys, z=z, strategy=plan.strategy,
-                       salt=plan.salt, **kw), plan
+    return JoinPlan("shuffle", 1, build_rows,
+                    f"cover rows {build_rows} > budget {broadcast_budget_rows}; "
+                    "hot cells are split at runtime by AQE skew-join")
 
 
 def choose_s2_level(polys: DataFrame, *, max_level: int = 12,

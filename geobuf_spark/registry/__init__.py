@@ -1,6 +1,6 @@
 """Query registry package: the driver contract, assembled.
 
-Family modules hold the 369 query functions with their DuckDB
+Family modules hold the 368 query functions with their DuckDB
 oracles beside them; window.py holds the driver-window ORDER as
 explicit data; this __init__ assembles queries()/oracle_sql()
 from both. __spark_entry__.py at the repo root is a thin facade
@@ -43,7 +43,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 prev = impl.setdefault(n[2:], v)
                 assert prev is v, f"duplicate query name {n}"
     out = {name: impl[name] for name in WINDOW + QUEUE}
-    assert len(out) == len(impl) == 369
+    assert len(out) == len(impl) == 368
     return out
 
 

@@ -4,15 +4,15 @@ Split out of the former __spark_entry__.py monolith (VERDICT r4 #2);
 query functions keep their original text, oracles sit beside them in
 this module's oracles(). Driver-window ORDER lives in window.py, not here.
 
-Queries here (43):
+Queries here (42):
 bbox_intersect_join, bearing_sectors, cell_skew_stats, csv_export,
 distinct_prop_keys, feature_count, feature_meta, geo_bounds,
 geobuf_roundtrip, geom_area_centroid, geom_validity, hausdorff_pairs,
 hex_density, hotspot_clusters, increment_limit, knn_adaptive_k5,
 knn_hex_k5, knn_k5, knn_s2_k5, line_length_stats, map_features,
 mint_points, nn_dist_stats, pip_join_general, pip_join_hex,
-pip_join_rects, pip_join_rects_salted, pip_join_s2,
-pip_join_triangles, pip_semi, polygon_roundtrip, props_roundtrip,
+pip_join_rects, pip_join_s2, pip_join_triangles, pip_semi,
+polygon_roundtrip, props_roundtrip,
 radius_join_pairs, rect_overlay_iou, route_snap_join, s2_cells_l8,
 segment_xing_join, simplify_vw, skyline_docs, staypoints, traj_steps,
 union_datasets, wkt_quantized
@@ -253,8 +253,8 @@ def _rect_overlay_iou_sql() -> str:
         FROM p"""
 
 def q_cell_skew_stats(spark, sf):
-    # skew diagnostics as a query — the cell histogram the salted-join
-    # planner (plans/strategy.plan_salt) reads, surfaced as shape stats:
+    # skew diagnostics as a query — the probe-side cell histogram (the
+    # mass AQE skew-join splits at runtime), surfaced as shape stats:
     # one row (n_cells, n_points, max_count, mean_x100, skew_ratio_x100 =
     # max/mean). Two narrow aggregations, all integer.
     a = tiling.assign_tiles_points(_points(spark, sf), z=6)
@@ -354,14 +354,6 @@ def q_hex_density(spark, sf):
 def q_pip_join_rects(spark, sf):
     return sj.pip_join(_points(spark, sf), _rects(spark, sf), z=6,
                        strategy="broadcast").select("doc_id", "poly_id")
-
-def q_pip_join_rects_salted(spark, sf):
-    # salt factor comes from plan_salt on the probe histogram (VERDICT r2
-    # #6) — at sandbox scale that is k=1 (no hot cell), i.e. the planner
-    # correctly refuses to replicate the build side; pytest exercises
-    # multi-salt correctness with explicit k
-    return sj.pip_join(_points(spark, sf), _rects(spark, sf), z=6,
-                       strategy="salted").select("doc_id", "poly_id")
 
 def q_pip_join_s2(spark, sf):
     # same semantics as pip_join_rects, s2 cube-face cells as the equi-key;
@@ -637,7 +629,7 @@ def q_segment_xing_join(spark, sf):
     # is kept only in the cell holding the max of the two bbox min-corners,
     # the rect_overlay_iou technique), then the strict integer orientation
     # predicate. Scale: one equi-join shuffle on (cx, cy); cell span tunes
-    # to density; hot cells fall under plan_salt like any cell join.
+    # to density; hot cells fall under AQE skew-join like any cell join.
     # Fixture: the CLUSTERED walk mint (the rank-1 base never overlaps).
     # Core: operators/spatial_join.segment_xing_join (stress harness
     # tools/bench_segment_stress.py runs the same code at arbitrary N).
@@ -1125,10 +1117,6 @@ def oracles() -> dict[str, str]:
                    count(*) AS n_features
             FROM ({pts}) GROUP BY 1""",
         "pip_join_rects": f"""
-            SELECT p.doc_id, r.poly_id FROM ({pts}) p, ({rects}) r
-            WHERE p.lon >= r.minx AND p.lon <= r.maxx
-              AND p.lat >= r.miny AND p.lat <= r.maxy""",
-        "pip_join_rects_salted": f"""
             SELECT p.doc_id, r.poly_id FROM ({pts}) p, ({rects}) r
             WHERE p.lon >= r.minx AND p.lon <= r.maxx
               AND p.lat >= r.miny AND p.lat <= r.maxy""",

@@ -18,24 +18,26 @@ def test_choose_strategy_broadcast_small(spark, sf_small):
     assert plan.build_rows > 0
 
 
-def test_choose_strategy_salted_on_hot_cell(spark, sf_small):
-    pts = minted.minted_points(spark, sf_small)
-    # everything in one cell → pathological skew
-    hot = pts.withColumn("lon", F.lit(10.0)).withColumn("lat", F.lit(10.0))
+def test_choose_strategy_over_budget_is_shuffle(spark, sf_small):
+    # points that fail on any read: the plan must not scan the probe side
+    pts = minted.minted_points(spark, sf_small).withColumn(
+        "lon", F.raise_error(F.lit("points were read")).cast("double"))
     rects = minted.minted_rects(spark, sf_small)
-    plan = strategy.choose_strategy(
-        hot, rects, z=6, broadcast_budget_rows=10, skew_threshold_rows=100
-    )
-    assert plan.strategy == "salted"
-    assert plan.salt > 1
+    plan = strategy.choose_strategy(pts, rects, z=6, broadcast_budget_rows=10)
+    assert (plan.strategy, plan.salt) == ("shuffle", 1)
+    assert plan.build_rows > 10
+    assert "AQE skew-join" in plan.reason
 
 
 def test_planned_join_rows_equal_direct(spark, sf_small):
     pts = minted.minted_points(spark, sf_small)
     rects = minted.minted_rects(spark, sf_small)
-    planned, plan = strategy.pip_join_planned(pts, rects, z=6)
+    # the flagship write side's calls, with the budget forcing a shuffle
+    plan = strategy.choose_strategy(pts, rects, z=6, broadcast_budget_rows=10)
+    planned = sj.pip_join(pts, rects, z=6, strategy=plan.strategy,
+                          salt=plan.salt)
     direct = sj.pip_join(pts, rects, z=6, strategy="broadcast")
-    assert planned.count() == direct.count()
+    assert planned.count() == direct.count() > 0
 
 
 def test_estimate_cover_rows_matches_explode(spark, sf_small):
@@ -49,23 +51,77 @@ def test_estimate_cover_rows_matches_explode(spark, sf_small):
 
 # --- physical plan quality ----------------------------------------------------
 
-def test_broadcast_join_is_broadcast(spark, sf_small):
-    pts = minted.minted_points(spark, sf_small)
-    rects = minted.minted_rects(spark, sf_small)
-    plan = sj.pip_join(pts, rects, z=6, strategy="broadcast") \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
+_CELL_JOINS = {
+    "tile": lambda pts, rects, s: sj.pip_join(pts, rects, z=6, strategy=s),
+    "s2": lambda pts, rects, s: sj.pip_join_s2(pts, rects, strategy=s),
+    "hex": lambda pts, rects, s: sj.pip_join_hex(pts, rects, strategy=s),
+}
+_JOIN_NODES = {"broadcast": "BroadcastHashJoin", "shuffle": "ShuffledHashJoin"}
 
 
-def test_salted_join_has_no_broadcast_of_probe(spark, sf_small):
+@pytest.mark.parametrize("index,strat", [(i, s) for i in _CELL_JOINS
+                                           for s in _JOIN_NODES])
+def test_cell_join_node(spark, sf_small, index, strat):
+    """Every cell index plans the join its strategy names: the broadcast
+    hint or the shuffle-hash hint is honoured, never a sort-merge."""
     pts = minted.minted_points(spark, sf_small)
     rects = minted.minted_rects(spark, sf_small)
-    plan = sj.pip_join(pts, rects, z=6, strategy="salted", salt=4) \
+    plan = _CELL_JOINS[index](pts, rects, strat) \
         ._jdf.queryExecution().executedPlan().toString()
-    # salted path joins on (cell, salt); the join itself may still be
-    # broadcast for a tiny build side, but the salt column must be there
-    assert "_salt" in plan
+    for s, node in _JOIN_NODES.items():
+        assert (node in plan) == (s == strat), plan
+    assert "SortMergeJoin" not in plan, plan
+
+
+# AQE skew-join at test scale: any partition over 64k and twice the median
+# is split; no broadcast, so the join stays a shuffle join
+_SKEW_CONF = {
+    "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "64k",
+    "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "64k",
+    "spark.sql.autoBroadcastJoinThreshold": "-1",
+    "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
+}
+
+
+def test_shuffle_join_skew_path(spark, sf_small):
+    """The skew path is AQE skew-join: a planted hot cell in the probe side
+    is split at runtime, and the rows equal the broadcast join's."""
+    rects = minted.minted_rects(spark, sf_small)
+    # the minted rectangles overlap ~190 deep at their centres; the west
+    # corner of the westmost one is covered about once, which keeps the
+    # join output near the probe size
+    r = rects.orderBy("minx").first()
+    cx, cy = r.minx, r.miny
+    # 90% of 200k points in a 0.001° box at that corner (one z6 cell),
+    # the rest spread over the globe; deterministic, no RNG
+    fx = (F.col("doc_id") * 2654435761 % 1_000_003) / 1_000_003.0
+    fy = (F.col("doc_id") * 40503 % 999_983) / 999_983.0
+    hot = F.col("doc_id") < 180_000
+    pts = spark.range(200_000).withColumnRenamed("id", "doc_id").select(
+        "doc_id",
+        F.when(hot, cx + fx * 1e-3).otherwise(-180.0 + fx * 360.0).alias("lon"),
+        F.when(hot, cy + fy * 1e-3).otherwise(-85.0 + fy * 170.0).alias("lat"))
+    old = {k: spark.conf.get(k) for k in _SKEW_CONF}
+    try:
+        for k, v in _SKEW_CONF.items():
+            spark.conf.set(k, v)
+        shuffled = sj.pip_join(pts, rects, z=6, strategy="shuffle") \
+            .select("doc_id", "poly_id")
+        got = sorted(shuffled.collect())
+        # the AQE final plan of the run that produced `got`
+        plan = shuffled._jdf.queryExecution().executedPlan() \
+            .executedPlan().toString()
+        want = sorted(sj.pip_join(pts, rects, z=6, strategy="broadcast")
+                      .select("doc_id", "poly_id").collect())
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert "ShuffledHashJoin(skew=true)" in plan, plan
+    assert got == want and len(want) >= 180_000
 
 
 def test_parquet_scan_prunes_columns(spark, sf_small):
@@ -80,25 +136,6 @@ def test_filter_pushdown_reaches_scan(spark, sf_small):
         .filter(F.col("lang") == "en").select("doc_id")
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters: [IsNotNull(lang), EqualTo(lang,en)]" in plan, plan[-800:]
-
-
-def test_pip_join_single_shuffle_on_salted(spark, sf_small):
-    """salted strategy must add at most the one planned exchange pair."""
-    pts = minted.minted_points(spark, sf_small)
-    rects = minted.minted_rects(spark, sf_small)
-    plan = sj.pip_join(pts, rects, z=6, strategy="shuffle") \
-        ._jdf.queryExecution().executedPlan().toString()
-    # shuffle-hash hint honored: no sort-merge
-    assert "ShuffledHashJoin" in plan
-
-
-def test_pip_join_s2_broadcast_plan(spark, sf_small):
-    pts = minted.minted_points(spark, sf_small)
-    rects = minted.minted_rects(spark, sf_small)
-    plan = sj.pip_join_s2(pts, rects) \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
 
 
 def test_tile_pyramid_single_scan(spark, sf_small):
@@ -130,21 +167,6 @@ def test_lazy_property_scan_reads_only_binary(spark, sf_small, tmp_path):
     lazy = spark_codec.lazy_property(spark.read.parquet(p), "lang")
     plan = lazy._jdf.queryExecution().executedPlan().toString()
     assert "ReadSchema: struct<geobuf:binary>" in plan, plan[-600:]
-
-
-def test_salted_default_uses_plan_salt(spark, sf_small):
-    # salt=None derives k from the probe histogram (no hot cell at this
-    # scale → k=1, no build replication) and returns the same rows
-    from geobuf_spark.sources import minted
-    pts = minted.minted_points(spark, sf_small)
-    rects = minted.minted_rects(spark, sf_small)
-    auto = {(r.doc_id, r.poly_id)
-            for r in sj.pip_join(pts, rects, z=6, strategy="salted")
-            .select("doc_id", "poly_id").collect()}
-    bc = {(r.doc_id, r.poly_id)
-          for r in sj.pip_join(pts, rects, z=6, strategy="broadcast")
-          .select("doc_id", "poly_id").collect()}
-    assert auto == bc
 
 
 # --- geobuf read path: the frame split and the bbox read stay in the JVM ---

@@ -36,7 +36,7 @@ def brute_rect_pairs(points_pd, rects_pd):
     return out
 
 
-@pytest.mark.parametrize("strategy", ["broadcast", "shuffle", "salted"])
+@pytest.mark.parametrize("strategy", ["broadcast", "shuffle"])
 def test_pip_join_rects_all_strategies(points, rects, strategy):
     got = {
         (r.doc_id, r.poly_id)
@@ -152,10 +152,12 @@ def test_s2_cover_superset_property(spark):
         assert (r.box_id, r.cell) in cover, (r.box_id, r.lon, r.lat)
 
 
-def test_pip_join_cell_indexes_reject_outer_modes(points, rects):
-    """Outer modes would silently degenerate to inner (refine runs after
-    the join) — the s2/hex variants must refuse them (ADVICE r01)."""
-    with pytest.raises(ValueError, match="inner"):
-        sj.pip_join_s2(points, rects, how="left")
-    with pytest.raises(ValueError, match="inner"):
-        sj.pip_join_hex(points, rects, how="left")
+def test_pip_join_rejects_salt_and_unknown_strategy(points, rects):
+    """Hot cells are split by AQE skew-join: `salt` is 1 (JoinPlan.salt)
+    or an error, and a strategy other than broadcast/shuffle is refused
+    by every cell index."""
+    with pytest.raises(ValueError, match="AQE skew-join"):
+        sj.pip_join(points, rects, salt=4)
+    for join in (sj.pip_join, sj.pip_join_s2, sj.pip_join_hex):
+        with pytest.raises(ValueError, match="unknown strategy 'merge'"):
+            join(points, rects, strategy="merge")

@@ -13,8 +13,8 @@ Legs (each min-of-`trials` in ONE session, per-trial loadavg recorded):
   shuffle    — same probe side, rects replicated `rect_mult`× with
                distinct poly_ids so the exploded z=7 cover exceeds the
                5M-row broadcast budget; the join goes through
-               `pip_join_planned`, the chosen plan is printed and the
-               physical plan is asserted broadcast-free.
+               `choose_strategy` + `pip_join`, the chosen plan is printed
+               and the physical plan is asserted broadcast-free.
 
 Usage: python tools/bench_stress.py [n_pages] [trials] [rect_mult] [n_pages_shuffle]
 Defaults: 50_000_000 pages, 3 trials, 16× rects, shuffle leg at n_pages/5
@@ -81,7 +81,7 @@ def main() -> int:
                  .localCheckpoint())
 
     plan = strat.choose_strategy(probe_side(spark, 1000), big_rects, 7)
-    print(f"shuffle-leg plan: {plan.strategy} (salt={plan.salt}) — {plan.reason}",
+    print(f"shuffle-leg plan: {plan.strategy} — {plan.reason}",
           file=sys.stderr)
     assert plan.strategy != "broadcast", plan
 
@@ -90,16 +90,14 @@ def main() -> int:
         return tail(sj.pip_join(pts, rects, z=7, strategy="broadcast"))
 
     def leg_shuffle():
-        # plan chosen once above (cheap here — build-side cover estimate
-        # only — but a histogram-scanning plan inside the timed region
-        # would bill the probe pipeline twice; cf. the bench_skew salt fix)
+        # plan chosen once above: the build-side cover estimate is an
+        # aggregate over big_rects, kept out of the timed region
         pts = probe_side(spark, N_SHUFFLE)
-        return tail(sj.pip_join(pts, big_rects, z=7, strategy=plan.strategy,
-                                salt=plan.salt))
+        return tail(sj.pip_join(pts, big_rects, z=7, strategy=plan.strategy))
 
     # physical-plan guard: the forced leg must not smuggle a broadcast in
-    pts_s = probe_side(spark, 1000)
-    forced, _ = strat.pip_join_planned(pts_s, big_rects, z=7)
+    forced = sj.pip_join(probe_side(spark, 1000), big_rects, z=7,
+                         strategy=plan.strategy)
     pp = forced._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" not in pp, "shuffle leg still broadcasts"
     join_nodes = [l.strip() for l in pp.splitlines()
