@@ -297,38 +297,26 @@ _GH_LAT_SPAN = 1_800_000_000  # 180°
 _GH_LAT_OFF = 50_000_000      # raw qy spans [-85,85): shift to the -90 edge
 
 
-def geohash_q(qx: Column, qy: Column, chars: int = 6) -> Column:
-    """Geohash string of a raw-lattice quantized point (qx in [0, 3.6e9)
-    = lon offset from -180°, qy in [0, 1.7e9) = lat offset from -85°).
-    chars must be even (odd geohash lengths split bits unevenly between
-    the axes; the even case is one exact division per axis)."""
-    from geobuf_spark.functions.geom import _idiv
-    from geobuf_spark.functions.tiles import _spread_col
-    if chars % 2 or not 0 < chars <= 6:
-        raise ValueError("chars must be even and <= 6 (30-bit interleave)")
-    bits = 5 * chars // 2
-    gx = _idiv(F.shiftleft(qx.cast("long"), bits), F.lit(_GH_LON_SPAN))
-    gy = _idiv(F.shiftleft(qy.cast("long") + F.lit(_GH_LAT_OFF), bits),
-               F.lit(_GH_LAT_SPAN))
-    code = F.shiftleft(_spread_col(gx), 1).bitwiseOR(_spread_col(gy))
-    alphabet = F.array(*[F.lit(c) for c in _B32])
-    return F.concat(*[
-        F.element_at(alphabet,
-                     (F.shiftright(code, 5 * (chars - 1 - k))
-                      .bitwiseAND(F.lit(31)) + 1).cast("int"))
-        for k in range(chars)])
-
-
 def sql_geohash_q(qx: str, qy: str, chars: int = 6) -> str:
-    """DuckDB twin of geohash_q. Feed it SIMPLE column names (wrap the
+    """Geohash string of a raw-lattice quantized point (qx in [0, 3.6e9)
+    = lon offset from -180°, qy in [0, 1.7e9) = lat offset from -85°), as
+    SQL text Spark and DuckDB both evaluate. chars must be even (odd
+    geohash lengths split bits unevenly between the axes; the even case
+    is one exact division per axis). Feed it SIMPLE column names (wrap the
     coordinate arithmetic in an inner SELECT) — the mask ladder repeats
     its argument 16 times."""
     from geobuf_spark.functions.tiles import _spread_sql
     if chars % 2 or not 0 < chars <= 6:
-        raise ValueError("chars must be even and <= 6")
+        raise ValueError("chars must be even and <= 6 (30-bit interleave)")
     bits = 5 * chars // 2
-    gx = f"((CAST({qx} AS BIGINT) << {bits}) // {_GH_LON_SPAN})"
-    gy = f"(((CAST({qy} AS BIGINT) + {_GH_LAT_OFF}) << {bits}) // {_GH_LAT_SPAN})"
+
+    def idiv(a, b):
+        # Spark's `div` is `//` in DuckDB; for 0 <= a < 2^53 the exact
+        # multiple a - a % b divides exactly in IEEE doubles on both
+        return f"CAST((({a}) - ({a}) % {b}) / {b} AS BIGINT)"
+
+    gx = idiv(f"CAST({qx} AS BIGINT) << {bits}", _GH_LON_SPAN)
+    gy = idiv(f"(CAST({qy} AS BIGINT) + {_GH_LAT_OFF}) << {bits}", _GH_LAT_SPAN)
     code = f"(({_spread_sql(gx)} << 1) | {_spread_sql(gy)})"
     parts = [f"substr('{_B32}', CAST((({code}) >> {5 * (chars - 1 - k)}) & 31 AS INT) + 1, 1)"
              for k in range(chars)]

@@ -1,17 +1,21 @@
-"""Web-mercator tile math as pure Spark Column expressions.
+"""Web-mercator tile math as SQL text that Spark and DuckDB both parse.
 
 Replaces the reference's external mercantile/tilecover dependencies
 (m.Tile/m.Parent at split_combine.go:47-49,390-394; tilecover.TileCover at
-split_combine.go:247) with the published slippy-map formulas, implemented
+split_combine.go:247) with the published slippy-map formulas, evaluated
 entirely JVM-side so Catalyst codegens them — no Python on the hot path.
 
     x = floor((lon + 180) / 360 * 2^z)
     y = floor((1 - ln(tan(φ) + sec(φ)) / π) / 2 * 2^z)
     parent(x, y, Δz) = (x >> Δz, y >> Δz)        # split_combine.go:390-394
 
-The exact same arithmetic is emitted as ANSI SQL for the DuckDB oracle
-(see __spark_entry__.oracle_sql) so driver correctness checks compare
-identical IEEE expressions.
+Each formula is written once, as SQL text: Spark reads it through
+`selectExpr`/`F.expr` and the DuckDB oracles (__spark_entry__.oracle_sql)
+splice the same string, so driver correctness checks compare identical
+IEEE expressions. `sql_*` builders are dialect-neutral; `spark_*` builders
+use Spark-only functions (`sequence`, `transform`, ln/tan). Tile y keeps
+two formulas by design (ORACLE_NUMERICS.md §B): `spark_tile_y` for the
+engine, `sql_tile_y` (literal boundary counts) for the oracle.
 """
 
 from __future__ import annotations
@@ -27,32 +31,63 @@ def _n(z: int) -> int:
     return 1 << z
 
 
-def tile_x(lon: Column, z: int) -> Column:
-    """Slippy-map tile x at zoom z, clamped to [0, 2^z-1]."""
-    raw = F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(float(_n(z))))
-    return F.least(F.greatest(raw, F.lit(0)), F.lit(_n(z) - 1)).cast("bigint")
+def _dbl(v: float) -> str:
+    """A DOUBLE literal in both dialects: `1.0` is DECIMAL in Spark and
+    DuckDB alike, `1e0` is DOUBLE in both."""
+    s = repr(float(v))
+    return s if "e" in s else s + "e0"
 
 
-def tile_y(lat: Column, z: int) -> Column:
-    """Slippy-map tile y at zoom z (north = 0), clamped to [0, 2^z-1]."""
-    clamped = F.least(F.greatest(lat, F.lit(-MAX_LAT)), F.lit(MAX_LAT))
-    r = F.radians(clamped)
-    raw = F.floor(
-        (F.lit(1.0) - F.log(F.tan(r) + F.lit(1.0) / F.cos(r)) / F.lit(3.141592653589793))
-        / F.lit(2.0)
-        * F.lit(float(_n(z)))
-    )
-    return F.least(F.greatest(raw, F.lit(0)), F.lit(_n(z) - 1)).cast("bigint")
+def _clamp(v: str, n: int) -> str:
+    return f"least(greatest({v}, 0), {n - 1})"
 
 
-def cell_id(z: int, x: Column, y: Column) -> Column:
+def _null_guard(cols, expr: str) -> str:
+    """`expr`, or NULL when any of `cols` is NULL. least/greatest skip
+    NULLs, so an unguarded clamp maps a NULL coordinate to a border tile.
+    The guard sits at the top of the key: Catalyst then folds the
+    `isnotnull(key)` it infers for a join on the key into
+    `isnotnull(col)`, instead of evaluating the key a second time."""
+    nulls = " OR ".join(f"({c}) IS NULL" for c in cols)
+    return f"CASE WHEN {nulls} THEN NULL ELSE {expr} END"
+
+
+def _tile_x(lon: str, z: int) -> str:
+    raw = f"floor(({lon} + 180e0) / 360e0 * {_dbl(_n(z))})"
+    return f"CAST({_clamp(raw, _n(z))} AS BIGINT)"
+
+
+def _tile_y(lat: str, z: int) -> str:
+    r = f"radians(least(greatest({lat}, {_dbl(-MAX_LAT)}), {_dbl(MAX_LAT)}))"
+    raw = (f"floor((1e0 - ln(tan({r}) + 1e0 / cos({r})) / "
+           f"{_dbl(3.141592653589793)}) / 2e0 * {_dbl(_n(z))})")
+    return f"CAST({_clamp(raw, _n(z))} AS BIGINT)"
+
+
+def sql_tile_x(lon: str, z: int) -> str:
+    """Slippy-map tile x at zoom z, clamped to [0, 2^z-1]; NULL lon → NULL."""
+    return _null_guard([lon], _tile_x(lon, z))
+
+
+def spark_tile_y(lat: str, z: int) -> str:
+    """Slippy-map tile y at zoom z (north = 0), clamped to [0, 2^z-1] —
+    the engine's ln(tan + sec) formula; NULL lat → NULL."""
+    return _null_guard([lat], _tile_y(lat, z))
+
+
+def sql_cell_id(z: int, x: str, y: str) -> str:
     """Pack (z, x, y) into one bigint join key: ((z*2^29)+x)*2^29+y.
 
-    Pure arithmetic (no bit intrinsics) so the identical expression runs in
-    the DuckDB oracle. Safe for z ≤ 29."""
-    return (
-        (F.lit(z).cast("bigint") * F.lit(CELL_SHIFT) + x) * F.lit(CELL_SHIFT) + y
-    ).cast("bigint")
+    Pure arithmetic (no bit intrinsics). Safe for z ≤ 29. BIGINT casts:
+    bare literals multiply as INT32 in DuckDB and overflow for any z >= 4."""
+    return (f"((CAST({z} AS BIGINT) * {CELL_SHIFT} + ({x})) "
+            f"* CAST({CELL_SHIFT} AS BIGINT) + ({y}))")
+
+
+def spark_point_cell(lon: str, lat: str, z: int) -> str:
+    """The cell id of the tile holding (lon, lat) at zoom z; NULL when
+    either coordinate is."""
+    return _null_guard([lon, lat], sql_cell_id(z, _tile_x(lon, z), _tile_y(lat, z)))
 
 
 def parent_tile(x: Column, y: Column, dz: int = 1) -> tuple[Column, Column]:
@@ -60,18 +95,19 @@ def parent_tile(x: Column, y: Column, dz: int = 1) -> tuple[Column, Column]:
     return F.shiftright(x, dz), F.shiftright(y, dz)
 
 
-def point_cell(lon: Column, lat: Column, z: int) -> Column:
-    return cell_id(z, tile_x(lon, z), tile_y(lat, z))
+def spark_cover_xs(minx: str, maxx: str, z: int) -> str:
+    """The tile-x run a bbox covers at zoom z, as an array.
 
-
-def bbox_tile_range(minx, miny, maxx, maxy, z: int):
-    """Tile-range corners covering a bbox at zoom z.
-
-    Returns (x0, x1, y0, y1) Columns; note y0 comes from maxy (north)
-    because tile y grows southward. The cover is the full x0..x1 × y0..y1
-    grid — the exact analog of the reference's per-feature tile cover
-    producing 1:N duplication (split_combine.go:166-183)."""
-    return tile_x(minx, z), tile_x(maxx, z), tile_y(maxy, z), tile_y(miny, z)
+    Antimeridian: a box with minx > maxx crosses ±180°; its x cover is
+    the WRAPPED union [x0..2^z-1] ∪ [0..x1] (two short runs), not the
+    full longitude range (r01 over-cover) nor the descending sequence
+    x0..x1 (the complement — wrong). array_distinct: at coarse zooms the
+    two wrapped runs can overlap (e.g. z=0 → both runs are [0]) and a
+    duplicate (feature, tile) row would double-count downstream."""
+    x0, x1 = sql_tile_x(minx, z), sql_tile_x(maxx, z)
+    return (f"CASE WHEN {minx} <= {maxx} THEN sequence({x0}, {x1}) "
+            f"ELSE array_distinct(concat(sequence({x0}, CAST({_n(z) - 1} AS BIGINT)), "
+            f"sequence(CAST(0 AS BIGINT), {x1}))) END")
 
 
 def explode_bbox_cover(df, z: int, minx="minx", miny="miny", maxx="maxx", maxy="maxy",
@@ -79,66 +115,32 @@ def explode_bbox_cover(df, z: int, minx="minx", miny="miny", maxx="maxx", maxy="
     """flatMap feature → covered tiles (MapToSubFiles semantics,
     split_combine.go:166-183): one output row per (feature, tile).
 
-    Implemented as two nested sequence/explode generators — whole-stage
-    codegen'd, shuffle-free until the caller repartitions.
-
-    Antimeridian: a box with minx > maxx crosses ±180°; its x cover is
-    the WRAPPED union [x0..2^z-1] ∪ [0..x1] (two short runs), not the
-    full longitude range (r01 over-cover) nor the descending sequence
-    x0..x1 (the complement — wrong)."""
-    x0, x1, y0, y1 = bbox_tile_range(F.col(minx), F.col(miny), F.col(maxx), F.col(maxy), z)
-    n = _n(z)
-    # array_distinct: at coarse zooms the two wrapped runs can overlap
-    # (e.g. z=0 → both runs are [0]) and a duplicate (feature, tile) row
-    # would double-count downstream
-    xs = F.when(
-        F.col(minx) <= F.col(maxx), F.sequence(F.col("_x0"), F.col("_x1"))
-    ).otherwise(F.array_distinct(F.concat(
-        F.sequence(F.col("_x0"), F.lit(n - 1).cast("bigint")),
-        F.sequence(F.lit(0).cast("bigint"), F.col("_x1")),
-    )))
+    The cover is the full x-run × y0..y1 grid (y0 comes from maxy — tile
+    y grows southward) — the exact analog of the reference's per-feature
+    tile cover producing 1:N duplication. Implemented as two nested
+    sequence/explode generators — whole-stage codegen'd, shuffle-free
+    until the caller repartitions. The x run wraps at the antimeridian
+    (`spark_cover_xs`)."""
+    # the y bounds are named before the x explode, so each is computed
+    # once per feature, not once per covered x tile
     return (
-        df.withColumn("_x0", x0)
-        .withColumn("_x1", x1)
-        .withColumn("_y0", y0)
-        .withColumn("_y1", y1)
-        .withColumn(out_x, F.explode(xs))
-        .withColumn(out_y, F.explode(F.sequence(F.col("_y0"), F.col("_y1"))))
-        .drop("_x0", "_x1", "_y0", "_y1")
+        df.selectExpr("*", f"{spark_tile_y(maxy, z)} AS _y0", f"{spark_tile_y(miny, z)} AS _y1")
+        .selectExpr("*", f"explode({spark_cover_xs(minx, maxx, z)}) AS {out_x}")
+        .selectExpr("* EXCEPT (_y0, _y1)", f"explode(sequence(_y0, _y1)) AS {out_y}")
     )
 
 
-def ring_cells(x: Column, y: Column, z: int, r: int) -> Column:
-    """Array of cell ids within Chebyshev radius r of (x,y) at zoom z —
-    the candidate-generation key set for kNN cell-ring expansion.
+def spark_ring_cells(x: str, y: str, z: int, r: int) -> str:
+    """Array of cell ids within Chebyshev radius r of tile (x, y) at zoom
+    z — the candidate-generation key set for kNN cell-ring expansion.
 
-    Built with nested transform(sequence(...)) + flatten: pure expressions,
-    clamped to the tile grid, deduplicated by the clamp-aware caller."""
+    Nested transform(sequence(...)) + flatten: pure expressions, clamped
+    to the tile grid, deduplicated after the clamp. Lambda variables are
+    underscored so they cannot capture a caller's column."""
     n = _n(z)
-    dxs = F.sequence(F.lit(-r), F.lit(r))
-    grid = F.transform(
-        dxs,
-        lambda dx: F.transform(
-            F.sequence(F.lit(-r), F.lit(r)),
-            lambda dy: cell_id(
-                z,
-                F.least(F.greatest(x + dx, F.lit(0)), F.lit(n - 1)).cast("bigint"),
-                F.least(F.greatest(y + dy, F.lit(0)), F.lit(n - 1)).cast("bigint"),
-            ),
-        ),
-    )
-    return F.array_distinct(F.flatten(grid))
-
-
-# ---------------------------------------------------------------------------
-# SQL text builders — the same formulas for the DuckDB oracle
-# ---------------------------------------------------------------------------
-
-def sql_tile_x(lon: str, z: int) -> str:
-    n = _n(z)
-    return (
-        f"CAST(least(greatest(floor(({lon} + 180.0) / 360.0 * {float(n)}), 0), {n - 1}) AS BIGINT)"
-    )
+    cell = sql_cell_id(z, _clamp(f"{x} + _rdx", n), _clamp(f"{y} + _rdy", n))
+    return (f"array_distinct(flatten(transform(sequence({-r}, {r}), _rdx -> "
+            f"transform(sequence({-r}, {r}), _rdy -> {cell}))))")
 
 
 def merc_tile_boundaries(z: int) -> list:
@@ -148,7 +150,7 @@ def merc_tile_boundaries(z: int) -> list:
 
 
 def sql_tile_y(lat: str, z: int) -> str:
-    """Transcendental-free DuckDB twin of tile_y: tile row = how many
+    """Transcendental-free DuckDB twin of spark_tile_y: tile row = how many
     interior boundary latitudes sit at-or-above `lat` (row y covers
     lat ∈ (s_lat(y), n_lat(y)], matching the engine's floor semantics in
     real arithmetic, boundary belonging to the northern row's south edge).
@@ -169,13 +171,6 @@ def sql_tile_y(lat: str, z: int) -> str:
     return (f"CASE WHEN ({lat}) IS NULL THEN NULL ELSE "
             f"CAST(len(list_filter([{bounds}], _yb -> ({lat}) <= _yb)) "
             "AS BIGINT) END")
-
-
-def sql_cell_id(z: int, x: str, y: str) -> str:
-    # BIGINT casts: bare literals multiply as INT32 in DuckDB and overflow
-    # for any z >= 4
-    return (f"((CAST({z} AS BIGINT) * {CELL_SHIFT} + ({x})) "
-            f"* CAST({CELL_SHIFT} AS BIGINT) + ({y}))")
 
 
 def merc_lat_bounds(z: int) -> list:
@@ -222,8 +217,8 @@ def tile_bounds(z: int, x: Column, y: Column):
 # Interleaving x/y tile bits gives a 1-D sort key that keeps spatial
 # neighbors in nearby file ranges — the standard 100 TB layout lever for
 # min/max-pruned scans (Iceberg/Delta Z-ORDER parity). The bit-spread is
-# the classic mask ladder, expressed once and rendered both as Column
-# arithmetic and as its SQL twin so DuckDB reproduces keys bit-for-bit.
+# the classic mask ladder, written once as SQL text that Spark and DuckDB
+# both evaluate, so the oracle reproduces keys bit-for-bit.
 
 _SPREAD_STEPS = [  # (shift, mask) ladder spreading 16 bits to even positions
     (8, 0x00FF00FF),
@@ -233,54 +228,30 @@ _SPREAD_STEPS = [  # (shift, mask) ladder spreading 16 bits to even positions
 ]
 
 
-def _spread_col(v: Column) -> Column:
-    for sh, mask in _SPREAD_STEPS:
-        v = (v.bitwiseOR(F.shiftleft(v, sh))).bitwiseAND(F.lit(mask))
-    return v
-
-
 def _spread_sql(v: str) -> str:
     for sh, mask in _SPREAD_STEPS:
         v = f"((({v}) | (({v}) << {sh})) & {mask})"
     return v
 
 
-def morton_key(x: Column, y: Column, z: int) -> Column:
+def sql_morton_key(x: str, y: str, z: int) -> str:
     """Z-order key for tile (x, y) at zoom z ≤ 16: y bits interleaved into
     the odd positions, x into the even — bigint, totally ordered along the
-    Z-curve."""
+    Z-curve; NULL when x or y is."""
     if z > 16:
-        raise ValueError("morton_key supports z <= 16 (32-bit interleave)")
-    return (F.shiftleft(_spread_col(y.cast("long")), 1)
-            .bitwiseOR(_spread_col(x.cast("long"))).cast("long"))
+        raise ValueError("sql_morton_key supports z <= 16")
+    # under the guard the ladder reads non-NULL inputs, so the key is
+    # non-nullable there and Catalyst folds isnotnull(key) (_null_guard)
+    xb, yb = f"CAST(coalesce({x}, 0) AS BIGINT)", f"CAST(coalesce({y}, 0) AS BIGINT)"
+    return _null_guard([x, y], f"CAST((({_spread_sql(yb)} << 1) | {_spread_sql(xb)}) AS BIGINT)")
 
 
-def sql_morton_key(x: str, y: str, z: int) -> str:
-    """DuckDB twin of morton_key — identical mask ladder."""
-    if z > 16:
-        raise ValueError("morton_key supports z <= 16")
-    return (f"CAST((({_spread_sql(f'CAST({y} AS BIGINT)')} << 1) | "
-            f"{_spread_sql(f'CAST({x} AS BIGINT)')}) AS BIGINT)")
-
-
-def quadkey(x: Column, y: Column, z: int) -> Column:
+def sql_quadkey(x: str, y: str, z: int) -> str:
     """Bing-style quadkey string for tile (x, y) at zoom z: digit i
     (most-significant first) is bit (z−i) of x plus twice bit (z−i) of y.
     Pure bit/string expressions unrolled over the (small, fixed) z —
     codegen-friendly, no UDF; quadkeys prefix-nest, so a LIKE 'qk%' scan
     prunes to a subtree the way the reference's tile subfiles do."""
-    digits = []
-    for i in range(1, z + 1):
-        d = (F.shiftright(x.cast("long"), z - i).bitwiseAND(F.lit(1))
-             + F.shiftleft(F.shiftright(y.cast("long"), z - i).bitwiseAND(F.lit(1)), 1))
-        digits.append(
-            F.element_at(F.array(F.lit("0"), F.lit("1"), F.lit("2"), F.lit("3")),
-                         (d + 1).cast("int")))
-    return F.concat(*digits)
-
-
-def sql_quadkey(x: str, y: str, z: int) -> str:
-    """DuckDB twin of quadkey — the same unrolled digit picks."""
     parts = []
     for i in range(1, z + 1):
         d = f"((({x}) >> {z - i}) & 1) + 2 * ((({y}) >> {z - i}) & 1)"
@@ -294,8 +265,8 @@ def cluster_by_morton(df, z: int, lon: str = "lon", lat: str = "lat",
     file covers a compact spatial extent, so bbox-filtered scans prune to
     a handful of files via parquet min/max stats instead of reading the
     world. One shuffle (the range partitioner samples the key)."""
-    mk = morton_key(tile_x(F.col(lon), z), tile_y(F.col(lat), z), z)
-    out = df.withColumn("_morton", mk)
+    out = (df.selectExpr("*", f"{sql_tile_x(lon, z)} AS _mx", f"{spark_tile_y(lat, z)} AS _my")
+           .selectExpr("* EXCEPT (_mx, _my)", f"{sql_morton_key('_mx', '_my', z)} AS _morton"))
     n = num_ranges or df.sparkSession.sparkContext.defaultParallelism
     return (out.repartitionByRange(n, "_morton")
             .sortWithinPartitions("_morton"))

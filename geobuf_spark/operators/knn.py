@@ -71,18 +71,15 @@ def knn_bruteforce(points: DataFrame, queries: DataFrame, k: int,
 
 
 def _prep_points(points: DataFrame, point_id: str, z: int) -> DataFrame:
-    return points.select(
-        F.col(point_id).alias("neighbor_id"),
-        F.col("lon").alias("nlon"), F.col("lat").alias("nlat"),
-    ).withColumn("cell", tiles.point_cell(F.col("nlon"), F.col("nlat"), z))
+    return points.selectExpr(
+        f"{point_id} AS neighbor_id", "lon AS nlon", "lat AS nlat",
+        f"{tiles.spark_point_cell('lon', 'lat', z)} AS cell")
 
 
 def _prep_queries(queries: DataFrame, query_id: str, z: int) -> DataFrame:
-    return queries.select(
-        F.col(query_id).alias("query_id"),
-        F.col("lon").alias("qlon"), F.col("lat").alias("qlat"),
-    ).withColumn("qx", tiles.tile_x(F.col("qlon"), z)) \
-     .withColumn("qy", tiles.tile_y(F.col("qlat"), z))
+    return queries.selectExpr(
+        f"{query_id} AS query_id", "lon AS qlon", "lat AS qlat",
+        f"{tiles.sql_tile_x('lon', z)} AS qx", f"{tiles.spark_tile_y('lat', z)} AS qy")
 
 
 def _knn_ring(p: DataFrame, q: DataFrame, k: int, z: int, ring: int):
@@ -108,7 +105,7 @@ def _knn_ring(p: DataFrame, q: DataFrame, k: int, z: int, ring: int):
     q = q.withColumn("guard2", guard * guard)
 
     cand = (
-        q.withColumn("cell", F.explode(tiles.ring_cells(F.col("qx"), F.col("qy"), z, ring)))
+        q.withColumn("cell", F.expr(f"explode({tiles.spark_ring_cells('qx', 'qy', z, ring)})"))
         .join(p, "cell")
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("dist2", _dist2(F.col("qlon"), F.col("qlat"), F.col("nlon"), F.col("nlat")))

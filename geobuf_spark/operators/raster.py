@@ -30,11 +30,10 @@ def rasterize(points: DataFrame, z: int, res_bits: int = 4,
               lon: str = "lon", lat: str = "lat") -> DataFrame:
     """Sparse raster: (z, x, y, px, py, n) — pixel = tile at zoom z+res_bits."""
     zz = z + res_bits
-    fx = tiles.tile_x(F.col(lon), zz)
-    fy = tiles.tile_y(F.col(lat), zz)
     res = 1 << res_bits
     return (
-        points.withColumn("_fx", fx).withColumn("_fy", fy)
+        points.selectExpr(f"{tiles.sql_tile_x(lon, zz)} AS _fx",
+                          f"{tiles.spark_tile_y(lat, zz)} AS _fy")
         .select(
             F.lit(z).cast("int").alias("z"),
             (F.col("_fx") / res).cast("bigint").alias("x"),

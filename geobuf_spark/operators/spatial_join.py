@@ -41,67 +41,47 @@ from pyspark.sql import functions as F
 from geobuf_spark.functions import tiles
 
 
-def rect_contains(lon: Column, lat: Column) -> Column:
+def sql_rect_contains(lon: str, lat: str) -> str:
     """Closed-interval containment — bbox Intersect semantics degenerate to
     this for a point probe (split_combine.go:314-331)."""
+    return (f"({lon} >= minx AND {lon} <= maxx "
+            f"AND {lat} >= miny AND {lat} <= maxy)")
+
+
+def sql_crossing(px: str, py: str, x1: str, y1: str, x2: str, y2: str) -> str:
+    """One ray-casting edge term: 1 when the ray east from (px, py) crosses
+    edge (x1, y1)→(x2, y2), else 0 —
+    ((y1>py) != (y2>py)) AND px < (x2-x1)*(py-y1)/(y2-y1)+x1. Both engines
+    evaluate the same text, so they agree bit-for-bit even on
+    boundary-adjacent points."""
     return (
-        (lon >= F.col("minx")) & (lon <= F.col("maxx"))
-        & (lat >= F.col("miny")) & (lat <= F.col("maxy"))
+        f"(CASE WHEN (({y1} > {py}) != ({y2} > {py})) AND "
+        f"({px} < ({x2} - {x1}) * ({py} - {y1}) / ({y2} - {y1}) + {x1}) "
+        f"THEN 1 ELSE 0 END)"
     )
-
-
-def triangle_contains(px: Column, py: Column) -> Column:
-    """Ray-casting crossing parity for a triangle, as a pure expression.
-
-    One term per edge: ((y1>py) != (y2>py)) AND px < (x2-x1)*(py-y1)/(y2-y1)+x1.
-    The identical arithmetic is emitted in SQL for the oracle, so both
-    engines agree bit-for-bit even on boundary-adjacent points."""
-
-    def crossing(x1, y1, x2, y2):
-        cond = ((y1 > py) != (y2 > py)) & (
-            px < (x2 - x1) * (py - y1) / (y2 - y1) + x1
-        )
-        return F.when(cond, 1).otherwise(0)
-
-    c = (
-        crossing(F.col("x0"), F.col("y0"), F.col("x1"), F.col("y1"))
-        + crossing(F.col("x1"), F.col("y1"), F.col("x2"), F.col("y2"))
-        + crossing(F.col("x2"), F.col("y2"), F.col("x0"), F.col("y0"))
-    )
-    return c % 2 == 1
 
 
 def sql_triangle_contains(px: str, py: str) -> str:
-    """The same crossing-parity predicate as ANSI SQL (DuckDB oracle)."""
-
-    def crossing(x1, y1, x2, y2):
-        return (
-            f"(CASE WHEN (({y1} > {py}) != ({y2} > {py})) AND "
-            f"({px} < ({x2} - {x1}) * ({py} - {y1}) / ({y2} - {y1}) + {x1}) "
-            f"THEN 1 ELSE 0 END)"
-        )
-
+    """Crossing parity for a triangle (x0, y0, x1, y1, x2, y2)."""
     total = " + ".join([
-        crossing("x0", "y0", "x1", "y1"),
-        crossing("x1", "y1", "x2", "y2"),
-        crossing("x2", "y2", "x0", "y0"),
+        sql_crossing(px, py, "x0", "y0", "x1", "y1"),
+        sql_crossing(px, py, "x1", "y1", "x2", "y2"),
+        sql_crossing(px, py, "x2", "y2", "x0", "y0"),
     ])
     return f"(({total}) % 2 = 1)"
 
 
 def _cover_side(polys: DataFrame, z: int) -> DataFrame:
-    covered = tiles.explode_bbox_cover(polys, z)
-    return covered.withColumn(
-        "cell", tiles.cell_id(z, F.col("tile_x"), F.col("tile_y"))
-    ).drop("tile_x", "tile_y")
+    return tiles.explode_bbox_cover(polys, z).selectExpr(
+        "* EXCEPT (tile_x, tile_y)", f"{tiles.sql_cell_id(z, 'tile_x', 'tile_y')} AS cell")
 
 
 def _point_side(points: DataFrame, z: int, lon="lon", lat="lat") -> DataFrame:
-    return points.withColumn("cell", tiles.point_cell(F.col(lon), F.col(lat), z))
+    return points.selectExpr("*", f"{tiles.spark_point_cell(lon, lat, z)} AS cell")
 
 
 def _cell_join(p: DataFrame, b: DataFrame, key: str, strategy: str,
-               refine: Column) -> DataFrame:
+               refine: Column | str) -> DataFrame:
     """The one cell equi-join behind pip_join, pip_join_s2 and pip_join_hex:
     point side `p` × cover side `b` on `key`, then the exact refine.
 
@@ -123,7 +103,7 @@ def pip_join(
     polys: DataFrame,
     *,
     z: int = 6,
-    refine: Column | None = None,
+    refine: Column | str | None = None,
     strategy: str = "broadcast",
     salt: int = 1,
     lon: str = "lon",
@@ -132,7 +112,8 @@ def pip_join(
     """Generic cell join: points × polygon bboxes, refined by `refine`.
 
     `polys` must carry minx/miny/maxx/maxy (plus any payload columns);
-    `refine` defaults to rectangle containment. Returns the joined rows
+    `refine` (a Column or SQL text) defaults to rectangle containment,
+    `sql_rect_contains`. Returns the joined rows
     (all point columns + polygon columns minus the internal cell key).
 
     `salt` is `plans.strategy.JoinPlan.salt` and must be 1: hot cells are
@@ -141,7 +122,7 @@ def pip_join(
         raise ValueError(f"salt={salt!r}: salt must be 1; hot cells are "
                          "split at runtime by AQE skew-join (strategy='shuffle')")
     if refine is None:
-        refine = rect_contains(F.col(lon), F.col(lat))
+        refine = sql_rect_contains(lon, lat)
     return _cell_join(_point_side(points, z, lon, lat), _cover_side(polys, z),
                       "cell", strategy, refine)
 
@@ -199,21 +180,16 @@ def pip_join_general(points: DataFrame, polys: DataFrame, *, z: int = 6,
     slim = polys.select(poly_id, "minx", "miny", "maxx", "maxy")
     cand = pip_join(
         points.select(point_key, lon, lat), slim, z=z,
-        refine=rect_contains(F.col(lon), F.col(lat)),  # bbox prefilter
+        refine=sql_rect_contains(lon, lat),  # bbox prefilter
         strategy=strategy, lon=lon, lat=lat,
     ).select(point_key, poly_id, lon, lat)
 
     edges = polygon_edges(polys, poly_id=poly_id)
-    px, py = F.col(lon), F.col(lat)
-    crossing = (
-        ((F.col("y1") > py) != (F.col("y2") > py))
-        & (px < (F.col("x2") - F.col("x1")) * (py - F.col("y1"))
-           / (F.col("y2") - F.col("y1")) + F.col("x1"))
-    ).cast("int")
+    crossing = sql_crossing(lon, lat, "x1", "y1", "x2", "y2")
     joined = cand.join(edges, poly_id)
     inside = (
         joined.groupBy(point_key, poly_id)
-        .agg(F.sum(crossing).alias("_crossings"))
+        .agg(F.expr(f"sum({crossing})").alias("_crossings"))
         .filter(F.col("_crossings") % 2 == 1)
         .select(point_key, poly_id)
     )
@@ -237,7 +213,7 @@ def pip_join_s2(
     polys: DataFrame,
     *,
     level: int | None = None,
-    refine: Column | None = None,
+    refine: Column | str | None = None,
     strategy: str = "broadcast",
     lon: str = "lon",
     lat: str = "lat",
@@ -262,14 +238,14 @@ def pip_join_s2(
     if level is None:
         level = choose_s2_level(polys)
     if refine is None:
-        refine = rect_contains(F.col(lon), F.col(lat))
+        refine = sql_rect_contains(lon, lat)
     p = points.withColumn("cell", cells.s2_cell(F.col(lon), F.col(lat), level))
     return _cell_join(p, cells.explode_s2_cover(polys, level), "cell",
                       strategy, refine)
 
 
 def pip_join_hex(points: DataFrame, polys: DataFrame, *, size_deg: float = 2.5,
-                 refine: Column | None = None, strategy: str = "broadcast",
+                 refine: Column | str | None = None, strategy: str = "broadcast",
                  lon: str = "lon", lat: str = "lat") -> DataFrame:
     """pip_join keyed by H3-style hex cells: 6-regular neighborhoods give
     a rounder cover than square tiles (≈13% fewer false candidates for
@@ -278,7 +254,7 @@ def pip_join_hex(points: DataFrame, polys: DataFrame, *, size_deg: float = 2.5,
     from geobuf_spark.functions import hexgrid
 
     if refine is None:
-        refine = rect_contains(F.col(lon), F.col(lat))
+        refine = sql_rect_contains(lon, lat)
     p = points.withColumn("hex", hexgrid.hex_cell(F.col(lon), F.col(lat), size_deg))
     return _cell_join(p, hexgrid.explode_hex_cover(polys, size_deg), "hex",
                       strategy, refine)

@@ -12,7 +12,8 @@ SubFileSeek (reader.go:278-287).
 What must match the reference is the assignment semantics (SURVEY §3.3):
 which (feature, z/x/y) pairs exist — bbox tile cover with 1:N duplication
 (split_combine.go:166-183) and parent promotion (x>>Δ, y>>Δ, z-Δ)
-(split_combine.go:390-394). Both are pure Column expressions here.
+(split_combine.go:390-394). Both are pure SQL expressions here, the tile
+formulas read from `functions/tiles` text.
 
 At 100 TB: one wide shuffle keyed by cell; AQE coalesces small tiles and
 splits hot ones; `maxRecordsPerFile` bounds output skew. No multi-pass I/O,
@@ -28,10 +29,11 @@ from geobuf_spark.functions import tiles
 
 
 def assign_tiles_points(points: DataFrame, z: int, lon: str = "lon", lat: str = "lat") -> DataFrame:
-    """Point → exactly one (z, x, y)."""
-    return points.withColumn("z", F.lit(z).cast("int")) \
-        .withColumn("x", tiles.tile_x(F.col(lon), z)) \
-        .withColumn("y", tiles.tile_y(F.col(lat), z))
+    """Point → exactly one (z, x, y); a NULL coordinate gets a NULL key."""
+    return points.withColumns({
+        "z": F.expr(f"CAST({z} AS INT)"),
+        "x": F.expr(tiles.sql_tile_x(lon, z)),
+        "y": F.expr(tiles.spark_tile_y(lat, z))})
 
 
 def assign_tiles_bbox(feats: DataFrame, z: int) -> DataFrame:
@@ -297,8 +299,8 @@ def vector_tiles_points(points: DataFrame, z: int, extent: int = 4096,
     (id, z, x, y, grid_coords=[px,py], ring_lens=[1]) feed
     `mvt.build_mvt_tiles(..., geom="point")`."""
     lo, la = F.col(lon), F.col(lat)
-    x = tiles.tile_x(lo, z)
-    y = tiles.tile_y(la, z)
+    x = F.expr(tiles.sql_tile_x(lon, z))
+    y = F.expr(tiles.spark_tile_y(lat, z))
     w, s, e, n = tiles.tile_bounds(z, x, y)
     ext = F.lit(float(extent))
     # clamp hi = extent (not extent-1): east/north tile-edge points snap

@@ -32,12 +32,13 @@ class JoinPlan:
 
 def estimate_cover_rows(polys: DataFrame, z: int) -> int:
     """Exploded build-side size without exploding: Σ tiles-per-bbox —
-    GetSizeGrid's fan-out estimate (split_combine.go:44-53) done exactly."""
-    x0, x1, y0, y1 = tiles.bbox_tile_range(
-        F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"), z
-    )
-    per = (x1 - x0 + 1) * (y1 - y0 + 1)
-    return polys.agg(F.sum(per)).first()[0] or 0
+    GetSizeGrid's fan-out estimate (split_combine.go:44-53) done exactly.
+    The x run is the one `explode_bbox_cover` explodes (wrapped at the
+    antimeridian); only its length is kept."""
+    xs = tiles.spark_cover_xs("minx", "maxx", z)
+    ys = (f"({tiles.spark_tile_y('miny', z)} - "
+          f"{tiles.spark_tile_y('maxy', z)} + 1)")
+    return polys.selectExpr(f"sum(CAST(size({xs}) AS BIGINT) * {ys})").first()[0] or 0
 
 
 def choose_strategy(points: DataFrame, polys: DataFrame, z: int, *,

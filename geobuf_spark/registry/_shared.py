@@ -31,7 +31,7 @@ BM25_TERMS = ["spark", "tile", "graph"]
 # ---------------------------------------------------------------------------
 # distance-join / simplification / geohash / hotspot family — batch 8
 # (operators/spatial_join.radius_self_join, functions/geom.vw_simplify_q,
-# functions/cells.geohash_q, dedup.near_dup_components over dense tiles)
+# functions/cells.sql_geohash_q, dedup.near_dup_components over dense tiles)
 # ---------------------------------------------------------------------------
 
 RADIUS_R = 9_000_000       # 0.9° in 1e-7 lattice units
@@ -102,22 +102,17 @@ AREAL_SHIFT_Y = 900_000_000
 def _shifted_rects(spark, sf):
     """Minted rects as non-negative half-open lattice boxes (shared by
     areal_interp and adaptive_cover)."""
-    part = spark.read.parquet(f"{sf}/part.parquet")
-    cx, cy, hw, hh = minted._part_draws()
-    return part.select(
-        F.col("p_partkey").alias("poly_id"),
-        (cx - hw + AREAL_SHIFT_X).alias("x1"),
-        (cy - hh + AREAL_SHIFT_Y).alias("y1"),
-        (cx + hw + AREAL_SHIFT_X).alias("x2"),
-        (cy + hh + AREAL_SHIFT_Y).alias("y2"))
+    return spark.read.parquet(f"{sf}/part.parquet").selectExpr(*_SHIFTED_RECTS)
+
+_SHIFTED_RECTS = (
+    "p_partkey AS poly_id",
+    f"{minted._CX} - {minted._HW} + {AREAL_SHIFT_X} AS x1",
+    f"{minted._CY} - {minted._HH} + {AREAL_SHIFT_Y} AS y1",
+    f"{minted._CX} + {minted._HW} + {AREAL_SHIFT_X} AS x2",
+    f"{minted._CY} + {minted._HH} + {AREAL_SHIFT_Y} AS y2")
 
 def _shifted_rects_cte() -> str:
-    return f"""r AS (SELECT p_partkey AS poly_id,
-                {minted._CX} - {minted._HW} + {AREAL_SHIFT_X} AS x1,
-                {minted._CY} - {minted._HH} + {AREAL_SHIFT_Y} AS y1,
-                {minted._CX} + {minted._HW} + {AREAL_SHIFT_X} AS x2,
-                {minted._CY} + {minted._HH} + {AREAL_SHIFT_Y} AS y2
-         FROM part)"""
+    return f"r AS ({minted._select(_SHIFTED_RECTS, 'part')})"
 
 HEAT_T_REF = 1_760_000_000  # epoch ref above every minted warc_ts
 HEAT_Z = 6
@@ -657,16 +652,18 @@ SAT_H = 17  # ceil(LAT_MOD / SAT_R)
 def _sat_rects(spark, sf):
     # deterministic cell-space query rectangles, one per customer —
     # the same chained-mulmod mint idiom as the geometry fixtures
-    cust = spark.read.parquet(f"{sf}/customer.parquet").select("c_custkey")
-    x1 = minted._mulmod(F.col("c_custkey"), 48271, SAT_W)
-    y1 = minted._mulmod(F.col("c_custkey"), 69621, SAT_H)
-    wd = minted._mulmod(F.col("c_custkey"), 7919, 12) + 1
-    ht = minted._mulmod(F.col("c_custkey"), 104729, 8) + 1
-    return cust.select(
-        F.col("c_custkey").alias("rect_id"),
-        x1.cast("bigint").alias("x1"), y1.cast("bigint").alias("y1"),
-        F.least(x1 + wd, F.lit(SAT_W - 1)).cast("bigint").alias("x2"),
-        F.least(y1 + ht, F.lit(SAT_H - 1)).cast("bigint").alias("y2"))
+    return spark.read.parquet(f"{sf}/customer.parquet").selectExpr(*_sat_rect_cols())
+
+def _sat_rect_cols() -> tuple:
+    """_sat_rects' select list over `customer`, shared with its oracle."""
+    x1 = minted._sql_mulmod("c_custkey", 48271, SAT_W)
+    y1 = minted._sql_mulmod("c_custkey", 69621, SAT_H)
+    wd = f"({minted._sql_mulmod('c_custkey', 7919, 12)} + 1)"
+    ht = f"({minted._sql_mulmod('c_custkey', 104729, 8)} + 1)"
+    return ("c_custkey AS rect_id",
+            f"CAST({x1} AS BIGINT) AS x1", f"CAST({y1} AS BIGINT) AS y1",
+            f"CAST(least({x1} + {wd}, {SAT_W - 1}) AS BIGINT) AS x2",
+            f"CAST(least({y1} + {ht}, {SAT_H - 1}) AS BIGINT) AS y2")
 
 # ---------------------------------------------------------------------------
 # batch 60 — bounded weighted shortest path, Allen interval-relation census
@@ -1424,6 +1421,7 @@ __all__ = [n for n in [
     "_rects",
     "_redir_parent_col",
     "_rmq_queries",
+    "_sat_rect_cols",
     "_sat_rects",
     "_self_xing_count",
     "_shifted_rects",

@@ -150,17 +150,9 @@ def q_copresence_pairs(spark, sf):
     e = spark.read.parquet(f"{sf}/events.parquet").select(
         "user_id", "event_id", F.expr("unix_timestamp(ts) div 86400")
         .alias("day"))
-    g = F.col("user_id") % 5
-    cx = minted._mulmod(g * 1009 + F.col("day") * 31,
-                        minted.LON_MULT, minted.LON_MOD - 8_000_000)
-    cy = minted._mulmod(g * 2003 + F.col("day") * 57,
-                        minted.LAT_MULT, minted.LAT_MOD - 8_000_000)
-    jx = minted._mulmod(F.col("event_id"), 48271, COPRES_JIT)
-    jy = minted._mulmod(F.col("event_id"), 69621, COPRES_JIT)
-    bins = (e.select(
-                "user_id", "day",
-                (cx + jx).cast("bigint").alias("x"),
-                (cy + jy).cast("bigint").alias("y"))
+    x, y = _copresence_xy()
+    bins = (e.selectExpr("user_id", "day", f"CAST({x} AS BIGINT) AS x",
+                         f"CAST({y} AS BIGINT) AS y")
             .select("user_id", "day",
                     F.expr(f"x div {COPRES_BIN_X}").alias("tx"),
                     F.expr(f"y div {COPRES_BIN_Y}").alias("ty"))
@@ -173,20 +165,26 @@ def q_copresence_pairs(spark, sf):
             .agg(F.count("*").alias("n_bins"))
             .filter(F.col("n_bins") >= COPRES_MIN))
 
-def _copresence_pairs_sql() -> str:
+def _copresence_xy() -> tuple[str, str]:
+    """The per-event (x, y) lattice point over (user_id, event_id, day):
+    cohort anchor plus event jitter, one text for both engines."""
     cx = minted._sql_mulmod("((user_id % 5) * 1009 + day * 31)",
                             minted.LON_MULT, minted.LON_MOD - 8_000_000)
     cy = minted._sql_mulmod("((user_id % 5) * 2003 + day * 57)",
                             minted.LAT_MULT, minted.LAT_MOD - 8_000_000)
     jx = minted._sql_mulmod("event_id", 48271, COPRES_JIT)
     jy = minted._sql_mulmod("event_id", 69621, COPRES_JIT)
+    return f"({cx} + {jx})", f"({cy} + {jy})"
+
+def _copresence_pairs_sql() -> str:
+    x, y = _copresence_xy()
     return f"""
         WITH e AS (SELECT user_id, event_id,
                           CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day
                    FROM events),
         bins AS (SELECT DISTINCT user_id, day,
-                        ({cx} + {jx}) // {COPRES_BIN_X} AS tx,
-                        ({cy} + {jy}) // {COPRES_BIN_Y} AS ty
+                        {x} // {COPRES_BIN_X} AS tx,
+                        {y} // {COPRES_BIN_Y} AS ty
                  FROM e)
         SELECT a.user_id AS u_a, b.user_id AS u_b,
                CAST(count(*) AS BIGINT) AS n_bins
@@ -1331,16 +1329,7 @@ def q_str_pack(spark, sf):
     # slice/leaf cuts are exact on both engines: leaf =
     # slice·S + (rn_y−1)·S div n_slice. Output per leaf: count + MBR.
     from pyspark.sql import Window as Win
-    from geobuf_spark.sources import minted
-    part = spark.read.parquet(f"{sf}/part.parquet")
-    cx, cy, hw, hh = minted._part_draws()
-    r = part.select(F.col("p_partkey").alias("rid"),
-                    cx.cast("bigint").alias("cx"),
-                    cy.cast("bigint").alias("cy"),
-                    (cx - hw).cast("bigint").alias("x1"),
-                    (cy - hh).cast("bigint").alias("y1"),
-                    (cx + hw).cast("bigint").alias("x2"),
-                    (cy + hh).cast("bigint").alias("y2"))
+    r = spark.read.parquet(f"{sf}/part.parquet").selectExpr(*_STR_RECTS)
     wx = Win.orderBy(F.col("cx").asc(), F.col("rid").asc())
     wall = Win.partitionBy()
     r = (r.withColumn("rnx", F.row_number().over(wx))
@@ -1361,21 +1350,18 @@ def q_str_pack(spark, sf):
                     F.col("n_rects").cast("bigint").alias("n_rects"),
                     "mbr_x1", "mbr_y1", "mbr_x2", "mbr_y2"))
 
+# integer q-unit rect centers and corners over `part`, both engines
+_STR_RECTS = ("p_partkey AS rid",
+              f"CAST({minted._CX} AS BIGINT) AS cx",
+              f"CAST({minted._CY} AS BIGINT) AS cy",
+              f"CAST({minted._CX} - {minted._HW} AS BIGINT) AS x1",
+              f"CAST({minted._CY} - {minted._HH} AS BIGINT) AS y1",
+              f"CAST({minted._CX} + {minted._HW} AS BIGINT) AS x2",
+              f"CAST({minted._CY} + {minted._HH} AS BIGINT) AS y2")
+
 def _str_pack_sql() -> str:
-    from geobuf_spark.sources import minted as M
-    cx = f"({M._sql_mulmod('p_partkey', M.CX_MULT, M.CX_MOD)} - {M.CX_MOD // 2})"
-    cy = f"({M._sql_mulmod('p_partkey', M.CY_MULT, M.CY_MOD)} - {M.CY_MOD // 2})"
-    hw = "(10000000 + (p_partkey % 100) * 1000000)"
-    hh = "(8000000 + (p_partkey % 80) * 1000000)"
     return f"""
-        WITH r AS (SELECT p_partkey AS rid,
-                          CAST({cx} AS BIGINT) AS cx,
-                          CAST({cy} AS BIGINT) AS cy,
-                          CAST({cx} - {hw} AS BIGINT) AS x1,
-                          CAST({cy} - {hh} AS BIGINT) AS y1,
-                          CAST({cx} + {hw} AS BIGINT) AS x2,
-                          CAST({cy} + {hh} AS BIGINT) AS y2
-                   FROM part),
+        WITH r AS ({minted._select(_STR_RECTS, 'part')}),
         s AS (SELECT *, row_number() OVER (ORDER BY cx, rid) AS rnx,
                      count(*) OVER () AS ntot
               FROM r),

@@ -1425,13 +1425,10 @@ def q_ear_triangulate(spark, sf):
     # rows are independent → mapInPandas, zero shuffles. The output
     # carries the conservation invariant in the open: Σ|ear area2| ==
     # |ring shoelace area2|, exact int64.
-    cx, cy, hw, hh = minted._part_draws()
-    x0, x1, x2 = cx - hw, cx, cx + hw
-    y0, y1, y2 = cy - hh, cy, cy + hh
-    p = spark.read.parquet(f"{sf}/part.parquet").select(
-        F.col("p_partkey").alias("poly_id"),
-        F.array(x0, x2, x2, x1, x1, x0).alias("xs"),
-        F.array(y0, y0, y1, y1, y2, y2).alias("ys"))
+    xs, ys = _ear_ring()
+    p = spark.read.parquet(f"{sf}/part.parquet").selectExpr(
+        "p_partkey AS poly_id", f"array({', '.join(xs)}) AS xs",
+        f"array({', '.join(ys)}) AS ys")
 
     def clip(xs, ys):
         xs, ys = list(xs), list(ys)
@@ -1494,17 +1491,21 @@ def q_ear_triangulate(spark, sf):
                                   "n_triangles int, tri_area2_sum "
                                   "long, ring_area2 long"))
 
+def _ear_ring() -> tuple[list, list]:
+    """Per-vertex texts of the L-shaped hexagon ring over `part`: the rect
+    draws bent into an L (x0, x2, x2, x1, x1, x0 / y0, y0, y1, y1, y2, y2)."""
+    x0, x1, x2 = (f"({minted._CX} - {minted._HW})", minted._CX,
+                  f"({minted._CX} + {minted._HW})")
+    y0, y1, y2 = (f"({minted._CY} - {minted._HH})", minted._CY,
+                  f"({minted._CY} + {minted._HH})")
+    return [x0, x2, x2, x1, x1, x0], [y0, y0, y1, y1, y2, y2]
+
 def _ear_triangulate_sql() -> str:
-    xs = (f"[{minted._CX} - {minted._HW}, {minted._CX} + {minted._HW},"
-          f" {minted._CX} + {minted._HW}, {minted._CX},"
-          f" {minted._CX}, {minted._CX} - {minted._HW}]::BIGINT[]")
-    ys = (f"[{minted._CY} - {minted._HH}, {minted._CY} - {minted._HH},"
-          f" {minted._CY}, {minted._CY},"
-          f" {minted._CY} + {minted._HH}, {minted._CY} + {minted._HH}]"
-          "::BIGINT[]")
+    xs, ys = _ear_ring()
     return f"""
         WITH RECURSIVE ply AS (
-            SELECT p_partkey AS pid, {xs} AS xs, {ys} AS ys
+            SELECT p_partkey AS pid, [{', '.join(xs)}]::BIGINT[] AS xs,
+                   [{', '.join(ys)}]::BIGINT[] AS ys
             FROM part),
         ring AS (SELECT pid,
                         abs(xs[1]*ys[2]-xs[2]*ys[1] + xs[2]*ys[3]-xs[3]*ys[2]

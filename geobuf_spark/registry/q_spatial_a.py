@@ -74,7 +74,7 @@ def q_hotspot_clusters(spark, sf):
     dense = (tiling.assign_tiles_points(_points(spark, sf), z=HOT_Z)
              .groupBy("x", "y").agg(F.count("*").alias("n_pts"))
              .filter(F.col("n_pts") >= HOT_MIN_PTS)
-             .withColumn("k", tiles.cell_id(HOT_Z, F.col("x"), F.col("y")))
+             .withColumn("k", F.expr(tiles.sql_cell_id(HOT_Z, "x", "y")))
              .localCheckpoint(eager=False))
 
     def shifted(dx, dy):
@@ -372,7 +372,7 @@ def q_pip_join_triangles(spark, sf):
         .withColumn("miny", F.col("y1")).withColumn("maxy", F.col("y0"))
     return sj.pip_join(
         _points(spark, sf), tri, z=6,
-        refine=sj.triangle_contains(F.col("lon"), F.col("lat")),
+        refine=sj.sql_triangle_contains("lon", "lat"),
     ).select("doc_id", "poly_id")
 
 def q_pip_semi(spark, sf):
@@ -497,11 +497,11 @@ def q_bbox_intersect_join(spark, sf):
         F.col("maxy").alias("b_maxy"),
     )
     ca = tiling.assign_tiles_bbox(a, z=4).withColumn(
-        "cell", tiles.cell_id(4, F.col("x"), F.col("y"))).drop("z", "x", "y")
+        "cell", F.expr(tiles.sql_cell_id(4, "x", "y"))).drop("z", "x", "y")
     cb = tiling.assign_tiles_bbox(
         b.withColumnRenamed("b_minx", "minx").withColumnRenamed("b_miny", "miny")
          .withColumnRenamed("b_maxx", "maxx").withColumnRenamed("b_maxy", "maxy"), z=4
-    ).withColumn("cell", tiles.cell_id(4, F.col("x"), F.col("y"))).drop("z", "x", "y") \
+    ).withColumn("cell", F.expr(tiles.sql_cell_id(4, "x", "y"))).drop("z", "x", "y") \
      .withColumnRenamed("minx", "b_minx").withColumnRenamed("miny", "b_miny") \
      .withColumnRenamed("maxx", "b_maxx").withColumnRenamed("maxy", "b_maxy")
     pairs = (
@@ -557,10 +557,7 @@ def q_feature_meta(spark, sf):
     # double rendering differs across engines, integers never do.
     enc = spark_codec.encode_points(_points(spark, sf))
     d = _docs(spark, sf)
-    lon7 = minted._mulmod(F.col("doc_id"), minted.LON_MULT, minted.LON_MOD) \
-        - F.lit(minted.LON_MOD // 2)
-    lat7 = minted._mulmod(F.col("doc_id"), minted.LAT_MULT, minted.LAT_MOD) \
-        - F.lit(minted.LAT_MOD // 2)
+    lon7, lat7 = (F.expr(q) for q in minted.sql_lonlat_q("doc_id"))
     j = d.select(
         "doc_id",
         F.octet_length(F.concat(
@@ -985,8 +982,7 @@ def _feature_meta_sql() -> str:
     varint arithmetic (layout per GbCodec.PointEnc / write_feature.go:
     tag8+id, tag24+code, tag34+len+geometry, tag42+len+bbox) vs the
     canonical integer JSON length."""
-    lon7 = f"({minted._sql_mulmod('doc_id', minted.LON_MULT, minted.LON_MOD)} - {minted.LON_MOD // 2})"
-    lat7 = f"({minted._sql_mulmod('doc_id', minted.LAT_MULT, minted.LAT_MOD)} - {minted.LAT_MOD // 2})"
+    lon7, lat7 = minted.sql_lonlat_q("doc_id")
     return f"""
         WITH q AS (
             SELECT doc_id, {lon7} AS lon7, {lat7} AS lat7 FROM documents),

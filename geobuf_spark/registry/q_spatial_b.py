@@ -674,15 +674,7 @@ def q_rect_prefix_counts(spark, sf):
                  .alias("n_points")))
 
 def _sat_rects_sql() -> str:
-    x1 = minted._sql_mulmod("c_custkey", 48271, SAT_W)
-    y1 = minted._sql_mulmod("c_custkey", 69621, SAT_H)
-    wd = f"({minted._sql_mulmod('c_custkey', 7919, 12)} + 1)"
-    ht = f"({minted._sql_mulmod('c_custkey', 104729, 8)} + 1)"
-    return f"""SELECT c_custkey AS rect_id,
-               CAST({x1} AS BIGINT) AS x1, CAST({y1} AS BIGINT) AS y1,
-               CAST(least({x1} + {wd}, {SAT_W - 1}) AS BIGINT) AS x2,
-               CAST(least({y1} + {ht}, {SAT_H - 1}) AS BIGINT) AS y2
-               FROM customer"""
+    return minted._select(_sat_rect_cols(), "customer")
 
 def _rect_prefix_counts_sql() -> str:
     # independent oracle: the DIRECT containment count per rectangle

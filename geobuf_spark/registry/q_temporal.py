@@ -1142,16 +1142,9 @@ def q_pip_versioned(spark, sf):
     # boundary drift answered with time travel, not a snapshot. Points
     # mint from event_id with the standard mulmod draw. versions×rects
     # is a 600-row broadcast; one aggregate out.
-    from geobuf_spark.sources.minted import (LAT_MOD, LAT_MULT, LON_MOD,
-                                             LON_MULT, _mulmod)
-    e = spark.read.parquet(f"{sf}/events.parquet").select(
-        "event_id", F.expr("unix_timestamp(ts)").alias("s"))
-    pts = e.select(
-        "event_id", "s",
-        ((_mulmod(F.col("event_id"), LON_MULT, LON_MOD)
-          - F.lit(LON_MOD // 2)) / F.lit(1e7)).alias("lon"),
-        ((_mulmod(F.col("event_id"), LAT_MULT, LAT_MOD)
-          - F.lit(LAT_MOD // 2)) / F.lit(1e7)).alias("lat"))
+    lon, lat = minted.sql_lonlat("event_id")
+    pts = spark.read.parquet(f"{sf}/events.parquet").selectExpr(
+        "event_id", "unix_timestamp(ts) AS s", f"{lon} AS lon", f"{lat} AS lat")
     r = minted.minted_rects(spark, sf)
     vers = (r.withColumn("ver", F.explode(F.sequence(F.lit(0), F.lit(2))))
             .select("poly_id", "ver",
@@ -1173,10 +1166,7 @@ def q_pip_versioned(spark, sf):
                  F.min("event_id").alias("first_event")))
 
 def _pip_versioned_sql() -> str:
-    from geobuf_spark.sources.minted import (LAT_MOD, LAT_MULT, LON_MOD,
-                                             LON_MULT, _sql_mulmod)
-    lon = f"({_sql_mulmod('event_id', LON_MULT, LON_MOD)} - {LON_MOD // 2}) / 1e7"
-    lat = f"({_sql_mulmod('event_id', LAT_MULT, LAT_MOD)} - {LAT_MOD // 2}) / 1e7"
+    lon, lat = minted.sql_lonlat("event_id")
     return f"""
         WITH pts AS (SELECT event_id,
                             CAST(floor(epoch(ts)) AS BIGINT) AS s,

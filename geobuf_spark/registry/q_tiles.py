@@ -34,12 +34,12 @@ from ._shared import *  # noqa: F401,F403
 
 def q_quadkey_z8(spark, sf):
     # Bing quadkey addressing of every minted point at z=8 — unrolled
-    # bit/string expressions (functions/tiles.quadkey), zero shuffle;
+    # bit/string expressions (functions/tiles.sql_quadkey), zero shuffle;
     # quadkeys prefix-nest so LIKE-prefix scans prune tile subtrees
     pts = _points(spark, sf)
-    x, y = tiles.tile_x(F.col("lon"), 8), tiles.tile_y(F.col("lat"), 8)
-    return pts.select("doc_id", x.alias("x"), y.alias("y"),
-                      tiles.quadkey(x, y, 8).alias("qk"))
+    return (pts.selectExpr("doc_id", f"{tiles.sql_tile_x('lon', 8)} AS x",
+                           f"{tiles.spark_tile_y('lat', 8)} AS y")
+            .selectExpr("doc_id", "x", "y", f"{tiles.sql_quadkey('x', 'y', 8)} AS qk"))
 
 def q_geohash6(spark, sf):
     # geohash cell addressing of every minted point at 6 characters —
@@ -47,8 +47,7 @@ def q_geohash6(spark, sf):
     # one exact integer division per axis + the morton spread ladder
     from geobuf_spark.functions import cells
     p = minted.minted_points_q(spark, sf)
-    return p.select("doc_id", cells.geohash_q(F.col("qx"), F.col("qy"), 6)
-                    .alias("gh"))
+    return p.selectExpr("doc_id", f"{cells.sql_geohash_q('qx', 'qy', 6)} AS gh")
 
 def q_line_cover(spark, sf):
     # line cover — the missing third of the cover family (points carry ONE
@@ -126,10 +125,10 @@ def q_quadtree_assign(spark, sf):
     # per-level agreement indicators on the z=8 corner tiles — pure
     # integer arithmetic, zero shuffles.
     r = _rects(spark, sf)
-    xa, xb = tiles.tile_x(F.col("minx"), 8), tiles.tile_x(F.col("maxx"), 8)
-    ya, yb = tiles.tile_y(F.col("maxy"), 8), tiles.tile_y(F.col("miny"), 8)
-    d = r.select("poly_id", xa.alias("xa"), xb.alias("xb"),
-                 ya.alias("ya"), yb.alias("yb"))
+    d = r.selectExpr("poly_id", f"{tiles.sql_tile_x('minx', 8)} AS xa",
+                     f"{tiles.sql_tile_x('maxx', 8)} AS xb",
+                     f"{tiles.spark_tile_y('maxy', 8)} AS ya",
+                     f"{tiles.spark_tile_y('miny', 8)} AS yb")
     agree = [
         ((F.floor(F.col("xa") / (1 << (8 - z))) == F.floor(F.col("xb") / (1 << (8 - z))))
          & (F.floor(F.col("ya") / (1 << (8 - z))) == F.floor(F.col("yb") / (1 << (8 - z)))))
@@ -215,8 +214,8 @@ def q_tile_heat_decay(spark, sf):
         F.lit(10)).cast("double")
     w = F.pow(F.lit(2.0), -bucket)
     d = p.select(
-        tiles.tile_x(F.col("lon"), HEAT_Z).alias("x"),
-        tiles.tile_y(F.col("lat"), HEAT_Z).alias("y"),
+        F.expr(tiles.sql_tile_x("lon", HEAT_Z)).alias("x"),
+        F.expr(tiles.spark_tile_y("lat", HEAT_Z)).alias("y"),
         w.alias("w"))
     return (d.groupBy("x", "y")
             .agg(F.count("*").alias("n_pages"),
@@ -255,8 +254,8 @@ def q_tile_gaps_anti(spark, sf):
     zb = pages.with_minted_geometry(b_pages)
 
     def tiles_of(p):
-        return p.select(tiles.tile_x(F.col("lon"), 7).alias("x"),
-                        tiles.tile_y(F.col("lat"), 7).alias("y")).distinct()
+        return p.selectExpr(f"{tiles.sql_tile_x('lon', 7)} AS x",
+                            f"{tiles.spark_tile_y('lat', 7)} AS y").distinct()
 
     return (tiles_of(za).join(tiles_of(zb), ["x", "y"], "left_anti")
             .select("x", "y"))
@@ -291,8 +290,8 @@ def q_morton_keys_z8(spark, sf):
     # key cluster_by_morton range-partitions files on, so bbox scans prune
     # via parquet min/max stats
     a = tiling.assign_tiles_points(_points(spark, sf), z=8)
-    return a.select("doc_id", "x", "y",
-                    tiles.morton_key(F.col("x"), F.col("y"), 8).alias("morton"))
+    return a.selectExpr("doc_id", "x", "y",
+                        f"{tiles.sql_morton_key('x', 'y', 8)} AS morton")
 
 def q_tile_counts_z6(spark, sf):
     return tiling.tile_histogram(tiling.assign_tiles_points(_points(spark, sf), z=6))
@@ -382,12 +381,11 @@ def q_tile_stream_counts(spark, sf):
 
 def q_cover_size_estimate(spark, sf):
     # GetSizeGrid (split_combine.go:44-53): planned tile fan-out per feature
-    from geobuf_spark.functions.tiles import bbox_tile_range
     r = _rects(spark, sf)
-    x0, x1, y0, y1 = bbox_tile_range(F.col("minx"), F.col("miny"),
-                                     F.col("maxx"), F.col("maxy"), 7)
-    return r.select(
-        "poly_id", ((x1 - x0 + 1) * (y1 - y0 + 1)).alias("n_tiles")
+    x0, x1 = tiles.sql_tile_x("minx", 7), tiles.sql_tile_x("maxx", 7)
+    y0, y1 = tiles.spark_tile_y("maxy", 7), tiles.spark_tile_y("miny", 7)
+    return r.selectExpr(
+        "poly_id", f"({x1} - {x0} + 1) * ({y1} - {y0} + 1) AS n_tiles"
     )
 
 def q_rasterize_z4(spark, sf):
@@ -406,7 +404,7 @@ def q_host_tile_footprint(spark, sf):
     # distinct count shuffles narrow integers; lon/lat min/max are exact
     # lattice doubles (FIXTURES.md §1), so the bbox is oracle-exact.
     p = pages.with_minted_geometry(pages.pages(spark, 2000))
-    tile = (tiles.tile_x(F.col("lon"), 8) * 256 + tiles.tile_y(F.col("lat"), 8))
+    tile = F.expr(f"{tiles.sql_tile_x('lon', 8)} * 256 + {tiles.spark_tile_y('lat', 8)}")
     return (p.groupBy(TXT.url_host(F.col("url")).alias("host"))
             .agg(F.count("*").alias("n_pages"),
                  F.countDistinct(tile).alias("n_tiles"),
@@ -422,8 +420,8 @@ def q_lang_tile_mix(spark, sf):
     # order (n desc, lang asc) is total, so the winner is deterministic.
     from pyspark.sql import Window
     p = pages.with_minted_geometry(pages.pages(spark, 2000))
-    g = (p.groupBy(tiles.tile_x(F.col("lon"), 6).alias("x6"),
-                   tiles.tile_y(F.col("lat"), 6).alias("y6"),
+    g = (p.groupBy(F.expr(tiles.sql_tile_x("lon", 6)).alias("x6"),
+                   F.expr(tiles.spark_tile_y("lat", 6)).alias("y6"),
                    "lang")
          .agg(F.count("*").alias("n")))
     w = Window.partitionBy("x6", "y6")
@@ -907,29 +905,31 @@ def q_quadkey_range_join(spark, sf):
     # Buckets = the shared z5 ancestor, so Spark executes a broadcast
     # HASH join on the bucket with the range as an in-partition filter;
     # cover cells are disjoint by construction — no pair dedup needed.
-    pts = minted.minted_points(spark, sf)
-    mk = tiles.morton_key(tiles.tile_x(F.col("lon"), QKRJ_Z),
-                          tiles.tile_y(F.col("lat"), QKRJ_Z), QKRJ_Z)
-    p = pts.select("doc_id", "lon", "lat", mk.alias("mk"),
-                   F.shiftright(mk, 2 * (QKRJ_Z - QKRJ_ZMIN))
-                   .alias("bkt"))
+    # the bucket is the morton key of the z5 ancestor tile (= mk >> 2·Δz)
+    pts = minted.minted_points(spark, sf).selectExpr(
+        "doc_id", "lon", "lat", f"{tiles.sql_tile_x('lon', QKRJ_Z)} AS qx",
+        f"{tiles.spark_tile_y('lat', QKRJ_Z)} AS qy",
+        f"{tiles.sql_tile_x('lon', QKRJ_ZMIN)} AS bx",
+        f"{tiles.spark_tile_y('lat', QKRJ_ZMIN)} AS by")
+    p = pts.selectExpr(
+        "doc_id", "lon", "lat", f"{tiles.sql_morton_key('qx', 'qy', QKRJ_Z)} AS mk",
+        f"{tiles.sql_morton_key('bx', 'by', QKRJ_ZMIN)} AS bkt")
     r = minted.minted_rects(spark, sf).localCheckpoint(eager=False)
-    boxes = r.select(
+    boxes = r.selectExpr(
         "poly_id",
-        tiles.tile_x(F.col("minx"), QKRJ_Z).alias("x1"),
-        (tiles.tile_x(F.col("maxx"), QKRJ_Z) + 1).alias("x2"),
-        tiles.tile_y(F.col("maxy"), QKRJ_Z).alias("y1"),
-        (tiles.tile_y(F.col("miny"), QKRJ_Z) + 1).alias("y2"))
+        f"{tiles.sql_tile_x('minx', QKRJ_Z)} AS x1",
+        f"{tiles.sql_tile_x('maxx', QKRJ_Z)} + 1 AS x2",
+        f"{tiles.spark_tile_y('maxy', QKRJ_Z)} AS y1",
+        f"{tiles.spark_tile_y('miny', QKRJ_Z)} + 1 AS y2")
     cov = tiling.adaptive_cover(boxes, z_min=QKRJ_ZMIN, z_max=QKRJ_ZMAX,
                                 span_bits=QKRJ_Z, id_col="poly_id")
     pref = None
     for zz in range(QKRJ_ZMIN, QKRJ_ZMAX + 1):
-        m = tiles.morton_key(F.col("cx"), F.col("cy"), zz)
+        m = tiles.sql_morton_key("cx", "cy", zz)
         shift = 2 * (QKRJ_Z - zz)
         lvl = (cov.filter(F.col("z") == zz)
-               .select("poly_id",
-                       F.shiftleft(m, shift).alias("lo"),
-                       F.shiftleft(m + 1, shift).alias("hi")))
+               .selectExpr("poly_id", f"({m}) << {shift} AS lo",
+                           f"(({m}) + 1) << {shift} AS hi"))
         pref = lvl if pref is None else pref.unionByName(lvl)
     pref = pref.withColumn(
         "bkt", F.shiftright(F.col("lo"), 2 * (QKRJ_Z - QKRJ_ZMIN)))
@@ -937,7 +937,7 @@ def q_quadkey_range_join(spark, sf):
             .filter((F.col("mk") >= F.col("lo"))
                     & (F.col("mk") < F.col("hi"))))
     return (cand.join(F.broadcast(r), "poly_id")
-            .filter(sj.rect_contains(F.col("lon"), F.col("lat")))
+            .filter(sj.sql_rect_contains("lon", "lat"))
             .select("doc_id", "poly_id"))
 
 def _quadkey_range_join_sql() -> str:
@@ -997,8 +997,8 @@ def q_tile_gradient(spark, sf):
     # detection sibling of tile_focal_mean's smoothing; pure equi-joins
     # on offset cell keys.
     pts = _points(spark, sf)
-    d = (pts.select(tiles.tile_x(F.col("lon"), GRAD_Z).alias("x"),
-                    tiles.tile_y(F.col("lat"), GRAD_Z).alias("y"))
+    d = (pts.selectExpr(f"{tiles.sql_tile_x('lon', GRAD_Z)} AS x",
+                        f"{tiles.spark_tile_y('lat', GRAD_Z)} AS y")
          .groupBy("x", "y").agg(F.count("*").alias("n"))
          .localCheckpoint(eager=False))
 
@@ -1103,8 +1103,7 @@ def q_zorder_locality(spark, sf):
     from pyspark.sql import Window as Win
     a = tiling.assign_tiles_points(_points(spark, sf), z=8)
     keyed = tiles.with_hilbert_key(a.select("doc_id", "x", "y"), z=8) \
-        .withColumn("morton",
-                    tiles.morton_key(F.col("x"), F.col("y"), 8))
+        .withColumn("morton", F.expr(tiles.sql_morton_key("x", "y", 8)))
 
     def leg(order_col, name):
         w = Win.orderBy(F.col(order_col), F.col("doc_id"))
@@ -1204,8 +1203,7 @@ def _tile_stream_sql(z: int = 6, minutes: int = 10) -> str:
     """Oracle for q_tile_stream_counts: minted event point (mulmod over
     user_id) → tile assign → tumbling-window count."""
     secs = minutes * 60
-    lon = f"(({minted._sql_mulmod('user_id', minted.LON_MULT, minted.LON_MOD)} - {minted.LON_MOD // 2}) / 1e7)"
-    lat = f"(({minted._sql_mulmod('user_id', minted.LAT_MULT, minted.LAT_MOD)} - {minted.LAT_MOD // 2}) / 1e7)"
+    lon, lat = minted.sql_lonlat("user_id")
     return f"""
         SELECT CAST(floor(epoch(ts) / {secs}) AS BIGINT) * {secs} AS wstart,
                {z} AS z,

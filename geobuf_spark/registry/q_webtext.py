@@ -509,9 +509,9 @@ def q_pages_synth(spark, sf):
     # the north-rule pages table: synthesize 2k rows, mint geometry, verify
     # shape; byte-identity of text is pytest-checked
     p = pages.with_minted_geometry(pages.pages(spark, 2000))
-    return p.select("page_id", "lang", F.octet_length("text").alias("n_bytes"),
-                    tiles.tile_x(F.col("lon"), 7).alias("x7"),
-                    tiles.tile_y(F.col("lat"), 7).alias("y7"))
+    return p.selectExpr("page_id", "lang", "octet_length(text) AS n_bytes",
+                        f"{tiles.sql_tile_x('lon', 7)} AS x7",
+                        f"{tiles.spark_tile_y('lat', 7)} AS y7")
 
 def q_html_extract_text(spark, sf):
     # the north-rule byte-identity invariant as a DRIVER row (BASELINE.json

@@ -6,15 +6,17 @@ in Spark and in the DuckDB oracle, and every coordinate lands exactly on the
 geobuf 1e-7 lattice (geom.go:173-179 quantization is then lossless on the
 integer path).
 
-Spark builders return DataFrames; ``sql_*`` functions return the equivalent
-ANSI-SQL SELECT fragments for the oracle. Keep both sides byte-for-byte the
-same arithmetic — the driver hash-compares values.
+Each fixture is one tuple of select-list texts that Spark and DuckDB both
+parse: the Spark builders run it through ``selectExpr`` and the ``sql_*`` /
+``SQL_*`` oracle twins splice the same tuple into a SELECT, so the driver's
+hash-compared values come from one formula text. Array-valued fixtures
+share their per-element text; only the wrapper differs per engine
+(``array(...)`` in Spark, ``[...]`` in DuckDB).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 # Knuth-style multiplicative constants; values chosen so every coordinate is
 # an exact integer number of 1e-7 units and well inside the mercator domain.
@@ -30,51 +32,58 @@ _SPLIT = 1 << 15  # (a·b) mod m via b = b1·2^15 + b2 — every intermediate
 # on both sides.
 
 
-def _mulmod(a, mult: int, mod: int):
-    """Spark Column for (a · mult) mod mod, overflow-safe."""
-    b1, b2 = mult // _SPLIT, mult % _SPLIT
-    ar = a % F.lit(mod)
-    t1 = (ar * F.lit(b1)) % F.lit(mod)
-    return (t1 * F.lit(_SPLIT) + ar * F.lit(b2)) % F.lit(mod)
-
-
 def _sql_mulmod(a: str, mult: int, mod: int) -> str:
+    """(a · mult) mod mod, overflow-safe, over integer key text `a`."""
     b1, b2 = mult // _SPLIT, mult % _SPLIT
     ar = f"(({a}) % {mod})"
     t1 = f"(({ar} * {b1}) % {mod})"
     return f"(({t1} * {_SPLIT} + {ar} * {b2}) % {mod})"
 
 
+def _select(cols, table: str) -> str:
+    """A fixture's select-list tuple as the oracle's SELECT over `table`."""
+    return f"SELECT {', '.join(cols)} FROM {table}"
+
+
+def sql_lonlat_q(k: str) -> tuple[str, str]:
+    """The (lon, lat) mint of integer key text `k` as centred lattice
+    ints (degrees · 1e7)."""
+    return (f"({_sql_mulmod(k, LON_MULT, LON_MOD)} - {LON_MOD // 2})",
+            f"({_sql_mulmod(k, LAT_MULT, LAT_MOD)} - {LAT_MOD // 2})")
+
+
+def sql_lonlat(k: str) -> tuple[str, str]:
+    """The (lon, lat) mint of integer key text `k`, in degrees on the
+    1e-7 lattice: (mulmod(k, LON_MULT, LON_MOD) - LON_MOD // 2) / 1e7."""
+    lon_q, lat_q = sql_lonlat_q(k)
+    return f"({lon_q} / 1e7)", f"({lat_q} / 1e7)"
+
+
+_LON, _LAT = sql_lonlat("doc_id")
+POINTS = ("doc_id", f"{_LON} AS lon", f"{_LAT} AS lat")
+
+
 def minted_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One point per document: (doc_id, lon, lat) on the 1e-7 lattice."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    lon_q = _mulmod(F.col("doc_id"), LON_MULT, LON_MOD) - F.lit(LON_MOD // 2)
-    lat_q = _mulmod(F.col("doc_id"), LAT_MULT, LAT_MOD) - F.lit(LAT_MOD // 2)
-    return docs.select(
-        "doc_id",
-        (lon_q / F.lit(1e7)).alias("lon"),
-        (lat_q / F.lit(1e7)).alias("lat"),
-    )
+    return spark.read.parquet(f"{sf_dir}/documents.parquet").selectExpr(*POINTS)
 
 
-SQL_MINTED_POINTS = f"""
-SELECT doc_id,
-       ({_sql_mulmod('doc_id', LON_MULT, LON_MOD)} - {LON_MOD // 2}) / 1e7 AS lon,
-       ({_sql_mulmod('doc_id', LAT_MULT, LAT_MOD)} - {LAT_MOD // 2}) / 1e7 AS lat
-FROM documents
-"""
+SQL_MINTED_POINTS = _select(POINTS, "documents")
 
+# The ONE source of the per-part center/halfwidth draws every rect /
+# triangle / quantized-ring fixture family shares, as integer texts over
+# `part` — diverging copies would silently desynchronize the families
+# (each is only checked against its own oracle).
+_CX = f"({_sql_mulmod('p_partkey', CX_MULT, CX_MOD)} - {CX_MOD // 2})"
+_CY = f"({_sql_mulmod('p_partkey', CY_MULT, CY_MOD)} - {CY_MOD // 2})"
+_HW = f"(10000000 + (p_partkey % 100) * 1000000)"
+_HH = f"(8000000 + (p_partkey % 80) * 1000000)"
 
-def _part_draws():
-    """The ONE source of the per-part center/halfwidth draws every rect /
-    triangle / quantized-ring fixture family shares: (cx, cy, hw, hh)
-    Columns over `part` — diverging copies would silently desynchronize
-    the families (each is only checked against its own oracle)."""
-    cx = _mulmod(F.col("p_partkey"), CX_MULT, CX_MOD) - F.lit(CX_MOD // 2)
-    cy = _mulmod(F.col("p_partkey"), CY_MULT, CY_MOD) - F.lit(CY_MOD // 2)
-    hw = F.lit(10_000_000) + (F.col("p_partkey") % F.lit(100)) * F.lit(1_000_000)
-    hh = F.lit(8_000_000) + (F.col("p_partkey") % F.lit(80)) * F.lit(1_000_000)
-    return cx, cy, hw, hh
+RECTS = ("p_partkey AS poly_id",
+         f"({_CX} - {_HW}) / 1e7 AS minx",
+         f"({_CY} - {_HH}) / 1e7 AS miny",
+         f"({_CX} + {_HW}) / 1e7 AS maxx",
+         f"({_CY} + {_HH}) / 1e7 AS maxy")
 
 
 def minted_rects(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -83,58 +92,27 @@ def minted_rects(spark: SparkSession, sf_dir: str) -> DataFrame:
     Mirrors the county build side (FIXTURES.md §2): bbox = the geometry for
     rectangles, so the bbox prefilter (split_combine.go:324-331 Intersect)
     IS the exact containment predicate — SQL-expressible for the oracle."""
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
-    cx, cy, hw, hh = _part_draws()
-    return part.select(
-        F.col("p_partkey").alias("poly_id"),
-        ((cx - hw) / F.lit(1e7)).alias("minx"),
-        ((cy - hh) / F.lit(1e7)).alias("miny"),
-        ((cx + hw) / F.lit(1e7)).alias("maxx"),
-        ((cy + hh) / F.lit(1e7)).alias("maxy"),
-    )
+    return spark.read.parquet(f"{sf_dir}/part.parquet").selectExpr(*RECTS)
 
 
-_CX = f"({_sql_mulmod('p_partkey', CX_MULT, CX_MOD)} - {CX_MOD // 2})"
-_CY = f"({_sql_mulmod('p_partkey', CY_MULT, CY_MOD)} - {CY_MOD // 2})"
-_HW = f"(10000000 + (p_partkey % 100) * 1000000)"
-_HH = f"(8000000 + (p_partkey % 80) * 1000000)"
+SQL_MINTED_RECTS = _select(RECTS, "part")
 
-SQL_MINTED_RECTS = f"""
-SELECT p_partkey AS poly_id,
-       ({_CX} - {_HW}) / 1e7 AS minx,
-       ({_CY} - {_HH}) / 1e7 AS miny,
-       ({_CX} + {_HW}) / 1e7 AS maxx,
-       ({_CY} + {_HH}) / 1e7 AS maxy
-FROM part
-"""
+TRIANGLES = ("p_partkey AS poly_id",
+             f"{_CX} / 1e7 AS x0",
+             f"({_CY} + {_HH}) / 1e7 AS y0",
+             f"({_CX} - {_HW}) / 1e7 AS x1",
+             f"({_CY} - {_HH}) / 1e7 AS y1",
+             f"({_CX} + {_HW}) / 1e7 AS x2",
+             f"({_CY} - {_HH}) / 1e7 AS y2")
 
 
 def minted_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One triangle per part for general point-in-polygon:
     v0=(cx, cy+hh), v1=(cx-hw, cy-hh), v2=(cx+hw, cy-hh)."""
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
-    cx, cy, hw, hh = _part_draws()
-    return part.select(
-        F.col("p_partkey").alias("poly_id"),
-        (cx / F.lit(1e7)).alias("x0"),
-        ((cy + hh) / F.lit(1e7)).alias("y0"),
-        ((cx - hw) / F.lit(1e7)).alias("x1"),
-        ((cy - hh) / F.lit(1e7)).alias("y1"),
-        ((cx + hw) / F.lit(1e7)).alias("x2"),
-        ((cy - hh) / F.lit(1e7)).alias("y2"),
-    )
+    return spark.read.parquet(f"{sf_dir}/part.parquet").selectExpr(*TRIANGLES)
 
 
-SQL_MINTED_TRIANGLES = f"""
-SELECT p_partkey AS poly_id,
-       {_CX} / 1e7 AS x0,
-       ({_CY} + {_HH}) / 1e7 AS y0,
-       ({_CX} - {_HW}) / 1e7 AS x1,
-       ({_CY} - {_HH}) / 1e7 AS y1,
-       ({_CX} + {_HW}) / 1e7 AS x2,
-       ({_CY} - {_HH}) / 1e7 AS y2
-FROM part
-"""
+SQL_MINTED_TRIANGLES = _select(TRIANGLES, "part")
 
 
 def minted_rings_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -144,31 +122,31 @@ def minted_rings_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     minted_rects/minted_triangles, kept as integers so shoelace stats are
     int64-exact. Every edge is a whole multiple of geom.UNIT (hw/hh are
     built from 1e6-unit steps)."""
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
-    cx, cy, hw, hh = _part_draws()
-    is_rect = F.pmod(F.col("p_partkey"), F.lit(2)) == 0
-    # rect ring (minx,miny)→(maxx,miny)→(maxx,maxy)→(minx,maxy): CCW
-    rect_xs = F.array(cx - hw, cx + hw, cx + hw, cx - hw)
-    rect_ys = F.array(cy - hh, cy - hh, cy + hh, cy + hh)
-    # triangle ring (cx,cy+hh)→(cx−hw,cy−hh)→(cx+hw,cy−hh): CCW
-    tri_xs = F.array(cx, cx - hw, cx + hw)
-    tri_ys = F.array(cy + hh, cy - hh, cy - hh)
-    return part.select(
-        F.col("p_partkey").alias("poly_id"),
-        F.when(is_rect, F.lit("rect")).otherwise(F.lit("triangle")).alias("kind"),
-        F.when(is_rect, rect_xs).otherwise(tri_xs).alias("xs_q"),
-        F.when(is_rect, rect_ys).otherwise(tri_ys).alias("ys_q"),
+    rect_xs, rect_ys, tri_xs, tri_ys = sql_minted_ring_coords()
+    is_rect = "p_partkey % 2 = 0"
+
+    def ring(rect, tri):
+        return (f"CASE WHEN {is_rect} THEN array({', '.join(rect)}) "
+                f"ELSE array({', '.join(tri)}) END")
+
+    return spark.read.parquet(f"{sf_dir}/part.parquet").selectExpr(
+        "p_partkey AS poly_id",
+        f"CASE WHEN {is_rect} THEN 'rect' ELSE 'triangle' END AS kind",
+        f"{ring(rect_xs, tri_xs)} AS xs_q",
+        f"{ring(rect_ys, tri_ys)} AS ys_q",
     )
 
 
 def sql_minted_ring_coords() -> tuple[list, list, list, list]:
-    """The DuckDB coordinate expressions of minted_rings_q's two shapes:
+    """The per-vertex coordinate texts of minted_rings_q's two shapes:
     (rect_xs, rect_ys, tri_xs, tri_ys), each a list of quantized-integer
-    SQL expressions over `part`."""
+    expressions over `part`."""
+    # rect ring (minx,miny)→(maxx,miny)→(maxx,maxy)→(minx,maxy): CCW
     rect_xs = [f"({_CX} - {_HW})", f"({_CX} + {_HW})",
                f"({_CX} + {_HW})", f"({_CX} - {_HW})"]
     rect_ys = [f"({_CY} - {_HH})", f"({_CY} - {_HH})",
                f"({_CY} + {_HH})", f"({_CY} + {_HH})"]
+    # triangle ring (cx,cy+hh)→(cx−hw,cy−hh)→(cx+hw,cy−hh): CCW
     tri_xs = [f"{_CX}", f"({_CX} - {_HW})", f"({_CX} + {_HW})"]
     tri_ys = [f"({_CY} + {_HH})", f"({_CY} - {_HH})", f"({_CY} - {_HH})"]
     return rect_xs, rect_ys, tri_xs, tri_ys
@@ -188,24 +166,34 @@ WY_MULT, WY_MOD = 69621, 16_000_000
 _WALK_STEP = 1_000_003  # distinct mulmod argument per vertex index
 
 
+POINTS_Q = ("doc_id",
+            f"CAST({_sql_mulmod('doc_id', LON_MULT, LON_MOD)} AS BIGINT) AS qx",
+            f"CAST({_sql_mulmod('doc_id', LAT_MULT, LAT_MOD)} AS BIGINT) AS qy")
+
+
 def minted_points_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One point per document on the RAW (non-negative) lattice:
     (doc_id, qx, qy) with qx in [0, 3.6e9), qy in [0, 1.7e9) — the same
     draws as minted_points before the center offset and the /1e7."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return docs.select(
-        "doc_id",
-        _mulmod(F.col("doc_id"), LON_MULT, LON_MOD).cast("bigint").alias("qx"),
-        _mulmod(F.col("doc_id"), LAT_MULT, LAT_MOD).cast("bigint").alias("qy"),
-    )
+    return spark.read.parquet(f"{sf_dir}/documents.parquet").selectExpr(*POINTS_Q)
 
 
-SQL_MINTED_POINTS_Q = f"""
-SELECT doc_id,
-       CAST({_sql_mulmod('doc_id', LON_MULT, LON_MOD)} AS BIGINT) AS qx,
-       CAST({_sql_mulmod('doc_id', LAT_MULT, LAT_MOD)} AS BIGINT) AS qy
-FROM documents
-"""
+SQL_MINTED_POINTS_Q = _select(POINTS_Q, "documents")
+
+
+def _walk_coords(bx: str, by: str, k: int) -> tuple[list, list]:
+    """Per-vertex texts of a k-vertex walk from base corner (bx, by):
+    ([x_0..x_{k-1}], [y_0..y_{k-1}]) over a frame carrying doc_id."""
+    xs = [f"({bx} + {_sql_mulmod(f'(doc_id + {i * _WALK_STEP})', WX_MULT, WX_MOD)})"
+          for i in range(k)]
+    ys = [f"({by} + {_sql_mulmod(f'(doc_id + {i * _WALK_STEP})', WY_MULT, WY_MOD)})"
+          for i in range(k)]
+    return xs, ys
+
+
+def _spark_walk(xs: list, ys: list) -> tuple:
+    return ("doc_id", f"array({', '.join(xs)}) AS xs_q",
+            f"array({', '.join(ys)}) AS ys_q")
 
 
 def minted_walk_lines_q(spark: SparkSession, sf_dir: str, k: int = 9) -> DataFrame:
@@ -213,30 +201,15 @@ def minted_walk_lines_q(spark: SparkSession, sf_dir: str, k: int = 9) -> DataFra
     plus k walk offsets inside a 2.0° x 1.6° box, as parallel bigint
     coordinate arrays (doc_id, xs_q, ys_q). Vertex deltas stay < 2e7, so
     downstream integer cross products stay far below 2^63."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    bx = _mulmod(F.col("doc_id"), LON_MULT, LON_MOD)
-    by = _mulmod(F.col("doc_id"), LAT_MULT, LAT_MOD)
-    xs = [bx + _mulmod(F.col("doc_id") + F.lit(i * _WALK_STEP), WX_MULT, WX_MOD)
-          for i in range(k)]
-    ys = [by + _mulmod(F.col("doc_id") + F.lit(i * _WALK_STEP), WY_MULT, WY_MOD)
-          for i in range(k)]
-    return docs.select(
-        "doc_id",
-        F.array(*[x.cast("bigint") for x in xs]).alias("xs_q"),
-        F.array(*[y.cast("bigint") for y in ys]).alias("ys_q"),
-    )
+    return spark.read.parquet(f"{sf_dir}/documents.parquet").selectExpr(
+        *_spark_walk(*sql_minted_walk_coords(k)))
 
 
 def sql_minted_walk_coords(k: int = 9) -> tuple[list, list]:
-    """DuckDB twins of minted_walk_lines_q's vertex coordinates over
-    `documents`: ([x_0..x_{k-1}], [y_0..y_{k-1}]) expression strings."""
-    bx = _sql_mulmod("doc_id", LON_MULT, LON_MOD)
-    by = _sql_mulmod("doc_id", LAT_MULT, LAT_MOD)
-    xs = [f"({bx} + {_sql_mulmod(f'(doc_id + {i * _WALK_STEP})', WX_MULT, WX_MOD)})"
-          for i in range(k)]
-    ys = [f"({by} + {_sql_mulmod(f'(doc_id + {i * _WALK_STEP})', WY_MULT, WY_MOD)})"
-          for i in range(k)]
-    return xs, ys
+    """minted_walk_lines_q's vertex coordinate texts over `documents`:
+    ([x_0..x_{k-1}], [y_0..y_{k-1}])."""
+    return _walk_coords(_sql_mulmod("doc_id", LON_MULT, LON_MOD),
+                        _sql_mulmod("doc_id", LAT_MULT, LAT_MOD), k)
 
 
 # clustered points: the uniform rank-1 draws never place two documents
@@ -251,24 +224,25 @@ _OFFX_MULT, _OFFX_SPAN = 48271, 30_000_000
 _OFFY_MULT, _OFFY_SPAN = 69621, 40_000_000
 
 
+def _cluster_cols(n_clusters: int) -> tuple:
+    g = f"(doc_id % {n_clusters})"
+    cx = _sql_mulmod(f"{g} * {_CLX_MULT}", LON_MULT, _CLX_SPAN)
+    cy = _sql_mulmod(f"{g} * {_CLY_MULT}", LAT_MULT, _CLY_SPAN)
+    ox = _sql_mulmod(_sql_mulmod("doc_id", LON_MULT, LON_MOD),
+                     _OFFX_MULT, _OFFX_SPAN)
+    oy = _sql_mulmod(_sql_mulmod("doc_id", LAT_MULT, LAT_MOD),
+                     _OFFY_MULT, _OFFY_SPAN)
+    return ("doc_id", f"CAST({cx} + {ox} AS BIGINT) AS qx",
+            f"CAST({cy} + {oy} AS BIGINT) AS qy")
+
+
 def cluster_points_from(ids: DataFrame,
                         n_clusters: int = N_CLUSTERS) -> DataFrame:
     """Clustered minting over any (doc_id) frame: cluster center by
     doc_id mod n_clusters, chained-mulmod local offset inside a
     3.0° x 4.0° box. The stress harnesses raise n_clusters with N to hold
     the per-point pair degree roughly constant."""
-    g = F.col("doc_id") % F.lit(n_clusters)
-    cx = _mulmod(g * F.lit(_CLX_MULT), LON_MULT, _CLX_SPAN)
-    cy = _mulmod(g * F.lit(_CLY_MULT), LAT_MULT, _CLY_SPAN)
-    ox = _mulmod(_mulmod(F.col("doc_id"), LON_MULT, LON_MOD),
-                 _OFFX_MULT, _OFFX_SPAN)
-    oy = _mulmod(_mulmod(F.col("doc_id"), LAT_MULT, LAT_MOD),
-                 _OFFY_MULT, _OFFY_SPAN)
-    return ids.select(
-        "doc_id",
-        (cx + ox).cast("bigint").alias("qx"),
-        (cy + oy).cast("bigint").alias("qy"),
-    )
+    return ids.selectExpr(*_cluster_cols(n_clusters))
 
 
 def minted_cluster_points_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -281,15 +255,7 @@ def minted_cluster_points_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def sql_minted_cluster_points_q() -> str:
     """DuckDB twin of minted_cluster_points_q over `documents`."""
-    g = f"(doc_id % {N_CLUSTERS})"
-    cx = _sql_mulmod(f"{g} * {_CLX_MULT}", LON_MULT, _CLX_SPAN)
-    cy = _sql_mulmod(f"{g} * {_CLY_MULT}", LAT_MULT, _CLY_SPAN)
-    ox = _sql_mulmod(_sql_mulmod("doc_id", LON_MULT, LON_MOD),
-                     _OFFX_MULT, _OFFX_SPAN)
-    oy = _sql_mulmod(_sql_mulmod("doc_id", LAT_MULT, LAT_MOD),
-                     _OFFY_MULT, _OFFY_SPAN)
-    return (f"SELECT doc_id, CAST({cx} + {ox} AS BIGINT) AS qx, "
-            f"CAST({cy} + {oy} AS BIGINT) AS qy FROM documents")
+    return _select(_cluster_cols(N_CLUSTERS), "documents")
 
 
 def cluster_centers(n_clusters: int = N_CLUSTERS) -> list:
@@ -320,15 +286,7 @@ def walk_lines_from(base: DataFrame, k: int = 9) -> DataFrame:
     """k-vertex walk polylines from any (doc_id, qx, qy) base frame —
     shared by the fixture readers and the stress harnesses (which mint
     the base from spark.range at arbitrary N)."""
-    xs = [F.col("qx") + _mulmod(F.col("doc_id") + F.lit(i * _WALK_STEP),
-                                WX_MULT, WX_MOD) for i in range(k)]
-    ys = [F.col("qy") + _mulmod(F.col("doc_id") + F.lit(i * _WALK_STEP),
-                                WY_MULT, WY_MOD) for i in range(k)]
-    return base.select(
-        "doc_id",
-        F.array(*[x.cast("bigint") for x in xs]).alias("xs_q"),
-        F.array(*[y.cast("bigint") for y in ys]).alias("ys_q"),
-    )
+    return base.selectExpr(*_spark_walk(*_walk_coords("qx", "qy", k)))
 
 
 def cluster_walk_lines_q(spark: SparkSession, sf_dir: str,
@@ -340,17 +298,13 @@ def cluster_walk_lines_q(spark: SparkSession, sf_dir: str,
     counts test-sized; values are per-doc deterministic either way."""
     ids = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
     if stride > 1:
-        ids = ids.filter(F.col("doc_id") % stride == 0)
+        ids = ids.filter(f"doc_id % {stride} = 0")
     return walk_lines_from(cluster_points_from(ids), k)
 
 
 def sql_cluster_walk_lines_q(k: int = 9, stride: int = 7) -> str:
     """DuckDB twin of cluster_walk_lines_q: SELECT doc_id, xs, ys."""
-    base = sql_minted_cluster_points_q()
-    xs = [f"(qx + {_sql_mulmod(f'(doc_id + {i * _WALK_STEP})', WX_MULT, WX_MOD)})"
-          for i in range(k)]
-    ys = [f"(qy + {_sql_mulmod(f'(doc_id + {i * _WALK_STEP})', WY_MULT, WY_MOD)})"
-          for i in range(k)]
+    xs, ys = _walk_coords("qx", "qy", k)
     return (f"SELECT doc_id, [{', '.join(xs)}] AS xs, "
-            f"[{', '.join(ys)}] AS ys FROM ({base}) b "
+            f"[{', '.join(ys)}] AS ys FROM ({sql_minted_cluster_points_q()}) b "
             f"WHERE doc_id % {stride} = 0")

@@ -255,19 +255,13 @@ def tile_event_counts(events: DataFrame, z: int = 6, minutes: int = 10) -> DataF
     from geobuf_spark.sources import minted
 
     secs = minutes * 60
-    lon = (minted._mulmod(F.col("user_id"), minted.LON_MULT, minted.LON_MOD)
-           - F.lit(minted.LON_MOD // 2)) / F.lit(1e7)
-    lat = (minted._mulmod(F.col("user_id"), minted.LAT_MULT, minted.LAT_MOD)
-           - F.lit(minted.LAT_MOD // 2)) / F.lit(1e7)
-    wstart = F.floor(F.unix_timestamp("ts").cast("bigint") / F.lit(secs)) \
-        .cast("bigint") * F.lit(secs)
+    lon, lat = minted.sql_lonlat("user_id")
     return (
-        events.select(
-            wstart.alias("wstart"),
-            F.lit(z).alias("z"),
-            tiles.tile_x(lon, z).alias("x"),
-            tiles.tile_y(lat, z).alias("y"),
-        )
+        events.selectExpr(
+            f"CAST(floor(CAST(unix_timestamp(ts) AS BIGINT) / {secs}) AS BIGINT)"
+            f" * {secs} AS wstart", f"{lon} AS lon", f"{lat} AS lat")
+        .selectExpr("wstart", f"{z} AS z", f"{tiles.sql_tile_x('lon', z)} AS x",
+                    f"{tiles.spark_tile_y('lat', z)} AS y")
         .groupBy("wstart", "z", "x", "y")
         .agg(F.count("*").alias("n_events"))
     )
@@ -285,14 +279,12 @@ def tile_event_counts_streaming(spark: SparkSession, parquet_dir: str,
     schema = spark.read.parquet(parquet_dir).schema
     stream = spark.readStream.schema(schema).parquet(parquet_dir) \
         .withColumn("ts", F.col("ts").cast("timestamp"))
-    lon = (minted._mulmod(F.col("user_id"), minted.LON_MULT, minted.LON_MOD)
-           - F.lit(minted.LON_MOD // 2)) / F.lit(1e7)
-    lat = (minted._mulmod(F.col("user_id"), minted.LAT_MULT, minted.LAT_MOD)
-           - F.lit(minted.LAT_MOD // 2)) / F.lit(1e7)
+    lon, lat = minted.sql_lonlat("user_id")
     return (
         stream.withWatermark("ts", watermark)
-        .withColumn("x", tiles.tile_x(lon, z))
-        .withColumn("y", tiles.tile_y(lat, z))
+        .selectExpr("ts", f"{lon} AS lon", f"{lat} AS lat")
+        .selectExpr("ts", f"{tiles.sql_tile_x('lon', z)} AS x",
+                    f"{tiles.spark_tile_y('lat', z)} AS y")
         .groupBy(F.window("ts", f"{minutes} minutes"), "x", "y")
         .agg(F.count("*").alias("n_events"))
         .select(

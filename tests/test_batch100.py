@@ -56,8 +56,7 @@ def test_zorder_locality_vs_brute(spark):
     from geobuf_spark.operators import tiling
     a = tiling.assign_tiles_points(em._points(spark, SF), z=8)
     keyed = tiles.with_hilbert_key(a.select("doc_id", "x", "y"), z=8) \
-        .withColumn("morton", tiles.morton_key(F.col("x"),
-                                               F.col("y"), 8))
+        .withColumn("morton", F.expr(tiles.sql_morton_key("x", "y", 8)))
     rows = [(r["doc_id"], r["x"], r["y"], r["morton"], r["hilbert"])
             for r in keyed.collect()]
     # morton independently re-derived by bit interleave

@@ -82,9 +82,9 @@ def test_tile_gaps_anti_properties(spark):
 
     def tset(p):
         return {(r["x"], r["y"]) for r in
-                pages.with_minted_geometry(p).select(
-                    T.tile_x(F.col("lon"), 7).alias("x"),
-                    T.tile_y(F.col("lat"), 7).alias("y")).collect()}
+                pages.with_minted_geometry(p).selectExpr(
+                    f"{T.sql_tile_x('lon', 7)} AS x",
+                    f"{T.spark_tile_y('lat', 7)} AS y").collect()}
 
     a = tset(pages.pages(spark, 2000))
     b = tset(pages.pages(spark, 2400).where(

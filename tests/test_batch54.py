@@ -42,8 +42,8 @@ def test_tile_gradient_matches_python(spark):
 
     # mirror the shared tile_y convention via the engine itself
     xy = (minted.minted_points(spark, SF)
-          .select(tiles.tile_x(em.F.col("lon"), z).alias("x"),
-                  tiles.tile_y(em.F.col("lat"), z).alias("y"))
+          .selectExpr(f"{tiles.sql_tile_x('lon', z)} AS x",
+                      f"{tiles.spark_tile_y('lat', z)} AS y")
           .toPandas())
     cnt = xy.groupby(["x", "y"]).size().to_dict()
     got = {(r["x"], r["y"]): r

@@ -37,16 +37,16 @@ def _brute_str(rects, s):
 
 def test_str_pack_vs_brute(spark):
     from geobuf_spark.sources import minted
-    import pyspark.sql.functions as F
-    part = spark.read.parquet(f"{SF}/part.parquet")
-    cx, cy, hw, hh = minted._part_draws()
-    r = part.select(F.col("p_partkey").alias("rid"),
-                    cx.cast("bigint").alias("cx"),
-                    cy.cast("bigint").alias("cy"),
-                    (cx - hw).cast("bigint").alias("x1"),
-                    (cy - hh).cast("bigint").alias("y1"),
-                    (cx + hw).cast("bigint").alias("x2"),
-                    (cy + hh).cast("bigint").alias("y2")).toPandas()
+    # the rects from the fixture's own draws (minted_rects, back on the
+    # integer lattice), independent of q_str_pack's select list
+    r = minted.minted_rects(spark, SF).selectExpr(
+        "poly_id AS rid",
+        "CAST(round((minx + maxx) / 2 * 1e7) AS BIGINT) AS cx",
+        "CAST(round((miny + maxy) / 2 * 1e7) AS BIGINT) AS cy",
+        "CAST(round(minx * 1e7) AS BIGINT) AS x1",
+        "CAST(round(miny * 1e7) AS BIGINT) AS y1",
+        "CAST(round(maxx * 1e7) AS BIGINT) AS x2",
+        "CAST(round(maxy * 1e7) AS BIGINT) AS y2").toPandas()
     rects = [tuple(int(v) for v in row)
              for row in r.itertuples(index=False)]
     exp = _brute_str(rects, em.STR_S)

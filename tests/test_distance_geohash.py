@@ -1,7 +1,7 @@
 """Batch-8 operators: the grid-bucketed radius self-join
 (operators/spatial_join.radius_self_join), one-pass Visvalingam
 simplification (functions/geom.vw_simplify_q), geohash addressing
-(functions/cells.geohash_q), and the hotspot-cluster rollup."""
+(functions/cells.sql_geohash_q), and the hotspot-cluster rollup."""
 
 import duckdb
 import pytest
@@ -152,17 +152,17 @@ def test_geohash_known_value(spark):
     # lat 57.64911, lon 10.40744 -> u4pruydqqvj (standard test vector)
     qx, qy = 104074400 + 1_800_000_000, 576491100 + 850_000_000
     df = spark.createDataFrame([(qx, qy)], ["qx", "qy"])
-    got = df.select(cells.geohash_q(F.col("qx"), F.col("qy"), 6)
-                    .alias("gh")).collect()[0]["gh"]
+    got = df.selectExpr(f"{cells.sql_geohash_q('qx', 'qy', 6)} AS gh") \
+        .collect()[0]["gh"]
     assert got == "u4pruy" == brute_geohash(qx, qy, 6)
 
 
 def test_geohash_vs_brute_minted(spark):
     p = minted.minted_points_q(spark, SF).limit(100)
-    rows = p.select("doc_id", "qx", "qy",
-                    cells.geohash_q(F.col("qx"), F.col("qy"), 6).alias("gh"),
-                    cells.geohash_q(F.col("qx"), F.col("qy"), 4).alias("gh4"),
-                    ).collect()
+    rows = p.selectExpr("doc_id", "qx", "qy",
+                        f"{cells.sql_geohash_q('qx', 'qy', 6)} AS gh",
+                        f"{cells.sql_geohash_q('qx', 'qy', 4)} AS gh4",
+                        ).collect()
     assert rows
     for r in rows:
         assert r["gh"] == brute_geohash(r["qx"], r["qy"], 6)
@@ -171,17 +171,19 @@ def test_geohash_vs_brute_minted(spark):
 
 
 def test_geohash_sql_twin_matches(spark):
+    """The one geohash text gives the brute value on both engines."""
     con = duckdb.connect()
     for qx, qy in [(0, 0), (3_599_999_999, 1_699_999_999),
                    (1_904_074_400, 1_426_491_100)]:
         sql = (f"SELECT {cells.sql_geohash_q('qx', 'qy', 6)} "
                f"FROM (SELECT CAST({qx} AS BIGINT) qx, CAST({qy} AS BIGINT) qy)")
         assert con.sql(sql).fetchone()[0] == brute_geohash(qx, qy, 6)
+        assert spark.sql(sql).first()[0] == brute_geohash(qx, qy, 6)
 
 
 def test_geohash_rejects_odd_chars(spark):
     with pytest.raises(ValueError):
-        cells.geohash_q(F.lit(0), F.lit(0), 5)
+        cells.sql_geohash_q("qx", "qy", 5)
     with pytest.raises(ValueError):
         cells.sql_geohash_q("qx", "qy", 7)
 

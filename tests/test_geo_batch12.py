@@ -45,12 +45,12 @@ def test_quadtree_assign_is_max_fitting_level(spark):
     out = {r["poly_id"]: r for r in
            em.q_quadtree_assign(spark, SF).collect()}
     r = minted.minted_rects(spark, SF)
-    corners = r.select(
+    corners = r.selectExpr(
         "poly_id",
-        tiles.tile_x(F.col("minx"), 8).alias("xa"),
-        tiles.tile_x(F.col("maxx"), 8).alias("xb"),
-        tiles.tile_y(F.col("maxy"), 8).alias("ya"),
-        tiles.tile_y(F.col("miny"), 8).alias("yb")).collect()
+        f"{tiles.sql_tile_x('minx', 8)} AS xa",
+        f"{tiles.sql_tile_x('maxx', 8)} AS xb",
+        f"{tiles.spark_tile_y('maxy', 8)} AS ya",
+        f"{tiles.spark_tile_y('miny', 8)} AS yb").collect()
     assert len(corners) == len(out)
     for c in corners:
         z = out[c["poly_id"]]["z_fit"]

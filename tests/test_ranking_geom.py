@@ -113,8 +113,8 @@ def brute_quadkey(x, y, z):
 def test_quadkey_vs_brute(spark):
     cases = [(0, 0), (255, 255), (1, 2), (170, 85), (200, 13)]
     df = spark.createDataFrame(cases, ["x", "y"])
-    got = {(r["x"], r["y"]): r["qk"] for r in df.select(
-        "x", "y", tiles.quadkey(F.col("x"), F.col("y"), 8).alias("qk")).collect()}
+    got = {(r["x"], r["y"]): r["qk"] for r in df.selectExpr(
+        "x", "y", f"{tiles.sql_quadkey('x', 'y', 8)} AS qk").collect()}
     for x, y in cases:
         assert got[(x, y)] == brute_quadkey(x, y, 8)
 
@@ -122,10 +122,9 @@ def test_quadkey_vs_brute(spark):
 def test_quadkey_prefix_nesting(spark):
     """The z−1 quadkey of the parent tile is a prefix of the child's."""
     df = spark.createDataFrame([(200, 13), (37, 255)], ["x", "y"])
-    rows = df.select(
-        tiles.quadkey(F.col("x"), F.col("y"), 8).alias("qk8"),
-        tiles.quadkey((F.col("x") - F.col("x") % 2) / 2,
-                      (F.col("y") - F.col("y") % 2) / 2, 7).alias("qk7"),
+    rows = df.selectExpr(
+        f"{tiles.sql_quadkey('x', 'y', 8)} AS qk8",
+        f"{tiles.sql_quadkey('x >> 1', 'y >> 1', 7)} AS qk7",
     ).collect()
     assert rows
     for r in rows:
@@ -178,7 +177,7 @@ def test_ring_stats_closed_forms(spark):
     u = geom.UNIT
 
     def mulmod(a, mult, mod):
-        # python twin of sources/minted._mulmod
+        # python twin of sources/minted._sql_mulmod
         b1, b2 = mult // (1 << 15), mult % (1 << 15)
         ar = a % mod
         return ((ar * b1) % mod * (1 << 15) + ar * b2) % mod

@@ -62,7 +62,7 @@ def test_pip_join_triangles_vs_numpy(points, triangles):
         (r.doc_id, r.poly_id)
         for r in sj.pip_join(
             points, tri, z=5,
-            refine=sj.triangle_contains(F.col("lon"), F.col("lat")),
+            refine=sj.sql_triangle_contains("lon", "lat"),
         ).select("doc_id", "poly_id").collect()
     }
 
@@ -94,7 +94,7 @@ def test_pip_join_matches_duckdb(points, triangles, sf_small):
             triangles.withColumn("minx", F.col("x1")).withColumn("maxx", F.col("x2"))
             .withColumn("miny", F.col("y1")).withColumn("maxy", F.col("y0")),
             z=6,
-            refine=sj.triangle_contains(F.col("lon"), F.col("lat")),
+            refine=sj.sql_triangle_contains("lon", "lat"),
         ).select("doc_id", "poly_id").collect()
     }
     con = duckdb.connect()

@@ -1,9 +1,11 @@
 """Tile math vs an independent Python oracle (published slippy-map formulas),
 including tile-boundary behavior, parent promotion, and bbox cover 1:N
-duplication semantics (FIXTURES.md §6)."""
+duplication semantics (FIXTURES.md §6). The tile texts run unchanged in
+Spark and in DuckDB over the same rows."""
 
 import math
 
+import duckdb
 import pytest
 from pyspark.sql import functions as F
 
@@ -23,30 +25,82 @@ CASES = [
     (0.0, 0.0), (-180.0, 0.0), (179.9999999, 0.0), (0.0, 85.0511287), (0.0, -85.0511287),
     (-83.537385, 33.9659119), (13.4, 52.52), (-122.419, 37.775), (151.21, -33.87),
     (0.0000001, -0.0000001), (-0.0000001, 0.0000001), (90.0, 45.0), (-90.0, -45.0),
+    # antimeridian and the mercator clip latitude, inside and beyond
+    (180.0, tiles.MAX_LAT), (-180.0, -tiles.MAX_LAT), (179.9999999, 89.9),
+    (-179.9999999, -89.9), (-180.0000001, 85.06), (180.0000001, -85.06),
 ]
+
+
+def duck_rows(rows, select: str):
+    """`select` over DuckDB table t(lon double, lat double) holding `rows`."""
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (lon DOUBLE, lat DOUBLE)")
+    con.executemany("INSERT INTO t VALUES (?, ?)", rows)
+    return con.execute(f"SELECT {select} FROM t").fetchall()
 
 
 @pytest.mark.parametrize("z", [0, 1, 4, 8, 12, 14])
 def test_tile_xy_matches_oracle(spark, z):
-    df = spark.createDataFrame([(lon, lat) for lon, lat in CASES], "lon double, lat double")
-    rows = (
-        df.select("lon", "lat", tiles.tile_x(F.col("lon"), z).alias("x"),
-                  tiles.tile_y(F.col("lat"), z).alias("y"))
-        .collect()
-    )
-    for r in rows:
-        ox, oy = oracle_tile(r.lon, r.lat, z)
-        assert (r.x, r.y) == (ox, oy), (r.lon, r.lat, z)
+    """Spark's tile texts give the python oracle's tile; DuckDB runs the
+    same sql_tile_x text (and its literal-boundary sql_tile_y) over the
+    same rows to the same tile; a NULL coordinate gets NULL keys on both."""
+    rows = CASES + [(None, None)]
+    df = spark.createDataFrame(rows, "lon double, lat double")
+    got = {(r.lon, r.lat): (r.x, r.y) for r in df.selectExpr(
+        "lon", "lat", f"{tiles.sql_tile_x('lon', z)} AS x",
+        f"{tiles.spark_tile_y('lat', z)} AS y").collect()}
+    duck = {(r[0], r[1]): (r[2], r[3]) for r in duck_rows(
+        rows, f"lon, lat, {tiles.sql_tile_x('lon', z)}, {tiles.sql_tile_y('lat', z)}")}
+    for lon, lat in CASES:
+        want = oracle_tile(lon, lat, z)
+        assert got[(lon, lat)] == want, (lon, lat, z)
+        assert duck[(lon, lat)] == want, (lon, lat, z)
+    assert got[(None, None)] == duck[(None, None)] == (None, None)
+
+
+@pytest.mark.parametrize("z", [0, 3, 7, 12, 20, 29])
+def test_tile_x_and_cell_id_same_on_both_engines(spark, z):
+    """sql_tile_x and sql_cell_id up to z 29, where the packed key nears
+    2^63: one text, the same bigint on Spark, DuckDB and in python."""
+    n = 1 << z
+    rows = [(lon, lat) for lon, lat in CASES] + [(None, 0.0)]
+    cell = tiles.sql_cell_id(z, tiles.sql_tile_x("lon", z), f"{n - 1} - {n // 3}")
+    select = ["lon", "lat", f"{tiles.sql_tile_x('lon', z)} AS x", f"{cell} AS cell"]
+    df = spark.createDataFrame(rows, "lon double, lat double")
+    spark_rows = {(r.lon, r.lat): (r.x, r.cell) for r in df.selectExpr(*select).collect()}
+    duck = {(r[0], r[1]): (r[2], r[3]) for r in duck_rows(rows, ", ".join(select))}
+    assert spark_rows == duck
+    for lon, lat in CASES:
+        x = min(max(math.floor((lon + 180.0) / 360.0 * n), 0), n - 1)
+        want = (x, ((z * tiles.CELL_SHIFT) + x) * tiles.CELL_SHIFT + n - 1 - n // 3)
+        assert duck[(lon, lat)] == want, (lon, z)
+    assert duck[(None, 0.0)] == (None, None)
+
+
+def test_assign_tiles_points_null_coordinates(spark):
+    """A point with a NULL coordinate is keyed NULL, never counted in the
+    corner tile (least/greatest skip NULLs, so the bare clamp gave 0)."""
+    from geobuf_spark.operators import tiling
+
+    df = spark.createDataFrame([(1, None, None), (2, 10.0, None), (3, None, 10.0),
+                                (4, 10.0, 10.0)], "doc_id long, lon double, lat double")
+    x, y = oracle_tile(10.0, 10.0, 7)
+    got = {r.doc_id: (r.x, r.y) for r in tiling.assign_tiles_points(df, z=7).collect()}
+    assert got == {1: (None, None), 2: (x, None), 3: (None, y), 4: (x, y)}
+    hist = {(r.x, r.y): r.n_features for r in
+            tiling.tile_histogram(tiling.assign_tiles_points(df, z=7)).collect()}
+    assert hist == {(None, None): 1, (x, None): 1, (None, y): 1, (x, y): 1}
 
 
 def test_parent_promotion(spark):
     # parent(x, y, z) = (x>>1, y>>1, z-1) — split_combine.go:390-394
     df = spark.createDataFrame([(lon, lat) for lon, lat in CASES], "lon double, lat double")
-    x12, y12 = tiles.tile_x(F.col("lon"), 12), tiles.tile_y(F.col("lat"), 12)
+    x12, y12 = F.expr(tiles.sql_tile_x("lon", 12)), F.expr(tiles.spark_tile_y("lat", 12))
     px, py = tiles.parent_tile(x12, y12, 3)
     rows = df.select(
         px.alias("px"), py.alias("py"),
-        tiles.tile_x(F.col("lon"), 9).alias("x9"), tiles.tile_y(F.col("lat"), 9).alias("y9"),
+        F.expr(tiles.sql_tile_x("lon", 9)).alias("x9"),
+        F.expr(tiles.spark_tile_y("lat", 9)).alias("y9"),
     ).collect()
     for r in rows:
         assert (r.px, r.py) == (r.x9, r.y9)
@@ -74,9 +128,9 @@ def test_bbox_cover_duplication(spark):
 def test_cell_id_bijective(spark):
     df = spark.createDataFrame([(lon, lat) for lon, lat in CASES], "lon double, lat double")
     z = 9
-    rows = df.select(
-        tiles.tile_x(F.col("lon"), z).alias("x"), tiles.tile_y(F.col("lat"), z).alias("y"),
-        tiles.cell_id(z, tiles.tile_x(F.col("lon"), z), tiles.tile_y(F.col("lat"), z)).alias("cell"),
+    rows = df.selectExpr(
+        f"{tiles.sql_tile_x('lon', z)} AS x", f"{tiles.spark_tile_y('lat', z)} AS y",
+        f"{tiles.spark_point_cell('lon', 'lat', z)} AS cell",
     ).collect()
     for r in rows:
         assert r.cell == ((z * tiles.CELL_SHIFT) + r.x) * tiles.CELL_SHIFT + r.y
@@ -85,14 +139,13 @@ def test_cell_id_bijective(spark):
 def test_ring_cells_counts(spark):
     df = spark.createDataFrame([(512, 512)], "x long, y long")
     for r in [0, 1, 2]:
-        n = df.select(F.size(tiles.ring_cells(F.col("x"), F.col("y"), 10, r)).alias("n")).first().n
+        n = df.selectExpr(f"size({tiles.spark_ring_cells('x', 'y', 10, r)}) AS n").first().n
         assert n == (2 * r + 1) ** 2  # interior tile: full square, no clamping
 
 
 def test_morton_key_matches_bit_interleave(spark):
-    """The mask-ladder Column expression equals the textbook per-bit
-    interleave for random tiles, and the SQL twin is exercised by the
-    morton_keys_z8 driver oracle."""
+    """The mask-ladder text equals the textbook per-bit interleave for
+    random tiles on Spark and on DuckDB."""
     import random
 
     from geobuf_spark.functions import tiles as TT
@@ -106,10 +159,15 @@ def test_morton_key_matches_bit_interleave(spark):
 
     rows = [(random.randrange(256), random.randrange(256)) for _ in range(500)]
     df = spark.createDataFrame(rows, "x long, y long")
-    got = {(r.x, r.y): r.m for r in df.select(
-        "x", "y", TT.morton_key(F.col("x"), F.col("y"), 8).alias("m")).collect()}
+    got = {(r.x, r.y): r.m for r in df.selectExpr(
+        "x", "y", f"{TT.sql_morton_key('x', 'y', 8)} AS m").collect()}
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (x BIGINT, y BIGINT)")
+    con.executemany("INSERT INTO t VALUES (?, ?)", rows)
+    duck = dict(((x, y), m) for x, y, m in con.execute(
+        f"SELECT x, y, {TT.sql_morton_key('x', 'y', 8)} FROM t").fetchall())
     for x, y in rows:
-        assert got[(x, y)] == slow(x, y)
+        assert got[(x, y)] == duck[(x, y)] == slow(x, y)
 
 
 def test_cluster_by_morton_files_are_disjoint_ranges(spark, sf_small):

@@ -1,6 +1,6 @@
 """Scale stress for the exact segment-intersection join.
 
-Mints N clustered walk polylines entirely with Column expressions
+Mints N clustered walk polylines entirely with SQL expressions
 (spark.range → cluster_points_from with density-preserving n_clusters →
 walk_lines_from), runs operators/spatial_join.segment_xing_join at two
 parallelism levels on the SAME input, and reports min-of-K walls,
