@@ -9,6 +9,10 @@ which both engines render identically for UTF-8 strings:
   Spark : conv(substr(md5(s), 1, 15), 16, 10)        -> decimal string -> bigint
   DuckDB: ('0x' || substr(md5(s), 1, 15))::BIGINT    -- hex-literal cast
 
+The hex draw has no form both engines parse fast, so it is one builder
+pair, `spark_hex`/`sql_hex`, that shared texts (sources/pages.py) take as
+a parameter (ORACLE_NUMERICS.md §C).
+
 15 hex chars = 60 bits, always inside a signed int64 (Spark 4 runs ANSI
 mode; a 16th char could overflow the cast). md5 costs more than xxhash64
 per call but stays JVM-side / vectorized in both engines; operators keep an
@@ -35,9 +39,19 @@ def hash60_parts(*cols: Column) -> Column:
     return hash60(F.concat_ws(SEP, *[c.cast("string") for c in cols]))
 
 
+def spark_hex(e: str) -> str:
+    """Spark text: the bigint value of hex-string text `e` (≤ 15 chars)."""
+    return f"CAST(conv({e}, 16, 10) AS BIGINT)"
+
+
+def sql_hex(e: str) -> str:
+    """DuckDB twin of spark_hex: a hex-literal cast."""
+    return f"CAST(('0x' || {e}) AS BIGINT)"
+
+
 def sql_hash60(expr: str) -> str:
     """DuckDB twin of hash60 for a VARCHAR SQL expression."""
-    return f"CAST(('0x' || substr(md5({expr}), 1, 15)) AS BIGINT)"
+    return sql_hex(f"substr(md5({expr}), 1, 15)")
 
 
 def sql_hash60_parts(*exprs: str) -> str:

@@ -52,6 +52,14 @@ def _null_guard(cols, expr: str) -> str:
     return f"CASE WHEN {nulls} THEN NULL ELSE {expr} END"
 
 
+def sql_nonnull(cols, expr: str, zero: str) -> str:
+    """`expr`, NULL only when one of `cols` is. Spark types `%`, `/` and
+    `conv` nullable whatever their inputs; the coalesce (never taken)
+    makes the guarded branch non-nullable, so a join's inferred
+    `isnotnull` folds to `cols` (_null_guard) instead of a second `expr`."""
+    return _null_guard(cols, f"coalesce({expr}, {zero})")
+
+
 def _tile_x(lon: str, z: int) -> str:
     raw = f"floor(({lon} + 180e0) / 360e0 * {_dbl(_n(z))})"
     return f"CAST({_clamp(raw, _n(z))} AS BIGINT)"
@@ -108,6 +116,15 @@ def spark_cover_xs(minx: str, maxx: str, z: int) -> str:
     return (f"CASE WHEN {minx} <= {maxx} THEN sequence({x0}, {x1}) "
             f"ELSE array_distinct(concat(sequence({x0}, CAST({_n(z) - 1} AS BIGINT)), "
             f"sequence(CAST(0 AS BIGINT), {x1}))) END")
+
+
+def sql_cover_width(minx: str, maxx: str, z: int) -> str:
+    """The length of spark_cover_xs, as text both engines parse: x1 - x0
+    + 1, or for an antimeridian-crossing box the two wrapped runs, capped
+    at 2^z where they overlap at coarse zooms."""
+    x0, x1 = sql_tile_x(minx, z), sql_tile_x(maxx, z)
+    return _null_guard([minx, maxx], f"CASE WHEN {minx} <= {maxx} THEN {x1} - {x0} + 1 "
+                       f"ELSE least({_n(z)} - {x0} + {x1} + 1, {_n(z)}) END")
 
 
 def explode_bbox_cover(df, z: int, minx="minx", miny="miny", maxx="maxx", maxy="maxy",

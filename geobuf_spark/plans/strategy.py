@@ -33,12 +33,12 @@ class JoinPlan:
 def estimate_cover_rows(polys: DataFrame, z: int) -> int:
     """Exploded build-side size without exploding: Σ tiles-per-bbox —
     GetSizeGrid's fan-out estimate (split_combine.go:44-53) done exactly.
-    The x run is the one `explode_bbox_cover` explodes (wrapped at the
-    antimeridian); only its length is kept."""
-    xs = tiles.spark_cover_xs("minx", "maxx", z)
+    The x run is the length of the one `explode_bbox_cover` explodes
+    (wrapped at the antimeridian)."""
+    xs = tiles.sql_cover_width("minx", "maxx", z)
     ys = (f"({tiles.spark_tile_y('miny', z)} - "
           f"{tiles.spark_tile_y('maxy', z)} + 1)")
-    return polys.selectExpr(f"sum(CAST(size({xs}) AS BIGINT) * {ys})").first()[0] or 0
+    return polys.selectExpr(f"sum(CAST({xs} AS BIGINT) * {ys})").first()[0] or 0
 
 
 def choose_strategy(points: DataFrame, polys: DataFrame, z: int, *,

@@ -18,6 +18,7 @@ from geobuf_spark.operators import dedup, knn, ranking, similarity, sketch
 from geobuf_spark.operators import spatial_join as sj
 from geobuf_spark.operators import tiling
 from geobuf_spark.sources import minted, pages
+from geobuf_spark.sources.pages import _html_sql, _pages_cte, _pages_geo_cte
 from geobuf_spark.streaming import windows as W
 
 
@@ -42,11 +43,9 @@ HOT_Z, HOT_MIN_PTS = 4, 4
 # anchor-text aggregation + kNN classification — batch 9
 # ---------------------------------------------------------------------------
 
-def _page_link_edges_anchored(spark, n: int = 2000):
-    # like _page_link_edges but every minted anchor carries a varied text
-    # token w{dst mod 37}; hrefs and anchor texts are extracted by the
-    # PAIRED regex twins (functions/text) and zipped positionally —
-    # (src_host, dst, anchor), zero shuffle
+def _linked_html(spark, n: int, anchored: bool):
+    # the pages and their html with k∈{1,2,3} minted <a> anchors before
+    # </body>; the anchor text is `l`, or w{dst mod 37} when `anchored`
     p = pages.pages(spark, n)
     k = F.pmod(F.col("page_id"), F.lit(3)) + F.lit(1)
 
@@ -55,14 +54,34 @@ def _page_link_edges_anchored(spark, n: int = 2000):
             phash.hash60(F.concat(F.lit("L"), F.col("page_id").cast("string"),
                                   F.lit("-"), i.cast("string"))),
             F.lit(1000))
+        text = (F.concat(F.lit("w"), F.pmod(dst, F.lit(37)).cast("string"))
+                if anchored else F.lit("l"))
         return F.concat(F.lit('<a href="https://site'), dst.cast("string"),
-                        F.lit(".example/x"), i.cast("string"), F.lit('">w'),
-                        F.pmod(dst, F.lit(37)).cast("string"), F.lit("</a>"))
+                        F.lit(".example/x"), i.cast("string"), F.lit('">'),
+                        text, F.lit("</a>"))
 
     anchors = F.concat_ws("", F.transform(F.sequence(F.lit(1), k), anchor))
-    html2 = F.replace(F.decode(F.col("html"), "utf-8"),
-                      F.lit("</body></html>"),
-                      F.concat(anchors, F.lit("</body></html>")))
+    return p, F.replace(F.decode(F.col("html"), "utf-8"),
+                        F.lit("</body></html>"),
+                        F.concat(anchors, F.lit("</body></html>")))
+
+def _sql_link_anchors(anchored: bool = False) -> str:
+    """DuckDB twin of _linked_html's anchors, over txt's id."""
+    dst = phash.sql_hash60("'L' || CAST(id AS VARCHAR) || '-' || CAST(i AS VARCHAR)")
+    text = f"'w' || CAST(({dst}) % 1000 % 37 AS VARCHAR)" if anchored else "'l'"
+    return f"""array_to_string(list_transform(
+                            range(1, CAST(id % 3 AS INT) + 2),
+                            i -> '<a href="https://site'
+                                 || CAST(({dst}) % 1000 AS VARCHAR)
+                                 || '.example/x' || CAST(i AS VARCHAR)
+                                 || '">' || {text} || '</a>'), '')"""
+
+def _page_link_edges_anchored(spark, n: int = 2000):
+    # like _page_link_edges but every minted anchor carries a varied text
+    # token w{dst mod 37}; hrefs and anchor texts are extracted by the
+    # PAIRED regex twins (functions/text) and zipped positionally —
+    # (src_host, dst, anchor), zero shuffle
+    p, html2 = _linked_html(spark, n, anchored=True)
     z = F.arrays_zip(TXT.extract_links(html2).alias("dst"),
                      TXT.extract_link_anchors(html2).alias("anchor"))
     return (p.select(TXT.url_host(F.col("url")).alias("src_host"),
@@ -201,21 +220,7 @@ def _page_link_edges(spark, n: int = 2000):
     # (exact-string replace before </body>), extract hrefs with ONE
     # regexp_extract_all pass (functions/text.extract_links), explode.
     # Zero-shuffle — shared by link_host_graph / pagerank_hosts.
-    p = pages.pages(spark, n)
-    k = F.pmod(F.col("page_id"), F.lit(3)) + F.lit(1)
-
-    def anchor(i):
-        dst = F.pmod(
-            phash.hash60(F.concat(F.lit("L"), F.col("page_id").cast("string"),
-                                  F.lit("-"), i.cast("string"))),
-            F.lit(1000)).cast("string")
-        return F.concat(F.lit('<a href="https://site'), dst,
-                        F.lit(".example/x"), i.cast("string"), F.lit('">l</a>'))
-
-    anchors = F.concat_ws("", F.transform(F.sequence(F.lit(1), k), anchor))
-    html2 = F.replace(F.decode(F.col("html"), "utf-8"),
-                      F.lit("</body></html>"),
-                      F.concat(anchors, F.lit("</body></html>")))
+    p, html2 = _linked_html(spark, n, anchored=False)
     return p.select(TXT.url_host(F.col("url")).alias("src_host"),
                     F.explode(TXT.extract_links(html2)).alias("dst"))
 
@@ -1110,63 +1115,6 @@ def _ann_ivf_sql(k: int = 5, every: int = 25, n_centroids: int = 8,
               FROM scored)
         SELECT query_id, neighbor_id, rank FROM r WHERE rank <= {k}"""
 
-def _pages_cte(n: int = 2000, seed: int = 42, prefix: str = "") -> str:
-    """Shared DuckDB regeneration of sources/pages.pages(n, seed) —
-    row-for-row identical: url/site/token-count/lang draws from md5(seed,id)
-    hex windows, per-token word picks from the portable hash60. Returns the
-    CTE body ending in {prefix}txt(id, url, lang, ts_epoch, text); callers
-    append their own clauses. The words are ASCII so strlen(text) ==
-    octet_length(text). `prefix` renames the CTE stages so two snapshots
-    can coexist in one WITH clause (crawl_diff)."""
-    from geobuf_spark.functions import phash
-    from geobuf_spark.sources.pages import LANGS, WORDS
-
-    p = prefix
-    langs = "[" + ", ".join(f"'{x}'" for x in LANGS) + "]"
-    words = "[" + ", ".join(f"'{w}'" for w in WORDS) + "]"
-    pick = phash.sql_hash60("'w' || CAST(id AS VARCHAR) || '-' || CAST(i AS VARCHAR)")
-    hx = lambda s, l: f"CAST(('0x' || substr(h, {s}, {l})) AS BIGINT)"  # noqa: E731
-    return f"""{p}base AS (SELECT t.id, md5('s{seed}-' || CAST(t.id AS VARCHAR)) AS h
-                      FROM range({n}) t(id)),
-        {p}d1 AS (SELECT id, h,
-                      {hx(1, 6)} % 1000 AS site,
-                      {hx(19, 4)} % 180 + 10 AS n_tokens,
-                      CAST({hx(23, 4)} % {len(LANGS)} + 1 AS INT) AS lang_i,
-                      1700000000 + CAST(('0x' || substr(md5('ts-' || h), 1, 8))
-                          AS BIGINT) % {365 * 86400} AS ts_epoch
-               FROM {p}base),
-        {p}d2 AS (SELECT id, n_tokens, ts_epoch,
-                      'https://site' || CAST(site AS VARCHAR) || '.example/'
-                          || substr(h, 7, 12) AS url,
-                      {langs}[lang_i] AS lang
-               FROM {p}d1),
-        {p}txt AS (SELECT id, url, lang, ts_epoch,
-                       array_to_string(list_transform(
-                           range(1, n_tokens + 1),
-                           i -> {words}[CAST(({pick}) % {len(WORDS)} + 1 AS INT)]),
-                           chr(32)) AS text
-                FROM {p}d2)"""
-
-def _pages_geo_cte() -> str:
-    """CTE clause twinning sources/pages.with_minted_geometry over txt:
-    geo(id, url, lang, text, lon, lat)."""
-    mh = lambda s: f"CAST(('0x' || substr(md5(url), {s}, 8)) AS BIGINT)"  # noqa: E731
-    return f"""geo AS (SELECT id, url, lang, text,
-                       ({mh(1)} % 3600000000 - 1800000000) / 1e7 AS lon,
-                       ({mh(9)} % 1700000000 - 850000000) / 1e7 AS lat
-                FROM txt)"""
-
-def _html_sql(head_extra: str = "", body_tail: str = "") -> str:
-    """The minted html envelope (sources/pages.py html builder) as ONE
-    DuckDB expression over txt's (url, text) — the single source the
-    html-payload oracles splice into, with optional fragments after
-    <head> (meta_robots) or before </body> (link anchors)."""
-    he = f" || {head_extra}" if head_extra else ""
-    bt = f" || {body_tail}" if body_tail else ""
-    return ("'<html><head>'" + he
-            + " || '<title>' || url || '</title></head><body><p>' || text"
-            + " || '</p>'" + bt + " || '</body></html>'")
-
 def _links_cte(n: int = 2000, seed: int = 42) -> str:
     """Shared link-edge regeneration (q_link_host_graph / q_pagerank_hosts):
     rebuild the html envelope with the same k∈{1,2,3} hash60-derived
@@ -1175,15 +1123,8 @@ def _links_cte(n: int = 2000, seed: int = 42) -> str:
     (hits/pagerank) reference e once per half-step and DuckDB would
     otherwise re-run the whole envelope regeneration each time
     (11.3 s -> 1.7 s measured on the hits_hosts oracle, r5)."""
-    dst = phash.sql_hash60("'L' || CAST(id AS VARCHAR) || '-' || CAST(i AS VARCHAR)")
-    anchors = f"""array_to_string(list_transform(
-                            range(1, CAST(id % 3 AS INT) + 2),
-                            i -> '<a href="https://site'
-                                 || CAST(({dst}) % 1000 AS VARCHAR)
-                                 || '.example/x' || CAST(i AS VARCHAR)
-                                 || '">l</a>'), '')"""
     return f"""{_pages_cte(n, seed)},
-        a AS (SELECT id, url, {_html_sql(body_tail=anchors)} AS html2
+        a AS (SELECT id, url, {_html_sql(body_tail=_sql_link_anchors())} AS html2
               FROM txt),
         e AS MATERIALIZED (
               SELECT {TXT.sql_url_host('url')} AS src_host,
@@ -1427,6 +1368,7 @@ __all__ = [n for n in [
     "_shifted_rects",
     "_shifted_rects_cte",
     "_soundex_spark",
+    "_sql_link_anchors",
     "_sql_varint_len",
     "_sql_zigzag",
     "_stratified_sample",

@@ -51,18 +51,8 @@ def q_canonical_groups(spark, sf):
     # url, and pages group by effective canonical target. ONE host-sized
     # aggregation; extraction is a codegen'd regexp pass.
     p = pages.pages(spark, 2000)
-    tgt = (F.col("page_id") - F.pmod(F.col("page_id"), F.lit(4)))
-    th = F.md5(F.concat(F.lit("s42-"), tgt.cast("string")))
-    tsite = F.pmod(F.conv(F.substring(th, 1, 6), 16, 10).cast("bigint"),
-                   F.lit(1000))
-    turl = F.concat(F.lit("https://site"), tsite.cast("string"),
-                    F.lit(".example/"), F.substring(th, 7, 12))
-    link = F.when(F.pmod(F.col("page_id"), F.lit(4)) != 0,
-                  F.concat(F.lit('<link rel="canonical" href="'), turl,
-                           F.lit('">'))).otherwise(F.lit(""))
-    html2 = F.replace(F.decode(F.col("html"), "utf-8"),
-                      F.lit("<head><title>"),
-                      F.concat(F.lit("<head>"), link, F.lit("<title>")))
+    link = _canonical_link(phash.spark_hex, "page_id")
+    html2 = F.expr(_html_sql(head_extra=f"({link})"))
     canon = F.regexp_extract(html2, '<link rel="canonical" href="([^"]+)"', 1)
     eff = F.when(canon != "", canon).otherwise(F.col("url"))
     return (p.select(eff.alias("canonical_url"), "page_id")
@@ -70,16 +60,18 @@ def q_canonical_groups(spark, sf):
             .agg(F.count("*").alias("n_pages"),
                  F.min("page_id").alias("rep_page_id")))
 
+def _canonical_link(hx, key: str, seed: int = 42) -> str:
+    """The injected canonical link of integer page-key text `key`: the
+    url of its group leader `key - key % 4`, none on the leader itself."""
+    turl = pages.url_text(hx, f"{key} - {key} % 4", seed)
+    return (f"CASE WHEN {key} % 4 <> 0 THEN"
+            f" '<link rel=\"canonical\" href=\"' || {turl} || '\">'"
+            f" ELSE '' END")
+
 def _canonical_groups_sql(n: int = 2000, seed: int = 42) -> str:
     """Oracle for q_canonical_groups: same link mint spliced into the
     html envelope (head_extra slot), same regexp extraction."""
-    th = f"md5('s{seed}-' || CAST(id - id % 4 AS VARCHAR))"
-    turl = (f"'https://site' || CAST(CAST(('0x' || substr({th}, 1, 6))"
-            f" AS BIGINT) % 1000 AS VARCHAR) || '.example/'"
-            f" || substr({th}, 7, 12)")
-    link = (f"CASE WHEN id % 4 <> 0 THEN"
-            f" '<link rel=\"canonical\" href=\"' || {turl} || '\">'"
-            f" ELSE '' END")
+    link = _canonical_link(phash.sql_hex, "id", seed)
     return f"""
         WITH {_pages_cte(n, seed)},
         h AS (SELECT id, url, {_html_sql(head_extra=f"({link})")} AS html2

@@ -249,9 +249,7 @@ def q_tile_gaps_anti(spark, sf):
     # join shape on tile keys. Narrow: both sides reduce to distinct
     # (x, y) before the anti join.
     za = pages.with_minted_geometry(pages.pages(spark, 2000))
-    b_pages = pages.pages(spark, 2400).where(
-        F.pmod(F.col("page_id"), F.lit(17)) != 3)
-    zb = pages.with_minted_geometry(b_pages)
+    zb = pages.with_minted_geometry(pages.pages(spark, 2400).where("page_id % 17 <> 3"))
 
     def tiles_of(p):
         return p.selectExpr(f"{tiles.sql_tile_x('lon', 7)} AS x",
@@ -264,20 +262,15 @@ def _tile_gaps_anti_sql() -> str:
     """Oracle for q_tile_gaps_anti: both snapshots' distinct z7 tiles,
     EXCEPT (DuckDB's anti-join on full rows)."""
     x7, y7 = tiles.sql_tile_x("lon", 7), tiles.sql_tile_y("lat", 7)
-    # regenerate snapshot A (n=2000) and B (n=2400 minus every 17th);
-    # b_geo repeats _pages_geo_cte's md5(url) mint against the b_ prefix
+    # regenerate snapshot A (n=2000) and B (n=2400 minus every 17th)
     return f"""
         WITH {_pages_cte(2000, 42)},
         {_pages_geo_cte()},
         at AS (SELECT DISTINCT {x7} AS x, {y7} AS y FROM geo),
         {_pages_cte(2400, 42, prefix="b_")},
-        b_geo AS (SELECT id, url,
-                         (CAST(('0x' || substr(md5(url), 1, 8)) AS BIGINT)
-                          % 3600000000 - 1800000000) / 1e7 AS lon,
-                         (CAST(('0x' || substr(md5(url), 9, 8)) AS BIGINT)
-                          % 1700000000 - 850000000) / 1e7 AS lat
-                  FROM b_txt WHERE id % 17 <> 3),
-        bt AS (SELECT DISTINCT {x7} AS x, {y7} AS y FROM b_geo)
+        {_pages_geo_cte(prefix="b_")},
+        bt AS (SELECT DISTINCT {x7} AS x, {y7} AS y FROM b_geo
+               WHERE id % 17 <> 3)
         SELECT x, y FROM at
         EXCEPT
         SELECT x, y FROM bt"""
@@ -382,10 +375,9 @@ def q_tile_stream_counts(spark, sf):
 def q_cover_size_estimate(spark, sf):
     # GetSizeGrid (split_combine.go:44-53): planned tile fan-out per feature
     r = _rects(spark, sf)
-    x0, x1 = tiles.sql_tile_x("minx", 7), tiles.sql_tile_x("maxx", 7)
     y0, y1 = tiles.spark_tile_y("maxy", 7), tiles.spark_tile_y("miny", 7)
     return r.selectExpr(
-        "poly_id", f"({x1} - {x0} + 1) * ({y1} - {y0} + 1) AS n_tiles"
+        "poly_id", f"{tiles.sql_cover_width('minx', 'maxx', 7)} * ({y1} - {y0} + 1) AS n_tiles"
     )
 
 def q_rasterize_z4(spark, sf):
@@ -1456,7 +1448,7 @@ def oracles() -> dict[str, str]:
         "tile_stream_counts": _tile_stream_sql(),
         "cover_size_estimate": f"""
             SELECT poly_id,
-                   (({tiles.sql_tile_x('maxx', 7)}) - ({tiles.sql_tile_x('minx', 7)}) + 1)
+                   {tiles.sql_cover_width('minx', 'maxx', 7)}
                  * (({tiles.sql_tile_y('miny', 7)}) - ({tiles.sql_tile_y('maxy', 7)}) + 1)
                    AS n_tiles
             FROM ({rects})""",

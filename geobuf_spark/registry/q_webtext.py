@@ -154,10 +154,8 @@ def q_pii_scrub(spark, sf):
     email = F.concat(F.substring(h, 1, 8), F.lit("@mail"),
                      F.pmod(F.col("page_id"), F.lit(50)).cast("string"),
                      F.lit(".example.com"))
-    phone = F.concat(
-        F.lit("+1-555-"),
-        F.lpad(F.pmod(F.conv(F.substring(h, 9, 4), 16, 10).cast("bigint"),
-                      F.lit(10000)).cast("string"), 4, "0"))
+    phone = F.expr(_pii_phone(phash.spark_hex,
+                              "md5(concat('pii-', CAST(page_id AS STRING)))"))
     v = F.pmod(F.col("page_id"), F.lit(4))
     messy = (F.when(v == 0, F.concat(F.col("text"), F.lit(" contact "), email))
              .when(v == 1, F.concat(F.col("text"), F.lit(" call "), phone))
@@ -222,6 +220,11 @@ def _top_ngram_frac_sql() -> str:
                    AS top_frac_x10k
         FROM sel JOIN toks t ON sel.doc_id = t.doc_id"""
 
+def _pii_phone(hx, ph: str) -> str:
+    """The minted phone number of the page whose pii md5 text is `ph`."""
+    return (f"'+1-555-' || lpad(CAST({hx(f'substr({ph}, 9, 4)')} % 10000 "
+            f"AS STRING), 4, '0')")
+
 def _pii_scrub_sql(n: int = 2000, seed: int = 42) -> str:
     """Oracle for q_pii_scrub: same mint, same regexes ('g' flag — Spark's
     regexp_replace is global by default)."""
@@ -234,8 +237,7 @@ def _pii_scrub_sql(n: int = 2000, seed: int = 42) -> str:
         m2 AS (SELECT id, variant,
                       substr(ph, 1, 8) || '@mail' || CAST(id % 50 AS VARCHAR)
                           || '.example.com' AS email,
-                      '+1-555-' || lpad(CAST(CAST(('0x' || substr(ph, 9, 4))
-                          AS BIGINT) % 10000 AS VARCHAR), 4, '0') AS phone,
+                      {_pii_phone(phash.sql_hex, 'ph')} AS phone,
                       text
                FROM m),
         msy AS (SELECT id, variant,
@@ -620,14 +622,7 @@ def q_meta_robots(spark, sf):
     # ROBOTS_NOINDEX_RE — RE2/Java common subset), roll up per host.
     # Zero-shuffle mint+classify, one host hash-agg with map-side partials.
     p = pages.pages(spark, 2000)
-    v = F.pmod(F.col("page_id"), F.lit(21))
-    meta = (F.when(v == 0, F.lit('<meta name="robots" content="noindex">'))
-            .when(v == 7, F.lit("<meta name='robots' content='noindex,nofollow'>"))
-            .when(v == 14, F.lit('<meta content="noindex" name="robots">')))
-    doc = F.decode(F.col("html"), "utf-8")
-    html2 = F.when(meta.isNotNull(),
-                   F.replace(doc, F.lit("<head>"), F.concat(F.lit("<head>"), meta))
-                   ).otherwise(doc)
+    html2 = F.expr(_html_sql(head_extra=_meta_robots("page_id")))
     return (p.select(TXT.url_host(F.col("url")).alias("host"),
                      TXT.is_noindex(html2).alias("noindex"))
             .groupBy("host")
@@ -893,9 +888,7 @@ def _robots_prefix_rules_sql() -> str:
     ra = h("'ra-' || CAST(site AS VARCHAR) || '-' || CAST(k AS VARCHAR)")
     return f"""
         WITH {_pages_cte(ROBOTS_PAGES, 42)},
-        pg0 AS (SELECT id,
-                       CAST(regexp_extract(url, 'site(\\d+)\\.example', 1)
-                            AS INT) AS site,
+        pg0 AS (SELECT id, {pages._SITE} AS site,
                        {dep} % 3 + 1 AS path_depth
                 FROM txt),
         pg AS (SELECT id, site, path_depth,
@@ -1751,7 +1744,7 @@ def _pages_synth_sql(n: int = 2000, seed: int = 42, z: int = 7) -> str:
 
 def _html_extract_sql(n: int = 2000, seed: int = 42) -> str:
     """Oracle for q_html_extract_text: regenerate pages, build the SAME
-    html envelope (sources/pages.py:69-75), extract with the SAME regexp.
+    html envelope (sources/pages._html_sql), extract with the SAME regexp.
     Value-hash equality over (url, text_extracted) is the north-rule
     byte-identity check per url."""
     return f"""
@@ -1831,14 +1824,7 @@ def _anchor_text_topk_sql(n: int = 2000, seed: int = 42, topk: int = 3) -> str:
     """Oracle for q_anchor_text_topk: the same anchored-html regeneration
     (anchor text w{dst mod 37}); DuckDB zips the two unnests positionally
     in one SELECT, matching Spark's arrays_zip."""
-    dst = phash.sql_hash60("'L' || CAST(id AS VARCHAR) || '-' || CAST(i AS VARCHAR)")
-    anchors = f"""array_to_string(list_transform(
-                            range(1, CAST(id % 3 AS INT) + 2),
-                            i -> '<a href="https://site'
-                                 || CAST(({dst}) % 1000 AS VARCHAR)
-                                 || '.example/x' || CAST(i AS VARCHAR)
-                                 || '">w' || CAST(({dst}) % 1000 % 37 AS VARCHAR)
-                                 || '</a>'), '')"""
+    anchors = _sql_link_anchors(anchored=True)
     return f"""
         WITH {_pages_cte(n, seed)},
         a AS (SELECT id, url, {_html_sql(body_tail=anchors)} AS html2
@@ -1872,18 +1858,20 @@ def _boilerplate_lines_sql(n: int = 2000, seed: int = 42, min_docs: int = 20) ->
         GROUP BY 1
         HAVING count(DISTINCT id) >= {min_docs}"""
 
-def _meta_robots_sql(n: int = 2000, seed: int = 42) -> str:
-    """Oracle for q_meta_robots: rebuild the html envelope, splice the SAME
-    three meta variants after <head>, classify with the shared regex."""
-    meta = """CASE CAST(id % 21 AS INT)
+def _meta_robots(key: str) -> str:
+    """The meta robots variant minted after <head> for page key `key`."""
+    return f"""coalesce(CASE CAST({key} % 21 AS INT)
                 WHEN 0 THEN '<meta name="robots" content="noindex">'
                 WHEN 7 THEN '<meta name=''robots'' content=''noindex,nofollow''>'
                 WHEN 14 THEN '<meta content="noindex" name="robots">'
-              END"""
+              END, '')"""
+
+def _meta_robots_sql(n: int = 2000, seed: int = 42) -> str:
+    """Oracle for q_meta_robots: rebuild the html envelope, splice the SAME
+    three meta variants after <head>, classify with the shared regex."""
     return f"""
         WITH {_pages_cte(n, seed)},
-        h AS (SELECT id, url,
-                     {_html_sql(head_extra=f"coalesce({meta}, '')")} AS html
+        h AS (SELECT id, url, {_html_sql(head_extra=_meta_robots('id'))} AS html
               FROM txt)
         SELECT {TXT.sql_url_host('url')} AS host,
                count(*) AS n_pages,

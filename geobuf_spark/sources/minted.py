@@ -18,6 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from geobuf_spark.functions import tiles
+
 # Knuth-style multiplicative constants; values chosen so every coordinate is
 # an exact integer number of 1e-7 units and well inside the mercator domain.
 LON_MULT, LON_MOD = 2654435761, 3_600_000_000  # lon ∈ [-180, 180)
@@ -59,7 +61,9 @@ def sql_lonlat(k: str) -> tuple[str, str]:
     return f"({lon_q} / 1e7)", f"({lat_q} / 1e7)"
 
 
-_LON, _LAT = sql_lonlat("doc_id")
+# the degree mints are NULL only for a NULL key (tiles.sql_nonnull), so a
+# join's inferred isnotnull on them folds to the key instead of re-minting
+_LON, _LAT = (tiles.sql_nonnull(["doc_id"], v, "0e0") for v in sql_lonlat("doc_id"))
 POINTS = ("doc_id", f"{_LON} AS lon", f"{_LAT} AS lat")
 
 
@@ -79,11 +83,15 @@ _CY = f"({_sql_mulmod('p_partkey', CY_MULT, CY_MOD)} - {CY_MOD // 2})"
 _HW = f"(10000000 + (p_partkey % 100) * 1000000)"
 _HH = f"(8000000 + (p_partkey % 80) * 1000000)"
 
+def _part(expr: str) -> str:
+    return tiles.sql_nonnull(["p_partkey"], f"{expr} / 1e7", "0e0")
+
+
 RECTS = ("p_partkey AS poly_id",
-         f"({_CX} - {_HW}) / 1e7 AS minx",
-         f"({_CY} - {_HH}) / 1e7 AS miny",
-         f"({_CX} + {_HW}) / 1e7 AS maxx",
-         f"({_CY} + {_HH}) / 1e7 AS maxy")
+         f"{_part(f'({_CX} - {_HW})')} AS minx",
+         f"{_part(f'({_CY} - {_HH})')} AS miny",
+         f"{_part(f'({_CX} + {_HW})')} AS maxx",
+         f"{_part(f'({_CY} + {_HH})')} AS maxy")
 
 
 def minted_rects(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -98,12 +106,12 @@ def minted_rects(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_MINTED_RECTS = _select(RECTS, "part")
 
 TRIANGLES = ("p_partkey AS poly_id",
-             f"{_CX} / 1e7 AS x0",
-             f"({_CY} + {_HH}) / 1e7 AS y0",
-             f"({_CX} - {_HW}) / 1e7 AS x1",
-             f"({_CY} - {_HH}) / 1e7 AS y1",
-             f"({_CX} + {_HW}) / 1e7 AS x2",
-             f"({_CY} - {_HH}) / 1e7 AS y2")
+             f"{_part(_CX)} AS x0",
+             f"{_part(f'({_CY} + {_HH})')} AS y0",
+             f"{_part(f'({_CX} - {_HW})')} AS x1",
+             f"{_part(f'({_CY} - {_HH})')} AS y1",
+             f"{_part(f'({_CX} + {_HW})')} AS x2",
+             f"{_part(f'({_CY} - {_HH})')} AS y2")
 
 
 def minted_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -52,35 +52,33 @@ def test_estimate_cover_rows_matches_explode(spark, sf_small):
 @pytest.mark.parametrize("z", [0, 1, 4, 7])
 def test_estimate_cover_rows_wraps_antimeridian(spark, z):
     """The estimate counts the wrapped x run the explode emits, including
-    the overlap of its two runs at coarse zooms."""
+    the overlap of its two runs at coarse zooms; the width text it reads
+    (`tiles.sql_cover_width`, also behind cover_size_estimate and its
+    oracle) gives the same count in DuckDB."""
+    import duckdb
+
     from geobuf_spark.functions import tiles
 
     boxes = [(170.0, -10.0, -170.0, 10.0), (179.0, 0.0, -179.0, 60.0),
              (-10.0, -10.0, 40.0, 20.0), (-180.0, -80.0, 180.0, 80.0)]
+    duck = (f"SELECT {tiles.sql_cover_width('minx', 'maxx', z)} * "
+            f"({tiles.sql_tile_y('miny', z)} - {tiles.sql_tile_y('maxy', z)} + 1) "
+            "FROM (SELECT ?::DOUBLE AS minx, ?::DOUBLE AS miny, "
+            "?::DOUBLE AS maxx, ?::DOUBLE AS maxy)")
     for box in boxes:
         df = spark.createDataFrame([(1,) + box], "poly_id long, minx double, "
                                    "miny double, maxx double, maxy double")
         est = strategy.estimate_cover_rows(df, z=z)
-        assert est == tiles.explode_bbox_cover(df, z).count() > 0, (box, z)
+        n = tiles.explode_bbox_cover(df, z).count()
+        assert est == n > 0, (box, z)
+        assert duckdb.execute(duck, list(box)).fetchone()[0] == n, (box, z)
 
 
-def test_flagship_plan_build_round_trip_budget(spark, sf_small, monkeypatch):
-    """Building minted_rects → pip_join → assign_tiles_points →
-    tile_histogram over a prebuilt point frame takes at most 300 Py4J round
-    trips: every shared formula reaches the JVM as SQL text, one call per
-    select, not as a Column tree with one round trip per node (that build
-    took 2,200–2,800)."""
+def _round_trips(build, monkeypatch) -> int:
+    """The Py4J round trips of one call of `build`, after a warm-up call."""
     import gc
 
     import py4j.clientserver as cs
-
-    from geobuf_spark.operators import tiling
-
-    pts = minted.minted_points(spark, sf_small).localCheckpoint()
-
-    def build():
-        joined = sj.pip_join(pts, minted.minted_rects(spark, sf_small), z=7)
-        return tiling.tile_histogram(tiling.assign_tiles_points(joined, z=10))
 
     build()  # warm-up: class and method lookups are cached afterwards
     sent = []
@@ -96,7 +94,58 @@ def test_flagship_plan_build_round_trip_budget(spark, sf_small, monkeypatch):
     monkeypatch.setattr(cs.ClientServerConnection, "send_command", counting)
     build()
     monkeypatch.undo()
-    assert 0 < len(sent) <= 300, len(sent)
+    return len(sent)
+
+
+def test_flagship_plan_build_round_trip_budget(spark, sf_small, monkeypatch):
+    """Building minted_rects → pip_join → assign_tiles_points →
+    tile_histogram over a prebuilt point frame takes at most 300 Py4J round
+    trips: every shared formula reaches the JVM as SQL text, one call per
+    select, not as a Column tree with one round trip per node (that build
+    took 2,200–2,800)."""
+    from geobuf_spark.operators import tiling
+
+    pts = minted.minted_points(spark, sf_small).localCheckpoint()
+
+    def build():
+        joined = sj.pip_join(pts, minted.minted_rects(spark, sf_small), z=7)
+        return tiling.tile_histogram(tiling.assign_tiles_points(joined, z=10))
+
+    sent = _round_trips(build, monkeypatch)
+    assert 0 < sent <= 300, sent
+
+
+def test_pages_plan_build_round_trip_budget(spark, monkeypatch):
+    """The flagship's point source, with_minted_geometry(pages(...)) and
+    its select, takes at most 100 Py4J round trips to build: the pages
+    columns are SQL text (the Column tree took 892)."""
+    from geobuf_spark.sources import pages
+
+    def build():
+        return pages.with_minted_geometry(
+            pages.pages(spark, 2000, seed=7)).select("page_id", "lon", "lat")
+
+    sent = _round_trips(build, monkeypatch)
+    assert 0 < sent <= 100, sent
+
+
+def test_join_filters_hold_no_mint(spark, sf_small):
+    """The isnotnull filters a join infers on minted coordinates fold to
+    the key (or away) instead of minting a second time below the minting
+    projection: no Filter of either optimized plan holds a mint (a md5,
+    conv or mulmod `%` text)."""
+    from geobuf_spark.sources import pages
+
+    rects = minted.minted_rects(spark, sf_small)
+    page_pts = pages.with_minted_geometry(pages.pages(spark, 2000)).select(
+        F.col("page_id").alias("doc_id"), "lon", "lat")
+    for pts in (minted.minted_points(spark, sf_small), page_pts):
+        plan = sj.pip_join(pts, rects, z=7)._jdf.queryExecution() \
+            .optimizedPlan().toString()
+        filters = [line for line in plan.splitlines() if "Filter " in line]
+        assert filters, plan
+        for line in filters:
+            assert not any(m in line for m in ("md5(", "conv(", "%")), line
 
 
 # --- physical plan quality ----------------------------------------------------

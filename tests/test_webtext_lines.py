@@ -40,21 +40,6 @@ def test_with_body_minting(spark):
                       "subscribe to the example newsletter")
 
 
-def test_body_sql_twin(spark):
-    # DuckDB twin over the full generated table: bodies byte-identical
-    import duckdb
-
-    import __spark_entry__ as E
-
-    sdf = pages.with_body(pages.pages(spark, 300)).select("page_id", "body")
-    got_s = {r["page_id"]: r["body"] for r in sdf.collect()}
-    con = duckdb.connect()
-    got_d = dict(con.sql(
-        f"WITH {E._pages_cte(300)}, {pages.sql_body_cte()} "
-        "SELECT id, body FROM bdy").fetchall())
-    assert got_s == got_d
-
-
 def test_first_occurrence_filter_adversarial(spark):
     cases = [
         ("a\nb\na\nb", "a\nb"),          # interleaved dups
