@@ -73,16 +73,26 @@ def encode_varint(x: int) -> bytes:
 
 
 def decode_varint(buf, pos: int) -> tuple[int, int]:
-    """Read one varint starting at pos → (value, new_pos)."""
+    """Read one varint starting at pos → (value, new_pos); raises past the
+    end of buf."""
     result = 0
     shift = 0
     while True:
+        if pos >= len(buf):
+            raise ValueError("truncated or corrupt frame: varint running past the end")
         b = int(buf[pos])
         pos += 1
         result |= (b & 0x7F) << shift
         if b < 0x80:
             return result & ((1 << 64) - 1), pos
         shift += 7
+
+
+def _payload_end(buf, pos: int, size: int) -> int:
+    """End of the size-byte payload at pos; raises past the end of buf."""
+    if size > len(buf) - pos:
+        raise ValueError("truncated or corrupt frame: field payload running past the end")
+    return pos + size
 
 
 def zigzag64(v: int) -> int:
@@ -329,17 +339,27 @@ def _make_keyvalue(key: str, value) -> bytes:
     return bytes([18]) + encode_varint(len(inner)) + inner
 
 
+def _read_entry(buf, p: int):
+    """(key, value) of the property entry whose payload starts at p."""
+    klen, p = decode_varint(buf, p + 1)  # after the 0x0A key tag
+    key = bytes(buf[p : p + klen]).decode("utf-8")
+    _, p = decode_varint(buf, p + klen + 1)  # the value's length, after its 0x12 tag
+    return key, _read_value(buf, p)[0]
+
+
 def _read_value(buf, pos: int):
+    if pos >= len(buf):
+        raise ValueError("truncated or corrupt frame: property value running past the end")
     tag = buf[pos]
     pos += 1
     fieldno = tag >> 3
-    if fieldno == 1:  # string
+    if fieldno == 1:  # string, sliced (so clamped at the end) as GbCodec reads it
         n, pos = decode_varint(buf, pos)
         return bytes(buf[pos : pos + n]).decode("utf-8"), pos + n
     if fieldno == 2:  # float32 LE
-        return struct.unpack("<f", bytes(buf[pos : pos + 4]))[0], pos + 4
+        return struct.unpack("<f", bytes(buf[pos : _payload_end(buf, pos, 4)]))[0], pos + 4
     if fieldno == 3:  # float64 LE
-        return struct.unpack("<d", bytes(buf[pos : pos + 8]))[0], pos + 8
+        return struct.unpack("<d", bytes(buf[pos : _payload_end(buf, pos, 8)]))[0], pos + 8
     if fieldno == 4:  # int64 plain varint (two's complement)
         u, pos = decode_varint(buf, pos)
         return (u - (1 << 64)) if u >= (1 << 63) else u, pos
@@ -505,7 +525,7 @@ def decode_properties(frame) -> dict:
     """Properties ONLY — a field walk that jumps id/geometry/bbox bytes via
     their varint length prefixes (ReadKeys-style traversal, reader.go:
     120-142, but parsing values too). Order-tolerant, unlike the strict
-    field-ordered full decoder."""
+    field-ordered full decoder. A field cut short by the frame end raises."""
     buf = np.frombuffer(frame, dtype=np.uint8) if isinstance(frame, (bytes, bytearray)) else frame
     pos, n = 0, len(buf)
     props: dict = {}
@@ -516,14 +536,10 @@ def decode_properties(frame) -> dict:
             _, pos = decode_varint(buf, pos)
         elif w == 2:
             size, pos = decode_varint(buf, pos)
+            end = _payload_end(buf, pos, size)
             if k == 2:
-                p = pos + 1  # 0x0A key tag
-                klen, p = decode_varint(buf, p)
-                key = bytes(buf[p : p + klen]).decode("utf-8")
-                p += klen + 1  # 0x12 value tag
-                _, p = decode_varint(buf, p)  # value message length
-                props[key], _ = _read_value(buf, p)
-            pos += size
+                key, props[key] = _read_entry(buf, pos)
+            pos = end
         else:
             raise ValueError(f"unexpected wire type {w} in feature frame")
     return props
@@ -532,9 +548,10 @@ def decode_properties(frame) -> dict:
 def decode_feature(frame: bytes, quantized: bool = False) -> Feature:
     """ReadFeature — read_feature.go:9-100 (strict field order, all optional).
 
-    With ``quantized=True`` coords are exact int64 lattice values (×1e7)."""
+    With ``quantized=True`` coords are exact int64 lattice values (×1e7).
+    A field cut short by the frame end, or a geometry payload ending
+    mid-varint, raises."""
     buf = np.frombuffer(frame, dtype=np.uint8)
-    pos = 0
     fid = None
     props: dict = {}
     geom_type = 0
@@ -545,37 +562,23 @@ def decode_feature(frame: bytes, quantized: bool = False) -> Feature:
     bbox = None
 
     def read_key(p):
+        if p >= len(buf):  # the frame end reads as key 0, which ends the walk
+            return 0, 0, p
         tag, p = decode_varint(buf, p)
         return tag >> 3, tag & 7, p
 
-    if pos < len(buf):
-        k, w, pos = read_key(pos)
-    else:
-        k = 0
-    if pos <= len(buf) and k == 1 and w == 0:
+    k, w, pos = read_key(0)
+    if k == 1 and w == 0:
         fid, pos = decode_varint(buf, pos)
-        if pos < len(buf):
-            k, w, pos = read_key(pos)
-        else:
-            k = 0
-    while k == 2 and w == 2 and pos < len(buf):
+        k, w, pos = read_key(pos)
+    while k == 2 and w == 2:
         size, pos = decode_varint(buf, pos)
-        endpos = pos + size
-        pos += 1  # 0x0A key tag
-        klen, pos = decode_varint(buf, pos)
-        key = bytes(buf[pos : pos + klen]).decode("utf-8")
-        pos += klen
-        pos += 1  # 0x12 value tag
-        _, pos = decode_varint(buf, pos)  # value message length
-        props[key], pos = _read_value(buf, pos)
-        pos = endpos
-        if pos < len(buf):
-            k, w, pos = read_key(pos)
-        else:
-            k = 0
-    if k == 3 and w == 0 and pos < len(buf):
-        code = int(buf[pos])
-        pos += 1
+        end = _payload_end(buf, pos, size)
+        key, props[key] = _read_entry(buf, pos)
+        k, w, pos = read_key(end)
+    if k == 3 and w == 0:
+        pos = _payload_end(buf, pos, 1)  # one code byte
+        code = int(buf[pos - 1])
         # geomcode_details — geom.go:59-68
         if code <= 6:
             geom_type, dim = code, 2
@@ -586,24 +589,20 @@ def decode_feature(frame: bytes, quantized: bool = False) -> Feature:
             # on the wire, so the Feature's dim must say 2 or vertices()
             # reshapes a 2-value array into dim-wide rows and breaks
             dim = 2
-        if pos < len(buf):
-            k, w, pos = read_key(pos)
-        else:
-            k = 0
-    if k == 4 and w == 2 and pos < len(buf):
+        k, w, pos = read_key(pos)
+    if k == 4 and w == 2:
         size, pos = decode_varint(buf, pos)
-        endpos = pos + size
+        endpos = _payload_end(buf, pos, size)
+        if size and buf[endpos - 1] >= 0x80:
+            raise ValueError("truncated or corrupt frame: geometry payload ending mid-varint")
         vals = unpack_varints(buf, pos, endpos)
         coords, ring_lens, part_rings = _decode_geometry(vals, geom_type, dim, quantized)
         pos = endpos
-        if pos < len(buf):
-            k, w, pos = read_key(pos)
-        else:
-            k = 0
-    if k == 5 and w == 2 and pos < len(buf):
+        k, w, pos = read_key(pos)
+    if k == 5 and w == 2:
         # readboundingbox — geom.go:161-169: length varint then 4 × sv/1e7
-        _, pos = decode_varint(buf, pos)
-        vals = unpack_varints(buf, pos, len(buf))[:4]
+        size, pos = decode_varint(buf, pos)
+        vals = unpack_varints(buf, pos, _payload_end(buf, pos, size))[:4]
         bbox = unzigzag_vec(vals).astype(np.float64) / POWER
 
     dtype = np.int64 if quantized else np.float64

@@ -9,6 +9,9 @@ import org.apache.spark.sql.RowFactory;
 import org.apache.spark.sql.api.java.UDF1;
 import org.apache.spark.sql.api.java.UDF2;
 import org.apache.spark.sql.api.java.UDF3;
+import org.apache.spark.sql.expressions.UserDefinedFunction;
+import org.apache.spark.sql.functions;
+import org.apache.spark.sql.types.DataType;
 import scala.collection.Seq;
 
 /**
@@ -48,6 +51,15 @@ import scala.collection.Seq;
  */
 public final class GbCodec {
     private GbCodec() {}
+
+    /** GbCodec$cls as a UserDefinedFunction returning type, through the
+     *  typed functions.udf overloads, which Py4J cannot pick. */
+    public static UserDefinedFunction udf(String cls, DataType type) throws Exception {
+        Object f = Class.forName("geobufspark.GbCodec$" + cls).getDeclaredConstructor().newInstance();
+        if (f instanceof UDF3) return functions.udf((UDF3<?, ?, ?, ?>) f, type);
+        if (f instanceof UDF2) return functions.udf((UDF2<?, ?, ?>) f, type);
+        return functions.udf((UDF1<?, ?>) f, type);
+    }
 
     /** Parsed frame: id, geometry code, payload token values (zigzagged). */
     static final class Frame {

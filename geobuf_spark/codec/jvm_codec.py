@@ -13,8 +13,9 @@ GEOM_SCHEMA rows (gb_decode), the generic encoder and the property tables
 and the bbox read (gb_bbox) — is a plan over the UDFs registered here,
 pinned byte for byte against codec/core.py. sources.geobuf_file.read_geobuf
 splits frames with gb_frames. All of them raise (naming the jar) when it
-cannot be registered. This module keeps the registration and the
-many-files read plan.
+cannot be registered. This module keeps the registration (every UDF but
+gb_frames nondeterministic, so each runs once per row) and the many-files
+read plan.
 """
 
 from __future__ import annotations
@@ -66,7 +67,7 @@ _UDFS = [
 
 def _register(spark: SparkSession) -> None:
     """ADD JAR + register every UDF of _UDFS; raises on failure."""
-    # registerJavaFunction is per-session (session catalog), so idempotence
+    # registration is per-session (session catalog), so idempotence
     # is probed from the catalog itself: an applicationId key would skip
     # registration for a second session (spark.newSession()) in the same
     # app, and an id(spark) key can alias a GC'd session's address. One
@@ -82,8 +83,14 @@ def _register(spark: SparkSession) -> None:
     if jar is None:
         raise FileNotFoundError(f"{JAR} is missing and no JDK can build it")
     spark.sql(f"ADD JAR '{jar.resolve().as_uri()}'")
+    # A nondeterministic UDF is evaluated once per row: Catalyst neither
+    # copies it into collapsed projections nor pushes a filter below it.
+    # gb_frames (once per row by its explode) stays deterministic so a
+    # filter on the path column beside it still reaches the scan.
+    jss = spark._jsparkSession
     for name, cls, rtype in _UDFS:
-        spark.udf.registerJavaFunction(name, f"geobufspark.GbCodec${cls}", rtype)
+        f = spark._jvm.geobufspark.GbCodec.udf(cls, jss.parseDataType(rtype.json()))
+        jss.udf().register(name, f if name == "gb_frames" else f.asNondeterministic())
 
 
 def register(spark: SparkSession) -> bool:

@@ -11,8 +11,8 @@ encode_features_generic and encode_points_with_props (gb_encode: any
 geometry type, the key/value property table of WriteFeature), the lazy
 reads lazy_property (gb_prop: LazyFeatureTileID, one property, geometry
 jumped) and frame_keys (gb_keys: ReadKeys), and frame_bbox (gb_bbox).
-Each UDF is evaluated once per row, except gb_bbox under a filter on a
-frame_bbox column, which Catalyst pushes through its projection.
+Each is a plain select; the UDFs are registered nondeterministic, so each
+is evaluated once per row, under a filter on an output column too.
 """
 
 from __future__ import annotations
@@ -25,23 +25,10 @@ from geobuf_spark.codec import jvm_codec
 from geobuf_spark.codec.jvm_codec import GEOM_SCHEMA
 
 
-def _read_once(df: DataFrame, g: Column, *fields: Column) -> DataFrame:
-    """The columns `fields` — expressions over the column "_g" — read off
-    a gb_* result `g` evaluated once per row. `g` is computed in one
-    select as _g and read through inline(array(struct(...))): the
-    Generate is a barrier, so a filter on an output column (pushed down
-    or inferred) stays above it, and projection collapse cannot copy `g`
-    (or the expressions under it) into each field read."""
+def _gb(df: DataFrame, name: str, *args: Column) -> Column:
+    """The JVM function `name` over args, registered in df's session."""
     jvm_codec.require(df.sparkSession)
-    return df.select(g.alias("_g")).select(F.inline(F.array(F.struct(*fields))))
-
-
-def _encode_once(df: DataFrame, frame: Column, out: str, *cols: Column) -> DataFrame:
-    """(cols..., out) rows with the gb_*enc `frame` computed inside the
-    same one-row inline Generate, so a filter on it never re-runs the
-    encoder."""
-    jvm_codec.require(df.sparkSession)
-    return df.select(F.inline(F.array(F.struct(*cols, frame.alias(out)))))
+    return F.call_function(name, *args)
 
 
 def _id(df: DataFrame, id_col: str) -> Column:
@@ -49,26 +36,26 @@ def _id(df: DataFrame, id_col: str) -> Column:
     return df[id_col].cast("long").alias(id_col)
 
 
-def _point_enc(id_col: str, lon: str, lat: str) -> Column:
+def _point_enc(df: DataFrame, id_col: str, lon: str, lat: str) -> Column:
     """gb_point_enc over (id, lon, lat): 0x08 id | 0x18 1 | 0x22 zigzag
     x,y | 0x2A degenerate bbox, coordinates truncated onto the 1e-7
     lattice. Null or non-finite inputs fail the task."""
-    return F.call_function("gb_point_enc", F.col(id_col).cast("long"),
-                           F.col(lon).cast("double"), F.col(lat).cast("double"))
+    return _gb(df, "gb_point_enc", F.col(id_col).cast("long"),
+               F.col(lon).cast("double"), F.col(lat).cast("double"))
 
 
 def _point_columns(df: DataFrame, p: Column, id_col: str) -> DataFrame:
     """A gb_point array [id, lon_q, lat_q] → columns (id_col, lon_q, lat_q)."""
-    return _read_once(df, p, F.element_at("_g", 1).alias(id_col),
-                      F.element_at("_g", 2).alias("lon_q"),
-                      F.element_at("_g", 3).alias("lat_q"))
+    return df.select(p.alias("_g")).select(
+        F.element_at("_g", 1).alias(id_col), F.element_at("_g", 2).alias("lon_q"),
+        F.element_at("_g", 3).alias("lat_q"))
 
 
 def encode_points(df: DataFrame, id_col: str = "doc_id", lon: str = "lon",
                   lat: str = "lat", out: str = "geobuf") -> DataFrame:
     """(id, lon, lat) → (id, geobuf) in the JVM (gb_point_enc), frames
     byte-identical to core.encode_feature."""
-    return _encode_once(df, _point_enc(id_col, lon, lat), out, _id(df, id_col))
+    return df.select(_id(df, id_col), _point_enc(df, id_col, lon, lat).alias(out))
 
 
 def decode_points(df: DataFrame, bin_col: str = "geobuf",
@@ -77,7 +64,7 @@ def decode_points(df: DataFrame, bin_col: str = "geobuf",
     int64 1e-7 lattice. Extra fields (properties, no bbox, any field
     order) are skipped; a frame whose geometry is not two values, or that
     is truncated, fails the task."""
-    return _point_columns(df, F.call_function("gb_point", F.col(bin_col)), id_col)
+    return _point_columns(df, _gb(df, "gb_point", F.col(bin_col)), id_col)
 
 
 def decode_points_agg(df: DataFrame, bin_col: str = "geobuf") -> DataFrame:
@@ -96,7 +83,7 @@ def roundtrip_points(df: DataFrame, id_col: str = "doc_id", lon: str = "lon",
     """Fused encode→decode, gb_point(gb_point_enc(...)), evaluated once per
     row in the JVM (bench/verify path): proves the wire format with no
     Python worker and no Arrow serde. Output (id_col, lon_q, lat_q)."""
-    p = F.call_function("gb_point", _point_enc(id_col, lon, lat))
+    p = _gb(df, "gb_point", _point_enc(df, id_col, lon, lat))
     return _point_columns(df, p, id_col)
 
 
@@ -107,9 +94,9 @@ def encode_lines(df: DataFrame, id_col: str = "line_id", coords: str = "coords",
     packed zigzag vertex deltas (geom.go:204-246), bbox over the quantized
     vertices (bb.go:10-37). A null id or coords, an empty or odd-length
     coords array, or a non-finite coordinate fails the task."""
-    return _encode_once(df, F.call_function(
-        "gb_line_enc", F.col(id_col).cast("long"),
-        F.col(coords).cast("array<double>")), out, _id(df, id_col))
+    return df.select(_id(df, id_col), _gb(
+        df, "gb_line_enc", F.col(id_col).cast("long"),
+        F.col(coords).cast("array<double>")).alias(out))
 
 
 def decode_lines(df: DataFrame, bin_col: str = "geobuf",
@@ -120,8 +107,7 @@ def decode_lines(df: DataFrame, bin_col: str = "geobuf",
     Properties, a missing bbox and any field order are skipped; a frame
     whose token count is not a multiple of its dim, or that is truncated,
     fails the task."""
-    return _read_once(
-        df, F.call_function("gb_line_decode", F.col(bin_col)),
+    return df.select(_gb(df, "gb_line_decode", F.col(bin_col)).alias("_g")).select(
         F.element_at("_g", 1).alias(id_col),
         F.slice("_g", 2, F.size("_g") - 1).alias("coords_q"))
 
@@ -132,9 +118,8 @@ def decode_lines_agg(df: DataFrame, bin_col: str = "geobuf") -> DataFrame:
     dim — the roads-scan reduce shape. gb_line_stats counts each frame's
     tokens and reads its first delta without building the coords array,
     and the partial aggregate folds it in the same whole-stage pipeline."""
-    s = _read_once(df, F.call_function("gb_line_stats", F.col(bin_col)),
-                   F.element_at("_g", 2).alias("size"),
-                   F.element_at("_g", 3).alias("first_x"))
+    s = df.select(_gb(df, "gb_line_stats", F.col(bin_col)).alias("_g")).select(
+        F.element_at("_g", 2).alias("size"), F.element_at("_g", 3).alias("first_x"))
     return s.agg(F.count("*").alias("n"), F.sum("size").alias("sum_size"),
                  F.sum("first_x").alias("sum_first_x"))
 
@@ -147,10 +132,10 @@ def encode_polygons(df: DataFrame, id_col: str = "poly_id", coords: str = "coord
     its zigzag deltas, the delta state reset at each ring
     (geom.go:255-273). No ring, an empty ring, ring_lens not summing to the
     vertex count, or a null or non-finite input fails the task."""
-    return _encode_once(df, F.call_function(
-        "gb_poly_enc", F.col(id_col).cast("long"),
+    return df.select(_id(df, id_col), _gb(
+        df, "gb_poly_enc", F.col(id_col).cast("long"),
         F.col(coords).cast("array<double>"),
-        F.col(ring_lens).cast("array<int>")), out, _id(df, id_col))
+        F.col(ring_lens).cast("array<int>")).alias(out))
 
 
 def decode_polygons(df: DataFrame, bin_col: str = "geobuf",
@@ -161,8 +146,7 @@ def decode_polygons(df: DataFrame, bin_col: str = "geobuf",
     coords...]; a ring count that is zero, not a multiple of the dim or
     overrunning the payload fails the task."""
     nr = F.element_at("_g", 2).cast("int")
-    return _read_once(
-        df, F.call_function("gb_poly_dec", F.col(bin_col)),
+    return df.select(_gb(df, "gb_poly_dec", F.col(bin_col)).alias("_g")).select(
         F.element_at("_g", 1).alias(id_col),
         F.slice("_g", nr + 3, F.size("_g") - nr - 2).alias("coords_q"),
         F.slice("_g", 3, nr).cast("array<int>").alias("ring_lens"))
@@ -176,16 +160,14 @@ def decode_features_fast(df: DataFrame, bin_col: str = "geobuf") -> DataFrame:
     every geometry type and dim from its payload tokens. Properties are
     parsed only for frames whose walk shows them, as json.dumps(
     core.decode_properties(frame), sort_keys=True); every other frame gets
-    "{}". The struct is computed in one select and read through a one-row
-    inline Generate, so it is evaluated once per row, not once per field.
+    "{}".
 
     Float coords come from the exact integer lattice (go_round7(q/1e7))
     rather than the reference's per-vertex float accumulation — identical
     on every lattice value, without the reference's ≤2e-7 accumulation
     drift (geom.go:78-90 discussion in SURVEY §1.3). A corrupt frame fails
     the task; a null frame gives a row of nulls."""
-    jvm_codec.require(df.sparkSession)
-    return df.select(F.inline(F.array(F.call_function("gb_decode", F.col(bin_col)))))
+    return df.select(_gb(df, "gb_decode", F.col(bin_col)).alias("_g")).select("_g.*")
 
 
 # ---------------------------------------------------------------------------
@@ -193,9 +175,9 @@ def decode_features_fast(df: DataFrame, bin_col: str = "geobuf") -> DataFrame:
 # 180-263) and the lazy reads (split_combine.go:333-370, reader.go:120-142)
 # ---------------------------------------------------------------------------
 
-def _gb_encode(feature: list[Column], props: Column) -> Column:
+def _gb_encode(df: DataFrame, feature: list[Column], props: Column) -> Column:
     """gb_encode over GEOM_SCHEMA-ordered columns and a props struct."""
-    return F.call_function("gb_encode", F.struct(*(
+    return _gb(df, "gb_encode", F.struct(*(
         c.cast(f.dataType).alias(f.name)
         for c, f in zip(feature, GEOM_SCHEMA.fields))), props)
 
@@ -211,8 +193,8 @@ def encode_features_generic(df: DataFrame, out: str = "geobuf") -> DataFrame:
     its last value. A null or nested value, a lone surrogate, an int out of
     range, an empty geometry or a non-finite coordinate fails the task —
     the import/export edge (ConvertGeojson, convert_geojson.go:153-193)."""
-    frame = _gb_encode([F.col(f.name) for f in GEOM_SCHEMA.fields], F.lit(None))
-    return _encode_once(df, frame, out, *(df[c] for c in df.columns if c != out))
+    frame = _gb_encode(df, [F.col(f.name) for f in GEOM_SCHEMA.fields], F.lit(None))
+    return df.select(*(df[c] for c in df.columns if c != out), frame.alias(out))
 
 
 _PROP_TYPES = (T.StringType, T.LongType, T.IntegerType, T.ShortType, T.ByteType,
@@ -244,7 +226,7 @@ def encode_points_with_props(df: DataFrame, id_col: str = "doc_id",
              F.array(F.col(lon).cast("double"), F.col(lat).cast("double")),
              F.array(F.lit(1)), F.array(F.lit(1)), F.lit(None)]
     typed = F.struct(*(F.col(p) for p in props)) if props else F.lit(None)
-    return _encode_once(df, _gb_encode(point, typed), out, _id(df, id_col))
+    return df.select(_id(df, id_col), _gb_encode(df, point, typed).alias(out))
 
 
 def lazy_property(df: DataFrame, key: str, bin_col: str = "geobuf",
@@ -258,25 +240,22 @@ def lazy_property(df: DataFrame, key: str, bin_col: str = "geobuf",
     if value_type not in ("string", "bigint", "double"):
         raise ValueError(
             f"value_type must be string, bigint or double: {value_type!r}")
-    g = F.call_function("gb_prop", F.col(bin_col), F.lit(key))
-    return _read_once(df, g, F.col("_g.id").alias("id"),
-                      F.col("_g")[value_type].alias(key))
+    g = _gb(df, "gb_prop", F.col(bin_col), F.lit(key))
+    return df.select(g.alias("_g")).select(F.col("_g.id").alias("id"),
+                                           F.col("_g")[value_type].alias(key))
 
 
 def frame_keys(df: DataFrame, bin_col: str = "geobuf") -> DataFrame:
     """One (key) row per property entry of each frame, in wire order with
     repeats kept — ReadKeys in the JVM (gb_keys): values and geometry are
-    jumped, never parsed. Schema inference over raw frames. The explode is
-    itself the Generate that evaluates gb_keys once per row."""
-    jvm_codec.require(df.sparkSession)
-    return df.select(F.explode(F.call_function("gb_keys", F.col(bin_col))).alias("key"))
+    jumped, never parsed. Schema inference over raw frames."""
+    return df.select(F.explode(_gb(df, "gb_keys", F.col(bin_col))).alias("key"))
 
 
 def frame_bbox(df: DataFrame, bin_col: str = "geobuf") -> DataFrame:
     """(w_q, s_q, e_q, n_q) per frame without decoding geometry — the JVM
     gb_bbox field walk (ReadBB, read_feature.go:103-134), no Python in the
     plan; frames lacking a bbox field (old encoders) yield nulls."""
-    jvm_codec.require(df.sparkSession)
-    b = df.select(F.call_function("gb_bbox", F.col(bin_col)).alias("bbox"))
+    b = df.select(_gb(df, "gb_bbox", F.col(bin_col)).alias("bbox"))
     return b.select(*(b.bbox[i].alias(c)
                       for i, c in enumerate(("w_q", "s_q", "e_q", "n_q"))))

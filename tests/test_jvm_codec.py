@@ -528,6 +528,14 @@ def _numpy_accepts(frame: bytes) -> bool:
     return True
 
 
+def _core_accepts(frame: bytes) -> bool:
+    try:
+        core.decode_feature(frame, quantized=True)
+    except ValueError:
+        return False
+    return True
+
+
 def _fields(frame: bytes):
     """(tag, start, end) of every top-level field of a well-formed frame."""
     out, pos = [], 0
@@ -805,7 +813,8 @@ def _cuts_and_overruns(frame: bytes) -> list[bytes]:
 def test_gb_decode_rejects_cut_and_overrun_frames(jvm):
     """gb_decode rejects a truncated frame or an overrunning length prefix
     exactly when the field walk does — the frames the Arrow fast path it
-    replaced rejected — and reads every frame it accepts as core does."""
+    replaced rejected — and so does core.decode_feature; it reads every
+    frame it accepts as core does."""
     bases = [frame for _, frame in GOLDEN_FEATURES] + [
         core.encode_feature(core.Feature.from_geojson(
             "MultiPolygon", [[[[0, 0], [1, 0], [0, 1], [0, 0]]],
@@ -816,10 +825,12 @@ def test_gb_decode_rejects_cut_and_overrun_frames(jvm):
         _entry("bare", b"\x38\x01")]
     decode = _udf(jvm, "Decode")
     frames = [f for base in bases for f in _cuts_and_overruns(base)]
-    verdicts = [(_jvm_accepts(decode, f), _numpy_accepts(f)) for f in frames]
-    assert [j for j, _ in verdicts] == [w for _, w in verdicts]
-    assert sum(not j for j, _ in verdicts) == 336
-    accepted = [f for f, (j, _) in zip(frames, verdicts) if j]
+    verdicts = [(_jvm_accepts(decode, f), _numpy_accepts(f), _core_accepts(f))
+                for f in frames]
+    for frame, (j, w, c) in zip(frames, verdicts):
+        assert j == w == c, (frame.hex(), j, w, c)
+    assert sum(not j for j, _, _ in verdicts) == 336
+    accepted = [f for f, (j, _, _) in zip(frames, verdicts) if j]
     df = spark_codec.decode_features_fast(_frames_df(jvm, accepted))
     for frame, r in zip(accepted, df.collect()):
         want = core.decode_feature(frame, quantized=True)

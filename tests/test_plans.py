@@ -441,7 +441,7 @@ def _codec_cases(spark, geobuf_dir):
         "encode_points_with_props": props.where(F.octet_length("geobuf") > 0),
         "lazy_property": sc.lazy_property(props, "lang").where(F.col("lang") == "en"),
         "frame_keys": sc.frame_keys(props).where(F.col("key") == "lang"),
-        "frame_bbox": sc.frame_bbox(lines),
+        "frame_bbox": sc.frame_bbox(lines).where(F.col("w_q") > 0),
         "decoded_features": geobuf_file.decoded_features(spark, geobuf_dir)
         .where(F.size("coords") > 4),
     }
@@ -470,9 +470,28 @@ def test_codec_cases_cover_spark_codec():
 def test_codec_plan_has_no_python(spark, geobuf_dir, name):
     """Every codec function plans in the JVM: no Python node, and each
     gb_* UDF is evaluated once per row — a filter on an output column or a
-    collapsed projection does not repeat it."""
+    collapsed projection does not repeat it. The UDFs are registered
+    nondeterministic for this, so no plan needs an inline Generate."""
     plan = _final_plan(_codec_cases(spark, geobuf_dir)[name])
     for marker in _PYTHON_NODES:
         assert marker not in plan, (name, marker, plan)
+    assert "inline(" not in plan, (name, plan)
     calls = re.findall(r"\bgb_\w+\(", plan)
     assert calls and len(calls) == len(set(calls)), (name, plan)
+
+
+def test_frames_split_keeps_path_filter_in_scan(spark, geobuf_dir):
+    """gb_frames is the one codec UDF registered deterministic, so a
+    filter on the path column beside it still reaches the binaryFile scan
+    as a data filter, in read_geobuf and read_geobuf_files_jvm alike."""
+    from geobuf_spark.codec import jvm_codec
+    from geobuf_spark.sources import geobuf_file
+
+    for read in (geobuf_file.read_geobuf, jvm_codec.read_geobuf_files_jvm):
+        df = read(spark, geobuf_dir).where(F.col("path").endswith("part-1.geobuf"))
+        plan = _final_plan(df)
+        scan = [ln for ln in plan.splitlines() if "FileScan binaryFile" in ln]
+        assert len(scan) == 1, plan
+        filters = re.search(r"DataFilters: \[([^\]]*)\]", scan[0])
+        assert filters and "EndsWith(path" in filters.group(1), (read, scan[0])
+        assert df.count() == 20

@@ -426,7 +426,8 @@ def test_fused_decode_agg_matches_materializing_path(spark):
 
 def test_truncated_frames_raise_not_corrupt(spark):
     """A frame whose geometry length overruns its boundary must raise
-    instead of reading the NEXT frame's bytes (review r2)."""
+    instead of reading the NEXT frame's bytes (review r2), in the JVM and
+    in the core.py oracle alike."""
     import numpy as np
 
     f = core.encode_feature(core.Feature(
@@ -440,6 +441,10 @@ def test_truncated_frames_raise_not_corrupt(spark):
         df = spark.createDataFrame([(f,), (f[:cut],)], "geobuf binary")
         with pytest.raises(Exception, match="truncated or corrupt"):
             sc.decode_points(df).collect()
+        with pytest.raises(ValueError, match="truncated or corrupt"):
+            core.decode_feature(f[:cut], quantized=True)
+        with pytest.raises(ValueError, match="truncated or corrupt"):
+            core.decode_properties(f[:cut])
     # intact frames still decode, to core's values
     df = spark.createDataFrame([(f,), (f,)], "geobuf binary")
     feat = core.decode_feature(f, quantized=True)
