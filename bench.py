@@ -151,35 +151,6 @@ def bench_queries(spark):
         "influence_spread", "rich_club", "morisita_tiles",
         "runs_test_daily", "hodges_lehmann", "qn_scale",
     ]
-    # production-hash twins of the md5-oracle-bridged queries: the
-    # registered minhash/ivf rows hash with portable md5 so DuckDB can
-    # value-verify them; the production path is xxhash64 (VERDICT r3 #2 —
-    # bench BOTH so the md5 bridge cost is a known constant, not a
-    # round-over-round confound). Not in the driver registry.
-    from geobuf_spark.operators import dedup as _dedup
-    from geobuf_spark.operators import similarity as _sim
-
-    from geobuf_spark.sources.tables import widen as _widen
-
-    def _minhash_prod(spark, sf):
-        # same widened input as the registered q_minhash_near_dups so the
-        # prod-vs-oracle delta is purely the hash function
-        docs = _widen(spark.read.parquet(f"{sf}/documents.parquet"), spark)
-        return _dedup.minhash_lsh_pairs(docs, key="doc_id",
-                                        jaccard_threshold=0.4,
-                                        hash_fn="xxhash64")
-
-    def _ann_ivf_prod(spark, sf):
-        emb = spark.read.parquet(f"{sf}/embeddings.parquet")
-        qs = emb.filter(F.col("vec_id") % 25 == 0) \
-            .select(F.col("vec_id").alias("query_id"), "embedding")
-        return _sim.ivf_topk(emb, qs, k=5, n_centroids=8, nprobe=3,
-                             iters=3, hash_fn="xxhash64")
-
-    Q = dict(Q)
-    Q["minhash_near_dups_prod"] = _minhash_prod
-    Q["ann_ivf_top5_prod"] = _ann_ivf_prod
-    names = names + ["minhash_near_dups_prod", "ann_ivf_top5_prod"]
 
     def force(df):
         # a bare count() lets Catalyst prune every computed column, so a

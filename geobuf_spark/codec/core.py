@@ -339,12 +339,15 @@ def _make_keyvalue(key: str, value) -> bytes:
     return bytes([18]) + encode_varint(len(inner)) + inner
 
 
-def _read_entry(buf, p: int):
-    """(key, value) of the property entry whose payload starts at p."""
-    klen, p = decode_varint(buf, p + 1)  # after the 0x0A key tag
-    key = bytes(buf[p : p + klen]).decode("utf-8")
-    _, p = decode_varint(buf, p + klen + 1)  # the value's length, after its 0x12 tag
-    return key, _read_value(buf, p)[0]
+def _read_entry(buf, p: int, end: int):
+    """(key, value) of the property entry buf[p:end]. Every read is bounded
+    by its message: the key and the value message by the entry, the value
+    by its value message; a length running past its message raises."""
+    entry = buf[:end]
+    klen, p = decode_varint(entry, p + 1)  # after the 0x0A key tag
+    key = bytes(entry[p : _payload_end(entry, p, klen)]).decode("utf-8")
+    vlen, p = decode_varint(entry, p + klen + 1)  # the value's length, after its 0x12 tag
+    return key, _read_value(entry[: _payload_end(entry, p, vlen)], p)[0]
 
 
 def _read_value(buf, pos: int):
@@ -353,9 +356,9 @@ def _read_value(buf, pos: int):
     tag = buf[pos]
     pos += 1
     fieldno = tag >> 3
-    if fieldno == 1:  # string, sliced (so clamped at the end) as GbCodec reads it
+    if fieldno == 1:  # string
         n, pos = decode_varint(buf, pos)
-        return bytes(buf[pos : pos + n]).decode("utf-8"), pos + n
+        return bytes(buf[pos : _payload_end(buf, pos, n)]).decode("utf-8"), pos + n
     if fieldno == 2:  # float32 LE
         return struct.unpack("<f", bytes(buf[pos : _payload_end(buf, pos, 4)]))[0], pos + 4
     if fieldno == 3:  # float64 LE
@@ -474,9 +477,13 @@ def _decode_geometry(vals: np.ndarray, geom_type: int, dim: int, quantized: bool
     if geom_type == 1:
         # writepointbs drops dims > 2 on encode (geom.go:187-201), so only
         # two values exist regardless of the dim embedded in the geom code
-        iv = unzigzag_vec(vals[:2])
+        if len(vals) != 2:
+            raise ValueError("truncated or corrupt frame: point payload without exactly 2 values")
+        iv = unzigzag_vec(vals)
         coords = iv if quantized else go_round7(iv.astype(np.float64) / POWER)
         return coords, np.array([1], dtype=np.int64), np.array([1], dtype=np.int64)
+    if not 2 <= geom_type <= 6 or dim == 0:
+        raise ValueError(f"truncated or corrupt frame: geometry type {geom_type}, dim {dim}")
 
     def decode_ring(seg: np.ndarray) -> np.ndarray:
         iv = unzigzag_vec(seg).reshape(-1, dim)
@@ -486,38 +493,41 @@ def _decode_geometry(vals: np.ndarray, geom_type: int, dim: int, quantized: bool
         return go_round7(np.cumsum(pts, axis=0)).reshape(-1)
 
     if geom_type in (2, 4):
+        if len(vals) % dim:
+            raise ValueError("truncated or corrupt frame: line values not a multiple of dim")
         coords = decode_ring(vals)
         n = len(vals) // dim
         return coords, np.array([n], dtype=np.int64), np.array([1], dtype=np.int64)
 
-    if geom_type in (3, 5):
-        rings, ring_lens, i = [], [], 0
-        while i < len(vals):
-            n = int(vals[i])  # varint len(ring)*dim — geom.go:103-111
-            i += 1
-            rings.append(decode_ring(vals[i : i + n]))
-            ring_lens.append(n // dim)
-            i += n
-        coords = np.concatenate(rings) if rings else np.empty(0)
-        return coords, np.asarray(ring_lens, dtype=np.int64), np.array(
-            [len(ring_lens)], dtype=np.int64
-        )
-
-    # MultiPolygon — geom.go:113-125
+    # ring-structured (geom.go:103-125): per ring a count of len(ring)*dim
+    # values then its deltas; MultiPolygon prefixes each polygon with its
+    # ring count. A count running past the payload raises.
     rings, ring_lens, part_rings, i = [], [], [], 0
-    while i < len(vals):
-        nr = int(vals[i])
+
+    def count(limit: int) -> int:
+        nonlocal i
+        n = int(vals[i]) if i < len(vals) else -1
         i += 1
-        part_rings.append(nr)
+        if not 0 <= n <= limit:
+            raise ValueError("truncated or corrupt frame: ring or part count "
+                             "running past the geometry payload")
+        return n
+
+    while i < len(vals):
+        nr = 1
+        if geom_type == 6:
+            nr = count(len(vals) - i - 1)  # every ring takes its count value
+            part_rings.append(nr)
         for _ in range(nr):
-            n = int(vals[i])
-            i += 1
+            n = count(len(vals) - i - 1)
+            if n % dim:
+                raise ValueError("truncated or corrupt frame: ring values not a multiple of dim")
             rings.append(decode_ring(vals[i : i + n]))
             ring_lens.append(n // dim)
             i += n
     coords = np.concatenate(rings) if rings else np.empty(0)
     return coords, np.asarray(ring_lens, dtype=np.int64), np.asarray(
-        part_rings, dtype=np.int64
+        part_rings if geom_type == 6 else [len(ring_lens)], dtype=np.int64
     )
 
 
@@ -538,7 +548,7 @@ def decode_properties(frame) -> dict:
             size, pos = decode_varint(buf, pos)
             end = _payload_end(buf, pos, size)
             if k == 2:
-                key, props[key] = _read_entry(buf, pos)
+                key, props[key] = _read_entry(buf, pos, end)
             pos = end
         else:
             raise ValueError(f"unexpected wire type {w} in feature frame")
@@ -549,8 +559,10 @@ def decode_feature(frame: bytes, quantized: bool = False) -> Feature:
     """ReadFeature — read_feature.go:9-100 (strict field order, all optional).
 
     With ``quantized=True`` coords are exact int64 lattice values (×1e7).
-    A field cut short by the frame end, or a geometry payload ending
-    mid-varint, raises."""
+    A field cut short by the frame end or by its message, a wire type
+    other than 0 or 2, a geometry payload ending mid-varint, an unknown
+    geometry type or dim 0, and a value or ring count that does not fit
+    the geometry payload raise ValueError."""
     buf = np.frombuffer(frame, dtype=np.uint8)
     fid = None
     props: dict = {}
@@ -565,6 +577,8 @@ def decode_feature(frame: bytes, quantized: bool = False) -> Feature:
         if p >= len(buf):  # the frame end reads as key 0, which ends the walk
             return 0, 0, p
         tag, p = decode_varint(buf, p)
+        if tag & 7 not in (0, 2):  # as decode_properties rejects it
+            raise ValueError(f"truncated or corrupt frame: unexpected wire type {tag & 7}")
         return tag >> 3, tag & 7, p
 
     k, w, pos = read_key(0)
@@ -574,7 +588,7 @@ def decode_feature(frame: bytes, quantized: bool = False) -> Feature:
     while k == 2 and w == 2:
         size, pos = decode_varint(buf, pos)
         end = _payload_end(buf, pos, size)
-        key, props[key] = _read_entry(buf, pos)
+        key, props[key] = _read_entry(buf, pos, end)
         k, w, pos = read_key(end)
     if k == 3 and w == 0:
         pos = _payload_end(buf, pos, 1)  # one code byte

@@ -666,20 +666,26 @@ public final class GbCodec {
      * json() reads every entry as core.decode_properties does (tags read
      * as full varints, wire 0 skipped as a varint, wire 2 jumped by its
      * length; any other wire type, a read past the frame end, invalid
-     * UTF-8 or an unknown value field throws) and writes them as Python's
+     * UTF-8 or an unknown value field throws). Every read is bounded by its
+     * message, as core._read_entry bounds it: the key and the value
+     * message by the entry, the value by its value message; a length
+     * running past its message throws. json() writes the entries as Python's
      * json.dumps(..., sort_keys=True): keys sorted by code point, a
      * repeated key keeps its last value, ensure_ascii escapes, ", " and
      * ": " separators, floats in Python's shortest round-trip repr.
      */
     static final class Props {
         private final byte[] b;
-        /** may run past the frame end, as a Python index does; the next
-         *  read there throws */
+        /** may run past lim, as a Python index does; the next read there
+         *  throws */
         private long pos;
+        /** end of the message being read: the frame, an entry or a value */
+        private long lim;
 
-        Props(byte[] b, long pos) {
+        Props(byte[] b, long pos, long lim) {
             this.b = b;
             this.pos = pos;
+            this.lim = lim;
         }
 
         /** Python str ordering: by code point, not by UTF-16 unit. */
@@ -696,19 +702,20 @@ public final class GbCodec {
 
         static String json(byte[] b) {
             java.util.TreeMap<String, String> props = new java.util.TreeMap<>(CODE_POINT_ORDER);
-            Props r = new Props(b, 0);
+            Props r = new Props(b, 0, b.length);
             while (r.pos < b.length) {
                 long tag = r.varint();
                 if ((tag & 7) == 0) {
                     r.varint();
                 } else if ((tag & 7) == 2) {
-                    long size = r.varint(), end = r.pos;
+                    long size = r.length(), end = r.pos + size;
                     if (tag == 0x12) {
+                        r.lim = end;
                         String key = r.key();
                         props.put(key, jsonText(r.value()));
+                        r.lim = b.length;
                     }
-                    r.pos = Long.compareUnsigned(size, b.length - end) > 0
-                            ? b.length : end + size;
+                    r.pos = end;
                 } else {
                     throw new IllegalArgumentException(
                         "unexpected wire type " + (tag & 7) + " in feature frame");
@@ -725,9 +732,9 @@ public final class GbCodec {
         }
 
         private int at(long p) {
-            if (p >= b.length)
+            if (p >= lim)
                 throw new IllegalArgumentException(
-                    "property read past the frame end - truncated or corrupt input");
+                    "property read past its message - truncated or corrupt input");
             return b[(int) p] & 0xFF;
         }
 
@@ -741,12 +748,20 @@ public final class GbCodec {
             }
         }
 
-        /** n (unsigned) bytes at pos as strict UTF-8, the slice clamped at
-         *  the frame end as a Python slice is; pos moves n bytes on. */
-        private String utf8(long n) {
-            boolean over = Long.compareUnsigned(n, b.length - pos) > 0;
-            int s = (int) pos, e = over ? b.length : (int) (pos + n);
-            pos = over ? b.length + 1L : e;
+        /** A varint length whose payload ends within lim (core._payload_end). */
+        private long length() {
+            long n = varint();
+            if (Long.compareUnsigned(n, lim - pos) > 0)
+                throw new IllegalArgumentException(
+                    "property length running past its message - truncated or corrupt input");
+            return n;
+        }
+
+        /** A length-prefixed string at pos as strict UTF-8; pos moves past it. */
+        private String utf8() {
+            long n = length();
+            int s = (int) pos, e = (int) (pos + n);
+            pos = e;
             try {
                 return java.nio.charset.StandardCharsets.UTF_8.newDecoder()
                     .onMalformedInput(java.nio.charset.CodingErrorAction.REPORT)
@@ -759,9 +774,9 @@ public final class GbCodec {
 
         /** width little-endian bytes at pos (struct.unpack needs them all) */
         private long fixed(int width) {
-            if (pos + width > b.length)
+            if (pos + width > lim)
                 throw new IllegalArgumentException(
-                    "property value past the frame end - truncated or corrupt input");
+                    "property value past its message - truncated or corrupt input");
             long v = 0;
             for (int i = width - 1; i >= 0; i--) v = (v << 8) | (b[(int) pos + i] & 0xFF);
             return v;
@@ -770,7 +785,7 @@ public final class GbCodec {
         /** At an entry's start: its key (0x0A tag, varint length, UTF-8). */
         String key() {
             pos++;
-            return utf8(varint());
+            return utf8();
         }
 
         /** Whether the entry at pos has the key bytes kb; pos moves past
@@ -778,18 +793,19 @@ public final class GbCodec {
         boolean keyIs(byte[] kb) {
             pos++;
             long n = varint();
-            return n == kb.length && pos + n <= b.length
+            return n == kb.length && pos + n <= lim
                 && java.util.Arrays.equals(b, (int) pos, (int) (pos + n), kb, 0, kb.length);
         }
 
         /** After the key: core._read_value of the value message (0x12 tag,
-         *  varint length, one field). */
+         *  varint length, one field), bounded by that length. */
         Object value() {
             pos++;
-            varint();
+            long n = length();
+            lim = pos + n;
             int field = at(pos++) >> 3;
             switch (field) {
-                case 1: return utf8(varint());
+                case 1: return utf8();
                 case 2: return (double) Float.intBitsToFloat((int) fixed(4));
                 case 3: return Double.longBitsToDouble(fixed(8));
                 case 4: return varint();
@@ -1016,15 +1032,18 @@ public final class GbCodec {
             if (b == null) return null;
             byte[] kb = key.getBytes(java.nio.charset.StandardCharsets.UTF_8);
             long id = 0;
-            int hit = -1;
+            int hit = -1, hitEnd = 0;
             Walker w = new Walker(b, 0, b.length);
             while (w.next()) {
                 if (w.tag == 0x08) id = w.value;
-                else if (w.tag == 0x12 && new Props(b, w.start).keyIs(kb)) hit = w.start;
+                else if (w.tag == 0x12 && new Props(b, w.start, w.p).keyIs(kb)) {
+                    hit = w.start;
+                    hitEnd = w.p;
+                }
             }
             Object v = null;
             if (hit >= 0) {
-                Props r = new Props(b, hit);
+                Props r = new Props(b, hit, hitEnd);
                 r.key();
                 v = r.value();
             }
@@ -1045,7 +1064,7 @@ public final class GbCodec {
             java.util.ArrayList<String> out = new java.util.ArrayList<>();
             Walker w = new Walker(b, 0, b.length);
             while (w.next())
-                if (w.tag == 0x12) out.add(new Props(b, w.start).key());
+                if (w.tag == 0x12) out.add(new Props(b, w.start, w.p).key());
             return out;
         }
     }

@@ -15,9 +15,9 @@ a parameter (ORACLE_NUMERICS.md §C).
 
 15 hex chars = 60 bits, always inside a signed int64 (Spark 4 runs ANSI
 mode; a 16th char could overflow the cast). md5 costs more than xxhash64
-per call but stays JVM-side / vectorized in both engines; operators keep an
-`xxhash64` fast path for production corpora where no cross-engine oracle is
-needed (see operators/dedup.py).
+per call but stays JVM-side / vectorized in both engines, and it is the one
+hash of the dedup, sketch and ANN operators (operators/dedup.py,
+sketch.py, similarity.py): there is no second, oracle-less hash path.
 """
 
 from __future__ import annotations

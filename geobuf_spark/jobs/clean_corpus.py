@@ -80,12 +80,8 @@ def run_job(spark, sf_dir: str, out: str, run_id: str, *,
         t.set_counts(rows_in=n1b, rows_out=n2)
 
     with ctx.stage("near_dedup") as t:
-        # production path keeps xxhash64 (cheapest per shingle, and the
-        # r1/r2 output-stable choice) — the md5-based "portable" default
-        # exists for cross-engine oracle parity, which a job doesn't need
         pairs = dedup.minhash_lsh_pairs(kept, key="doc_id",
-                                        jaccard_threshold=jaccard,
-                                        hash_fn="xxhash64")
+                                        jaccard_threshold=jaccard)
         # connected components → keep each near-dup cluster's MIN doc_id
         # (pairwise greatest-drop keeps local minima: for pairs (1,3),(2,3)
         # both 1 and 2 would survive one cluster)

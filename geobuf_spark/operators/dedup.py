@@ -6,10 +6,9 @@ three flavors, all shuffle-bounded:
 - MinHash + LSH: shingle → minhash signatures → band buckets → bucket
   equi-join → verified Jaccard. Signatures/bands are pure expressions;
   only candidate pairs sharing a band bucket are compared, so the join is
-  linear-ish, never O(n²). The base hash is selectable: "portable"
-  (default — md5-derived, bit-identical in DuckDB so the external driver
-  value-verifies the full pipeline; see functions/phash.py) or "xxhash64"
-  (cheapest per shingle, for production corpora with no oracle).
+  linear-ish, never O(n²). The base hash is the portable md5-derived
+  hash60 (functions/phash.py), bit-identical in DuckDB, so the DuckDB
+  oracle value-verifies the full pipeline.
 - SimHash: 64-bit sign-aggregated token hashes; near-dups = Hamming ≤ t,
   found via band equi-join on 16-bit chunks (Pigeonhole: Hamming ≤ 3 ⇒
   some chunk equal).
@@ -93,18 +92,8 @@ def _perm_coeffs(num_hashes: int, seed: int = 1234567):
     return a, b
 
 
-def _base_hash(col: Column, hash_fn: str) -> Column:
-    """Shingle → bigint in [0, _MERSENNE): portable (md5) or xxhash64."""
-    if hash_fn == "portable":
-        return F.pmod(phash.hash60(col), F.lit(_MERSENNE))
-    if hash_fn == "xxhash64":
-        return F.pmod(F.xxhash64(col), F.lit(_MERSENNE))
-    raise ValueError(f"hash_fn must be 'portable' or 'xxhash64', got {hash_fn!r}")
-
-
 def minhash_signatures(df: DataFrame, key: str, text_col: str = "text",
-                       num_hashes: int = 32, shingle_k: int = 3,
-                       hash_fn: str = "portable") -> DataFrame:
+                       num_hashes: int = 32, shingle_k: int = 3) -> DataFrame:
     """(key, sig: array<bigint>) — minhash over shingles, pure expressions.
 
     Shingles are hashed ONCE; each permutation is a cheap affine
@@ -112,7 +101,7 @@ def minhash_signatures(df: DataFrame, key: str, text_col: str = "text",
     standard trick that keeps the cost O(shingles + permutations) instead of
     O(shingles × permutations) string hashes."""
     sh = _shingles(F.col(text_col), shingle_k)
-    hashed = F.transform(sh, lambda s: _base_hash(s, hash_fn))
+    hashed = F.transform(sh, lambda s: F.pmod(phash.hash60(s), F.lit(_MERSENNE)))
     a, b = _perm_coeffs(num_hashes)
     base = df.select(F.col(key).alias("key"), hashed.alias("_h"))
 
@@ -128,20 +117,16 @@ def minhash_signatures(df: DataFrame, key: str, text_col: str = "text",
 
 def minhash_lsh_pairs(df: DataFrame, key: str, text_col: str = "text",
                       num_hashes: int = 32, bands: int = 8, shingle_k: int = 3,
-                      jaccard_threshold: float = 0.5, max_bucket: int = 1000,
-                      hash_fn: str = "portable") -> DataFrame:
+                      jaccard_threshold: float = 0.5,
+                      max_bucket: int = 1000) -> DataFrame:
     """Candidate near-dup pairs (a < b) whose estimated Jaccard (signature
     agreement rate) ≥ threshold. One shuffle on band buckets."""
     rows_per_band = num_hashes // bands
-    sigs = minhash_signatures(df, key, text_col, num_hashes, shingle_k, hash_fn)
+    sigs = minhash_signatures(df, key, text_col, num_hashes, shingle_k)
 
     def band_bucket(b: int) -> Column:
         rows = [F.element_at("sig", b * rows_per_band + r + 1)
                 for r in range(rows_per_band)]
-        if hash_fn == "xxhash64":
-            # variadic xxhash64 over the band's bigint rows + band id —
-            # no string casts/concat on the hot path
-            return F.xxhash64(*rows, F.lit(b))
         return phash.hash60_parts(*rows, F.lit(b))
 
     banded = sigs.select(

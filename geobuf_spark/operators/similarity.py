@@ -7,6 +7,10 @@
 - LSH-bucketed ANN (random hyperplane signatures, pure expressions): the
   scale path — candidates share a signature band, so the join is linear;
   recall measured against the brute-force baseline in tests.
+- IVF ANN: k-means centroids trained on a portable-hash-ordered sample
+  (functions/phash.py), so the oracle's local twin
+  (ivf_centroids_local) pins the same centroids; queries probe their
+  nprobe nearest buckets.
 
 At 10^12 vectors the brute-force path is a full scan per query batch —
 still the right tool for small query sets (GEMM is ~free per row); the LSH
@@ -254,155 +258,22 @@ def ann_topk(vectors: DataFrame, queries: DataFrame, k: int, *, nbits: int = 16,
 # top-nprobe buckets, exact cosine re-rank on candidates only.
 # ---------------------------------------------------------------------------
 
-def _sample_order(col, hash_fn: str):
-    """Hash expression that orders the deterministic training sample.
-    "portable" = md5 (DuckDB-recomputable — the oracle bridge);
-    "xxhash64" = the production path (JVM-side, ~10x cheaper per row)."""
-    if hash_fn == "portable":
-        return phash.hash60(col.cast("string"))
-    if hash_fn == "xxhash64":
-        return F.xxhash64(col)
-    raise ValueError(f"hash_fn must be 'portable' or 'xxhash64', got {hash_fn!r}")
+# k-means trains on the SAMPLE_N vectors with the smallest hash60(id)
+SAMPLE_N = 100_000
+# element type of the embedding column (array<float>): the local twin
+# rounds its normalized vectors to it, as `_normalized` does in Spark
+EMB_DTYPE = np.float32
 
 
-def ivf_centroids(vectors: DataFrame, n_centroids: int = 16, iters: int = 5,
-                  vec_id: str = "vec_id", emb: str = "embedding",
-                  sample_n: int | None = 100_000,
-                  hash_fn: str = "portable") -> np.ndarray:
-    """Deterministic k-means on normalized vectors.
-
-    With `sample_n` (default): train on the sample_n vectors with the
-    smallest portable md5-hash of the id (functions/phash.py — DuckDB can
-    recompute the sample order, so the driver oracle can pin the exact
-    centroids) — one deterministic collect, then all iterations run in
-    numpy on the driver. This is how production coarse quantizers train
-    (a bounded sample suffices to place bucket centroids; at 10^12
-    vectors a full pass per iteration is absurd), and it removes iters×
-    cluster passes from the plan. The orderBy+limit pair compiles to
-    TakeOrderedAndProject (per-partition top-k + driver merge), not a
-    global sort. `sample_n=None` keeps the distributed path: every
-    iteration is one fused Arrow pass of per-cluster partial sums (no
-    shuffle).
-
-    Init: the n_centroids vectors with smallest hash — seedless
-    and reproducible. Each iteration is ONE fused Arrow pass: assign by
-    GEMM and fold per-cluster (Σvector, count) PARTIALS inside the same
-    batch loop; only n_batches × k tiny rows reach the driver. (The r01
-    formulation posexploded rows × dim and shuffled a groupBy per
-    iteration — a heavy training pass at 10^12 scale; this one shuffles
-    nothing.) Empty clusters keep their previous centroid."""
-    import pyarrow as pa
-
-    vectors = _normalized(vectors, vec_id, emb)  # spherical k-means:
-    # assignment AND the mean-update must both see unit vectors, or
-    # long-norm outliers dominate the centroid sums
-    if sample_n is not None:
-        rows = (
-            vectors.select(vec_id, emb)
-            .orderBy(_sample_order(F.col(vec_id), hash_fn))
-            .limit(max(sample_n, n_centroids)).collect()
-        )
-        mat = np.array([r[1] for r in rows], dtype=np.float64)
-        mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-30)
-        cents = mat[:n_centroids].copy()
-        for _ in range(iters):
-            cl = np.argmax(mat @ cents.T, axis=1)
-            new = cents.copy()
-            for k in range(n_centroids):
-                members = mat[cl == k]
-                if len(members):
-                    v = members.mean(axis=0)
-                    nv = np.linalg.norm(v)
-                    if nv > 1e-30:
-                        new[k] = v / nv
-            cents = new
-        return cents
-
-    seed_rows = (
-        vectors.select(vec_id, emb)
-        .orderBy(_sample_order(F.col(vec_id), hash_fn))
-        .limit(n_centroids).collect()
-    )
-    cents = np.array([r[1] for r in seed_rows], dtype=np.float64)
-    cents /= np.maximum(np.linalg.norm(cents, axis=1, keepdims=True), 1e-30)
-    spark = vectors.sparkSession
-    src = vectors.select(vec_id, emb)
-
-    part_schema = T.StructType([
-        T.StructField("cluster", T.IntegerType()),
-        T.StructField("s", T.ArrayType(T.DoubleType())),
-        T.StructField("c", T.LongType()),
-    ])
-
-    for _ in range(iters):
-        b_c = spark.sparkContext.broadcast(cents)
-
-        def _partials(batches, _b=b_c):
-            C = _b.value
-            k, dim = C.shape
-            S = np.zeros((k, dim), dtype=np.float64)
-            n_cl = np.zeros(k, dtype=np.int64)
-            for batch in batches:
-                mat = _emb_matrix(batch.column(1))
-                if len(mat) == 0:
-                    continue
-                matn = mat / np.maximum(
-                    np.linalg.norm(mat, axis=1, keepdims=True), 1e-30)
-                cl = np.argmax(matn @ C.T, axis=1)
-                np.add.at(S, cl, matn)
-                n_cl += np.bincount(cl, minlength=k)
-            live = np.flatnonzero(n_cl)
-            if not len(live):
-                return
-            offs = np.arange(0, (len(live) + 1) * dim, dim, dtype=np.int32)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(live.astype(np.int32)),
-                 pa.ListArray.from_arrays(
-                     pa.array(offs),
-                     pa.array(S[live].reshape(-1), type=pa.float64())),
-                 pa.array(n_cl[live], type=pa.int64())],
-                names=["cluster", "s", "c"])
-
-        new = cents.copy()
-        S = np.zeros_like(cents)
-        Cn = np.zeros(len(cents), dtype=np.int64)
-        for r in src.mapInArrow(_partials, part_schema).collect():
-            S[r.cluster] += np.asarray(r.s, dtype=np.float64)
-            Cn[r.cluster] += r.c
-        for cl in np.flatnonzero(Cn):
-            v = S[cl] / Cn[cl]
-            nv = np.linalg.norm(v)
-            if nv > 1e-30:
-                new[cl] = v / nv
-        cents = new
-        b_c.unpersist()
-    return cents
-
-
-def ivf_centroids_local(ids: np.ndarray, mat: np.ndarray, n_centroids: int = 16,
-                        iters: int = 5, sample_n: int = 100_000,
-                        cast_dtype=np.float32) -> np.ndarray:
-    """Driver-side twin of the sampled `ivf_centroids` path: given the FULL
-    (unnormalized) id/vector arrays, reproduces the Spark-trained centroids
-    bit-for-bit — used by the external correctness oracle to pin the
-    coarse quantizer as SQL literals (the 3-iteration k-means itself is not
-    SQL-expressible; tests/test_dedup.py asserts exact equality with the
-    Spark path so the twin cannot drift).
-
-    Replicates, in order: `_normalized` (f64 normalize, cast back to the
-    column dtype — float32 for the testdata's array<float>), the
-    hash60-ordered sample, the f64 re-normalize on collect, and the same
-    numpy k-means loop."""
-    import hashlib
-
-    mat64 = np.asarray(mat, dtype=np.float64)
-    matn = mat64 / np.maximum(np.linalg.norm(mat64, axis=1, keepdims=True), 1e-30)
-    matc = matn.astype(cast_dtype)
-    h = np.array([int(hashlib.md5(str(int(i)).encode()).hexdigest()[:15], 16)
-                  for i in ids], dtype=np.uint64)
-    order = np.argsort(h, kind="stable")[: max(sample_n, n_centroids)]
-    m = matc[order].astype(np.float64)
-    m /= np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-30)
+def _spherical_kmeans(sample: np.ndarray, n_centroids: int,
+                      iters: int) -> np.ndarray:
+    """Spherical k-means on the hash-ordered training sample: f64
+    re-normalize, seed with the first n_centroids rows (seedless and
+    reproducible), then `iters` rounds of argmax-cosine assignment and
+    re-normalized member means. Empty clusters keep their previous
+    centroid. The one loop behind ivf_centroids and its local twin."""
+    m = np.asarray(sample, dtype=np.float64)
+    m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-30)
     cents = m[:n_centroids].copy()
     for _ in range(iters):
         cl = np.argmax(m @ cents.T, axis=1)
@@ -416,6 +287,49 @@ def ivf_centroids_local(ids: np.ndarray, mat: np.ndarray, n_centroids: int = 16,
                     new[k] = v / nv
         cents = new
     return cents
+
+
+def ivf_centroids(vectors: DataFrame, n_centroids: int = 16, iters: int = 5,
+                  vec_id: str = "vec_id", emb: str = "embedding") -> np.ndarray:
+    """Deterministic k-means on normalized vectors.
+
+    Trains on the SAMPLE_N vectors with the smallest portable md5-hash of
+    the id (functions/phash.py — DuckDB can recompute the sample order,
+    so the oracle can pin the exact centroids): one deterministic
+    collect, then every iteration runs in numpy on the Spark driver. This is
+    how production coarse quantizers train (a bounded sample suffices to
+    place bucket centroids; at 10^12 vectors a full pass per iteration is
+    absurd), and it keeps iters × cluster passes out of the plan. The
+    orderBy+limit pair compiles to TakeOrderedAndProject (per-partition
+    top-k + one final merge), not a global sort."""
+    vectors = _normalized(vectors, vec_id, emb)  # spherical k-means:
+    # assignment AND the mean-update must both see unit vectors, or
+    # long-norm outliers dominate the centroid sums
+    rows = (
+        vectors.select(vec_id, emb)
+        .orderBy(phash.hash60(F.col(vec_id).cast("string")))
+        .limit(max(SAMPLE_N, n_centroids)).collect()
+    )
+    return _spherical_kmeans(np.array([r[1] for r in rows]), n_centroids, iters)
+
+
+def ivf_centroids_local(ids: np.ndarray, mat: np.ndarray, n_centroids: int = 16,
+                        iters: int = 5) -> np.ndarray:
+    """Local numpy twin of `ivf_centroids`: given the FULL (unnormalized)
+    id/vector arrays, reproduces the Spark-trained centroids bit-for-bit —
+    used by the external correctness oracle to pin the coarse quantizer
+    as SQL literals (the 3-iteration k-means itself is not
+    SQL-expressible; tests/test_ops_misc.py asserts exact equality with
+    the Spark path so the twin cannot drift).
+
+    Replicates the sample selection and normalization: `_normalized` (f64
+    normalize, cast back to the column dtype EMB_DTYPE) and the
+    hash60-ordered sample; `_spherical_kmeans` does the rest."""
+    mat64 = np.asarray(mat, dtype=np.float64)
+    matn = mat64 / np.maximum(np.linalg.norm(mat64, axis=1, keepdims=True), 1e-30)
+    h = np.array([phash.py_hash60(str(int(i))) for i in ids], dtype=np.uint64)
+    order = np.argsort(h, kind="stable")[: max(SAMPLE_N, n_centroids)]
+    return _spherical_kmeans(matn.astype(EMB_DTYPE)[order], n_centroids, iters)
 
 
 def _normalized(vectors: DataFrame, vec_id: str, emb: str) -> DataFrame:
@@ -473,7 +387,7 @@ def _assign_clusters(vectors: DataFrame, cents: np.ndarray,
 def ivf_topk(vectors: DataFrame, queries: DataFrame, k: int, *,
              n_centroids: int = 16, nprobe: int = 4, iters: int = 5,
              vec_id: str = "vec_id", emb: str = "embedding",
-             query_id: str = "query_id", hash_fn: str = "portable") -> DataFrame:
+             query_id: str = "query_id") -> DataFrame:
     """IVF approximate top-k: (query_id, neighbor_id, rank).
 
     nprobe trades recall for candidate volume; nprobe == n_centroids
@@ -481,8 +395,7 @@ def ivf_topk(vectors: DataFrame, queries: DataFrame, k: int, *,
     import pyarrow as pa
 
     nprobe = min(nprobe, n_centroids)
-    cents = ivf_centroids(vectors, n_centroids, iters, vec_id, emb,
-                          hash_fn=hash_fn)
+    cents = ivf_centroids(vectors, n_centroids, iters, vec_id, emb)
     sv = _assign_clusters(vectors, cents, vec_id, emb)
 
     spark = vectors.sparkSession

@@ -22,9 +22,9 @@ the driver and every sketch's size is a constant, independent of the input:
   performs float math, and only correctly-rounded single operations on
   identical operands (deterministic cross-engine).
 
-Hashing follows operators/dedup.py: hash_fn="portable" (md5-derived 60-bit,
-bit-identical in DuckDB — functions/phash.py) for oracle-verified paths,
-"xxhash64" for production corpora.
+Hashing follows operators/dedup.py: every sketch hashes with the portable
+md5-derived 60-bit hash (functions/phash.py), bit-identical in DuckDB, so
+each sketch has a value-exact oracle.
 
 Reference analog: the reference engine has no sketches (geobuf is a codec);
 these extend SURVEY.md §2's training-data-pipeline surface the same way the
@@ -41,15 +41,9 @@ from geobuf_spark.functions import phash
 _H60_MAX = 1 << 60  # hash60 range is [0, 2^60)
 
 
-def _hash60(col: Column, salt: str, hash_fn: str) -> Column:
-    """Salted 60-bit hash of a string column, portable or production."""
-    salted = F.concat(F.lit(salt + phash.SEP), col.cast("string"))
-    if hash_fn == "portable":
-        return phash.hash60(salted)
-    if hash_fn == "xxhash64":
-        # fold xxhash64's signed 64-bit into the same [0, 2^60) range
-        return F.pmod(F.xxhash64(salted), F.lit(_H60_MAX))
-    raise ValueError(f"hash_fn must be 'portable' or 'xxhash64', got {hash_fn!r}")
+def _hash60(col: Column, salt: str) -> Column:
+    """Salted 60-bit hash of a string column (null stays null)."""
+    return phash.hash60(F.concat(F.lit(salt + phash.SEP), col.cast("string")))
 
 
 # ---------------------------------------------------------------------------
@@ -57,7 +51,7 @@ def _hash60(col: Column, salt: str, hash_fn: str) -> Column:
 # ---------------------------------------------------------------------------
 
 def kmv_distinct(df: DataFrame, group_cols: list[str], value_col: str,
-                 k: int = 32, hash_fn: str = "portable") -> DataFrame:
+                 k: int = 32) -> DataFrame:
     """Per-group KMV distinct-count estimate.
 
     Plan shape: one distinct over (group, hash) — map-side partial
@@ -73,7 +67,7 @@ def kmv_distinct(df: DataFrame, group_cols: list[str], value_col: str,
     """
     if not 2 <= k <= 64:
         raise ValueError(f"k must be in [2, 64] so (k-1)*2^60 stays exact, got {k}")
-    h = _hash60(F.col(value_col), "kmv", hash_fn).alias("h")
+    h = _hash60(F.col(value_col), "kmv").alias("h")
     dist = df.select(*group_cols, h).distinct()
     w = Window.partitionBy(*group_cols).orderBy("h")
     topk = dist.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
@@ -113,20 +107,19 @@ def sql_kmv_distinct(source_sql: str, group_expr: str, value_expr: str,
 # Bloom filter — membership over ⌈m/64⌉ bit-or'd words
 # ---------------------------------------------------------------------------
 
-def _bloom_positions(col: Column, m_bits: int, n_hashes: int,
-                     hash_fn: str) -> Column:
+def _bloom_positions(col: Column, m_bits: int, n_hashes: int) -> Column:
     """Array of n_hashes bit positions via double hashing
     pos_i = (h1 + i·(h2|1)) mod m; h2 forced odd so the stride is coprime
     with the power-of-two m and the probe sequence never degenerates."""
-    h1 = _hash60(col, "bloomA", hash_fn)
-    h2 = _hash60(col, "bloomB", hash_fn).bitwiseOR(F.lit(1))
+    h1 = _hash60(col, "bloomA")
+    h2 = _hash60(col, "bloomB").bitwiseOR(F.lit(1))
     return F.array(*[
         F.pmod(h1 + F.lit(i) * h2, F.lit(m_bits)) for i in range(n_hashes)
     ])
 
 
 def bloom_build(df: DataFrame, key_col: str, m_bits: int = 1 << 14,
-                n_hashes: int = 5, hash_fn: str = "portable") -> DataFrame:
+                n_hashes: int = 5) -> DataFrame:
     """Build a Bloom filter over df[key_col] as (word_idx, bits) rows.
 
     One explode (1:n_hashes flatMap, no pre-shuffle) then one bit_or
@@ -134,7 +127,7 @@ def bloom_build(df: DataFrame, key_col: str, m_bits: int = 1 << 14,
     matter the input size. m_bits must be a multiple of 64."""
     if m_bits % 64:
         raise ValueError(f"m_bits must be a multiple of 64, got {m_bits}")
-    pos = F.explode(_bloom_positions(F.col(key_col), m_bits, n_hashes, hash_fn))
+    pos = F.explode(_bloom_positions(F.col(key_col), m_bits, n_hashes))
     return (df.select(pos.alias("pos"))
             .select((F.col("pos") / 64).cast("bigint").alias("word_idx"),
                     F.expr("shiftleft(1L, CAST(pos % 64 AS INT))").alias("w"))
@@ -143,8 +136,7 @@ def bloom_build(df: DataFrame, key_col: str, m_bits: int = 1 << 14,
 
 
 def bloom_probe(probe_df: DataFrame, key_col: str, bloom_df: DataFrame,
-                m_bits: int = 1 << 14, n_hashes: int = 5,
-                hash_fn: str = "portable") -> DataFrame:
+                m_bits: int = 1 << 14, n_hashes: int = 5) -> DataFrame:
     """Append `bloom_maybe` (boolean) to probe_df: true iff every one of the
     key's n_hashes bits is set in the filter.
 
@@ -152,7 +144,7 @@ def bloom_probe(probe_df: DataFrame, key_col: str, bloom_df: DataFrame,
     rows) filter on word_idx — broadcast by construction — then re-groups
     to one row per probe. No false negatives; false-positive rate the usual
     (1 − e^(−kn/m))^k."""
-    pos = F.posexplode(_bloom_positions(F.col(key_col), m_bits, n_hashes, hash_fn))
+    pos = F.posexplode(_bloom_positions(F.col(key_col), m_bits, n_hashes))
     exploded = (probe_df.select(key_col, pos.alias("i", "pos"))
                 .select(key_col,
                         (F.col("pos") / 64).cast("bigint").alias("word_idx"),
@@ -202,8 +194,7 @@ def sql_bloom_cte(member_sql: str, probe_sql: str, member_key: str,
 # Count-Min — depth × width counter matrix
 # ---------------------------------------------------------------------------
 
-def cms_build(df: DataFrame, item_col: str, depth: int = 4, width: int = 256,
-              hash_fn: str = "portable") -> DataFrame:
+def cms_build(df: DataFrame, item_col: str, depth: int = 4, width: int = 256) -> DataFrame:
     """Count-Min sketch of item frequencies as (row, bucket, cnt) rows.
 
     One explode to depth rows per item, one hash aggregation — map-side
@@ -213,7 +204,7 @@ def cms_build(df: DataFrame, item_col: str, depth: int = 4, width: int = 256,
     e = df.select(F.col(item_col).alias("item"), rows.alias("row"))
     bucket = F.pmod(
         _hash60(F.concat_ws(phash.SEP, F.col("row").cast("string"), F.col("item")),
-                "cms", hash_fn),
+                "cms"),
         F.lit(width))
     return (e.select("row", bucket.alias("bucket"))
             .groupBy("row", "bucket")
@@ -221,8 +212,7 @@ def cms_build(df: DataFrame, item_col: str, depth: int = 4, width: int = 256,
 
 
 def cms_query(cms_df: DataFrame, items_df: DataFrame, item_col: str,
-              depth: int = 4, width: int = 256,
-              hash_fn: str = "portable") -> DataFrame:
+              depth: int = 4, width: int = 256) -> DataFrame:
     """Point-query the sketch: est(item) = min over depth rows of the
     counter at (row, hash_row(item) mod width). Broadcast join against the
     (≤ depth·width row) sketch; absent counters read 0."""
@@ -230,7 +220,7 @@ def cms_query(cms_df: DataFrame, items_df: DataFrame, item_col: str,
     e = items_df.select(F.col(item_col).alias("item"), rows.alias("row"))
     bucket = F.pmod(
         _hash60(F.concat_ws(phash.SEP, F.col("row").cast("string"), F.col("item")),
-                "cms", hash_fn),
+                "cms"),
         F.lit(width))
     probed = (e.select("item", "row", bucket.alias("bucket"))
               .join(F.broadcast(cms_df), ["row", "bucket"], "left")
@@ -258,8 +248,7 @@ def sql_cms_cte(source_sql: str, item_expr: str, depth: int = 4,
 RHO_SHIFT = 55  # Σ 2^(RHO_SHIFT − r) stays an exact int64 for m ≤ 64
 
 
-def hll_registers(df: DataFrame, value_col: str, b: int = 6,
-                  hash_fn: str = "portable") -> DataFrame:
+def hll_registers(df: DataFrame, value_col: str, b: int = 6) -> DataFrame:
     """HLL register table: bucket = low b hash bits, r = rank of the first
     set bit in the remaining 60−b bits (1-based from the top; all-zero rest
     ranks 60−b+1). Rank is computed with INTEGER bit-length —
@@ -269,17 +258,17 @@ def hll_registers(df: DataFrame, value_col: str, b: int = 6,
     if not 4 <= b <= 6:
         raise ValueError(f"b must be in [4, 6] (m ≤ 64 keeps the harmonic sum "
                          f"an exact int64), got {b}")
-    return hll_registers_by(df, [], value_col, b=b, hash_fn=hash_fn)
+    return hll_registers_by(df, [], value_col, b=b)
 
 
 def hll_registers_by(df: DataFrame, group_cols: list, value_col: str,
-                     b: int = 6, hash_fn: str = "portable") -> DataFrame:
+                     b: int = 6) -> DataFrame:
     """Per-group HLL register tables: (group..., bucket, r). The grouped
     form exists for the MERGE demonstration — register-wise max across
     groups reproduces the global sketch exactly (hll_union_rollup)."""
     if not 4 <= b <= 6:
         raise ValueError(f"b must be in [4, 6], got {b}")
-    h = _hash60(F.col(value_col), "hll", hash_fn)
+    h = _hash60(F.col(value_col), "hll")
     df = df.select(*group_cols, h.alias("h"))
     rest = F.shiftright(F.col("h"), b)
     width = 60 - b
@@ -381,8 +370,7 @@ def sql_hll_cte(source_sql: str, value_expr: str, b: int = 6,
 # KMV set algebra — union / intersection / Jaccard from two sketches
 # ---------------------------------------------------------------------------
 
-def kmv_set_ops(a: DataFrame, b: DataFrame, value_col: str, k: int = 64,
-                hash_fn: str = "portable") -> DataFrame:
+def kmv_set_ops(a: DataFrame, b: DataFrame, value_col: str, k: int = 64) -> DataFrame:
     """Set-cardinality algebra on two KMV sketches — the MERGEABLE-sketch
     property that matters at scale: each side reduces to its k smallest
     distinct hashes (per-partition combine, then a TakeOrdered of k rows —
@@ -405,7 +393,7 @@ def kmv_set_ops(a: DataFrame, b: DataFrame, value_col: str, k: int = 64,
         # k rows, lazily checkpointed: each sketch feeds its own stats,
         # the merge, and the common-hash join — one TakeOrdered each
         # instead of one per consumer
-        return (df.select(_hash60(F.col(value_col), "kmv", hash_fn).alias("h"))
+        return (df.select(_hash60(F.col(value_col), "kmv").alias("h"))
                 .distinct().orderBy("h").limit(k)
                 .localCheckpoint(eager=False))
 

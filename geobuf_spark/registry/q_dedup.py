@@ -532,8 +532,7 @@ def q_blocking_quality(spark, sf):
     from geobuf_spark.operators import dedup
     d = _docs(spark, sf)
     cand = (dedup.minhash_lsh_pairs(d, key="doc_id",
-                                    jaccard_threshold=0.0,
-                                    hash_fn="portable")
+                                    jaccard_threshold=0.0)
             .select("a", "b").distinct().localCheckpoint(eager=False))
     truth = (dedup.ngram_jaccard_pairs(d, key="doc_id", shingle_k=3,
                                        threshold=0.4)
@@ -577,8 +576,12 @@ def q_sorted_neighborhood(spark, sf):
     # directly comparable: sort docs by a similarity-clustering key
     # (their single minhash — min over shingle md5s), slide a width-W
     # window over the sorted order, candidates = pairs within a window.
-    # The window join is the SCALE shape: each row explodes to its W−1
-    # future rank slots and equi-joins — no rank range join. Metrics:
+    # The window join explodes each row to its W−1 future rank slots and
+    # equi-joins them (no rank range join), but the rank is a row_number()
+    # with no partition: a single-task global sort, so this query is the
+    # small-corpus comparison, not a scale path. At scale the blocking is
+    # LSH (blocking_quality, dedup.minhash_lsh_pairs), whose band buckets
+    # are the shuffle keys. Metrics:
     # pair completeness vs the exact-Jaccard truth tier (threshold 0.4,
     # same as blocking_quality) and reduction ratio.
     from geobuf_spark.functions import phash

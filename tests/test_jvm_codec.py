@@ -810,10 +810,87 @@ def _cuts_and_overruns(frame: bytes) -> list[bytes]:
     return out
 
 
+def _entry_of(key: bytes, klen: int, value: bytes, vlen: int) -> bytes:
+    """A properties field with the key and value-message lengths given."""
+    inner = (b"\x0a" + core.encode_varint(klen) + key
+             + b"\x12" + core.encode_varint(vlen) + value)
+    return b"\x12" + core.encode_varint(len(inner)) + inner
+
+
+def _count_positions(tokens, geom_type: int) -> list[int]:
+    """Indexes of the ring counts (and MultiPolygon part counts) in the
+    token stream of a well-formed ring-structured geometry."""
+    out, i = [], 0
+    while i < len(tokens):
+        nr = 1
+        if geom_type == 6:
+            out.append(i)
+            nr, i = int(tokens[i]), i + 1
+        for _ in range(nr):
+            out.append(i)
+            i += 1 + int(tokens[i])
+    return out
+
+
+def _payload_corruptions(frame: bytes) -> list[bytes]:
+    """frame broken inside a field, its top-level framing intact: each
+    field tag given wire type 1 or 5; a property entry's key, value
+    message or string length raised one byte past its message, or to
+    2**64 - 1; the geometry code given a dim of 16, 17 or 31 (the dim
+    nibble overflows into the type); a ring or part count raised one past
+    the geometry payload, or to 2**64 - 1."""
+    out = []
+    fields = _fields(frame)
+    code = next((core.decode_varint(frame, s + 1)[0]
+                 for tag, s, _ in fields if tag == 0x18), 0)
+    gt = code if code <= 6 else code >> 4
+    for tag, s, e in fields:
+        def put(field):
+            out.append(frame[:s] + field + frame[e:])
+        for wire in (1, 5):
+            out.append(frame[:s] + bytes([tag & ~7 | wire]) + frame[s + 1:])
+        n, p = core.decode_varint(frame, s + 1)
+        if tag == 0x12:
+            klen, kp = core.decode_varint(frame, p + 1)
+            key, rest = frame[kp:kp + klen], frame[kp + klen:e]
+            vlen, vp = core.decode_varint(frame, kp + klen + 1)
+            value = frame[vp:e]
+            for over in (lambda used: used + 1, lambda used: 2**64 - 1):
+                put(_entry_of(key, over(len(key) + len(rest)), value, vlen))
+                put(_entry_of(key, klen, value, over(len(value))))
+                if value[:1] == b"\x0a":  # a string value
+                    _, sp = core.decode_varint(value, 1)
+                    v2 = b"\x0a" + core.encode_varint(over(len(value) - sp)) + value[sp:]
+                    put(_entry_of(key, klen, v2, len(v2)))
+        if tag == 0x18:
+            for dim in (16, 17, 31):
+                put(b"\x18" + core.encode_varint((gt << 4) + dim))
+        if tag == 0x22 and gt in (3, 5, 6):
+            tokens = [int(t) for t in core.unpack_varints(
+                np.frombuffer(frame, np.uint8), p, p + n)]
+            for i in _count_positions(tokens, gt):
+                for big in (len(tokens) - i, 2**64 - 1):
+                    payload = core.pack_varints(np.array(
+                        tokens[:i] + [big] + tokens[i + 1:], np.uint64))
+                    put(b"\x22" + core.encode_varint(len(payload)) + payload)
+    return out
+
+
+# a Point whose string property claims 5 bytes where its value message
+# holds 2 (read unbounded, the string took the next field's bytes), and a
+# MultiPolygon whose second part claims 2 rings where 1 value is left
+_STRING_OVERRUN = bytes.fromhex("12090a016b12040a056162") + core.encode_feature(
+    core.Feature.from_geojson("Point", [1.0, 2.0]))
+_RING_OVERRUN = bytes([0x18, 6, 0x22, 8]) + core.pack_varints(
+    np.array([2, 6, 0, 0, 2, 0, 0, 2], np.uint64))
+
+
 def test_gb_decode_rejects_cut_and_overrun_frames(jvm):
     """gb_decode rejects a truncated frame or an overrunning length prefix
     exactly when the field walk does — the frames the Arrow fast path it
-    replaced rejected — and so does core.decode_feature; it reads every
+    replaced rejected — and so does core.decode_feature. Inside a field
+    the walk sees intact framing and accepts; there gb_decode and
+    core.decode_feature reject the same frames. gb_decode reads every
     frame it accepts as core does."""
     bases = [frame for _, frame in GOLDEN_FEATURES] + [
         core.encode_feature(core.Feature.from_geojson(
@@ -830,6 +907,16 @@ def test_gb_decode_rejects_cut_and_overrun_frames(jvm):
     for frame, (j, w, c) in zip(frames, verdicts):
         assert j == w == c, (frame.hex(), j, w, c)
     assert sum(not j for j, _, _ in verdicts) == 336
+    inner = [f for base in bases for f in _payload_corruptions(base)] + [
+        _STRING_OVERRUN, _RING_OVERRUN]
+    inner_verdicts = [(_jvm_accepts(decode, f), _numpy_accepts(f), _core_accepts(f))
+                      for f in inner]
+    for frame, (j, w, c) in zip(inner, inner_verdicts):
+        assert w and j == c, (frame.hex(), j, w, c)
+    # all but two: a dim-17 code reads as a valid dim-1 geometry of the next type
+    assert (len(inner), sum(not j for j, _, _ in inner_verdicts)) == (109, 107)
+    frames += inner
+    verdicts += inner_verdicts
     accepted = [f for f, (j, _, _) in zip(frames, verdicts) if j]
     df = spark_codec.decode_features_fast(_frames_df(jvm, accepted))
     for frame, r in zip(accepted, df.collect()):
