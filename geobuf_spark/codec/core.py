@@ -591,8 +591,7 @@ def decode_feature(frame: bytes, quantized: bool = False) -> Feature:
         key, props[key] = _read_entry(buf, pos, end)
         k, w, pos = read_key(end)
     if k == 3 and w == 0:
-        pos = _payload_end(buf, pos, 1)  # one code byte
-        code = int(buf[pos - 1])
+        code, pos = decode_varint(buf, pos)  # a varint, as GbCodec reads it
         # geomcode_details — geom.go:59-68
         if code <= 6:
             geom_type, dim = code, 2

@@ -9,8 +9,9 @@ that composition, Spark-first:
   1. point side: one cell per point (its tile at zoom z) — cheap, narrow;
   2. polygon side: explode the bbox tile cover (1:N duplication exactly as
      MapToSubFiles, split_combine.go:166-183);
-  3. equi-join on the cell id (`_cell_join`) — broadcast when the build side
-     is small, else shuffle-hash with AQE skew splitting;
+  3. equi-join on the cell id (`_cell_join`) — broadcast (hashing the
+     smaller side, `plans.strategy.choose_build`), else shuffle-hash with
+     AQE skew splitting;
   4. refine with the exact geometric predicate, staged AFTER the join so the
      cheap bbox/cell pruning runs first (the reference orders its stages the
      same way, split_combine.go:376-384).
@@ -28,9 +29,16 @@ Scale notes (100 TB / 1000 executors):
     splits an oversized cell partition at runtime and replicates only the
     matching build rows (BENCH/skew_r6.json: manual salting never beat the
     better of broadcast and shuffle).
-  - the polygon side should be the smaller (dimension) table; pass
-    `strategy="broadcast"` when it fits in executor memory — the cover
-    explode then happens map-side with zero shuffle.
+  - `strategy="broadcast"` is shuffle-free: one side is hashed and
+    broadcast, the other streams through it. The cover is the polygons
+    times their fan-out (611,648 rows for the flagship's 20k rects at z7,
+    12× its 50k points), so `pip_join` hashes whichever side is smaller:
+    the points when their plan estimate fits
+    `spark.sql.autoBroadcastJoinThreshold` and undercuts the counted
+    cover, else the cover (a fact-sized point table is never
+    broadcast). Use it when the cover fits in executor memory.
+    `pip_join_s2` and `pip_join_hex` have no exact cover count and
+    always hash the cover.
 """
 
 from __future__ import annotations
@@ -39,6 +47,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from geobuf_spark.functions import tiles
+from geobuf_spark.plans.strategy import choose_build
 
 
 def sql_rect_contains(lon: str, lat: str) -> str:
@@ -81,16 +90,19 @@ def _point_side(points: DataFrame, z: int, lon="lon", lat="lat") -> DataFrame:
 
 
 def _cell_join(p: DataFrame, b: DataFrame, key: str, strategy: str,
-               refine: Column | str) -> DataFrame:
+               refine: Column | str, build: str = "cover") -> DataFrame:
     """The one cell equi-join behind pip_join, pip_join_s2 and pip_join_hex:
     point side `p` × cover side `b` on `key`, then the exact refine.
 
-    "broadcast" ships the cover to every task; "shuffle" hash-partitions
-    both sides with the point side as the hash build (measured faster than
-    building on the cover side), and AQE skew-join splits hot cells. The
-    refine runs after the join, so the join is inner only."""
+    "broadcast" hashes the `build` side ("points" or "cover") and ships it
+    to every task, with no shuffle; "shuffle" hash-partitions both sides
+    with the point side as the hash build (measured faster than building
+    on the cover side), and AQE skew-join splits hot cells. The point side
+    stays on the left either way, so the columns are the same. The refine
+    runs after the join, so the join is inner only."""
     if strategy == "broadcast":
-        joined = p.join(F.broadcast(b), key)
+        joined = (F.broadcast(p).join(b, key) if build == "points"
+                  else p.join(F.broadcast(b), key))
     elif strategy == "shuffle":
         joined = p.hint("SHUFFLE_HASH").join(b, key)
     else:
@@ -116,6 +128,10 @@ def pip_join(
     `sql_rect_contains`. Returns the joined rows
     (all point columns + polygon columns minus the internal cell key).
 
+    `strategy="broadcast"` hashes the smaller side
+    (`plans.strategy.choose_build`): the row order may differ between the
+    two builds, the rows do not.
+
     `salt` is `plans.strategy.JoinPlan.salt` and must be 1: hot cells are
     split at runtime by AQE skew-join, not by replicating the cover."""
     if salt != 1:
@@ -123,8 +139,9 @@ def pip_join(
                          "split at runtime by AQE skew-join (strategy='shuffle')")
     if refine is None:
         refine = sql_rect_contains(lon, lat)
+    build = choose_build(points, polys, z)[0] if strategy == "broadcast" else "cover"
     return _cell_join(_point_side(points, z, lon, lat), _cover_side(polys, z),
-                      "cell", strategy, refine)
+                      "cell", strategy, refine, build)
 
 
 def polygon_edges(polys: DataFrame, poly_id: str = "poly_id",
@@ -231,7 +248,8 @@ def pip_join_s2(
     Unlike the mercator tile index, s2 cells keep their size near the
     poles, so high-latitude data skews less; the cover kernel guarantees
     a superset (any point in the bbox lands in a covered cell), so the
-    refine sees every true pair."""
+    refine sees every true pair. `strategy="broadcast"` hashes the cover:
+    there is no exact s2 cover count to weigh it against the points."""
     from geobuf_spark.functions import cells
     from geobuf_spark.plans.strategy import choose_s2_level
 
@@ -250,7 +268,8 @@ def pip_join_hex(points: DataFrame, polys: DataFrame, *, size_deg: float = 2.5,
     """pip_join keyed by H3-style hex cells: 6-regular neighborhoods give
     a rounder cover than square tiles (≈13% fewer false candidates for
     isotropic data at equal cell area). Same staging: hex-cover equi-join,
-    exact refine after."""
+    exact refine after. `strategy="broadcast"` hashes the cover: there is
+    no exact hex cover count to weigh it against the points."""
     from geobuf_spark.functions import hexgrid
 
     if refine is None:

@@ -83,6 +83,11 @@ _CY = f"({_sql_mulmod('p_partkey', CY_MULT, CY_MOD)} - {CY_MOD // 2})"
 _HW = f"(10000000 + (p_partkey % 100) * 1000000)"
 _HH = f"(8000000 + (p_partkey % 80) * 1000000)"
 
+def _part_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """`part`'s keys under a declared schema: no schema-inference job."""
+    return spark.read.schema("p_partkey BIGINT").parquet(f"{sf_dir}/part.parquet")
+
+
 def _part(expr: str) -> str:
     return tiles.sql_nonnull(["p_partkey"], f"{expr} / 1e7", "0e0")
 
@@ -100,7 +105,7 @@ def minted_rects(spark: SparkSession, sf_dir: str) -> DataFrame:
     Mirrors the county build side (FIXTURES.md §2): bbox = the geometry for
     rectangles, so the bbox prefilter (split_combine.go:324-331 Intersect)
     IS the exact containment predicate — SQL-expressible for the oracle."""
-    return spark.read.parquet(f"{sf_dir}/part.parquet").selectExpr(*RECTS)
+    return _part_keys(spark, sf_dir).selectExpr(*RECTS)
 
 
 SQL_MINTED_RECTS = _select(RECTS, "part")
@@ -117,7 +122,7 @@ TRIANGLES = ("p_partkey AS poly_id",
 def minted_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One triangle per part for general point-in-polygon:
     v0=(cx, cy+hh), v1=(cx-hw, cy-hh), v2=(cx+hw, cy-hh)."""
-    return spark.read.parquet(f"{sf_dir}/part.parquet").selectExpr(*TRIANGLES)
+    return _part_keys(spark, sf_dir).selectExpr(*TRIANGLES)
 
 
 SQL_MINTED_TRIANGLES = _select(TRIANGLES, "part")
@@ -137,7 +142,7 @@ def minted_rings_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (f"CASE WHEN {is_rect} THEN array({', '.join(rect)}) "
                 f"ELSE array({', '.join(tri)}) END")
 
-    return spark.read.parquet(f"{sf_dir}/part.parquet").selectExpr(
+    return _part_keys(spark, sf_dir).selectExpr(
         "p_partkey AS poly_id",
         f"CASE WHEN {is_rect} THEN 'rect' ELSE 'triangle' END AS kind",
         f"{ring(rect_xs, tri_xs)} AS xs_q",

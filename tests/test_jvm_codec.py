@@ -215,6 +215,23 @@ def test_golden_feature_frames(jvm):
         assert r.props_json == json.dumps(f.properties, sort_keys=True)
 
 
+def test_geometry_code_is_a_varint(jvm):
+    """Field 3 is `0x18 varint` (PAPER.md §1.2): the golden LineString
+    with its code 2 written as the two-byte varint `82 00` decodes, in
+    core.decode_feature and in gb_decode, to the same feature as the
+    canonical frame."""
+    (t, c, i, p), frame = GOLDEN_FEATURES[1]
+    assert frame[2:4] == b"\x18\x02"
+    long_code = frame[:3] + b"\x82\x00" + frame[4:]
+    want = core.Feature.from_geojson(t, c, id=i, properties=p)
+    r = spark_codec.decode_features_fast(_frames_df(jvm, [long_code])).first()
+    for got in (core.decode_feature(long_code), r):
+        assert (got.id, got.geom_type, got.dim, list(got.coords),
+                list(got.ring_lens), list(got.part_rings)) == (
+            want.id, want.geom_type, want.dim, want.coords.tolist(),
+            want.ring_lens.tolist(), want.part_rings.tolist())
+
+
 @pytest.mark.parametrize("bad, shown", [(float("nan"), "NaN"),
                                         (float("inf"), "Infinity"),
                                         (float("-inf"), "-Infinity")])

@@ -16,6 +16,10 @@ def test_choose_strategy_broadcast_small(spark, sf_small):
     plan = strategy.choose_strategy(pts, rects, z=6)
     assert plan.strategy == "broadcast"
     assert plan.build_rows > 0
+    # 500 points against the 200 rectangles' z6 cover: the points are hashed
+    assert plan.build == "points"
+    assert f"cover {plan.build_rows} rows" in plan.reason
+    assert "hash the points" in plan.reason
 
 
 def test_choose_strategy_over_budget_is_shuffle(spark, sf_small):
@@ -24,7 +28,7 @@ def test_choose_strategy_over_budget_is_shuffle(spark, sf_small):
         "lon", F.raise_error(F.lit("points were read")).cast("double"))
     rects = minted.minted_rects(spark, sf_small)
     plan = strategy.choose_strategy(pts, rects, z=6, broadcast_budget_rows=10)
-    assert (plan.strategy, plan.salt) == ("shuffle", 1)
+    assert (plan.strategy, plan.salt, plan.build) == ("shuffle", 1, "points")
     assert plan.build_rows > 10
     assert "AQE skew-join" in plan.reason
 
@@ -170,6 +174,121 @@ def test_cell_join_node(spark, sf_small, index, strat):
     for s, node in _JOIN_NODES.items():
         assert (node in plan) == (s == strat), plan
     assert "SortMergeJoin" not in plan, plan
+
+
+def _broadcast_side(plan: str) -> str:
+    """The subtree under the plan's one BroadcastExchange, as plan text."""
+    lines = plan.splitlines()
+    [i] = [n for n, line in enumerate(lines) if "BroadcastExchange" in line]
+    col = lines[i].index("BroadcastExchange")
+    sub = [lines[i]]
+    for line in lines[i + 1:]:
+        if len(line) - len(line.lstrip(" :+-")) <= col:
+            break
+        sub.append(line)
+    return "\n".join(sub)
+
+
+def _join_line(plan: str) -> str:
+    [line] = [x for x in plan.splitlines() if "BroadcastHashJoin" in x]
+    return line
+
+
+def _range_points(spark, n):
+    return spark.range(n).withColumnRenamed("id", "doc_id").selectExpr(*minted.POINTS)
+
+
+def test_broadcast_hashes_smaller_point_side(spark, sf_small):
+    """100 points against the 200 rectangles' z6 cover: the points are
+    the smaller side, so they are hashed under the one BroadcastExchange
+    and the cover streams through them."""
+    rects = minted.minted_rects(spark, sf_small)
+    joined = sj.pip_join(_range_points(spark, 100), rects, z=6)
+    plan = _final_plan(joined)
+    assert "BuildLeft" in _join_line(plan), plan
+    side = _broadcast_side(plan)
+    assert "Range (0, 100" in side and "part.parquet" not in side, side
+    build, reason = strategy.choose_build(_range_points(spark, 100), rects, 6)
+    assert build == "points" and "hash the points" in reason
+
+
+def test_broadcast_hashes_smaller_cover(spark, sf_small):
+    """5 rectangles against 2,000 points: the cover is the smaller side
+    and is hashed, as before the build side was chosen."""
+    rects = minted.minted_rects(spark, sf_small).orderBy("poly_id").limit(5)
+    plan = _final_plan(sj.pip_join(_range_points(spark, 2000), rects, z=6))
+    assert "BuildRight" in _join_line(plan), plan
+    side = _broadcast_side(plan)
+    assert "part.parquet" in side and "Range (0, 2000" not in side, side
+
+
+def _jobs(spark, fn):
+    """(fn(), ids of the Spark jobs fn started)."""
+    import uuid
+
+    sc, group = spark.sparkContext, uuid.uuid4().hex
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def _with_conf(spark, conf: dict, fn):
+    old = {k: spark.conf.get(k) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        return fn()
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+
+
+@pytest.mark.parametrize("threshold", ["-1", "1024"])
+def test_broadcast_over_threshold_hashes_cover_and_counts_nothing(spark, sf_small,
+                                                                 threshold):
+    """With spark.sql.autoBroadcastJoinThreshold at -1, or under the point
+    side's estimate (100 points, ~2 kB), the point side is never a
+    broadcast candidate: building the join starts no job and the cover is
+    hashed, the plan before the build side was chosen. Under the
+    threshold the build starts one job, the cover count."""
+    rects = minted.minted_rects(spark, sf_small)
+    pts = _range_points(spark, 100)
+    joined, jobs = _with_conf(
+        spark, {"spark.sql.autoBroadcastJoinThreshold": threshold},
+        lambda: _jobs(spark, lambda: sj.pip_join(pts, rects, z=6)))
+    assert len(jobs) == 0, jobs
+    plan = _final_plan(joined)
+    assert "BuildRight" in _join_line(plan), plan
+    assert "part.parquet" in _broadcast_side(plan), plan
+    _, jobs = _jobs(spark, lambda: sj.pip_join(pts, rects, z=6))
+    assert len(jobs) == 1, jobs
+
+
+def test_minted_fixtures_start_no_job(spark, sf_small):
+    """The `part` fixtures read under a declared schema: building them
+    starts no schema-inference job."""
+    for fixture in (minted.minted_rects, minted.minted_triangles,
+                    minted.minted_rings_q):
+        _, jobs = _jobs(spark, lambda: fixture(spark, sf_small))
+        assert len(jobs) == 0, (fixture.__name__, jobs)
+
+
+def test_broadcast_builds_give_equal_rows(spark, sf_small):
+    """Hashing the points or the cover changes the plan, not the rows."""
+    pts = minted.minted_points(spark, sf_small)
+    rects = minted.minted_rects(spark, sf_small)
+
+    def run():
+        joined = sj.pip_join(pts, rects, z=6)
+        return "BuildLeft" in _join_line(_final_plan(joined)), sorted(joined.collect())
+    left, by_points = run()
+    right, by_cover = _with_conf(
+        spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}, run)
+    assert (left, right) == (True, False)
+    assert by_points == by_cover and len(by_points) > 0
 
 
 # AQE skew-join at test scale: any partition over 64k and twice the median
@@ -338,8 +457,9 @@ def test_flagship_codec_evaluated_once(spark, sf_small):
     JVM, each UDF once per row. No inferred isnotnull filter or collapsed
     projection repeats gb_point/gb_point_enc, or the md5 minting under
     them: the plan holds no more md5 calls than minting the pages alone.
-    The rectangles are broadcast once and the only shuffle is the one
-    feeding the histogram's final aggregate."""
+    The point side, smaller than the rectangles' tile cover, is
+    broadcast once and the only shuffle is the one feeding the
+    histogram's final aggregate."""
     from geobuf_spark.codec import spark_codec
     from geobuf_spark.operators import tiling
     from geobuf_spark.sources import pages
@@ -359,8 +479,8 @@ def test_flagship_codec_evaluated_once(spark, sf_small):
     assert plan.count("gb_point(") == 1, plan
     assert plan.count("gb_point_enc(") == 1, plan
     assert plan.count("md5(") == _final_plan(p).count("md5("), plan
-    assert "BroadcastHashJoin" in plan, plan
-    assert plan.count("BroadcastExchange") == 1, plan
+    assert "BuildLeft" in _join_line(plan), plan
+    assert "Range (0, 2000" in _broadcast_side(plan), plan
     assert plan.count("Exchange hashpartitioning") == 1, plan
 
 
