@@ -25,6 +25,21 @@ Documented divergences from the reference (quirks we do NOT copy):
   < 2**56, which covers every legal coordinate delta; we use standard
   varints (up to 10 bytes), byte-identical on that domain.
 
+Frame reading rules — one walk, ``frame_fields``; GbCodec.java's
+``Walker`` reads a frame by the same rules:
+- a tag is a varint, and every varint is at most 10 bytes;
+- wire 0 is a varint, wire 2 a length prefix whose payload must fit
+  inside the frame; any other wire type rejects the frame;
+- fields may come in any order and may repeat; unknown fields are
+  skipped;
+- the last id wins, the first geometry code and the first geometry
+  payload win, the last bbox wins;
+- a bbox payload that does not hold four whole varints is no bbox;
+- every field-2 entry is a property; a repeated key keeps its first
+  position and takes its last value;
+- a frame with no geometry code or no geometry payload is bare
+  (geom_type 0, dim 2, no coordinates).
+
 Geometry model (columnar, Arrow-friendly):
     coords     flat float64 array, interleaved per vertex (x,y[,z,m...])
     ring_lens  vertices per ring (one entry for Point/LineString/MultiPoint)
@@ -74,10 +89,9 @@ def encode_varint(x: int) -> bytes:
 
 def decode_varint(buf, pos: int) -> tuple[int, int]:
     """Read one varint starting at pos → (value, new_pos); raises past the
-    end of buf."""
+    end of buf or past 10 bytes."""
     result = 0
-    shift = 0
-    while True:
+    for shift in range(0, 70, 7):
         if pos >= len(buf):
             raise ValueError("truncated or corrupt frame: varint running past the end")
         b = int(buf[pos])
@@ -85,7 +99,7 @@ def decode_varint(buf, pos: int) -> tuple[int, int]:
         result |= (b & 0x7F) << shift
         if b < 0x80:
             return result & ((1 << 64) - 1), pos
-        shift += 7
+    raise ValueError("truncated or corrupt frame: varint longer than 10 bytes")
 
 
 def _payload_end(buf, pos: int, size: int) -> int:
@@ -177,6 +191,8 @@ def unpack_varints(buf: np.ndarray, start: int, end: int) -> np.ndarray:
     starts = np.concatenate(([0], ends[:-1] + 1))
     lens = ends - starts + 1
     maxlen = int(lens.max())
+    if maxlen > 10:
+        raise ValueError("truncated or corrupt frame: varint longer than 10 bytes")
     vals = np.zeros(len(ends), dtype=np.uint64)
     payload = (seg & 0x7F).astype(np.uint64)
     for j in range(maxlen):
@@ -339,14 +355,21 @@ def _make_keyvalue(key: str, value) -> bytes:
     return bytes([18]) + encode_varint(len(inner)) + inner
 
 
+def _read_key(buf, p: int, end: int) -> tuple[str, int]:
+    """(key, end of the key) of the property entry buf[p:end]."""
+    entry = buf[:end]
+    klen, p = decode_varint(entry, p + 1)  # after the 0x0A key tag
+    e = _payload_end(entry, p, klen)
+    return bytes(entry[p:e]).decode("utf-8"), e
+
+
 def _read_entry(buf, p: int, end: int):
     """(key, value) of the property entry buf[p:end]. Every read is bounded
     by its message: the key and the value message by the entry, the value
     by its value message; a length running past its message raises."""
+    key, p = _read_key(buf, p, end)
     entry = buf[:end]
-    klen, p = decode_varint(entry, p + 1)  # after the 0x0A key tag
-    key = bytes(entry[p : _payload_end(entry, p, klen)]).decode("utf-8")
-    vlen, p = decode_varint(entry, p + klen + 1)  # the value's length, after its 0x12 tag
+    vlen, p = decode_varint(entry, p + 1)  # the value's length, after its 0x12 tag
     return key, _read_value(entry[: _payload_end(entry, p, vlen)], p)[0]
 
 
@@ -531,98 +554,90 @@ def _decode_geometry(vals: np.ndarray, geom_type: int, dim: int, quantized: bool
     )
 
 
-def decode_properties(frame) -> dict:
-    """Properties ONLY — a field walk that jumps id/geometry/bbox bytes via
-    their varint length prefixes (ReadKeys-style traversal, reader.go:
-    120-142, but parsing values too). Order-tolerant, unlike the strict
-    field-ordered full decoder. A field cut short by the frame end raises."""
-    buf = np.frombuffer(frame, dtype=np.uint8) if isinstance(frame, (bytes, bytearray)) else frame
+def frame_fields(buf):
+    """The field walk of a frame, the one every reader here loops over
+    (read_feature.go:9-100; ReadKeys jumps, reader.go:120-142): yields
+    (tag, value, start) per field, value the varint of a wire-0 field or
+    the payload length of a wire-2 field, whose payload is
+    buf[start:start + value]. A wire type other than 0 or 2, an
+    overlong varint and a field cut short by the frame end raise."""
     pos, n = 0, len(buf)
-    props: dict = {}
     while pos < n:
         tag, pos = decode_varint(buf, pos)
-        k, w = tag >> 3, tag & 7
-        if w == 0:
-            _, pos = decode_varint(buf, pos)
-        elif w == 2:
-            size, pos = decode_varint(buf, pos)
-            end = _payload_end(buf, pos, size)
-            if k == 2:
-                key, props[key] = _read_entry(buf, pos, end)
-            pos = end
-        else:
-            raise ValueError(f"unexpected wire type {w} in feature frame")
-    return props
+        if tag & 7 not in (0, 2):
+            raise ValueError(f"truncated or corrupt frame: unexpected wire type {tag & 7}")
+        value, pos = decode_varint(buf, pos)
+        start = pos
+        if tag & 7 == 2:
+            pos = _payload_end(buf, pos, value)
+        yield tag, value, start
+
+
+def decode_properties(frame) -> dict:
+    """Properties ONLY: the field walk parses the 0x12 entries and jumps
+    id/geometry/bbox bytes. A field or entry that does not parse raises."""
+    return dict(_read_entry(frame, s, s + n)
+                for tag, n, s in frame_fields(frame) if tag == 0x12)
+
+
+def _read_bbox(buf, pos: int, end: int):
+    """readboundingbox — geom.go:161-169: 4 × sv/1e7, or None when
+    buf[pos:end] does not hold four whole varints."""
+    box, vals = buf[:end], []
+    try:
+        for _ in range(4):
+            v, pos = decode_varint(box, pos)
+            vals.append(v)
+    except ValueError:
+        return None
+    return unzigzag_vec(np.array(vals, dtype=np.uint64)).astype(np.float64) / POWER
 
 
 def decode_feature(frame: bytes, quantized: bool = False) -> Feature:
-    """ReadFeature — read_feature.go:9-100 (strict field order, all optional).
+    """ReadFeature — read_feature.go:9-100, one pass of frame_fields under
+    the rules in the module docstring.
 
     With ``quantized=True`` coords are exact int64 lattice values (×1e7).
-    A field cut short by the frame end or by its message, a wire type
-    other than 0 or 2, a geometry payload ending mid-varint, an unknown
-    geometry type or dim 0, and a value or ring count that does not fit
-    the geometry payload raise ValueError."""
+    What frame_fields rejects, a property entry that does not parse, a
+    geometry payload ending mid-varint, an unknown geometry type or dim
+    0, and a value or ring count that does not fit the geometry payload
+    raise ValueError."""
     buf = np.frombuffer(frame, dtype=np.uint8)
-    fid = None
+    fid = code = geom = bbox = None
     props: dict = {}
-    geom_type = 0
-    dim = 2
+    for tag, n, s in frame_fields(buf):
+        if tag == 0x08:
+            fid = n
+        elif tag == 0x12:
+            key, props[key] = _read_entry(buf, s, s + n)
+        elif tag == 0x18 and code is None:
+            code = n
+        elif tag == 0x22 and geom is None:
+            geom = s, s + n
+        elif tag == 0x2A:
+            bbox = s, s + n
+    geom_type, dim = 0, 2
     coords = np.empty(0)
-    ring_lens = np.empty(0, dtype=np.int64)
-    part_rings = np.empty(0, dtype=np.int64)
-    bbox = None
-
-    def read_key(p):
-        if p >= len(buf):  # the frame end reads as key 0, which ends the walk
-            return 0, 0, p
-        tag, p = decode_varint(buf, p)
-        if tag & 7 not in (0, 2):  # as decode_properties rejects it
-            raise ValueError(f"truncated or corrupt frame: unexpected wire type {tag & 7}")
-        return tag >> 3, tag & 7, p
-
-    k, w, pos = read_key(0)
-    if k == 1 and w == 0:
-        fid, pos = decode_varint(buf, pos)
-        k, w, pos = read_key(pos)
-    while k == 2 and w == 2:
-        size, pos = decode_varint(buf, pos)
-        end = _payload_end(buf, pos, size)
-        key, props[key] = _read_entry(buf, pos, end)
-        k, w, pos = read_key(end)
-    if k == 3 and w == 0:
-        code, pos = decode_varint(buf, pos)  # a varint, as GbCodec reads it
-        # geomcode_details — geom.go:59-68
-        if code <= 6:
-            geom_type, dim = code, 2
+    ring_lens = part_rings = np.empty(0, dtype=np.int64)
+    if code is not None and geom is not None:
+        # geomcode_details — geom.go:59-68; writepointbs drops dims > 2
+        # (geom.go:187-201), so a Point's dim is 2 whatever the code says
+        if code > 6:
+            geom_type, dim = code >> 4, code & 0xF
         else:
-            geom_type, dim = code >> 4, code - ((code >> 4) << 4)
+            geom_type = code
         if geom_type == 1:
-            # writepointbs drops dims > 2 (geom.go:187-201): only x,y are
-            # on the wire, so the Feature's dim must say 2 or vertices()
-            # reshapes a 2-value array into dim-wide rows and breaks
             dim = 2
-        k, w, pos = read_key(pos)
-    if k == 4 and w == 2:
-        size, pos = decode_varint(buf, pos)
-        endpos = _payload_end(buf, pos, size)
-        if size and buf[endpos - 1] >= 0x80:
+        s, e = geom
+        if e > s and buf[e - 1] >= 0x80:
             raise ValueError("truncated or corrupt frame: geometry payload ending mid-varint")
-        vals = unpack_varints(buf, pos, endpos)
-        coords, ring_lens, part_rings = _decode_geometry(vals, geom_type, dim, quantized)
-        pos = endpos
-        k, w, pos = read_key(pos)
-    if k == 5 and w == 2:
-        # readboundingbox — geom.go:161-169: length varint then 4 × sv/1e7
-        size, pos = decode_varint(buf, pos)
-        vals = unpack_varints(buf, pos, _payload_end(buf, pos, size))[:4]
-        bbox = unzigzag_vec(vals).astype(np.float64) / POWER
-
+        coords, ring_lens, part_rings = _decode_geometry(
+            unpack_varints(buf, s, e), geom_type, dim, quantized)
     dtype = np.int64 if quantized else np.float64
     return Feature(
         geom_type=geom_type, dim=dim, coords=np.asarray(coords, dtype=dtype),
         ring_lens=ring_lens, part_rings=part_rings, id=fid, properties=props,
-        bbox=bbox,
+        bbox=_read_bbox(buf, *bbox) if bbox else None,
     )
 
 
@@ -647,16 +662,19 @@ def read_frames(data: bytes, skip_metadata: bool = True):
     payload is Go-specific and intentionally not parsed (our engine's index
     is table partitioning, SURVEY §1.5). Pass skip_metadata=False when the
     bytes are a mid-file range (subfile seeks) where no dummy can occur.
+    A frame tag other than 0x0A and a frame cut short by the end of data
+    raise ValueError, as gb_frames fails.
     """
     pos = 0
     first = skip_metadata
     n = len(data)
     while pos < n:
-        assert data[pos] == 0x0A, f"bad frame tag {data[pos]:#x} at {pos}"
-        pos += 1
-        ln, pos = decode_varint(data, pos)
-        frame = data[pos : pos + ln]
-        pos += ln
+        if data[pos] != 0x0A:
+            raise ValueError(f"truncated or corrupt stream: bad frame tag {data[pos]:#x} at {pos}")
+        ln, pos = decode_varint(data, pos + 1)
+        end = _payload_end(data, pos, ln)
+        frame = data[pos:end]
+        pos = end
         if first:
             first = False
             if _is_metadata_frame(frame):
@@ -672,89 +690,10 @@ def _is_metadata_frame(frame: bytes) -> bool:
     property, so a legitimate first feature that happens to carry a
     "metadata" key among others is not silently dropped. (A single-
     property feature keyed exactly "metadata" remains ambiguous — the
-    reference's own sniff has the same blind spot.)"""
+    reference's own sniff has the same blind spot.) A frame the field
+    walk or the key read rejects is not the dummy."""
     try:
-        buf = np.frombuffer(frame, dtype=np.uint8)
-        pos = 0
-        tag, pos = decode_varint(buf, pos)
-        if tag >> 3 == 1 and tag & 7 == 0:  # optional id
-            _, pos = decode_varint(buf, pos)
-            tag, pos = decode_varint(buf, pos)
-        if tag >> 3 != 2 or tag & 7 != 2:
-            return False
-        esize, pos = decode_varint(buf, pos)  # map-entry size
-        entry_end = pos + esize
-        pos += 1  # 0x0A key tag
-        klen, pos = decode_varint(buf, pos)
-        if bytes(buf[pos : pos + klen]) != b"metadata":
-            return False
-        # the dummy has exactly ONE property: the next field after this
-        # map entry must not be another properties field (tag 0x12)
-        return entry_end >= len(buf) or buf[entry_end] != 0x12
-    except Exception:
+        entries = [(s, s + n) for tag, n, s in frame_fields(frame) if tag == 0x12]
+        return len(entries) == 1 and _read_key(frame, *entries[0])[0] == "metadata"
+    except ValueError:
         return False
-
-
-# ---------------------------------------------------------------------------
-# vectorized field walk — the reference for the JVM Walker's accept/reject
-# rules (tests/test_jvm_codec.py::test_corrupt_frame_accept_reject_parity)
-# ---------------------------------------------------------------------------
-
-def _read_varint_at(flat: np.ndarray, pos: np.ndarray):
-    """Vectorized varint read at positions `pos` → (values, byte lengths)."""
-    vals = np.zeros(len(pos), dtype=np.uint64)
-    lens = np.zeros(len(pos), dtype=np.int64)
-    done = np.zeros(len(pos), dtype=bool)
-    last = len(flat) - 1
-    for j in range(10):
-        # clamp: rows already done may point past the buffer (a varint that
-        # ends exactly at the frame/buffer boundary)
-        b = flat[np.minimum(pos + j, last)]
-        use = ~done
-        vals[use] |= (b[use].astype(np.uint64) & np.uint64(0x7F)) << np.uint64(7 * j)
-        fin = use & (b < 0x80)
-        lens[fin] = j + 1
-        done |= fin
-        if done.all():
-            break
-    return vals, lens
-
-
-def frame_fields_walk(flat: np.ndarray, starts: np.ndarray, ends: np.ndarray):
-    """Field-level walk over frames: yields per round (active frame idx,
-    tag byte, field payload start, payload length). Varint fields report
-    length 0 with start at the varint. Each field takes at least 2 bytes
-    (tag + one varint byte), so the longest frame bounds the rounds."""
-    pos = starts.copy()
-    rounds = []
-    active = np.flatnonzero(pos < ends)
-    budget = int((ends - starts).max(initial=0)) // 2 + 1
-    for _ in range(budget):
-        if len(active) == 0:
-            break
-        p = pos[active]
-        tag = flat[p]
-        wire = tag & 0x7
-        # varint fields (wire 0): value right after tag
-        v, vl = _read_varint_at(flat, p + 1)
-        if (vl == 0).any():
-            raise ValueError(
-                f"{int((vl == 0).sum())} frame(s) with a varint longer than "
-                "10 bytes or running past the frame end — truncated or "
-                "corrupt input")
-        is_len = wire == 2
-        plen = np.where(is_len, v.astype(np.int64), 0)
-        pstart = p + 1 + np.where(is_len, vl, 0)
-        rounds.append((active.copy(), tag.copy(), pstart, plen, v, vl))
-        pos[active] = np.where(is_len, pstart + plen, p + 1 + vl)
-        # a field whose payload jump lands past its frame boundary would
-        # otherwise drop out of the walk silently — with its tail bytes
-        # unparsed, a truncated frame could still decode (e.g. a clipped
-        # trailing bbox) instead of failing
-        over = (pos[active] > ends[active]) | (plen < 0)
-        if over.any():
-            raise ValueError(
-                f"{int(over.sum())} frame(s) with a field payload running "
-                "past the frame end — truncated or corrupt input")
-        active = active[pos[active] < ends[active]]
-    return rounds

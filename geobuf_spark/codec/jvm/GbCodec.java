@@ -33,21 +33,30 @@ import scala.collection.Seq;
  * no sbt needed.
  *
  * Wire layout (write_feature.go:192-263 semantics, byte-identical to the
- * Python encoder): single-byte protobuf tags, 0x08 varint id (last wins),
- * 0x18 varint geometry code (first wins), 0x22 length-prefixed geometry
- * payload of zigzag varints (first wins), anything else skipped by wire
- * type (wire 2 = length-delimited jump, all others read as varint — the
- * exact rule core.frame_fields_walk applies).
+ * Python encoder): 0x08 varint id, 0x12 property entries, 0x18 varint
+ * geometry code, 0x22 length-prefixed geometry payload of zigzag varints,
+ * 0x2A length-prefixed bbox.
  *
- * The field walk accepts and rejects exactly the frames the numpy
- * core.frame_fields_walk does. A corrupt frame fails the task: a field
- * payload or the geometry payload overrunning the frame, a payload ending
- * mid-varint, a missing geometry/code, a non-point payload in Point, a
- * token count not divisible by dim in lines. No field count is capped:
- * the frame length bounds the walk.
- * gb_decode also rejects what core.decode_feature rejects: an invalid or
- * overrunning ring count, an unknown geometry type, and properties that
- * core.decode_properties cannot parse.
+ * Every UDF that reads a frame's fields does so in one Walker pass (walk),
+ * under the rules of core.frame_fields:
+ * - a tag is a varint, and every varint is at most 10 bytes;
+ * - wire 0 is a varint, wire 2 a length prefix whose payload must fit
+ *   inside the frame; any other wire type rejects the frame;
+ * - fields may come in any order and may repeat; unknown fields are
+ *   skipped;
+ * - the last id wins, the first geometry code and the first geometry
+ *   payload win, the last bbox wins;
+ * - a bbox payload that does not hold four whole varints is no bbox;
+ * - every field-2 entry is a property; a repeated key keeps its first
+ *   position and takes its last value;
+ * - a frame with no geometry code or no geometry payload is bare
+ *   (geom_type 0); the geometry decoders other than gb_decode reject it.
+ * A corrupt frame fails the task. No field count is capped: the frame
+ * length bounds the walk. The geometry decoders also reject a payload
+ * ending mid-varint, a non-point payload in Point and a token count not
+ * divisible by dim in lines; gb_decode rejects what core.decode_feature
+ * rejects: an invalid or overrunning ring count, an unknown geometry
+ * type, dim 0, and property entries that do not parse.
  */
 public final class GbCodec {
     private GbCodec() {}
@@ -61,26 +70,18 @@ public final class GbCodec {
         return functions.udf((UDF1<?, ?>) f, type);
     }
 
-    /** Parsed frame: id, geometry code, payload token values (zigzagged). */
-    static final class Frame {
-        long id;
-        int code = -1;
-        long[] tokens;
-    }
-
     /**
-     * Bounds-checked forward walk over b[p..end) - the
-     * core.frame_fields_walk rules: single-byte tags, wire 2 jumps its
-     * varint length prefix, every other wire type reads as a varint. The
-     * frame length bounds the walk: each field takes at least 2 bytes. A
-     * varint longer than 10 bytes or running past the end, and a payload
-     * running past the end, throw.
+     * Bounds-checked forward reader over b[p..end): varints of at most 10
+     * bytes, and next(), the field walk under the rules in the class
+     * header. A varint running past the end or longer than 10 bytes, a
+     * wire type other than 0 or 2, and a payload running past the end
+     * throw.
      */
     static final class Walker {
         final byte[] b;
         final int end;
-        int p, tag, start;
-        long value;
+        int p, start;
+        long tag, value;
 
         Walker(byte[] b, int p, int end) {
             this.b = b;
@@ -115,34 +116,75 @@ public final class GbCodec {
         /** Next field: tag, value (the length for wire 2), payload start. */
         boolean next() {
             if (p >= end) return false;
-            tag = b[p++] & 0xFF;
+            tag = varint();
+            int wire = (int) tag & 7;
+            if (wire != 0 && wire != 2)
+                throw new IllegalArgumentException(
+                    "unexpected wire type " + wire + " - truncated or corrupt input");
             value = varint();
-            if ((tag & 0x7) == 2) start = skip(value);
+            start = wire == 2 ? skip(value) : p;
             return true;
         }
     }
 
+    private static final int[] NO_ENTRIES = new int[0];
+
+    /** One frame's fields: last id, first geometry code and payload, last
+     *  bbox, and the bounds of every property entry (start, end pairs). */
+    static final class Frame {
+        final byte[] b;
+        long id, code;
+        boolean coded;
+        int gs = -1, gl, bs = -1, bl, np;
+        int[] props = NO_ENTRIES;
+
+        Frame(byte[] b) {
+            this.b = b;
+        }
+
+        /** The geometry payload's token values (zigzagged); a bare frame
+         *  throws. */
+        long[] tokens() {
+            if (!coded || gs < 0)
+                throw new IllegalArgumentException(
+                    "frame missing geometry-type or geometry field");
+            return payloadTokens(b, gs, gl);
+        }
+
+        /** dim of the geometry code (geomcode_details, geom.go:59-68). */
+        int dim() {
+            return code <= 6 ? 2 : (int) (code & 0xF);
+        }
+    }
+
+    /** The one pass over a frame's fields; null for a null frame. */
     static Frame walk(byte[] b) {
         if (b == null) return null;
-        Frame f = new Frame();
-        int gs = -1, gl = 0;
+        Frame f = new Frame(b);
         Walker w = new Walker(b, 0, b.length);
         while (w.next()) {
             if (w.tag == 0x08) f.id = w.value;
-            else if (w.tag == 0x18 && f.code < 0) f.code = (int) w.value;
-            else if (w.tag == 0x22 && gs < 0) { gs = w.start; gl = (int) w.value; }
+            else if (w.tag == 0x12) {
+                if (f.np == f.props.length) f.props = java.util.Arrays.copyOf(f.props, 2 * f.np + 2);
+                f.props[f.np++] = w.start;
+                f.props[f.np++] = w.p;
+            } else if (w.tag == 0x18 && !f.coded) {
+                f.code = w.value;
+                f.coded = true;
+            } else if (w.tag == 0x22 && f.gs < 0) {
+                f.gs = w.start;
+                f.gl = (int) w.value;
+            } else if (w.tag == 0x2A) {
+                f.bs = w.start;
+                f.bl = (int) w.value;
+            }
         }
-        if (f.code < 0 || gs < 0)
-            throw new IllegalArgumentException(
-                "frame missing geometry-type or geometry field");
-        f.tokens = payloadTokens(b, gs, gl);
         return f;
     }
 
     /**
      * Varint values of the geometry payload b[gs..gs+gl): a payload ending
-     * mid-varint throws; bits past the 64th are dropped, as numpy's shifts
-     * drop them.
+     * mid-varint and a varint longer than 10 bytes throw.
      */
     static long[] payloadTokens(byte[] b, int gs, int gl) {
         if (gl > 0 && (b[gs + gl - 1] & 0xFF) >= 0x80)
@@ -156,7 +198,10 @@ public final class GbCodec {
         long v = 0;
         for (int i = gs; i < gs + gl; i++) {
             int c = b[i] & 0xFF;
-            if (shift < 64) v |= (long) (c & 0x7F) << shift;
+            if (shift > 63)
+                throw new IllegalArgumentException(
+                    "geometry varint longer than 10 bytes - truncated or corrupt input");
+            v |= (long) (c & 0x7F) << shift;
             shift += 7;
             if (c < 0x80) { toks[ti++] = v; v = 0; shift = 0; }
         }
@@ -207,10 +252,11 @@ public final class GbCodec {
         public long[] call(byte[] b) {
             Frame f = walk(b);
             if (f == null) return null;
-            if (f.tokens.length != 2)
+            long[] t = f.tokens();
+            if (t.length != 2)
                 throw new IllegalArgumentException(
                     "not a point frame (geometry is not 2 values)");
-            return new long[]{f.id, unzigzag(f.tokens[0]), unzigzag(f.tokens[1])};
+            return new long[]{f.id, unzigzag(t[0]), unzigzag(t[1])};
         }
     }
 
@@ -225,12 +271,11 @@ public final class GbCodec {
         public long[] call(byte[] b) {
             Frame f = walk(b);
             if (f == null) return null;
-            int dim = f.code <= 6 ? 2 : (f.code & 0xF);
-            if (f.tokens.length % dim != 0)
+            long[] t = f.tokens();
+            if (t.length % f.dim() != 0)
                 throw new IllegalArgumentException(
                     "line geometry token count not divisible by dim");
-            long firstX = f.tokens.length > 0 ? unzigzag(f.tokens[0]) : 0L;
-            return new long[]{f.id, f.tokens.length, firstX};
+            return new long[]{f.id, t.length, t.length > 0 ? unzigzag(t[0]) : 0L};
         }
     }
 
@@ -244,8 +289,8 @@ public final class GbCodec {
         public long[] call(byte[] b) {
             Frame f = walk(b);
             if (f == null) return null;
-            int dim = f.code <= 6 ? 2 : (f.code & 0xF);
-            int m = f.tokens.length;
+            long[] t = f.tokens();
+            int dim = f.dim(), m = t.length;
             if (m % dim != 0)
                 throw new IllegalArgumentException(
                     "line geometry token count not divisible by dim");
@@ -254,7 +299,7 @@ public final class GbCodec {
             for (int d = 0; d < dim; d++) {
                 long acc = 0;
                 for (int i = d; i < m; i += dim) {
-                    acc += unzigzag(f.tokens[i]);
+                    acc += unzigzag(t[i]);
                     out[i + 1] = acc;
                 }
             }
@@ -276,9 +321,8 @@ public final class GbCodec {
         public long[] call(byte[] b) {
             Frame f = walk(b);
             if (f == null) return null;
-            int dim = f.code <= 6 ? 2 : (f.code & 0xF);
-            long[] t = f.tokens;
-            int m = t.length;
+            long[] t = f.tokens();
+            int dim = f.dim(), m = t.length;
             // first pass: count rings and coord tokens, validate counts
             int rings = 0, coordToks = 0;
             for (int p = 0; p < m; ) {
@@ -516,23 +560,18 @@ public final class GbCodec {
 
     /**
      * gb_bbox(geobuf) -> [w, s, e, n] quantized, or null when the frame
-     * has no bbox field - ReadBB (read_feature.go:103-134): the fields are
+     * has no bbox - ReadBB (read_feature.go:103-134): the fields are
      * walked forward and the geometry is jumped through its length prefix,
-     * its deltas never decoded. A repeated bbox field resolves to the last
-     * one. The walk alone decides accept or reject (same rules as
-     * core.frame_fields_walk); a bbox payload that does not hold four
-     * varints reads as no bbox.
+     * its deltas never decoded. The last bbox field wins. The walk alone
+     * decides accept or reject; a bbox payload that does not hold four
+     * whole varints reads as no bbox.
      */
     public static final class Bbox implements UDF1<byte[], long[]> {
         @Override
         public long[] call(byte[] b) {
-            if (b == null) return null;
-            Walker w = new Walker(b, 0, b.length);
-            int bs = -1, bl = 0;
-            while (w.next())
-                if (w.tag == 0x2A) { bs = w.start; bl = (int) w.value; }
-            if (bs < 0) return null;
-            Walker v = new Walker(b, bs, bs + bl);
+            Frame f = walk(b);
+            if (f == null || f.bs < 0) return null;
+            Walker v = new Walker(b, f.bs, f.bs + f.bl);
             long[] out = new long[4];
             try {
                 for (int i = 0; i < 4; i++) out[i] = unzigzag(v.varint());
@@ -556,14 +595,11 @@ public final class GbCodec {
     /**
      * gb_decode(geobuf) -> Row(id, geom_type, dim, coords, ring_lens,
      * part_rings, props_json), the GEOM_SCHEMA row of one frame in one
-     * Walker pass: id 0 when absent (last id wins), first geometry code and
-     * first geometry payload win. A frame without a code or a payload is a
-     * bare frame: geom_type 0, dim 2, empty arrays. Coordinates are
-     * round7 of the exact lattice value, not the reference's per-vertex
-     * float accumulation. props_json is json.dumps(core.decode_properties
-     * (frame), sort_keys=True), parsed only for frames whose walk shows a
-     * 0x12 field, a multi-byte tag or a wire type other than 0 or 2; every
-     * other frame has no properties and gets "{}".
+     * walk: id 0 when absent. A bare frame gives geom_type 0, dim 2 and
+     * empty arrays. Coordinates are round7 of the exact lattice value, not
+     * the reference's per-vertex float accumulation. props_json is
+     * json.dumps(core.decode_properties(frame), sort_keys=True) of the
+     * entries the walk found, "{}" when there are none.
      */
     public static final class Decode implements UDF1<byte[], Row> {
         private static final double[] NO_COORDS = new double[0];
@@ -572,26 +608,16 @@ public final class GbCodec {
 
         @Override
         public Row call(byte[] b) {
-            if (b == null) return null;
-            long id = 0, code = -1;
-            int gs = -1, gl = 0;
-            boolean props = false;
-            Walker w = new Walker(b, 0, b.length);
-            while (w.next()) {
-                int wire = w.tag & 0x7;
-                if (w.tag == 0x12 || w.tag >= 0x80 || (wire != 0 && wire != 2)) props = true;
-                if (w.tag == 0x08) id = w.value;
-                // a code >= 2^63 reads as absent, like a negative int64 code
-                else if (w.tag == 0x18 && code < 0) code = w.value;
-                else if (w.tag == 0x22 && gs < 0) { gs = w.start; gl = (int) w.value; }
-            }
-            String pj = props ? Props.json(b) : "{}";
-            if (code < 0 || gs < 0)
+            Frame f = walk(b);
+            if (f == null) return null;
+            long id = f.id, code = f.code;
+            String pj = Props.json(f);
+            if (!f.coded || f.gs < 0)
                 return RowFactory.create(id, 0, 2, NO_COORDS, NONE, NONE, pj);
-            long[] t = payloadTokens(b, gs, gl);
+            long[] t = f.tokens();
             int n = t.length;
             long gt = code <= 6 ? code : code >> 4;
-            int dim = code <= 6 ? 2 : (int) (code & 0xF);
+            int dim = f.dim();
             if (gt == 1) {
                 if (n != 2)
                     throw new IllegalArgumentException(
@@ -659,20 +685,18 @@ public final class GbCodec {
     }
 
     /**
-     * Property reader, a port of core.decode_properties and _read_value:
+     * Property entry reader, a port of core._read_entry and _read_value:
      * key() and value() read one 0x12 entry from its start, each value as
      * the Java twin of core's Python value (String, Double - a float32
      * widened -, Long, a BigInteger for a uint64 of 2^63 or more, Boolean).
-     * json() reads every entry as core.decode_properties does (tags read
-     * as full varints, wire 0 skipped as a varint, wire 2 jumped by its
-     * length; any other wire type, a read past the frame end, invalid
-     * UTF-8 or an unknown value field throws). Every read is bounded by its
-     * message, as core._read_entry bounds it: the key and the value
-     * message by the entry, the value by its value message; a length
-     * running past its message throws. json() writes the entries as Python's
-     * json.dumps(..., sort_keys=True): keys sorted by code point, a
-     * repeated key keeps its last value, ensure_ascii escapes, ", " and
-     * ": " separators, floats in Python's shortest round-trip repr.
+     * Every read is bounded by its message, as core._read_entry bounds it:
+     * the key and the value message by the entry, the value by its value
+     * message; a length running past its message, a varint longer than 10
+     * bytes, invalid UTF-8 and an unknown value field throw. json() writes
+     * a frame's entries as Python's json.dumps(..., sort_keys=True): keys
+     * sorted by code point, a repeated key keeps its last value,
+     * ensure_ascii escapes, ", " and ": " separators, floats in Python's
+     * shortest round-trip repr.
      */
     static final class Props {
         private final byte[] b;
@@ -700,28 +724,18 @@ public final class GbCodec {
             return Integer.compare(x.length() - i, y.length() - j);
         };
 
-        static String json(byte[] b) {
+        /** The entry f.props[i] of a walked frame. */
+        Props(Frame f, int i) {
+            this(f.b, f.props[i], f.props[i + 1]);
+        }
+
+        static String json(Frame f) {
+            if (f.np == 0) return "{}";
             java.util.TreeMap<String, String> props = new java.util.TreeMap<>(CODE_POINT_ORDER);
-            Props r = new Props(b, 0, b.length);
-            while (r.pos < b.length) {
-                long tag = r.varint();
-                if ((tag & 7) == 0) {
-                    r.varint();
-                } else if ((tag & 7) == 2) {
-                    long size = r.length(), end = r.pos + size;
-                    if (tag == 0x12) {
-                        r.lim = end;
-                        String key = r.key();
-                        props.put(key, jsonText(r.value()));
-                        r.lim = b.length;
-                    }
-                    r.pos = end;
-                } else {
-                    throw new IllegalArgumentException(
-                        "unexpected wire type " + (tag & 7) + " in feature frame");
-                }
+            for (int i = 0; i < f.np; i += 2) {
+                Props r = new Props(f, i);
+                props.put(r.key(), jsonText(r.value()));
             }
-            if (props.isEmpty()) return "{}";
             StringBuilder sb = new StringBuilder("{");
             for (java.util.Map.Entry<String, String> e : props.entrySet()) {
                 if (sb.length() > 1) sb.append(", ");
@@ -738,14 +752,16 @@ public final class GbCodec {
             return b[(int) p] & 0xFF;
         }
 
-        /** core.decode_varint: no length cap, bits past the 64th dropped. */
+        /** core.decode_varint: at most 10 bytes. */
         private long varint() {
             long v = 0;
-            for (int shift = 0; ; shift += 7) {
+            for (int shift = 0; shift < 70; shift += 7) {
                 int c = at(pos++);
-                if (shift < 64) v |= (long) (c & 0x7F) << shift;
+                v |= (long) (c & 0x7F) << shift;
                 if (c < 0x80) return v;
             }
+            throw new IllegalArgumentException(
+                "property varint longer than 10 bytes - truncated or corrupt input");
         }
 
         /** A varint length whose payload ends within lim (core._payload_end). */
@@ -786,15 +802,6 @@ public final class GbCodec {
         String key() {
             pos++;
             return utf8();
-        }
-
-        /** Whether the entry at pos has the key bytes kb; pos moves past
-         *  the key length. */
-        boolean keyIs(byte[] kb) {
-            pos++;
-            long n = varint();
-            return n == kb.length && pos + n <= lim
-                && java.util.Arrays.equals(b, (int) pos, (int) (pos + n), kb, 0, kb.length);
         }
 
         /** After the key: core._read_value of the value message (0x12 tag,
@@ -1019,9 +1026,9 @@ public final class GbCodec {
     /**
      * gb_prop(geobuf, key) -> Row(id, string, bigint, double): the one
      * property `key` of a frame, LazyFeatureTileID (split_combine.go:
-     * 333-370). The Walker jumps the geometry and bbox; only the matching
-     * entry is parsed, and of repeated keys the last wins, as in
-     * core.decode_properties(frame).get(key). The value lands in the field
+     * 333-370). The walk jumps the geometry and bbox; every entry's key is
+     * read and only the value of the last entry with the key is parsed, as
+     * in core.decode_properties(frame).get(key). The value lands in the field
      * of its type: a string, an int that fits int64 (not a bool), a float
      * (float32 widened); the other fields, and all three for an absent key,
      * a bool or a uint64 of 2^63 or more, are null. id is 0 when absent.
@@ -1029,25 +1036,15 @@ public final class GbCodec {
     public static final class Prop implements UDF2<byte[], String, Row> {
         @Override
         public Row call(byte[] b, String key) {
-            if (b == null) return null;
-            byte[] kb = key.getBytes(java.nio.charset.StandardCharsets.UTF_8);
-            long id = 0;
-            int hit = -1, hitEnd = 0;
-            Walker w = new Walker(b, 0, b.length);
-            while (w.next()) {
-                if (w.tag == 0x08) id = w.value;
-                else if (w.tag == 0x12 && new Props(b, w.start, w.p).keyIs(kb)) {
-                    hit = w.start;
-                    hitEnd = w.p;
-                }
+            Frame f = walk(b);
+            if (f == null) return null;
+            Props hit = null;
+            for (int i = 0; i < f.np; i += 2) {
+                Props r = new Props(f, i);
+                if (r.key().equals(key)) hit = r;
             }
-            Object v = null;
-            if (hit >= 0) {
-                Props r = new Props(b, hit, hitEnd);
-                r.key();
-                v = r.value();
-            }
-            return RowFactory.create(id, v instanceof String ? v : null,
+            Object v = hit == null ? null : hit.value();
+            return RowFactory.create(f.id, v instanceof String ? v : null,
                                      v instanceof Long ? v : null, v instanceof Double ? v : null);
         }
     }
@@ -1055,16 +1052,15 @@ public final class GbCodec {
     /**
      * gb_keys(geobuf) -> array&lt;string&gt;: every property key in wire
      * order, repeats kept - ReadKeys (reader.go:120-142). Values, geometry
-     * and bbox are jumped by the Walker, never parsed.
+     * and bbox are jumped by the walk, never parsed.
      */
     public static final class Keys implements UDF1<byte[], java.util.List<String>> {
         @Override
         public java.util.List<String> call(byte[] b) {
-            if (b == null) return null;
+            Frame f = walk(b);
+            if (f == null) return null;
             java.util.ArrayList<String> out = new java.util.ArrayList<>();
-            Walker w = new Walker(b, 0, b.length);
-            while (w.next())
-                if (w.tag == 0x12) out.add(new Props(b, w.start, w.p).key());
+            for (int i = 0; i < f.np; i += 2) out.add(new Props(f, i).key());
             return out;
         }
     }
@@ -1141,41 +1137,15 @@ public final class GbCodec {
 
     /**
      * Metadata-dummy sniff, a port of core._is_metadata_frame
-     * (CheckMetaData parity, reader.go:258-274): the first field after an
-     * optional id is a properties entry keyed exactly "metadata", and it
-     * is the feature's only properties entry. Any read past the frame end
-     * means "not the dummy", as in the Python sniff.
+     * (CheckMetaData parity, reader.go:258-274): the frame's only property
+     * entry is keyed exactly "metadata". A frame the walk or the key read
+     * rejects is not the dummy, as in the Python sniff.
      */
-    static boolean isMetadataFrame(byte[] f) {
-        final int[] pos = {0};
-        java.util.function.LongSupplier varint = () -> {
-            long v = 0;
-            for (int shift = 0; ; shift += 7) {
-                int c = f[pos[0]++] & 0xFF;
-                if (shift < 64) v |= (long) (c & 0x7F) << shift;
-                if (c < 0x80) return v;
-            }
-        };
+    static boolean isMetadataFrame(byte[] b) {
         try {
-            long tag = varint.getAsLong();
-            if ((tag >>> 3) == 1 && (tag & 7) == 0) {   // optional id
-                varint.getAsLong();
-                tag = varint.getAsLong();
-            }
-            if ((tag >>> 3) != 2 || (tag & 7) != 2) return false;
-            long esize = varint.getAsLong();            // map-entry size
-            boolean lastField = Long.compareUnsigned(esize, f.length - pos[0]) >= 0;
-            int entryEnd = lastField ? f.length : pos[0] + (int) esize;
-            pos[0]++;                                   // 0x0A key tag
-            long klen = varint.getAsLong();
-            byte[] key = {'m', 'e', 't', 'a', 'd', 'a', 't', 'a'};
-            // the Python slice f[pos:pos+klen] clamps at the frame end
-            int rem = f.length - pos[0];
-            if ((Long.compareUnsigned(klen, rem) < 0 ? klen : rem) != key.length) return false;
-            for (int i = 0; i < key.length; i++)
-                if (f[pos[0] + i] != key[i]) return false;
-            return lastField || (f[entryEnd] & 0xFF) != 0x12;
-        } catch (ArrayIndexOutOfBoundsException e) {
+            Frame f = walk(b);
+            return f.np == 2 && new Props(f, 0).key().equals("metadata");
+        } catch (IllegalArgumentException e) {
             return false;
         }
     }

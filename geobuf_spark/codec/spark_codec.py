@@ -156,11 +156,12 @@ def decode_features_fast(df: DataFrame, bin_col: str = "geobuf") -> DataFrame:
     """Geobuf frames → GEOM_SCHEMA rows in the JVM (gb_decode), with no
     Python worker in the plan.
 
-    One field walk per frame (reader.go:84-112 scan semantics) decodes
-    every geometry type and dim from its payload tokens. Properties are
-    parsed only for frames whose walk shows them, as json.dumps(
-    core.decode_properties(frame), sort_keys=True); every other frame gets
-    "{}".
+    One field walk per frame (reader.go:84-112 scan semantics), under
+    the rules of core.frame_fields, decodes every geometry type and dim
+    from its payload tokens and reads the property entries it finds, as
+    json.dumps(core.decode_properties(frame), sort_keys=True); a frame
+    without entries gets "{}". The frames it accepts, and their values,
+    are core.decode_feature's.
 
     Float coords come from the exact integer lattice (go_round7(q/1e7))
     rather than the reference's per-vertex float accumulation — identical
@@ -236,7 +237,9 @@ def lazy_property(df: DataFrame, key: str, bin_col: str = "geobuf",
     core.decode_properties(frame).get(key) when that is a value of
     value_type (string: a str; bigint: an int in int64, not a bool;
     double: a float), else null; of repeated keys the last wins. id is
-    0 for a frame without one."""
+    0 for a frame without one. Every entry's key is read, and only the
+    matching entry's value: a frame fails when the field walk, a key or
+    that value does not parse."""
     if value_type not in ("string", "bigint", "double"):
         raise ValueError(
             f"value_type must be string, bigint or double: {value_type!r}")

@@ -524,22 +524,25 @@ def _udf(spark, name):
     return getattr(spark._jvm.geobufspark.GbCodec, name)()
 
 
-def _jvm_accepts(udf, frame: bytes) -> bool:
+def _jvm_call(udf, frame: bytes, *args):
+    """(True, result) of udf.call(frame, *args), or (False, None) when the
+    call throws."""
     from py4j.protocol import Py4JJavaError
     from pyspark.errors import IllegalArgumentException
     try:
-        udf.call(bytearray(frame))
+        return True, udf.call(bytearray(frame), *args)
     except (IllegalArgumentException, Py4JJavaError):
-        return False
-    return True
+        return False, None
 
 
-def _numpy_accepts(frame: bytes) -> bool:
-    arr = pa.array([frame], type=pa.binary())
-    flat = np.frombuffer(arr.buffers()[2] or b"", dtype=np.uint8)
+def _jvm_accepts(udf, frame: bytes, *args) -> bool:
+    return _jvm_call(udf, frame, *args)[0]
+
+
+def _walk_accepts(frame: bytes) -> bool:
+    """A full pass of core's field walk reads the frame."""
     try:
-        core.frame_fields_walk(
-            flat, np.array([0], np.int64), np.array([len(frame)], np.int64))
+        list(core.frame_fields(frame))
     except ValueError:
         return False
     return True
@@ -599,12 +602,16 @@ _METADATA_DUMMY = core.encode_feature(core.Feature.from_geojson(
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(frames=st.lists(_feature_frames(), min_size=1, max_size=6),
        lead=st.sampled_from(["dummy", "metadata_plus_key", "none"]),
-       cut=st.integers(0, 5))
-def test_gb_frames_parity_with_read_frames(jvm, frames, lead, cut):
+       cut=st.integers(0, 5), tail=st.integers(1, 3),
+       bad=st.integers(0, 255).filter(lambda t: t != 0x0A))
+@example(frames=[GOLDEN_POINTS[0][1]], lead="none", cut=0, tail=3, bad=0x0B)
+def test_gb_frames_parity_with_read_frames(jvm, frames, lead, cut, tail, bad):
     """gb_frames(…, true) == core.read_frames on a stream led by the
     metadata dummy (dropped), by a first feature carrying "metadata" plus
     another key (kept), or by neither; gb_frames(…, false) ==
-    read_frames(skip_metadata=False) on a mid-file range of whole frames."""
+    read_frames(skip_metadata=False) on a mid-file range of whole frames.
+    A stream missing its last bytes, or with a frame tag other than 0x0A,
+    fails in both engines."""
     if lead == "dummy":
         frames = [_METADATA_DUMMY] + frames
     elif lead == "metadata_plus_key":
@@ -622,6 +629,12 @@ def test_gb_frames_parity_with_read_frames(jvm, frames, lead, cut):
     want = [bytes(f) for f in core.read_frames(mid, skip_metadata=False)]
     assert [bytes(f) for f in split.call(bytearray(mid), False)] == want
     assert want == [bytes(f) for f in frames[cut:]]
+
+    last = len(core.write_frames(frames[:-1]))
+    for broken in (stream[:-tail], stream[:last] + bytes([bad]) + stream[last + 1:]):
+        with pytest.raises(ValueError, match="truncated or corrupt"):
+            list(core.read_frames(broken, skip_metadata=False))
+        assert not _jvm_accepts(split, broken, False)
 
 
 def test_read_geobuf_skips_the_dummy_only(jvm, tmp_path):
@@ -655,8 +668,8 @@ def test_read_geobuf_skips_the_dummy_only(jvm, tmp_path):
        extra=st.tuples(*[st.integers(-2**40, 2**40)] * 4))
 def test_gb_bbox_parity_with_decode_feature(jvm, frame, shape, extra):
     """gb_bbox == core.decode_feature(...).bbox on the lattice; a frame
-    without a bbox gives null; of two bbox fields the last one wins (the
-    rule of the former vectorized bbox kernel)."""
+    without a bbox gives null; of two bbox fields the last one wins in
+    both."""
     bbox = _udf(jvm, "Bbox")
     if shape == "no_bbox":
         frame = b"".join(frame[s:e] for tag, s, e in _fields(frame) if tag != 0x2A)
@@ -666,6 +679,7 @@ def test_gb_bbox_parity_with_decode_feature(jvm, frame, shape, extra):
     if shape == "duplicate":
         frame = frame + _bbox_field(*extra)
         assert list(bbox.call(bytearray(frame))) == list(extra)
+        assert np.array_equal(core.decode_feature(frame).bbox, np.array(extra) / core.POWER)
         return
     got = np.array(list(bbox.call(bytearray(frame))), np.int64)
     assert np.array_equal(got.astype(np.float64) / core.POWER,
@@ -710,14 +724,149 @@ def _corrupt_frames(draw):
     return frame[:i] + bytes([draw(st.integers(0, 255))]) + frame[i + 1:]
 
 
+# fields a frame can carry beyond the encoder's: a late property, a wire-5
+# field, the id under a two-byte tag, an unknown two-byte tag, an 11-byte
+# varint, a second bbox, a bbox of 3 values
+_EXTRA_FIELDS = [bytes.fromhex("120a0a046c61746512023801"), b"\x0d\x00",
+                 b"\x88\x00\x05", b"\xf8\x01\x01", b"\x08" + b"\xff" * 10 + b"\x01",
+                 _bbox_field(-5, 6, 7, 8), bytes.fromhex("2a03020406")]
+
+
+@st.composite
+def _reordered_frames(draw):
+    """A well-formed frame with its fields permuted, one field repeated
+    anywhere or dropped (a payload with no code, a code with no payload),
+    or one of _EXTRA_FIELDS inserted anywhere."""
+    frame = draw(_feature_frames())
+    fields = [frame[s:e] for _, s, e in _fields(frame)]
+    kind = draw(st.sampled_from(["permute", "repeat", "drop", "extra"]))
+    if kind == "permute":
+        fields = draw(st.permutations(fields))
+    elif kind == "drop":
+        fields.pop(draw(st.integers(0, len(fields) - 1)))
+    else:
+        f = (draw(st.sampled_from(fields)) if kind == "repeat"
+             else draw(st.sampled_from(_EXTRA_FIELDS)))
+        fields.insert(draw(st.integers(0, len(fields))), f)
+    return b"".join(fields)
+
+
+def _gb_decode_row(decode, frame: bytes):
+    """gb_decode's row of frame as Python values, or None when it throws."""
+    ok, r = _jvm_call(decode, frame)
+    return (r.get(0), r.get(1), r.get(2), list(r.get(3)), list(r.get(4)),
+            list(r.get(5)), r.getString(6)) if ok else None
+
+
+def _core_row(frame: bytes):
+    """core.decode_feature's GEOM_SCHEMA row of frame (coords as gb_decode
+    rounds them), or None when it raises."""
+    try:
+        f = core.decode_feature(frame, quantized=True)
+    except ValueError:
+        return None
+    fid = ((f.id or 0) + 2**63) % 2**64 - 2**63  # a Java long
+    return (fid, f.geom_type, f.dim, core.go_round7(f.coords / 1e7).tolist(),
+            f.ring_lens.tolist(), f.part_rings.tolist(),
+            json.dumps(f.properties, sort_keys=True))
+
+
+def _core_keys(frame: bytes):
+    """(key, (start, end)) of every property entry, as gb_keys reads
+    them, by core's walk; None where the walk or a key read raises."""
+    try:
+        return [(core._read_key(frame, s, s + n)[0], (s, s + n))
+                for tag, n, s in core.frame_fields(frame) if tag == 0x12]
+    except ValueError:
+        return None
+
+
 @settings(max_examples=300, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
-@given(frame=_corrupt_frames())
-def test_corrupt_frame_accept_reject_parity(jvm, frame):
-    """The JVM field walk (gb_bbox; the geometry decoders share it) and
-    the numpy core.frame_fields_walk accept or reject the same frames."""
-    want = _numpy_accepts(frame)
-    assert _jvm_accepts(_udf(jvm, "Bbox"), frame) == want
+@given(frame=st.one_of(_reordered_frames(), _corrupt_frames()), pick=st.integers(0, 7))
+def test_corrupt_frame_accept_reject_parity(jvm, frame, pick):
+    """Per-frame fuzz of the two engines' one field walk, on well-formed
+    frames with fields reordered, repeated, dropped or added and on
+    corrupt frames: gb_decode and core.decode_feature accept the same
+    frames and read them to the same row; gb_bbox rejects exactly when a
+    full pass of core's walk does, and gb_keys and gb_prop exactly when
+    that pass or one of the entry reads they make does, to core's
+    values."""
+    want = _core_row(frame)
+    assert _gb_decode_row(_udf(jvm, "Decode"), frame) == want
+    ok, got = _jvm_call(_udf(jvm, "Bbox"), frame)
+    assert ok == _walk_accepts(frame)
+    if want:
+        bbox = core.decode_feature(frame).bbox
+        assert (got is None and bbox is None) or np.array_equal(
+            np.array(list(got), np.int64).astype(np.float64) / core.POWER, bbox)
+    keyed = _core_keys(frame)
+    ok, got = _jvm_call(_udf(jvm, "Keys"), frame)
+    assert (list(got) if ok else None) == (keyed and [k for k, _ in keyed])
+    key = ([k for k, _ in keyed or []] + ["absent"])[pick % (len(keyed or []) + 1)]
+    hits = [e for k, e in keyed or [] if k == key]
+    try:
+        value = core._read_entry(frame, *hits[-1])[1] if hits else None
+    except ValueError:
+        keyed = None
+    ok, got = _jvm_call(_udf(jvm, "Prop"), frame, key)
+    assert ok == (keyed is not None)
+    if ok:  # repr: a NaN equals itself
+        assert [repr(got.get(i)) for i in (1, 2, 3)] == [
+            repr(_typed(value, t)) for t in ("string", "bigint", "double")]
+
+
+_LINE_FRAME = core.encode_feature(core.Feature.from_geojson(
+    "LineString", [[1.0, 2.0], [-3.0, 4.5]], id=1))
+
+
+@pytest.mark.parametrize("tail", [b"\x0d\x00", b"\x08" + b"\xff" * 10 + b"\x01"],
+                         ids=["wire5", "varint11"])
+def test_field_after_bbox_rejected_by_both_engines(jvm, tail):
+    """A wire-5 field or an 11-byte varint after the bbox rejects the frame
+    in core.decode_feature and in every JVM reader; core stopped reading
+    at the bbox, and gb_bbox and the line decoders read wire 5 as a
+    varint."""
+    frame = _LINE_FRAME + tail
+    assert not _core_accepts(frame)
+    for udf in ("Decode", "Bbox", "LineStats", "LineDecode", "Keys"):
+        assert not _jvm_accepts(_udf(jvm, udf), frame), udf
+
+
+def test_property_after_bbox_is_a_property(jvm):
+    """A property entry after the bbox is in core.decode_feature's
+    properties, as in gb_decode's props_json."""
+    frame = _LINE_FRAME + _EXTRA_FIELDS[0]
+    assert core.decode_feature(frame).properties == {"late": True}
+    assert _gb_decode_row(_udf(jvm, "Decode"), frame) == _core_row(frame)
+
+
+def test_last_bbox_wins_in_both(jvm):
+    """Of two bbox fields both engines keep the last; a last bbox of three
+    values is no bbox in both, whatever came before it."""
+    frame = _LINE_FRAME + _bbox_field(-5, 6, 7, 8)
+    assert list(_udf(jvm, "Bbox").call(bytearray(frame))) == [-5, 6, 7, 8]
+    assert core.decode_feature(frame).bbox.tolist() == [-5e-7, 6e-7, 7e-7, 8e-7]
+    for f in (_LINE_FRAME + _EXTRA_FIELDS[-1], frame + _EXTRA_FIELDS[-1]):
+        assert _udf(jvm, "Bbox").call(bytearray(f)) is None
+        assert core.decode_feature(f).bbox is None
+
+
+def test_code_and_payload_rules(jvm):
+    """A payload with no code is a bare frame in both engines; a tag is a
+    varint, so the id under the two-byte tag 88 00 is the id; the first
+    code wins."""
+    fields = [_LINE_FRAME[s:e] for _, s, e in _fields(_LINE_FRAME)]
+    bare = b"".join(f for f in fields if f[0] != 0x18)
+    assert core.decode_feature(bare).geom_type == 0
+    wide_id = b"\x88\x00\x05" + _LINE_FRAME
+    assert core.decode_feature(wide_id).id == 1
+    assert core.decode_feature(_LINE_FRAME[2:] + b"\x88\x00\x05").id == 5
+    second_code = _LINE_FRAME + b"\x18\x01"
+    assert core.decode_feature(second_code).geom_type == 2
+    for frame in (bare, wide_id, second_code, _LINE_FRAME[2:] + b"\x88\x00\x05"):
+        assert _gb_decode_row(_udf(jvm, "Decode"), frame) == _core_row(frame)
+        assert _jvm_accepts(_udf(jvm, "Bbox"), frame)
 
 
 @settings(max_examples=50, deadline=None,
@@ -727,7 +876,7 @@ def test_many_field_frames_accepted(jvm, frame, total):
     """No field count is capped: a frame padded with varint fields to
     62..300 fields in all is read by both field walks."""
     frame += b"\x30\x01" * max(total - len(_fields(frame)), 0)
-    assert _numpy_accepts(frame)
+    assert _walk_accepts(frame)
     assert _jvm_accepts(_udf(jvm, "Bbox"), frame)
 
 
@@ -903,12 +1052,9 @@ _RING_OVERRUN = bytes([0x18, 6, 0x22, 8]) + core.pack_varints(
 
 
 def test_gb_decode_rejects_cut_and_overrun_frames(jvm):
-    """gb_decode rejects a truncated frame or an overrunning length prefix
-    exactly when the field walk does — the frames the Arrow fast path it
-    replaced rejected — and so does core.decode_feature. Inside a field
-    the walk sees intact framing and accepts; there gb_decode and
-    core.decode_feature reject the same frames. gb_decode reads every
-    frame it accepts as core does."""
+    """gb_decode and core.decode_feature reject the same truncated frames
+    and overrunning length prefixes, and the same frames broken inside a
+    field. gb_decode reads every frame it accepts as core does."""
     bases = [frame for _, frame in GOLDEN_FEATURES] + [
         core.encode_feature(core.Feature.from_geojson(
             "MultiPolygon", [[[[0, 0], [1, 0], [0, 1], [0, 0]]],
@@ -919,33 +1065,23 @@ def test_gb_decode_rejects_cut_and_overrun_frames(jvm):
         _entry("bare", b"\x38\x01")]
     decode = _udf(jvm, "Decode")
     frames = [f for base in bases for f in _cuts_and_overruns(base)]
-    verdicts = [(_jvm_accepts(decode, f), _numpy_accepts(f), _core_accepts(f))
-                for f in frames]
-    for frame, (j, w, c) in zip(frames, verdicts):
-        assert j == w == c, (frame.hex(), j, w, c)
-    assert sum(not j for j, _, _ in verdicts) == 336
+    verdicts = [(_jvm_accepts(decode, f), _core_accepts(f)) for f in frames]
+    for frame, (j, c) in zip(frames, verdicts):
+        assert j == c, (frame.hex(), j, c)
+    assert sum(not j for j, _ in verdicts) == 336
     inner = [f for base in bases for f in _payload_corruptions(base)] + [
         _STRING_OVERRUN, _RING_OVERRUN]
-    inner_verdicts = [(_jvm_accepts(decode, f), _numpy_accepts(f), _core_accepts(f))
-                      for f in inner]
-    for frame, (j, w, c) in zip(inner, inner_verdicts):
-        assert w and j == c, (frame.hex(), j, w, c)
+    inner_verdicts = [(_jvm_accepts(decode, f), _core_accepts(f)) for f in inner]
+    for frame, (j, c) in zip(inner, inner_verdicts):
+        assert j == c, (frame.hex(), j, c)
     # all but two: a dim-17 code reads as a valid dim-1 geometry of the next type
-    assert (len(inner), sum(not j for j, _, _ in inner_verdicts)) == (109, 107)
+    assert (len(inner), sum(not j for j, _ in inner_verdicts)) == (109, 107)
     frames += inner
     verdicts += inner_verdicts
-    accepted = [f for f, (j, _, _) in zip(frames, verdicts) if j]
+    accepted = [f for f, (j, _) in zip(frames, verdicts) if j]
     df = spark_codec.decode_features_fast(_frames_df(jvm, accepted))
     for frame, r in zip(accepted, df.collect()):
-        want = core.decode_feature(frame, quantized=True)
-        geom = (0, 2, [], [], [])  # a bare frame: no code or no payload
-        if {0x18, 0x22} <= {tag for tag, _, _ in _fields(frame)}:
-            geom = (want.geom_type, want.dim,
-                    core.go_round7(want.coords / 1e7).tolist(),
-                    want.ring_lens.tolist(), want.part_rings.tolist())
-        assert r.id == (want.id or 0)
-        assert (r.geom_type, r.dim, r.coords, r.ring_lens, r.part_rings) == geom
-        assert r.props_json == json.dumps(core.decode_properties(frame), sort_keys=True)
+        assert tuple(r) == _core_row(frame), frame.hex()
 
 
 # --- gb_encode: the generic encoder and its property writer ------------------
